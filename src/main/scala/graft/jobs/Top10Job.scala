@@ -9,18 +9,23 @@ import graft.operators.TopK
 /** Daily top-10 best-selling resources per category (reference
   * `top10.py`), re-expressed as one declarative plan.
   *
-  * Shape: clean dims (P1/P2/X1) → events day key (X2) → left joins
-  * J1/J2 → purchase counts A1 → composite-key join-back J3 → dense_rank
-  * top-10 W1/F1 (ties share a position, so >10 rows can survive — the
-  * reference's observable semantics) → grain dedup O2 → global sort O1.
+  * Shape: events day key (X2) → purchase counts A1 on (date,
+  * resourceId) → left joins J1/J2 of the cleaned dims (P1/P2/X1) →
+  * dense_rank top-10 W1/F1 (ties share a position, so >10 rows can
+  * survive — the reference's observable semantics) → global sort O1.
   *
-  * Scale: the join-back re-expands to event grain exactly like the
-  * reference, and the O2 dedup collapses it again — kept because it IS
-  * the reference's semantics (dedup is observable when an event appears
-  * twice per key). The counts aggregate shuffles on (date, resourceId);
-  * dims are broadcast (bounded by contract). The reference's per-day
-  * driver loop + full recompute (top10.py:262-278) is replaced by a
-  * single partitioned write — one pass, no re-execution.
+  * Scale: the events are scanned once and shuffled once, by the counts
+  * aggregate; everything after it runs on the compacted (date,
+  * resourceId) grain — the same running-count state the streaming
+  * top-10 ranks (StreamingReports.top10Stream). The reference instead
+  * joins the counts back onto every event (J3) and deduplicates the
+  * ranked rows (O2), top10.py:242-253; ranking the compacted grain
+  * gives the same report without either step, provided resource ids
+  * are unique (resources are documents keyed by id), as are category
+  * ids — DIVERGENCES.md #12 lists what differs off that contract. Dims
+  * are broadcast (bounded by contract). The reference's per-day driver
+  * loop + full recompute (top10.py:262-278) is replaced by a single
+  * partitioned write — one pass, no re-execution.
   */
 object Top10Job {
 
@@ -49,11 +54,10 @@ object Top10Job {
       .withColumn("date", substring(col("processTime"), 1, 10))
       .groupBy("date", "resourceId").count()
 
-  /** The top-10 report from pre-compacted counts. Identical output to
-    * `transform` (JobsSpec asserts it): dense_rank is invariant to the
-    * event-grain duplication that transform's reference-shaped
-    * join-back re-introduces and its O2 dedup collapses again, so
-    * ranking the compacted grain directly skips both steps.
+  /** The top-10 report from pre-compacted counts — the batch job
+    * (`transform`) and both streaming top-10s rank through here.
+    * JobsSpec's "Top10Job == reference J3 join-back + O2 dedup plan"
+    * checks it against the reference's event-grain plan.
     */
   def reportFromCounts(counts: DataFrame, resources: DataFrame, categories: DataFrame): DataFrame = {
     val withDims = counts
@@ -64,20 +68,8 @@ object Top10Job {
       .select("position", "date", "categoryId", "categoryName", "resourceId", "resourceName")
   }
 
-  def transform(events: DataFrame, resources: DataFrame, categories: DataFrame): DataFrame = {
-    val ev = events
-      .withColumn("date", substring(col("processTime"), 1, 10))
-      .select("date", "resourceId")
-    val joined = ev
-      .join(broadcast(cleanResources(resources)), Seq("resourceId"), "left")
-      .join(broadcast(cleanCategories(categories)), Seq("categoryId"), "left")
-    val counts = joined.groupBy("date", "resourceId").count()
-    val backed = joined.join(counts, Seq("date", "resourceId"), "left")
-    TopK.denseTopK(backed, Seq("date", "categoryId"), col("count").desc, 10)
-      .dropDuplicates("date", "categoryId", "resourceId")
-      .orderBy("date", "categoryId", "position")
-      .select("position", "date", "categoryId", "categoryName", "resourceId", "resourceName")
-  }
+  def transform(events: DataFrame, resources: DataFrame, categories: DataFrame): DataFrame =
+    reportFromCounts(dailyCounts(events), resources, categories)
 
   /** K1 sink: pipe-separated CSV with header, one directory per date via
     * partitionBy — the single-pass idiom for the reference's per-day

@@ -2,9 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.jobs.{PlatformUsageJob, RoyaltiesJob, Top10Job}
+import graft.operators.TopK
 import graft.sources.Sources
 
 /** End-to-end report jobs on the authored fixtures: hand-computed
@@ -46,9 +50,76 @@ class JobsSpec extends SparkSpec {
     // resource with unmatched category: name null
     assert(rows.exists(x => x.getAs[String]("resourceId") == "r6" &&
       x.getAs[String]("categoryId") == "9.9" && x.getAs[String]("categoryName") == null))
-    // O2 dedup: one row per (date, categoryId, resourceId)
+    // one row per (date, categoryId, resourceId): the fixture's resource
+    // ids are unique, so the compacted grain needs no O2 dedup
     assert(rows.length ==
       r.select("date", "categoryId", "resourceId").distinct().count())
+  }
+
+  /** The reference's event-grain plan (top10.py:242-253), kept here as
+    * the oracle for `Top10Job.transform`: dims joined onto every event,
+    * purchase counts joined back onto the events (J3), dense_rank, then
+    * the grain dedup (O2).
+    */
+  private def referenceTop10(ev: DataFrame, res: DataFrame, cats: DataFrame): DataFrame = {
+    val joined = ev.select(substring($"processTime", 1, 10).as("date"), $"resourceId")
+      .join(broadcast(Top10Job.cleanResources(res)), Seq("resourceId"), "left")
+      .join(broadcast(Top10Job.cleanCategories(cats)), Seq("categoryId"), "left")
+    val counts = joined.groupBy("date", "resourceId").count()
+    TopK.denseTopK(joined.join(counts, Seq("date", "resourceId"), "left"),
+        Seq("date", "categoryId"), $"count".desc, 10)
+      .dropDuplicates("date", "categoryId", "resourceId")
+      .select("position", "date", "categoryId", "categoryName", "resourceId", "resourceName")
+  }
+
+  /** Rows as a sorted multiset: equal reports, duplicates included. */
+  private def rowBag(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  test("Top10Job == reference J3 join-back + O2 dedup plan") {
+    // the fixture report holds the rank tie, the unknown resource r9 and
+    // the missing category of r6 (pinned by the first Top10Job test)
+    assert(rowBag(Top10Job.transform(events, resources, categories)) ==
+      rowBag(referenceTop10(events, resources, categories)))
+
+    // every event file delivered twice, and r2's 2024-04-01 file a third
+    // time: duplicate events count in both plans (r2 reaches 3 x 2 = 6,
+    // tying r1's 2 x 3 = 6, so the duplicates move the ranking)
+    val landing = Files.createTempDirectory("top10-dup-landing")
+    landing.toFile.deleteOnExit()
+    Files.list(Paths.get(fix, "events_json")).forEach { p =>
+      val name = p.getFileName.toString
+      val copies = if (name == "event-e04.json" || name == "event-e05.json") 3 else 2
+      (1 to copies).foreach(i => Files.copy(p, landing.resolve(s"copy$i-$name")))
+    }
+    val dupEvents = Sources.events(spark, landing.toString)
+    val dupCounts = Top10Job.dailyCounts(dupEvents)
+      .filter($"date" === "2024-04-01" && $"resourceId".isin("r1", "r2"))
+      .select("resourceId", "count").as[(String, Long)].collect().toMap
+    assert(dupCounts == Map("r1" -> 6L, "r2" -> 6L))
+    val dupJob = rowBag(Top10Job.transform(dupEvents, resources, categories))
+    assert(dupJob == rowBag(referenceTop10(dupEvents, resources, categories)))
+    assert(dupJob.contains("[1,2024-04-01,3.01,Books,r1,Alpha]"))
+    assert(dupJob.contains("[1,2024-04-01,3.01,Books,r2,Beta]"))
+  }
+
+  test("Top10Job plan: one events scan, no join between event-derived sides") {
+    def isEvents(p: LogicalPlan): Boolean = p match {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.rootPaths.exists(_.toString.endsWith("events_json"))
+        case _ => false
+      }
+      case _ => false
+    }
+    def eventScans(p: LogicalPlan): Int = p.collectLeaves().count(isEvents)
+    def eventJoins(p: LogicalPlan): Seq[LogicalPlan] =
+      p.collect { case j: Join if eventScans(j.left) > 0 && eventScans(j.right) > 0 => j }
+
+    val plan = Top10Job.transform(events, resources, categories).queryExecution.optimizedPlan
+    assert(eventScans(plan) == 1, plan.treeString)
+    assert(eventJoins(plan).isEmpty, plan.treeString)
+    // the guard is not vacuous: it flags the reference-shaped join-back
+    val ref = referenceTop10(events, resources, categories).queryExecution.optimizedPlan
+    assert(eventScans(ref) == 2 && eventJoins(ref).nonEmpty, ref.treeString)
   }
 
   test("K1 sink: pipe-CSV partitioned by date with header") {

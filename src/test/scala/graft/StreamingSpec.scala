@@ -127,18 +127,6 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
-  test("reportFromCounts on the compacted grain == reference-shaped transform") {
-    val res = Sources.resources(spark, s"${SparkEntry.FixturesDir}/resources.json")
-    val cats = Sources.categories(spark, s"${SparkEntry.FixturesDir}/categories.json")
-    val ev = Sources.events(spark, dir)
-    val viaCounts = graft.jobs.Top10Job
-      .reportFromCounts(graft.jobs.Top10Job.dailyCounts(ev), res, cats)
-      .collect().map(_.toString).toSet
-    val viaTransform = graft.jobs.Top10Job.transform(ev, res, cats)
-      .collect().map(_.toString).toSet
-    assert(viaCounts == viaTransform)
-  }
-
   test("flatMapGroupsWithState sessionization == batch Sessionize on the replayed stream") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val landing = Files.createTempDirectory("stream-sessions")
