@@ -210,9 +210,11 @@ object StreamingReports {
     * q124 +0.9 s is the one loss — its per-user state fold serializes
     * — accepted against the −5.2 s family total). Production streams
     * set the same dial to their key cardinality; the stream operators
-    * themselves are partition-agnostic.
+    * themselves are partition-agnostic. The event-time timeout replays
+    * rely on no-data microbatches being on (Spark's default) to fire
+    * their timeouts once the sentinel has moved the watermark.
     */
-  private[streaming] def replaySession(outer: SparkSession): SparkSession = {
+  private[graft] def replaySession(outer: SparkSession): SparkSession = {
     val s = outer.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "1")
     // Measured and DECLINED (round-20, the §1 discipline): AQE off for
@@ -258,6 +260,48 @@ object StreamingReports {
     try s.iterator().asScala.toSeq.reverse
       .foreach(p => java.nio.file.Files.deleteIfExists(p))
     finally s.close()
+  }
+
+  /** Drives a bounded replay through a fresh landing dir: each of
+    * `waves` lands as ONE file `<name>.json` (rendered aside, then
+    * moved in, so the file source never lists a half-written part) and
+    * gets one `processAllAvailable()`; the first wave lands before
+    * `start` is called with the landing dir. The query is stopped and
+    * the landing dir deleted on the way out; the stopped query is
+    * returned (its `recentProgress` stays readable).
+    *
+    * Event-time timeout replays pass `sentinel`: one far-future JSON
+    * row of a key of its own, appended to the LAST wave's file so both
+    * land in the same microbatch. It cannot change a real key's
+    * result: a batch's rows are checked for lateness against the
+    * previous batch's watermark, so the wave is accepted exactly as
+    * without it; the watermark moves past every open state only after
+    * the batch, and Spark's automatic no-data microbatch then fires
+    * every timeout. The caller filters the sentinel key back out.
+    */
+  private[graft] def replayWaves(
+      prefix: String, waves: Seq[(String, DataFrame)], sentinel: Option[String] = None)(
+      start: String => StreamingQuery): StreamingQuery = {
+    import java.nio.file.{Files, StandardOpenOption}
+    val landing = Files.createTempDirectory(prefix)
+    def land(i: Int): Unit = {
+      val (name, rows) = waves(i)
+      val tmp = Files.createTempDirectory(s"$prefix-$name")
+      rows.coalesce(1).write.mode("overwrite").json(tmp.toString)
+      val part = new java.io.File(tmp.toString).listFiles()
+        .filter(_.getName.endsWith(".json")).head.toPath
+      if (i == waves.size - 1)
+        sentinel.foreach(s => Files.writeString(part, s + "\n", StandardOpenOption.APPEND))
+      Files.move(part, landing.resolve(s"$name.json"))
+      deleteRecursively(tmp)
+    }
+    try {
+      land(0)
+      val q = start(landing.toString)
+      try waves.indices.foreach { i => if (i > 0) land(i); q.processAllAvailable() }
+      finally q.stop()
+      q
+    } finally deleteRecursively(landing)
   }
 
   /** Bounded replay of `dedupStream` — the certified-query surface
@@ -415,31 +459,28 @@ object StreamingReports {
   /** Bounded replay of `sessionStream` over a directory of landing
     * files — the certified-query surface (q45): copies the source files
     * into a fresh landing dir, streams them through the
-    * flatMapGroupsWithState sessionizer, then appends two far-future
-    * sentinel events so the watermark passes every real session's
-    * gap and the event-time timeouts flush the open sessions
-    * deterministically (timeouts fire on the trigger AFTER the
-    * watermark advances, hence two waves). Returns the closed sessions
-    * as a batch DataFrame (userId, startUs, endUs, nEvents) with the
-    * sentinel user filtered back out — byte-comparable against the
-    * batch sessionization SQL over the same files.
+    * flatMapGroupsWithState sessionizer in ONE microbatch together
+    * with one far-future sentinel event (the `replayWaves` mechanism):
+    * the watermark moves past every real session's gap after that
+    * batch, and Spark's automatic no-data microbatch fires the
+    * event-time timeouts that flush the open sessions. Returns the
+    * closed sessions as a batch DataFrame (userId, startUs, endUs,
+    * nEvents) with the sentinel user filtered back out —
+    * byte-comparable against the batch sessionization SQL over the
+    * same files.
     */
   def sessionReplay(outer: SparkSession, srcDir: String, gapMinutes: Int): DataFrame = {
     val spark = replaySession(outer)
     import java.nio.file.Files
     val landing = Files.createTempDirectory("graft-session-replay")
     deliver(landing, listFixtureFiles(srcDir))
+    Files.writeString(landing.resolve("zz-sentinel.json"),
+      """{"eventId": "sent1", "eventTime": "2030-01-01T00:00:00+00:00", "processTime": "2030-01-01T00:00:00+00:00", "resourceId": "rX", "userId": "__sentinel", "countryCode": "US", "duration": 0, "itemPrice": "0"}""")
     val mem = s"graft_sessions_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val q = sessionStream(spark, landing.toString, gapMinutes)
       .toDF().writeStream.format("memory").queryName(mem).outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      for (n <- 1 to 2) {
-        Files.writeString(landing.resolve(s"zz-sentinel$n.json"),
-          s"""{"eventId": "sent$n", "eventTime": "2030-01-0${n}T00:00:00+00:00", "processTime": "2030-01-0${n}T00:00:00+00:00", "resourceId": "rX", "userId": "__sentinel", "countryCode": "US", "duration": 0, "itemPrice": "0"}""")
-        q.processAllAvailable()
-      }
-    } finally { q.stop(); deleteRecursively(landing) }
+    try q.processAllAvailable()
+    finally { q.stop(); deleteRecursively(landing) }
     drainMemorySink(spark, mem).filter(col("userId") =!= "__sentinel")
   }
 
@@ -831,39 +872,23 @@ object StreamingReports {
   /** Bounded replay of [[recrawlStream]]: the q246 fetch history in
     * two waves SPLIT MID-HISTORY (rounds 1-2, then 3-5) — the change
     * a period-2 url makes between rounds 2 and 3 is only visible if
-    * the fingerprint state survived the wave boundary — plus two
-    * far-future sentinel waves to fire the timeouts; sentinel url
+    * the fingerprint state survived the wave boundary — with one
+    * far-future sentinel row riding the last wave (`replayWaves`), so
+    * the no-data microbatch after it fires the timeouts; sentinel url
     * filtered back out; ppm/priority derived by the SAME
     * `withRecrawlDerived` code path the batch operator uses. q256
     * certifies against q246's oracle VERBATIM.
     */
   def recrawlReplay(outer: SparkSession, fetches: DataFrame): DataFrame = {
     val spark = replaySession(outer)
-    val landing = java.nio.file.Files.createTempDirectory("graft-recrawl-replay")
     val mem = s"graft_recrawl_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    def deliverWave(name: String, df: DataFrame): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft-rc-$name")
-      df.select(to_json(struct(col("url"), col("r"), col("fp"))).as("value"))
-        .coalesce(1).write.mode("overwrite").text(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      java.nio.file.Files.move(part.toPath, landing.resolve(s"$name.json"))
-      deleteRecursively(tmp)
+    val rows = fetches.select(col("url"), col("r"), col("fp"))
+    replayWaves("graft-recrawl-replay",
+        Seq("wave1" -> rows.filter(col("r") <= 2), "wave2" -> rows.filter(col("r") > 2)),
+        Some("""{"url": "zz-sentinel", "r": 900001, "fp": "s"}""")) { landing =>
+      recrawlStream(spark, landing).toDF().writeStream.format("memory").queryName(mem)
+        .outputMode("append").start()
     }
-    deliverWave("wave1", fetches.filter(col("r") <= 2))
-    val q = recrawlStream(spark, landing.toString)
-      .toDF().writeStream.format("memory").queryName(mem)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      deliverWave("wave2", fetches.filter(col("r") > 2))
-      q.processAllAvailable()
-      for (n <- Seq(1, 2)) {
-        java.nio.file.Files.writeString(landing.resolve(s"zz-sentinel$n.json"),
-          s"""{"url": "zz-sentinel", "r": ${900000 + n}, "fp": "s"}""")
-        q.processAllAvailable()
-      }
-    } finally { q.stop(); deleteRecursively(landing) }
     graft.ext.UrlCanon.withRecrawlDerived(
       drainMemorySink(spark, mem).filter(col("url") =!= "zz-sentinel"))
   }
@@ -1080,40 +1105,26 @@ object StreamingReports {
     */
   def noveltyStreamReplay(outer: SparkSession, sfDir: String): DataFrame = {
     val spark = replaySession(outer)
-    import java.nio.file.Files
     import org.apache.spark.sql.types._
-    val landing = Files.createTempDirectory("graft-novelty-replay")
-    val outDir = Files.createTempDirectory("graft-novelty-out")
+    val outDir = java.nio.file.Files.createTempDirectory("graft-novelty-out")
     val docs = graft.tables.Corpus.load(spark, sfDir, "documents")
     val refSet = graft.ext.TextAnalysis.ngramSet(
       docs.filter(col("doc_id") % 5 === 1), "text", 3).localCheckpoint()
     val scored = docs.filter(col("doc_id") % 5 === 0)
       .select(col("doc_id"), col("text"))
-    def renderWave(name: String, wave: DataFrame): Unit = {
-      val tmp = Files.createTempDirectory(s"graft-novelty-$name")
-      wave.coalesce(1).write.mode("overwrite").json(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".json")).head
-      Files.move(part.toPath, landing.resolve(s"$name.json"))
-      deleteRecursively(tmp)
-    }
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    renderWave("wave1", scored.filter(col("doc_id") % 3 === 0))
-    val q = spark.readStream.schema(schema).json(landing.toString)
-      .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ext.TextAnalysis.ngramNoveltyAgainst(
-            batch, refSet, "doc_id", "text", n = 3)
-          .write.mode("append").parquet(outDir.toString)
-        ()
-      }.start()
-    try {
-      q.processAllAvailable()
-      renderWave("wave2", scored.filter(col("doc_id") % 3 === 1))
-      q.processAllAvailable()
-      renderWave("wave3", scored.filter(col("doc_id") % 3 === 2))
-      q.processAllAvailable()
-    } finally { q.stop(); deleteRecursively(landing) }
+    replayWaves("graft-novelty-replay",
+        (0 to 2).map(k => s"wave${k + 1}" -> scored.filter(col("doc_id") % 3 === k))) {
+      landing =>
+        spark.readStream.schema(schema).json(landing)
+          .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+            graft.ext.TextAnalysis.ngramNoveltyAgainst(
+                batch, refSet, "doc_id", "text", n = 3)
+              .write.mode("append").parquet(outDir.toString)
+            ()
+          }.start()
+    }
     val out = spark.read.parquet(outDir.toString).localCheckpoint()
     deleteRecursively(outDir)
     out
@@ -1123,48 +1134,32 @@ object StreamingReports {
     * (q124's certified surface): events are rendered to a JSON landing
     * dir in TWO interleaved waves (event-id parity — every user's
     * stream is split across waves, maximal disorder), streamed through
-    * the state machine, then two far-future sentinel waves advance the
-    * watermark so every user's event-time timeout fires (timeouts run
-    * on the trigger AFTER the watermark moves, hence two). Returns
-    * (stage, n_users) with the sentinel user filtered out —
-    * hash-comparable against q114's batch oracle.
+    * the state machine, with one far-future sentinel row riding the
+    * last wave (`replayWaves`): the no-data microbatch after it fires
+    * every user's event-time timeout. Returns (stage, n_users) with the
+    * sentinel user filtered out — hash-comparable against q114's batch
+    * oracle.
     */
   def funnelReplay(outer: SparkSession, sfDir: String): DataFrame = {
     val spark = replaySession(outer)
-    import java.nio.file.Files
-    val landing = Files.createTempDirectory("graft-funnel-replay")
     val mem = s"graft_funnel_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val ev = graft.tables.Corpus.load(spark, sfDir, "events")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("ts_us"), col("event_type"))
-    def renderWave(name: String, wave: DataFrame): Unit = {
-      val tmp = Files.createTempDirectory(s"graft-funnel-$name")
-      wave.coalesce(1).write.mode("overwrite").json(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".json")).head
-      Files.move(part.toPath, landing.resolve(s"$name.json"))
-      deleteRecursively(tmp)
+    // Sentinel id -48 is chosen to PASS the 5% md5 draw: a sentinel
+    // must be a fully valid row, or the sample filter — which the
+    // optimizer pushes BELOW the watermark operator — drops it before
+    // the event-time stats see it and the watermark never advances
+    // (debugged exactly so; the session replay's sentinel survives its
+    // filters the same way).
+    replayWaves("graft-funnel-replay",
+        Seq("wave1" -> ev.filter(col("event_id") % 2 === 0),
+          "wave2" -> ev.filter(col("event_id") % 2 =!= 0)),
+        Some("""{"event_id": -48, "user_id": -1, "ts_us": 1893456000000001, "event_type": "view"}""")) {
+      landing =>
+        funnelStream(spark, landing, Seq("view", "click", "signup", "purchase"), 0.05, "funnel-v1")
+          .toDF().writeStream.format("memory").queryName(mem).outputMode("append").start()
     }
-    renderWave("wave1", ev.filter(col("event_id") % 2 === 0))
-    val q = funnelStream(spark, landing.toString,
-        Seq("view", "click", "signup", "purchase"), 0.05, "funnel-v1")
-      .toDF().writeStream.format("memory").queryName(mem).outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      renderWave("wave2", ev.filter(col("event_id") % 2 =!= 0))
-      q.processAllAvailable()
-      // Sentinel ids -48/-61 are chosen to PASS the 5% md5 draw: a
-      // sentinel must be a fully valid row, or the sample filter —
-      // which the optimizer pushes BELOW the watermark operator —
-      // drops it before the event-time stats see it and the watermark
-      // never advances (debugged exactly so; the session replay's
-      // sentinels survive its filters the same way).
-      for ((id, n) <- Seq((-48, 1), (-61, 2))) {
-        Files.writeString(landing.resolve(s"zz-sentinel$n.json"),
-          s"""{"event_id": $id, "user_id": -1, "ts_us": ${1893456000000000L + n}, "event_type": "view"}""")
-        q.processAllAvailable()
-      }
-    } finally { q.stop(); deleteRecursively(landing) }
     drainMemorySink(spark, mem)
       .filter(col("user_id") >= 0)
       .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
@@ -1213,44 +1208,29 @@ object StreamingReports {
   }
 
   /** Bounded replay of [[transitionsStream]] (the funnelReplay
-    * machinery): two event-id-parity interleaved waves, two far-future
-    * sentinel waves to fire every timeout, sentinel user filtered out,
-    * pairs batch-aggregated to the (from, to, n) matrix — hash-
+    * machinery): two event-id-parity interleaved waves, one far-future
+    * sentinel row riding the last wave (`replayWaves`) so the no-data
+    * microbatch after it fires every timeout, sentinel user filtered
+    * out, pairs batch-aggregated to the (from, to, n) matrix — hash-
     * comparable against q128's batch oracle restricted to non-null
     * users.
     */
   def transitionsReplay(outer: SparkSession, sfDir: String): DataFrame = {
     val spark = replaySession(outer)
-    import java.nio.file.Files
-    val landing = Files.createTempDirectory("graft-trans-replay")
     val mem = s"graft_trans_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val ev = graft.tables.Corpus.load(spark, sfDir, "events")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("ts_us"), col("event_type"))
-    def renderWave(name: String, wave: DataFrame): Unit = {
-      val tmp = Files.createTempDirectory(s"graft-trans-$name")
-      wave.coalesce(1).write.mode("overwrite").json(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".json")).head
-      Files.move(part.toPath, landing.resolve(s"$name.json"))
-      deleteRecursively(tmp)
+    // no row filters upstream of the watermark here, but the sentinel
+    // still must be a fully-valid row (funnelReplay note)
+    replayWaves("graft-trans-replay",
+        Seq("wave1" -> ev.filter(col("event_id") % 2 === 0),
+          "wave2" -> ev.filter(col("event_id") % 2 =!= 0)),
+        Some("""{"event_id": -41, "user_id": -1, "ts_us": 1893456000000001, "event_type": "view"}""")) {
+      landing =>
+        transitionsStream(spark, landing).toDF().writeStream.format("memory").queryName(mem)
+          .outputMode("append").start()
     }
-    renderWave("wave1", ev.filter(col("event_id") % 2 === 0))
-    val q = transitionsStream(spark, landing.toString)
-      .toDF().writeStream.format("memory").queryName(mem)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      renderWave("wave2", ev.filter(col("event_id") % 2 =!= 0))
-      q.processAllAvailable()
-      // no row filters upstream of the watermark here, but the
-      // sentinels still must be fully-valid rows (funnelReplay note)
-      for (n <- Seq(1, 2)) {
-        Files.writeString(landing.resolve(s"zz-sentinel$n.json"),
-          s"""{"event_id": ${-40 - n}, "user_id": -1, "ts_us": ${1893456000000000L + n}, "event_type": "view"}""")
-        q.processAllAvailable()
-      }
-    } finally { q.stop(); deleteRecursively(landing) }
     drainMemorySink(spark, mem)
       .filter(col("user_id") >= 0)
       .groupBy(col("from_state"), col("to_state"))

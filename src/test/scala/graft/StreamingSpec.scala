@@ -185,6 +185,58 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
+  test("replayWaves trigger budget: two waves + one sentinel on the last wave " +
+      "run 4 microbatches and flush every user") {
+    // wave 1, the no-data batch its watermark move triggers, wave 2 with
+    // the sentinel, and the no-data batch that fires every timeout. An
+    // extra sentinel round adds batches; no-data microbatches switched
+    // off in replaySession leave the users unflushed.
+    val s = StreamingReports.replaySession(spark)
+    val stages = Seq("view", "click", "signup", "purchase")
+    val ev = graft.tables.Corpus.load(s, sf0001, "events")
+      .select($"event_id", $"user_id", unix_micros($"ts").as("ts_us"), $"event_type")
+    val mem = "replay_trigger_budget"
+    val q = StreamingReports.replayWaves("graft-trigger-budget",
+        Seq("wave1" -> ev.filter($"event_id" % 2 === 0),
+          "wave2" -> ev.filter($"event_id" % 2 =!= 0)),
+        Some("""{"event_id": -48, "user_id": -1, "ts_us": 1893456000000001, "event_type": "view"}""")) {
+      landing =>
+        StreamingReports.funnelStream(s, landing, stages, 0.05, "funnel-v1")
+          .toDF().writeStream.format("memory").queryName(mem).outputMode("append").start()
+    }
+    // an idle progress event repeats a batch id: count the batches run
+    val batches = q.recentProgress.map(_.batchId).distinct
+    assert(batches.length == 4, s"microbatches run: ${batches.mkString(", ")}")
+
+    val flushed = StreamingReports.drainMemorySink(s, mem)
+      .filter($"user_id" =!= -1L).select($"user_id").as[Long].collect().sorted.toSeq
+    val users = graft.operators.Sampling.hashSample(ev, $"event_id", 0.05, "funnel-v1")
+      .filter($"user_id".isNotNull && $"ts_us".isNotNull && $"event_type".isin(stages: _*))
+      .select($"user_id").distinct().as[Long].collect().sorted.toSeq
+    assert(flushed == users, "every sampled funnel user must flush exactly once")
+    assert(users.nonEmpty)
+  }
+
+  test("funnelReplay (the q124 surface) == q114_funnel at sf0.001") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"stage".cast("long"), $"n_users").as[(Long, Long)].collect().toSet
+    val streamed = rows(StreamingReports.funnelReplay(spark, sf0001))
+    val batch = rows(SparkEntry.queries("q114_funnel")(spark, sf0001))
+    assert(streamed == batch)
+    assert(batch.size > 1, s"funnel reaches a single stage only: $batch")
+  }
+
+  test("transitionsReplay (the q141 surface) == q128 transitions on non-null users at sf0.001") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("from_state", "to_state", "n").as[(String, String, Long)].collect().toSet
+    val streamed = rows(StreamingReports.transitionsReplay(spark, sf0001))
+    val batch = rows(graft.operators.Profile.transitions(
+      graft.tables.Corpus.load(spark, sf0001, "events").filter($"user_id".isNotNull),
+      "user_id", Seq($"ts", $"event_id"), $"event_type"))
+    assert(streamed == batch)
+    assert(batch.nonEmpty)
+  }
+
   test("mapGroupsWithState running totals converge to batch counts") {
     val q = StreamingReports.runningTotals(
       StreamingReports.eventStream(spark, dir).as[Event])
