@@ -1150,7 +1150,7 @@ object SparkEntry {
           col("userId"), col("countryCode"), col("duration"),
           asDouble(dec2(col("itemPrice"))).as("price"))),
 
-    // ── S4 CSV source (header + inferSchema) + J5 case-differing equi
+    // ── S4 CSV source (header + declared schema) + J5 case-differing equi
     // join; null group for the unmatched country code ──
     "q26_countries_csv" -> ((s, _) => {
       val ev = Sources.events(s, FixturesDir + "/events_json")

@@ -12,7 +12,7 @@ import graft.operators.TopK
   * Shape: events day key (X2) → purchase counts A1 on (date,
   * resourceId) → left joins J1/J2 of the cleaned dims (P1/P2/X1) →
   * dense_rank top-10 W1/F1 (ties share a position, so >10 rows can
-  * survive — the reference's observable semantics) → global sort O1.
+  * survive — the reference's observable semantics) → sort O1.
   *
   * Scale: the events are scanned once and shuffled once, by the counts
   * aggregate; everything after it runs on the compacted (date,
@@ -26,6 +26,15 @@ import graft.operators.TopK
   * are broadcast (bounded by contract). The reference's per-day driver
   * loop + full recompute (top10.py:262-278) is replaced by a single
   * partitioned write — one pass, no re-execution.
+  *
+  * Sort: the counts are repartitioned by date, which already clusters
+  * the rank window's (date, categoryId) partitions and the K1 sink's
+  * per-date groups, so the reference's global sort O1 (top10.py:253)
+  * becomes a sort within each date partition: one exchange instead of
+  * the window's plus a range exchange and its sampling job. Each date
+  * is written as one file with rows in (categoryId, position) order —
+  * the bytes the global sort wrote — but the returned frame is no
+  * longer globally ordered (DIVERGENCES.md #13).
   */
 object Top10Job {
 
@@ -60,11 +69,11 @@ object Top10Job {
     * checks it against the reference's event-grain plan.
     */
   def reportFromCounts(counts: DataFrame, resources: DataFrame, categories: DataFrame): DataFrame = {
-    val withDims = counts
+    val withDims = counts.repartition(col("date"))
       .join(broadcast(cleanResources(resources)), Seq("resourceId"), "left")
       .join(broadcast(cleanCategories(categories)), Seq("categoryId"), "left")
     TopK.denseTopK(withDims, Seq("date", "categoryId"), col("count").desc, 10)
-      .orderBy("date", "categoryId", "position")
+      .sortWithinPartitions("date", "categoryId", "position")
       .select("position", "date", "categoryId", "categoryName", "resourceId", "resourceName")
   }
 

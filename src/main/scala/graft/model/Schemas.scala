@@ -31,6 +31,17 @@ object Schemas {
     StructField("name", StringType),
     StructField("percent", StringType)))
 
+  /** resources dim — the `Resource` fields (create_resource.py:27-34),
+    * all strings, in the alphabetical order JSON inference produced for
+    * the reference's inferred read (top10.py:97-114).
+    */
+  val resource: StructType = StructType(
+    Seq("categoryId", "id", "name", "promotion", "providerId").map(StructField(_, StringType)))
+
+  /** countries dim — the CSV header, in file order (royalties.py:66-68). */
+  val country: StructType = StructType(
+    Seq("CountryCode", "Country", "Code").map(StructField(_, StringType)))
+
   /** Money precision used across jobs. */
   val money: DecimalType = DecimalType(12, 2)
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, Dataset, Row, SparkSession}
 import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -93,12 +93,15 @@ object Sources {
     df.select(df.col("*"), df.col("_metadata.file_name").as("source_file"))
   }
 
-  /** S2 — dimension load with *inferred* schema (the reference's
-    * Firestore-resources path infers, top10.py:97-114). Inference is
-    * fine for dims: bounded data, one small pass.
+  /** S2 — resources dim read with the declared all-string
+    * `Schemas.resource`. The reference infers it (top10.py:97-114); a
+    * declared schema makes the load lazy (no inference job, so every
+    * report that reads the dim skips one scan), at the cost recorded in
+    * DIVERGENCES.md #13: fields outside the declared set are dropped,
+    * and a JSON number or boolean is kept as its text.
     */
   def resources(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path)
+    spark.read.schema(Schemas.resource).json(path)
 
   /** S1 — HTTP-JSON dim (categories): the reference GETs a url and
     * builds a DataFrame from the payload's `content` array with an
@@ -137,8 +140,8 @@ object Sources {
 
   /** S7 consumer side — users dim (create_user.py:24-29): the reference
     * writes it keyed by email and never reads it; modeled here so the
-    * surface is complete for a migrating consumer. Inferred schema like
-    * the other Firestore-backed dim.
+    * surface is complete for a migrating consumer. Inferred schema, as
+    * the reference's Firestore reads infer.
     */
   def users(spark: SparkSession, path: String): DataFrame =
     spark.read.json(path)
@@ -148,21 +151,31 @@ object Sources {
     users(spark, path).select("email", "name", "age").as[User]
   }
 
-  /** S4 — CSV with header + inferSchema (countries, royalties.py:66-68). */
+  /** S4 — countries CSV read with the declared all-string
+    * `Schemas.country`. The reference reads it with header + inferSchema
+    * (royalties.py:66-68); the declared schema makes the load lazy (no
+    * header or inference job). The header is still checked against the
+    * declared names (`enforceSchema=false`): a renamed or reordered
+    * header fails the read with "does not conform" instead of labelling
+    * columns by position (DIVERGENCES.md #13).
+    */
   def countries(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
+    countriesReader(spark).csv(path)
 
   /** S4 over the fetch seam: the reference GETs this CSV from an HTTP
     * endpoint. A tiny bounded dim — fetched driver-side through the
-    * seam, then parsed with the same header+inferSchema options as the
-    * file path (so the two forms are byte-equivalent on one payload).
+    * seam, then parsed by the same reader as the file path (so the two
+    * forms are byte-equivalent on one payload).
     */
   def countriesVia(spark: SparkSession, location: String,
       fetcher: Fetcher = defaultFetcher): DataFrame = {
     import spark.implicits._
-    spark.read.option("header", "true").option("inferSchema", "true")
-      .csv(fetcher.fetch(location).linesIterator.toSeq.toDS())
+    countriesReader(spark).csv(fetcher.fetch(location).linesIterator.toSeq.toDS())
   }
+
+  private def countriesReader(spark: SparkSession): DataFrameReader =
+    spark.read.schema(Schemas.country)
+      .option("header", "true").option("enforceSchema", "false")
 
   /** S5 — scalar rates lookup: tiny JSON object fetched driver-side
     * through the `Fetcher` seam, exposed both as a broadcast Map

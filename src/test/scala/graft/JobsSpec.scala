@@ -2,9 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.jobs.{PlatformUsageJob, RoyaltiesJob, Top10Job}
@@ -122,6 +128,22 @@ class JobsSpec extends SparkSpec {
     assert(eventScans(ref) == 2 && eventJoins(ref).nonEmpty, ref.treeString)
   }
 
+  test("Top10Job plan: two hash shuffles (counts, date), no range sort exchange") {
+    // before execution, an adaptive plan's executedPlan is its initial
+    // plan: every exchange the planner placed, none coalesced yet
+    val plan = Top10Job.transform(events, resources, categories).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val shuffles = plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(!shuffles.exists(_.isInstanceOf[RangePartitioning]), plan.treeString)
+    val hashKeys = shuffles.collect { case h: HashPartitioning =>
+      h.expressions.map { case a: Attribute => a.name; case e => e.sql }
+    }
+    assert(hashKeys.size == shuffles.size, plan.treeString)
+    assert(hashKeys.toSet == Set(Seq("date", "resourceId"), Seq("date")), plan.treeString)
+  }
+
   test("K1 sink: pipe-CSV partitioned by date with header") {
     val out = tmpDir("top10csv")
     Top10Job.write(Top10Job.transform(events, resources, categories), out)
@@ -131,6 +153,20 @@ class JobsSpec extends SparkSpec {
     val csv = Files.list(d1).filter(_.toString.endsWith(".csv")).findFirst().get()
     val lines = Files.readAllLines(csv)
     assert(lines.get(0) == "position|categoryId|categoryName|resourceId|resourceName")
+    // each date is one file, its rows in (categoryId, position) order
+    // (a null categoryId is written empty and sorts first, as in Spark)
+    val dateDirs = Files.list(Paths.get(out)).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("date=")).toSeq
+    assert(dateDirs.size == 2)
+    dateDirs.foreach { d =>
+      val parts = Files.list(d).iterator().asScala.filter(_.toString.endsWith(".csv")).toSeq
+      assert(parts.size == 1, s"$d holds ${parts.size} csv parts")
+      val keys = Files.readAllLines(parts.head).asScala.drop(1).toSeq.map { line =>
+        val f = line.split("\\|", -1)
+        (f(1), f(0).toInt)
+      }
+      assert(keys.nonEmpty && keys == keys.sorted, s"$d rows out of order: $keys")
+    }
     // read-back equivalence
     val back = spark.read.option("header", "true").option("sep", "|").csv(out)
     assert(back.count() == Top10Job.transform(events, resources, categories).count())

@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType}
 
@@ -19,7 +22,7 @@ class SourcesSpec extends SparkSpec {
     assert(ev.filter($"userId".isNull).count() == 4)
   }
 
-  test("S2: inferred-schema resources dim") {
+  test("S2: declared-schema resources dim") {
     val res = Sources.resources(spark, s"$fix/resources.json")
     assert(res.count() == 6)
     assert(res.columns.toSet == Set("id", "name", "categoryId", "providerId", "promotion"))
@@ -68,10 +71,89 @@ class SourcesSpec extends SparkSpec {
       Set("https://api.test/categories.json", "https://api.test/rates.json"))
   }
 
-  test("S4: CSV with header + inferSchema keeps PascalCase columns") {
+  test("S4: CSV with header + declared schema keeps PascalCase columns") {
     val ct = Sources.countries(spark, s"$fix/countries.csv")
     assert(ct.columns.toSeq == Seq("CountryCode", "Country", "Code"))
     assert(ct.count() == 5)
+  }
+
+  /** Jobs started on this thread while `body` runs. Jobs are tagged with
+    * a local property; a marker job run afterwards is waited for, and
+    * the listener bus delivers events in order, so every tagged job
+    * start has been counted once the marker's has.
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val key = "graft.spec.phase"
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(tags.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "body")
+      body
+      sc.setLocalProperty(key, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!tags.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(tags.contains("marker"), "marker job never reached the listener")
+      tags.asScala.count(_ == "body")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("S2/S4: declared-schema dim loads run no Spark job") {
+    assert(jobsStartedBy(Sources.resources(spark, s"$fix/resources.json")) == 0)
+    assert(jobsStartedBy(Sources.countries(spark, s"$fix/countries.csv")) == 0)
+    assert(jobsStartedBy(Sources.countriesVia(spark, s"$fix/countries.csv")) == 0)
+    // the counter is not vacuous: the reference's inferring reads run jobs
+    assert(jobsStartedBy(spark.read.json(s"$fix/resources.json")) > 0)
+    assert(jobsStartedBy(spark.read.option("header", "true").option("inferSchema", "true")
+      .csv(s"$fix/countries.csv")) > 0)
+  }
+
+  test("S2/S4: declared-schema dims == the reference's inferring reads on the fixtures") {
+    def rows(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
+    val res = Sources.resources(spark, s"$fix/resources.json")
+    val resInferred = spark.read.json(s"$fix/resources.json")
+    assert(res.columns.toSeq == resInferred.columns.toSeq)
+    assert(rows(res) == rows(resInferred))
+    val ct = Sources.countries(spark, s"$fix/countries.csv")
+    val ctInferred = spark.read.option("header", "true").option("inferSchema", "true")
+      .csv(s"$fix/countries.csv")
+    assert(ct.columns.toSeq == ctInferred.columns.toSeq)
+    assert(rows(ct) == rows(ctInferred))
+  }
+
+  test("S2: declared resources schema keeps number/boolean text, drops undeclared fields") {
+    val path = java.nio.file.Files.createTempFile("resources-typed", ".json")
+    path.toFile.deleteOnExit()
+    java.nio.file.Files.writeString(path,
+      """{"id": 7, "name": "n", "categoryId": "3.01", "providerId": "p1", "promotion": true, "extra": 1}""")
+    val res = Sources.resources(spark, path.toString)
+    assert(res.columns.toSeq == Seq("categoryId", "id", "name", "promotion", "providerId"))
+    assert(res.select("id", "promotion").as[(String, String)].collect().toSeq == Seq(("7", "true")))
+  }
+
+  test("S4: a countries header that differs from the declared names fails the read") {
+    val reordered = "Country,CountryCode,Code\nUnited States,US,USD\n"
+    val path = java.nio.file.Files.createTempFile("countries-reordered", ".csv")
+    path.toFile.deleteOnExit()
+    java.nio.file.Files.writeString(path, reordered)
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    val fromFile = intercept[Exception](Sources.countries(spark, path.toString).collect())
+    assert(messages(fromFile).contains("does not conform"), messages(fromFile))
+    val inline = new graft.sources.Fetcher {
+      override def fetch(location: String): String = reordered
+    }
+    val fetched = intercept[Exception](Sources.countriesVia(spark, "inline", inline).collect())
+    assert(messages(fetched).contains("does not conform"), messages(fetched))
   }
 
   test("typed Dataset views round-trip the declared schemas") {
