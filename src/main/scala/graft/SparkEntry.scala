@@ -1813,7 +1813,7 @@ object SparkEntry {
     }),
 
     // ── STREAMING URL triage: q213's canonicalization on a LIVE
-    // ingest (readStream.text JSONL → from_json → UrlCanon
+    // ingest (.write.json waves → readStream.json → UrlCanon
     // projections) — a stateless per-row map, so two delivery waves
     // must accumulate the identical table; certified against q213's
     // batch oracle VERBATIM (the q185 discipline). ──
@@ -3196,9 +3196,10 @@ object SparkEntry {
     // fixture replayed over two JSONL waves must equal the batch
     // output — certified against q281's oracle VERBATIM (shared
     // ChatTemplateSql val + shared chatFixture helper). The payload
-    // here is itself JSON, so the replay harness's to_json/from_json
-    // envelope must round-trip nested quoting — an escape-fidelity
-    // case the flat-text twins never exercised. ──
+    // here is itself JSON, so the replay harness's JSON-lines
+    // envelope (.write.json → readStream.json) must round-trip nested
+    // quoting — an escape-fidelity case the flat-text twins never
+    // exercised. ──
     "q285_chat_stream" -> ((s, dir) =>
       graft.streaming.StreamingReports.projectionStreamReplay(
         s, chatFixture(t(s, dir, "documents")), "doc_id", "messages",
@@ -3331,9 +3332,10 @@ object SparkEntry {
     // ── streaming Unicode-tokens twin (the q263/q271/q285 replay
     // discipline): the multilingual fixture replayed over two JSONL
     // waves — the FIRST twin whose payload text is non-ASCII, so the
-    // replay envelope's UTF-8 round trip (to_json → landing .text
-    // file → from_json) is itself under certification; lang rides
-    // inside a nested-JSON payload (the q285 nested-quote seam).
+    // replay envelope's UTF-8 round trip (.write.json → landing
+    // .json file → readStream.json) is itself under certification;
+    // lang rides inside a nested-JSON payload (the q285 nested-quote
+    // seam).
     // Certified against q288's oracle VERBATIM (shared
     // UnicodeTokensSql + shared uTokensReport projection). ──
     "q294_unicode_stream" -> ((s, dir) => {
@@ -5497,10 +5499,10 @@ object SparkEntry {
 
     // ── streaming NFC twin (the q294 discipline, second non-ASCII
     // payload class: DECOMPOSED combining marks and conjoining jamo
-    // ride the to_json → landing file → from_json envelope raw): the
-    // per-row projection half of q295 — nfc_text + changed — replayed
-    // over two waves; the dedup-group half is batch-only (append mode
-    // carries no aggregates). ──
+    // ride the .write.json → landing file → readStream.json envelope
+    // raw): the per-row projection half of q295 — nfc_text + changed
+    // — replayed over two waves; the dedup-group half is batch-only
+    // (append mode carries no aggregates). ──
     "q303_nfc_stream" -> ((s, dir) =>
       graft.streaming.StreamingReports.projectionStreamReplay(
         s, nfcFixture(t(s, dir, "documents")), "doc_id", "text",

@@ -289,6 +289,12 @@ object Dedup {
     * so every batch probe co-locates without a corpus-side shuffle;
     * plain parquet keeps the sandbox path simple while the read side's
     * join shape is identical.
+    *
+    * Invariant, kept by every writer (this one, [[appendToMinhashIndex]],
+    * [[appendFromIndex]]): bands/ == bandedOf(sets/) at the stored
+    * geometry, as row multisets — each sets/ row contributes exactly its
+    * own band rows. An id appended twice (CrawlIngest's re-sent
+    * `new_id`) has two rows in sets/ and two band-row groups in bands/.
     */
   def writeMinhashIndex(idx: MinhashIndex, path: String): Unit = {
     val spark = idx.bands.sparkSession

@@ -39,13 +39,21 @@ import graft.ext.Dedup
   * Exactly-once: the per-batch decision set commits via
   * staged-write + atomic rename + manifest (a batch's decisions exist
   * IFF `_manifest/v<id>.json` exists — StreamingReports.applyCdcBatch's
-  * discipline, same helpers). The index append is made idempotent by
-  * an anti-join against the index's current ids, so a replayed batch
-  * whose append already landed appends nothing; the probe side is
-  * additionally duplicate-tolerant (candidate ids are distinct'd)
-  * should a crash land between partial append files — decisions are
-  * exactly-once, the index is at-least-once-with-idempotent-replay.
-  * StreamingSpec kills the batch at every window and replays.
+  * discipline, same helpers). The index append runs after that
+  * commit. On the crash-replay path (decisions committed by an earlier
+  * invocation) it is made idempotent by an anti-join against the
+  * index's current ids, so a replayed batch whose append already
+  * landed appends nothing. The fresh path skips that anti-join (no
+  * append for the batch can exist yet), so nothing guards ACROSS
+  * batches: a `new_id` ingested by an earlier batch and re-sent later
+  * with changed text that is not a near-dup of its first version is
+  * `ingested` and appended again, duplicating its rows in the index's
+  * `sets/` and `bands/` (the index append assumes ids new to the
+  * index). The probe side is duplicate-tolerant (candidate ids are
+  * distinct'd) should a crash land between partial append files —
+  * decisions are exactly-once, the index is
+  * at-least-once-with-idempotent-replay. StreamingSpec kills the batch
+  * at every window and replays.
   */
 object CrawlIngest {
 
@@ -238,32 +246,21 @@ object CrawlIngest {
     val spark = StreamingReports.replaySession(outer)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val work = java.nio.file.Files.createTempDirectory("graft-crawl")
-    val landing = java.nio.file.Files.createDirectory(work.resolve("landing"))
     val (store, index, chk) =
       (s"$work/store", s"$work/index", s"$work/chk")
     Dedup.writeMinhashIndex(
       Dedup.buildMinhashIndex(docs, "doc_id", "text", 3, 128, 32), index)
-    def deliver(wave: Int): Unit =
-      waveLines(docs, wave).coalesce(1)
-        .write.mode("append").text(landing.toString)
-    deliver(0)
-    val q = spark.readStream.text(landing.toString)
-      .writeStream
-      .option("checkpointLocation", chk)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyCrawlBatch(b.toDF(), store, index, id)
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      deliver(1)
-      q.processAllAvailable()
-      deliver(2)
-      q.processAllAvailable()
-    } finally {
-      q.stop()
+    try StreamingReports.replayWaves("graft-crawl-landing",
+        (0 to 2).map(w => StreamingReports.render(s"wave$w", waveLines(docs, w), "text")))(
+      landing => spark.readStream.text(landing)
+        .writeStream
+        .option("checkpointLocation", chk)
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+          applyCrawlBatch(b.toDF(), store, index, id)
+        }
+        .start())
+    finally {
       // decisions are read lazily from store/; everything else is done
-      StreamingReports.deleteRecursively(landing)
       StreamingReports.deleteRecursively(java.nio.file.Paths.get(chk))
       StreamingReports.deleteRecursively(java.nio.file.Paths.get(index))
     }

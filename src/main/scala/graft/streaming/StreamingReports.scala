@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery}
@@ -195,10 +197,10 @@ object StreamingReports {
       }
       .start()
 
-  // ── replay plumbing shared by the five bounded-replay surfaces:
-  // closed directory streams (Files.list holds an open dir handle) and
-  // landing-dir cleanup, so repeated bench runs don't accumulate temp
-  // copies of the fixtures ──
+  // ── replay plumbing: every bounded replay lands its waves into a
+  // fresh landing dir through `replayWaves`, which also cleans the
+  // landing dir up, so repeated bench runs don't accumulate temp copies
+  // of the fixtures ──
 
   /** Bounded-replay session: same SparkContext, isolated SQLConf with
     * shuffle/state partitions sized to the FIXTURE volume (hundreds of
@@ -238,70 +240,124 @@ object StreamingReports {
     out
   }
 
-  private def listFixtureFiles(srcDir: String): Seq[java.nio.file.Path] = {
+  private def listFixtureFiles(srcDir: String): Seq[Path] = {
     import scala.jdk.CollectionConverters._
-    val s = java.nio.file.Files.list(java.nio.file.Paths.get(srcDir))
+    val s = Files.list(Paths.get(srcDir))
     try s.iterator().asScala
-      .filter(java.nio.file.Files.isRegularFile(_))
+      .filter(Files.isRegularFile(_))
       .toSeq.sortBy(_.getFileName.toString)
     finally s.close()
   }
 
-  private def deliver(
-      landing: java.nio.file.Path, files: Seq[java.nio.file.Path],
-      suffix: String = ""): Unit =
-    files.foreach(p => java.nio.file.Files.copy(
-      p, landing.resolve(p.getFileName.toString + suffix),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING))
-
-  private[streaming] def deleteRecursively(dir: java.nio.file.Path): Unit = {
+  private[streaming] def deleteRecursively(dir: Path): Unit = {
     import scala.jdk.CollectionConverters._
-    val s = java.nio.file.Files.walk(dir)
+    val s = Files.walk(dir)
     try s.iterator().asScala.toSeq.reverse
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
+      .foreach(p => Files.deleteIfExists(p))
     finally s.close()
   }
 
-  /** Drives a bounded replay through a fresh landing dir: each of
-    * `waves` lands as ONE file `<name>.json` (rendered aside, then
-    * moved in, so the file source never lists a half-written part) and
-    * gets one `processAllAvailable()`; the first wave lands before
-    * `start` is called with the landing dir. The query is stopped and
-    * the landing dir deleted on the way out; the stopped query is
-    * returned (its `recentProgress` stays readable).
+  /** One replay wave: puts its files into the landing dir. */
+  type Lander = Path => Unit
+
+  /** Lander copying fixture files byte-for-byte (q185's malformed lines
+    * must land verbatim), each under its own name plus `suffix`. A file
+    * is copied to a hidden name and renamed in, so the file source
+    * never lists a half-copied file.
+    */
+  private def copyFiles(files: Seq[Path], suffix: String = ""): Lander =
+    landing => files.foreach { p =>
+      val name = p.getFileName.toString + suffix
+      Files.move(
+        Files.copy(p, landing.resolve(s".$name.tmp"), StandardCopyOption.REPLACE_EXISTING),
+        landing.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+    }
+
+  /** `files` as two copy waves: the first `1/firstOf` of them (at least
+    * one), then the rest.
+    */
+  private def splitFiles(files: Seq[Path], firstOf: Int = 2): Seq[Lander] = {
+    val (first, rest) = files.splitAt(math.max(1, files.size / firstOf))
+    Seq(copyFiles(first), copyFiles(rest))
+  }
+
+  /** Lander rendering `rows` as ONE file `<name>.<format>` (json,
+    * parquet or text): one coalesce(1) write to a side dir, then the
+    * part file moves in, so the file source never lists a half-written
+    * part.
     *
-    * Event-time timeout replays pass `sentinel`: one far-future JSON
-    * row of a key of its own, appended to the LAST wave's file so both
-    * land in the same microbatch. It cannot change a real key's
-    * result: a batch's rows are checked for lateness against the
+    * Event-time timeout replays pass `sentinel` on their LAST wave: one
+    * far-future JSON row of a key of its own, appended to that wave's
+    * file so both land in the same microbatch. It cannot change a real
+    * key's result: a batch's rows are checked for lateness against the
     * previous batch's watermark, so the wave is accepted exactly as
     * without it; the watermark moves past every open state only after
     * the batch, and Spark's automatic no-data microbatch then fires
     * every timeout. The caller filters the sentinel key back out.
     */
-  private[graft] def replayWaves(
-      prefix: String, waves: Seq[(String, DataFrame)], sentinel: Option[String] = None)(
-      start: String => StreamingQuery): StreamingQuery = {
-    import java.nio.file.{Files, StandardOpenOption}
-    val landing = Files.createTempDirectory(prefix)
-    def land(i: Int): Unit = {
-      val (name, rows) = waves(i)
-      val tmp = Files.createTempDirectory(s"$prefix-$name")
-      rows.coalesce(1).write.mode("overwrite").json(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".json")).head.toPath
-      if (i == waves.size - 1)
-        sentinel.foreach(s => Files.writeString(part, s + "\n", StandardOpenOption.APPEND))
-      Files.move(part, landing.resolve(s"$name.json"))
-      deleteRecursively(tmp)
-    }
+  private[graft] def render(
+      name: String, rows: DataFrame, format: String = "json",
+      sentinel: Option[String] = None): Lander = landing => {
+    val side = Files.createTempDirectory(s"graft-render-$name")
     try {
-      land(0)
+      rows.coalesce(1).write.mode("overwrite").format(format).save(side.toString)
+      val part = side.toFile.listFiles().filter(_.getName.startsWith("part-")).head.toPath
+      sentinel.foreach(s => Files.writeString(part, s + "\n", StandardOpenOption.APPEND))
+      Files.move(part, landing.resolve(s"$name.$format"))
+    } finally deleteRecursively(side)
+  }
+
+  /** The ingest replays' two parquet waves: the `waveA` rows, then the rest. */
+  private def parquetWaves(rows: DataFrame, waveA: Column): Seq[Lander] =
+    Seq(render("waveA", rows.filter(waveA), "parquet"),
+      render("waveB", rows.filter(!waveA), "parquet"))
+
+  /** Drives a bounded replay — the one place a replay runs: `waves(0)`
+    * lands in a fresh landing dir, `start` is called with that dir, and
+    * each wave (the later ones landed in turn) gets one
+    * `processAllAvailable()`. Work between waves belongs in the next
+    * wave's lander; work after the drain runs after this returns. On
+    * the way out, failing or not, the query is stopped and the landing
+    * dir deleted; the stopped query is returned (its `recentProgress`
+    * stays readable).
+    */
+  private[graft] def replayWaves(prefix: String, waves: Seq[Lander])(
+      start: String => StreamingQuery): StreamingQuery = {
+    val landing = Files.createTempDirectory(prefix)
+    try {
+      waves.head(landing)
       val q = start(landing.toString)
-      try waves.indices.foreach { i => if (i > 0) land(i); q.processAllAvailable() }
+      try waves.indices.foreach { i => if (i > 0) waves(i)(landing); q.processAllAvailable() }
       finally q.stop()
       q
     } finally deleteRecursively(landing)
+  }
+
+  /** [[replayWaves]] into a memory sink: `stream` builds the streaming
+    * frame over the landing dir, the sink runs in output `mode` under a
+    * UUID-suffixed name, and its drained rows are returned.
+    */
+  private def replayToMemory(
+      spark: SparkSession, prefix: String, waves: Seq[Lander], mode: String = "append")(
+      stream: String => DataFrame): DataFrame = {
+    val mem = prefix.replace('-', '_') + "_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+    replayWaves(prefix, waves)(landing =>
+      stream(landing).writeStream.format("memory").queryName(mem).outputMode(mode).start())
+    drainMemorySink(spark, mem)
+  }
+
+  /** `df` re-rooted under the replay session `spark` (frames from the
+    * outer session must not join frames planned under the clone):
+    * written to a temp dir, read back and checkpointed, the temp dir
+    * deleted.
+    */
+  private def reroot(spark: SparkSession, df: DataFrame): DataFrame = {
+    val tmp = Files.createTempDirectory("graft-reroot")
+    try {
+      df.write.mode("overwrite").parquet(tmp.toString)
+      spark.read.parquet(tmp.toString).localCheckpoint()
+    } finally deleteRecursively(tmp)
   }
 
   /** Bounded replay of `dedupStream` — the certified-query surface
@@ -316,22 +372,13 @@ object StreamingReports {
     */
   def dedupReplay(outer: SparkSession, srcDir: String): DataFrame = {
     val spark = replaySession(outer)
-    val landing = java.nio.file.Files.createTempDirectory("graft-dedup-replay")
     val files = listFixtureFiles(srcDir)
-    deliver(landing, files)
-    val mem = s"graft_dedup_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = dedupStream(eventStream(spark, landing.toString))
-      .select("eventId", "userId", "resourceId", "countryCode", "duration")
-      .writeStream.format("memory").queryName(mem).outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      deliver(landing, files, ".redelivered.json") // same payloads, new filenames
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      deleteRecursively(landing) // results live in the memory sink
+    // the second wave: same payloads, new filenames
+    replayToMemory(spark, "graft-dedup-replay",
+        Seq(copyFiles(files), copyFiles(files, ".redelivered.json"))) { landing =>
+      dedupStream(eventStream(spark, landing))
+        .select("eventId", "userId", "resourceId", "countryCode", "duration")
     }
-    drainMemorySink(spark, mem)
   }
 
   /** Bounded replay of `followupJoin` — the certified-query surface
@@ -343,15 +390,11 @@ object StreamingReports {
     */
   def followupReplay(outer: SparkSession, srcDir: String, windowMinutes: Int): DataFrame = {
     val spark = replaySession(outer)
-    val landing = java.nio.file.Files.createTempDirectory("graft-followup-replay")
-    deliver(landing, listFixtureFiles(srcDir))
-    val mem = s"graft_followup_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = followupJoin(spark, landing.toString, windowMinutes)
-      .select(col("a_id"), col("b_id"), col("a_user").as("uid"))
-      .writeStream.format("memory").queryName(mem).outputMode("append").start()
-    try q.processAllAvailable()
-    finally { q.stop(); deleteRecursively(landing) }
-    drainMemorySink(spark, mem)
+    replayToMemory(spark, "graft-followup-replay",
+        Seq(copyFiles(listFixtureFiles(srcDir)))) { landing =>
+      followupJoin(spark, landing, windowMinutes)
+        .select(col("a_id"), col("b_id"), col("a_user").as("uid"))
+    }
   }
 
   /** Bounded replay of `top10StreamUpdate` over a directory of landing
@@ -371,24 +414,13 @@ object StreamingReports {
       outer: SparkSession, srcDir: String,
       resources: DataFrame, categories: DataFrame): DataFrame = {
     val spark = replaySession(outer)
-    val landing = java.nio.file.Files.createTempDirectory("graft-top10-replay")
-    val work = java.nio.file.Files.createTempDirectory("graft-top10-out")
+    val work = Files.createTempDirectory("graft-top10-out")
     val (store, report) = (s"$work/store", s"$work/report")
-    val files = listFixtureFiles(srcDir)
-    val (wave1, wave2) = files.splitAt(math.max(1, files.size / 2))
-    deliver(landing, wave1)
-    val q = top10StreamUpdate(spark, landing.toString, resources, categories, store, report)
-    try {
-      q.processAllAvailable()
-      deliver(landing, wave2)
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      // the returned frame reads the report CSV lazily — clean the
-      // landing copies and the store, keep report/ alive
-      deleteRecursively(landing)
-      deleteRecursively(java.nio.file.Paths.get(store))
-    }
+    // the returned frame reads the report CSV lazily — clean the
+    // store, keep report/ alive
+    try replayWaves("graft-top10-replay", splitFiles(listFixtureFiles(srcDir)))(landing =>
+      top10StreamUpdate(spark, landing, resources, categories, store, report))
+    finally deleteRecursively(Paths.get(store))
     spark.read.option("header", "true").option("sep", "|").csv(report)
       .select(col("position").cast("bigint").as("position"),
         col("date").cast("string").as("date"),
@@ -471,17 +503,14 @@ object StreamingReports {
     */
   def sessionReplay(outer: SparkSession, srcDir: String, gapMinutes: Int): DataFrame = {
     val spark = replaySession(outer)
-    import java.nio.file.Files
-    val landing = Files.createTempDirectory("graft-session-replay")
-    deliver(landing, listFixtureFiles(srcDir))
-    Files.writeString(landing.resolve("zz-sentinel.json"),
-      """{"eventId": "sent1", "eventTime": "2030-01-01T00:00:00+00:00", "processTime": "2030-01-01T00:00:00+00:00", "resourceId": "rX", "userId": "__sentinel", "countryCode": "US", "duration": 0, "itemPrice": "0"}""")
-    val mem = s"graft_sessions_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = sessionStream(spark, landing.toString, gapMinutes)
-      .toDF().writeStream.format("memory").queryName(mem).outputMode("append").start()
-    try q.processAllAvailable()
-    finally { q.stop(); deleteRecursively(landing) }
-    drainMemorySink(spark, mem).filter(col("userId") =!= "__sentinel")
+    val wave: Lander = landing => {
+      copyFiles(listFixtureFiles(srcDir))(landing)
+      Files.writeString(landing.resolve("zz-sentinel.json"),
+        """{"eventId": "sent1", "eventTime": "2030-01-01T00:00:00+00:00", "processTime": "2030-01-01T00:00:00+00:00", "resourceId": "rX", "userId": "__sentinel", "countryCode": "US", "duration": 0, "itemPrice": "0"}""")
+    }
+    replayToMemory(spark, "graft-session-replay", Seq(wave))(landing =>
+      sessionStream(spark, landing, gapMinutes).toDF())
+      .filter(col("userId") =!= "__sentinel")
   }
 
   /** Bounded replay of `runningTotals` — the certified-query surface
@@ -494,20 +523,10 @@ object StreamingReports {
   def runningTotalsReplay(outer: SparkSession, srcDir: String): DataFrame = {
     val spark = replaySession(outer)
     import spark.implicits._
-    val landing = java.nio.file.Files.createTempDirectory("graft-totals-replay")
-    val files = listFixtureFiles(srcDir)
-    val (wave1, wave2) = files.splitAt(math.max(1, files.size / 2))
-    deliver(landing, wave1)
-    val mem = s"graft_totals_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = runningTotals(eventStream(spark, landing.toString).as[Event])
-      .toDF("resourceId", "total")
-      .writeStream.format("memory").queryName(mem).outputMode("update").start()
-    try {
-      q.processAllAvailable()
-      deliver(landing, wave2)
-      q.processAllAvailable()
-    } finally { q.stop(); deleteRecursively(landing) }
-    drainMemorySink(spark, mem).groupBy("resourceId").agg(max(col("total")).as("total"))
+    replayToMemory(spark, "graft-totals-replay", splitFiles(listFixtureFiles(srcDir)),
+        "update")(landing =>
+      runningTotals(eventStream(spark, landing).as[Event]).toDF("resourceId", "total"))
+      .groupBy("resourceId").agg(max(col("total")).as("total"))
   }
 
   /** STREAMING CDC UPSERT — the streaming member of the Merge family:
@@ -652,17 +671,9 @@ object StreamingReports {
     */
   def cdcUpsertReplay(outer: SparkSession, srcDir: String): DataFrame = {
     val spark = replaySession(outer)
-    val landing = java.nio.file.Files.createTempDirectory("graft-cdc-replay")
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft-cdc-store").toString
-    val files = listFixtureFiles(srcDir)
-    val (newer, older) = files.reverse.splitAt(math.max(1, files.size / 2))
-    deliver(landing, newer)
-    val q = cdcUpsertStream(spark, landing.toString, storeRoot)
-    try {
-      q.processAllAvailable()
-      deliver(landing, older)
-      q.processAllAvailable()
-    } finally { q.stop(); deleteRecursively(landing) }
+    val storeRoot = Files.createTempDirectory("graft-cdc-store").toString
+    replayWaves("graft-cdc-replay", splitFiles(listFixtureFiles(srcDir).reverse))(landing =>
+      cdcUpsertStream(spark, landing, storeRoot))
     val latest = latestCdcVersion(storeRoot).getOrElse(
       sys.error(s"no CDC store version written under $storeRoot"))
     // vacuum: keep only the latest version (the returned frame reads it
@@ -714,66 +725,37 @@ object StreamingReports {
     */
   def quarantineStreamReplay(outer: SparkSession, srcDir: String): DataFrame = {
     val spark = replaySession(outer)
-    val landing = java.nio.file.Files.createTempDirectory("graft-quar-replay")
-    val files = listFixtureFiles(srcDir)
-    val (w1, w2) = files.splitAt(math.max(1, files.size / 2))
-    deliver(landing, w1)
-    val mem = s"graft_quar_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = graft.sources.Quarantine.triageLines(
-        spark.readStream.text(landing.toString))
-      .writeStream.format("memory").queryName(mem).outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      deliver(landing, w2)
-      q.processAllAvailable()
-    } finally { q.stop(); deleteRecursively(landing) }
-    drainMemorySink(spark, mem)
+    replayToMemory(spark, "graft-quar-replay", splitFiles(listFixtureFiles(srcDir)))(landing =>
+      graft.sources.Quarantine.triageLines(spark.readStream.text(landing)))
   }
 
   /** Streaming URL-canonicalization triage — q213's projection on a
     * LIVE ingest: crawl fetch records (doc_id, url JSONL) land in two
-    * delivery waves and stream through UrlCanon.canonicalUrl/Host.
-    * A pure stateless per-row map (the canonicalization is regex/
-    * string projections — no state store, no watermark), so the
+    * [[projectionStreamReplay]] waves and stream through
+    * UrlCanon.canonicalUrl/Host. A pure stateless per-row map (the
+    * canonicalization is regex/string projections — no state store,
+    * no watermark), so the
     * accumulated append output must equal the batch projection
     * line-for-line; certified against q213's batch oracle VERBATIM
     * (the q185 discipline). `urls` must have (doc_id, url).
     */
   def urlCanonStreamReplay(outer: SparkSession, urls: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     import graft.ext.UrlCanon
-    val spark = replaySession(outer)
-    val landing = java.nio.file.Files.createTempDirectory("graft-url-replay")
-    def deliverWave(df: DataFrame): Unit =
-      df.select(to_json(struct(col("doc_id"), col("url"))).as("value"))
-        .coalesce(1).write.mode("append").text(landing.toString)
-    deliverWave(urls.filter(col("doc_id") % 2 === 0))
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("url", StringType)))
-    val mem = s"graft_url_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val out = spark.readStream.text(landing.toString)
-      .select(from_json(col("value"), schema).as("j")).select("j.*")
+    projectionStreamReplay(outer, urls, "doc_id", "url", df => df
       .select(col("doc_id"), col("url"),
         UrlCanon.canonicalUrl(col("url")).as("canonical_url"))
       .withColumn("host",
         when(col("canonical_url").isNull, lit(null).cast("string"))
-          .otherwise(UrlCanon.canonicalHost(col("canonical_url"))))
-    val q = out.writeStream.format("memory").queryName(mem)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      deliverWave(urls.filter(col("doc_id") % 2 =!= 0))
-      q.processAllAvailable()
-    } finally { q.stop(); deleteRecursively(landing) }
-    drainMemorySink(spark, mem)
+          .otherwise(UrlCanon.canonicalHost(col("canonical_url")))))
   }
 
   /** Streaming HTTP response triage — q236's parse on a LIVE fetch
     * feed (the q218/q232 stateless-map discipline): raw responses land
-    * as JSONL waves (to_json escapes the CRLFs and quotes a wire
-    * payload is full of, and from_json restores them byte-exact),
-    * every record classifies independently — `HttpRecord.parse` is a
-    * pure projection, so no state, no watermark — and two delivery
+    * as JSONL waves (the JSON writer escapes the CRLFs and quotes a
+    * wire payload is full of, and the JSON reader restores them
+    * byte-exact), every record classifies independently —
+    * `HttpRecord.parse` is a pure projection, so no state, no
+    * watermark — and two delivery
     * waves must accumulate exactly the batch decision table; q248
     * certifies against q236's oracle VERBATIM. This is the production
     * shape: fetchers append response blobs continuously, and the
@@ -787,11 +769,12 @@ object StreamingReports {
   /** Stateless-projection streaming twin harness — the
     * [[httpParseStreamReplay]] shape generalized to ANY pure per-row
     * projection `f` over (id: long, payload: string) rows: replay the
-    * rows as two JSONL waves (even ids, then odd) through readStream →
-    * `f` → memory sink. Because `f` is a projection, the accumulated
-    * table must equal the batch `f(rows)` output verbatim — certify
-    * by reusing the batch query's oracle SQL unchanged (the
-    * identical-oracle discipline). `f` must not shuffle or aggregate:
+    * rows as two JSONL waves (even ids, then odd; each rendered by
+    * `.write.json` and read back by `readStream.json` with the declared
+    * (id, payload) schema) through readStream → `f` → memory sink.
+    * Because `f` is a projection, the accumulated table must equal the
+    * batch `f(rows)` output verbatim — certify by reusing the batch
+    * query's oracle SQL unchanged (the identical-oracle discipline). `f` must not shuffle or aggregate:
     * append-mode per-microbatch output only makes sense for
     * row-at-a-time transforms.
     */
@@ -800,25 +783,13 @@ object StreamingReports {
       payloadCol: String, f: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val spark = replaySession(outer)
-    val landing = java.nio.file.Files.createTempDirectory("graft-proj-replay")
-    def deliverWave(df: DataFrame): Unit =
-      df.select(to_json(struct(col(idCol), col(payloadCol))).as("value"))
-        .coalesce(1).write.mode("append").text(landing.toString)
-    deliverWave(rows.filter(col(idCol) % 2 === 0))
     val schema = StructType(Seq(
       StructField(idCol, LongType), StructField(payloadCol, StringType)))
-    val mem = s"graft_proj_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val out = f(
-      spark.readStream.text(landing.toString)
-        .select(from_json(col("value"), schema).as("j")).select("j.*"))
-    val q = out.writeStream.format("memory").queryName(mem)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      deliverWave(rows.filter(col(idCol) % 2 =!= 0))
-      q.processAllAvailable()
-    } finally { q.stop(); deleteRecursively(landing) }
-    drainMemorySink(spark, mem)
+    val wave = rows.select(col(idCol), col(payloadCol))
+    replayToMemory(spark, "graft-proj-replay",
+        Seq(render("even", wave.filter(col(idCol) % 2 === 0)),
+          render("odd", wave.filter(col(idCol) % 2 =!= 0))))(landing =>
+      f(spark.readStream.schema(schema).json(landing)))
   }
 
   /** STATEFUL streaming recrawl estimation — UrlCanon.recrawlStats'
@@ -881,50 +852,28 @@ object StreamingReports {
     */
   def recrawlReplay(outer: SparkSession, fetches: DataFrame): DataFrame = {
     val spark = replaySession(outer)
-    val mem = s"graft_recrawl_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val rows = fetches.select(col("url"), col("r"), col("fp"))
-    replayWaves("graft-recrawl-replay",
-        Seq("wave1" -> rows.filter(col("r") <= 2), "wave2" -> rows.filter(col("r") > 2)),
-        Some("""{"url": "zz-sentinel", "r": 900001, "fp": "s"}""")) { landing =>
-      recrawlStream(spark, landing).toDF().writeStream.format("memory").queryName(mem)
-        .outputMode("append").start()
-    }
     graft.ext.UrlCanon.withRecrawlDerived(
-      drainMemorySink(spark, mem).filter(col("url") =!= "zz-sentinel"))
+      replayToMemory(spark, "graft-recrawl-replay",
+          Seq(render("wave1", rows.filter(col("r") <= 2)),
+            render("wave2", rows.filter(col("r") > 2),
+              sentinel = Some("""{"url": "zz-sentinel", "r": 900001, "fp": "s"}"""))))(landing =>
+        recrawlStream(spark, landing).toDF())
+        .filter(col("url") =!= "zz-sentinel"))
   }
 
   /** Streaming HTML main-content extraction — q226's chain on a LIVE
     * ingest (the q218 stateless-map discipline): fetched pages land as
-    * JSONL waves (to_json escapes the quotes hostile HTML is full of),
-    * every row extracts independently — no state, no watermark — so
-    * two delivery waves must accumulate exactly the batch table; q232
-    * certifies against q226's oracle VERBATIM.
+    * JSONL waves (the JSON writer escapes the quotes hostile HTML is
+    * full of), every row extracts independently — no state, no
+    * watermark — so two delivery waves must accumulate exactly the
+    * batch table; q232 certifies against q226's oracle VERBATIM.
     */
-  def htmlExtractStreamReplay(outer: SparkSession, pages: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val spark = replaySession(outer)
-    val landing = java.nio.file.Files.createTempDirectory("graft-html-replay")
-    def deliverWave(df: DataFrame): Unit =
-      df.select(to_json(struct(col("doc_id"), col("html"))).as("value"))
-        .coalesce(1).write.mode("append").text(landing.toString)
-    deliverWave(pages.filter(col("doc_id") % 2 === 0))
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("html", StringType)))
-    val mem = s"graft_html_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val out = spark.readStream.text(landing.toString)
-      .select(from_json(col("value"), schema).as("j")).select("j.*")
+  def htmlExtractStreamReplay(outer: SparkSession, pages: DataFrame): DataFrame =
+    projectionStreamReplay(outer, pages, "doc_id", "html", df => df
       .select(col("doc_id"),
         graft.ext.HtmlExtract.mainText(col("html")).as("main_text"))
-      .withColumn("n_chars_text", length(col("main_text")).cast("long"))
-    val q = out.writeStream.format("memory").queryName(mem)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      deliverWave(pages.filter(col("doc_id") % 2 =!= 0))
-      q.processAllAvailable()
-    } finally { q.stop(); deleteRecursively(landing) }
-    drainMemorySink(spark, mem)
-  }
+      .withColumn("n_chars_text", length(col("main_text")).cast("long")))
 
   /** Streaming ANN serving — the stored IVF index probed by a LIVE
     * query stream: query embeddings land as PARQUET waves (bit-exact
@@ -952,20 +901,14 @@ object StreamingReports {
     graft.plans.CosineSimilarity.register(spark)
     val queries = emb.filter(col("vec_id") % 50 === 0)
       .select("vec_id", "embedding")
-    val landing = java.nio.file.Files.createTempDirectory("graft-ann-stream")
-    val outDir = java.nio.file.Files.createTempDirectory("graft-ann-out")
-    def deliverWave(df: DataFrame): Unit =
-      df.coalesce(1).write.mode("append").parquet(landing.toString)
-    deliverWave(queries.filter(col("vec_id") % 100 === 0))
-    val q = spark.readStream.schema(queries.schema).parquet(landing.toString)
-      .writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyAnnProbeBatch(idx, batch, outDir.toString, batchId)
-      }.start()
-    try {
-      q.processAllAvailable()
-      deliverWave(queries.filter(col("vec_id") % 100 =!= 0))
-      q.processAllAvailable()
-    } finally { q.stop(); deleteRecursively(landing) }
+    val outDir = Files.createTempDirectory("graft-ann-out")
+    replayWaves("graft-ann-stream",
+        Seq(render("wave1", queries.filter(col("vec_id") % 100 === 0), "parquet"),
+          render("wave2", queries.filter(col("vec_id") % 100 =!= 0), "parquet")))(landing =>
+      spark.readStream.schema(queries.schema).parquet(landing)
+        .writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+          applyAnnProbeBatch(idx, batch, outDir.toString, batchId)
+        }.start())
     // recursiveFileLookup, not a "b*" glob: the glob path triggers a
     // noisy FileStreamSink metadata probe warning on every read.
     // localCheckpoint THEN delete the result dirs (the
@@ -1006,21 +949,14 @@ object StreamingReports {
     */
   def cdcTimeTravelReplay(outer: SparkSession, srcDir: String): DataFrame = {
     val spark = replaySession(outer)
-    val landing = java.nio.file.Files.createTempDirectory("graft-cdc-tt")
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft-cdc-tt-store").toString
-    val files = listFixtureFiles(srcDir)
+    val storeRoot = Files.createTempDirectory("graft-cdc-tt-store").toString
     // wave 1 is the lexicographically-largest SIXTH (not half as in
     // cdcUpsertReplay): small enough that some keys' only events sit in
     // the older wave, so the diff exercises `added`, not just
     // `unchanged` (on the 24-file fixture: 4 added / 3 unchanged)
-    val (newer, older) = files.reverse.splitAt(math.max(1, files.size / 6))
-    deliver(landing, newer)
-    val q = cdcUpsertStream(spark, landing.toString, storeRoot)
-    try {
-      q.processAllAvailable()
-      deliver(landing, older)
-      q.processAllAvailable()
-    } finally { q.stop(); deleteRecursively(landing) }
+    replayWaves("graft-cdc-tt",
+        splitFiles(listFixtureFiles(srcDir).reverse, firstOf = 6))(landing =>
+      cdcUpsertStream(spark, landing, storeRoot))
     val versions = committedCdcVersions(storeRoot)
     require(versions.size >= 2, s"expected >=2 CDC versions, got $versions")
     val v0 = readCdcVersion(spark, storeRoot, versions.head).localCheckpoint()
@@ -1115,7 +1051,7 @@ object StreamingReports {
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
     replayWaves("graft-novelty-replay",
-        (0 to 2).map(k => s"wave${k + 1}" -> scored.filter(col("doc_id") % 3 === k))) {
+        (0 to 2).map(k => render(s"wave${k + 1}", scored.filter(col("doc_id") % 3 === k)))) {
       landing =>
         spark.readStream.schema(schema).json(landing)
           .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1142,27 +1078,30 @@ object StreamingReports {
     */
   def funnelReplay(outer: SparkSession, sfDir: String): DataFrame = {
     val spark = replaySession(outer)
-    val mem = s"graft_funnel_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ev = graft.tables.Corpus.load(spark, sfDir, "events")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts")).as("ts_us"), col("event_type"))
     // Sentinel id -48 is chosen to PASS the 5% md5 draw: a sentinel
     // must be a fully valid row, or the sample filter — which the
     // optimizer pushes BELOW the watermark operator — drops it before
     // the event-time stats see it and the watermark never advances
     // (debugged exactly so; the session replay's sentinel survives its
     // filters the same way).
-    replayWaves("graft-funnel-replay",
-        Seq("wave1" -> ev.filter(col("event_id") % 2 === 0),
-          "wave2" -> ev.filter(col("event_id") % 2 =!= 0)),
-        Some("""{"event_id": -48, "user_id": -1, "ts_us": 1893456000000001, "event_type": "view"}""")) {
-      landing =>
-        funnelStream(spark, landing, Seq("view", "click", "signup", "purchase"), 0.05, "funnel-v1")
-          .toDF().writeStream.format("memory").queryName(mem).outputMode("append").start()
-    }
-    drainMemorySink(spark, mem)
+    replayToMemory(spark, "graft-funnel-replay", parityWaves(spark, sfDir, -48))(landing =>
+      funnelStream(spark, landing, Seq("view", "click", "signup", "purchase"), 0.05, "funnel-v1")
+        .toDF())
       .filter(col("user_id") >= 0)
       .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
+  }
+
+  /** The events table as the funnel/transitions replays' two
+    * event-id-parity waves, with a far-future sentinel row of id
+    * `sentinelId` and user -1 riding the last wave.
+    */
+  private def parityWaves(spark: SparkSession, sfDir: String, sentinelId: Long): Seq[Lander] = {
+    val ev = graft.tables.Corpus.load(spark, sfDir, "events")
+      .select(col("event_id"), col("user_id"),
+        unix_micros(col("ts")).as("ts_us"), col("event_type"))
+    Seq(render("wave1", ev.filter(col("event_id") % 2 === 0)),
+      render("wave2", ev.filter(col("event_id") % 2 =!= 0), sentinel = Some(
+        s"""{"event_id": $sentinelId, "user_id": -1, "ts_us": 1893456000000001, "event_type": "view"}""")))
   }
 
   /** Streaming state-transition mining (q128's batch operator as a
@@ -1217,21 +1156,10 @@ object StreamingReports {
     */
   def transitionsReplay(outer: SparkSession, sfDir: String): DataFrame = {
     val spark = replaySession(outer)
-    val mem = s"graft_trans_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ev = graft.tables.Corpus.load(spark, sfDir, "events")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts")).as("ts_us"), col("event_type"))
     // no row filters upstream of the watermark here, but the sentinel
     // still must be a fully-valid row (funnelReplay note)
-    replayWaves("graft-trans-replay",
-        Seq("wave1" -> ev.filter(col("event_id") % 2 === 0),
-          "wave2" -> ev.filter(col("event_id") % 2 =!= 0)),
-        Some("""{"event_id": -41, "user_id": -1, "ts_us": 1893456000000001, "event_type": "view"}""")) {
-      landing =>
-        transitionsStream(spark, landing).toDF().writeStream.format("memory").queryName(mem)
-          .outputMode("append").start()
-    }
-    drainMemorySink(spark, mem)
+    replayToMemory(spark, "graft-trans-replay", parityWaves(spark, sfDir, -41))(landing =>
+      transitionsStream(spark, landing).toDF())
       .filter(col("user_id") >= 0)
       .groupBy(col("from_state"), col("to_state"))
       .agg(count(lit(1)).as("n"))
@@ -1255,40 +1183,20 @@ object StreamingReports {
 
   /** Streaming fetch-decode twin — q308's bytes→text decision table
     * on a LIVE ingest (the q232 stateless-map discipline): raw
-    * response records travel BASE64-encoded inside JSONL waves
-    * (binary cannot ride a text landing zone raw; base64 is
-    * byte-exact both ways), each row decodes independently (pure
-    * projection → append mode, zero state), so two delivery waves
-    * must accumulate the identical table — certified against q308's
-    * batch oracle VERBATIM (q311).
+    * response records travel BASE64-encoded through
+    * [[projectionStreamReplay]]'s JSONL waves (binary cannot ride a
+    * text landing zone raw; base64 is byte-exact both ways), each row
+    * decodes independently (pure projection → append mode, zero
+    * state), so two delivery waves must accumulate the identical table
+    * — certified against q308's batch oracle VERBATIM (q311).
     */
   def fetchDecodeStreamReplay(outer: SparkSession, fixture: DataFrame,
-      maxBytes: Int): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val spark = replaySession(outer)
-    val landing = java.nio.file.Files.createTempDirectory("graft-fetch-replay")
-    def deliverWave(df: DataFrame): Unit =
-      df.select(to_json(struct(col("doc_id"),
-          base64(col("raw")).as("raw_b64"))).as("value"))
-        .coalesce(1).write.mode("append").text(landing.toString)
-    deliverWave(fixture.filter(col("doc_id") % 2 === 0))
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("raw_b64", StringType)))
-    val mem = s"graft_fetch_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val src = spark.readStream.text(landing.toString)
-      .select(from_json(col("value"), schema).as("j")).select("j.*")
-      .select(col("doc_id"), unbase64(col("raw_b64")).as("raw"))
-    val out = graft.ext.FetchDecode.decodeResponses(src, "doc_id", "raw",
-      maxBytes)
-    val q = out.writeStream.format("memory").queryName(mem)
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      deliverWave(fixture.filter(col("doc_id") % 2 =!= 0))
-      q.processAllAvailable()
-    } finally { q.stop(); deleteRecursively(landing) }
-    drainMemorySink(spark, mem)
-  }
+      maxBytes: Int): DataFrame =
+    projectionStreamReplay(outer,
+      fixture.select(col("doc_id"), base64(col("raw")).as("raw_b64")), "doc_id", "raw_b64",
+      df => graft.ext.FetchDecode.decodeResponses(
+        df.select(col("doc_id"), unbase64(col("raw_b64")).as("raw")), "doc_id", "raw",
+        maxBytes))
 
   /** STREAMING semantic-dedup ingest — the q190 read→fold→append
     * lifecycle on the SemDeDup arc: embedding waves land as PARQUET
@@ -1322,54 +1230,39 @@ object StreamingReports {
     // register the codegen'd cosine BEFORE the stream starts (the
     // ivfStreamProbeReplay registry-copy rule)
     graft.plans.CosineSimilarity.register(spark)
-    // re-root the fixture under the replay session: frames from the
-    // outer session must not join frames planned under the clone
-    val tmp = java.nio.file.Files.createTempDirectory("graft-semdd-corpus")
-    corpus.write.mode("overwrite").parquet(tmp.toString)
-    val c = spark.read.parquet(tmp.toString).localCheckpoint()
+    val c = reroot(spark, corpus)
     val old = c.filter(isOld)
     val batch = c.filter(!isOld)
-    val store = java.nio.file.Files.createTempDirectory("graft-semdd-idx")
-    SimSearch.writeIvfIndex(SimSearch.buildIvfIndex(
-      old, "vec_id", "embedding", nlist, seed = 7L, lloydIters = 1),
-      store.toString)
-    var assign = Dedup.semDedupWithIndex(
-      SimSearch.readIvfIndex(spark, store.toString), old, "vec_id", tau)
-      .localCheckpoint()
-    val landing = java.nio.file.Files.createTempDirectory("graft-semdd-waves")
-    def deliverWave(df: DataFrame): Unit =
-      df.coalesce(1).write.mode("append").parquet(landing.toString)
-    deliverWave(batch.filter(waveA))
-    val q = spark.readStream.schema(batch.schema).parquet(landing.toString)
-      .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val idx = SimSearch.readIvfIndex(spark, store.toString)
-          // ONE coarse-assignment pass per wave (round-20, the q189
-          // one-pass rule): the fold and the index append need the
-          // identical argmax rows — appendToIvfIndex would re-read the
-          // store and re-run the crossJoin-argmax for the same batch
-          val assigned = SimSearch.assignToAnchors(
-            b, idx.anchors, "vec_id", "embedding").localCheckpoint()
-          assign = Dedup.semDedupIncrementalAssigned(
-            idx, assign, assigned, "vec_id", tau).localCheckpoint()
-          // appendWaves=false is the StreamingSpec NEGATIVE PROBE: it
-          // must break cross-wave dedup, proving the append is
-          // load-bearing (the non-vacuous-assertion discipline)
-          if (appendWaves)
-            assigned.write.mode("append").parquet(store.toString + "/lists")
-        }
-      }.start()
+    val store = Files.createTempDirectory("graft-semdd-idx")
     try {
-      q.processAllAvailable()
-      deliverWave(batch.filter(!waveA))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      deleteRecursively(landing)
-      deleteRecursively(tmp)
-      deleteRecursively(store)
-    }
-    assign
+      SimSearch.writeIvfIndex(SimSearch.buildIvfIndex(
+        old, "vec_id", "embedding", nlist, seed = 7L, lloydIters = 1),
+        store.toString)
+      var assign = Dedup.semDedupWithIndex(
+        SimSearch.readIvfIndex(spark, store.toString), old, "vec_id", tau)
+        .localCheckpoint()
+      replayWaves("graft-semdd-waves", parquetWaves(batch, waveA))(landing =>
+        spark.readStream.schema(batch.schema).parquet(landing)
+          .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
+            if (!b.isEmpty) {
+              val idx = SimSearch.readIvfIndex(spark, store.toString)
+              // ONE coarse-assignment pass per wave (round-20, the q189
+              // one-pass rule): the fold and the index append need the
+              // identical argmax rows — appendToIvfIndex would re-read the
+              // store and re-run the crossJoin-argmax for the same batch
+              val assigned = SimSearch.assignToAnchors(
+                b, idx.anchors, "vec_id", "embedding").localCheckpoint()
+              assign = Dedup.semDedupIncrementalAssigned(
+                idx, assign, assigned, "vec_id", tau).localCheckpoint()
+              // appendWaves=false is the StreamingSpec NEGATIVE PROBE: it
+              // must break cross-wave dedup, proving the append is
+              // load-bearing (the non-vacuous-assertion discipline)
+              if (appendWaves)
+                assigned.write.mode("append").parquet(store.toString + "/lists")
+            }
+          }.start())
+      assign
+    } finally deleteRecursively(store)
   }
 
   /** STREAMING perceptual-dedup ingest (round 16 — the q190/q316
@@ -1395,44 +1288,30 @@ object StreamingReports {
       appendWaves: Boolean = true): DataFrame = {
     import graft.ext.SimSearch
     val spark = replaySession(outer)
-    // re-root the fixture under the replay session (the semDedup rule)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-hh-corpus")
-    hashes.write.mode("overwrite").parquet(tmp.toString)
-    val h = spark.read.parquet(tmp.toString).localCheckpoint()
+    val h = reroot(spark, hashes)
     // the store starts EMPTY (schema-only parquet) — the first wave
     // probes nothing and seeds it
-    val store = java.nio.file.Files.createTempDirectory("graft-hh-store")
-    h.limit(0).write.mode("overwrite").parquet(store.toString)
-    var pairs = SimSearch.hammingBandedPairs(h.limit(0), idCol, hashCol,
-      maxDist).localCheckpoint() // empty frame with the output schema
-    val landing = java.nio.file.Files.createTempDirectory("graft-hh-waves")
-    def deliverWave(df: DataFrame): Unit =
-      df.coalesce(1).write.mode("append").parquet(landing.toString)
-    deliverWave(h.filter(waveA))
-    val q = spark.readStream.schema(h.schema).parquet(landing.toString)
-      .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val bb = b.localCheckpoint()
-          val corpus = spark.read.parquet(store.toString).localCheckpoint()
-          val p = SimSearch.hammingBandedPairs(bb, idCol, hashCol, maxDist)
-            .unionByName(SimSearch.hammingBandedPairsAgainst(
-              bb, corpus, idCol, hashCol, maxDist))
-          pairs = pairs.unionByName(p).localCheckpoint()
-          if (appendWaves)
-            bb.write.mode("append").parquet(store.toString)
-        }
-      }.start()
+    val store = Files.createTempDirectory("graft-hh-store")
     try {
-      q.processAllAvailable()
-      deliverWave(h.filter(!waveA))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      deleteRecursively(landing)
-      deleteRecursively(tmp)
-      deleteRecursively(store)
-    }
-    pairs
+      h.limit(0).write.mode("overwrite").parquet(store.toString)
+      var pairs = SimSearch.hammingBandedPairs(h.limit(0), idCol, hashCol,
+        maxDist).localCheckpoint() // empty frame with the output schema
+      replayWaves("graft-hh-waves", parquetWaves(h, waveA))(landing =>
+        spark.readStream.schema(h.schema).parquet(landing)
+          .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
+            if (!b.isEmpty) {
+              val bb = b.localCheckpoint()
+              val corpus = spark.read.parquet(store.toString).localCheckpoint()
+              val p = SimSearch.hammingBandedPairs(bb, idCol, hashCol, maxDist)
+                .unionByName(SimSearch.hammingBandedPairsAgainst(
+                  bb, corpus, idCol, hashCol, maxDist))
+              pairs = pairs.unionByName(p).localCheckpoint()
+              if (appendWaves)
+                bb.write.mode("append").parquet(store.toString)
+            }
+          }.start())
+      pairs
+    } finally deleteRecursively(store)
   }
 
   /** STREAMING drift-report ingest (round 16 — the mergeable-state
@@ -1452,36 +1331,18 @@ object StreamingReports {
       vecCol: String, waveA: Column, flagQUnits: Long): DataFrame = {
     import graft.ext.SimSearch
     val spark = replaySession(outer)
-    val tmpR = java.nio.file.Files.createTempDirectory("graft-drift-ref")
-    reference.write.mode("overwrite").parquet(tmpR.toString)
-    val refState = SimSearch.driftState(
-      spark.read.parquet(tmpR.toString), vecCol).localCheckpoint()
-    val tmpC = java.nio.file.Files.createTempDirectory("graft-drift-cand")
-    candidate.write.mode("overwrite").parquet(tmpC.toString)
-    val cand = spark.read.parquet(tmpC.toString).localCheckpoint()
+    val refState = SimSearch.driftState(reroot(spark, reference), vecCol).localCheckpoint()
+    val cand = reroot(spark, candidate)
     var candState: DataFrame = null
-    val landing = java.nio.file.Files.createTempDirectory("graft-drift-waves")
-    def deliverWave(df: DataFrame): Unit =
-      df.coalesce(1).write.mode("append").parquet(landing.toString)
-    deliverWave(cand.filter(waveA))
-    val q = spark.readStream.schema(cand.schema).parquet(landing.toString)
-      .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val st = SimSearch.driftState(b.localCheckpoint(), vecCol)
-          candState = (if (candState == null) st
-            else SimSearch.mergeDriftStates(candState, st)).localCheckpoint()
-        }
-      }.start()
-    try {
-      q.processAllAvailable()
-      deliverWave(cand.filter(!waveA))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      deleteRecursively(landing)
-      deleteRecursively(tmpR)
-      deleteRecursively(tmpC)
-    }
+    replayWaves("graft-drift-waves", parquetWaves(cand, waveA))(landing =>
+      spark.readStream.schema(cand.schema).parquet(landing)
+        .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
+          if (!b.isEmpty) {
+            val st = SimSearch.driftState(b.localCheckpoint(), vecCol)
+            candState = (if (candState == null) st
+              else SimSearch.mergeDriftStates(candState, st)).localCheckpoint()
+          }
+        }.start())
     SimSearch.driftFromStates(refState, candState, flagQUnits)
   }
 
@@ -1506,11 +1367,9 @@ object StreamingReports {
       redeliverGuarded: Boolean = true): DataFrame = {
     import graft.ext.SimSearch
     val spark = replaySession(outer)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-hhx-corpus")
-    hashes.write.mode("overwrite").parquet(tmp.toString)
-    val h = spark.read.parquet(tmp.toString).localCheckpoint()
-    val store = java.nio.file.Files.createTempDirectory("graft-hhx-store")
-    java.nio.file.Files.createDirectories(store.resolve("_manifest"))
+    val h = reroot(spark, hashes)
+    val store = Files.createTempDirectory("graft-hhx-store")
+    Files.createDirectories(store.resolve("_manifest"))
     var pairs = SimSearch.hammingBandedPairs(h.limit(0), idCol, hashCol,
       maxDist).localCheckpoint()
     def committedDirs(): Seq[String] =
@@ -1539,26 +1398,15 @@ object StreamingReports {
       java.nio.file.Files.write(tmpMf, "{}".getBytes("UTF-8"))
       java.nio.file.Files.move(tmpMf, mf): Unit
     }
-    val landing = java.nio.file.Files.createTempDirectory("graft-hhx-waves")
-    def deliverWave(df: DataFrame): Unit =
-      df.coalesce(1).write.mode("append").parquet(landing.toString)
-    deliverWave(h.filter(waveA))
-    val q = spark.readStream.schema(h.schema).parquet(landing.toString)
-      .writeStream.foreachBatch(applyBatch _).start()
     try {
-      q.processAllAvailable()
-      deliverWave(h.filter(!waveA))
-      q.processAllAvailable()
+      replayWaves("graft-hhx-waves", parquetWaves(h, waveA))(landing =>
+        spark.readStream.schema(h.schema).parquet(landing)
+          .writeStream.foreachBatch(applyBatch _).start())
       // the crash-redelivery a checkpoint produces: wave A verbatim,
       // original batchId (guarded) or a fresh one (negative probe)
       applyBatch(h.filter(waveA), if (redeliverGuarded) 0L else 999L)
-    } finally {
-      q.stop()
-      deleteRecursively(landing)
-      deleteRecursively(tmp)
-      deleteRecursively(store)
-    }
-    pairs
+      pairs
+    } finally deleteRecursively(store)
   }
 
   // ── EXACTLY-ONCE semantic-dedup ingest (round-15 forward item #3:
@@ -1722,38 +1570,33 @@ object StreamingReports {
     // register the codegen'd cosine BEFORE the stream starts (the
     // ivfStreamProbeReplay registry-copy rule)
     graft.plans.CosineSimilarity.register(spark)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-semddi-corpus")
-    corpus.write.mode("overwrite").parquet(tmp.toString)
-    val c = spark.read.parquet(tmp.toString).localCheckpoint()
+    val c = reroot(spark, corpus)
     val old = c.filter(isOld)
     val batch = c.filter(!isOld)
-    val store = java.nio.file.Files.createTempDirectory("graft-semddi-store")
-    SimSearch.writeIvfIndex(SimSearch.buildIvfIndex(
-      old, "vec_id", "embedding", nlist, seed = 7L, lloydIters = 1),
-      s"$store/index")
-    Dedup.semDedupWithIndex(
-        SimSearch.readIvfIndex(spark, s"$store/index"), old, "vec_id", tau)
-      .write.mode("overwrite").parquet(s"$store/init-assign")
-    val landing = java.nio.file.Files.createTempDirectory("graft-semddi-waves")
-    def deliverWave(df: DataFrame): Unit =
-      df.coalesce(1).write.mode("append").parquet(landing.toString)
-    deliverWave(batch.filter(waveA))
-    val q = spark.readStream.schema(batch.schema).parquet(landing.toString)
-      .writeStream.foreachBatch { (b: DataFrame, batchId: Long) =>
-        // no batch checkpoint: the fold consumes the wave exactly once
-        // (the assignToAnchors pass inside applySemDedupIngestBatch is
-        // the materialization point — round-20)
-        if (!b.isEmpty) applySemDedupIngestBatch(
-          b, store.toString, batchId, tau)
-      }.start()
+    val store = Files.createTempDirectory("graft-semddi-store")
     try {
-      q.processAllAvailable()
-      // q324: fold wave A's delta down into the base index while the
-      // stream is idle between triggers (checkpoint has passed wave
-      // A's offsets — the retention rule holds)
-      if (compactAfterWaveA) compactSemDedupStore(spark, store.toString)
-      deliverWave(batch.filter(!waveA))
-      q.processAllAvailable()
+      SimSearch.writeIvfIndex(SimSearch.buildIvfIndex(
+        old, "vec_id", "embedding", nlist, seed = 7L, lloydIters = 1),
+        s"$store/index")
+      Dedup.semDedupWithIndex(
+          SimSearch.readIvfIndex(spark, s"$store/index"), old, "vec_id", tau)
+        .write.mode("overwrite").parquet(s"$store/init-assign")
+      val Seq(landA, landB) = parquetWaves(batch, waveA)
+      replayWaves("graft-semddi-waves", Seq(landA, { landing =>
+        // q324: fold wave A's delta down into the base index while the
+        // stream is idle between triggers (checkpoint has passed wave
+        // A's offsets — the retention rule holds)
+        if (compactAfterWaveA) compactSemDedupStore(spark, store.toString)
+        landB(landing)
+      }))(landing =>
+        spark.readStream.schema(batch.schema).parquet(landing)
+          .writeStream.foreachBatch { (b: DataFrame, batchId: Long) =>
+            // no batch checkpoint: the fold consumes the wave exactly once
+            // (the assignToAnchors pass inside applySemDedupIngestBatch is
+            // the materialization point — round-20)
+            if (!b.isEmpty) applySemDedupIngestBatch(
+              b, store.toString, batchId, tau)
+          }.start())
       // ── the crash-redelivery: wave A again, byte-identical, under
       // its original batchId (0 — wave A was the only file at the
       // first trigger); the manifest guard must no-op it. Skipped on
@@ -1763,11 +1606,6 @@ object StreamingReports {
         applySemDedupIngestBatch(batch.filter(waveA), store.toString, 0L, tau)
       val (_, fin) = semDedupStoreState(spark, store.toString)
       fin.localCheckpoint()
-    } finally {
-      q.stop()
-      deleteRecursively(landing)
-      deleteRecursively(tmp)
-      deleteRecursively(store)
-    }
+    } finally deleteRecursively(store)
   }
 }

@@ -14,10 +14,45 @@ class StreamingSpec extends SparkSpec {
 
   val dir = s"${SparkEntry.FixturesDir}/events_json"
 
+  /** `body`'s result and the microbatches run meanwhile: distinct
+    * (runId, batchId) over the QueryProgressEvents a SparkListener sees
+    * (the shared listener bus carries every session's streaming events,
+    * the replay clones' included; an idle progress event repeats a batch
+    * id). A marker job run afterwards is waited for: the bus delivers
+    * events in order, so every progress event posted during `body` has
+    * arrived once the marker's job start has.
+    */
+  private def withMicrobatches[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
+    val key = "graft.spec.marker"
+    val batches = java.util.concurrent.ConcurrentHashMap.newKeySet[(java.util.UUID, Long)]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: QueryProgressEvent => batches.add(p.progress.runId -> p.progress.batchId)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) != null)) marker.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(key, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "marker job never reached the listener")
+      (out, batches.size)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("drainMemorySink: rows survive the drain and the sink's temp " +
       "view leaves the catalog (replay-harness hygiene)") {
-    // every *Replay surface funnels its memory sink through this one
-    // seam — certifying it here certifies the ~30 twins' hygiene
+    // every memory-sink replay (nine *Replay surfaces, the projection
+    // twins behind projectionStreamReplay among them) funnels its sink
+    // through this one seam — certifying it here certifies their hygiene
     val s = spark.newSession()
     val mem = "graft_drain_spec_sink"
     s.range(5).toDF("v").createOrReplaceTempView(mem)
@@ -168,7 +203,11 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("sessionReplay (the q45 surface) == batch Sessionize over the fixture dir") {
-    val streamed = StreamingReports.sessionReplay(spark, dir, gapMinutes = 60)
+    val (replayed, batches) =
+      withMicrobatches(StreamingReports.sessionReplay(spark, dir, gapMinutes = 60))
+    // data + sentinel in one batch, then the no-data batch firing the timeouts
+    assert(batches == 2, s"microbatches run: $batches")
+    val streamed = replayed
       .select($"userId", $"startUs", $"endUs", $"nEvents")
       .as[(String, Long, Long, Long)].collect().toSet
     val batch = graft.operators.Sessionize.sessions(
@@ -197,9 +236,9 @@ class StreamingSpec extends SparkSpec {
       .select($"event_id", $"user_id", unix_micros($"ts").as("ts_us"), $"event_type")
     val mem = "replay_trigger_budget"
     val q = StreamingReports.replayWaves("graft-trigger-budget",
-        Seq("wave1" -> ev.filter($"event_id" % 2 === 0),
-          "wave2" -> ev.filter($"event_id" % 2 =!= 0)),
-        Some("""{"event_id": -48, "user_id": -1, "ts_us": 1893456000000001, "event_type": "view"}""")) {
+        Seq(StreamingReports.render("wave1", ev.filter($"event_id" % 2 === 0)),
+          StreamingReports.render("wave2", ev.filter($"event_id" % 2 =!= 0),
+            sentinel = Some("""{"event_id": -48, "user_id": -1, "ts_us": 1893456000000001, "event_type": "view"}""")))) {
       landing =>
         StreamingReports.funnelStream(s, landing, stages, 0.05, "funnel-v1")
           .toDF().writeStream.format("memory").queryName(mem).outputMode("append").start()
@@ -217,10 +256,46 @@ class StreamingSpec extends SparkSpec {
     assert(users.nonEmpty)
   }
 
+  test("replayWaves failure path: a throwing start or wave propagates, the " +
+      "landing dir is deleted and no query is left active") {
+    import java.nio.file.{Files, Path}
+    val s = StreamingReports.replaySession(spark)
+    val rows = s.range(3).toDF("id")
+    var landing: Path = null
+    val first: StreamingReports.Lander = l => {
+      landing = l
+      StreamingReports.render("wave1", rows)(l)
+    }
+    val failedStart = intercept[IllegalStateException] {
+      StreamingReports.replayWaves("graft-fail-start", Seq(first))(_ =>
+        throw new IllegalStateException("start failed"))
+    }
+    assert(failedStart.getMessage == "start failed")
+    assert(landing != null && !Files.exists(landing), s"landing dir left behind: $landing")
+
+    landing = null
+    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    val failedWave = intercept[IllegalStateException] {
+      StreamingReports.replayWaves("graft-fail-wave",
+          Seq(first, _ => throw new IllegalStateException("wave failed"))) { l =>
+        q = s.readStream.schema(rows.schema).json(l).writeStream.format("noop").start()
+        q
+      }
+    }
+    assert(failedWave.getMessage == "wave failed")
+    assert(landing != null && !Files.exists(landing), s"landing dir left behind: $landing")
+    assert(q != null && !q.isActive, "the failing replay's query must be stopped")
+    assert(s.streams.active.isEmpty,
+      s"queries left active: ${s.streams.active.map(_.id).mkString(", ")}")
+  }
+
   test("funnelReplay (the q124 surface) == q114_funnel at sf0.001") {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"stage".cast("long"), $"n_users").as[(Long, Long)].collect().toSet
-    val streamed = rows(StreamingReports.funnelReplay(spark, sf0001))
+    val (replayed, batches) = withMicrobatches(StreamingReports.funnelReplay(spark, sf0001))
+    // wave 1, its watermark's no-data batch, wave 2 + sentinel, the flush
+    assert(batches == 4, s"microbatches run: $batches")
+    val streamed = rows(replayed)
     val batch = rows(SparkEntry.queries("q114_funnel")(spark, sf0001))
     assert(streamed == batch)
     assert(batch.size > 1, s"funnel reaches a single stage only: $batch")
@@ -229,7 +304,9 @@ class StreamingSpec extends SparkSpec {
   test("transitionsReplay (the q141 surface) == q128 transitions on non-null users at sf0.001") {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("from_state", "to_state", "n").as[(String, String, Long)].collect().toSet
-    val streamed = rows(StreamingReports.transitionsReplay(spark, sf0001))
+    val (replayed, batches) = withMicrobatches(StreamingReports.transitionsReplay(spark, sf0001))
+    assert(batches == 4, s"microbatches run: $batches")
+    val streamed = rows(replayed)
     val batch = rows(graft.operators.Profile.transitions(
       graft.tables.Corpus.load(spark, sf0001, "events").filter($"user_id".isNotNull),
       "user_id", Seq($"ts", $"event_id"), $"event_type"))
@@ -432,8 +509,9 @@ class StreamingSpec extends SparkSpec {
   test("cdcUpsertReplay equals the batch latest-event-per-resource truth") {
     import graft.streaming.StreamingReports
     val dir = "/root/repo/fixtures/events_json"
-    val got = StreamingReports.cdcUpsertReplay(spark, dir)
-      .as[(String, Long, String, String, Long)].collect().toSet
+    val (replayed, batches) = withMicrobatches(StreamingReports.cdcUpsertReplay(spark, dir))
+    assert(batches == 2, s"one microbatch per wave, got $batches")
+    val got = replayed.as[(String, Long, String, String, Long)].collect().toSet
     val want = Sources.events(spark, dir)
       .filter($"resourceId".isNotNull)
       .withColumn("seq",
@@ -563,8 +641,10 @@ class StreamingSpec extends SparkSpec {
     // and the stream fold equals the batch operator row-for-row
     val batch = graft.ext.UrlCanon.recrawlStats(hist, "url", "r", "fp")
       .as[(String, Long, Long, Long, String)].collect().toSet
-    val stream = StreamingReports.recrawlReplay(spark, hist)
-      .as[(String, Long, Long, Long, String)].collect().toSet
+    val (replayed, batches) = withMicrobatches(StreamingReports.recrawlReplay(spark, hist))
+    // wave 1, wave 2 + sentinel, the no-data batch firing the timeouts
+    assert(batches == 3, s"microbatches run: $batches")
+    val stream = replayed.as[(String, Long, Long, Long, String)].collect().toSet
     assert(stream == batch, s"stream vs batch: ${stream.diff(batch)}")
   }
 
@@ -581,8 +661,10 @@ class StreamingSpec extends SparkSpec {
       .unionByName(scaled(4.0f, 200000L, 14L))
     val isOld = $"vec_id" % 7 =!= 0 && $"vec_id" < 100000L
     val waveA = $"vec_id" < 200000L
-    val withAppend = graft.streaming.StreamingReports.semDedupIngestReplay(
-      spark, corpus, isOld, waveA, nlist = 8, tau = 0.9)
+    val (withAppend, batches) = withMicrobatches(
+      graft.streaming.StreamingReports.semDedupIngestReplay(
+        spark, corpus, isOld, waveA, nlist = 8, tau = 0.9))
+    assert(batches == 2, s"one microbatch per wave, got $batches")
     // wave-B members (x4 copies) must merge into their wave-A groups
     val merged = withAppend.filter($"vec_id" >= 200000L)
     assert(merged.count() > 0)
@@ -609,9 +691,10 @@ class StreamingSpec extends SparkSpec {
       .toDF()
       .select(regexp_extract($"path", "[^/]+$", 0).as("name"), $"dhash")
     val waveA = !$"name".isin("near1.bmp", "near2.bmp", "near3.bmp")
-    val withAppend = graft.streaming.StreamingReports
-      .hammingDedupIngestReplay(spark, hashes, "name", "dhash", waveA)
-      .select("id_a", "id_b").as[(String, String)].collect().toSet
+    val (replayed, batches) = withMicrobatches(graft.streaming.StreamingReports
+      .hammingDedupIngestReplay(spark, hashes, "name", "dhash", waveA))
+    assert(batches == 2, s"one microbatch per wave, got $batches")
+    val withAppend = replayed.select("id_a", "id_b").as[(String, String)].collect().toSet
     // both legs live: (base0,near0) is WITHIN wave A, the other three
     // pairs cross the wave boundary through the store
     assert(withAppend == (0 until 4)
@@ -636,10 +719,12 @@ class StreamingSpec extends SparkSpec {
       .select(regexp_extract($"path", "[^/]+$", 0).as("name"), $"dhash")
     val waveA = !$"name".isin("near1.bmp", "near2.bmp", "near3.bmp")
     // guarded: the wave-A redelivery is invisible — 4 pairs, no dups
-    val guarded = graft.streaming.StreamingReports
+    val (replayed, batches) = withMicrobatches(graft.streaming.StreamingReports
       .hammingDedupIngestIdempotentReplay(spark, hashes, "name", "dhash",
-        waveA)
-      .select("id_a", "id_b").as[(String, String)].collect()
+        waveA))
+    // the redelivery is applied directly after the drain: no microbatch
+    assert(batches == 2, s"one microbatch per wave, got $batches")
+    val guarded = replayed.select("id_a", "id_b").as[(String, String)].collect()
     assert(guarded.length == 4 && guarded.toSet.size == 4)
     // NEGATIVE PROBE: the same redelivery as a FRESH batch (the
     // unguarded pipeline's view) duplicates wave A's within-wave
