@@ -11,7 +11,7 @@ import graft.operators.{GroupShare, TopK}
 import graft.sources.Sources
 import graft.tables.Corpus
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Query catalog contract — see SURVEY.md §7.
   *
   * Every query takes (spark, sfDir) and reads parquet tables from sfDir.
   * Numeric convention for oracle hash-parity: aggregate in exact DECIMAL,
@@ -5456,13 +5456,13 @@ object SparkEntry {
 
     // ── SQL surface for the custom expression (the U1 discipline:
     // q27 proved a registered UDF surface; this proves the CUSTOM
-    // CATALYST EXPRESSION is equally SQL-callable): unicode_tokens
-    // registered on a newSession clone (the q207 rule — the shared
-    // Verify session never sees the registration) and invoked from
-    // spark.sql text, certified against q288's oracle VERBATIM. ──
+    // CATALYST EXPRESSION is equally SQL-callable): unicode_tokens,
+    // bound by GraftExtensions, invoked from spark.sql text on a
+    // newSession clone (which inherits the extensions; the temp view
+    // stays off the shared session), certified against q288's oracle
+    // VERBATIM. ──
     "q302_unicode_tokens_sql" -> ((s, dir) => {
       val sess = s.newSession()
-      graft.plans.UnicodeTokens.register(sess)
       mlDocs(sess).createOrReplaceTempView("ml_docs")
       sess.sql(
         """SELECT doc_id, lang,
@@ -8046,9 +8046,12 @@ object SparkEntry {
   )
 
   /** Reference-domain fixtures (FIXTURES.md §A), authored in-repo so the
-    * DuckDB oracle can read the identical files.
+    * DuckDB oracle can read the identical files. Resolved against the
+    * working directory, which is the checkout root under sbt's forked
+    * `run`/`test` and under perfbench; the oracle SQL interpolates it.
     */
-  val FixturesDir = "/root/repo/fixtures"
+  val FixturesDir: String =
+    java.nio.file.Paths.get("fixtures").toAbsolutePath.toString
 
   /** The round-14 multilingual corpus (tools/gen_multilingual.py):
     * 30 docs over zh/ja/ru/el/ar/hi/ko/th/de/fr/tr/en + mixed-script
@@ -8151,7 +8154,7 @@ object SparkEntry {
   }
 
   private val MlJson =
-    "read_json_auto('/root/repo/fixtures/multilingual.jsonl')"
+    s"read_json_auto('$FixturesDir/multilingual.jsonl')"
 
   // ── DuckDB mirrors of the round-14 Unicode tokenizer, GENERATED
   // from the same TextAnalysis constants (CjkCharClass, the lower
@@ -9630,10 +9633,10 @@ object SparkEntry {
     * drift from the batch surface it must equal.
     */
   private val ImageNearDupSql: String =
-    """SELECT a.name AS id_a, b.name AS id_b,
+    s"""SELECT a.name AS id_a, b.name AS id_b,
       |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS dist
-      |FROM read_parquet('/root/repo/fixtures/images_dhash_expected.parquet') a
-      |JOIN read_parquet('/root/repo/fixtures/images_dhash_expected.parquet') b
+      |FROM read_parquet('$FixturesDir/images_dhash_expected.parquet') a
+      |JOIN read_parquet('$FixturesDir/images_dhash_expected.parquet') b
       |  ON a.name < b.name
       |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3""".stripMargin
 
@@ -9851,42 +9854,42 @@ object SparkEntry {
     * the one-shot capstone VERBATIM).
     */
   private val ReencodeSextSql: String =
-    """WITH u AS (
+    s"""WITH u AS (
       |  SELECT name, dhash
-      |  FROM read_parquet('/root/repo/fixtures/images_dhash_expected.parquet')
+      |  FROM read_parquet('$FixturesDir/images_dhash_expected.parquet')
       |  UNION ALL
       |  SELECT name, dhash
-      |  FROM read_parquet('/root/repo/fixtures/images_png_expected.parquet')
+      |  FROM read_parquet('$FixturesDir/images_png_expected.parquet')
       |  UNION ALL
       |  SELECT name, dhash
-      |  FROM read_parquet('/root/repo/fixtures/images_jpeg_expected.parquet')
+      |  FROM read_parquet('$FixturesDir/images_jpeg_expected.parquet')
       |  UNION ALL
       |  SELECT name, dhash
-      |  FROM read_parquet('/root/repo/fixtures/images_gif_expected.parquet')
+      |  FROM read_parquet('$FixturesDir/images_gif_expected.parquet')
       |  UNION ALL
       |  SELECT name, dhash
-      |  FROM read_parquet('/root/repo/fixtures/images_tiff_expected.parquet')
+      |  FROM read_parquet('$FixturesDir/images_tiff_expected.parquet')
       |  UNION ALL
       |  SELECT name, dhash
-      |  FROM read_parquet('/root/repo/fixtures/images_webp_expected.parquet'))
+      |  FROM read_parquet('$FixturesDir/images_webp_expected.parquet'))
       |SELECT a.name AS id_a, b.name AS id_b,
       |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS dist
       |FROM u a JOIN u b ON a.name < b.name
       |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3""".stripMargin
 
   private val ReencodeQuadSql: String =
-    """WITH u AS (
+    s"""WITH u AS (
       |  SELECT name, dhash
-      |  FROM read_parquet('/root/repo/fixtures/images_dhash_expected.parquet')
+      |  FROM read_parquet('$FixturesDir/images_dhash_expected.parquet')
       |  UNION ALL
       |  SELECT name, dhash
-      |  FROM read_parquet('/root/repo/fixtures/images_png_expected.parquet')
+      |  FROM read_parquet('$FixturesDir/images_png_expected.parquet')
       |  UNION ALL
       |  SELECT name, dhash
-      |  FROM read_parquet('/root/repo/fixtures/images_jpeg_expected.parquet')
+      |  FROM read_parquet('$FixturesDir/images_jpeg_expected.parquet')
       |  UNION ALL
       |  SELECT name, dhash
-      |  FROM read_parquet('/root/repo/fixtures/images_gif_expected.parquet'))
+      |  FROM read_parquet('$FixturesDir/images_gif_expected.parquet'))
       |SELECT a.name AS id_a, b.name AS id_b,
       |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS dist
       |FROM u a JOIN u b ON a.name < b.name
@@ -10201,19 +10204,19 @@ object SparkEntry {
         |FROM g""".stripMargin,
 
     "q25_events_json" ->
-      """SELECT eventId,
+      s"""SELECT eventId,
         |  substr(processTime, 1, 10) AS day,
         |  substr(eventTime, 1, 7) AS mon,
         |  substr(eventTime, 20, 6) AS off,
         |  userId, countryCode, duration,
         |  CAST(CAST(itemPrice AS DECIMAL(12,2)) AS DOUBLE) AS price
-        |FROM read_json_auto('/root/repo/fixtures/events_json/*.json')
+        |FROM read_json_auto('$FixturesDir/events_json/*.json')
         |WHERE userId IS NOT NULL""".stripMargin,
 
     "q26_countries_csv" ->
-      """SELECT Country, COUNT(*) AS n_events, CAST(SUM(duration) AS BIGINT) AS total_duration
-        |FROM read_json_auto('/root/repo/fixtures/events_json/*.json') e
-        |LEFT JOIN read_csv('/root/repo/fixtures/countries.csv', header=true) c
+      s"""SELECT Country, COUNT(*) AS n_events, CAST(SUM(duration) AS BIGINT) AS total_duration
+        |FROM read_json_auto('$FixturesDir/events_json/*.json') e
+        |LEFT JOIN read_csv('$FixturesDir/countries.csv', header=true) c
         |  ON e.countryCode = c.CountryCode
         |GROUP BY Country""".stripMargin,
 
@@ -10226,17 +10229,17 @@ object SparkEntry {
         |FROM g CROSS JOIN t""".stripMargin,
 
     "q28_job_top10" ->
-      """WITH cat AS (
+      raw"""WITH cat AS (
         |  SELECT regexp_replace(c.id, '\.(\d)', '.0\1', 'g') AS categoryId,
         |         c.name AS categoryName
         |  FROM (SELECT unnest(content) AS c
-        |        FROM read_json_auto('/root/repo/fixtures/categories.json'))),
+        |        FROM read_json_auto('$FixturesDir/categories.json'))),
         |res AS (
         |  SELECT id AS resourceId, name AS resourceName, categoryId
-        |  FROM read_json_auto('/root/repo/fixtures/resources.json')),
+        |  FROM read_json_auto('$FixturesDir/resources.json')),
         |ev AS (
         |  SELECT substr(processTime, 1, 10) AS date, resourceId
-        |  FROM read_json_auto('/root/repo/fixtures/events_json/*.json')),
+        |  FROM read_json_auto('$FixturesDir/events_json/*.json')),
         |c2 AS (SELECT date, resourceId, COUNT(*) AS cnt FROM ev GROUP BY 1, 2),
         |jd AS (
         |  SELECT c2.date, c2.resourceId, c2.cnt, res.categoryId,
@@ -10248,22 +10251,22 @@ object SparkEntry {
         |FROM jd QUALIFY position <= 10""".stripMargin,
 
     "q29_job_royalties" ->
-      """WITH cat AS (
+      raw"""WITH cat AS (
         |  SELECT regexp_replace(c.id, '\.(\d)', '.0\1', 'g') AS categoryId,
         |         CAST(c.percent AS DECIMAL(5,2)) AS percent
         |  FROM (SELECT unnest(content) AS c
-        |        FROM read_json_auto('/root/repo/fixtures/categories.json'))),
+        |        FROM read_json_auto('$FixturesDir/categories.json'))),
         |res AS (
         |  SELECT id AS resourceId, categoryId, providerId, promotion
-        |  FROM read_json_auto('/root/repo/fixtures/resources.json')),
-        |ctry AS (SELECT * FROM read_csv('/root/repo/fixtures/countries.csv', header=true)),
+        |  FROM read_json_auto('$FixturesDir/resources.json')),
+        |ctry AS (SELECT * FROM read_csv('$FixturesDir/countries.csv', header=true)),
         |rates(Code, rate) AS (VALUES
         |  ('USD', CAST(1.0 AS DECIMAL(8,4))),
         |  ('EUR', CAST(1.08 AS DECIMAL(8,4))),
         |  ('GBP', CAST(1.27 AS DECIMAL(8,4)))),
         |ev AS (
         |  SELECT substr(eventTime, 1, 7) AS month, resourceId, countryCode, itemPrice
-        |  FROM read_json_auto('/root/repo/fixtures/events_json/*.json')),
+        |  FROM read_json_auto('$FixturesDir/events_json/*.json')),
         |j AS (
         |  SELECT ev.month, ev.resourceId, ev.itemPrice, res.providerId,
         |         res.promotion, cat.percent, ctry.Code
@@ -10281,10 +10284,10 @@ object SparkEntry {
         |FROM conv GROUP BY 1, 2, 3""".stripMargin,
 
     "q30_job_usage" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT substr(eventTime, 1, 7) AS month,
         |         substr(eventTime, 20, 6) AS timeZone, resourceId, duration
-        |  FROM read_json_auto('/root/repo/fixtures/events_json/*.json')),
+        |  FROM read_json_auto('$FixturesDir/events_json/*.json')),
         |g AS (
         |  SELECT month, timeZone, resourceId,
         |    CAST(SUM(duration) AS BIGINT) AS totalDurationInSec
@@ -10299,8 +10302,8 @@ object SparkEntry {
     // formula (tools/gen_media_expected.py; provenance-checked against
     // the fixture bytes) — makes the driver's q31 check rows+schema+hash.
     "q31_multimodal" ->
-      """SELECT name, width, height, channels, meanIntensity
-        |FROM read_parquet('/root/repo/fixtures/media_expected.parquet')""".stripMargin,
+      s"""SELECT name, width, height, channels, meanIntensity
+        |FROM read_parquet('$FixturesDir/media_expected.parquet')""".stripMargin,
 
     "q32_embed_neardup" ->
       """WITH n AS (
@@ -10387,9 +10390,9 @@ object SparkEntry {
         |FROM part GROUP BY CUBE (p_brand, p_size % 5)""".stripMargin,
 
     "q40_job_usage_country" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT substr(eventTime, 1, 7) AS month, countryCode, resourceId, duration
-        |  FROM read_json_auto('/root/repo/fixtures/events_json/*.json')),
+        |  FROM read_json_auto('$FixturesDir/events_json/*.json')),
         |g AS (
         |  SELECT month, countryCode, resourceId,
         |    CAST(SUM(duration) AS BIGINT) AS totalDurationInSec
@@ -12247,9 +12250,9 @@ object SparkEntry {
     // generator's independent hashes; raw ':'-joined keys, DISTINCT
     // per video, threshold in HAVING — no knowledge of the Spark plan
     "q335_video_seq_copies" ->
-      """WITH fh AS (
+      s"""WITH fh AS (
         |  SELECT name, frame_index, dhash
-        |  FROM read_parquet('/root/repo/fixtures/video_seq_expected.parquet')),
+        |  FROM read_parquet('$FixturesDir/video_seq_expected.parquet')),
         |sq AS (
         |  SELECT name,
         |    CAST(dhash AS VARCHAR) || ':' ||
@@ -12268,17 +12271,17 @@ object SparkEntry {
     // video per-frame hash mirror: the generator's independent python
     // dHash over the formula frames (sampled indices only)
     "q331_video_vhash" ->
-      """SELECT name, frame_index, width, height, dhash
-        |FROM read_parquet('/root/repo/fixtures/video_vhash_expected.parquet')"""
+      s"""SELECT name, frame_index, width, height, dhash
+        |FROM read_parquet('$FixturesDir/video_vhash_expected.parquet')"""
         .stripMargin,
 
     // video near-dup mirror: brute-force ALL-pairs over the expected
     // per-frame hashes — aligned frame distances, integer-crossed
     // τ=1/2 threshold, no knowledge of the banding
     "q332_video_neardup" ->
-      """WITH fh AS (
+      s"""WITH fh AS (
         |  SELECT name, frame_index, dhash
-        |  FROM read_parquet('/root/repo/fixtures/video_vhash_expected.parquet')),
+        |  FROM read_parquet('$FixturesDir/video_vhash_expected.parquet')),
         |n AS (SELECT name, count(*) AS n FROM fh GROUP BY 1),
         |m AS (
         |  SELECT a.name AS id_a, b.name AS id_b, count(*) AS matched_frames
@@ -12424,8 +12427,8 @@ object SparkEntry {
     // dHash mirror: the generator's independent python implementation
     // of the shared spec (formula pixels, never the Spark decoder)
     "q325_image_dhash" ->
-      """SELECT name, width, height, dhash
-        |FROM read_parquet('/root/repo/fixtures/images_dhash_expected.parquet')"""
+      s"""SELECT name, width, height, dhash
+        |FROM read_parquet('$FixturesDir/images_dhash_expected.parquet')"""
         .stripMargin,
 
     // near-dup mirror: brute-force ALL-pairs hamming over the
@@ -12445,24 +12448,24 @@ object SparkEntry {
     // decode+hash of the authored formula pixels (never the Spark
     // decoder — the q178/q325 provenance discipline)
     "q357_png_dhash" ->
-      """SELECT name, width, height, dhash
-        |FROM read_parquet('/root/repo/fixtures/images_png_expected.parquet')"""
+      s"""SELECT name, width, height, dhash
+        |FROM read_parquet('$FixturesDir/images_png_expected.parquet')"""
         .stripMargin,
 
     // JPEG dHash mirror: the generator's independent python DECODER
     // over the bytes it wrote (lossy format: expected pixels are the
     // reconstructed ones, through the same pinned integer IDCT spec)
     "q359_jpeg_dhash" ->
-      """SELECT name, width, height, dhash
-        |FROM read_parquet('/root/repo/fixtures/images_jpeg_expected.parquet')"""
+      s"""SELECT name, width, height, dhash
+        |FROM read_parquet('$FixturesDir/images_jpeg_expected.parquet')"""
         .stripMargin,
 
     // EXIF-orientation mirror: the generator's independent decode +
     // independent tag-274 transform over the bytes it wrote; the
     // orientation column certifies the tag parse (ignore arms read 1)
     "q373_exif_orient" ->
-      """SELECT name, width, height, orientation, dhash
-        |FROM read_parquet('/root/repo/fixtures/images_jpeg_expected.parquet')
+      s"""SELECT name, width, height, orientation, dhash
+        |FROM read_parquet('$FixturesDir/images_jpeg_expected.parquet')
         |WHERE name LIKE 'exif%'"""
         .stripMargin,
 
@@ -12470,17 +12473,17 @@ object SparkEntry {
     // hashes, containered byte-verbatim (gen_avi_fixtures.py asserts
     // the embedded payloads equal the certified jpg files)
     "q374_avi_vhash" ->
-      """SELECT name, frame_index, width, height, dhash
-        |FROM read_parquet('/root/repo/fixtures/video_avi_expected.parquet')
+      s"""SELECT name, frame_index, width, height, dhash
+        |FROM read_parquet('$FixturesDir/video_avi_expected.parquet')
         |WHERE name LIKE '%.avi'"""
         .stripMargin,
 
     // cross-arc video near-dup mirror: brute-force aligned all-pairs
     // over the expected per-frame hashes (q332's SQL shape)
     "q375_video_crossarc" ->
-      """WITH fh AS (
+      s"""WITH fh AS (
         |  SELECT name, frame_index, dhash
-        |  FROM read_parquet('/root/repo/fixtures/video_avi_expected.parquet')),
+        |  FROM read_parquet('$FixturesDir/video_avi_expected.parquet')),
         |n AS (SELECT name, count(*) AS n FROM fh GROUP BY 1),
         |m AS (
         |  SELECT a.name AS id_a, b.name AS id_b, count(*) AS matched_frames
@@ -12498,15 +12501,15 @@ object SparkEntry {
     // re-encode capstone mirror: brute-force ALL-pairs over the union
     // of the THREE generators' expected hashes — format-blind
     "q360_reencode_triple" ->
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT name, dhash
-        |  FROM read_parquet('/root/repo/fixtures/images_dhash_expected.parquet')
+        |  FROM read_parquet('$FixturesDir/images_dhash_expected.parquet')
         |  UNION ALL
         |  SELECT name, dhash
-        |  FROM read_parquet('/root/repo/fixtures/images_png_expected.parquet')
+        |  FROM read_parquet('$FixturesDir/images_png_expected.parquet')
         |  UNION ALL
         |  SELECT name, dhash
-        |  FROM read_parquet('/root/repo/fixtures/images_jpeg_expected.parquet'))
+        |  FROM read_parquet('$FixturesDir/images_jpeg_expected.parquet'))
         |SELECT a.name AS id_a, b.name AS id_b,
         |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS dist
         |FROM u a JOIN u b ON a.name < b.name
@@ -12515,28 +12518,28 @@ object SparkEntry {
     // TIFF dHash mirror: the generator's independent decode (both
     // byte orders, strips, photometric), lossless provenance
     "q367_tiff_dhash" ->
-      """SELECT name, width, height, dhash
-        |FROM read_parquet('/root/repo/fixtures/images_tiff_expected.parquet')"""
+      s"""SELECT name, width, height, dhash
+        |FROM read_parquet('$FixturesDir/images_tiff_expected.parquet')"""
         .stripMargin,
 
     // five-format re-encode mirror: brute-force all-pairs over the
     // union of ALL FIVE generators' expected hashes
     "q368_reencode_quint" ->
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT name, dhash
-        |  FROM read_parquet('/root/repo/fixtures/images_dhash_expected.parquet')
+        |  FROM read_parquet('$FixturesDir/images_dhash_expected.parquet')
         |  UNION ALL
         |  SELECT name, dhash
-        |  FROM read_parquet('/root/repo/fixtures/images_png_expected.parquet')
+        |  FROM read_parquet('$FixturesDir/images_png_expected.parquet')
         |  UNION ALL
         |  SELECT name, dhash
-        |  FROM read_parquet('/root/repo/fixtures/images_jpeg_expected.parquet')
+        |  FROM read_parquet('$FixturesDir/images_jpeg_expected.parquet')
         |  UNION ALL
         |  SELECT name, dhash
-        |  FROM read_parquet('/root/repo/fixtures/images_gif_expected.parquet')
+        |  FROM read_parquet('$FixturesDir/images_gif_expected.parquet')
         |  UNION ALL
         |  SELECT name, dhash
-        |  FROM read_parquet('/root/repo/fixtures/images_tiff_expected.parquet'))
+        |  FROM read_parquet('$FixturesDir/images_tiff_expected.parquet'))
         |SELECT a.name AS id_a, b.name AS id_b,
         |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS dist
         |FROM u a JOIN u b ON a.name < b.name
@@ -12545,8 +12548,8 @@ object SparkEntry {
     // WebP/VP8L dHash mirror: the generator's independent decode of
     // the bytes it wrote (lossless provenance)
     "q369_webp_dhash" ->
-      """SELECT name, width, height, dhash
-        |FROM read_parquet('/root/repo/fixtures/images_webp_expected.parquet')"""
+      s"""SELECT name, width, height, dhash
+        |FROM read_parquet('$FixturesDir/images_webp_expected.parquet')"""
         .stripMargin,
 
     // six-format re-encode mirror: brute-force all-pairs over the
@@ -12559,27 +12562,27 @@ object SparkEntry {
     // AIFF aHash mirror: the generator's independent implementation
     // over the formula samples (lossless), provenance-re-parsed
     "q364_aiff_ahash" ->
-      """SELECT name, sample_rate, n_samples, ahash
-        |FROM read_parquet('/root/repo/fixtures/audio_formats_expected.parquet')
+      s"""SELECT name, sample_rate, n_samples, ahash
+        |FROM read_parquet('$FixturesDir/audio_formats_expected.parquet')
         |WHERE name LIKE '%.aif'""".stripMargin,
 
     // AU aHash mirror: expected hashes computed from the generator's
     // independent μ-law DECODE of the bytes it wrote (lossy-format
     // provenance) + the linear leg
     "q365_au_ahash" ->
-      """SELECT name, sample_rate, n_samples, ahash
-        |FROM read_parquet('/root/repo/fixtures/audio_formats_expected.parquet')
+      s"""SELECT name, sample_rate, n_samples, ahash
+        |FROM read_parquet('$FixturesDir/audio_formats_expected.parquet')
         |WHERE name LIKE '%.au'""".stripMargin,
 
     // audio re-encode mirror: brute-force all-pairs over the union of
     // the WAV and formats generators' expected hashes — format-blind
     "q366_audio_reencode" ->
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT name, ahash
-        |  FROM read_parquet('/root/repo/fixtures/audio_ahash_expected.parquet')
+        |  FROM read_parquet('$FixturesDir/audio_ahash_expected.parquet')
         |  UNION ALL
         |  SELECT name, ahash
-        |  FROM read_parquet('/root/repo/fixtures/audio_formats_expected.parquet'))
+        |  FROM read_parquet('$FixturesDir/audio_formats_expected.parquet'))
         |SELECT a.name AS id_a, b.name AS id_b,
         |  CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS dist
         |FROM u a JOIN u b ON a.name < b.name
@@ -12588,15 +12591,15 @@ object SparkEntry {
     // FLAC aHash mirror: lossless provenance — the generator asserts
     // its independent decoder reproduces the formula samples exactly
     "q371_flac_ahash" ->
-      """SELECT name, sample_rate, n_samples, ahash
-        |FROM read_parquet('/root/repo/fixtures/audio_formats_expected.parquet')
+      s"""SELECT name, sample_rate, n_samples, ahash
+        |FROM read_parquet('$FixturesDir/audio_formats_expected.parquet')
         |WHERE name LIKE '%.flac'""".stripMargin,
 
     // GIF dHash mirror: the generator's independent decode of the
     // formula pixels (lossless — palette + LZW + interlace provenance)
     "q361_gif_dhash" ->
-      """SELECT name, width, height, dhash
-        |FROM read_parquet('/root/repo/fixtures/images_gif_expected.parquet')"""
+      s"""SELECT name, width, height, dhash
+        |FROM read_parquet('$FixturesDir/images_gif_expected.parquet')"""
         .stripMargin,
 
     // re-encode QUAD mirror: brute-force all-pairs over the union of
@@ -12612,12 +12615,12 @@ object SparkEntry {
     // over the UNION of the two generators' expected hashes — no
     // knowledge of the banding or the formats
     "q358_crossformat_neardup" ->
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT name, dhash
-        |  FROM read_parquet('/root/repo/fixtures/images_dhash_expected.parquet')
+        |  FROM read_parquet('$FixturesDir/images_dhash_expected.parquet')
         |  UNION ALL
         |  SELECT name, dhash
-        |  FROM read_parquet('/root/repo/fixtures/images_png_expected.parquet'))
+        |  FROM read_parquet('$FixturesDir/images_png_expected.parquet'))
         |SELECT a.name AS id_a, b.name AS id_b,
         |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS dist
         |FROM u a JOIN u b ON a.name < b.name
@@ -12626,17 +12629,17 @@ object SparkEntry {
     // aHash mirror: the generator's independent python implementation
     // of the shared envelope-hash spec over formula samples
     "q327_audio_ahash" ->
-      """SELECT name, sample_rate, n_samples, ahash
-        |FROM read_parquet('/root/repo/fixtures/audio_ahash_expected.parquet')"""
+      s"""SELECT name, sample_rate, n_samples, ahash
+        |FROM read_parquet('$FixturesDir/audio_ahash_expected.parquet')"""
         .stripMargin,
 
     // audio near-dup mirror: brute-force all-pairs hamming, no
     // knowledge of the banding
     "q328_audio_neardup" ->
-      """SELECT a.name AS id_a, b.name AS id_b,
+      s"""SELECT a.name AS id_a, b.name AS id_b,
         |  CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS dist
-        |FROM read_parquet('/root/repo/fixtures/audio_ahash_expected.parquet') a
-        |JOIN read_parquet('/root/repo/fixtures/audio_ahash_expected.parquet') b
+        |FROM read_parquet('$FixturesDir/audio_ahash_expected.parquet') a
+        |JOIN read_parquet('$FixturesDir/audio_ahash_expected.parquet') b
         |  ON a.name < b.name
         |WHERE bit_count(xor(a.ahash, b.ahash)) <= 3""".stripMargin,
 
@@ -13555,18 +13558,18 @@ object SparkEntry {
         |FROM hits CROSS JOIN (SELECT count(*) AS n_exact FROM exact)""".stripMargin,
 
     "q47_grf1_meta" ->
-      """SELECT name, width, height, channels,
+      s"""SELECT name, width, height, channels,
         |  CAST(width * height * channels AS BIGINT) AS payloadBytes
-        |FROM read_parquet('/root/repo/fixtures/media_expected.parquet')""".stripMargin,
+        |FROM read_parquet('$FixturesDir/media_expected.parquet')""".stripMargin,
 
     // Batch gap-sessionization over the SAME landing files the stream
     // replays. processTime carries an explicit +00:00 offset, so
     // epoch_us(TIMESTAMPTZ) is the same absolute microsecond count as
     // the stream's getTime-based math regardless of engine time zone.
     "q45_sessions_stream" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT userId, epoch_us(CAST(processTime AS TIMESTAMPTZ)) AS us
-        |  FROM read_json_auto('/root/repo/fixtures/events_json/*.json')
+        |  FROM read_json_auto('$FixturesDir/events_json/*.json')
         |  WHERE userId IS NOT NULL
         |), d AS (
         |  SELECT userId, us,
@@ -13774,17 +13777,17 @@ object SparkEntry {
     // first-arrival-wins == DISTINCT for byte-identical redeliveries
     // (fixture eventIds are unique; the replay plants the duplicates).
     "q82_dedup_stream" ->
-      """SELECT DISTINCT eventId, userId, resourceId, countryCode, duration
-        |FROM read_json_auto('/root/repo/fixtures/events_json/*.json')""".stripMargin,
+      s"""SELECT DISTINCT eventId, userId, resourceId, countryCode, duration
+        |FROM read_json_auto('$FixturesDir/events_json/*.json')""".stripMargin,
 
     // epoch_us(CAST(x AS TIMESTAMPTZ)) handles the explicit-offset
     // processTime strings (q45 convention); strict lower bound and
     // inclusive upper bound mirror the stream's interval condition.
     "q83_followup_join_stream" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT eventId, userId,
         |         epoch_us(CAST(processTime AS TIMESTAMPTZ)) AS us
-        |  FROM read_json_auto('/root/repo/fixtures/events_json/*.json'))
+        |  FROM read_json_auto('$FixturesDir/events_json/*.json'))
         |SELECT a.eventId AS a_id, b.eventId AS b_id, a.userId AS uid
         |FROM e a JOIN e b ON a.userId = b.userId
         |  AND b.us > a.us AND b.us <= a.us + CAST(3600000000 AS BIGINT)""".stripMargin,
@@ -13886,8 +13889,8 @@ object SparkEntry {
         |FROM h""".stripMargin,
 
     "q84_running_totals_stream" ->
-      """SELECT resourceId, count(*) AS total
-        |FROM read_json_auto('/root/repo/fixtures/events_json/*.json')
+      s"""SELECT resourceId, count(*) AS total
+        |FROM read_json_auto('$FixturesDir/events_json/*.json')
         |GROUP BY resourceId""".stripMargin,
 
     "q68_histogram" ->
@@ -14013,17 +14016,17 @@ object SparkEntry {
     // equal the batch top10 over the same landing files — the oracle is
     // the q28 batch SQL verbatim.
     "q80_top10_stream_update" ->
-      """WITH cat AS (
+      raw"""WITH cat AS (
         |  SELECT regexp_replace(c.id, '\.(\d)', '.0\1', 'g') AS categoryId,
         |         c.name AS categoryName
         |  FROM (SELECT unnest(content) AS c
-        |        FROM read_json_auto('/root/repo/fixtures/categories.json'))),
+        |        FROM read_json_auto('$FixturesDir/categories.json'))),
         |res AS (
         |  SELECT id AS resourceId, name AS resourceName, categoryId
-        |  FROM read_json_auto('/root/repo/fixtures/resources.json')),
+        |  FROM read_json_auto('$FixturesDir/resources.json')),
         |ev AS (
         |  SELECT substr(processTime, 1, 10) AS date, resourceId
-        |  FROM read_json_auto('/root/repo/fixtures/events_json/*.json')),
+        |  FROM read_json_auto('$FixturesDir/events_json/*.json')),
         |c2 AS (SELECT date, resourceId, COUNT(*) AS cnt FROM ev GROUP BY 1, 2),
         |jd AS (
         |  SELECT c2.date, c2.resourceId, c2.cnt, res.categoryId,
@@ -14300,11 +14303,11 @@ object SparkEntry {
     // delivery-order-independent truth the guarded streaming upsert
     // must converge to.
     "q99_cdc_stream" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT resourceId,
         |    epoch_us(CAST(processTime AS TIMESTAMPTZ)) AS seq,
         |    eventId, userId, duration
-        |  FROM read_json_auto('/root/repo/fixtures/events_json/*.json')
+        |  FROM read_json_auto('$FixturesDir/events_json/*.json')
         |  WHERE resourceId IS NOT NULL)
         |SELECT resourceId, seq, eventId, userId, duration
         |FROM e
@@ -15637,8 +15640,8 @@ object SparkEntry {
     // (tools/gen_wav_fixtures.py; provenance-checked) — the adversarial
     // files' ABSENCE from this parquet is part of the contract.
     "q170_wav_decode" ->
-      """SELECT name, sample_rate, channels, bits, n_frames, sum_abs, peak_abs
-        |FROM read_parquet('/root/repo/fixtures/audio_expected.parquet')""".stripMargin,
+      s"""SELECT name, sample_rate, channels, bits, n_frames, sum_abs, peak_abs
+        |FROM read_parquet('$FixturesDir/audio_expected.parquet')""".stripMargin,
 
     // q46 contract discipline on the ADVERSARIAL clustered fixture:
     // n_exact comes from DuckDB's OWN brute-force top-5 (cosine, the
@@ -15655,9 +15658,9 @@ object SparkEntry {
     // 64-term fold bit for bit — full row-level certification of the
     // PQ encode→LUT→fold machinery.
     "q191_pq_adc_topk" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT vec_id, embedding
-        |  FROM read_parquet('/root/repo/fixtures/embeddings_clustered.parquet')),
+        |  FROM read_parquet('$FixturesDir/embeddings_clustered.parquet')),
         |q AS (SELECT * FROM e WHERE vec_id % 43 = 0 OR vec_id >= 1045),
         |scored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -15704,9 +15707,9 @@ object SparkEntry {
     // additionally exercising that residual grid points, their
     // products, and the base+LUT decomposed sum stay exact).
     "q194_ivfpq_exact" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT vec_id, embedding
-        |  FROM read_parquet('/root/repo/fixtures/embeddings_clustered.parquet')),
+        |  FROM read_parquet('$FixturesDir/embeddings_clustered.parquet')),
         |q AS (SELECT * FROM e WHERE vec_id % 43 = 0 OR vec_id >= 1045),
         |scored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -15741,11 +15744,11 @@ object SparkEntry {
         |FROM hits CROSS JOIN (SELECT count(*) AS n_exact FROM exact)""".stripMargin,
 
     "q171_ann_recall_clustered" ->
-      """WITH n AS (
+      s"""WITH n AS (
         |  SELECT vec_id, embedding,
         |    list_reduce(list_transform(list_zip(embedding, embedding),
         |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS nn
-        |  FROM read_parquet('/root/repo/fixtures/embeddings_clustered.parquet')
+        |  FROM read_parquet('$FixturesDir/embeddings_clustered.parquet')
         |), q AS (SELECT * FROM n WHERE vec_id % 43 = 0 OR vec_id >= 1045),
         |scored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -15900,14 +15903,14 @@ object SparkEntry {
     // formula-authored truth (which omits them) drops them — the same
     // drop the Spark side gets from decodeWav's parser returning None.
     "q172_audio_report" ->
-      """SELECT s.speaker, CAST(s.recordedDate AS VARCHAR) AS recorded_date,
+      s"""SELECT s.speaker, CAST(s.recordedDate AS VARCHAR) AS recorded_date,
         |  COUNT(*) AS n_clips,
         |  CAST(SUM(a.n_frames) AS BIGINT) AS total_frames,
         |  CAST(SUM(a.n_frames * 1000 // a.sample_rate) AS BIGINT) AS total_ms,
         |  MAX(a.peak_abs) AS peak_abs,
         |  CAST(SUM(a.sum_abs) AS BIGINT) AS sum_abs_total
-        |FROM read_parquet('/root/repo/fixtures/audio_expected.parquet') a
-        |JOIN read_json_auto('/root/repo/fixtures/audio_speakers.json') s
+        |FROM read_parquet('$FixturesDir/audio_expected.parquet') a
+        |JOIN read_json_auto('$FixturesDir/audio_speakers.json') s
         |  ON a.name = s.name
         |GROUP BY 1, 2""".stripMargin,
 
@@ -15916,19 +15919,19 @@ object SparkEntry {
     // adversarial files' ABSENCE from this parquet is part of the
     // contract, and top_row_sum_r pins bottom-up/top-down row order.
     "q178_bmp_decode" ->
-      """SELECT name, width, height, bits, n_px, sum_r, sum_g, sum_b,
+      s"""SELECT name, width, height, bits, n_px, sum_r, sum_g, sum_b,
         |  peak_luma_milli, top_row_sum_r
-        |FROM read_parquet('/root/repo/fixtures/images_expected.parquet')""".stripMargin,
+        |FROM read_parquet('$FixturesDir/images_expected.parquet')""".stripMargin,
 
     "q179_image_report" ->
-      """SELECT c.camera, CAST(c.capturedDate AS VARCHAR) AS captured_date,
+      s"""SELECT c.camera, CAST(c.capturedDate AS VARCHAR) AS captured_date,
         |  COUNT(*) AS n_images,
         |  CAST(SUM(i.n_px) AS BIGINT) AS total_px,
         |  CAST(SUM(i.sum_r*299 + i.sum_g*587 + i.sum_b*114) * 1000000
         |    // (SUM(i.n_px) * 255000) AS BIGINT) AS brightness_ppm,
         |  MAX(i.peak_luma_milli) AS peak_luma_milli
-        |FROM read_parquet('/root/repo/fixtures/images_expected.parquet') i
-        |JOIN read_json_auto('/root/repo/fixtures/image_cameras.json') c
+        |FROM read_parquet('$FixturesDir/images_expected.parquet') i
+        |JOIN read_json_auto('$FixturesDir/image_cameras.json') c
         |  ON i.name = c.name
         |GROUP BY 1, 2""".stripMargin,
 
@@ -15938,11 +15941,11 @@ object SparkEntry {
     // The filename rank is computed over ALL files (the split happens
     // before the resourceId filter, exactly as the replay delivers).
     "q180_cdc_time_travel" ->
-      """WITH raw AS (
+      s"""WITH raw AS (
         |  SELECT resourceId,
         |    epoch_us(CAST(processTime AS TIMESTAMPTZ)) AS seq,
         |    eventId, userId, duration, filename
-        |  FROM read_json_auto('/root/repo/fixtures/events_json/*.json',
+        |  FROM read_json_auto('$FixturesDir/events_json/*.json',
         |                      filename=true)),
         |files AS (SELECT DISTINCT filename FROM raw),
         |nn AS (SELECT greatest(1, count(*) // 6) AS half FROM files),
@@ -15981,17 +15984,17 @@ object SparkEntry {
     // (tools/gen_mp4_fixtures.py; provenance-checked) — the truncated
     // and non-BMFF files' ABSENCE is part of the contract.
     "q184_mp4_meta" ->
-      """SELECT name, brand, timescale, duration_units, duration_ms,
+      s"""SELECT name, brand, timescale, duration_units, duration_ms,
         |  n_tracks, width, height
-        |FROM read_parquet('/root/repo/fixtures/video_expected.parquet')""".stripMargin,
+        |FROM read_parquet('$FixturesDir/video_expected.parquet')""".stripMargin,
 
     "q181_file_lineage" ->
-      """SELECT coalesce(resourceId, '__none__') AS resource_id,
+      s"""SELECT coalesce(resourceId, '__none__') AS resource_id,
         |  count(*) AS n_events,
         |  count(DISTINCT parse_filename(filename)) AS n_files,
         |  min(parse_filename(filename)) AS first_file,
         |  max(parse_filename(filename)) AS last_file
-        |FROM read_json_auto('/root/repo/fixtures/events_json/*.json',
+        |FROM read_json_auto('$FixturesDir/events_json/*.json',
         |                    filename=true)
         |GROUP BY 1""".stripMargin,
 
@@ -15999,38 +16002,38 @@ object SparkEntry {
     // match field-for-field, quarantined rows fingerprint-for-
     // fingerprint (md5 of the preserved raw text).
     "q182_quarantine" ->
-      """WITH f AS (
-        |  SELECT content FROM read_text('/root/repo/fixtures/events_jsonl_dirty/*.jsonl')),
+      s"""WITH f AS (
+        |  SELECT content FROM read_text('$FixturesDir/events_jsonl_dirty/*.jsonl')),
         |lines AS (
         |  SELECT unnest(string_split(rtrim(content, chr(10)), chr(10))) AS line
         |  FROM f)
         |SELECT
         |  CASE WHEN json_valid(line) THEN 'ok' ELSE 'corrupt' END AS kind,
-        |  CASE WHEN json_valid(line) THEN line->>'$.eventId' END AS event_id,
-        |  CASE WHEN json_valid(line) THEN line->>'$.resourceId' END AS resource_id,
-        |  CASE WHEN json_valid(line) THEN line->>'$.userId' END AS user_id,
+        |  CASE WHEN json_valid(line) THEN line->>'$$.eventId' END AS event_id,
+        |  CASE WHEN json_valid(line) THEN line->>'$$.resourceId' END AS resource_id,
+        |  CASE WHEN json_valid(line) THEN line->>'$$.userId' END AS user_id,
         |  CASE WHEN json_valid(line)
-        |    THEN CAST(line->>'$.duration' AS BIGINT) END AS duration,
-        |  CASE WHEN json_valid(line) THEN line->>'$.itemPrice' END AS item_price,
+        |    THEN CAST(line->>'$$.duration' AS BIGINT) END AS duration,
+        |  CASE WHEN json_valid(line) THEN line->>'$$.itemPrice' END AS item_price,
         |  CASE WHEN NOT json_valid(line) THEN md5(line) END AS line_fp
         |FROM lines""".stripMargin,
 
     // Identical SQL to q182 — the streaming replay must converge to the
     // batch triage exactly (the q167/q168 identical-oracle discipline).
     "q185_quarantine_stream" ->
-      """WITH f AS (
-        |  SELECT content FROM read_text('/root/repo/fixtures/events_jsonl_dirty/*.jsonl')),
+      s"""WITH f AS (
+        |  SELECT content FROM read_text('$FixturesDir/events_jsonl_dirty/*.jsonl')),
         |lines AS (
         |  SELECT unnest(string_split(rtrim(content, chr(10)), chr(10))) AS line
         |  FROM f)
         |SELECT
         |  CASE WHEN json_valid(line) THEN 'ok' ELSE 'corrupt' END AS kind,
-        |  CASE WHEN json_valid(line) THEN line->>'$.eventId' END AS event_id,
-        |  CASE WHEN json_valid(line) THEN line->>'$.resourceId' END AS resource_id,
-        |  CASE WHEN json_valid(line) THEN line->>'$.userId' END AS user_id,
+        |  CASE WHEN json_valid(line) THEN line->>'$$.eventId' END AS event_id,
+        |  CASE WHEN json_valid(line) THEN line->>'$$.resourceId' END AS resource_id,
+        |  CASE WHEN json_valid(line) THEN line->>'$$.userId' END AS user_id,
         |  CASE WHEN json_valid(line)
-        |    THEN CAST(line->>'$.duration' AS BIGINT) END AS duration,
-        |  CASE WHEN json_valid(line) THEN line->>'$.itemPrice' END AS item_price,
+        |    THEN CAST(line->>'$$.duration' AS BIGINT) END AS duration,
+        |  CASE WHEN json_valid(line) THEN line->>'$$.itemPrice' END AS item_price,
         |  CASE WHEN NOT json_valid(line) THEN md5(line) END AS line_fp
         |FROM lines""".stripMargin,
 

@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // corpus events.parquet uses INT64(TIMESTAMP(NANOS)); see Corpus.normalize
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the widest flat aggregate here is 385 bigint fields (q41's LSH
-      // signature matrix); the default maxFields=100 silently drops
-      // whole-stage codegen for anything wider (measured 4× slower
-      // interpreted). 600 covers every plan with headroom.
-      .config("spark.sql.codegen.maxFields", "600")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated query filter (local iteration only; the

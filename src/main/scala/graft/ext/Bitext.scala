@@ -72,7 +72,7 @@ object Bitext {
     val c = tgt.select(col(idCol).as("tgt_id"), col(vecCol).as("__tv"))
     val scored = c.join(broadcast(q))
       .withColumn("cosine",
-        SimSearch.cosineSim(src.sparkSession, col("__sv"), col("__tv")))
+        SimSearch.cosineSim(col("__sv"), col("__tv")))
       .select(col("src_id"), col("tgt_id"), col("cosine"))
       .localCheckpoint()
     val wF = Window.partitionBy("src_id")

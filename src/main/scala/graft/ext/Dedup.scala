@@ -78,8 +78,7 @@ object Dedup {
     // Predicates on Generate output are never pushed below it.
     val sig = base
       .select(col("__id"),
-        explode_outer(array(graft.plans.MinhashSignature.of(
-          base.sparkSession, col("__sh"), numHashes))).as("__sig"))
+        explode_outer(array(graft.plans.MinhashSignature.of(col("__sh"), numHashes))).as("__sig"))
       .filter(col("__sig").isNotNull)
     val bandCols = (0 until bands).map { bd =>
       xxhash64(lit(bd) +: (0 until rowsPerBand).map(r =>
@@ -999,7 +998,6 @@ object Dedup {
       idx: SimSearch.IvfIndex, corpus: DataFrame, idCol: String,
       tau: Double): DataFrame = {
     require(tau > 0 && tau <= 1.0001, s"bad semDedup tau: $tau")
-    val spark = corpus.sparkSession
     // one materialization: the lists feed pair generation below; the
     // trained-artifact checkpoint rule (buildIvfPq postmortem — a lazy
     // assignment re-executes per consumer)
@@ -1011,7 +1009,7 @@ object Dedup {
       .join(members.as("b"),
         col("a.__cid") === col("b.__cid") && col("a.__id") < col("b.__id"))
       .select(col("a.__id").as("src"), col("b.__id").as("dst"),
-        SimSearch.cosineSim(spark, col("a.__v"), col("b.__v")).as("__cos"))
+        SimSearch.cosineSim(col("a.__v"), col("b.__v")).as("__cos"))
       .filter(col("__cos") >= tau)
       .select("src", "dst")
     ConnectedComponents.dedupClusters(
@@ -1069,7 +1067,6 @@ object Dedup {
   def semDedupIncrementalAssigned(
       idx: SimSearch.IvfIndex, oldAssign: DataFrame, assigned: DataFrame,
       idCol: String, tau: Double): DataFrame = {
-    val spark = assigned.sparkSession
     val bm = assigned.select(col("id").as("__bid"), col("vec").as("__bv"),
       col("cid").as("__cid"))
     val old = idx.lists.select(col("__cid"),
@@ -1078,14 +1075,13 @@ object Dedup {
     // draw and the edge union) — left lazy, the batch×stored-list
     // cosine join ran per consumer (round-19 optimization)
     val crossPairs = broadcast(bm).join(old, Seq("__cid"))
-      .filter(SimSearch.cosineSim(spark, col("__bv"), col("__ov")) >= tau)
+      .filter(SimSearch.cosineSim(col("__bv"), col("__ov")) >= tau)
       .select(col("__bid"), col("__oid"))
       .localCheckpoint()
     val batchPairs = bm.as("a")
       .join(broadcast(bm.as("b")),
         col("a.__cid") === col("b.__cid") && col("a.__bid") < col("b.__bid"))
-      .filter(SimSearch.cosineSim(spark,
-        col("a.__bv"), col("b.__bv")) >= tau)
+      .filter(SimSearch.cosineSim(col("a.__bv"), col("b.__bv")) >= tau)
       .select(col("a.__bid").as("pa"), col("b.__bid").as("pb"))
     val assignShape = oldAssign.select(col(idCol),
       col("keep_id").as("cluster"), col("n_members").as("cluster_size"),

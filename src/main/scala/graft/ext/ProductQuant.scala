@@ -331,12 +331,11 @@ object ProductQuant {
     */
   private def assignResiduals(
       vecs: DataFrame, idCol: String, vecCol: String, anchors: DataFrame): DataFrame = {
-    val spark = vecs.sparkSession
     vecs.select(col(idCol).as("__id"), col(vecCol).as("__v"))
       .repartition(col("__id"))
       .crossJoin(broadcast(anchors))
       .select(col("__id"), col("__v"),
-        struct((-SimSearch.cosineSim(spark, col("__v"), col("__cv"))).as("negCos"),
+        struct((-SimSearch.cosineSim(col("__v"), col("__cv"))).as("negCos"),
           col("__cid").as("cid")).as("__sc"))
       .groupBy("__id")
       .agg(first(col("__v")).as("__v"), min(col("__sc")).getField("cid").as("__cid"))

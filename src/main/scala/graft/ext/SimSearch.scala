@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -46,10 +46,7 @@ object SimSearch {
     dot / sqrt(na * nb)
 
   /** Native one-pass cosine (graft.plans.CosineSimilarity). */
-  def cosineSim(spark: SparkSession, a: Column, b: Column): Column = {
-    CosineSimilarity.register(spark)
-    call_function(CosineSimilarity.fnName, a, b)
-  }
+  def cosineSim(a: Column, b: Column): Column = CosineSimilarity.of(a, b)
 
   // ─────────────────── binary (sign-bit) embeddings ───────────────────
   // The cheapest compression tier of the ANN stack: 1 bit per
@@ -111,12 +108,11 @@ object SimSearch {
   def hammingRerankTopK(
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       dim: Int, shortlist: Int, k: Int): DataFrame = {
-    val spark = corpus.sparkSession
     ProductQuant.rerankExact(
       hammingTopK(corpus, queries, idCol, vecCol, dim, shortlist)
         .select("query_id", "neighbor_id"),
       corpus, queries, idCol, vecCol, k,
-      scoreCol = "cosine", scorer = (q, c) => cosineSim(spark, q, c))
+      scoreCol = "cosine", scorer = (q, c) => cosineSim(q, c))
   }
 
   /** Exact top-k nearest (cosine) corpus rows for each query row.
@@ -131,7 +127,7 @@ object SimSearch {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
 
     val scored = c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", cosineSim(corpus.sparkSession, col("__qv"), col("__cv")))
+      .withColumn("cosine", cosineSim(col("__qv"), col("__cv")))
 
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored
@@ -166,7 +162,7 @@ object SimSearch {
     val scored = c.join(broadcast(q),
         col("neighbor_id") =!= col("query_id") &&
           col("neighbor_label") =!= col("query_label"))
-      .withColumn("cosine", cosineSim(corpus.sparkSession, col("__qv"), col("__cv")))
+      .withColumn("cosine", cosineSim(col("__qv"), col("__cv")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored
@@ -188,7 +184,7 @@ object SimSearch {
     n.as("a").join(n.as("b"), col("a.__id") < col("b.__id"))
       .select(
         col("a.__id").as("vec_a"), col("b.__id").as("vec_b"),
-        cosineSim(corpus.sparkSession, col("a.__v"), col("b.__v")).as("cosine"))
+        cosineSim(col("a.__v"), col("b.__v")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -373,7 +369,7 @@ object SimSearch {
       .join(keyed.as("b"),
         col("a.__k") === col("b.__k") && col("a.__id") < col("b.__id"))
       .select(col("a.__id").as("vec_a"), col("b.__id").as("vec_b"),
-        cosineSim(corpus.sparkSession, col("a.__v"), col("b.__v")).as("cosine"))
+        cosineSim(col("a.__v"), col("b.__v")).as("cosine"))
       .filter(col("cosine") >= threshold)
       .dropDuplicates("vec_a", "vec_b")
   }
@@ -430,7 +426,7 @@ object SimSearch {
       .join(keyed(queries, "query_id", "__qv"), Seq("__k"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cosineSim(corpus.sparkSession, col("__qv"), col("__cv")).as("cosine"))
+        cosineSim(col("__qv"), col("__cv")).as("cosine"))
       .dropDuplicates("query_id", "neighbor_id")
 
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
@@ -495,7 +491,7 @@ object SimSearch {
     // already had in hand).
     def assign(anchors: DataFrame): DataFrame = n.crossJoin(broadcast(anchors))
       .select(col("__id"), col("__v"),
-        struct((-cosineSim(spark, col("__v"), col("__cv"))).as("negCos"),
+        struct((-cosineSim(col("__v"), col("__cv"))).as("negCos"),
           col("__cid").as("cid")).as("__sc"))
       .groupBy("__id")
       .agg(first(col("__v")).as("__v"),
@@ -636,11 +632,10 @@ object SimSearch {
   def assignToAnchors(
       newVectors: DataFrame, anchors: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
-    val spark = newVectors.sparkSession
     val n = newVectors.select(col(idCol).as("__id"), col(vecCol).as("__v"))
     n.crossJoin(broadcast(anchors))
       .select(col("__id"), col("__v"),
-        struct((-cosineSim(spark, col("__v"), col("__cv"))).as("negCos"),
+        struct((-cosineSim(col("__v"), col("__cv"))).as("negCos"),
           col("__cid").as("cid")).as("__sc"))
       .groupBy("__id")
       .agg(first(col("__v")).as("__v"), min(col("__sc")).getField("cid").as("__cid"))
@@ -930,14 +925,13 @@ object SimSearch {
   def ivfTopKAgainstIndex(
       idx: IvfIndex, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
     val anchors = idx.anchors
     val lists = idx.lists
     // probe: rank anchors per query, keep nprobe (queries are a bounded
     // batch, so the per-query window is small)
     val qn = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val wq = Window.partitionBy("query_id")
-      .orderBy(cosineSim(spark, col("__qv"), col("__cv")).desc, col("__cid").asc)
+      .orderBy(cosineSim(col("__qv"), col("__cv")).desc, col("__cid").asc)
     val probes = qn.crossJoin(broadcast(anchors))
       .withColumn("__pr", row_number().over(wq))
       .filter(col("__pr") <= nprobe)
@@ -945,7 +939,7 @@ object SimSearch {
     val scored = lists.join(probes, Seq("__cid"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cosineSim(spark, col("__qv"), col("__cv2")).as("cosine"))
+        cosineSim(col("__qv"), col("__cv2")).as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored
       .withColumn("rank", row_number().over(w).cast("bigint"))

@@ -21,9 +21,10 @@ object TextAnalysis {
   //
   // The engine-portability groundwork: every piece below is certified
   // bit-for-bit identical between Spark and the DuckDB oracle by
-  // EXHAUSTIVE per-codepoint diff over planes 0-2 (tools/LowerDump +
-  // tools/UtokDiff generate the evidence). Two different tables are
-  // in play on the Spark side: `lower()` resolves to ICU case
+  // EXHAUSTIVE per-codepoint diff over planes 0-2 (tools/LowerDump and
+  // PlansSpec's "unicode_tokens expression == SQL-function composition,
+  // EXHAUSTIVE per codepoint" test generate the evidence). Two
+  // different tables are in play on the Spark side: `lower()` resolves to ICU case
   // mappings (CollationSupport.Lower, icu4j 77 ≈ Unicode 16 — NOT
   // java.lang.String.toLowerCase), while the regex classes
   // `\p{L}\p{M}\p{N}` read the JVM's Character data (JVM 17 =

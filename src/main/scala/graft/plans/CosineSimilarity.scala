@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.GraftSqlShim
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Codegen'd cosine similarity over two float-array columns.
@@ -20,13 +19,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * for the other cannot change a single output bit (asserted in
   * PlansSpec).
   *
-  * The engine carries exactly TWO custom Catalyst expressions — this
-  * and [[MinhashSignature]] — each earned by a measured failure of the
-  * composed-builtin form (three array walks here; multiplicative
-  * re-hashing there). Everything else uses built-ins, which get
+  * Like the engine's other custom Catalyst expressions, this one was
+  * earned by a measured failure of the composed-builtin form (three
+  * array walks here). Everything else uses built-ins, which get
   * Catalyst's own optimizations for free. The preference order
   * (compose built-ins > custom Expression > custom operator >
   * mapPartitions) is applied, not just cited.
+  *
+  * DataFrame code calls [[CosineSimilarity.of]] (via
+  * `SimSearch.cosineSim`), a Column built without the function
+  * registry; SQL text calls `cosine_sim`, bound by [[GraftExtensions]].
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -80,34 +82,17 @@ case class CosineSimilarity(left: Expression, right: Expression)
 object CosineSimilarity {
   val fnName = "cosine_sim"
 
-  private def builder(children: Seq[Expression]): Expression = {
+  /** The one argument check, shared by [[of]] and the SQL name that
+    * [[GraftExtensions]] binds.
+    */
+  private[plans] def build(children: Seq[Expression]): Expression = {
     require(children.length == 2, s"$fnName expects 2 arguments")
     CosineSimilarity(children.head, children(1))
   }
 
-  private def info: ExpressionInfo = new ExpressionInfo(
-    classOf[CosineSimilarity].getName, fnName)
-
-  /** Session-local registration (tests, ad-hoc sessions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
-}
-
-/** `--conf spark.sql.extensions=graft.plans.GraftExtensions` installs the
-  * engine's SQL surface additions into every session.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(CosineSimilarity.fnName),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, CosineSimilarity.fnName),
-      (children: Seq[Expression]) => CosineSimilarity(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier(MinhashSignature.fnName),
-      new ExpressionInfo(classOf[MinhashSignature].getName, MinhashSignature.fnName),
-      MinhashSignature.sqlBuilder))
-    ext.injectPlannerStrategy(_ => AsofJoinStrategy)
-    ext.injectOptimizerRule(_ => FuseCosine)
-  }
+  /** Registry-free Column entry: plans on any session, clones and
+    * streaming microbatch sessions included.
+    */
+  def of(a: Column, b: Column): Column =
+    GraftSqlShim.column(build(Seq(GraftSqlShim.expression(a), GraftSqlShim.expression(b))))
 }

@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graft.GraftSqlShim
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 
 /** Codegen'd MinHash signature over a shingle-set column: one fused
@@ -124,10 +123,10 @@ object MinhashSignature {
 
   /** `minhash_sig(shingles, numHashes, seed)` — numHashes/seed must be
     * foldable int/long literals (they parameterize generated code).
+    * The one argument check, shared by [[of]] and the SQL name that
+    * [[GraftExtensions]] binds.
     */
-  private[plans] def sqlBuilder: Seq[Expression] => Expression = builder _
-
-  private def builder(children: Seq[Expression]): Expression = {
+  private[plans] def build(children: Seq[Expression]): Expression = {
     require(children.length == 3, s"$fnName expects (array<string>, int numHashes, bigint seed)")
     val n = children(1) match {
       case Literal(v: Int, IntegerType) => v
@@ -141,16 +140,8 @@ object MinhashSignature {
     MinhashSignature(children.head, n, s)
   }
 
-  private def info: ExpressionInfo = new ExpressionInfo(
-    classOf[MinhashSignature].getName, fnName)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info, builder _)
-
-  /** Column-API entry: registers on the active session and calls. */
-  def of(spark: SparkSession, shingles: Column, numHashes: Int, seed: Long = 42L): Column = {
-    register(spark)
-    call_function(fnName, shingles, lit(numHashes), lit(seed))
-  }
+  /** Registry-free Column entry: plans on any session. */
+  def of(shingles: Column, numHashes: Int, seed: Long = 42L): Column =
+    GraftSqlShim.column(
+      build(Seq(GraftSqlShim.expression(shingles), Literal(numHashes), Literal(seed))))
 }

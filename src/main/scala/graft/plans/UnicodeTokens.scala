@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.GraftSqlShim
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -243,24 +243,15 @@ object UnicodeTokens {
     else new GenericArrayData(out.toArray)
   }
 
-  /** Registry-free Column entry (via [[GraftSqlShim]] — no session
-    * registration, so the expression survives `newSession()` clones,
-    * which drop registered functions; the streaming replay twins run
-    * projections on clones).
+  /** The one argument check, shared by [[of]] and the SQL name that
+    * [[GraftExtensions]] binds.
     */
+  private[plans] def build(children: Seq[Expression]): Expression = {
+    require(children.length == 1, s"$fnName expects (string)")
+    UnicodeTokens(children.head)
+  }
+
+  /** Registry-free Column entry: plans on any session. */
   def of(text: Column): Column =
-    org.apache.spark.sql.graft.GraftSqlShim.column(
-      UnicodeTokens(org.apache.spark.sql.graft.GraftSqlShim.expression(text)))
-
-  private def info: ExpressionInfo = new ExpressionInfo(
-    classOf[UnicodeTokens].getName, fnName)
-
-  /** SQL surface (optional — the Column path needs no registry). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info,
-      (children: Seq[Expression]) => {
-        require(children.length == 1, s"$fnName expects (string)")
-        UnicodeTokens(children.head)
-      })
+    GraftSqlShim.column(build(Seq(GraftSqlShim.expression(text))))
 }

@@ -249,7 +249,10 @@ object StreamingReports {
     finally s.close()
   }
 
-  private[streaming] def deleteRecursively(dir: Path): Unit = {
+  /** A no-op on a missing dir, so a `finally` that cleans up after a
+    * failed start never replaces that failure with its own.
+    */
+  private[graft] def deleteRecursively(dir: Path): Unit = if (Files.exists(dir)) {
     import scala.jdk.CollectionConverters._
     val s = Files.walk(dir)
     try s.iterator().asScala.toSeq.reverse
@@ -893,12 +896,6 @@ object StreamingReports {
     // the SAME stored index q88 probes (shared content-keyed seam)
     val idx = SimSearch.readIvfIndex(spark,
       SimSearch.ensureStoredIvfIndex(spark, sfDir, nlist = 16))
-    // register the codegen'd cosine BEFORE the stream starts: the
-    // microbatch executes under a cloned session whose function
-    // registry is copied at stream START — a registration made inside
-    // foreachBatch lands on the wrong registry and the probe fails
-    // with UNRESOLVED_ROUTINE cosine_sim
-    graft.plans.CosineSimilarity.register(spark)
     val queries = emb.filter(col("vec_id") % 50 === 0)
       .select("vec_id", "embedding")
     val outDir = Files.createTempDirectory("graft-ann-out")
@@ -1227,9 +1224,6 @@ object StreamingReports {
       appendWaves: Boolean = true): DataFrame = {
     import graft.ext.{Dedup, SimSearch}
     val spark = replaySession(outer)
-    // register the codegen'd cosine BEFORE the stream starts (the
-    // ivfStreamProbeReplay registry-copy rule)
-    graft.plans.CosineSimilarity.register(spark)
     val c = reroot(spark, corpus)
     val old = c.filter(isOld)
     val batch = c.filter(!isOld)
@@ -1567,9 +1561,6 @@ object StreamingReports {
       compactAfterWaveA: Boolean = false): DataFrame = {
     import graft.ext.{Dedup, SimSearch}
     val spark = replaySession(outer)
-    // register the codegen'd cosine BEFORE the stream starts (the
-    // ivfStreamProbeReplay registry-copy rule)
-    graft.plans.CosineSimilarity.register(spark)
     val c = reroot(spark, corpus)
     val old = c.filter(isOld)
     val batch = c.filter(!isOld)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-19 optimization probe (dev harness, not part of the driver
@@ -16,18 +15,8 @@ import org.apache.spark.sql.functions._
 object OptProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.maxFields", "600")
-      .config("spark.ui.enabled", "false")
-      .appName("opt-probe").getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.CosineSimilarity.register(spark)
 
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -150,7 +139,7 @@ object OptProbe {
           .join(members.as("b"),
             col("a.__cid") === col("b.__cid") && col("a.__id") < col("b.__id"))
           .select(col("a.__id").as("src"), col("b.__id").as("dst"),
-            SimSearch.cosineSim(spark, col("a.__v"), col("b.__v")).as("__cos"))
+            SimSearch.cosineSim(col("a.__v"), col("b.__v")).as("__cos"))
           .filter(col("__cos") >= 0.9)
           .select("src", "dst")
           .localCheckpoint()

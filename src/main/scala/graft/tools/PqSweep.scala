@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.ProductQuant
 
@@ -10,9 +9,7 @@ import graft.ext.ProductQuant
   */
 object PqSweep {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val qs = emb.filter(col("vec_id") % 50 === 0)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.ext.{Dedup, SimHash, SimSearch}
 import graft.tables.Corpus
 
@@ -11,13 +10,7 @@ import graft.tables.Corpus
   */
 object ProfileLsh {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.maxFields", "600")
-      .appName("profile-lsh").getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def time(name: String)(f: => Unit): Unit = {
       val ts = (1 to 3).map { _ =>

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.Sources
 import graft.streaming.StreamingReports
 
@@ -89,15 +87,8 @@ object StreamScaleProbe {
     val (nFiles, basePerFile) = (
       sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES", "20").toInt,
       sys.env.getOrElse("SPARK_GRAFT_STREAM_PERFILE", "250").toInt)
-    val fixtures = "/root/repo/fixtures"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.maxFields", "600")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val fixtures = graft.SparkEntry.FixturesDir
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val resources = Sources.resources(spark, fixtures + "/resources.json")
     val categories = Sources.categories(spark, fixtures + "/categories.json")

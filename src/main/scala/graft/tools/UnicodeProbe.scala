@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch probe: does Spark's lower()/regexp family agree with
@@ -9,11 +8,7 @@ import org.apache.spark.sql.functions._
   */
 object UnicodeProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]").appName("unicode-probe")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     import spark.implicits._
     // the SHIPPED class, not a local copy (review finding: an inline
     // spelling here drifted from the production seams — 3097-309C and

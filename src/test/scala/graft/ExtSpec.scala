@@ -210,7 +210,7 @@ class ExtSpec extends SparkSpec {
     // assignment that accidentally 'fixes' the documented degradation
     // (or degrades the healthy config) fails here rather than silently
     // invalidating the certified nlist/nprobe guidance.
-    val cemb = spark.read.parquet("/root/repo/fixtures/embeddings_clustered.parquet")
+    val cemb = spark.read.parquet(s"${SparkEntry.FixturesDir}/embeddings_clustered.parquet")
     val qs = cemb.filter($"vec_id" % 43 === 0 || $"vec_id" >= 1045)
     val exact = SimSearch.bruteForceTopK(cemb, qs, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet

@@ -100,7 +100,7 @@ class MultimodalSpec extends SparkSpec {
   test("decodeWav: real RIFF/WAVE fixtures decode to formula-exact features; hostile files skipped") {
     import graft.ext.Multimodal.{decodeWav, parseWav}
     val files = Multimodal.asMediaFiles(
-      Multimodal.readMedia(spark, "/root/repo/fixtures/audio"))
+      Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/audio"))
     val rows = decodeWav(files).collect()
       .map(r => r.path.split('/').last -> r).toMap
     // the adversarial float-format and truncated files must be absent
@@ -134,7 +134,7 @@ class MultimodalSpec extends SparkSpec {
   test("decodeBmp: real BMP fixtures decode to formula-exact features; hostile files skipped") {
     import graft.ext.Multimodal.{decodeBmp, parseBmp}
     val files = Multimodal.asMediaFiles(
-      Multimodal.readMedia(spark, "/root/repo/fixtures/images"))
+      Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images"))
     val rows = decodeBmp(files).collect()
       .map(r => r.path.split('/').last -> r).toMap
     // the adversarial RLE-compressed and truncated files must be absent
@@ -180,7 +180,7 @@ class MultimodalSpec extends SparkSpec {
       "near-dup pairs are exactly the planted set") {
     import graft.ext.Multimodal.{dHashBmp, imageNearDupPairs, parseBmpDHash}
     val files = Multimodal.asMediaFiles(
-      Multimodal.readMedia(spark, "/root/repo/fixtures/images_dhash"))
+      Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images_dhash"))
     val rows = dHashBmp(files).collect()
       .map(r => r.path.split('/').last -> r.dhash).toMap
     // tiny_8x4 (sub-grid) and rle8_dh (compressed) must be absent
@@ -206,7 +206,7 @@ class MultimodalSpec extends SparkSpec {
       (0 until 4).map(k => (s"base$k.bmp", s"near$k.bmp")).toSet)
     // identical bytes → distance 0 (self-consistency of the parser)
     val b0 = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/repo/fixtures/images_dhash/base2.bmp"))
+      java.nio.file.Paths.get(s"${SparkEntry.FixturesDir}/images_dhash/base2.bmp"))
     assert(parseBmpDHash("x", b0).get.dhash == rows("base2.bmp"))
   }
 
@@ -216,7 +216,7 @@ class MultimodalSpec extends SparkSpec {
       "with the BMP leg") {
     import graft.ext.Multimodal.{dHashPng, parsePngDHash, parseBmpDHash}
     val files = Multimodal.asMediaFiles(
-      Multimodal.readMedia(spark, "/root/repo/fixtures/images_png"))
+      Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images_png"))
     val rows = dHashPng(files).collect()
       .map(r => r.path.split('/').last -> r).toMap
     // interlaced(flag over sequential layout → short stream)/deep16/
@@ -254,7 +254,7 @@ class MultimodalSpec extends SparkSpec {
     // what proves the filter inversion and alpha-ignoring exact: any
     // wrong reconstructed byte would shift a cell sum.
     val bmps = Multimodal.dHashBmp(Multimodal.asMediaFiles(
-        Multimodal.readMedia(spark, "/root/repo/fixtures/images_dhash")))
+        Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images_dhash")))
       .collect().map(r => r.path.split('/').last -> r.dhash).toMap
     for (k <- 0 until 4; s <- Seq("base", "near"))
       assert(rows(s"$s$k.png").dhash == bmps(s"$s$k.bmp"),
@@ -262,7 +262,7 @@ class MultimodalSpec extends SparkSpec {
     // hostile arms direct through the pure parser — every
     // out-of-contract class returns None, never throws
     def bytesOf(n: String) = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"/root/repo/fixtures/images_png/$n"))
+      java.nio.file.Paths.get(s"${SparkEntry.FixturesDir}/images_png/$n"))
     for (n <- Seq("interlaced.png", "deep16.png", "palette.png",
         "badplte.png", "trunc.png", "notpng.png", "tiny_8x4.png",
         "bomb.png", "ia2x.png", "iatrunc.png"))
@@ -308,7 +308,7 @@ class MultimodalSpec extends SparkSpec {
     // self-consistency with the BMP parser on the same grid spec
     assert(parseBmpDHash("x", java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(
-        "/root/repo/fixtures/images_dhash/base3.bmp"))).get.dhash
+        s"${SparkEntry.FixturesDir}/images_dhash/base3.bmp"))).get.dhash
       == parsePngDHash("x", bytesOf("base3.png")).get.dhash)
   }
 
@@ -317,7 +317,7 @@ class MultimodalSpec extends SparkSpec {
       "blocks); out-of-contract files skipped; re-encode parity") {
     import graft.ext.Jpeg
     val files = Multimodal.asMediaFiles(
-      Multimodal.readMedia(spark, "/root/repo/fixtures/images_jpeg"))
+      Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images_jpeg"))
     val rows = Jpeg.dHashJpeg(files).collect()
       .map(r => r.path.split('/').last -> r).toMap
     // progressive.jpg (DC+AC in ONE scan — SOF2-illegal)/arith/prec12/
@@ -391,14 +391,14 @@ class MultimodalSpec extends SparkSpec {
     // Huffman decode, dequant, the integer IDCT, restart handling, or
     // Y placement inside a 4:2:0 MCU would shift a cell sum)
     val bmps = Multimodal.dHashBmp(Multimodal.asMediaFiles(
-        Multimodal.readMedia(spark, "/root/repo/fixtures/images_dhash")))
+        Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images_dhash")))
       .collect().map(r => r.path.split('/').last -> r.dhash).toMap
     for (k <- 0 until 4; s <- Seq("base", "near"))
       assert(rows(s"$s$k.jpg").dhash == bmps(s"$s$k.bmp"),
         s"$s$k: jpeg/bmp hash divergence")
     // hostile arms direct through the pure parser
     def bytesOf(n: String) = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"/root/repo/fixtures/images_jpeg/$n"))
+      java.nio.file.Paths.get(s"${SparkEntry.FixturesDir}/images_jpeg/$n"))
     for (n <- Seq("progressive.jpg", "arith.jpg", "prec12.jpg",
         "trunc.jpg", "notjpeg.jpg", "tiny_8x4.jpg", "progdri.jpg",
         "progtrunc.jpg", "postcombad.jpg"))
@@ -445,7 +445,7 @@ class MultimodalSpec extends SparkSpec {
       "skipped; format parity with the BMP originals") {
     import graft.ext.Multimodal.{dHashTiff, parseTiffDHash}
     val files = Multimodal.asMediaFiles(
-      Multimodal.readMedia(spark, "/root/repo/fixtures/images_tiff"))
+      Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images_tiff"))
     val rows = dHashTiff(files).collect()
       .map(r => r.path.split('/').last -> r).toMap
     // nottiff/lzw(raw-bytes-as-stream)/lzwtrunc/lzwover/deep16/trunc/
@@ -476,13 +476,13 @@ class MultimodalSpec extends SparkSpec {
     // walk, strip reassembly, byte order, or photometric inversion
     // (base3 stores INVERTED samples) shifts a cell sum
     val bmps = Multimodal.dHashBmp(Multimodal.asMediaFiles(
-        Multimodal.readMedia(spark, "/root/repo/fixtures/images_dhash")))
+        Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images_dhash")))
       .collect().map(r => r.path.split('/').last -> r.dhash).toMap
     for (k <- 0 until 4; s <- Seq("base", "near"))
       assert(rows(s"$s$k.tif").dhash == bmps(s"$s$k.bmp"),
         s"$s$k: tiff/bmp hash divergence")
     def bytesOf(n: String) = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"/root/repo/fixtures/images_tiff/$n"))
+      java.nio.file.Paths.get(s"${SparkEntry.FixturesDir}/images_tiff/$n"))
     // p2raw = predictor 2 without LZW (no real writer emits it);
     // p2bad = unknown predictor 3 — both drop
     for (n <- Seq("nottiff.tif", "lzw.tif", "lzwtrunc.tif",
@@ -581,7 +581,7 @@ class MultimodalSpec extends SparkSpec {
       "poster frame); out-of-contract files skipped; format parity") {
     import graft.ext.Gif
     val files = Multimodal.asMediaFiles(
-      Multimodal.readMedia(spark, "/root/repo/fixtures/images_gif"))
+      Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images_gif"))
     val rows = Gif.dHashGif(files).collect()
       .map(r => r.path.split('/').last -> r).toMap
     // notgif/trunc/tiny_8x4/offset_frame/notable all SKIPPED
@@ -595,7 +595,7 @@ class MultimodalSpec extends SparkSpec {
     // palette with inverted indices, so palette application — not
     // index pass-through — is what makes it match
     val bmps = Multimodal.dHashBmp(Multimodal.asMediaFiles(
-        Multimodal.readMedia(spark, "/root/repo/fixtures/images_dhash")))
+        Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images_dhash")))
       .collect().map(r => r.path.split('/').last -> r.dhash).toMap
     for (k <- 0 until 4; s <- Seq("base", "near"))
       assert(rows(s"$s$k.gif").dhash == bmps(s"$s$k.bmp"),
@@ -605,7 +605,7 @@ class MultimodalSpec extends SparkSpec {
     assert(rows("ganim.gif").dhash != bmps("base0.bmp"))
     // hostile arms direct through the pure parser
     def bytesOf(n: String) = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"/root/repo/fixtures/images_gif/$n"))
+      java.nio.file.Paths.get(s"${SparkEntry.FixturesDir}/images_gif/$n"))
     for (n <- Seq("notgif.gif", "trunc.gif", "tiny_8x4.gif",
         "offset_frame.gif", "notable.gif"))
       assert(Gif.parseGifDHash("x", bytesOf(n)).isEmpty, s"$n must skip")
@@ -620,7 +620,7 @@ class MultimodalSpec extends SparkSpec {
       "cross-format parity with the BMP originals") {
     import graft.ext.Vp8l
     val files = Multimodal.asMediaFiles(
-      Multimodal.readMedia(spark, "/root/repo/fixtures/images_webp"))
+      Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images_webp"))
     val rows = Vp8l.dHashWebp(files).collect()
       .map(r => r.path.split('/').last -> r).toMap
     // notwebp/lossy/trunc/predictor/tiny_8x4 all SKIPPED
@@ -634,7 +634,7 @@ class MultimodalSpec extends SparkSpec {
     // the prefix-code reconstruction, LZ77 copy, cache hashing, or
     // subtract-green inversion shifts a cell sum
     val bmps = Multimodal.dHashBmp(Multimodal.asMediaFiles(
-        Multimodal.readMedia(spark, "/root/repo/fixtures/images_dhash")))
+        Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images_dhash")))
       .collect().map(r => r.path.split('/').last -> r.dhash).toMap
     for (k <- 0 until 4) {
       assert(rows(s"webp$k.webp").dhash == bmps(s"base$k.bmp"),
@@ -644,7 +644,7 @@ class MultimodalSpec extends SparkSpec {
     }
     // hostile arms direct through the pure parser
     def bytesOf(n: String) = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"/root/repo/fixtures/images_webp/$n"))
+      java.nio.file.Paths.get(s"${SparkEntry.FixturesDir}/images_webp/$n"))
     for (n <- Seq("notwebp.webp", "lossy.webp", "trunc.webp",
         "predictor.webp", "tiny_8x4.webp"))
       assert(Vp8l.parseVp8lDHash("x", bytesOf(n)).isEmpty, s"$n must skip")
@@ -681,7 +681,7 @@ class MultimodalSpec extends SparkSpec {
       "out-of-contract files skipped") {
     import graft.ext.Multimodal.{aHashAiff, aHashAu, parseAiffAHash,
       parseAuAHash, parseWavAHash}
-    val dir = "/root/repo/fixtures/audio_formats"
+    val dir = s"${SparkEntry.FixturesDir}/audio_formats"
     val aiffs = aHashAiff(Multimodal.asMediaFiles(
         Multimodal.readMedia(spark, dir)))
       .collect().map(r => r.path.split('/').last -> r).toMap
@@ -693,7 +693,7 @@ class MultimodalSpec extends SparkSpec {
     // conventions aside) hashes IDENTICALLY through the shared
     // window spec
     val wavs = Multimodal.aHashWav(Multimodal.asMediaFiles(
-        Multimodal.readMedia(spark, "/root/repo/fixtures/audio_ahash")))
+        Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/audio_ahash")))
       .collect().map(r => r.path.split('/').last -> r.ahash).toMap
     for (k <- 0 until 4; (a, w) <- Seq(("fbase", "abase"), ("fnear", "anear")))
       assert(aiffs(s"$a$k.aif").ahash == wavs(s"$w$k.wav"),
@@ -741,7 +741,7 @@ class MultimodalSpec extends SparkSpec {
       "formulas exactly (lossless re-encode parity); CRCs verified; " +
       "out-of-contract files skipped") {
     import graft.ext.Flac
-    val dir = "/root/repo/fixtures/audio_formats"
+    val dir = s"${SparkEntry.FixturesDir}/audio_formats"
     val rows = Flac.aHashFlac(Multimodal.asMediaFiles(
         Multimodal.readMedia(spark, dir)))
       .collect().map(r => r.path.split('/').last -> r).toMap
@@ -777,7 +777,7 @@ class MultimodalSpec extends SparkSpec {
     // so any slip in rice decode, prediction order, partition sizing,
     // or the escape hatch shifts a window sum
     val wavs = Multimodal.aHashWav(Multimodal.asMediaFiles(
-        Multimodal.readMedia(spark, "/root/repo/fixtures/audio_ahash")))
+        Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/audio_ahash")))
       .collect().map(r => r.path.split('/').last -> r.ahash).toMap
     for (k <- 0 until 4; (c, w) <- Seq(("cbase", "abase"), ("cnear", "anear")))
       assert(rows(s"$c$k.flac").ahash == wavs(s"$w$k.wav"),
@@ -806,7 +806,7 @@ class MultimodalSpec extends SparkSpec {
     import graft.ext.Multimodal.{aHashWav, parseWavAHash}
     import graft.ext.SimSearch
     val files = Multimodal.asMediaFiles(
-      Multimodal.readMedia(spark, "/root/repo/fixtures/audio_ahash"))
+      Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/audio_ahash"))
     val rows = aHashWav(files).collect()
       .map(r => r.path.split('/').last -> r.ahash).toMap
     // short_64 (sub-window) and float32_ah (format 3 claiming 16-bit
@@ -853,7 +853,7 @@ class MultimodalSpec extends SparkSpec {
     // GAIN INVARIANCE: doubling every sample preserves the hash (an
     // exact scalar gain scales both sides of every comparison)
     val orig = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/repo/fixtures/audio_ahash/abase3.wav"))
+      s"${SparkEntry.FixturesDir}/audio_ahash/abase3.wav"))
     val doubled = orig.clone()
     val doff = {
       var i = 12
@@ -873,7 +873,7 @@ class MultimodalSpec extends SparkSpec {
       "a 2x gain must not change the envelope hash")
     // round-19 hostile arms direct through the pure parser
     def bytesOf(n: String) = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"/root/repo/fixtures/audio_ahash/$n"))
+      java.nio.file.Paths.get(s"${SparkEntry.FixturesDir}/audio_ahash/$n"))
     for (n <- Seq("flnan.wav", "adstereo.wav", "adshort.wav",
         "adbadspb.wav", "adbadidx.wav", "float32_ah.wav", "short_64.wav"))
       assert(parseWavAHash("x", bytesOf(n)).isEmpty, s"$n must skip")
@@ -918,7 +918,7 @@ class MultimodalSpec extends SparkSpec {
       "transparent); cross-arc distance 0 vs the GRF1 stub; hostile " +
       "and boundary files skipped") {
     import graft.ext.{Avi, Jpeg}
-    val dir = "/root/repo/fixtures/video_avi"
+    val dir = s"${SparkEntry.FixturesDir}/video_avi"
     val files = Multimodal.asMediaFiles(Multimodal.readMedia(spark, dir))
     val rows = Multimodal.dHashFrames(Avi.aviFrames(files, everyN = 2))
       .collect()
@@ -933,7 +933,7 @@ class MultimodalSpec extends SparkSpec {
     // so any container-walk slip (pad handling, audio-chunk index
     // shift, wrong stream) surfaces as a hash/index mismatch
     val jpgs = Jpeg.dHashJpeg(Multimodal.asMediaFiles(
-        Multimodal.readMedia(spark, "/root/repo/fixtures/images_jpeg")))
+        Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images_jpeg")))
       .collect().map(r => r.path.split('/').last -> r.dhash).toMap
     for ((fi, src) <- Seq(0 -> "base0.jpg", 2 -> "base2.jpg",
         4 -> "base0.jpg"))
@@ -1050,7 +1050,7 @@ class MultimodalSpec extends SparkSpec {
   test("decodeMp4: real ISO-BMFF fixtures decode to spec-exact metadata; hostile files skipped") {
     import graft.ext.Multimodal.{decodeMp4, parseMp4}
     val files = Multimodal.asMediaFiles(
-      Multimodal.readMedia(spark, "/root/repo/fixtures/video"))
+      Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/video"))
     val rows = decodeMp4(files).collect()
       .map(r => r.path.split('/').last -> r).toMap
     // the truncated-moov and non-BMFF files must be absent
@@ -1092,7 +1092,7 @@ class MultimodalSpec extends SparkSpec {
       "a hand-built frame hashes by the shared grid spec") {
     import graft.ext.Multimodal.{FrameRow, dHashFrames}
     val vfiles = Multimodal.asMediaFiles(
-      Multimodal.readMedia(spark, "/root/repo/fixtures/video_vhash"))
+      Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/video_vhash"))
     val hashed = dHashFrames(Multimodal.frameSample(vfiles, 2)).collect()
     // tiny_6x4 (sub-grid) and notvideo (kind 0) contribute nothing
     assert(!hashed.exists(_.path.contains("tiny_6x4")))
@@ -1143,7 +1143,7 @@ class MultimodalSpec extends SparkSpec {
     assert(pairs == Set(("a", "b", 2L)))
     // the fixture set: exactly the generator's asserted six pairs
     val vfiles = Multimodal.asMediaFiles(
-      Multimodal.readMedia(spark, "/root/repo/fixtures/video_vhash"))
+      Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/video_vhash"))
     val hashes = Multimodal.dHashFrames(Multimodal.frameSample(vfiles, 2))
       .toDF()
       .select(regexp_extract($"path", "[^/]+$", 0).as("name"),
@@ -1196,7 +1196,7 @@ class MultimodalSpec extends SparkSpec {
       "blind, minShared boundary exact, complement semantics hold") {
     import graft.ext.Multimodal.{videoNearDupPairs, videoSeqCopyPairs}
     val vfiles = Multimodal.asMediaFiles(
-      Multimodal.readMedia(spark, "/root/repo/fixtures/video_seq"))
+      Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/video_seq"))
     val hashes = Multimodal.dHashFrames(Multimodal.frameSample(vfiles, 2))
       .toDF()
       .select(regexp_extract($"path", "[^/]+$", 0).as("name"),

@@ -6,7 +6,7 @@ import graft.ext.SimSearch
 import graft.plans.CosineSimilarity
 
 /** Custom codegen'd expression: bit-identical to the composed-builtin
-  * fold formulation, SQL-callable after registration.
+  * fold formulation, SQL-callable through the session's GraftExtensions.
   */
 class PlansSpec extends SparkSpec {
   import spark.implicits._
@@ -14,7 +14,6 @@ class PlansSpec extends SparkSpec {
   private lazy val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
 
   test("cosine_sim is bit-identical to the zip_with/aggregate fold recipe") {
-    CosineSimilarity.register(spark)
     val pairs = emb.as("a").join(emb.as("b"), $"a.vec_id" < $"b.vec_id" && $"b.vec_id" < 20)
     val both = pairs.select(
       call_function("cosine_sim", $"a.embedding", $"b.embedding").as("native"),
@@ -27,7 +26,6 @@ class PlansSpec extends SparkSpec {
   }
 
   test("cosine_sim is SQL-callable and null-safe") {
-    CosineSimilarity.register(spark)
     emb.limit(5).createOrReplaceTempView("emb_t")
     val viaSql = spark.sql(
       "SELECT cosine_sim(embedding, embedding) AS c FROM emb_t").as[Double].collect()
@@ -202,8 +200,6 @@ class PlansSpec extends SparkSpec {
   }
 
   test("minhash_sig: interpreted eval == codegen; empty/null-element/null-input semantics") {
-    import graft.plans.MinhashSignature
-    MinhashSignature.register(spark)
     val df = spark.createDataFrame(java.util.List.of(
         org.apache.spark.sql.Row(1, Seq("a b c", "b c d")),
         org.apache.spark.sql.Row(2, Seq("a b c", null)),
@@ -243,6 +239,35 @@ class PlansSpec extends SparkSpec {
       .collect().head
     val (a0, b0) = graft.ext.Dedup.seedPairs(1).head
     assert(one.getLong(0) == java.lang.Math.floorMod(a0 * one.getLong(1) + b0, graft.ext.Dedup.P))
+  }
+
+  test("cosineSim and MinhashSignature.of plan without the function registry") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import graft.plans.{MinhashSignature, UnicodeTokens}
+    val names = Seq(CosineSimilarity.fnName, MinhashSignature.fnName).map(FunctionIdentifier(_))
+    // positive probe: the suite session's builder bound every SQL name
+    (names :+ FunctionIdentifier(UnicodeTokens.fnName)).foreach(n =>
+      assert(spark.sessionState.functionRegistry.functionExists(n), s"$n not bound"))
+    val clone = spark.newSession()
+    val reg = clone.sessionState.functionRegistry
+    names.foreach(n => assert(reg.dropFunction(n), s"$n was not on the clone"))
+    def values(s: SparkSession): (Seq[(Long, Long, Double)], Seq[(Int, Seq[Long])]) = {
+      val e = s.read.parquet(s"$sf0001/embeddings.parquet").filter($"vec_id" < 12)
+      val cos = e.as("a").join(e.as("b"), $"a.vec_id" < $"b.vec_id")
+        .select($"a.vec_id", $"b.vec_id",
+          SimSearch.cosineSim($"a.embedding", $"b.embedding"))
+        .as[(Long, Long, Double)].collect().toSeq.sorted
+      val sig = s.createDataFrame(Seq((1, Seq("a b c", "b c d")), (2, Seq("x y z"))))
+        .toDF("id", "sh")
+        .select($"id", MinhashSignature.of($"sh", 8))
+        .as[(Int, Seq[Long])].collect().toSeq.sortBy(_._1)
+      (cos, sig)
+    }
+    val (cos, sig) = values(clone)
+    assert(cos.nonEmpty && sig.size == 2)
+    assert((cos, sig) == values(spark))
+    names.foreach(n => assert(!reg.functionExists(n), s"$n was registered again on the clone"))
   }
 
   test("GraftExtensions injection applies cleanly to a fresh extensions object") {

@@ -11,7 +11,7 @@ class PqSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val clustered =
-    spark.read.parquet("/root/repo/fixtures/embeddings_clustered.parquet")
+    spark.read.parquet(s"${SparkEntry.FixturesDir}/embeddings_clustered.parquet")
   private lazy val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
 
   test("exact codebook: ADC top-k == brute-force inner-product top-k, row for row") {

@@ -37,37 +37,37 @@ class PropertyExtSpec extends SparkSpec {
     }
     def bytesOf(p: String) = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(p))
-    fuzz(bytesOf("/root/repo/fixtures/images_png/base2.png"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/images_png/base2.png"),
       b => Multimodal.parsePngDHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/images_png/base3.png"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/images_png/base3.png"),
       b => Multimodal.parsePngDHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/images_jpeg/base3.jpg"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/images_jpeg/base3.jpg"),
       b => Jpeg.parseJpegDHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/images_jpeg/base1.jpg"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/images_jpeg/base1.jpg"),
       b => Jpeg.parseJpegDHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/images_dhash/base0.bmp"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/images_dhash/base0.bmp"),
       b => Multimodal.parseBmpDHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/images_gif/base2.gif"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/images_gif/base2.gif"),
       b => graft.ext.Gif.parseGifDHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/images_gif/base3.gif"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/images_gif/base3.gif"),
       b => graft.ext.Gif.parseGifDHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/audio_formats/fbase2.aif"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/audio_formats/fbase2.aif"),
       b => Multimodal.parseAiffAHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/audio_formats/ubase0.au"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/audio_formats/ubase0.au"),
       b => Multimodal.parseAuAHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/images_tiff/base1.tif"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/images_tiff/base1.tif"),
       b => Multimodal.parseTiffDHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/images_tiff/lzw2.tif"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/images_tiff/lzw2.tif"),
       b => Multimodal.parseTiffDHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/images_jpeg/prog2.jpg"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/images_jpeg/prog2.jpg"),
       b => Jpeg.parseJpegDHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/images_webp/webp1.webp"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/images_webp/webp1.webp"),
       b => graft.ext.Vp8l.parseVp8lDHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/images_webp/webp2.webp"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/images_webp/webp2.webp"),
       b => graft.ext.Vp8l.parseVp8lDHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/audio_formats/cbase3.flac"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/audio_formats/cbase3.flac"),
       b => graft.ext.Flac.parseFlacAHash("x", b))
-    fuzz(bytesOf("/root/repo/fixtures/audio_formats/stms.flac"),
+    fuzz(bytesOf(s"${SparkEntry.FixturesDir}/audio_formats/stms.flac"),
       b => graft.ext.Flac.parseFlacAHash("x", b))
   }
 

@@ -289,6 +289,19 @@ class StreamingSpec extends SparkSpec {
       s"queries left active: ${s.streams.active.map(_.id).mkString(", ")}")
   }
 
+  test("a failed start reaches the caller past the cleanup of a dir it never made") {
+    // top10ReplayUpdate's shape: its store dir is first written by the
+    // first non-empty batch, and its `finally` deletes it
+    val store = java.nio.file.Files.createTempDirectory("graft-fail-cleanup").resolve("store")
+    val e = intercept[IllegalStateException] {
+      try StreamingReports.replayWaves("graft-fail-start",
+          Seq(StreamingReports.render("wave1", spark.range(3).toDF("id"))))(_ =>
+        throw new IllegalStateException("start failed"))
+      finally StreamingReports.deleteRecursively(store)
+    }
+    assert(e.getMessage == "start failed")
+  }
+
   test("funnelReplay (the q124 surface) == q114_funnel at sf0.001") {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"stage".cast("long"), $"n_users").as[(Long, Long)].collect().toSet
@@ -508,7 +521,7 @@ class StreamingSpec extends SparkSpec {
 
   test("cdcUpsertReplay equals the batch latest-event-per-resource truth") {
     import graft.streaming.StreamingReports
-    val dir = "/root/repo/fixtures/events_json"
+    val dir = s"${SparkEntry.FixturesDir}/events_json"
     val (replayed, batches) = withMicrobatches(StreamingReports.cdcUpsertReplay(spark, dir))
     assert(batches == 2, s"one microbatch per wave, got $batches")
     val got = replayed.as[(String, Long, String, String, Long)].collect().toSet
@@ -687,7 +700,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.ext.Multimodal
     val hashes = Multimodal.dHashBmp(Multimodal.asMediaFiles(
-        Multimodal.readMedia(spark, "/root/repo/fixtures/images_dhash")))
+        Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images_dhash")))
       .toDF()
       .select(regexp_extract($"path", "[^/]+$", 0).as("name"), $"dhash")
     val waveA = !$"name".isin("near1.bmp", "near2.bmp", "near3.bmp")
@@ -714,7 +727,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.ext.Multimodal
     val hashes = Multimodal.dHashBmp(Multimodal.asMediaFiles(
-        Multimodal.readMedia(spark, "/root/repo/fixtures/images_dhash")))
+        Multimodal.readMedia(spark, s"${SparkEntry.FixturesDir}/images_dhash")))
       .toDF()
       .select(regexp_extract($"path", "[^/]+$", 0).as("name"), $"dhash")
     val waveA = !$"name".isin("near1.bmp", "near2.bmp", "near3.bmp")
@@ -742,7 +755,6 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.ext.{Dedup, SimSearch}
     import graft.streaming.StreamingReports
-    graft.plans.CosineSimilarity.register(spark)
     val base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select($"vec_id", $"embedding")
     def scaled(k: Float, off: Long, m: Long) = base
