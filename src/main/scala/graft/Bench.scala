@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.DataFrame
 
+import graft.catalog.QuerySpec
+
 /** Benchmark main — one JSON line on stdout (driver contract).
   *
   * Methodology (round-1 + round-2 judge fixes):
@@ -96,7 +98,8 @@ object Bench {
     * integer seconds — the worse trade for regression tracking, since
     * most of the suite is sub-second. Policy: the contract map is
     * FROZEN at the round-6 set (stable per-query comparisons across
-    * rounds); round-7+ additions land here. Their shapes are
+    * rounds); round-7+ additions land here. The round-6 set is exactly
+    * q1–q89, so membership is the name's ordinal (≥ 90). Their shapes are
     * represented on the tracked map (q90/q94 CDC merge ≈ q75's full
     * outer + q16's join+agg; q91 mixture ≈ q58 sampling; q92 canonical
     * ≈ q55 clustering; q93 rarity ≈ q59 tf-idf skeleton; q95 salted
@@ -105,107 +108,8 @@ object Bench {
     * on the detail line, and BASELINE.md records them per round.
     * Revisit if the driver's tail window ever grows.
     */
-  val DetailOnlyQueries: Set[String] = Set(
-    "q90_merge", "q91_mix_bal", "q92_canon", "q93_rarity",
-    "q94_cdc", "q95_salt_join", "q96_topk_agg", "q97_inc_agg", "q98_scd2",
-    "q99_cdc_stream", "q100_sample_n", "q101_skew_profile", "q102_neg_pairs",
-    "q103_diff", "q104_pipeline_v2", "q105_ngram_hotspots", "q106_bpe_pairs",
-    "q107_priority_sample", "q108_span_merge", "q109_compaction_plan",
-    "q110_pagerank", "q111_cooc_lift", "q112_audience_overlap", "q113_retention",
-    "q114_funnel", "q115_boundary_dups", "q116_spike", "q117_attribution",
-    "q118_quality_rules", "q119_trend_slope", "q120_equidepth",
-    "q121_apportion", "q122_budget_mixture", "q123_heavy_hitters_contract",
-    "q124_funnel_stream", "q125_ewma", "q126_table_checksum",
-    "q127_top_p", "q128_transitions", "q129_zorder_tiles", "q130_fk_audit",
-    "q131_grain_check", "q132_winsorize", "q133_gap_fill",
-    "q134_scale_minmax", "q135_vocab", "q136_path_trigrams",
-    "q137_skyline", "q138_dist_drift", "q139_corr", "q140_hier_share",
-    "q141_transitions_stream", "q142_concurrency", "q143_mad", "q144_benford",
-    "q145_quantile_sketch_contract", "q146_densify_days",
-    "q147_inverted_index", "q148_bounce", "q149_weighted_median",
-    "q150_daily_bands", "q151_topn_other", "q152_twa",
-    "q153_minhash_sets_contract", "q154_orc_roundtrip", "q155_csv_roundtrip",
-    "q156_pack_stats", "q157_dup_sources", "q158_tree_paths",
-    "q159_session_gaps", "q160_prorata", "q161_rolling_distinct_contract",
-    "q162_interpolate", "q163_conversion_latency", "q164_clamped_balance",
-    "q165_decile_lift", "q166_equidepth_sampled", "q167_daily_bands_hist",
-    "q168_mad_hist", "q169_winsorize_sampled", "q170_wav_decode",
-    "q171_ann_recall_clustered", "q172_audio_report", "q173_repeated_spans",
-    "q174_idx_delete", "q175_ivf_delete", "q176_repetition_burden",
-    "q177_centroid_drift", "q178_bmp_decode", "q179_image_report",
-    "q180_cdc_time_travel", "q181_file_lineage", "q182_quarantine",
-    "q183_schema_evolution", "q184_mp4_meta", "q185_quarantine_stream",
-    "q186_inc_clusters", "q187_ivf_append", "q188_hard_negatives",
-    "q189_refresh_capstone", "q190_crawl_ingest_stream",
-    "q191_pq_adc_topk", "q192_pq_recall", "q193_pq_stored_append",
-    "q194_ivfpq_exact", "q195_ivfpq_recall", "q196_asof_native",
-    "q197_bpe_train", "q198_bpe_encode", "q199_bpe_stored",
-    "q200_ivfpq_stored", "q201_asof_fresh", "q202_ngram_novelty",
-    "q203_hamming_topk", "q204_hamming_rerank", "q205_graph_walks",
-    "q206_bpe_fertility", "q207_cosine_fused", "q208_novelty_stream",
-    "q209_skipgram_pairs", "q210_negative_samples", "q211_node_features",
-    "q212_graph_walks_bucketed", "q213_url_canon", "q214_host_rollup",
-    "q215_crawl_url_dedup", "q216_crawl_staged_dedup", "q217_host_budget",
-    "q218_url_canon_stream", "q219_link_graph", "q220_host_pagerank",
-    "q221_linkgraph_incremental", "q222_ngram_decontaminate",
-    "q223_robots_filter", "q224_ann_stream_probe", "q225_dataset_card",
-    "q226_html_extract", "q227_crawl_text_capstone", "q228_lm_quality",
-    "q229_politeness_schedule", "q230_jsonl_roundtrip",
-    "q231_lm_stored", "q232_html_extract_stream", "q233_markup_stats",
-    "q234_intake_capstone", "q235_boilerplate_paras", "q236_http_parse",
-    "q237_sitemap_frontier", "q238_resolve_links", "q239_robots_parse",
-    "q240_robots_pipeline", "q241_http_chunked", "q242_redirect_chains",
-    "q243_anchor_text", "q244_canonical_override", "q245_crawl_delays",
-    "q246_recrawl_schedule", "q247_delay_schedule",
-    "q248_http_parse_stream", "q249_link_density",
-    "q250_domain_budget", "q251_conditional_fetch",
-    "q252_content_drift", "q253_cache_policy", "q254_retry_backoff",
-    "q255_crawl_traps", "q256_recrawl_stream", "q257_refresh_plan",
-    "q258_gopher_quality", "q259_script_profile",
-    "q260_repetition_rules", "q261_para_dedup", "q262_budget_select",
-    "q263_gopher_stream", "q264_corpus_capstone", "q265_c4_rules",
-    "q266_norm_dedup", "q267_nb_classifier", "q268_dsir_select",
-    "q269_warc_split", "q270_file_skipping", "q271_c4_stream",
-    "q272_archive_intake", "q273_bitext_mine", "q274_c4_span_dedup",
-    "q275_norm_decontaminate", "q276_frontier_rank", "q277_ppl_buckets",
-    "q278_nb_incremental", "q279_script_stream",
-    "q280_web_corpus_capstone", "q281_chat_template", "q282_warc_stream",
-    "q283_preference_pairs", "q284_pack_masks", "q285_chat_stream",
-    "q286_trunc_recall", "q287_decon_report",
-    "q288_unicode_tokens", "q289_unicode_norm_dedup",
-    "q290_unicode_jaccard", "q291_unicode_gopher",
-    "q292_script_profile_multi", "q293_unicode_minhash",
-    "q294_unicode_stream", "q295_nfc_dedup",
-    "q296_stopword_discovery", "q297_ml_dedup_capstone",
-    "q298_mixed_script_words", "q299_unicode_sentences",
-    "q300_ml_span_dedup", "q301_lang_calibrated_gopher",
-    "q302_unicode_tokens_sql", "q303_nfc_stream",
-    "q304_invisible_scrub", "q305_confusable_dedup", "q306_gzip_inflate", "q307_charset_transcode", "q308_fetch_decode", "q309_encoding_damage", "q310_semdedup",
-    "q311_fetch_decode_stream", "q312_warc_fetch_corpus", "q313_semdedup_canonical", "q314_utf16_fetch", "q315_semdedup_incremental", "q316_semdedup_stream", "q317_charset_matrix",
-    "q318_bytes_intake", "q319_semdedup_exactly_once", "q320_ivf_rebalance",
-    "q321_zstd_inflate", "q322_fetch_zstd", "q323_fetch_chunked",
-    "q324_semdedup_compact_store", "q325_image_dhash", "q326_image_neardup",
-    "q327_audio_ahash", "q328_audio_neardup", "q329_utf32_fetch",
-    "q330_intake_damage", "q331_video_vhash", "q332_video_neardup",
-    "q333_bloom_decontaminate", "q334_hamming_dedup_stream",
-    "q335_video_seq_copies", "q336_pr_curve", "q337_robots_meta",
-    "q338_pr_curve_incremental", "q339_xrobots_header",
-    "q340_length_batches", "q341_cdc_chunks", "q342_chunk_dedup",
-    "q343_chunk_overlap_dedup", "q344_store_fsck",
-    "q345_weighted_interleave", "q346_robots_policy_stack",
-    "q347_store_fsck_repair", "q348_curriculum_schedule",
-    "q349_schedule_audit", "q350_embedding_drift",
-    "q351_drift_incremental", "q352_fetch_text_plain",
-    "q353_drift_stream", "q354_hamming_exactly_once",
-    "q355_sized_interleave_audit", "q356_sized_curriculum_audit",
-    "q357_png_dhash", "q358_crossformat_neardup",
-    "q359_jpeg_dhash", "q360_reencode_triple",
-    "q361_gif_dhash", "q362_reencode_quad",
-    "q363_reencode_ingest_stream", "q364_aiff_ahash", "q365_au_ahash",
-    "q366_audio_reencode", "q367_tiff_dhash", "q368_reencode_quint",
-    "q369_webp_dhash", "q370_reencode_sext", "q371_flac_ahash",
-    "q372_reencode_sext_stream", "q373_exif_orient",
-    "q374_avi_vhash", "q375_video_crossarc")
+  lazy val DetailOnlyQueries: Set[String] =
+    SparkEntry.queries.keySet.filter(QuerySpec.ordinal(_) >= 90)
 
   /** The COMPLETE per-query artifact (round-11 judge ask): the driver's
     * BENCH_r{N}.json is a ~2000-byte stdout tail, so the 136 detail-only

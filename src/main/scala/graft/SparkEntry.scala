@@ -1,16052 +1,31 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ext.{Dedup, SimHash, SimSearch, TextAnalysis}
-import graft.functions.ColumnLib._
-import graft.jobs.{PlatformUsageJob, RoyaltiesJob, Top10Job}
-import graft.operators.{GroupShare, TopK}
-import graft.sources.Sources
-import graft.tables.Corpus
+import graft.catalog._
 
-/** Query catalog contract — see SURVEY.md §7.
-  *
-  * Every query takes (spark, sfDir) and reads parquet tables from sfDir.
-  * Numeric convention for oracle hash-parity: aggregate in exact DECIMAL,
-  * cast the final value to DOUBLE (both Spark and DuckDB produce the
-  * identical IEEE-754 double from the same exact decimal); never sum raw
-  * doubles (fold order would make the result nondeterministic). Ratios
-  * are taken in double, with textually identical operand order on both
-  * sides.
+/** The query catalog's index: every family's specs, checked for distinct
+  * names, and the two name-keyed views the drivers read. Each query's
+  * body and oracle live together in one `catalog/` family object.
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Corpus.load(s, dir, name)
+  val FixturesDir: String = Shared.FixturesDir
 
-  /** q336/q338 shared scored corpus: score = en-stopword hit ppm
-    * (ONE tokenizer run behind a Generate barrier — the q215 no-CSE
-    * rule), label = the certified withLangGuess == 'en'. One
-    * definition so the incremental curve scores the same corpus the
-    * one-shot does.
-    */
-  private def prScoredDocs(s: SparkSession, dir: String): DataFrame = {
-    val id = col("doc_id")
-    val docs = t(s, dir, "documents").select(id, col("text"))
-      .repartition(32, id)
-    val enList = TextAnalysis.LangProfiles.head._2
-    val staged = docs.select(id,
-      explode_outer(array(TextAnalysis.tokens(col("text")))).as("__toks"))
-    val hits = size(filter(col("__toks"),
-      t => t.isin(enList: _*))).cast("long")
-    val total = size(col("__toks")).cast("long")
-    val score = when(total <= 0L, lit(0L))
-      .otherwise(((hits * 1000000L - pmod(hits * 1000000L, total)) / total)
-        .cast("long"))
-    val lang = TextAnalysis.withLangGuess(docs, "text", "__lang")
-      .select(id, (col("__lang") === "en").as("label"))
-    staged.select(id, score.as("score")).join(lang, Seq("doc_id"))
-  }
+  val specs: Seq[QuerySpec] = Seq(ReportQueries.specs, AnalyticsQueries.specs,
+    OperatorQueries.specs, DedupQueries.specs, AnnQueries.specs, TextQueries.specs,
+    UnicodeQueries.specs, CrawlQueries.specs, IntakeQueries.specs,
+    MediaQueries.specs).flatten
+  require(specs.map(_.name).distinct.size == specs.size,
+    s"duplicate query names: ${specs.groupBy(_.name).filter(_._2.size > 1).keys}")
 
-  /** Deterministic messy-URL fixture for q213-q215: every `documents`
-    * row gets one raw fetch URL with case/default-port/query-order/
-    * trailing-slash/fragment variation driven by doc_id residues, plus
-    * a non-URL arm (doc_id %17) that must canonicalize to NULL. The
-    * oracle rebuilds the identical strings with the same CASE chains.
-    */
-  private def urlFixture(docs: DataFrame): DataFrame = {
-    val url0 = concat(
-      when(col("doc_id") % 3 === 0, lit("HTTP"))
-        .when(col("doc_id") % 3 === 1, lit("https")).otherwise(lit("http")),
-      lit("://"),
-      when(col("doc_id") % 2 === 0, concat(lit("WWW."), upper(col("source"))))
-        .otherwise(concat(lit("www."), col("source"))),
-      lit(".Example.COM"),
-      when(col("doc_id") % 5 === 0, lit(":80"))
-        .when(col("doc_id") % 5 === 1, lit(":443"))
-        .when(col("doc_id") % 5 === 2, lit(":8080")).otherwise(lit("")),
-      lit("/Docs/"), (col("doc_id") % 50).cast("string"),
-      when(col("doc_id") % 7 === 0, lit("/")).otherwise(lit("")),
-      when(col("doc_id") % 4 === 0, lit("?b=2&a=1"))
-        .when(col("doc_id") % 4 === 1, lit("?a=1&b=2")).otherwise(lit("")),
-      when(col("doc_id") % 13 === 0, lit("#Frag")).otherwise(lit("")))
-    docs.select(col("doc_id"), col("n_chars"),
-      when(col("doc_id") % 17 === 0, concat(lit("not a url "), url0))
-        .otherwise(url0).as("url"))
-  }
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.body).toMap
 
-  /** Hostile-HTML fixture for q226/q227: every `documents` row wrapped
-    * in a page whose structure varies by doc_id residues across the
-    * attack surface HtmlExtract claims to survive — script bodies
-    * containing '<'/'>'/quotes (%4=0), style with a '>' selector
-    * (%4=1), a comment hiding tags (%4=2), an UNCLOSED trailing script
-    * (%4=3), an entity run (%6=0), and a truncated-fetch unclosed tag
-    * at EOS (%9=0). The oracle rebuilds the identical strings with the
-    * same CASE chains and runs the identical RE2 extraction.
-    */
-  private def htmlFixture(docs: DataFrame): DataFrame = {
-    val id = col("doc_id")
-    docs.select(id, concat(
-      lit("<!DOCTYPE html><html><head><title>Doc "), id.cast("string"),
-      lit("</title>"),
-      when(id % 4 === 0,
-        lit("<script type=\"text/javascript\">if(a<b){x=\"</div>y\";}</script>"))
-        .when(id % 4 === 1, lit("<style>p > a { content: \"<q>\"; }</style>"))
-        .otherwise(lit("")),
-      lit("</head><body>"),
-      when(id % 4 === 2, lit("<!-- nav <ul><li>home</li></ul> -->"))
-        .otherwise(lit("")),
-      lit("<div class=\"main\"><p>"), col("text"), lit("</p>"),
-      when(id % 6 === 0, lit("<p>&lt;cite&gt;&nbsp;&amp; more&#39;</p>"))
-        .otherwise(lit("")),
-      // numeric character references (round 13): decimal, hex (mixed
-      // case), the amp-last trap (&#38;lt; must yield literal '&lt;'),
-      // and a named-set addition (&hellip;)
-      when(id % 10 === 7,
-        lit("<p>&#8220;Q&#8221; &#8212; it&#x2019;s &#38;lt;ok&#x3E;&#160;fine&hellip;</p>"))
-        .otherwise(lit("")),
-      lit("</div></body></html>"),
-      when(id % 9 === 0, lit("<a href=\"trunc")).otherwise(lit("")),
-      when(id % 4 === 3, lit("<script>tail();")).otherwise(lit("")))
-      .as("html"))
-  }
-
-  /** q308/q311 SHARED inflate cap for the fetch-decode fixture: ok-arm
-    * payloads top out at 647 bytes and the %14=13 bomb arm at ≥ 2200
-    * (repeat×50 of the ≥44-byte min text) at every SF — both margins
-    * hold, so the cap splits the arms identically everywhere.
-    */
-  private val FetchMaxBytes = 2000
-
-  /** q308/q311 SHARED fetch-decode fixture (the htmlFixture rule — one
-    * builder so the batch query and its streaming twin cannot drift):
-    * (doc_id, raw) HTTP response records as REAL bytes. Arms
-    * (doc_id % 14): 0 undeclared utf-8, 1 gzip + header cp1252 (é AND
-    * €), 2 zlib deflate + META-sniffed shift_jis, 3 BOM beating a
-    * LYING shift_jis header, 4 undeclared cp1252 (lenient fallback),
-    * 5 WRONG utf-8 declaration over cp1252 bytes (lenient U+FFFD), 6
-    * 404, 7 wrong media type, 8 unsupported CE (br), 9 chunked TE, 10
-    * corrupt gzip, 11 unsupported declared charset, 12 no status line,
-    * 13 gzip bomb vs [[FetchMaxBytes]].
-    *
-    * ASCII DEPENDENCE (shared with q307/q312/q317/q318, like the q293
-    * band-miss note): the closed-form oracles assume documents.text is
-    * pure ASCII — an unmappable character would NULL the in-plan
-    * encode (routing 'malformed' where the oracle says 'ok'), and the
-    * arm-5 mirror (`text || chr(65533) || '!'`) assumes the text mints
-    * no extra U+FFFDs. Verified 0 non-ASCII docs at every shipped SF;
-    * guarded TWICE (round 17): FetchDecodeSpec's shipped-SF scan, and
-    * an in-plan `raise_error` at fixture-BUILD time below — a corpus
-    * retune that plants non-ASCII text fails the very first Verify
-    * run with a doc_id-bearing message instead of silently
-    * hash-mismatching four queries.
-    */
-  private[graft] def fetchFixture(docs: DataFrame): DataFrame = {
-    import graft.ext.FetchDecode
-    import graft.plans.{Inflate, Transcode}
-    val id = col("doc_id")
-    val a = id % 14
-    def mkHead(lines: String*) = lit(lines.mkString("", "\r\n", "\r\n\r\n"))
-    val okHtml = mkHead("HTTP/1.1 200 OK", "Content-Type: text/html")
-    val gzHead = mkHead("HTTP/1.1 200 OK", "Content-Type: text/html",
-      "Content-Encoding: gzip")
-    val sfx1252 = concat(col("text"), lit(" caf\u00E9 \u20AC9"))
-    val html2 = concat(
-      lit("<html><head><meta charset=shift_jis></head><body>"),
-      col("text"), lit(" \u30AB\u30D5\u30A7</body></html>"))
-    val headCol =
-      when(a === 1, mkHead("HTTP/1.1 200 OK",
-        "Content-Type: text/html; charset=windows-1252",
-        "Content-Encoding: gzip"))
-        .when(a === 2, mkHead("HTTP/1.1 200 OK",
-          "Content-Type: text/html", "Content-Encoding: deflate"))
-        .when(a === 3, mkHead("HTTP/1.1 200 OK",
-          "Content-Type: text/html; charset=shift_jis"))
-        .when(a === 5, mkHead("HTTP/1.1 200 OK",
-          "Content-Type: text/html; charset=utf-8"))
-        .when(a === 6, mkHead("HTTP/1.1 404 Not Found",
-          "Content-Type: text/html"))
-        .when(a === 7, mkHead("HTTP/1.1 200 OK",
-          "Content-Type: application/json"))
-        .when(a === 8, mkHead("HTTP/1.1 200 OK",
-          "Content-Type: text/html", "Content-Encoding: br"))
-        .when(a === 9, mkHead("HTTP/1.1 200 OK",
-          "Content-Type: text/html", "Transfer-Encoding: chunked"))
-        .when(a === 10 || a === 13, gzHead)
-        .when(a === 11, mkHead("HTTP/1.1 200 OK",
-          "Content-Type: text/html; charset=utf-7"))
-        .otherwise(okHtml)
-    val bom = to_binary(lit("efbbbf"), lit("hex"))
-    val body =
-      when(a === 1,
-        Inflate.gzipCompress(Transcode.encode(sfx1252,
-          lit("windows-1252"))))
-        .when(a === 2,
-          Inflate.zlibCompress(Transcode.encode(html2, lit("shift_jis"))))
-        .when(a === 3, concat(bom,
-          concat(col("text"), lit(" caf\u00E9")).cast("binary")))
-        .when(a === 4, Transcode.encode(
-          concat(col("text"), lit(" caf\u00E9")), lit("windows-1252")))
-        .when(a === 5, Transcode.encode(
-          concat(col("text"), lit(" caf\u00E9!")), lit("windows-1252")))
-        .when(a === 10, lit("junkjunk").cast("binary"))
-        .when(a === 13,
-          Inflate.gzipCompress(repeat(col("text"), 50).cast("binary")))
-        .otherwise(col("text").cast("binary"))
-    val raw = when(a === 12, col("text").cast("binary"))
-      .otherwise(FetchDecode.responseRecord(headCol, body))
-    docs.select(id, when(asciiGuard("fetchFixture", id).isNull, raw).as("raw"))
-  }
-
-  /** The fetch-family ASCII-dependence guard (round 17), evaluated
-    * per row at fixture-BUILD time: NULL (a no-op inside
-    * `when(guard.isNull, value)`) while `text` is pure ASCII, a
-    * loud doc_id-bearing `raise_error` the moment a corpus retune
-    * plants a non-ASCII doc — instead of a legacy-charset encode
-    * NULLing in-plan and silently hash-mismatching the closed-form
-    * q307/q308/q311/q312/q317/q318 oracles. One definition, applied
-    * at every builder of the family.
-    */
-  private def asciiGuard(site: String, id: Column): Column =
-    when(col("text").rlike("[^\\x00-\\x7F]"),
-      raise_error(concat(
-        lit(s"$site: non-ASCII documents.text at doc_id="),
-        id.cast("string"),
-        lit(" — the fetch-family closed-form oracles require ASCII " +
-          "fixture text (see fetchFixture scaladoc)"))))
-
-  /** q310/q313 SHARED SemDeDup fixture (one builder so the min-id and
-    * scored-keeper variants cannot drift): the embeddings corpus plus
-    * power-of-2 scalar-multiple copies (×2 at %7 → +100000, ×4 at
-    * %14 → +200000) — float-exact in both engines, so every copy's
-    * cosine to every vector is bit-identical to its base's (the
-    * cannot-split-across-clusters argument lives at q310/Dedup
-    * .semDedup).
-    */
-  private def semCorpus(base0: DataFrame): DataFrame = {
-    val base = base0.select(col("vec_id"), col("embedding"))
-    def scaled(k: Float, off: Long, m: Long) = base
-      .filter(col("vec_id") % m === 0)
-      .select((col("vec_id") + off).as("vec_id"),
-        transform(col("embedding"), x => x * lit(k)).as("embedding"))
-    base.unionByName(scaled(2.0f, 100000L, 7L))
-      .unionByName(scaled(4.0f, 200000L, 14L))
-      .repartition(32, col("vec_id"))
-  }
-
-  /** The q223/q229 robots policy fixture — ONE Scala site so the
-    * composed politeness capstone cannot drift from the compliance
-    * stage it composes: 20 hosts × ('/': allow, '/Docs/<i%7>': deny,
-    * '/Docs/<i%7>7': allow-override beneath it — precedence three
-    * levels deep).
-    */
-  private def robotsRulesFixture(s: SparkSession): DataFrame =
-    s.range(0, 20).selectExpr(
-      "concat('www.src', CAST(id AS STRING), '.example.com') AS host",
-      "inline(array(" +
-        "struct('/' AS prefix, true AS allow), " +
-        "struct(concat('/Docs/', CAST(id % 7 AS STRING)) AS prefix, false AS allow), " +
-        "struct(concat('/Docs/', CAST(id % 7 AS STRING), '7') AS prefix, true AS allow)))")
-
-  /** Raw HTTP-response fixture shared by q236 (batch parse) and q248
-    * (streaming twin): status/content-type/transfer-encoding/separator
-    * arms keyed on doc_id residues — 404s, PDFs, LF-only separators
-    * (malformed), no status line (malformed), mixed-case Content-Type,
-    * charset present and absent, and a chunked Transfer-Encoding arm
-    * that must route bad_encoding. Mirrored in [[HttpParseSql]]'s rawr
-    * CTE.
-    */
-  /** q246/q256 shared fetch-history fixture: five revisit rounds per
-    * URL with fingerprints flipping every `period = 1 + doc_id%4`
-    * rounds (%5=0 urls never change) — each url's change count is
-    * closed-form in its residues, mirrored in the q246 oracle the
-    * streaming twin reuses verbatim.
-    */
-  private def recrawlFixture(docs: DataFrame): DataFrame = docs
-    .select(col("doc_id"), explode(sequence(lit(1), lit(5))).as("r"))
-    .select(
-      concat(lit("http://www.src"), (col("doc_id") % 20).cast("string"),
-        lit(".example.com/Docs/"), col("doc_id").cast("string")).as("url"),
-      col("r").cast("long").as("r"),
-      when(col("doc_id") % 5 === 0, lit("0"))
-        .otherwise(expr("CAST(r DIV (1 + doc_id % 4) AS STRING)"))
-        .as("fp"))
-
-  /** q253/q257 shared response-header fixture (doc_id → raw): six
-    * RFC 9111 arms — max-age arithmetic, no-store beating max-age
-    * (plus a junk `Expires: 0`), no-cache, Expires−Date as pure HH:MM
-    * arithmetic, a PAST Expires, the 10% heuristic, and a header-bare
-    * 404. Every mode and TTL closed-form in the residues.
-    */
-  private def cacheRawFixture(docs: DataFrame): DataFrame = {
-    val id = col("doc_id")
-    val hh = lpad((id % 10).cast("string"), 2, "0")
-    val mm = (lit(10) + id % 50).cast("string")
-    val h2 = lpad((id % 24).cast("string"), 2, "0")
-    val armHeaders = when(id % 6 === 0,
-        concat(lit("\r\nCache-Control: public, max-age="),
-          ((id % 97) * 10).cast("string")))
-      .when(id % 6 === 1,
-        lit("\r\nCache-Control: no-store, max-age=600\r\nExpires: 0"))
-      .when(id % 6 === 2, lit("\r\nCache-Control: private, no-cache"))
-      .when(id % 12 === 3, concat(lit("\r\nExpires: Mon, 12 Jan 2026 "),
-        hh, lit(":"), mm, lit(":00 GMT")))
-      .when(id % 12 === 9,
-        lit("\r\nExpires: Sun, 11 Jan 2026 23:59:00 GMT"))
-      .otherwise(concat(lit("\r\nLast-Modified: Sun, 11 Jan 2026 "),
-        h2, lit(":00:00 GMT")))
-    val raw = when(id % 6 === 5,
-        lit("HTTP/1.1 404 Not Found\r\nContent-Type: text/html\r\n\r\ngone"))
-      .otherwise(concat(
-        lit("HTTP/1.1 200 OK\r\nDate: Mon, 12 Jan 2026 00:00:00 GMT"),
-        armHeaders, lit("\r\nContent-Type: text/html\r\n\r\n<p>ok</p>")))
-    docs.select(id, raw.as("raw"))
-  }
-
-  /** Nine-arm gopher-quality fixture (q258 + its streaming twin
-    * q263): every metric closed-form in the residues — see the q258
-    * entry comment for the arm-by-arm design.
-    */
-  private def gopherFixture(docs: DataFrame): DataFrame = {
-    val id = col("doc_id")
-    val w = lit(50) + id % 100
-    val b = lit(1) + id % 30
-    val x = id % 10
-    val plain = concat(repeat(lit("word "), lit(18)), lit("the and"))
-    val text = when(id % 9 === 0,
-        concat(repeat(lit("word "), w), lit("the and")))
-      .when(id % 9 === 1,
-        concat(repeat(lit("word "), b), lit("the and")))
-      .when(id % 9 === 2,
-        concat(repeat(lit("abcdefghijklmno "), w), lit("the and")))
-      .when(id % 9 === 3, concat(repeat(lit("ab "), w), lit("the and")))
-      .when(id % 9 === 4,
-        concat(repeat(lit("wordy # "), w), lit("the and")))
-      .when(id % 9 === 5,
-        concat(repeat(lit("word "), lit(58)), lit("the and"),
-          repeat(lit("\n- item one two"), b)))
-      .when(id % 9 === 6,
-        concat(concat_ws("\n", array_repeat(plain, lit(10))),
-          when(x > 0, concat(lit("\n"),
-            concat_ws("\n",
-              array_repeat(lit("word word more..."), x.cast("int")))))
-            .otherwise(lit(""))))
-      .when(id % 9 === 7,
-        concat(repeat(lit("1234 "), w), lit("the and")))
-      .otherwise(repeat(lit("word "), w))
-    docs.select(id).repartition(32).select(id, text.as("text"))
-  }
-
-  /** WARC archive-blob fixture (q269): R = 1+id%3 records per blob,
-    * payload r = repeat('p', 5+(id+r)%7), uri/type arithmetic in
-    * (id, r). Arms on m = id%10: m=6 lowercase header names (parse is
-    * case-insensitive); m=7 junk bytes after the last record
-    * (bad_magic, all R records still emitted); m=8 the LAST record's
-    * Content-Length overdeclared by 3 (bad_length, R−1 records); m=9
-    * the last record missing Content-Length (bad_header, R−1 — and
-    * R=1 blobs emit ZERO records, exercising the null record row).
-    */
-  private def warcBlobFixture(docs: DataFrame): DataFrame = {
-    val id = col("doc_id")
-    val m = id % 10
-    val nRecs = (lit(1) + id % 3).cast("int")
-    def hn(canon: String): Column =
-      when(m === 6, lit(canon.toLowerCase)).otherwise(lit(canon))
-    def recOf(r: Column): Column = {
-      val len = (lit(5) + pmod(id + r, lit(7))).cast("int")
-      val badLast = (m === 8) && (r === nRecs - 1)
-      val omitCl = (m === 9) && (r === nRecs - 1)
-      val clVal = when(badLast, len + 3).otherwise(len).cast("string")
-      val clLine = when(omitCl, lit("")).otherwise(
-        concat(hn("Content-Length"), lit(": "), clVal, lit("\r\n")))
-      concat(lit("WARC/1.0\r\n"),
-        hn("WARC-Type"), lit(": "),
-        when(pmod(r, lit(2)) === 0, lit("response")).otherwise(lit("request")),
-        lit("\r\n"),
-        hn("WARC-Target-URI"), lit(": http://www.src"),
-        (id % 20).cast("string"), lit(".example.com/Docs/"),
-        id.cast("string"), lit("/"), r.cast("string"), lit("\r\n"),
-        clLine, lit("\r\n"),
-        repeat(lit("p"), len), lit("\r\n\r\n"))
-    }
-    val blob = concat(
-      array_join(transform(sequence(lit(0), nRecs - 1), r => recOf(r)), ""),
-      when(m === 7, lit("JUNKJUNKJUNK")).otherwise(lit("")))
-    docs.select(id).repartition(32).select(id, blob.as("blob"))
-  }
-
-  /** Eight-arm C4 fixture shared by q265 (batch) and q271 (streaming
-    * twin) — see the q265 entry comment for the arm design.
-    */
-  private def c4Fixture(docs: DataFrame): DataFrame = {
-    val id = col("doc_id")
-    val a = id % 8
-    val g = (lit(3) + id % 5).cast("int")
-    val b = (lit(1) + id % 4).cast("int")
-    val gl = lit("alpha beta gamma delta.")
-    val goods = concat_ws("\n", array_repeat(gl, g))
-    def rep(l: Column, n: Column): Column =
-      concat_ws("\n", array_repeat(l, n))
-    val text = when(a === 0, goods)
-      .when(a === 1, regexp_replace(
-        concat(goods, lit("\n"),
-          rep(lit("  no terminal punct here "), b)), "\n", "\r\n"))
-      .when(a === 2, concat(goods, lit("\n"), rep(lit("too small."), b)))
-      .when(a === 3, concat(goods, lit("\n"),
-        rep(lit("please enable javascript support."), b)))
-      .when(a === 4, concat(goods, lit("\nlorem ipsum dolor sit amet.")))
-      .when(a === 5, concat(goods, lit("\nfunction() { return; }")))
-      .when(a === 6, concat(goods, lit("\ndarn badword1 here { too.")))
-      .otherwise(concat_ws("\n", array_repeat(gl, 2)))
-    docs.select(id).repartition(32).select(id, text.as("text"))
-  }
-
-  /** WARC-of-HTTP fixture (q272): each blob's payloads are FULL HTTP
-    * responses with HTML bodies — Content-Length comes from
-    * length(payload) so framing is consistent by construction; the
-    * oracle reconstructs the extracted text from (id, r) residues.
-    * Arms: (id+r)%6 = 3 → 404, = 4 → PDF; odd r → request records;
-    * id%10 = 7 → junk tail (bad archive), = 9 → empty archive blob.
-    */
-  private def warcHttpFixture(docs: DataFrame): DataFrame = {
-    val id = col("doc_id")
-    val m = id % 10
-    val nRecs = (lit(1) + id % 3).cast("int")
-    def recOf(r: Column): Column = {
-      val c = pmod(id + r, lit(6))
-      val w = (lit(3) + pmod(id + r, lit(5))).cast("int")
-      val statusLine = when(c === 3, lit("HTTP/1.1 404 Not Found"))
-        .otherwise(lit("HTTP/1.1 200 OK"))
-      val ctype = when(c === 4, lit("application/pdf"))
-        .otherwise(lit("text/html"))
-      val payload = concat(statusLine, lit("\r\nContent-Type: "), ctype,
-        lit("\r\n\r\n<html><body><p>"), repeat(lit("word "), w),
-        lit("end</p></body></html>"))
-      concat(lit("WARC/1.0\r\nWARC-Type: "),
-        when(pmod(r, lit(2)) === 0, lit("response")).otherwise(lit("request")),
-        lit("\r\nWARC-Target-URI: http://www.src"), (id % 20).cast("string"),
-        lit(".example.com/Docs/"), id.cast("string"), lit("/"),
-        r.cast("string"),
-        lit("\r\nContent-Length: "), length(payload).cast("string"),
-        lit("\r\n\r\n"), payload, lit("\r\n\r\n"))
-    }
-    val blob = when(m === 9, lit(""))
-      .otherwise(concat(
-        array_join(transform(sequence(lit(0), nRecs - 1), r => recOf(r)), ""),
-        when(m === 7, lit("JUNK")).otherwise(lit(""))))
-    docs.select(id).repartition(32).select(id, blob.as("blob"))
-  }
-
-  /** q267/q278 shared classifier fixtures: parity-split training
-    * corpus ("good"/"spam"-heavy with shared function words, token
-    * counts 1+id%5) and the disjoint three-arm scoring set.
-    */
-  private def nbTrainFixture(docs: DataFrame): DataFrame = {
-    val id = col("doc_id")
-    val p = (lit(1) + id % 5).cast("int")
-    val trainText = when(id % 2 === 0,
-      concat(repeat(lit("good "), p), lit("the end")))
-      .otherwise(concat(repeat(lit("spam "), p), lit("the end")))
-    docs.select(id).repartition(32).select(id, trainText.as("text"))
-  }
-
-  private def nbScoreFixture(docs: DataFrame): DataFrame = {
-    val id = col("doc_id")
-    val scoreText = when(id % 3 === 0, lit("good good the"))
-      .when(id % 3 === 1, lit("spam the end end"))
-      .otherwise(lit("good spam zzz"))
-    docs.select(id).repartition(32).select(id, scoreText.as("text"))
-  }
-
-  /** Seven-arm Unicode-script fixture shared by q259 (batch) and q279
-    * (streaming twin) — see the q259 entry comment for arm design.
-    */
-  private def scriptFixture(docs: DataFrame): DataFrame = {
-    val id = col("doc_id")
-    val k = lit(2) + id % 20
-    val text = when(id % 7 === 0, repeat(lit("word "), k))
-      .when(id % 7 === 1,
-        concat(repeat(lit("мира "), k), lit("word")))
-      .when(id % 7 === 2,
-        concat(repeat(lit("漢字 "), k), repeat(lit("ひら "), k),
-          repeat(lit("カタ "), k), lit("word")))
-      .when(id % 7 === 3, repeat(lit("مرحب "), k))
-      .when(id % 7 === 4, repeat(lit("αβγδ "), k))
-      .when(id % 7 === 5,
-        concat(repeat(lit("word "), k), repeat(lit("мира "), k)))
-      .otherwise(repeat(lit("1234 #! "), k))
-    docs.select(id).repartition(32).select(id, text.as("text"))
-  }
-
-  /** Ten-arm chat-messages fixture shared by q281 (batch) and q285
-    * (streaming twin) — one arm per verdict class plus three keep
-    * shapes; see the q281 entry comment.
-    */
-  private def chatFixture(docs: DataFrame): DataFrame = {
-    val id = col("doc_id")
-    val a = id % 10
-    val i = id.cast("string")
-    def usr(k: Int): Column =
-      concat(lit("{\"role\":\"user\",\"content\":\"u"), i,
-        lit(s" asks $k\"}"))
-    def asst(k: Int): Column =
-      concat(lit("{\"role\":\"assistant\",\"content\":\"a"), i,
-        lit(s" answers $k\"}"))
-    val sys = lit("{\"role\":\"system\",\"content\":\"be terse\"}")
-    def arr(parts: Column*): Column =
-      concat(lit("["), concat_ws(",", parts: _*), lit("]"))
-    val json = when(a === 0, arr(sys, usr(1), asst(1)))
-      .when(a === 1, arr(usr(1), asst(1)))
-      .when(a === 2, arr(usr(1), asst(1), usr(2), asst(2)))
-      .when(a === 3, lit("{oops"))
-      .when(a === 4, lit("[]"))
-      .when(a === 5, arr(usr(1),
-        lit("{\"role\":\"robot\",\"content\":\"x\"}")))
-      .when(a === 6, arr(usr(1), sys))
-      .when(a === 7, arr(usr(1), usr(2)))
-      .when(a === 8, arr(usr(1),
-        lit("{\"role\":\"assistant\",\"content\":\"\"}")))
-      .otherwise(arr(sys, usr(1)))
-    docs.select(id).repartition(32).select(id, json.as("messages"))
-  }
-
-  private def httpRawFixture(docs: DataFrame): DataFrame = {
-    val id = col("doc_id")
-    val statusLine = when(id % 7 === 1, lit("HTTP/1.1 404 Not Found"))
-      .when(id % 7 === 5, lit("GARBAGE"))
-      .otherwise(lit("HTTP/1.1 200 OK"))
-    // the %2=0 arm uses the RFC 9110 QUOTED parameter form — the
-    // charset must still extract (round-15 review fix: the bare-token
-    // regex silently dropped quoted declarations)
-    val ctype = when(id % 7 === 2, lit("application/pdf"))
-      .when(id % 2 === 0, lit("text/html; charset=\"utf-8\""))
-      .otherwise(lit("Text/HTML"))
-    val teLine = when(id % 7 === 4, lit("\r\nTransfer-Encoding: Chunked"))
-      .otherwise(lit(""))
-    val sep = when(id % 7 === 3, lit("\n\n")).otherwise(lit("\r\n\r\n"))
-    val raw = concat(statusLine,
-      lit("\r\nServer: graft"), teLine, lit("\r\nContent-Type: "), ctype, sep,
-      lit("<html><body><p>"), col("text"), lit("</p></body></html>"))
-    docs.select(id, raw.as("raw"))
-  }
-
-  /** robots.txt BODY fixture (q239/q240): the 20 urlFixture hosts;
-    * every host's `*`+backupbot group carries EXACTLY
-    * [[robotsRulesFixture]]'s three rules (so the parsed table is
-    * q223's, arithmetic), plus an `otherbot` group that must never
-    * apply, a rule-line comment, an empty `Disallow:` no-op, and
-    * Crawl-delay/Sitemap member lines; %4=0 hosts prepend a SPECIFIC
-    * `GraftBot` group (mixed-case UA — specific beats `*` per RFC
-    * 9309) and %3=1 hosts are CRLF files.
-    */
-  private def robotsBodiesFixture(s: SparkSession): DataFrame = {
-    val i = col("id")
-    val lf = lit("\n")
-    val body = concat(
-      lit("# robots for src"), i.cast("string"), lf,
-      when(i % 4 === 0, concat(
-        lit("User-Agent: GraftBot"), lf,
-        lit("Disallow: /private/"), (i % 3).cast("string"), lf,
-        lit("Allow: /private/"), (i % 3).cast("string"), lit("/pub"), lf,
-        lf)).otherwise(lit("")),
-      lit("User-agent: *"), lf,
-      lit("User-agent: backupbot"), lf,
-      lit("Allow: /"), lf,
-      lit("Allow: /Docs/"), (i % 7).cast("string"), lit("7"), lf,
-      lit("Disallow: /Docs/"), (i % 7).cast("string"),
-      lit("  # deny subtree"), lf,
-      lit("Disallow:"), lf,
-      lit("Crawl-delay: "), (lit(2) + i % 7).cast("string"), lf,
-      lit("Sitemap: http://www.src"), i.cast("string"),
-      lit(".example.com/s.xml"), lf, lf,
-      lit("User-agent: otherbot"), lf,
-      lit("Disallow: /"), lf)
-    s.range(0, 20).select(
-      concat(lit("www.src"), i.cast("string"), lit(".example.com")).as("host"),
-      when(i % 3 === 1, regexp_replace(body, "\n", "\r\n"))
-        .otherwise(body).as("body"))
-  }
-
-  /** Messy URL for an arbitrary id EXPRESSION (q219/q220's link
-    * targets) — urlFixture's spelling variants with the source name
-    * derived arithmetically (`source` == 'src' || id%20 in the corpus,
-    * certified by the q214 host set), so a link target needs no join.
-    */
-  private def messyUrl(id: Column): Column = concat(
-    when(id % 3 === 0, lit("HTTP"))
-      .when(id % 3 === 1, lit("https")).otherwise(lit("http")),
-    lit("://"),
-    when(id % 2 === 0, concat(lit("WWW.SRC"), (id % 20).cast("string")))
-      .otherwise(concat(lit("www.src"), (id % 20).cast("string"))),
-    lit(".Example.COM"),
-    when(id % 5 === 0, lit(":80")).when(id % 5 === 1, lit(":443"))
-      .when(id % 5 === 2, lit(":8080")).otherwise(lit("")),
-    lit("/Docs/"), (id % 50).cast("string"),
-    when(id % 7 === 0, lit("/")).otherwise(lit("")),
-    when(id % 4 === 0, lit("?b=2&a=1"))
-      .when(id % 4 === 1, lit("?a=1&b=2")).otherwise(lit("")))
-
-  /** Canonical-host link edges extracted from a synthesized HTML-ish
-    * corpus — now with RELATIVE hrefs live (the round-12 verdict's top
-    * gap): every doc links an ABSOLUTE messy URL of one formula target
-    * and a SCHEME-RELATIVE (`//host/…`) spelling of a second — the
-    * cross-host reference class that real pages use constantly and
-    * that a resolve-less pipeline silently drops — plus (doc %11=3) a
-    * same-host `../` reference (resolves, then falls to the self-loop
-    * filter: host graphs don't key same-page navigation) and (doc
-    * %9=0) a `javascript:` junk href that must drop through the
-    * NULL-canonical quarantine route. Every href goes through
-    * [[graft.ext.UrlCanon.resolveUrl]] against the page's own URL
-    * before canonicalization — the real crawl shape. Takes the docs
-    * slice so the incremental variant (q221) can fold per-batch edge
-    * states. Shared by q219/q220/q221.
-    */
-  private def linkEdges(docs0: DataFrame): DataFrame = {
-    import graft.ext.UrlCanon
-    // resolveUrl per href is a ~30-regex-pass chain — CPU-bound per
-    // row, and the local corpus is ONE parquet split; spread first
-    // (the Dedup/SimHash repartition discipline)
-    val docs = docs0.repartition(32, col("doc_id"))
-    val html = docs.select(col("doc_id"),
-      concat(lit("<html><body><p>Doc "), col("doc_id").cast("string"),
-        // quadratic targets: a LINEAR formula is a bijection mod 20
-        // (gcd(7,20)=1), which makes every host 2-in/2-out regular and
-        // PageRank vacuously uniform; squares concentrate residues, so
-        // hub hosts emerge and the ranks spread (checked non-vacuous)
-        lit("</p><a href=\""),
-        messyUrl(col("doc_id") * (col("doc_id") + 3) + 1),
-        lit("\">a</a> <a href=\""),
-        regexp_replace(messyUrl(col("doc_id") * (col("doc_id") + 7) + 5),
-          "^[A-Za-z][A-Za-z0-9+.-]*:", ""),
-        lit("\">b</a>"),
-        when(col("doc_id") % 11 === 3,
-          lit(" <a href=\"../About/team\">c</a>")).otherwise(lit("")),
-        when(col("doc_id") % 9 === 0,
-          lit(" <a href=\"javascript:void(0)\">junk</a>")).otherwise(lit("")),
-        lit("</body></html>")).as("html"))
-    // explode_OUTER twice (the q222 Generate-barrier discipline): the
-    // href extraction AND the resolveUrl projection each sit behind a
-    // Generate so the null filter below can neither re-inline the
-    // resolution chain nor push beneath the extraction
-    html.select(col("doc_id"),
-        explode_outer(expr("""regexp_extract_all(html, 'href="([^"]*)"', 1)"""))
-          .as("href"))
-      .select(col("doc_id"),
-        explode_outer(array(UrlCanon.resolveUrl(
-          messyUrl(col("doc_id")), col("href")))).as("abs_url"))
-      .filter(UrlCanon.canonicalUrl(col("abs_url")).isNotNull)
-      .select(UrlCanon.canonicalHost(messyUrl(col("doc_id"))).as("src_host"),
-        UrlCanon.canonicalHost(col("abs_url")).as("dst_host"))
-      .filter(col("src_host") =!= col("dst_host"))
-  }
-
-  /** The %11=5 wrong-language garble (q234): fifteen Spanish
-    * function-word tokens prepended to the page text — enough to
-    * out-score the corpus's English hits decisively (typical docs
-    * carry well under ten en-profile hits), few enough that the LM's
-    * OOV-pair share stays far under the 500000 ppm flag, so ONLY the
-    * language gate can catch these pages. ONE Scala site, interpolated
-    * into the oracle mirror verbatim.
-    */
-  private val EsGarble =
-    "el la de que y los las por con una el la de que y "
-
-  /** The re-ingested dup-slice fixture arm shared by q103/q189/q225:
-    * the %13 slice of `documents` re-appears under +1000000 ids — the
-    * "corpus v2 with re-crawled mass" shape the diff/refresh/card
-    * queries all document. ONE Scala site to keep in lockstep with
-    * the three oracle-SQL mirrors.
-    */
-  private def dupSliceArm(docs: DataFrame): DataFrame =
-    docs.filter(col("doc_id") % 13 === 0)
-      .withColumn("doc_id", col("doc_id") + lit(1000000L))
-
-  private def withDupSlice(docs: DataFrame): DataFrame =
-    docs.unionByName(dupSliceArm(docs))
+  val oracleSql: Map[String, String] = specs.map(q => q.name -> q.oracle).toMap
 
   /** Flagship query; driver smoke-checks rows>0 (sf dir overridable). */
   def entry(spark: SparkSession): DataFrame =
     queries("q2_top10")(spark,
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"))
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  /** The q318/q330 shared bytes-grade intake chain — contract in the
-    * two map entries. `damageGate = true` arms q309's encodingDamage
-    * quarantine: arm 10 becomes the utf-8-bytes-declared-cp1252
-    * double-encode probe, damaged rows rank `encoding_damage` (after
-    * fetch classes, before the language gate) and are excluded from
-    * the dedup scope. ONE definition so the certified q318 oracle
-    * also pins the gated chain's shared stages (the q186 discipline).
-    */
-  private def bytesIntakeChain(s: SparkSession, dir: String,
-      damageGate: Boolean): DataFrame = {
-      import graft.ext.{Dedup, FetchDecode, HtmlExtract, UrlCanon, WarcRecord}
-      import graft.plans.{Inflate, Transcode}
-      val id = col("doc_id")
-      val a = id % 12
-      val docs0 = t(s, dir, "documents")
-      // ── frontier: URL canonicalization + duplicate-URL drop ──
-      val dec = UrlCanon.urlDecisions(
-          urlFixture(docs0).drop("n_chars"), "url", "doc_id")
-        .select("doc_id", "canonical_url", "decision")
-        .localCheckpoint() // feeds the dedup scope AND the final table
-      // ── the fetched corpus: q312's WARC framing over arm-keyed
-      // response bytes (per-row Deflater work is CPU-bound on the
-      // single local split — spread first, the q241/q306 rule) ──
-      val shared = docs0.filter(id === 1).select(col("text").as("__sh"))
-      val base = docs0.select(id,
-          when(asciiGuard("bytesIntakeChain", id).isNull, col("text"))
-            .as("text"))
-        .repartition(32, id)
-        .crossJoin(broadcast(shared))
-      val ptext0 =
-        when(a === 7, col("__sh"))
-          .when(a === 8, concat(lit(EsGarble), col("text")))
-          .when(a === 9, reverse(col("text")))
-      // damage arm 10: three planted é INSIDE <p> (unlike the comment
-      // é, these must SURVIVE extraction to reach the gate)
-      val ptext = (if (damageGate)
-          ptext0.when(a === 10, concat(col("text"),
-            lit(" caf\u00E9 r\u00E9sum\u00E9")))
-        else ptext0).otherwise(col("text"))
-      val html = concat(
-        lit("<html><head><title>Intake</title></head><body>" +
-          "<!-- caf\u00E9 --><div class=\"main\"><p>"),
-        ptext, lit("</p></div></body></html>"))
-      def mkHead(lines: String*) = lit(lines.mkString("", "\r\n", "\r\n\r\n"))
-      val okHead = mkHead("HTTP/1.1 200 OK",
-        "Content-Type: text/html; charset=windows-1252",
-        "Content-Encoding: gzip")
-      val headC =
-        when(a === 2, mkHead("HTTP/1.1 404 Not Found",
-          "Content-Type: text/html"))
-          .when(a === 3, mkHead("HTTP/1.1 200 OK",
-            "Content-Type: text/html", "Transfer-Encoding: chunked"))
-          .when(a === 4, mkHead("HTTP/1.1 200 OK",
-            "Content-Type: application/json"))
-          .when(a === 6, mkHead("HTTP/1.1 200 OK",
-            "Content-Type: text/html; charset=utf-7"))
-          .otherwise(okHead)
-      val body =
-        when(a === 5, lit("junkjunk").cast("binary"))
-          .when(a === 2 || a === 3 || a === 4 || a === 6,
-            col("text").cast("binary"))
-          .otherwise(Inflate.gzipCompress(Transcode.encode(html,
-            // damage arm 10: UTF-8 bytes under the cp1252 declaration
-            // — the lenient decode leg turns every é into Ã©
-            if (damageGate) when(a === 10, lit("utf-8"))
-              .otherwise(lit("windows-1252"))
-            else lit("windows-1252"))))
-      // arm 1: no status line at all — bare text bytes; every other
-      // arm is head + latin-1-bridged body (the q312 bridge rule)
-      val recStr = when(a === 1, col("text"))
-        .otherwise(concat(headC, decode(body, "ISO-8859-1")))
-      val member = concat(
-        lit("WARC/1.0\r\nWARC-Type: response\r\n" +
-          "WARC-Target-URI: http://ex.com/"),
-        id.cast("string"),
-        lit("\r\nContent-Length: "), length(recStr).cast("string"),
-        lit("\r\n\r\n"), recStr, lit("\r\n\r\n"))
-      val archives = base
-        .select(expr("CAST(doc_id DIV 8 AS BIGINT)").as("archive_id"),
-          struct(id, member.as("m")).as("sm"))
-        .groupBy("archive_id")
-        .agg(concat_ws("", transform(array_sort(collect_list(col("sm"))),
-          x => x.getField("m"))).as("blob"))
-      val recs = WarcRecord.splitRecords(archives, "archive_id", "blob")
-        .select(regexp_extract(col("target_uri"), "/([0-9]+)$", 1)
-          .cast("long").as("doc_id"),
-          encode(col("payload"), "ISO-8859-1").as("raw"))
-      val fetched = FetchDecode.decodeResponses(recs, "doc_id", "raw",
-          maxBytes = FetchMaxBytes)
-        .select(id, col("decision").as("__fd"), col("text").as("__ftext"))
-        .localCheckpoint() // feeds extraction AND the final table
-      // ── content stages over fetch-ok rows ──
-      val ext = fetched.filter(col("__fd") === "ok")
-        .select(id, HtmlExtract.mainText(col("__ftext")).as("text"))
-        .localCheckpoint() // feeds lang gate, LM scorer AND dedup
-      // lang / dmg / lm each feed TWO consumers (the dedup-scope
-      // pre-filter AND the final decision table) — left lazy, each
-      // re-ran its scoring pipeline per consumer, lm's even rebuilding
-      // the bigram model aggregation twice (the q69 multi-consumer
-      // discipline; round-19 optimization)
-      val lang = TextAnalysis.withLangGuess(ext, "text", "__lang")
-        .select(id, col("__lang"))
-        .localCheckpoint()
-      // the mojibake gate (q309's detector, LIVE on the extracted
-      // text — cheap regex counts over the checkpointed ext)
-      val dmg = if (damageGate)
-        TextAnalysis.encodingDamage(ext, "doc_id", "text")
-          .select(id, col("verdict").as("__dmg"))
-          .localCheckpoint()
-      else null
-      val (lmc2, lmc1) = TextAnalysis.lmModel(
-        docs0.filter(id % 5 =!= 0), "text")
-      val lm = TextAnalysis.lmScoreWith(lmc2, lmc1, ext, "doc_id", "text")
-        .select(id, col("flag").as("__lmflag"))
-        .localCheckpoint()
-      // ── exact content dedup over the survivors of every earlier
-      // gate (real pipeline order: dedup what you would otherwise
-      // keep; the shuffle key is the extracted text — at corpus scale
-      // swap in dedupExactNormalized's xxhash64 key, same plan) ──
-      val pre0 = dec.filter(col("decision") === "kept").select("doc_id")
-        .join(ext, Seq("doc_id"))
-        .join(lang, Seq("doc_id"))
-        .join(lm, Seq("doc_id"), "left")
-        .filter((col("__lang") === "en" || col("__lang") === "und") &&
-          coalesce(col("__lmflag"), lit("ok")) =!= "low")
-      // damaged rows must never become dedup keepers
-      val pre = (if (damageGate)
-          pre0.join(dmg, Seq("doc_id")).filter(col("__dmg") === "clean")
-            .drop("__dmg")
-        else pre0)
-        .localCheckpoint() // feeds the keeper draw AND the join-back
-      val keep = Dedup.exactDedup(pre, "doc_id", col("text"))
-        .select(col("content_hash").as("text"), col("keep_id").as("__keep"))
-      val dup = pre.select(id, col("text"))
-        .join(keep, Seq("text"))
-        .select(id, col("__keep"))
-      // ── the one total decision table ──
-      val joined0 = dec
-        .join(fetched.select(id, col("__fd")), Seq("doc_id"))
-      val joined = (if (damageGate) joined0.join(dmg, Seq("doc_id"), "left")
-        else joined0)
-        .join(lang, Seq("doc_id"), "left")
-        .join(lm, Seq("doc_id"), "left")
-        .join(dup, Seq("doc_id"), "left")
-      val afterFetch =
-        when(col("decision") =!= "kept", col("decision"))
-          .when(col("__fd") =!= "ok", col("__fd"))
-      val afterDamage = if (damageGate)
-        afterFetch.when(col("__dmg").isNotNull && col("__dmg") =!= "clean",
-          lit("encoding_damage"))
-      else afterFetch
-      joined.select(id, col("canonical_url"),
-        afterDamage
-          .when(col("__lang").isNotNull && col("__lang") =!= "en" &&
-            col("__lang") =!= "und", lit("wrong_language"))
-          .when(col("__lmflag") === "low", lit("low_quality"))
-          .when(col("__keep").isNotNull && col("__keep") =!= id,
-            lit("dup_content"))
-          .otherwise(lit("kept")).as("decision"))
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ── A1-A7 hash aggregate with map-side partial combine (§2.5); X5 ──
-    "q1_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          asDouble(sum(dec2(col("l_quantity")))).as("sum_qty"),
-          asDouble(sum(dec2(col("l_extendedprice")))).as("sum_base_price"),
-          asDouble(sum(dec2(col("l_extendedprice")) * (lit(1).cast(DecimalType(4, 2)) - dec2(col("l_discount")))))
-            .as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    // ── W1+F1+A1+J1: reference top10 report shape (top10.py:239-253) —
-    // top-10 parts per (ship month, brand) by line count, dense_rank tie
-    // semantics, broadcast dim join ──
-    "q2_top10" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .withColumn("month", monthKey(col("l_shipdate")))
-      // aggregate BELOW the join: p_brand is functionally dependent on
-      // l_partkey, so counting at (month, partkey) grain first shrinks
-      // the join input from |lineitem| to |distinct keys| — at 100 TB
-      // the join then moves aggregates, not events. No broadcast hint:
-      // `part` grows with scale factor; AQE decides.
-      val counts = li
-        .groupBy("month", "l_partkey")
-        .agg(count(lit(1)).as("cnt"))
-      val withBrand = counts
-        .join(t(s, dir, "part"), counts("l_partkey") === col("p_partkey"))
-      TopK.denseTopK(withBrand, Seq("month", "p_brand"), col("cnt").desc, 10)
-        .select("month", "p_brand", "l_partkey", "cnt", "position")
-    }),
-
-    // ── J1/J2 left equi-join with null-preserving aggregate (§2.4) ──
-    "q3_left_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left")
-        .groupBy("c_mktsegment")
-        .agg(
-          count(col("o_orderkey")).as("order_cnt"),
-          count(lit(1)).as("row_cnt"),
-          asDouble(sum(dec2(col("o_totalprice")))).as("revenue"))
-    }),
-
-    // ── X5-X8 royalty math (royalties.py:217-254 intent): decimal
-    // price*(1-disc)*percent, promo rows earn 0, /100 after the exact sum ──
-    "q4_royalties" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      li.join(t(s, dir, "part"), li("l_partkey") === col("p_partkey"))
-        .join(t(s, dir, "supplier"), li("l_suppkey") === col("s_suppkey"))
-        .withColumn("month", monthKey(col("l_shipdate")))
-        .withColumn("royalty", royaltyBase(
-          col("l_extendedprice"), col("l_discount"),
-          col("p_size") + lit(5), col("p_type") === "PROMO"))
-        .groupBy("s_name", "month")
-        .agg((asDouble(sum(col("royalty"))) / 100).as("royalty_usd"))
-    }),
-
-    // ── W2/X9: share-of-total via window aggregate — the rewrite of the
-    // reference's six groupBy+join-back pairs (platform_usage.py:118-187) ──
-    "q5_usage_share" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val g = o
-        .join(t(s, dir, "customer"), o("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .withColumn("month", monthKey(col("o_orderdate")))
-        .groupBy("month", "n_name")
-        .agg(sum(dec2(col("o_totalprice"))).as("rev"))
-      GroupShare.withSharePct(g, Seq("month"), "rev", "share_pct")
-        .select(col("month"), col("n_name"), asDouble(col("rev")).as("revenue"), col("share_pct"))
-    }),
-
-    // ── O2/O3/A8 distinct on a join result (§2.7) ──
-    "q6_distinct" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      o.join(t(s, dir, "customer"), o("o_custkey") === col("c_custkey"))
-        .select("c_mktsegment", "o_orderpriority")
-        .distinct()
-    }),
-
-    // ── X2-X4 fixed-layout ISO string slicing (platform_usage.py:76-81) ──
-    "q7_datestrings" -> ((s, dir) => {
-      t(s, dir, "events")
-        .withColumn("iso", date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss"))
-        .withColumn("tz", concat(lit("+0"), (col("user_id") % 10).cast("string"), lit(":00")))
-        .withColumn("full_ts", concat(col("iso"), col("tz")))
-        .select(
-          col("event_id"),
-          substring(col("full_ts"), 1, 10).as("day"),
-          substring(col("full_ts"), 1, 7).as("mon"),
-          tzOffset(col("full_ts")).as("off"))
-    }),
-
-    // ── X1 lookahead-regex id normalization + string funcs (§2.8) ──
-    "q8_regex" -> ((s, dir) => {
-      t(s, dir, "part")
-        .withColumn("dotted", concat(col("p_size").cast("string"), lit("."), (col("p_partkey") % 10).cast("string")))
-        .select(
-          col("p_partkey"),
-          col("dotted"),
-          normalizeDottedId(col("dotted")).as("norm_id"),
-          upper(col("p_brand")).as("brand_uc"),
-          length(col("p_name")).as("name_len"),
-          lpad(col("p_partkey").cast("string"), 6, "0").as("padded"))
-    }),
-
-    // ── X7 conditional buckets (when/otherwise chain) ──
-    "q9_case" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .withColumn("bucket",
-          when(col("l_quantity") < 10, "small")
-            .when(col("l_quantity") < 30, "mid")
-            .otherwise("big"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"), asDouble(sum(dec2(col("l_quantity")))).as("qty"))
-    }),
-
-    // ── events fact table: timestamp handling + derived ratio ──
-    "q10_events_daily" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(col("event_type"), dayKey(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"), asDouble(sum(dec2(col("value")))).as("total"))
-        .withColumn("avg_val", col("total") / col("n"))
-    }),
-
-    // ── lead/lag window (beyond-reference window coverage). Two-level
-    // aggregation: exact-decimal partials at (partkey, month) below the
-    // join, re-aggregated to brand after — decimal addition is
-    // associative, so the result is bit-identical to the single-level
-    // form while the join moves partials instead of line items ──
-    "q11_window_lag" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val li = t(s, dir, "lineitem")
-      val partial = li
-        .withColumn("month", monthKey(col("l_shipdate")))
-        .groupBy("l_partkey", "month")
-        .agg(sum(dec2(col("l_extendedprice"))).as("rev_part"))
-      val g = partial
-        .join(t(s, dir, "part"), partial("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand", "month")
-        .agg(asDouble(sum(col("rev_part"))).as("revenue"))
-      val w = Window.partitionBy("p_brand").orderBy("month")
-      g.withColumn("prev_revenue", lag(col("revenue"), 1).over(w))
-        .withColumn("delta", col("revenue") - col("prev_revenue"))
-    }),
-
-    // ── left-semi join (EXISTS) ──
-    "q12_semi" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val big = t(s, dir, "orders").filter(col("o_totalprice") > 300000)
-      c.join(big, c("c_custkey") === big("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")
-    }),
-
-    // ── left-anti join (NOT EXISTS) ──
-    "q13_anti" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val big = t(s, dir, "orders").filter(col("o_totalprice") > 300000)
-      c.join(big, c("c_custkey") === big("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-    }),
-
-    // ── set operations: intersect / except / union, computed in a single
-    // pass. The naive 3-set-op form scans each input 3× (6 scans); a
-    // full-outer join of the two distinct sets yields the identical row
-    // set — intersect = matched, except = one-sided — with 2 scans and
-    // one join (round-1 judge flagged the recompute). ──
-    "q14_setops" -> ((s, dir) => {
-      val cn = t(s, dir, "customer").select(col("c_nationkey").cast("int").as("ck")).distinct()
-      val sn = t(s, dir, "supplier").select(col("s_nationkey").cast("int").as("sk")).distinct()
-      cn.join(sn, cn("ck") === sn("sk"), "full_outer")
-        .select(
-          when(col("ck").isNotNull && col("sk").isNotNull, "both")
-            .when(col("sk").isNull, "cust_only")
-            .otherwise("supp_only").as("tag"),
-          coalesce(col("ck"), col("sk")).as("nationkey"))
-    }),
-
-    // ── rollup grouping sets (beyond-reference aggregate coverage) ──
-    "q15_rollup" -> ((s, dir) => {
-      t(s, dir, "part")
-        .rollup("p_brand", "p_type")
-        .agg(count(lit(1)).as("n"), asDouble(sum(dec2(col("p_retailprice")))).as("retail"))
-    }),
-
-    // ── TPC-H Q5-shaped 6-table join: broadcast dims, shuffle join on
-    // the two fact tables, selective filters pushed to the scan ──
-    "q16_join5" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-      val c = t(s, dir, "customer")
-      val su = t(s, dir, "supplier")
-      val n = t(s, dir, "nation")
-      val r = t(s, dir, "region").filter(col("r_name") === "ASIA")
-      // customer/supplier are scale-proportional: no broadcast hints —
-      // AQE promotes them to broadcast at small SF, shuffled-hash at 100 TB.
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(su, li("l_suppkey") === su("s_suppkey") && c("c_nationkey") === su("s_nationkey"))
-        .join(broadcast(n), su("s_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy("n_name")
-        .agg(asDouble(sum(dec2(col("l_extendedprice")) * (lit(1).cast(DecimalType(4, 2)) - dec2(col("l_discount")))))
-          .as("revenue"))
-    }),
-
-    // ── ext: exact dedup — hash-groupBy on a canonical content hash,
-    // deterministic min-id representative (training-data pipeline op) ──
-    "q17_dedup_exact" -> ((s, dir) =>
-      Dedup.exactDedup(t(s, dir, "documents"), "doc_id", md5(col("text")))),
-
-    // ── ext: minhash-LSH near-dup — banded bucket join for candidates
-    // (never all-pairs), exact 3-gram-Jaccard verification. The oracle
-    // computes exact all-pairs Jaccard; with 32 bands × 4 rows the
-    // probability of LSH missing a >=0.9-similar pair is ~1e-15, so the
-    // outputs coincide (verified on this corpus, whose near-dup band
-    // sits entirely at J>=0.9 with nothing in [0.5, 0.9)). ──
-    "q18_dedup_minhash" -> ((s, dir) =>
-      Dedup.nearDupPairsMinhash(t(s, dir, "documents"), "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.8)),
-
-    // ── ext: brute-force cosine top-k over embeddings for a bounded
-    // query batch (broadcast); sequential-fold double arithmetic for
-    // cross-engine bit parity. LSH-bucketed variant: SimSearch.lshTopK
-    // (tested in the spec suite against this exact baseline). ──
-    "q19_sim_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      SimSearch.bruteForceTopK(emb, emb.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 5)
-    }),
-
-    // ── ext: per-document text quality stats (tokens, type-token ratio,
-    // stopword ratio, BPE-ish count, md5 fingerprint) — narrow per-row
-    // pass, no shuffle ──
-    "q20_textstats" -> ((s, dir) =>
-      TextAnalysis.textStats(t(s, dir, "documents"), "doc_id", "text", keep = Seq("lang"))),
-
-    // ── ext: simhash near-dup — 48-bit engine-portable simhash (md5
-    // feature hashes), 4×12-bit chunk candidates, exact hamming <= 8 ──
-    "q21_dedup_simhash" -> ((s, dir) =>
-      SimHash.nearDupPairsSimhash(t(s, dir, "documents"), "doc_id", "text",
-        shingleK = 3, maxHamming = 8)),
-
-    // ── report shape over the corpus: A1 counts → J3 composite-key
-    // join-back → W1/F1 rank → O2 dropDuplicates-subset (collapses the
-    // join-back re-expansion; output cols are functionally dependent on
-    // the dedup keys, so the arbitrary-row choice is invisible) →
-    // O1 global sort → P5 withColumnRenamed ──
-    "q22_report_top10" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").withColumn("month", monthKey(col("l_shipdate")))
-      val joined = li.join(t(s, dir, "part"), li("l_partkey") === col("p_partkey"))
-      val counts = joined.groupBy("month", "p_brand").count()
-      val backed = joined.join(counts, Seq("month", "p_brand"), "left")
-      TopK.denseTopK(backed, Seq("month"), col("count").desc, 3)
-        .dropDuplicates("month", "p_brand")
-        .orderBy("month", "position", "p_brand")
-        .select("position", "month", "p_brand", "count")
-        .withColumnRenamed("month", "date")
-        .withColumnRenamed("count", "cnt")
-    }),
-
-    // ── X8/F5: currency conversion via a rates dim with drop-unknown
-    // inner-join semantics + X6 format_number on an exact scale-2
-    // decimal (rounding pinned: round(x,2) is half-up in both engines;
-    // formatting an already-scale-2 decimal can never hit a tie) ──
-    "q23_currency" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val rates = t(s, dir, "nation").filter(col("n_nationkey") < 20)
-        .select(col("n_nationkey").as("rk"), col("n_name"),
-          ((col("n_nationkey") % 8) * 25 + 75).cast(DecimalType(6, 0))
-            .multiply(lit(0.01).cast(DecimalType(3, 2))).as("rate"))
-      o.join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(rates), c("c_nationkey") === col("rk"))
-        .withColumn("month", monthKey(col("o_orderdate")))
-        .withColumn("amount", dec2(col("o_totalprice")) * col("rate"))
-        .groupBy("n_name", "month")
-        .agg(round(sum(col("amount")), 2).as("total"))
-        .select(col("n_name"), col("month"),
-          asDouble(col("total")).as("amount_usd"),
-          format_number(col("total"), 2).as("amount_fmt"))
-    }),
-
-    // ── usage-share report over the events fact: one aggregate at
-    // (month, type, zone) grain, month share via window (W2), zone share
-    // via the literal composite-key join-back (J3) — both formulations
-    // live in one query, proving the rewrite equivalence ──
-    "q24_usage_report" -> ((s, dir) => {
-      val g = t(s, dir, "events")
-        .withColumn("month", monthKey(col("ts")))
-        .withColumn("zone", (col("user_id") % 5).cast("int"))
-        .groupBy("month", "event_type", "zone")
-        .agg(sum(dec2(col("value"))).as("dur"))
-      val shared = GroupShare.withSharePct(g, Seq("month"), "dur", "pct_total")
-      GroupShare.withSharePctJoinBack(shared, Seq("month", "zone"), "dur", "pct_zone")
-        .select(col("month"), col("event_type"), col("zone"),
-          asDouble(col("dur")).as("total_value"), col("pct_total"), col("pct_zone"))
-    }),
-
-    // ── S3 source: multi-file JSON event scan with declared schema
-    // (fixtures authored per FIXTURES.md §A) + F3 null filter + X2-X4
-    // fixed-layout slicing on real ±hh:mm offsets ──
-    "q25_events_json" -> ((s, _) =>
-      Sources.events(s, FixturesDir + "/events_json")
-        .filter(col("userId").isNotNull)
-        .select(
-          col("eventId"),
-          substring(col("processTime"), 1, 10).as("day"),
-          substring(col("eventTime"), 1, 7).as("mon"),
-          substring(col("eventTime"), 20, 6).as("off"),
-          col("userId"), col("countryCode"), col("duration"),
-          asDouble(dec2(col("itemPrice"))).as("price"))),
-
-    // ── S4 CSV source (header + declared schema) + J5 case-differing equi
-    // join; null group for the unmatched country code ──
-    "q26_countries_csv" -> ((s, _) => {
-      val ev = Sources.events(s, FixturesDir + "/events_json")
-      val ct = Sources.countries(s, FixturesDir + "/countries.csv")
-      ev.join(broadcast(ct), ev("countryCode") === ct("CountryCode"), "left")
-        .groupBy("Country")
-        .agg(count(lit(1)).as("n_events"), sum(col("duration")).cast("bigint").as("total_duration"))
-    }),
-
-    // ── U1 registered Scala UDF + P6 spark.sql over registered temp
-    // views — the SQL-mode surface the reference drives its reports
-    // through (top10.py:264-268, platform_usage.py:104-107) ──
-    "q27_sql_udf" -> ((s, dir) => {
-      Corpus.registerAll(s, dir)
-      s.udf.register("usage_pct", (a: Double, b: Double) => a / b * 100)
-      s.sql(
-        """WITH g AS (SELECT event_type,
-          |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total
-          |  FROM events GROUP BY event_type),
-          |t AS (SELECT CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS gt FROM events)
-          |SELECT event_type, total, usage_pct(total, gt) AS pct
-          |FROM g CROSS JOIN t""".stripMargin)
-    }),
-
-    // ── the three report jobs end-to-end on the authored fixtures ──
-    "q28_job_top10" -> ((s, _) =>
-      Top10Job.transform(
-        Sources.events(s, FixturesDir + "/events_json"),
-        Sources.resources(s, FixturesDir + "/resources.json"),
-        Sources.categories(s, FixturesDir + "/categories.json"))),
-
-    "q29_job_royalties" -> ((s, _) =>
-      RoyaltiesJob.transform(
-        Sources.events(s, FixturesDir + "/events_json"),
-        Sources.resources(s, FixturesDir + "/resources.json"),
-        Sources.categories(s, FixturesDir + "/categories.json"),
-        Sources.countries(s, FixturesDir + "/countries.csv"),
-        Sources.ratesDf(s, FixturesDir + "/rates.json"))),
-
-    "q30_job_usage" -> ((s, _) =>
-      PlatformUsageJob.byTimeZone(Sources.events(s, FixturesDir + "/events_json"))),
-
-    // ── multimodal: binaryFile scan → typed decode (mapPartitions over
-    // opaque bytes — deterministic GRF1 stub codec) → narrow feature
-    // projection. The decode itself is not SQL-expressible, but its
-    // OUTPUT is: the oracle reads fixtures/media_expected.parquet,
-    // authored from the generator formula by tools/gen_media_expected.py
-    // (which also asserts the fixture bytes match the formula), so the
-    // driver's check is rows+schema+hash, not rows-only. ──
-    "q31_multimodal" -> ((s, _) => {
-      import graft.ext.Multimodal
-      val files = Multimodal.asMediaFiles(Multimodal.readMedia(s, FixturesDir + "/media"))
-      Multimodal.imageFeatures(Multimodal.decodeImages(files)).toDF()
-        .select(
-          regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("width"), col("height"), col("channels"), col("meanIntensity"))
-    }),
-
-    // ── ext: embedding-space near-dup with size-aware plan selection
-    // (SimSearch.nearDupPairsCosineLsh): below 2^16 rows the exact
-    // all-pairs form (strictly cheaper at low τ, where background
-    // bucket collisions exceed all-pairs volume — the r03 driver
-    // measured the forced-LSH form 5.8× slower at sf0.1); above it,
-    // the hyperplane-bucketed equi-join with τ-aware (bits, tables)
-    // from lshParamsForTau — narrow bigint keys, inline fused-cosine
-    // scoring, threshold before dedup, no side ever broadcast. Both
-    // plans produce the identical pair set (worst-pair miss ≤ 1e-4;
-    // ExtSpec certifies forced-LSH == exact), so the oracle is
-    // unchanged either way. ──
-    "q32_embed_neardup" -> ((s, dir) =>
-      SimSearch.nearDupPairsCosineLsh(t(s, dir, "embeddings"), "vec_id", "embedding",
-        0.45, dim = 64)),
-
-    // ── salted two-phase aggregation: the skew pattern — deterministic
-    // salt, partial sums, re-aggregate; result provably equals the
-    // plain groupBy (the oracle computes the plain form) ──
-    "q33_salted_agg" -> ((s, dir) => {
-      import graft.operators.SkewSalt
-      SkewSalt.saltedSum(t(s, dir, "events"), Seq("event_type"),
-          dec2(col("value")), "total", col("event_id"), saltBuckets = 16)
-        .select(col("event_type"), asDouble(col("total")).as("total"))
-    }),
-
-    // ── ext: n-gram Jaccard via shingle inverted index (posting-list
-    // self-join — candidates share content, never all-pairs), with the
-    // corpus-relative stop-shingle cap ACTIVE (1% of docs): posting
-    // work is Σ df², so an uncapped hot shingle is quadratic — the cap
-    // is the 100-TB shape and the oracle mirrors its integer math ──
-    "q34_jaccard_pairs" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-        shingleK = 3, threshold = 0.5, maxShingleDfPermille = Some(10))),
-
-    // ── distinct-count aggregate (expand + two-phase agg under the
-    // hood; the exact form — approx_count_distinct is the 100-TB
-    // variant but its HLL sketch is engine-specific, so the oracle
-    // pins the exact one) ──
-    "q35_count_distinct" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy("event_type")
-        .agg(countDistinct(col("user_id")).as("users"),
-          count(lit(1)).as("n"))),
-
-    // ── pivot with explicit value list (deterministic output columns;
-    // an implicit pivot would scan for values first — one extra pass) ──
-    "q36_pivot" -> ((s, dir) =>
-      t(s, dir, "events")
-        .withColumn("month", monthKey(col("ts")))
-        .groupBy("month")
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(asDouble(sum(dec2(col("value")))))),
-
-    // ── semi-structured: JSON field extraction from a string column +
-    // null-default coalesce (na.fill shape) ──
-    "q37_json_props" -> ((s, dir) =>
-      t(s, dir, "events")
-        .select(col("event_id"),
-          get_json_object(col("props"), "$.k").cast("bigint").as("k_raw"))
-        .na.fill(Map("k_raw" -> -1L))
-        .withColumnRenamed("k_raw", "k_val"))
-    ,
-
-    // ── date arithmetic: datediff / date_add / last_day histogram of
-    // order-to-ship lag ──
-    "q38_datemath" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .select(
-          datediff(col("l_shipdate"), col("o_orderdate")).as("lag_days"),
-          dayKey(date_add(col("o_orderdate"), 30)).as("due_day"),
-          dayKey(last_day(col("o_orderdate"))).as("eom"))
-        .groupBy("lag_days")
-        .agg(count(lit(1)).as("n"),
-          min(col("due_day")).as("min_due"),
-          max(col("eom")).as("max_eom"))
-    }),
-
-    // ── cube grouping sets (rollup's sibling — all key combinations) ──
-    "q39_cube" -> ((s, dir) =>
-      t(s, dir, "part")
-        .cube(col("p_brand"), (col("p_size") % 5).as("size_mod"))
-        .agg(count(lit(1)).as("n"),
-          asDouble(sum(dec2(col("p_retailprice")))).as("retail"))),
-
-    // ── the by-country usage report (reference platform_usage.py:202-221
-    // ships both variants; q30 certifies byTimeZone, this one byCountry) ──
-    "q40_job_usage_country" -> ((s, _) =>
-      PlatformUsageJob.byCountry(Sources.events(s, FixturesDir + "/events_json"))),
-
-    // ── ext: LSH-bucketed similarity top-k — the 100-TB search path
-    // (bounded candidate volume |Q|·tables·n/2^bits, corpus never
-    // broadcast). bits=2 × tables=24 makes the worst-neighbor miss
-    // ~1e-4 even at cosine 0.2, with a 48-field signature aggregate
-    // that stays inside the JIT's method-size limit (the 4×96 variant
-    // generates a 385-field update method past HugeMethodLimit —
-    // interpreted bytecode, 2× slower end to end). Output EQUALS the
-    // brute-force truth (the oracle) at sf0.01 and sf0.1. ──
-    "q41_sim_topk_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      SimSearch.lshTopK(emb, emb.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 5, dim = 64, bits = 2, tables = 24)
-    }),
-
-    // ── ext: IVF top-k — coarse-quantizer inverted lists as an equi-join
-    // on list id. Certified in the exhaustive mode (nprobe = nlist:
-    // provably equal to brute force, so the oracle pins every join/agg
-    // stage); the nprobe < nlist candidate-cut mode is spec-covered
-    // (ExtSpec recall) since its output is approximate by design. ──
-    "q42_sim_topk_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      SimSearch.ivfTopK(emb, emb.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 5, nlist = 16, nprobe = 16)
-    }),
-
-    // ── ext: IVF top-k with DISTRIBUTED LLOYD REFINEMENT in the
-    // certified set — 2 k-means iterations move the sampled anchors to
-    // true centroid positions (posexplode + (cid, pos) partial agg,
-    // never a vector collect), then the same exhaustive search: with
-    // nprobe = nlist the result is provably the brute-force truth
-    // REGARDLESS of where the centroids sit, so the q42 oracle applies
-    // verbatim while the driver now executes the full refinement
-    // pipeline (round-3 judge: Lloyd was spec-only). ──
-    "q44_sim_topk_ivf_lloyd" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      SimSearch.ivfTopK(emb, emb.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", k = 5, nlist = 16, nprobe = 16, lloydIters = 2)
-    }),
-
-    // ── IVF against the PERSISTED index: anchors + inverted lists
-    // written once (the build-once artifact — at 100 TB the corpus
-    // assignment is rebuilt on compaction, not per query batch), then
-    // the query batch probes the stored tables only. Exhaustive
-    // nprobe = nlist, so the oracle is q42's brute-force truth ──
-    "q88_sim_topk_ivf_stored" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      // build-once like q79: runs after the first probe the stored
-      // index, so the bench median measures the probe-only path;
-      // ensureStoredIvfIndex is the shared content-keyed seam q224's
-      // streaming serving path resolves too (same index by construction)
-      val idxPath = SimSearch.ensureStoredIvfIndex(s, dir, nlist = 16)
-      SimSearch.ivfTopKAgainstIndex(
-        SimSearch.readIvfIndex(s, idxPath),
-        emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
-        k = 5, nprobe = 16)
-    }),
-
-    // ── gap-based sessionization (30-min gap): break flags + cumulative
-    // session ids + per-session aggregate, all sharing ONE
-    // hashpartitioning(user) shuffle; integer-microsecond gap math so
-    // the oracle mirrors it exactly (see operators/Sessionize) ──
-    "q43_sessions" -> ((s, dir) =>
-      graft.operators.Sessionize.sessions(t(s, dir, "events"), "user_id", "ts", 30,
-        Some(asDouble(sum(dec2(col("value"))))))),
-
-    // ── ext: the APPROXIMATE-recall contract (round-3 judge: the
-    // nprobe<nlist / reduced-table modes were spec-only). Each method's
-    // candidate-cut configuration is joined against the in-Spark
-    // brute-force truth (itself oracle-certified via q19) and collapsed
-    // to one (method, n_exact, n_hit, recall_ok) row — recall ≥ 0.9 is
-    // the declared contract. Every input is deterministic (fixed seeds,
-    // JDK-specified gaussians, sequential-fold doubles, id-broken
-    // ties), so n_hit is a pure function of the corpus and the oracle
-    // pins it (provenance: measured from this query at sf0.01, the
-    // driver's correctness scale; n_exact is computed independently by
-    // the oracle's own brute-force SQL). ──
-    "q46_ann_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") % 50 === 0)
-      // the exact truth feeds FOUR consumers (semi-join + n_exact agg,
-      // × two contract rows) — materialize once instead of re-running
-      // the brute-force broadcast join per consumer (the q69
-      // multi-consumer discipline; round-19 optimization)
-      val exact = SimSearch.bruteForceTopK(emb, qs, "vec_id", "embedding", k = 5)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
-      def contract(method: String, approx: DataFrame): DataFrame =
-        exact.join(approx.select("query_id", "neighbor_id"),
-            Seq("query_id", "neighbor_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hit"))
-          .crossJoin(exact.agg(count(lit(1)).as("n_exact")))
-          .select(lit(method).as("method"), col("n_exact"), col("n_hit"),
-            (col("n_hit") >= col("n_exact") * 0.9).as("recall_ok"))
-      contract("ivf_nprobe12",
-          SimSearch.ivfTopK(emb, qs, "vec_id", "embedding", k = 5,
-            nlist = 16, nprobe = 12, lloydIters = 1))
-        .unionByName(contract("lsh_t8",
-          SimSearch.lshTopK(emb, qs, "vec_id", "embedding", k = 5,
-            dim = 64, bits = 2, tables = 8)))
-    }),
-
-    // ── DSv2 source with kind-predicate pushdown (round-3 judge: the
-    // Grf1 source was spec-only and pruned columns but not predicates):
-    // header-level metadata for the image files only, the kind=0 filter
-    // enforced inside the reader (Grf1SourceSpec asserts no residual
-    // Filter node survives). Oracle: media_expected.parquet dims
-    // (formula-authored, provenance-checked) with payloadBytes = w·h·c
-    // — the GRF1 image payload is exactly one byte per (x, y, channel).
-    "q47_grf1_meta" -> ((s, _) =>
-      s.read.format("graft.sources.grf.Grf1DataSource").load(FixturesDir + "/media")
-        .filter(col("kind") === 0)
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("width"), col("height"), col("channels"), col("payloadBytes"))),
-
-    // ── UNPIVOT / melt (q36 pivot's inverse): wide measure columns to
-    // (variable, value) rows. Aggregation after the melt goes back
-    // through exact decimal — value is a double only transiently, and
-    // dec2's half-up round to 2dp is deterministic in both engines. ──
-    "q52_unpivot" -> ((s, dir) =>
-      t(s, dir, "part")
-        .select(col("p_partkey"),
-          col("p_retailprice").cast("double").as("p_retailprice"),
-          col("p_size").cast("double").as("p_size"))
-        .unpivot(Array(col("p_partkey")),
-          Array(col("p_retailprice"), col("p_size")), "var", "val")
-        .groupBy("var")
-        .agg(count(lit(1)).as("n"),
-          asDouble(sum(dec2(col("val")))).as("total"))),
-
-    // ── deterministic string aggregation: collect_list order is
-    // execution-dependent, so the portable form is array_sort before
-    // concat_ws — the same discipline as the IVF centroid rebuild. ──
-    "q53_string_agg" -> ((s, dir) => {
-      val n = t(s, dir, "nation")
-      n.join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name")
-        .agg(concat_ws(",", array_sort(collect_list(col("n_name")))).as("nations"),
-          count(lit(1)).as("n_nations"))
-    }),
-
-    // ── argmax WITHOUT a window: max(struct(value, tiebreak)) is one
-    // partial-aggregable pass — at 100 TB this is a map-side combine
-    // instead of the full per-group sort a row_number window needs.
-    // The struct's field order (value first, id second) IS the
-    // deterministic tie-break, mirrored by the oracle's ORDER BY. ──
-    "q54_argmax" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy("event_type")
-        .agg(max(struct(col("value"), col("event_id"))).as("m"))
-        .select(col("event_type"),
-          col("m.value").as("top_value"),
-          col("m.event_id").as("top_event_id"))),
-
-    // ── exact DISCRETE percentiles (ordered-set aggregate surface):
-    // percentile_disc returns an actual data value (the first whose
-    // cume_dist ≥ p), so cross-engine parity is exact — the
-    // interpolating percentile_cont would hash-mismatch on FP
-    // operation order. Exact percentile is a full sort per group; at
-    // 100 TB the approximate sketch (approx_percentile/t-digest) is
-    // the right tool, but its sketch is engine-specific, so the oracle
-    // pins the exact form (same reasoning as q35's count-distinct). ──
-    "q51_percentiles" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy("event_type")
-        .agg(
-          expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY value)").as("p50"),
-          expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY value)").as("p90"),
-          expr("percentile_disc(0.99) WITHIN GROUP (ORDER BY value)").as("p99"),
-          min(col("value")).as("vmin"),
-          max(col("value")).as("vmax"),
-          count(lit(1)).as("n"))),
-
-    // ── RANGE-frame moving window: trailing 7-day revenue per event
-    // type — rangeBetween on a day NUMBER (not rows: gap days must
-    // shrink the window, which a rows frame gets wrong). Sum stays
-    // exact decimal inside the frame, doubles only at the edge; the
-    // avg divides the two already-emitted values, so parity is
-    // structural. ──
-    "q50_moving_window" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"), dayKey(col("ts")).as("day"))
-        .agg(sum(dec2(col("value"))).as("rev"))
-        .withColumn("daynum",
-          datediff(to_date(col("day")), lit("1970-01-01").cast("date")))
-      val w = Window.partitionBy("event_type").orderBy("daynum").rangeBetween(-6, 0)
-      daily.select(col("event_type"), col("day"),
-          asDouble(col("rev")).as("day_rev"),
-          asDouble(sum(col("rev")).over(w)).as("rev_7d"),
-          count(lit(1)).over(w).as("n_days_7d"))
-        .withColumn("avg_7d", col("rev_7d") / col("n_days_7d"))
-    }),
-
-    // ── as-of join (operators/AsofJoin): most recent preceding 'view'
-    // per user for every 'purchase' — the union+window rewrite (one
-    // hashpartitioning(user) exchange, no theta-join); right side
-    // pre-aggregated to (user, ts) uniqueness per the operator
-    // contract. The oracle is DuckDB's NATIVE ASOF LEFT JOIN, so the
-    // rewrite is certified against an independent first-class
-    // implementation of the semantics. ──
-    "q49_asof_join" -> ((s, dir) => {
-      import graft.operators.AsofJoin
-      val ev = t(s, dir, "events")
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max(col("event_id")).as("view_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      AsofJoin.asofLeft(purchases, views, "user_id", "ts", "ts", Seq("view_id"))
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("t_us"),
-          unix_micros(col("asof_time")).as("view_us"),
-          col("view_id"))
-    }),
-
-    // ── as-of join as a NATIVE Catalyst operator (plans/AsofMergeJoin:
-    // custom LogicalPlan + planner Strategy + SparkPlan — the engine's
-    // whole-operator extension tier): q49's exact workload through the
-    // per-partition streaming merge instead of the union+window
-    // rewrite. Same single co-partitioned exchange pair, but each side
-    // keeps its own width (no union null-padding through the shuffle),
-    // no window buffer, no post-filter; O(1) carried state per task.
-    // Certified against q49's IDENTICAL DuckDB ASOF JOIN oracle, so
-    // the two engine paths cannot drift apart. ──
-    "q196_asof_native" -> ((s, dir) => {
-      import graft.plans.AsofMergeJoin
-      val ev = t(s, dir, "events")
-      // NOT repartition(user_id)-before-aggregate: that would merge
-      // the right side's two exchanges into one, but the A/B measured
-      // it SLOWER (0.48 vs 0.39 s sf0.1) — the aggregate's first
-      // exchange ships map-side-combined partial rows while a
-      // repartition ships every raw view row. Fewer exchanges is not
-      // less data moved; the second exchange carries only the deduped
-      // (user_id, ts) grain.
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max(col("event_id")).as("view_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      AsofMergeJoin.asofLeft(purchases, views, "user_id", "ts", "ts", Seq("view_id"))
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("t_us"),
-          unix_micros(col("asof_time")).as("view_us"),
-          col("view_id"))
-    }),
-
-    // ── tolerance-bounded as-of (plans/AsofMergeJoin.asofLeftWithin):
-    // the feature-freshness contract of a feature-store join — a view
-    // older than 24 h at purchase time is not an acceptable feature,
-    // so its match is NULLED (the purchase row survives with null
-    // features; dropping it would bias any downstream aggregate). The
-    // gate is calibrated to bite without saturating: match-age
-    // quantiles on this corpus are p50 ≈ 14 h / p75 ≈ 34 h, so ~40%
-    // of real matches go stale (a 1 h gate nulled 1941/1981 —
-    // vacuous the other way). One `when` per emitted column over the
-    // native merge; the oracle is DuckDB's ASOF JOIN with the same
-    // CASE gate. ──
-    "q201_asof_fresh" -> ((s, dir) => {
-      import graft.plans.AsofMergeJoin
-      val ev = t(s, dir, "events")
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max(col("event_id")).as("view_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      AsofMergeJoin.asofLeftWithin(purchases, views, "user_id", "ts", "ts",
-          Seq("view_id"), maxAgeUs = 86400000000L)
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("t_us"),
-          unix_micros(col("asof_time")).as("view_us"),
-          col("view_id"))
-    }),
-
-    // ── cross-corpus n-gram novelty (ext/TextAnalysis.ngramNovelty):
-    // the CCNet-shaped LM-free quality/drift signal — per scored doc,
-    // how many TRIGRAM occurrences were never seen in the 1/5
-    // reference slice. n=3 is calibrated to the corpus: on the
-    // ~31-token synthetic vocabulary bigrams saturate (mean unseen
-    // 0.5% — the q147 vacuity trap, measured before wiring) while
-    // trigrams spread 0..0.97. Reference collapses to its distinct
-    // gram set (one aggregate), scored docs explode once and
-    // hash-join it; all-integer outputs, exact under the hash. ──
-    "q202_ngram_novelty" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      TextAnalysis.ngramNovelty(
-        docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") % 5 === 1), "doc_id", "text", n = 3)
-    }),
-
-    // ── binary (sign-bit) embeddings, direct arm: 1 bit/dim (32×
-    // compression, 2× below the m=16 PQ codes), searched by Hamming
-    // distance over packed 32-bit sign words. ALL-INTEGER scoring —
-    // sign words and distances are exact in both engines, so unlike
-    // the PQ arms this direct search is row-certified with no pinned
-    // values: the full top-5 set (ties broken hamming asc, id asc)
-    // hash-matches DuckDB bit for bit. ──
-    "q203_hamming_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      SimSearch.hammingTopK(emb, emb.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", dim = 64, k = 5)
-    }),
-
-    // ── binary tier, production arm: Hamming shortlist(100) + exact
-    // cosine rerank to top-5 under the q46 pinned-recall discipline —
-    // the pqRerankTopK shape one compression level down (8 B/vector:
-    // the shortlist scan is pure integer xor/popcount; R=50 measured
-    // 44/50, the binary code is coarser than PQ so it buys its recall
-    // with shortlist width — still a 1/5-corpus scan at sf0.01 and a
-    // vanishing fraction at scale, where shortlist stays CONSTANT). ──
-    "q204_hamming_rerank" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") % 50 === 0)
-      val exact = SimSearch.bruteForceTopK(emb, qs, "vec_id", "embedding", k = 5)
-        .select("query_id", "neighbor_id")
-      val approx = SimSearch.hammingRerankTopK(emb, qs, "vec_id", "embedding",
-        dim = 64, shortlist = 100, k = 5)
-      exact.join(approx.select("query_id", "neighbor_id"),
-          Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-        .crossJoin(exact.agg(count(lit(1)).as("n_exact")))
-        .select(lit("hamming_rerank100").as("method"), col("n_exact"), col("n_hit"),
-          (col("n_hit") >= col("n_exact") * 0.9).as("recall_ok"))
-    }),
-
-    // ── STREAMING novelty scoring (q202's operator under three-wave
-    // streamed delivery): each microbatch is scored against a
-    // PRECOMPUTED reference gram set (stream-static shape —
-    // TextAnalysis.ngramSet built once, never re-derived per
-    // trigger), batch results spooled via foreachBatch. Per-doc
-    // novelty carries no cross-batch state, so q202's IDENTICAL
-    // oracle certifies that wave splitting is invisible in the rows —
-    // the q185/q186/q187 identical-oracle discipline on the text
-    // side. ──
-    "q208_novelty_stream" -> ((s, dir) =>
-      graft.streaming.StreamingReports.noveltyStreamReplay(s, dir)),
-
-    // ── skip-gram pairs over the certified walks (q205 completed
-    // into the full DeepWalk data prep): every (center, context) node
-    // pair within window 2 on the same walk, counted — the training
-    // pairs a node-embedding run consumes. Same md5-replayable walks,
-    // so the pair table row-certifies against the chain + one
-    // self-join in SQL. ──
-    "q209_skipgram_pairs" -> ((s, dir) => {
-      val edges = t(s, dir, "orders")
-        .select((col("o_custkey") % 40).as("src"), (col("o_orderkey") % 40).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      graft.operators.GraphWalk.skipGramPairs(
-        graft.operators.GraphWalk.walks(edges, "src", "dst",
-          edges.select(col("src")), "src", steps = 4),
-        window = 2)
-    }),
-
-    // ── deterministic BOUNDED-POOL negative sampling (the other half
-    // of the q209 skip-gram training set): per center, up to 3 nodes
-    // drawn by 16 md5 probes into the shard-addressed dictionary
-    // (cost O(|centers|·probes), never |centers|×|nodes| — the
-    // web-scale shape), excluding the center and its positive
-    // contexts; replayable like the walks, so the negatives
-    // row-certify against the same chain + the probe arithmetic. ──
-    "q210_negative_samples" -> ((s, dir) => {
-      val edges = t(s, dir, "orders")
-        .select((col("o_custkey") % 40).as("src"), (col("o_orderkey") % 40).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val pairs = graft.operators.GraphWalk.skipGramPairs(
-        graft.operators.GraphWalk.walks(edges, "src", "dst",
-          edges.select(col("src")), "src", steps = 4),
-        window = 2)
-      val nodes = edges.select(col("src").as("node"))
-        .unionByName(edges.select(col("dst").as("node"))).distinct()
-      graft.operators.GraphWalk.negativeSamples(pairs, nodes, k = 3)
-    }),
-
-    // ── integer node features (GraphSAGE-style feature engineering):
-    // per node — out/in degree, 2-hop path count (sum over
-    // out-neighbors of their out-degree), distinct 2-hop reach. One
-    // edge⨝edge equi-join, no iteration; every node keeps a 0-filled
-    // row. All-integer, so the feature table row-certifies. ──
-    "q211_node_features" -> ((s, dir) => {
-      val edges = t(s, dir, "orders")
-        .select((col("o_custkey") % 40).as("src"), (col("o_orderkey") % 40).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      graft.operators.GraphWalk.nodeFeatures(edges, "src", "dst")
-    }),
-
-    // ── FuseCosine optimizer rule in operation (plans/FuseCosine —
-    // the injected-Rule tier): the query writes the PORTABLE composed
-    // cosine (three array walks) and opts in via
-    // spark.graft.fuseCosine; the rule rewrites it to the fused
-    // codegen'd cosine_sim, and the body ASSERTS the fusion fired in
-    // the optimized plan before returning — so the driver run itself
-    // re-certifies the rewrite, and the oracle certifies it is
-    // bit-invisible in the rows (the flag's fixed-dim precondition
-    // holds on the embeddings table by construction). ──
-    "q207_cosine_fused" -> ((s0, dir) => {
-      import graft.plans.FuseCosine
-      // cloned session: the opt-in flag and rule stay scoped to THIS
-      // query's plan — the shared Verify/Bench session never plans
-      // with the fusion armed (the returned DF executes on the clone)
-      val s = s0.newSession()
-      FuseCosine.install(s)
-      s.conf.set("spark.graft.fuseCosine", "true")
-      val emb = t(s, dir, "embeddings")
-      val c = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("__cv"))
-      val q = emb.filter(col("vec_id") % 43 === 0)
-        .select(col("vec_id").as("query_id"), col("embedding").as("__qv"))
-      val composed = SimSearch.dotD(col("__qv"), col("__cv")) /
-        sqrt(SimSearch.dotD(col("__qv"), col("__qv")) *
-          SimSearch.dotD(col("__cv"), col("__cv")))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      val out = c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-        .withColumn("cosine", composed)
-        .withColumn("rank", row_number().over(w).cast("bigint"))
-        .filter(col("rank") <= 5)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-      require(out.queryExecution.optimizedPlan.toString.contains("cosine_sim"),
-        "FuseCosine must rewrite the composed recipe in this plan")
-      out
-    }),
-
-    // ── deterministic graph walks (operators/GraphWalk — the
-    // DeepWalk/node2vec corpus-generation step): 4-hop walks from
-    // every source node of the q110 order graph, each hop an
-    // md5("seed:step:u:v")-argmin neighbor choice — the md5-sampling
-    // discipline on graphs, so the "random" walks replay exactly in
-    // DuckDB (step-unrolled CTEs, same hash string, same (md5, id)
-    // tie order) and the full walk set is row-certified. ──
-    "q205_graph_walks" -> ((s, dir) => {
-      val edges = t(s, dir, "orders")
-        .select((col("o_custkey") % 40).as("src"), (col("o_orderkey") % 40).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      graft.operators.GraphWalk.walks(edges, "src", "dst",
-        edges.select(col("src")), "src", steps = 4)
-    }),
-
-    // ── q205 through a BUCKETED edge table (the persisted-index
-    // discipline applied to iterative graph probes): the distinct edge
-    // set is written once bucketed+sorted on the source node, so each
-    // hop's join moves only the FRONTIER through an exchange — the
-    // edge side is read in place, never reshuffled or re-sorted
-    // per hop. Same walk semantics ⇒ certified against q205's oracle
-    // VERBATIM (the q185/q186/q187 identical-oracle discipline);
-    // build-once content-keyed table, so the bench median measures
-    // the probe-only path (q88 discipline). ──
-    "q212_graph_walks_bucketed" -> ((s, dir) => {
-      val edges = t(s, dir, "orders")
-        .select((col("o_custkey") % 40).as("src"), (col("o_orderkey") % 40).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/orders.parquet")
-      graft.operators.GraphWalk.walksBucketedEdges(edges, "src", "dst",
-        edges.select(col("src")), "src", steps = 4, buckets = 8,
-        table = s"graft_edges_w$fp",
-        path = s"${System.getProperty("java.io.tmpdir")}/graft_edges_w$fp")
-    }),
-
-    // ── URL canonicalization (ext/UrlCanon): the crawl-side dedup
-    // stage that runs BEFORE content dedup — scheme/host lowercased,
-    // userinfo/fragment stripped, default ports dropped, trailing
-    // slashes collapsed, query params SORTED; pure native string/regex
-    // expressions (no UDF, RE2-safe — DuckDB reproduces every one).
-    // Fixture: deterministic messy spellings synthesized from
-    // `documents` (case/port/query-order/slash/fragment variants plus
-    // a non-URL arm that must canonicalize to NULL). ──
-    "q213_url_canon" -> ((s, dir) => {
-      import graft.ext.UrlCanon
-      val raw = urlFixture(t(s, dir, "documents"))
-      raw.select(col("doc_id"), col("url"),
-          UrlCanon.canonicalUrl(col("url")).as("canonical_url"))
-        .withColumn("host",
-          when(col("canonical_url").isNull, lit(null).cast("string"))
-            .otherwise(UrlCanon.canonicalHost(col("canonical_url"))))
-    }),
-
-    // ── host-grain crawl rollup (the crawl-ops table a 100-TB
-    // pipeline watches): canonical-URL dedup (min-id keep) then per
-    // canonical host — distinct surviving URLs, total raw fetches,
-    // bytes of the kept docs. One keyed aggregate per grain. ──
-    "q214_host_rollup" -> ((s, dir) =>
-      graft.ext.UrlCanon.hostRollup(
-        urlFixture(t(s, dir, "documents")), "url", "doc_id", "n_chars")),
-
-    // ── per-fetch URL decisions feeding the crawl capstone: bad_url /
-    // kept / dup_url BEFORE any shingling or index probe — the variant
-    // mass dies on a string aggregate, not in the minhash pipeline.
-    // Same decision-table idiom as q190's dup_index/dup_batch. ──
-    "q215_crawl_url_dedup" -> ((s, dir) =>
-      graft.ext.UrlCanon.urlDecisions(
-          urlFixture(t(s, dir, "documents")).drop("n_chars"), "url", "doc_id")
-        .select("doc_id", "url", "canonical_url", "decision")),
-
-    // ── the STAGED crawl-dedup capstone: canonicalize → per-canonical-
-    // URL dedup → minhash content near-dup ONLY over the URL-surviving
-    // docs (the real pipeline order — spelling variants never reach the
-    // shingle/index tier; at sf0.01 the URL stage kills 272 of 470
-    // fetches before any minhash work). Content rule is q190's
-    // conservative batch rule: suppressed iff a SMALLER-id kept doc is
-    // near-dup-similar. Four decision classes certified in one table:
-    // bad_url / dup_url / dup_content / kept. ──
-    // ── per-host crawl BUDGET enforcement: after URL dedup, keep at
-    // most 5 docs per canonical host, deterministically (sampleExactN's
-    // md5-ranked exact-N per stratum, q100's certified machinery) —
-    // "crawl politeness" for the corpus builder: no host may dominate
-    // the intake no matter how many URLs it serves. The budget binds
-    // on the fixture: ~10 kept docs/host → 5 survive. ──
-    "q217_host_budget" -> ((s, dir) => {
-      import graft.ext.UrlCanon
-      val dec = UrlCanon.urlDecisions(
-        urlFixture(t(s, dir, "documents")).drop("n_chars"), "url", "doc_id")
-      val kept = dec.filter(col("decision") === "kept")
-        .select(col("doc_id"), col("canonical_url"),
-          UrlCanon.canonicalHost(col("canonical_url")).as("host"))
-      graft.operators.Sampling.sampleExactN(kept, "host", col("doc_id"),
-        n = 5, salt = "budget-v1")
-    }),
-
-    // ── STREAMING URL triage: q213's canonicalization on a LIVE
-    // ingest (.write.json waves → readStream.json → UrlCanon
-    // projections) — a stateless per-row map, so two delivery waves
-    // must accumulate the identical table; certified against q213's
-    // batch oracle VERBATIM (the q185 discipline). ──
-    "q218_url_canon_stream" -> ((s, dir) =>
-      graft.streaming.StreamingReports.urlCanonStreamReplay(
-        s, urlFixture(t(s, dir, "documents")).select("doc_id", "url"))),
-
-    // ── WEB-GRAPH construction from crawled HTML (the link-analysis
-    // half of a crawl pipeline): regexp-extract every href, canonical-
-    // ize (junk hrefs drop through the NULL route), roll up to the
-    // canonical-host link graph. Pure projections + one keyed count —
-    // the 100-TB shape for "build the host graph from 100 TB of
-    // pages". ──
-    "q219_link_graph" -> ((s, dir) =>
-      linkEdges(t(s, dir, "documents")).groupBy("src_host", "dst_host")
-        .agg(count(lit(1)).as("n_links"))),
-
-    // ── DATASET CARD: the one-table audit manifest a training-data
-    // owner publishes — corpus size, source/language mix, byte/token
-    // mass, exact-dup burden, size extremes — as (metric, value)
-    // rows from ONE scan + one flat aggregate (the multi-
-    // count_distinct Expand is the documented q67 trade), unpivoted
-    // via inline(array(struct…)) (stack() rejects heterogeneous
-    // field names — the round-7 lesson). All-integer ⇒ row-certifies.
-    "q225_dataset_card" -> ((s, dir) => {
-      // card over a corpus WITH re-ingested mass (the q103/q189
-      // fixture pattern): documents plus a %13 slice under new ids —
-      // the synthetic base corpus has zero byte-identical texts, so
-      // the dup metric would be vacuously 0 on it
-      val docs = withDupSlice(t(s, dir, "documents"))
-      val agg = docs.agg(
-        count(lit(1)).as("n_docs"),
-        count_distinct(col("source")).as("n_sources"),
-        count_distinct(col("lang")).as("n_langs"),
-        sum(col("n_chars")).as("total_bytes"),
-        sum(size(TextAnalysis.tokens(col("text"))).cast("long"))
-          .as("total_tokens"),
-        (count(lit(1)) - count_distinct(md5(col("text"))))
-          .as("n_exact_dup_docs"),
-        max(col("n_chars")).as("max_doc_bytes"),
-        sum(when(col("n_chars") < 100, 1L).otherwise(0L)).as("n_short_docs"))
-      val metrics = Seq("n_docs", "n_sources", "n_langs", "total_bytes",
-        "total_tokens", "n_exact_dup_docs", "max_doc_bytes", "n_short_docs")
-      agg.select(inline(array(
-        metrics.map(m => struct(lit(m).as("metric"), col(m).as("value"))): _*)))
-    }),
-
-    // ── STREAMING ANN serving: the stored IVF index probed by a live
-    // query stream (parquet waves → foreachBatch probe against the
-    // frozen index). Per-query top-k is batch-independent, so the
-    // accumulated results must equal the one-shot q88 probe —
-    // certified against q88's oracle VERBATIM. ──
-    "q224_ann_stream_probe" -> ((s, dir) =>
-      graft.streaming.StreamingReports.ivfStreamProbeReplay(s, dir)),
-
-    // ── robots-style allow/deny by LONGEST-prefix match (the crawl-
-    // compliance stage): a broadcast (host, prefix, allow) policy
-    // table; each fetch takes its longest matching prefix rule —
-    // '/' allows, '/Docs/<d>' denies a subtree, '/Docs/<d>7' is an
-    // allow-override beneath it, so precedence is exercised three
-    // levels deep. Unmatched fetches default to allow. ──
-    "q223_robots_filter" -> ((s, dir) => {
-      import graft.ext.UrlCanon
-      val raw = urlFixture(t(s, dir, "documents")).drop("n_chars")
-        .filter(UrlCanon.canonicalUrl(col("url")).isNotNull)
-      UrlCanon.robotsDecide(raw, "doc_id", "url", robotsRulesFixture(s))
-    }),
-
-    // ── crawl politeness scheduling — the composed frontier capstone:
-    // URL dedup (q215) → robots compliance (q223's policy, allow only)
-    // → per-host budget (q217's exact-N machinery) → deterministic
-    // per-host ROUND-ROBIN interleave: within host, fetches rank by a
-    // salted md5 permutation; globally rank-1 fetches of every host
-    // precede any rank-2 fetch. fetch_seq is a dense 1..n schedule via
-    // Layout.globalDenseSeq (range-sorted enumeration — never a
-    // single-partition window). ──
-    "q229_politeness_schedule" -> ((s, dir) => {
-      import graft.ext.UrlCanon
-      val dec = UrlCanon.urlDecisions(
-        urlFixture(t(s, dir, "documents")).drop("n_chars"), "url", "doc_id")
-      val kept = dec.filter(col("decision") === "kept")
-        .select(col("doc_id"), col("canonical_url"))
-      val allowed = UrlCanon
-        .robotsDecide(kept, "doc_id", "canonical_url", robotsRulesFixture(s))
-        .filter(col("decision") === "allow")
-        .select(col("doc_id"), col("host"))
-      val budgeted = graft.operators.Sampling.sampleExactN(
-        allowed, "host", col("doc_id"), n = 5, salt = "budget-v1")
-      UrlCanon.politenessSchedule(budgeted, "host", "doc_id")
-    }),
-
-    // ── EXACT n-gram decontamination (the verbatim-leak rule,
-    // complementing q87's minhash near-dup rule): a training doc is
-    // flagged iff it shares ANY word 8-gram with the eval slice —
-    // distinct (doc, gram) explosion both sides, eval grams broadcast
-    // (benchmark corpora are tiny next to training), one keyed join +
-    // per-doc count. 14 of 400 train docs flagged at sf0.01. ──
-    "q222_ngram_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.ngramContaminated(
-        docs.filter(col("doc_id") % 5 =!= 0),
-        docs.filter(col("doc_id") % 5 === 0),
-        "doc_id", "text", n = 8)
-    }),
-
-    // ── BLOOM-PREFILTERED exact decontamination (the scaladoc's
-    // "bloom-prunes via BloomJoin" promise made real — the 100-TB
-    // form when the eval-suite gram set is too large to broadcast):
-    // a compact Bloom filter over the eval grams prunes the training
-    // gram stream BEFORE the join shuffle; the exact semi join then
-    // removes the false positives, false negatives are impossible —
-    // so the result equals q222 and is certified against q222's
-    // oracle VERBATIM (NgramDecontamSql, the q186 discipline). The
-    // filter is sized TIGHT (64k bits for ~40k distinct grams, ~13%
-    // FP at sf0.01) so the exact-confirm leg is provably load-bearing
-    // rather than a pass-through. ──
-    "q333_bloom_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.ngramContaminatedBloom(
-        docs.filter(col("doc_id") % 5 =!= 0),
-        docs.filter(col("doc_id") % 5 === 0),
-        "doc_id", "text", n = 8,
-        expectedItems = 65536L, numBits = 65536L)
-    }),
-
-    // ── incremental link-graph maintenance: per-batch edge STATES
-    // (q97's mergeable state/fold machinery) folded into the full
-    // graph — a crawl batch updates host-edge counts without
-    // re-extracting the historical corpus. Certified against q219's
-    // oracle VERBATIM: merge(state(old), state(batch)) must equal the
-    // one-shot extraction. ──
-    "q221_linkgraph_incremental" -> ((s, dir) => {
-      import graft.operators.IncrementalAgg
-      val docs = t(s, dir, "documents")
-      def st(d: DataFrame) =
-        IncrementalAgg.state(linkEdges(d), Seq("src_host", "dst_host"))
-      IncrementalAgg.merge(
-          st(docs.filter(col("doc_id") % 3 =!= 0)),
-          st(docs.filter(col("doc_id") % 3 === 0)),
-          Seq("src_host", "dst_host"))
-        .select(col("src_host"), col("dst_host"), col("cnt").as("n_links"))
-    }),
-
-    // ── host-authority capstone: integer-exact PageRank (q110's
-    // certified fixed-point machinery) over the q219 host graph —
-    // link extraction → canonicalization → graph → authority in one
-    // certified chain, joining the URL family to the graph family. ──
-    "q220_host_pagerank" -> ((s, dir) => {
-      val e = linkEdges(t(s, dir, "documents")).select(
-          regexp_extract(col("src_host"), "src([0-9]+)", 1).cast("long").as("src"),
-          regexp_extract(col("dst_host"), "src([0-9]+)", 1).cast("long").as("dst"))
-        // pageRank consumes its edges four ways; checkpoint the
-        // expensive extract→resolve→canonicalize derivation ONCE
-        .localCheckpoint()
-      graft.operators.PageRank.pageRank(e, "src", "dst", iterations = 3)
-        .select(concat(lit("www.src"), col("node").cast("string"),
-          lit(".example.com")).as("host"), col("rank"))
-    }),
-
-    "q216_crawl_staged_dedup" -> ((s, dir) => {
-      import graft.ext.UrlCanon
-      val dec = UrlCanon.urlDecisions(
-          urlFixture(t(s, dir, "documents")).drop("n_chars"), "url", "doc_id")
-        .select("doc_id", "canonical_url", "decision")
-        .localCheckpoint() // feeds the kept slice AND the final table
-      val kept = dec.filter(col("decision") === "kept")
-        .join(t(s, dir, "documents").select("doc_id", "text"), Seq("doc_id"))
-      val pairs = Dedup.nearDupPairsMinhash(kept, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.8)
-      val dupContent = pairs.select(col("doc_b").as("doc_id")).distinct()
-        .withColumn("__dc", lit(1))
-      dec.join(dupContent, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("canonical_url"),
-          when(col("decision") === "kept" && col("__dc").isNotNull,
-            lit("dup_content")).otherwise(col("decision")).as("decision"))
-    }),
-
-    // ── HTML main-content extraction (ext/HtmlExtract): the stage
-    // between fetch and text analysis the crawl family was missing —
-    // strip script/style/comments, drop tags, decode entities,
-    // collapse whitespace; pure codegen'd regex/replace chain, no UDF,
-    // RE2-safe (DuckDB runs the identical chain). Hostile fixture:
-    // script bodies with '<', unclosed script/comment swallowing to
-    // EOS, entity runs, truncated-fetch unclosed tags. ──
-    "q226_html_extract" -> ((s, dir) =>
-      htmlFixture(t(s, dir, "documents"))
-        .select(col("doc_id"),
-          graft.ext.HtmlExtract.mainText(col("html")).as("main_text"))
-        .withColumn("n_chars_text", length(col("main_text")).cast("long"))),
-
-    // ── the FULL crawl-text chain (q216's staged capstone with the
-    // missing stage inserted): canonicalize → per-canonical-URL dedup
-    // → EXTRACT main text from the fetched HTML → minhash content
-    // near-dup over the extracted text. The content tier now scores
-    // what a real pipeline scores — page text, not raw bytes — and
-    // spelling variants still never reach the shingle tier. ──
-    "q227_crawl_text_capstone" -> ((s, dir) => {
-      import graft.ext.{HtmlExtract, UrlCanon}
-      val docs = t(s, dir, "documents")
-      val dec = UrlCanon.urlDecisions(
-          urlFixture(docs).drop("n_chars"), "url", "doc_id")
-        .select("doc_id", "canonical_url", "decision")
-        .localCheckpoint() // feeds the kept slice AND the final table
-      val kept = dec.filter(col("decision") === "kept")
-        .join(htmlFixture(docs), Seq("doc_id"))
-        .select(col("doc_id"),
-          HtmlExtract.mainText(col("html")).as("text"))
-      val pairs = Dedup.nearDupPairsMinhash(kept, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.8)
-      val dupContent = pairs.select(col("doc_b").as("doc_id")).distinct()
-        .withColumn("__dc", lit(1))
-      dec.join(dupContent, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("canonical_url"),
-          when(col("decision") === "kept" && col("__dc").isNotNull,
-            lit("dup_content")).otherwise(col("decision")).as("decision"))
-    }),
-
-    // ── n-gram LM quality score (the model-based quality filter the
-    // text family lacked): bigram count-table LM trained on the 4/5
-    // REFERENCE slice only (q206's frozen-model discipline), held-out
-    // 1/5 scored as avg add-one-smoothed P(w2|w1) in ppm — all-integer
-    // DIV, no logs. Planted low-quality arm: every %3 held-out doc has
-    // its text REVERSED (out-of-vocab garbage). The flag keys on the
-    // OOV-pair share (unseen_ppm): measured first (q46 discipline),
-    // the smoothed MEAN overlapped between arms on this near-uniform
-    // corpus (29.7k-35.5k vs 28.2k-32.3k), while OOV share separates
-    // totally (in-domain ~0 vs reversed ~10^6) — threshold 500000. ──
-    "q228_lm_quality" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      TextAnalysis.lmQualityScore(
-        docs.filter(col("doc_id") % 5 =!= 0),
-        docs.filter(col("doc_id") % 5 === 0)
-          .select(col("doc_id"),
-            when(col("doc_id") % 3 === 0, reverse(col("text")))
-              .otherwise(col("text")).as("text")),
-        "doc_id", "text")
-    }),
-
-    // ── stored LM model (q228's count tables through the IndexStore
-    // lifecycle — the q199 stored-BPE discipline): train once, persist
-    // c2/ + c1/ + params/ via atomic staging keyed by the corpus
-    // fingerprint, score the held-out slice READING the stored model.
-    // Certified against q228's oracle VERBATIM: the storage round trip
-    // must be invisible in the scored rows. ──
-    "q231_lm_stored" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/documents.parquet")
-      val path = graft.operators.IndexStore.ensure(
-        s"${System.getProperty("java.io.tmpdir")}/graft_lm_${fp}_bg") { staging =>
-        val (c2, c1) = TextAnalysis.lmModel(
-          docs.filter(col("doc_id") % 5 =!= 0), "text")
-        c2.write.mode("overwrite").parquet(s"$staging/c2")
-        c1.write.mode("overwrite").parquet(s"$staging/c1")
-        s.range(1).select(lit("bigram-lm-v1").as("model"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$staging/params")
-      }
-      TextAnalysis.lmScoreWith(
-        s.read.parquet(s"$path/c2"), s.read.parquet(s"$path/c1"),
-        docs.filter(col("doc_id") % 5 === 0)
-          .select(col("doc_id"),
-            when(col("doc_id") % 3 === 0, reverse(col("text")))
-              .otherwise(col("text")).as("text")),
-        "doc_id", "text")
-    }),
-
-    // ── markup-density stats (the link-density boilerplate signal —
-    // Kohlschütter-style, integer form): per page, tag count, link
-    // count, extracted-text share of the raw bytes in ppm. Pages that
-    // are mostly markup/links are navigation/boilerplate, not
-    // training text. Pure per-row projections over the q226 chain —
-    // no shuffle; all-integer so it hash-certifies. ──
-    "q233_markup_stats" -> ((s, dir) => {
-      import graft.ext.HtmlExtract
-      htmlFixture(t(s, dir, "documents"))
-        .select(col("doc_id"),
-          size(expr("regexp_extract_all(html, '</?[A-Za-z][^>]*>', 0)"))
-            .cast("long").as("n_tags"),
-          size(expr("regexp_extract_all(html, '(?i)<a\\\\b[^>]*>', 0)"))
-            .cast("long").as("n_links"),
-          length(col("html")).cast("long").as("n_raw"),
-          length(HtmlExtract.mainText(col("html"))).cast("long").as("n_text"))
-        .withColumn("text_ppm",
-          expr("CAST(n_text * 1000000 DIV n_raw AS BIGINT)"))
-    }),
-
-    // ── sitemap FRONTIER discovery (the crawl-expansion stage):
-    // per-page sitemap XML → <loc> extraction → canonicalization (the
-    // real operator path) → LEFT ANTI against the already-crawled
-    // canonical set = the new frontier. Fixture: each sitemap lists a
-    // never-crawled /New/ target and a messy /Docs/ target whose
-    // canonical form collides with the crawled space except for six
-    // residue classes whose only fetch was the %17 bad_url arm — so
-    // the anti-join provably both keeps and drops. Oracle derives the
-    // canonical forms ARITHMETICALLY (independent truth, not the
-    // mirrored regex chain). ──
-    "q237_sitemap_frontier" -> ((s, dir) => {
-      import graft.ext.UrlCanon
-      val docs = t(s, dir, "documents")
-      val tt1 = col("doc_id") * (col("doc_id") + 5) + 2
-      val tt3 = col("doc_id") * (col("doc_id") + 13) + 11
-      val t1 = concat(lit("http://www.src"), (tt1 % 20).cast("string"),
-        lit(".example.com/New/"), (tt1 % 50).cast("string"))
-      // third loc is ROOT-RELATIVE (round 13): the sitemap protocol
-      // says absolute, real sitemaps ship relative locs anyway —
-      // crawlers resolve them against the sitemap's own URL
-      val sitemaps = docs.select(col("doc_id"), concat(
-        lit("<?xml version=\"1.0\"?><urlset><url><loc>"), t1,
-        lit("</loc></url><url><loc>"),
-        messyUrl(col("doc_id") * (col("doc_id") + 9) + 7),
-        lit("</loc></url><url><loc>/New2/"), (tt3 % 50).cast("string"),
-        lit("</loc></url></urlset>")).as("xml"))
-      val cand = sitemaps
-        .select(col("doc_id"), explode(expr(
-          "regexp_extract_all(xml, '<loc>([^<]*)</loc>', 1)")).as("loc"))
-        .select(explode_outer(array(UrlCanon.resolveUrl(
-          messyUrl(col("doc_id")), col("loc")))).as("abs_loc"))
-        .select(UrlCanon.canonicalUrl(col("abs_loc")).as("canonical_url"))
-        .filter(col("canonical_url").isNotNull).distinct()
-      val crawled = UrlCanon.urlDecisions(
-          urlFixture(docs).drop("n_chars"), "url", "doc_id")
-        .filter(col("decision") === "kept").select("canonical_url")
-      cand.join(crawled, Seq("canonical_url"), "left_anti")
-        .select(col("canonical_url"),
-          UrlCanon.canonicalHost(col("canonical_url")).as("host"))
-    }),
-
-    // ── HTTP redirect-chain resolution (UrlCanon.resolveRedirects):
-    // 3xx Location values — RELATIVE ones resolved against the fetched
-    // URL — followed through the URL-keyed redirect map to the
-    // terminal URL, with every route live: direct, 1-hop to an in-log
-    // terminal, 1-hop to an EXTERNAL url, 2-hop chains (the %10=1 arm
-    // lands on the %5=2 arm, which lands on a %5=0 terminal),
-    // root-relative Locations, javascript: junk (bad_location),
-    // self-loops, and a 2-cycle via companion /R2/ fetch rows. Oracle:
-    // every final_url/hops/status derives ARITHMETICALLY from the id
-    // residues — the chain walk is certified against closed-form
-    // truth. ──
-    "q242_redirect_chains" -> ((s, dir) => {
-      import graft.ext.UrlCanon
-      val docs = t(s, dir, "documents")
-      val i = col("doc_id")
-      def host(m: Column) = concat(lit("http://www.src"),
-        (m % 20).cast("string"), lit(".example.com"))
-      val url = concat(host(i), lit("/R/"), (i % 100).cast("string"))
-      val loc =
-        when(i % 5 === 0, lit(""))
-          .when(i % 10 === 1,
-            concat(host(i + 1), lit("/R/"), ((i + 1) % 100).cast("string")))
-          .when(i % 10 === 6,
-            concat(lit("/R/"), ((i + 4) % 100).cast("string")))
-          .when(i % 5 === 2,
-            concat(host(i + 3), lit("/R/"), ((i + 3) % 100).cast("string")))
-          .when(i % 5 === 3, lit("javascript:void(0)"))
-          .when(i % 10 === 4,
-            concat(lit("/R/"), (i % 100).cast("string")))
-          .otherwise(concat(lit("/R2/"), (i % 100).cast("string")))
-      val base = docs.select(i, url.as("url"), loc.as("loc"))
-      val extra = docs.filter(i % 10 === 9)
-        .select((i + 1000000L).as("doc_id"),
-          concat(host(i), lit("/R2/"), (i % 100).cast("string")).as("url"),
-          concat(lit("/R/"), (i % 100).cast("string")).as("loc"))
-      UrlCanon.resolveRedirects(base.unionByName(extra), "doc_id", "url", "loc")
-    }),
-
-    // ── ANCHOR-TEXT aggregation (the classic inlink signal a web-scale
-    // corpus builder indexes): <a>…</a> elements extracted whole,
-    // href resolved (scheme-relative spellings live) + canonicalized,
-    // anchor text stripped of inline markup and tokenized, then per
-    // TARGET URL: inlink count, distinct source hosts, sorted anchor
-    // vocabulary. Junk hrefs drop through the NULL-canonical route
-    // before ever contributing tokens. Shape: two keyed aggregates on
-    // dst_url (one link-grain, one token-grain) + one keyed join —
-    // never pages². Oracle: targets and token sets derive
-    // ARITHMETICALLY from the id formulas. ──
-    "q243_anchor_text" -> ((s, dir) => {
-      import graft.ext.UrlCanon
-      val docs = t(s, dir, "documents")
-      val i = col("doc_id")
-      val t1 = i * (i + 3) + 1
-      val t2 = i * (i + 7) + 5
-      val html = docs.select(i, concat(
-        lit("<html><body><p>Doc "), i.cast("string"),
-        lit("</p><a class=\"x\" href=\""), messyUrl(t1),
-        lit("\">go <b>page"), (t1 % 50).cast("string"),
-        lit("</b> now</a> <a href=\""),
-        regexp_replace(messyUrl(t2), "^[A-Za-z][A-Za-z0-9+.-]*:", ""),
-        lit("\">visit hub"), (t2 % 20).cast("string"), lit("</a>"),
-        when(i % 9 === 0,
-          lit(" <a href=\"javascript:void(0)\">click</a>"))
-          .otherwise(lit("")),
-        lit("</body></html>")).as("html"))
-      val anchors = html.select(i, explode_outer(expr(
-          "regexp_extract_all(html, " +
-            "'(?is)<a\\\\b[^>]*href=\"[^\"]*\"[^>]*>.*?</a[ \\\\t\\\\n\\\\x0B\\\\f\\\\r]*>', 0)"))
-          .as("__a"))
-        .filter(col("__a").isNotNull)
-        .select(i,
-          regexp_extract(col("__a"), "(?is)>(.*)</a[ \\t\\n\\x0B\\f\\r]*>", 1)
-            .as("__atext"),
-          explode_outer(array(UrlCanon.resolveUrl(messyUrl(i),
-            regexp_extract(col("__a"), "(?is)href=\"([^\"]*)\"", 1))))
-            .as("__abs"))
-        .withColumn("dst_url", UrlCanon.canonicalUrl(col("__abs")))
-        .filter(col("dst_url").isNotNull)
-        .withColumn("__src_host", UrlCanon.canonicalHost(messyUrl(i)))
-        .localCheckpoint() // feeds the link-grain AND token-grain aggs
-      val linkAgg = anchors.groupBy("dst_url")
-        .agg(count(lit(1)).as("n_links"),
-          count_distinct(col("__src_host")).as("n_src_hosts"))
-      val vocabAgg = anchors
-        .select(col("dst_url"), explode(TextAnalysis.tokens(
-          regexp_replace(col("__atext"), "</?[A-Za-z][^>]*>", " ")))
-          .as("__tok"))
-        .groupBy("dst_url")
-        .agg(array_join(array_sort(collect_set(col("__tok"))), " ")
-          .as("anchor_vocab"))
-      linkAgg.join(vocabAgg, Seq("dst_url"))
-    }),
-
-    // ── rel=canonical OVERRIDE dedup (the SEO-declaration tier a real
-    // crawl dedup runs before spelling dedup): pages declaring
-    // <link rel="canonical" href=…> key on the DECLARED target —
-    // attribute order varies, the href may be ROOT-RELATIVE (resolved
-    // against the page), and declarations collapse whole query/port/
-    // case spelling families onto one key; undeclared pages key on
-    // themselves. Pure composition: element extraction → resolveUrl
-    // (an ABSENT declaration extracts '' = the empty-reference class,
-    // which resolves to the page itself — the fallback for free) →
-    // the q215 urlDecisions keep rule. Oracle: effective keys derive
-    // arithmetically per class. ──
-    "q244_canonical_override" -> ((s, dir) => {
-      import graft.ext.UrlCanon
-      val docs = t(s, dir, "documents")
-      val i = col("doc_id")
-      val declared =
-        when(i % 12 === 8, concat(lit("<link href=\"/Docs/"),
-          (i % 50).cast("string"), lit("\" rel=\"canonical\">")))
-          .when(i % 6 === 2,
-            concat(lit("<link rel=\"canonical\" href=\"http://www.src"),
-              (i % 20).cast("string"), lit(".example.com/Docs/"),
-              (i % 50).cast("string"), lit("\">")))
-          .otherwise(lit(""))
-      val pages = docs.select(i, messyUrl(i).as("url"),
-        concat(lit("<html><head><title>t</title>"), declared,
-          lit("</head><body><p>x</p></body></html>")).as("html"))
-      val elem = regexp_extract(col("html"),
-        "(?is)<link\\b[^>]*rel=\"canonical\"[^>]*>", 0)
-      val declHref = regexp_extract(elem, "(?is)href=\"([^\"]*)\"", 1)
-      val eff = pages.select(i,
-        UrlCanon.resolveUrl(col("url"), declHref).as("url"))
-      UrlCanon.urlDecisions(eff, "url", "doc_id")
-        .select("doc_id", "canonical_url", "decision")
-    }),
-
-    // ── robots.txt BODY parsing (UrlCanon.parseRobots): fetched
-    // robots text → (host, prefix, allow) policy rows for one agent,
-    // with RFC 9309 group structure live — multi-UA runs, a specific
-    // mixed-case GraftBot group beating '*' on %4=0 hosts, a group
-    // that never applies, comments on rule lines, empty-Disallow
-    // no-ops, CRLF files. Oracle derives the expected rules
-    // ARITHMETICALLY from the host index (independent truth). ──
-    "q239_robots_parse" -> ((s, dir) =>
-      graft.ext.UrlCanon.parseRobots(
-        robotsBodiesFixture(s), "host", "body", "graftbot")),
-
-    // ── the composed compliance pipeline: robots BODIES → parseRobots
-    // → robotsDecide over the messy fetch log — q223 with the policy
-    // table coming from TEXT instead of a pre-shaped fixture. On %4=0
-    // hosts the specific graftbot group replaces the '*' rules (no '/'
-    // allow, /private rules match no /Docs path), so those fetches
-    // default-allow with NULL rule_prefix — live divergence from
-    // q223. ──
-    "q240_robots_pipeline" -> ((s, dir) => {
-      import graft.ext.UrlCanon
-      val raw = urlFixture(t(s, dir, "documents")).drop("n_chars")
-        .filter(UrlCanon.canonicalUrl(col("url")).isNotNull)
-      val rules = UrlCanon.parseRobots(
-        robotsBodiesFixture(s), "host", "body", "graftbot")
-      UrlCanon.robotsDecide(raw, "doc_id", "url", rules)
-    }),
-
-    // ── RECRAWL scheduling (UrlCanon.recrawlStats — Cho &
-    // Garcia-Molina change-rate estimation, integer form): five
-    // revisit rounds per URL with fingerprints that flip every
-    // `period` rounds (period = 1 + id%4; %5=0 URLs never change), so
-    // each URL's change count is CLOSED-FORM in its residues — hot
-    // (period 1-2), warm (period 3-4), cold (static) all live. ──
-    "q246_recrawl_schedule" -> ((s, dir) =>
-      graft.ext.UrlCanon.recrawlStats(
-        recrawlFixture(t(s, dir, "documents")), "url", "r", "fp")),
-
-    // ── STATEFUL streaming recrawl estimation (the q246 history as a
-    // LIVE fetch feed): per-url state is O(1) — last fingerprint +
-    // running counts — and the two delivery waves split MID-HISTORY
-    // (rounds 1-2 | 3-5), so every period-1/2/3 url's round-2→3
-    // change is detected only if the fingerprint state survived the
-    // microbatch boundary. Certified against q246's oracle VERBATIM
-    // (shared RecrawlSql); ppm/priority derive through the same
-    // withRecrawlDerived code path as the batch operator. ──
-    "q256_recrawl_stream" -> ((s, dir) =>
-      graft.streaming.StreamingReports.recrawlReplay(
-        s, recrawlFixture(t(s, dir, "documents")))),
-
-    // ── DELAY-AWARE fetch schedule (the full politeness loop closed):
-    // the q229 round-robin composed with q245's parsed group-scoped
-    // crawl delays — fetch_at_s = (host_rank−1)·delay, so slow hosts
-    // spread out while fast hosts drain; hosts whose specific group
-    // declares no delay default to 1 s. The delay table broadcasts
-    // (tiny vs the frontier). ──
-    "q247_delay_schedule" -> ((s, dir) => {
-      import graft.ext.UrlCanon
-      val dec = UrlCanon.urlDecisions(
-        urlFixture(t(s, dir, "documents")).drop("n_chars"), "url", "doc_id")
-      val kept = dec.filter(col("decision") === "kept")
-        .select(col("doc_id"), col("canonical_url"))
-      val allowed = UrlCanon
-        .robotsDecide(kept, "doc_id", "canonical_url", robotsRulesFixture(s))
-        .filter(col("decision") === "allow")
-        .select(col("doc_id"), col("host"))
-      val budgeted = graft.operators.Sampling.sampleExactN(
-        allowed, "host", col("doc_id"), n = 5, salt = "budget-v1")
-      val sched = UrlCanon.politenessSchedule(budgeted, "host", "doc_id")
-      val delays = UrlCanon.parseCrawlDelays(
-        robotsBodiesFixture(s), "host", "body", "graftbot")
-      sched.join(broadcast(delays), Seq("host"), "left")
-        .withColumn("crawl_delay_s", coalesce(col("crawl_delay_s"), lit(1L)))
-        .withColumn("fetch_at_s",
-          (col("host_rank") - 1) * col("crawl_delay_s"))
-        .select("doc_id", "host", "host_rank", "fetch_seq",
-          "crawl_delay_s", "fetch_at_s")
-    }),
-
-    // ── REGISTRABLE-DOMAIN budget (UrlCanon.registrableDomain + the
-    // q217 exact-N draw at DOMAIN grain): per-host budgeting lets a
-    // site multiply its crawl share by minting subdomains —
-    // a0.shop.srcN.co.uk and www.srcN.co.uk are ONE registrant. Arms:
-    // cc-SLD 3-label rule (%5=0), subdomain'd .com (%5=1) SHARING its
-    // domain with the bare host arm (%5=2 — 10 fetches/domain vs
-    // budget 5, so the cross-host collapse is what halves them), IPv4
-    // literals budgeted per address (%5=3), single-label intranet
-    // hosts (%5=4). Decision table: every fetch classified once. ──
-    "q250_domain_budget" -> ((s, dir) => {
-      import graft.ext.UrlCanon
-      val h = (col("doc_id") % 20).cast("string")
-      val sub = (col("doc_id") % 3).cast("string")
-      val host = when(col("doc_id") % 5 === 0,
-          concat(lit("a"), sub, lit(".shop.src"), h, lit(".co.uk")))
-        .when(col("doc_id") % 5 === 1,
-          concat(lit("cdn"), sub, lit(".src"), h, lit(".com")))
-        .when(col("doc_id") % 5 === 2, concat(lit("src"), h, lit(".com")))
-        .when(col("doc_id") % 5 === 3,
-          concat(lit("10.0."), h, lit("."), sub))
-        .otherwise(concat(lit("intra"), h))
-      val fetches = t(s, dir, "documents")
-        .select(col("doc_id"), host.as("host"))
-        .withColumn("domain", UrlCanon.registrableDomain(col("host")))
-      val kept = graft.operators.Sampling.sampleExactN(
-          fetches, "domain", col("doc_id"), n = 5, salt = "domain-v1")
-        .select(col("doc_id"), lit(true).as("in_budget"))
-      fetches.join(kept, Seq("doc_id"), "left")
-        .withColumn("in_budget", coalesce(col("in_budget"), lit(false)))
-    }),
-
-    // ── CONDITIONAL-fetch planning (HttpRecord.conditionalFetchPlan):
-    // the revalidation stage after q246 decides WHO — stored ETag →
-    // If-None-Match refetch, else Last-Modified → If-Modified-Since,
-    // else full fetch. Three revisit rounds per URL; rounds 1-2 carry
-    // a DECOY ETag ("stale"), so any non-latest selection mismatches;
-    // round-3 arms: ETag (%4=0), Last-Modified (%4=1), BOTH — the
-    // ETag must win (%4=2), neither → full (%4=3). ──
-    "q251_conditional_fetch" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val hist = docs
-        .select(col("doc_id"), explode(sequence(lit(1), lit(3))).as("r"))
-      val url = concat(lit("http://www.src"),
-        (col("doc_id") % 20).cast("string"),
-        lit(".example.com/Docs/"), col("doc_id").cast("string"))
-      val etagLine = when(col("r") < 3, lit("\r\nETag: \"stale\""))
-        .when(col("doc_id") % 4 === 0 || col("doc_id") % 4 === 2,
-          concat(lit("\r\nETag: \"v"), (col("doc_id") % 7).cast("string"),
-            lit("\"")))
-        .otherwise(lit(""))
-      val lmLine = when(col("r") === 3 &&
-          (col("doc_id") % 4 === 1 || col("doc_id") % 4 === 2),
-        concat(lit("\r\nLast-Modified: Mon, 12 Jan 2026 0"),
-          (col("doc_id") % 10).cast("string"), lit(":00:00 GMT")))
-        .otherwise(lit(""))
-      val raw = concat(lit("HTTP/1.1 200 OK"), etagLine, lmLine,
-        lit("\r\nContent-Type: text/html\r\n\r\n<p>ok</p>"))
-      graft.ext.HttpRecord.conditionalFetchPlan(
-        hist.select(url.as("url"), col("r"), raw.as("raw")),
-        "url", "r", "raw")
-    }),
-
-    // ── CONTENT-DRIFT magnitude (SimHash.contentDrift): the
-    // companion to q246's exact-fingerprint change rate — per url,
-    // simhash each revision and hamming CONSECUTIVE revisions. Arms:
-    // %3=0 identical text (drift 0), %3=1 a four-token append per
-    // round (a few shingles move — small hamming), %3=2 a per-round
-    // vowel rotation (every shingle rewrites — large hamming,
-    // drifting). ──
-    "q252_content_drift" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val hist = docs
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(1), lit(3))).as("r"))
-        .select(col("doc_id"), col("r"),
-          concat(lit("http://www.src"), (col("doc_id") % 20).cast("string"),
-            lit(".example.com/Docs/"), col("doc_id").cast("string")).as("url"),
-          when(col("doc_id") % 3 === 0, col("text"))
-            .when(col("doc_id") % 3 === 1, concat(col("text"),
-              lit(" minor update edition "), col("r").cast("string")))
-            .when(col("r") === 1, translate(col("text"), "aeiou", "eioua"))
-            .when(col("r") === 2, translate(col("text"), "aeiou", "iouae"))
-            .otherwise(translate(col("text"), "aeiou", "ouaei")).as("t"))
-      graft.ext.SimHash.contentDrift(hist, "url", "r", "t")
-    }),
-
-    // ── CACHE-FRESHNESS planning (HttpRecord.cachePlan — RFC 9111):
-    // the server-declared TTL feed for recrawl scheduling. Six arms,
-    // all closed-form: max-age arithmetic (%6=0), no-store beating a
-    // max-age in the same header (%6=1 — precedence live, plus a
-    // junk 'Expires: 0' proving garbled dates degrade, never throw),
-    // no-cache (%6=2), Expires−Date with the clock pinned so the TTL
-    // is pure HH:MM arithmetic (%12=3) and a PAST Expires clamping to
-    // 0 (%12=9), the RFC heuristic 10% of Date−Last-Modified (%6=4),
-    // and a header-bare 404 routing none (%6=5). The oracle computes
-    // every TTL from doc_id residues — the whole IMF-fixdate parse
-    // path is certified against independent truth, not a mirrored
-    // strptime. ──
-    "q253_cache_policy" -> ((s, dir) =>
-      graft.ext.HttpRecord.cachePlan(
-        cacheRawFixture(t(s, dir, "documents")), "doc_id", "raw")),
-
-    // ── REFRESH-PLAN capstone: the two recrawl signals joined — the
-    // server's declared freshness (q253 cachePlan TTL) and the
-    // crawler's OBSERVED change rate (q246 recrawlStats priority) —
-    // into one due-interval per url on a 60 s fetch cadence:
-    // `due_in_m = greatest(ttl DIV 60, priority interval 1/4/24, 1)`
-    // — trust the server when it promises longer freshness than the
-    // change history suggests, never refetch faster than the cadence.
-    // Both fixtures key on doc_id, so every output value is
-    // closed-form across BOTH residue families (mode × priority
-    // combinations live). Shape: one broadcast-sized keyed join at
-    // url grain — at 100 TB both sides are url-grain tables, the join
-    // shuffles on the key it is stored by. ──
-    "q257_refresh_plan" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val rc = graft.ext.UrlCanon.recrawlStats(
-        recrawlFixture(docs), "url", "r", "fp")
-      val cp = graft.ext.HttpRecord.cachePlan(
-          cacheRawFixture(docs), "doc_id", "raw")
-        .select(
-          concat(lit("http://www.src"), (col("doc_id") % 20).cast("string"),
-            lit(".example.com/Docs/"), col("doc_id").cast("string")).as("url"),
-          col("mode"), col("ttl_s"))
-      val ttlM = expr("CAST(ttl_s DIV 60 AS BIGINT)")
-      val priM = when(col("priority") === "hot", lit(1L))
-        .when(col("priority") === "warm", lit(4L)).otherwise(lit(24L))
-      rc.join(cp, Seq("url"))
-        .select(col("url"), col("priority"), col("mode"), col("ttl_s"),
-          greatest(ttlM, priM, lit(1L)).as("due_in_m"))
-    }),
-
-    // ── RETRY/BACKOFF planning (HttpRecord.retryBackoff): the failure
-    // half of politeness. One host per doc; attempt histories whose
-    // trailing-failure streaks are closed-form: all-green (%10=0),
-    // early failures RECOVERED by a green tail (%10=5 — streak must
-    // read 0), Retry-After honored from the LATEST response only
-    // (%5=1; %5=2 plants a DECOY Retry-After on a non-latest attempt
-    // and must fall back to exponential 5·2^2), a 404/malformed
-    // alternating streak of 6 (%5=3 — exp caps at 5·2^5), and a
-    // 9-attempt all-503 host crossing giveUpAt=8 into gave_up (%5=4).
-    // ──
-    "q254_retry_backoff" -> ((s, dir) => {
-      val id = col("doc_id")
-      val hist = t(s, dir, "documents").select(id,
-          explode(sequence(lit(1),
-            when(id % 5 === 4, lit(9)).otherwise(lit(6)))).as("r"))
-      val rr = col("r")
-      val statusLine = when(id % 10 === 0, lit("HTTP/1.1 200 OK"))
-        .when(id % 10 === 5,
-          when(rr <= 2, lit("HTTP/1.1 503 Service Unavailable"))
-            .otherwise(lit("HTTP/1.1 200 OK")))
-        .when(id % 5 === 1 || id % 5 === 2,
-          when(rr <= 3, lit("HTTP/1.1 200 OK"))
-            .otherwise(lit("HTTP/1.1 503 Service Unavailable")))
-        .when(id % 5 === 3,
-          when(rr % 2 === 0, lit("HTTP/1.1 404 Not Found"))
-            .otherwise(lit("GARBAGE")))
-        .otherwise(lit("HTTP/1.1 503 Service Unavailable"))
-      val raLine = when(id % 5 === 1 && rr === 6,
-          concat(lit("\r\nRetry-After: "), (lit(10) + id % 50).cast("string")))
-        .when(id % 5 === 2 && rr === 4, lit("\r\nRetry-After: 999"))
-        .otherwise(lit(""))
-      val raw = concat(statusLine, raLine,
-        lit("\r\nContent-Type: text/html\r\n\r\nx"))
-      graft.ext.HttpRecord.retryBackoff(
-        hist.select(
-          concat(lit("www.h"), id.cast("string"), lit(".example.com"))
-            .as("host"),
-          rr.cast("long").as("attempt"), raw.as("raw")),
-        "host", "attempt", "raw")
-    }),
-
-    // ── CRAWL-TRAP detection (UrlCanon.crawlTrapStats): per (host,
-    // first-path-segment) family — distinct urls, max depth, distinct
-    // query-param keys, integer mean length, and the trap rule.
-    // Quadratic formulas spread the value space (the q220 lesson —
-    // linear residues make degenerate regular structures). Arms: a
-    // 4-deep calendar family (trap by depth), a /search family
-    // minting f0-f8 × g0-g3 param keys (trap by params), a big flat
-    // /Docs family that PASSES the n_urls bar but fails both signals
-    // (certifies the AND), and a 1-url /about family under the bar.
-    // Oracle: DuckDB regenerates the url set from the residue
-    // formulas and aggregates INDEPENDENTLY — counts, max, distinct
-    // all recomputed, nothing mirrored from the operator's regexes. ──
-    "q255_crawl_traps" -> ((s, dir) => {
-      val id = col("doc_id")
-      val host = concat(lit("http://www.src"), (id % 10).cast("string"),
-        lit(".example.com"))
-      val url = when(id % 4 === 0, concat(host, lit("/cal/"),
-          (lit(2000) + (id * (id + 3) + 1) % 26).cast("string"), lit("/"),
-          ((id * (id + 7) + 5) % 12).cast("string"), lit("/"),
-          ((id * (id + 11) + 3) % 28).cast("string")))
-        .when(id % 4 === 1, concat(host, lit("/search?f"),
-          ((id * (id + 5) + 2) % 9).cast("string"), lit("="),
-          (id % 3).cast("string"), lit("&g"),
-          ((id * (id + 13) + 7) % 4).cast("string"), lit("=1")))
-        .when(id % 4 === 2, concat(host, lit("/Docs/"),
-          ((id * (id + 9) + 7) % 40).cast("string")))
-        .otherwise(concat(host, lit("/about")))
-      graft.ext.UrlCanon.crawlTrapStats(
-        t(s, dir, "documents").select(url.as("url")), "url",
-        minUrls = 10L, deepAt = 4L, paramAt = 4L)
-    }),
-
-    // ── GOPHER quality rules (TextAnalysis.gopherQualityFlags — the
-    // Rae et al. 2021 filter family): nine residue arms, one per rule
-    // verdict, every metric CLOSED-FORM so the whole word/line/ppm
-    // pipeline certifies against independent arithmetic. Boundary
-    // values live on both sides: the symbol arm's mean word length is
-    // EXACTLY minLenC100=300 (certifying the inclusive bound), the
-    // bullet arm crosses maxBulletPpm at exactly 900000 (B=9 passes,
-    // B=10 fails — strict >), the ellipsis arm at X=4/X=5 around
-    // 300000. Pure projection; repartitioned first because the HOF
-    // line/word filters run interpreted (the q241 lesson). ──
-    "q258_gopher_quality" -> ((s, dir) =>
-      graft.ext.TextAnalysis.gopherQualityFlags(
-        gopherFixture(t(s, dir, "documents")), "doc_id", "text")),
-
-    // ── streaming gopher-quality twin (q248 discipline generalized):
-    // the same nine-arm fixture replayed over two JSONL waves through
-    // readStream → gopherQualityFlags → memory sink; the flags are a
-    // pure projection, so the accumulated table must equal q258's
-    // batch output — certified against q258's oracle VERBATIM
-    // (shared GopherQualitySql val). ──
-    "q263_gopher_stream" -> ((s, dir) =>
-      graft.streaming.StreamingReports.projectionStreamReplay(
-        s, gopherFixture(t(s, dir, "documents")), "doc_id", "text",
-        df => graft.ext.TextAnalysis.gopherQualityFlags(
-          df, "doc_id", "text"))),
-
-    // ── UNICODE script profile (TextAnalysis.scriptProfile): seven
-    // residue arms — pure latin; cyrillic-dominant with a 4-letter
-    // latin minority whose share 1e6/(k+1) crosses the STRICT
-    // 200000 mixed bound exactly at k=4 (k=2,3 mixed; k=4 exactly
-    // 200000 → keep; k>4 keep); han+hiragana+katakana all counting
-    // cjk with a latin minority; arabic; greek routing to `other`;
-    // an exact latin==cyrillic tie certifying declaration-order
-    // argmax (latin wins, second=500000 → mixed); digits/punct only
-    // → dominant 'none'. Every letter count is closed-form in the
-    // residues, so the oracle is independent arithmetic — it shares
-    // no regex with the operator (Java \p{IsX} classes never appear
-    // oracle-side). ──
-    "q259_script_profile" -> ((s, dir) =>
-      graft.ext.TextAnalysis.scriptProfile(
-        scriptFixture(t(s, dir, "documents")), "doc_id", "text")),
-
-    // ── streaming script-profile twin (the q263/q271 discipline):
-    // scriptProfile is a pure per-row projection, so the seven-arm
-    // fixture replayed over two JSONL waves must equal the batch
-    // output — certified against q259's oracle VERBATIM (shared
-    // ScriptProfileSql val + shared scriptFixture helper). ──
-    "q279_script_stream" -> ((s, dir) =>
-      graft.streaming.StreamingReports.projectionStreamReplay(
-        s, scriptFixture(t(s, dir, "documents")), "doc_id", "text",
-        df => graft.ext.TextAnalysis.scriptProfile(df, "doc_id", "text"))),
-
-    // ── GOPHER repetition rules (TextAnalysis.repetitionFlags): five
-    // residue arms over uniform 10-word/4-char-word lines (49 chars
-    // with separators, 40 without — every metric closed-form). Arms:
-    // clean distinct lines; R appended copies of one line (serves
-    // dup_line, dup_line_char, dup_5gram AND the exact strict
-    // boundary — R=4,NL=11 puts dup_line_char at 200000 exactly);
-    // 3-line distinct paragraphs + R+1 copies of a 1-line paragraph
-    // (para dup fraction exceeds line dup fraction, so dup_para
-    // fires first); a 3×-per-line repeated bigram with per-line
-    // distinct padding (top_2gram, no dup lines/5-grams); an 8-word
-    // shared phrase with distinct end words (4 shared 5-grams/line →
-    // dup_5gram while top2 stays ≤200000 by construction). ──
-    "q260_repetition_rules" -> ((s, dir) => {
-      val id = col("doc_id")
-      val nl = lit(5) + id % 10
-      val r = (lit(2) + id % 6).cast("int")
-      def wrd(i: Column): Column = format_string("w%03d", i)
-      def lineOf(j: Column): Column =
-        concat_ws(" ", transform(sequence(lit(0), lit(9)),
-          k => wrd(j * 10 + k)))
-      val fillers = concat_ws("\n",
-        transform(sequence(lit(0), nl - 1), j => lineOf(j)))
-      val line90 = lit(
-        "w900 w901 w902 w903 w904 w905 w906 w907 w908 w909")
-      val text = when(id % 5 === 0, fillers)
-        .when(id % 5 === 1,
-          concat(fillers, lit("\n"),
-            concat_ws("\n", array_repeat(line90, r))))
-        .when(id % 5 === 2,
-          concat_ws("\n\n", concat(
-            transform(sequence(lit(0), nl - 1), i =>
-              concat_ws("\n", lineOf(i * 3), lineOf(i * 3 + 1),
-                lineOf(i * 3 + 2))),
-            array_repeat(line90, r + 1))))
-        .when(id % 5 === 3,
-          concat(fillers, lit("\n"),
-            concat_ws("\n", transform(sequence(lit(0), r - 1), j =>
-              concat_ws(" ", lit("w900"), lit("w901"),
-                wrd(j * 4 + 200), wrd(j * 4 + 201),
-                lit("w900"), lit("w901"),
-                wrd(j * 4 + 202), wrd(j * 4 + 203),
-                lit("w900"), lit("w901"))))))
-        .otherwise(
-          concat(fillers, lit("\n"),
-            concat_ws("\n", transform(sequence(lit(0), r - 1), j =>
-              concat_ws(" ", wrd(j * 2 + 300),
-                lit("w900 w901 w902 w903 w904 w905 w906 w907"),
-                wrd(j * 2 + 301))))))
-      graft.ext.TextAnalysis.repetitionFlags(
-        t(s, dir, "documents").select(id).repartition(32)
-          .select(id, text.as("text")),
-        "doc_id", "text")
-    }),
-
-    // ── corpus-wide paragraph dedup, keep-first (Dedup.
-    // dedupParagraphsCorpus): four arms — shared-head/unique/shared-
-    // tail; within-doc exact repeat (dedups to one); all-shared doc
-    // (n_kept=0 unless it is the global first for its residue);
-    // shared + unique behind a TRIPLE newline (certifies the \n\n+
-    // separator regex and the canonical \n\n rebuild). Keep-first
-    // truth is the min (doc,pos) packing; the oracle re-derives it
-    // with a window over the raw paragraph strings — a different
-    // derivation of the same contract. ──
-    "q261_para_dedup" -> ((s, dir) => {
-      val id = col("doc_id")
-      def pShared(k: Column): Column =
-        format_string("shared block %d lorem ipsum dolor", k)
-      val u0 = format_string("unique zero %d alpha beta gamma", id)
-      val u1 = format_string("unique one %d delta epsilon", id)
-      val u3 = format_string("unique three %d zeta eta", id)
-      val text = when(id % 4 === 0,
-          concat_ws("\n\n", pShared(id % 7), u0, pShared((id + 3) % 7)))
-        .when(id % 4 === 1, concat_ws("\n\n", u1, u1))
-        .when(id % 4 === 2, pShared(id % 7))
-        .otherwise(concat(pShared(id % 7), lit("\n\n\n"), u3))
-      graft.ext.Dedup.dedupParagraphsCorpus(
-        t(s, dir, "documents").select(id).repartition(32)
-          .select(id, text.as("text")),
-        "doc_id", "text")
-    }),
-
-    // ── CORPUS-CONSTRUCTION capstone: the round-13b filter block
-    // composed in production order — script gate → Gopher quality →
-    // Gopher repetition → paragraph dedup over SURVIVORS ONLY (filter
-    // then dedup, the standard pipeline order — dedup truth depends
-    // on the survivor set) → token-budget cut. Five arms: clean
-    // keeper (58 id-unique words + stopwords), 4-word quality reject,
-    // 3-identical-line repetition reject, shared-paragraph docs (the
-    // %9-residue paragraph is byte-identical across docs, so only the
-    // min-id survivor keeps it; the %2=1 subclass carries ONLY the
-    // shared paragraph and fully empties unless it is the keeper),
-    // and a Cyrillic doc that the script gate must catch BEFORE the
-    // alpha rule would mislabel it as a quality reject. Every
-    // paragraph is exactly 60 words, so tokens = 60·n_kept and the
-    // ENTIRE chain — including the budget cumsum — is closed-form but
-    // for one keep-first min-window. Multi-consumer fixture
-    // localCheckpoint'd once (q243 discipline). ──
-    "q264_corpus_capstone" -> ((s, dir) => {
-      import graft.ext.{Dedup, TextAnalysis}
-      val id = col("doc_id")
-      def para(prefix: String, tag: Column): Column =
-        concat(concat_ws(" ", transform(sequence(lit(0), lit(57)),
-          k => format_string(prefix + "%d%03d", tag, k))), lit(" the and"))
-      val line = para("w", id)
-      val text = when(id % 5 === 0, line)
-        .when(id % 5 === 1, lit("tiny text the and"))
-        .when(id % 5 === 2, concat_ws("\n", line, line, line))
-        .when(id % 5 === 3,
-          when(id % 2 === 0,
-            concat(para("p", id % 9), lit("\n\n"), para("u", id)))
-            .otherwise(para("p", id % 9)))
-        .otherwise(concat_ws(" ", transform(sequence(lit(0), lit(59)),
-          k => format_string("м%03d", k))))
-      // hash by doc_id at session width, not round-robin at a pinned 32
-      // (round-20): the family convention for CPU-heavy per-row text
-      // work; also avoids round-robin's sort-before-repartition pass
-      // (SPARK-23207 — keyless repartition locally sorts its input so
-      // retries reproduce the assignment). NOTE measured: the
-      // localCheckpoint does NOT carry hash partitioning through to the
-      // downstream joins in Spark 4.1 (plans/r20/q264 before==after on
-      // Exchange count), so this is a small win, not a join-reuse one.
-      val fx = t(s, dir, "documents").select(id).repartition(id)
-        .select(id, text.as("text")).localCheckpoint()
-      val sc = TextAnalysis.scriptProfile(fx, "doc_id", "text")
-        .select(id, col("dominant"))
-      val gq = TextAnalysis.gopherQualityFlags(fx, "doc_id", "text")
-        .select(id, col("verdict").as("__gq"))
-      val rp = TextAnalysis.repetitionFlags(fx, "doc_id", "text")
-        .select(id, col("verdict").as("__rp"))
-      val flags = fx.select(id).join(sc, "doc_id").join(gq, "doc_id")
-        .join(rp, "doc_id").localCheckpoint()
-      val surviving = flags.filter(col("dominant") === "latin" &&
-        col("__gq") === "keep" && col("__rp") === "keep").select(id)
-      // toks feeds the budget draw AND the final join-back — left
-      // lazy, the whole paragraph-dedup subtree ran twice (the q69
-      // rule; round-19 optimization)
-      val toks = Dedup.dedupParagraphsCorpus(
-          fx.join(surviving, "doc_id"), "doc_id", "text")
-        .select(id, col("n_kept"),
-          size(filter(split(col("text_dedup"), "[ \t\r\n]+"),
-            w => w =!= "")).cast("long").as("n_tokens"))
-        .localCheckpoint()
-      val sel = graft.operators.Sampling.selectByBudget(
-          toks.filter(col("n_kept") > 0)
-            .select(id,
-              (((id % 71) * (id % 71)) % 71).cast("long").as("score"),
-              col("n_tokens").as("cost")),
-          "doc_id", "score", "cost", 9000L)
-        .select(id, col("cum_cost"), col("selected"))
-      flags.join(toks, Seq("doc_id"), "left")
-        .join(sel, Seq("doc_id"), "left")
-        .select(id,
-          when(col("dominant") =!= "latin", lit("wrong_script"))
-            .when(col("__gq") =!= "keep", lit("quality"))
-            .when(col("__rp") =!= "keep", lit("repetitive"))
-            .when(col("n_kept") === 0, lit("all_duplicate"))
-            .when(col("selected"), lit("kept"))
-            .otherwise(lit("over_budget")).as("decision"),
-          col("n_tokens"), col("cum_cost"))
-    }),
-
-    // ── C4 cleaning rules (TextAnalysis.c4Rules — Raffel et al. 2020
-    // §2.2, the third classic filter family after gopher quality and
-    // repetition): eight residue arms — pure good lines; CRLF +
-    // padded bad-punct lines (certifying the per-line trim: the \r
-    // rides every non-final line and must not break the terminal-
-    // punct rule); short-line and javascript-line drops; a KEPT lorem
-    // line whose page still routes `lorem` (page rules test RAW
-    // text); a brace line dropped at line stage while the page routes
-    // `brace`; a badword line that ALSO carries `{` so the
-    // badword>brace precedence is live; a two-line page under
-    // minLinesKept. Counts and clean_text are closed-form in (a,G,B),
-    // so the oracle is residue arithmetic + string rebuilds — it
-    // shares no line-splitting logic with the operator. ──
-    "q265_c4_rules" -> ((s, dir) =>
-      graft.ext.TextAnalysis.c4Rules(
-        c4Fixture(t(s, dir, "documents")), "doc_id", "text")),
-
-    // ── streaming C4 twin (the q263 discipline): c4Rules is a pure
-    // per-row projection, so the same eight-arm fixture replayed over
-    // two JSONL waves through projectionStreamReplay must equal the
-    // batch output — certified against q265's oracle VERBATIM (shared
-    // C4RulesSql val + shared c4Fixture helper). ──
-    "q271_c4_stream" -> ((s, dir) =>
-      graft.streaming.StreamingReports.projectionStreamReplay(
-        s, c4Fixture(t(s, dir, "documents")), "doc_id", "text",
-        df => graft.ext.TextAnalysis.c4Rules(df, "doc_id", "text"))),
-
-    // ── normalized exact dedup (Dedup.dedupExactNormalized over
-    // TextAnalysis.normalizeForDedup — the CCNet §4.1 posture): five
-    // variant arms per content group (v = id DIV 100 mod 5) that raw
-    // exact dedup would treat as five DISTINCT docs — base, all-caps,
-    // different two-digit number, accented café + comma-for-period,
-    // doubled-space + tab — all normalizing to one string, so the
-    // whole group collapses to keep_id = min(id). The group tag is a
-    // LETTER run (repeat('x', g+3)), never digits — digit tags would
-    // collide post-normalization (every digit → 0). The oracle builds
-    // the expected normalized string and group windows from residues;
-    // it never normalizes anything. ──
-    "q266_norm_dedup" -> ((s, dir) => {
-      val id = col("doc_id")
-      val v = (id / 100).cast("int") % 5
-      val tag = repeat(lit("x"), (id % 100 + 3).cast("int"))
-      val d2 = (lit(10) + id % 89).cast("string")
-      val base = concat(lit("number 42 alpha cafe "), tag,
-        lit(" street. the end"))
-      val text = when(v === 0, base)
-        .when(v === 1, upper(base))
-        .when(v === 2, concat(lit("number "), d2, lit(" alpha cafe "),
-          tag, lit(" street. the end")))
-        .when(v === 3, concat(lit("number 42 alpha café "), tag,
-          lit(" street, the end")))
-        .otherwise(concat(lit("number  42\talpha cafe "), tag,
-          lit("  street.  the end")))
-      graft.ext.Dedup.dedupExactNormalized(
-        t(s, dir, "documents").select(id).repartition(32)
-          .select(id, text.as("text")),
-        "doc_id", "text")
-    }),
-
-    // ── token-contrast quality classifier (TextClassifier — the
-    // GPT-3/CCNet quality-filter stage in integer ppm): TRAIN on a
-    // parity split of the corpus (even ids = "good"-heavy positives,
-    // odd = "spam"-heavy negatives, shared `the`/`end` function
-    // words, per-doc token counts 1+id%5 so class totals are residue
-    // sums), then SCORE a disjoint three-arm fixture — pos-leaning,
-    // neg-leaning, and a good+spam+OOV arm whose verdict hangs on the
-    // smoothed unseen weight. The oracle recomputes class counts as
-    // SQL residue sums and every weight/score as integer DIV — the
-    // full train→score chain certified end-to-end, nothing shared
-    // with the operator. ──
-    "q267_nb_classifier" -> ((s, dir) => {
-      import graft.ext.TextClassifier
-      val id = col("doc_id")
-      val train = nbTrainFixture(t(s, dir, "documents"))
-      val model = TextClassifier.nbTrainContrast(
-        train.filter(id % 2 === 0), train.filter(id % 2 === 1), "text")
-      TextClassifier.nbScoreContrast(model,
-        nbScoreFixture(t(s, dir, "documents")), "doc_id", "text")
-    }),
-
-    // ── incremental classifier training (TextClassifier.nbMergeModels
-    // — the q97/q186 mergeable-state discipline on the quality
-    // model): the SAME training corpus split into two batches by
-    // (id DIV 2) % 2 (each batch carries both classes), trained
-    // separately, MERGED (counts sum, weights recompute through the
-    // one-shot trainer's arithmetic), then scored — certified against
-    // q267's oracle VERBATIM (shared NbClassifierSql val): merge of
-    // batch models must equal the full one-shot train exactly. ──
-    "q278_nb_incremental" -> ((s, dir) => {
-      import graft.ext.TextClassifier
-      val id = col("doc_id")
-      val train = nbTrainFixture(t(s, dir, "documents"))
-      def batchModel(k: Int) = {
-        val b = train.filter((id / 2).cast("long") % 2 === k)
-        TextClassifier.nbTrainContrast(
-          b.filter(id % 2 === 0), b.filter(id % 2 === 1), "text")
-      }
-      TextClassifier.nbScoreContrast(
-        TextClassifier.nbMergeModels(batchModel(0), batchModel(1)),
-        nbScoreFixture(t(s, dir, "documents")), "doc_id", "text")
-    }),
-
-    // ── DSIR-style importance selection (Xie et al. 2023 composed
-    // from certified parts): contrast weights trained TARGET-vs-RAW
-    // (the DSIR importance ratio in the ppm space of q267's
-    // classifier — target sample = the %5=0 slice, raw = the whole
-    // four-arm corpus), every raw doc scored, then the top-score
-    // prefix cut at a 600-token budget via selectByBudget. Scores
-    // collapse to four arm-level tie groups and the budget lands
-    // INSIDE one (125-doc arms × cost 3 vs budget 600), so the id
-    // tie-break carries the cut — and cum 600 == budget certifies the
-    // inclusive boundary. Oracle: class counts as residue sums,
-    // weights/scores as integer //, the cut as the naive single-
-    // window cumsum. ──
-    "q268_dsir_select" -> ((s, dir) => {
-      import graft.ext.TextClassifier
-      val docs = t(s, dir, "documents")
-      val id = col("doc_id")
-      val target = docs.filter(id % 5 === 0)
-        .select(id, lit("fine fine the end").as("text")).repartition(32)
-      val rawText = when(id % 4 === 0, lit("fine fine the"))
-        .when(id % 4 === 1, lit("junk the end"))
-        .when(id % 4 === 2, lit("fine junk the"))
-        .otherwise(lit("fine the end"))
-      val raw = docs.select(id, rawText.as("text")).repartition(32)
-      val model = TextClassifier.nbTrainContrast(target, raw, "text")
-      val scored = TextClassifier.nbScoreContrast(model, raw, "doc_id", "text")
-      graft.operators.Sampling.selectByBudget(
-        scored.select(id, col("score"), col("n_toks").as("cost")),
-        "doc_id", "score", "cost", 600L)
-    }),
-
-    // ── WARC container splitting (WarcRecord.splitRecords — the step
-    // BEFORE q236's HTTP parse in a Common-Crawl-shaped pipeline):
-    // multi-record blobs walked by the bounded fold, four framing
-    // arms (lowercase headers parse; junk tail → bad_magic with the
-    // head records kept; overdeclared Content-Length → bad_length;
-    // missing Content-Length → bad_header, whose R=1 blobs emit the
-    // null zero-record row). Every record field and the per-arm
-    // record count is closed-form in (id, r), so the oracle
-    // RECONSTRUCTS records arithmetically — it never parses framing. ──
-    "q269_warc_split" -> ((s, dir) =>
-      graft.ext.WarcRecord.splitRecords(
-        warcBlobFixture(t(s, dir, "documents")), "doc_id", "blob")),
-
-    // ── streaming WARC-split twin (the q248/q263/q271/q279
-    // discipline, here over a RECORD-FANNING projection — the replay
-    // harness's first posexplode_outer consumer): the four-arm blob
-    // fixture replayed over two JSONL waves; per-record rows
-    // accumulate in append mode and must equal the batch split —
-    // certified against q269's oracle VERBATIM (shared WarcSplitSql
-    // val + shared warcBlobFixture). ──
-    "q282_warc_stream" -> ((s, dir) =>
-      graft.streaming.StreamingReports.projectionStreamReplay(
-        s, warcBlobFixture(t(s, dir, "documents")), "doc_id", "blob",
-        df => graft.ext.WarcRecord.splitRecords(df, "doc_id", "blob"))),
-
-    // ── zone-map file skipping (Layout.fileSkipPlan — the manifest-
-    // tier planner that makes a 100-TB table queryable): synthetic
-    // manifest with 10-wide file zones of 8+i%5 width (widths ≥10
-    // overlap the next decade, so the [1000,2000] query has live
-    // `scan` files at BOTH edges — i=99 crosses lo, i=199/200 cross
-    // hi), partitions p0..p3 with only {p0,p1} queried. All four
-    // decisions closed-form in the residues; partition pruning is
-    // certified to fire BEFORE zone checks (pruned files whose zones
-    // overlap stay pruned). ──
-    "q270_file_skipping" -> ((s, dir) => {
-      val id = col("doc_id")
-      val manifest = t(s, dir, "documents").select(
-        concat(lit("f"), id.cast("string")).as("file"),
-        concat(lit("p"), (id % 4).cast("string")).as("part"),
-        (id * 10).cast("long").as("min_v"),
-        (id * 10 + 8 + id % 5).cast("long").as("max_v"),
-        (lit(100) + id % 50).cast("long").as("rows"))
-      graft.operators.Layout.fileSkipPlan(manifest,
-        "file", "part", "min_v", "max_v", "rows",
-        Seq("p0", "p1"), 1000L, 2000L)
-    }),
-
-    // ── archive-intake capstone (q272): the full Common-Crawl-shaped
-    // chain WARC split (q269) → HTTP parse (q236) → HTML extraction
-    // (q226) composed at RECORD grain, every record classified once —
-    // bad_archive (framing violations poison the whole blob),
-    // empty_archive (zero-record blobs' null row), not_response
-    // (request records never reach the HTTP parser), then the HTTP
-    // decision table, with main text + word count extracted for ok
-    // rows only. Content-Length is length(payload) by construction,
-    // so the oracle reconstructs the extracted text purely from
-    // (id, r) residues. Record key is doc_id·4+rec_idx (R ≤ 3). ──
-    "q272_archive_intake" -> ((s, dir) => {
-      import graft.ext.{HtmlExtract, HttpRecord, WarcRecord}
-      val recs = WarcRecord.splitRecords(
-          warcHttpFixture(t(s, dir, "documents")), "doc_id", "blob")
-        .withColumn("rid",
-          col("doc_id") * 4 + coalesce(col("rec_idx"), lit(3L)))
-        .localCheckpoint()
-      val parsed = HttpRecord.parse(
-        recs.filter(col("warc_status") === "ok" &&
-          col("warc_type") === "response"), "rid", "payload")
-        .select(col("rid"), col("decision").as("__hd"))
-      val staged = recs.join(parsed, Seq("rid"), "left")
-        .withColumn("decision",
-          when(col("warc_status") =!= "ok", lit("bad_archive"))
-            .when(col("rec_idx").isNull, lit("empty_archive"))
-            .when(col("warc_type") =!= "response", lit("not_response"))
-            .otherwise(col("__hd")))
-        .withColumn("text", when(col("decision") === "ok",
-          HtmlExtract.mainText(HttpRecord.body(col("payload")))))
-        // checkpoint before deriving n_words from text: projections
-        // collapse and there is no CSE — without the barrier the
-        // whole extraction chain would run twice per row
-        .localCheckpoint()
-      staged
-        .withColumn("n_words", when(col("decision") === "ok",
-          size(filter(split(col("text"), "[ \t\r\n]+"), x => x =!= ""))
-            .cast("long")))
-        .select("doc_id", "rec_idx", "decision", "text", "n_words")
-    }),
-
-    // ── bitext margin mining (Bitext.mineMarginPairs — Artetxe &
-    // Schwenk 2019): source = even vec_ids, target = odd, k=4
-    // neighborhood; cosines come from the certified bruteForceTopK
-    // fold and the margin is nonnegative-integer arithmetic over
-    // shifted scores, so the whole miner hash-certifies (the q19
-    // precedent). The backward pass reuses the symmetric cosines —
-    // the mutual flag certifies forward/backward consistency. ──
-    "q273_bitext_mine" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      graft.ext.Bitext.mineMarginPairs(
-        emb.filter(col("vec_id") % 2 === 0),
-        emb.filter(col("vec_id") % 2 === 1),
-        "vec_id", "embedding", k = 4, minMarginC1000 = 1005L)
-    }),
-
-    // ── C4 three-sentence-span dedup (Dedup.dedupSentenceSpans —
-    // the paper's corpus-level dedup, span grain not doc grain): five
-    // residue arms — unique docs; a shared 3-sentence HEAD block
-    // (non-keepers lose exactly the head, their unique tail survives
-    // — the whole point of span-grain dedup); a 2-sentence overlap
-    // that must NOT dedup (every span contains a unique sentence); a
-    // within-doc 4× repeated sentence (overlapping spans, keeper by
-    // (doc,pos) argmin, sentences 1-3 removed); whole-doc shared
-    // blocks emptying non-keepers to n_kept=0. Keepers are
-    // corpus-wide min-id per (arm, g) — the oracle derives them with
-    // min windows over residues and rebuilds every text closed-form. ──
-    "q274_c4_span_dedup" -> ((s, dir) => {
-      val id = col("doc_id")
-      val a = id % 5
-      val g = (id % 9).cast("string")
-      def sent(tag: Column): Column = concat(tag, lit(" alpha beta."))
-      def u(k: Int): Column =
-        sent(concat(lit("u"), id.cast("string"), lit("x" + k)))
-      def tg(p: String, k: Int): Column =
-        sent(concat(lit(p), g, lit("x" + k)))
-      val r = sent(concat(lit("r"), id.cast("string")))
-      val text = when(a === 0, concat_ws(" ", u(0), u(1), u(2), u(3), u(4)))
-        .when(a === 1, concat_ws(" ",
-          tg("b", 0), tg("b", 1), tg("b", 2), u(3), u(4)))
-        .when(a === 2, concat_ws(" ",
-          tg("p", 0), tg("p", 1), u(2), u(3), u(4)))
-        .when(a === 3, concat_ws(" ", r, r, r, r, u(4)))
-        .otherwise(concat_ws(" ", tg("c", 0), tg("c", 1), tg("c", 2)))
-      graft.ext.Dedup.dedupSentenceSpans(
-        t(s, dir, "documents").select(id).repartition(32)
-          .select(id, text.as("text")),
-        "doc_id", "text")
-    }),
-
-    // ── NORMALIZED n-gram decontamination (q222's exact rule over
-    // normalizeForDedup'd text — the leak class raw decon MISSES by
-    // construction here: eval carries accents and different digits
-    // than the training copies, so no raw 4-gram matches; normalized,
-    // the 8-token sentence shares all 5 grams). Group tags are
-    // LETTER-translated (digit tags collapse under digits→0) and
-    // keyed on (id DIV 5) % 8 so eval (%5=0) and train (%5=1) cover
-    // the same tag range — a %-residue tag would make the two sides
-    // DISJOINT. Every %5=1 train doc is flagged with exactly 5 shared
-    // grams; %5∈{2,3,4} docs are all-unique and must not appear. ──
-    "q275_norm_decontaminate" -> ((s, dir) => {
-      import graft.ext.{Dedup, TextAnalysis}
-      val id = col("doc_id")
-      // (id / 5).cast("long") — Column `/` is FRACTIONAL division;
-      // without the cast the tag renders "3.2"-style and eval/train
-      // tags never match (caught by the oracle: 1 shared gram, the
-      // tag-free suffix, instead of 5)
-      val tg = translate(((id / 5).cast("long") % 8).cast("string"),
-        "0123456789", "abcdefghij")
-      val evalTxt = concat(lit("café "), (lit(10) + id % 89).cast("string"),
-        lit(" price h"), tg, lit(" alpha beta gamma delta"))
-      val trainTxt = when(id % 5 === 1,
-        concat(lit("cafe "), (lit(10) + (id * 7) % 89).cast("string"),
-          lit(" price h"), tg, lit(" alpha beta gamma delta")))
-        .otherwise(concat_ws(" ",
-          (0 to 4).map(k => concat(lit(s"u${k}q"), id.cast("string"))): _*))
-      val docs = t(s, dir, "documents").select(id).repartition(32)
-      def norm(df: DataFrame): DataFrame = df.withColumn("text",
-        TextAnalysis.normalizeForDedup(col("text")))
-      Dedup.ngramContaminated(
-        norm(docs.filter(id % 5 =!= 0).select(id, trainTxt.as("text"))),
-        norm(docs.filter(id % 5 === 0).select(id, evalTxt.as("text"))),
-        "doc_id", "text", n = 4)
-    }),
-
-    // ── priority frontier scheduling (UrlCanon.priorityFrontier
-    // Schedule): politeness slots × host authority — one URL per host
-    // per slot, higher-PageRank hosts first within the slot.
-    // Quadratic-residue authorities ((n²)%23 over 20 hosts) carry
-    // real ties, making the host-asc tie-break load-bearing; host 13
-    // is withheld from the ranks table so the authority-0 cold-host
-    // route is live. Oracle re-derives both enumerations as plain
-    // windows — independent truth for the distributed prefix-sum. ──
-    "q276_frontier_rank" -> ((s, dir) => {
-      val id = col("doc_id")
-      val n = id % 20
-      val frontier = t(s, dir, "documents").select(id).repartition(32)
-        .select(
-          concat(lit("h"), n.cast("string")).as("host"),
-          concat(lit("http://h"), n.cast("string"), lit("/d/"),
-            id.cast("string")).as("url"))
-      val ranks = s.range(0, 20).filter(col("id") =!= 13)
-        .select(concat(lit("h"), col("id").cast("string")).as("host"),
-          ((col("id") * col("id")) % 23).cast("long").as("rank"))
-      graft.ext.UrlCanon.priorityFrontierSchedule(
-        frontier, "host", "url", ranks, "rank")
-    }),
-
-    // ── CCNet perplexity-tercile bucketing (Quantiles.bucketByGroup
-    // Terciles): per-language head/middle/tail with EXACT rational
-    // 1/3–2/3 boundaries from the histogram machinery (no float p —
-    // a double 1/3 sits below the true ratio and can flip boundary
-    // rows). Quadratic-residue scores carry heavy ties so rows AT a
-    // boundary are live (score == t1 → head, inclusive). The oracle
-    // mirrors the percentile_disc DEFINITION (min v with cum·3 ≥ k·n
-    // over the group histogram) — not an engine quantile function. ──
-    "q277_ppl_buckets" -> ((s, dir) => {
-      val id = col("doc_id")
-      graft.operators.Quantiles.bucketByGroupTerciles(
-        t(s, dir, "documents").select(id).repartition(32)
-          .select(id,
-            concat(lit("l"), (id % 3).cast("string")).as("lang"),
-            ((id * id) % 101).cast("long").as("score")),
-        "lang", "score")
-    }),
-
-    // ── web-corpus capstone v2 (q280): the FULL raw-bytes-to-corpus
-    // chain — WARC split (q269) → HTTP parse (q236) → paragraph
-    // extraction (q226) → C4 rules (q265) → token-contrast quality
-    // gate (q267) — in production order with survivor-only scoring,
-    // one five-class decision per input blob: bad_status/bad_type die
-    // at intake, brace/few_lines at the C4 stage, classifier `neg`
-    // routes low_quality, survivors keep. One record per blob so the
-    // whole chain stays doc-grain; Content-Length from
-    // length(payload); the classifier model is q267's parity-trained
-    // fixture, so the oracle reuses NbClassifierSql's residue-sum
-    // weight arithmetic and every score is closed-form. ──
-    "q280_web_corpus_capstone" -> ((s, dir) => {
-      import graft.ext.{HtmlExtract, HttpRecord, TextClassifier, WarcRecord}
-      val id = col("doc_id")
-      val docs = t(s, dir, "documents")
-      val train = nbTrainFixture(docs)
-      val model = TextClassifier.nbTrainContrast(
-        train.filter(id % 2 === 0), train.filter(id % 2 === 1), "text")
-      val c = id % 6
-      val good = "<p>good good the.</p>"
-      val body = when(c === 4,
-          lit("<p>spam spam the.</p><p>spam spam the.</p><p>spam spam the.</p>"))
-        .when(c === 2, lit(good + "<p>var x = { 1 };</p>" + good))
-        .when(c === 3, lit(good + good))
-        .otherwise(lit(good + good + good))
-      val statusLine = when(c === 1, lit("HTTP/1.1 404 Not Found"))
-        .otherwise(lit("HTTP/1.1 200 OK"))
-      val ctype = when(c === 5, lit("application/pdf"))
-        .otherwise(lit("text/html"))
-      val payload = concat(statusLine, lit("\r\nContent-Type: "), ctype,
-        lit("\r\n\r\n<html><body>"), body, lit("</body></html>"))
-      val blob = concat(
-        lit("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: u"),
-        id.cast("string"), lit("\r\nContent-Length: "),
-        length(payload).cast("string"), lit("\r\n\r\n"), payload,
-        lit("\r\n\r\n"))
-      val recs = WarcRecord.splitRecords(
-          docs.select(id).repartition(32).select(id, blob.as("blob")),
-          "doc_id", "blob")
-        .localCheckpoint()
-      val parsed = HttpRecord.parse(recs, "doc_id", "payload")
-        .select(id, col("decision").as("__hd"))
-      val staged = recs.join(parsed, Seq("doc_id"))
-        .withColumn("__clean_in", array_join(
-          HtmlExtract.paragraphs(HttpRecord.body(col("payload"))), "\n"))
-        .localCheckpoint()
-      val c4 = graft.ext.TextAnalysis.c4Rules(
-          staged.filter(col("__hd") === "ok")
-            .select(id, col("__clean_in").as("text")),
-          "doc_id", "text")
-        .select(id, col("verdict").as("__c4"), col("clean_text"))
-        .localCheckpoint()
-      val scored = TextClassifier.nbScoreContrast(model,
-          c4.filter(col("__c4") === "keep")
-            .select(id, col("clean_text").as("text")),
-          "doc_id", "text")
-        .select(id, col("score"), col("label"))
-      staged.select(id, col("__hd"))
-        .join(c4.select(id, col("__c4")), Seq("doc_id"), "left")
-        .join(scored, Seq("doc_id"), "left")
-        .select(id,
-          when(col("__hd") =!= "ok", col("__hd"))
-            .when(col("__c4") =!= "keep", col("__c4"))
-            .when(col("label") === "neg", lit("low_quality"))
-            .otherwise(lit("kept")).as("decision"),
-          col("score"))
-    }),
-
-    // ── SFT chat-data validation + templating (ChatData.validateAnd
-    // Render): the instruction-tuning intake rule set as a total
-    // first-failing verdict over parsed `messages` JSON — bad_json /
-    // empty / bad_role / system_pos / non_alternating / empty_turn /
-    // dangling / keep — with the training template rendered for every
-    // parseable record (audit posture). Ten residue arms, one per
-    // class plus three keep shapes (with/without system, multi-turn);
-    // the alternation rule is an index-carrying FOLD because ANSI
-    // element_at throws on the empty rest array a system-only
-    // conversation leaves. Oracle rebuilds every rendered template
-    // from residues — no JSON parsing oracle-side. ──
-    "q281_chat_template" -> ((s, dir) =>
-      graft.ext.ChatData.validateAndRender(
-        chatFixture(t(s, dir, "documents")), "doc_id", "messages")),
-
-    // ── streaming chat-template twin (the stateless-twin family):
-    // validateAndRender is a pure per-row projection, so the ten-arm
-    // fixture replayed over two JSONL waves must equal the batch
-    // output — certified against q281's oracle VERBATIM (shared
-    // ChatTemplateSql val + shared chatFixture helper). The payload
-    // here is itself JSON, so the replay harness's JSON-lines
-    // envelope (.write.json → readStream.json) must round-trip nested
-    // quoting — an escape-fidelity case the flat-text twins never
-    // exercised. ──
-    "q285_chat_stream" -> ((s, dir) =>
-      graft.streaming.StreamingReports.projectionStreamReplay(
-        s, chatFixture(t(s, dir, "documents")), "doc_id", "messages",
-        df => graft.ext.ChatData.validateAndRender(
-          df, "doc_id", "messages"))),
-
-    // ── preference-pair preparation (ChatData.preparePreference
-    // Pairs — DPO/RLHF reward data): six residue arms — unique valid
-    // pairs; verbatim-identical chosen/rejected; a case+digit+punct
-    // variant pair that only the NORMALIZED equality catches; blank
-    // and null fields routing `missing`; and a=5 rows re-using the
-    // prompt of row id−5 so keep-first prompt dedup fires with the
-    // lower id as keeper. The a=0 arm ALSO collides with itself 300
-    // apart (lcm(6,100)), so dup_prompt keepers are a genuine min
-    // window, not an arm label. ──
-    "q283_preference_pairs" -> ((s, dir) => {
-      val id = col("doc_id")
-      val a = id % 6
-      val i = id.cast("string")
-      val tag = translate(
-        when(a === 5, (id - 5) % 100).otherwise(id % 100).cast("string"),
-        "0123456789", "abcdefghij")
-      val prompt = when(a === 0 || a === 5,
-        concat(lit("please explain "), tag))
-        .otherwise(concat(lit("q"), i, lit(" unique prompt")))
-      val chosen = when(a === 1, lit("same answer."))
-        .when(a === 2, lit("The Answer 42."))
-        .when(a === 4, lit(null).cast("string"))
-        .otherwise(concat(lit("c"), i, lit(" good answer")))
-      val rejected = when(a === 1, lit("same answer."))
-        .when(a === 2, lit("the answer 73"))
-        .when(a === 3, lit(""))
-        .otherwise(concat(lit("r"), i, lit(" bad answer")))
-      graft.ext.ChatData.preparePreferencePairs(
-        t(s, dir, "documents").select(id).repartition(32)
-          .select(id, prompt.as("prompt"), chosen.as("chosen"),
-            rejected.as("rejected")),
-        "doc_id", "prompt", "chosen", "rejected")
-    }),
-
-    // ── pack loss-mask spans (TextAnalysis.packMaskSpans — the
-    // metadata tier over q61's packing): per (partition, chunk, doc)
-    // spans with head/tail flags so a trainer can mask cross-document
-    // attention across straddled chunk boundaries. Doc lengths
-    // 10+id%50 against budget 128 straddle constantly; the oracle
-    // re-derives offsets with its own window + range explode. ──
-    "q284_pack_masks" -> ((s, dir) => {
-      val id = col("doc_id")
-      graft.ext.TextAnalysis.packMaskSpans(
-        t(s, dir, "documents").select(id).repartition(32)
-          .select(id, (id % 4).cast("long").as("part"),
-            (lit(10) + id % 50).cast("long").as("n_tok")),
-        "part", "doc_id", col("n_tok"), budget = 128L)
-    }),
-
-    // ── Matryoshka truncation recall (SimSearch.truncatedRecall):
-    // exact top-5 on 4-, 16- and full-64-dim prefixes vs the full
-    // truth — the d=64 row MUST come back recall 1000000 (self-
-    // consistency), the short prefixes measure what the synthetic
-    // embeddings actually preserve. Prefix cosines reuse the q19
-    // fold; the oracle repeats it per dim over list_slice. ──
-    "q286_trunc_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      graft.ext.SimSearch.truncatedRecall(
-        emb, emb.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", dims = Seq(4, 16, 64), k = 5)
-    }),
-
-    // ── two-signal decontamination report (q287): the raw (q222) and
-    // normalized (q275) exact n-gram rules composed into one per-doc
-    // decision — verbatim_leak (raw grams shared), normalized_leak
-    // (only the normalized form matches: the case/digit-variant leak
-    // class), clean. The fixture interleaves DIGITS through every
-    // 4-gram so the variant arm shares ZERO raw grams but all 5
-    // normalized ones; the verbatim arm is a byte-identical copy.
-    // Tag-free gram prefixes match every eval doc, so raw counts are
-    // corpus-independent residue facts. ──
-    "q287_decon_report" -> ((s, dir) => {
-      import graft.ext.{Dedup, TextAnalysis}
-      val id = col("doc_id")
-      val tg = translate(((id / 5).cast("long") % 8).cast("string"),
-        "0123456789", "abcdefghij")
-      def sent(d1: String, d2: String, d3: String): Column =
-        concat(lit(s"café $d1 alpha $d2 beta $d3 gamma h"), tg)
-      val evalTxt = sent("11", "22", "33")
-      val trainTxt = when(id % 5 === 1, sent("11", "22", "33"))
-        .when(id % 5 === 2, sent("44", "55", "66"))
-        .otherwise(concat_ws(" ",
-          (0 to 4).map(k => concat(lit(s"z${k}w"), id.cast("string"))): _*))
-      val docs = t(s, dir, "documents").select(id).repartition(32)
-      val train = docs.filter(id % 5 =!= 0).select(id, trainTxt.as("text"))
-      val evalD = docs.filter(id % 5 === 0).select(id, evalTxt.as("text"))
-      def norm(df: DataFrame): DataFrame = df.withColumn("text",
-        TextAnalysis.normalizeForDedup(col("text")))
-      val raw = Dedup.ngramContaminated(train, evalD, "doc_id", "text", 4)
-        .withColumnRenamed("n_shared_grams", "raw_grams")
-      val nrm = Dedup.ngramContaminated(norm(train), norm(evalD),
-          "doc_id", "text", 4)
-        .withColumnRenamed("n_shared_grams", "norm_grams")
-      train.select(id)
-        .join(raw, Seq("doc_id"), "left").join(nrm, Seq("doc_id"), "left")
-        .select(id,
-          coalesce(col("raw_grams"), lit(0L)).as("raw_grams"),
-          coalesce(col("norm_grams"), lit(0L)).as("norm_grams"),
-          when(col("raw_grams") > 0, lit("verbatim_leak"))
-            .when(col("norm_grams") > 0, lit("normalized_leak"))
-            .otherwise(lit("clean")).as("decision"))
-    }),
-
-    // ══ round 14: the Unicode-tokenizer block (q288-q293), certified
-    // over fixtures/multilingual.jsonl (tools/gen_multilingual.py) —
-    // the driver corpus is ASCII-only (its zh/es/de rows carry Latin
-    // text), so the multilingual behavior of tokens()/the dedup and
-    // quality families certifies against this authored fixture. Every
-    // oracle recomputes with DuckDB mirrors GENERATED from the same
-    // constants as TextAnalysis (duckUToks/duckLowerU/duckUNorm —
-    // single source of truth for the CJK class and the fold maps). ══
-
-    // ── the tokenizer contract itself (TextAnalysis.tokens, round
-    // 14): token counts, fingerprint, first/last token — CJK per-char
-    // isolation (zh/ja + halfwidth kana), run tokens for spaced
-    // scripts (ru/el/ar/hi/ko incl. combining marks), the four
-    // lower() fold codepoints + final sigma (docs 22/30), and the
-    // classify-every-input arms (empty/whitespace → 0 tokens, md5('')
-    // fingerprint, NULL first/last). n_ascii_runs ([A-Za-z0-9]+, NO
-    // lower() — case-blind, so both engines agree on every input)
-    // records what the pre-round-14 ASCII family saw per doc. ──
-    "q288_unicode_tokens" -> ((s, dir) => uTokensReport(mlDocs(s))),
-
-    // ── streaming Unicode-tokens twin (the q263/q271/q285 replay
-    // discipline): the multilingual fixture replayed over two JSONL
-    // waves — the FIRST twin whose payload text is non-ASCII, so the
-    // replay envelope's UTF-8 round trip (.write.json → landing
-    // .json file → readStream.json) is itself under certification;
-    // lang rides inside a nested-JSON payload (the q285 nested-quote
-    // seam).
-    // Certified against q288's oracle VERBATIM (shared
-    // UnicodeTokensSql + shared uTokensReport projection). ──
-    "q294_unicode_stream" -> ((s, dir) => {
-      val packed = mlDocs(s).select(col("doc_id"),
-        to_json(struct(col("lang"), col("text"))).as("payload"))
-      graft.streaming.StreamingReports.projectionStreamReplay(
-        s, packed, "doc_id", "payload", df =>
-          uTokensReport(df
-            .select(col("doc_id"),
-              from_json(col("payload"),
-                org.apache.spark.sql.types.StructType.fromDDL(
-                  "lang STRING, text STRING")).as("j"))
-            .select(col("doc_id"), col("j.lang").as("lang"),
-              col("j.text").as("text"))))
-    }),
-
-    // ── multilingual normalized exact dedup (dedupExactNormalized
-    // with normalizeForDedupU): the zh punct+digit variants (1,2,3),
-    // ja digit variants (5,6), ru case+digit (8,9) and el upper/lower
-    // incl. final sigma (11,12) collapse; the en pair (23,24) differs
-    // by a real word and must NOT; empty+whitespace docs (27,28) share
-    // the '' key — deterministic, classify-every-input. ──
-    "q289_unicode_norm_dedup" -> ((s, dir) =>
-      graft.ext.Dedup.dedupExactNormalized(mlDocs(s), "doc_id", "text",
-        graft.ext.TextAnalysis.normalizeForDedupU)),
-
-    // ── multilingual n-gram Jaccard pairs (3-shingles over the now-
-    // Unicode tokens): per-char CJK shingles make the zh/ja variant
-    // pairs near-dups the ASCII tokenizer was blind to (it saw ZERO
-    // tokens on those docs — the round-13 verdict's gap) ──
-    "q290_unicode_jaccard" -> ((s, dir) =>
-      graft.ext.Dedup.ngramJaccardPairs(mlDocs(s), "doc_id", "text",
-        shingleK = 3, threshold = 0.5)),
-
-    // ── Gopher quality gates, CJK-aware (cjkAware=true: per-char CJK
-    // words, \p{L} alpha rule) with multilingual-calibrated
-    // thresholds (minLenC100=100 — per-char words make a pure-CJK
-    // doc's mean exactly 100; minStopHits=0 — the English stopword
-    // rule is per-language POLICY, not mechanism): zh/ja clear the
-    // word gates they'd fail under whitespace words; the Thai doc
-    // pins the run-token limitation (3 whitespace words →
-    // word_count); empty/whitespace → word_count. ──
-    "q291_unicode_gopher" -> ((s, dir) =>
-      graft.ext.TextAnalysis.gopherQualityFlags(mlDocs(s), "doc_id",
-        "text", minWords = 10L, minLenC100 = 100L, minStopHits = 0L,
-        cjkAware = true)),
-
-    // ── script profile on REAL multilingual text (q259 certified the
-    // ppm arithmetic on closed-form residue fixtures; this certifies
-    // the \p{IsX} classes themselves against DuckDB's independent
-    // letters-then-script two-step): latin/cyrillic/cjk/arabic
-    // dominants, el/hi/ko/th routing to `other`, and the
-    // Latin/Cyrillic homoglyph spam doc crossing the mixed flag ──
-    "q292_script_profile_multi" -> ((s, dir) =>
-      graft.ext.TextAnalysis.scriptProfile(mlDocs(s), "doc_id", "text")),
-
-    // ── multilingual minhash-LSH near-dup (q18's operator, Unicode
-    // tokens): banded candidates + exact-Jaccard verify == the exact
-    // >=0.8 all-pairs set (32×4 bands, miss prob ~1e-15 at J>=0.85;
-    // the fixture's near-dup band sits at J>=0.85) ──
-    "q293_unicode_minhash" -> ((s, dir) =>
-      graft.ext.Dedup.nearDupPairsMinhash(mlDocs(s), "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.8)),
-
-    // ── per-language stopword DISCOVERY (the input the q291 gopher
-    // `stopwords` parameter needs, derived instead of hand-listed):
-    // per (lang, token) document frequency over distinct-per-doc
-    // Unicode tokens, top-5 per language by (df DESC, token ASC) —
-    // a TOTAL order, so rank-boundary ties certify — keeping only
-    // recurring tokens (df >= 2). CJK languages surface frequent
-    // CHARACTERS (的/是…), exactly the per-char stopword grain the
-    // tokenizer defines. ──
-    "q296_stopword_discovery" -> ((s, dir) =>
-      discoveredStopwords(mlTokens(mlDocs(s)))),
-
-    // ── multilingual dedup CAPSTONE (the q264/q280 composition
-    // discipline): scriptProfile routes each doc — latin-dominant →
-    // the accent-folding Latin normalizer, everything else (cjk/
-    // cyrillic/arabic/other/none) → normalizeForDedupU — then
-    // keep-min exact dedup on the routed key, then minhash near-dup
-    // (Unicode shingles, τ=0.6) among the SURVIVORS: the en pair
-    // (23,24) survives exact dedup (they differ by a word) and is
-    // caught here, keep-first (24 → near_dup_of 23). BAND-MISS BOUND
-    // (the q293 discipline, round-14 ADVICE): the (23,24) pair sits
-    // at exact Jaccard J=0.625, so with 128 hashes in 32 bands of 4
-    // the a-priori candidate-miss probability is (1−J⁴)³² =
-    // (1−0.1526)³² ≈ 0.5% — NOT structurally negligible like q293's
-    // ~1e-15 at J≥0.85. The match is still deterministic (fixed
-    // minhash seed; this fixture's draw finds the pair — certified),
-    // but ANY edit to doc 23/24's text re-rolls that 0.5% die:
-    // re-derive J and this bound after a fixture retune, or keep the
-    // pair's J ≥ 0.75 (miss < 1e-4) if retuning. Doc 30's fold
-    // chars ride the latin route and strip cleanly (the aggressive
-    // [^a-z0 ] strip makes the Latin route immune to the ICU/DuckDB
-    // case-table seam — divergent mappings all strip to ''). ──
-    "q297_ml_dedup_capstone" -> ((s, dir) => {
-      import graft.ext.{Dedup, TextAnalysis}
-      val prof = TextAnalysis.scriptProfile(mlDocs(s), "doc_id", "text")
-        .select(col("doc_id"), col("dominant"))
-      val routed = mlDocs(s).join(prof, Seq("doc_id"))
-        .withColumn("route",
-          when(col("dominant") === "latin", lit("latin_norm"))
-            .otherwise(lit("unicode_norm")))
-        .withColumn("norm",
-          when(col("dominant") === "latin",
-            TextAnalysis.normalizeForDedup(col("text")))
-            .otherwise(TextAnalysis.normalizeForDedupU(col("text"))))
-        .localCheckpoint()
-      val groups = routed.groupBy("norm")
-        .agg(min(col("doc_id")).as("keep_id"),
-          count(lit(1)).as("n_copies"))
-      val withG = routed.join(groups, Seq("norm"))
-      val keepers = withG.filter(col("doc_id") === col("keep_id"))
-        .select(col("doc_id"), col("text"))
-      val nd = Dedup.nearDupPairsMinhash(keepers, "doc_id", "text",
-          shingleK = 3, numHashes = 128, bands = 32, threshold = 0.6)
-        .groupBy(col("doc_b").as("doc_id"))
-        .agg(min(col("doc_a")).as("near_dup_of"))
-      withG.join(nd, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("dominant"), col("route"),
-          col("keep_id"), col("n_copies"),
-          (col("doc_id") =!= col("keep_id")).as("is_dup"),
-          col("near_dup_of"))
-    }),
-
-    // ── mixed-script word detection (the homoglyph-spoof signature —
-    // dedup/blocklist EVASION normalizes through lookalike Cyrillic
-    // in Latin words, and a word carrying BOTH scripts is the tell;
-    // legitimate text is script-pure at word grain): whitespace
-    // words carrying ≥1 Latin AND ≥1 Cyrillic letter, counted per
-    // doc. Exactly one fixture doc (26, the homoglyph spam) fires —
-    // pure-Cyrillic ru docs and pure-Latin docs all score 0, so the
-    // signal separates spoofing from multilingual content. ──
-    "q298_mixed_script_words" -> ((s, dir) => {
-      val txt = coalesce(col("text"), lit(""))
-      mlDocs(s)
-        .withColumn("__w",
-          filter(split(trim(txt), "[ \t\r\n]+"), w => w =!= ""))
-        .withColumn("__m", filter(col("__w"),
-          w => w.rlike("\\p{IsLatin}") && w.rlike("\\p{IsCyrillic}")))
-        .select(col("doc_id"), col("lang"),
-          size(col("__w")).cast("long").as("n_words"),
-          size(col("__m")).cast("long").as("n_mixed"),
-          try_element_at(col("__m"), lit(1)).as("first_mixed"),
-          (size(col("__m")) > 0).as("spoofy"))
-    }),
-
-    // ── Unicode sentence segmentation (TextAnalysis.sentencesU —
-    // the tokens() lesson at sentence grain: without the fullwidth
-    // 。！？ terminals a zh/ja doc is ONE sentence and span dedup
-    // no-ops on it): per-doc counts + first/last sentence over the
-    // multilingual fixture; empty/whitespace arms → 0 sentences,
-    // NULL first/last. ──
-    "q299_unicode_sentences" -> ((s, dir) => {
-      import graft.ext.TextAnalysis
-      mlDocs(s)
-        .withColumn("__s", TextAnalysis.sentencesU(col("text")))
-        .select(col("doc_id"), col("lang"),
-          size(col("__s")).cast("long").as("n_sents"),
-          try_element_at(col("__s"), lit(1)).as("first_sent"),
-          try_element_at(col("__s"), lit(-1)).as("last_sent"))
-    }),
-
-    // ── multilingual sentence-SPAN dedup (Dedup.dedupSentenceSpans
-    // with the sentencesU segmenter seam, span=2): the zh exact copy
-    // (doc 3) loses every sentence to doc 1's spans; the en near-dup
-    // (doc 24) loses its 2-sentence shared head but KEEPS its unique
-    // tail — the partial-dedup path, which is the operator's whole
-    // point; differing punctuation/digits (docs 2/6/9) shift
-    // sentence boundaries and survive intact. ──
-    "q300_ml_span_dedup" -> ((s, dir) =>
-      graft.ext.Dedup.dedupSentenceSpans(mlDocs(s), "doc_id", "text",
-        span = 2, segmenter = graft.ext.TextAnalysis.sentencesU)),
-
-    // ── SELF-CALIBRATING per-language quality gate (q296 ∘ q291 —
-    // closing the loop the stopword-discovery comment promised): the
-    // discovered per-language stopword lists become the stopword rule
-    // the static English list can't provide — doc token occurrences
-    // joined against the doc's OWN language's discovered list (a
-    // broadcast-sized dim), overriding a base `keep` to `stopword`
-    // when a covered language scores zero hits. Languages without a
-    // discovered list (single-doc th, the xx arms) are exempt — the
-    // rule only fires where calibration data exists. Exactly one doc
-    // flips (en 25, sharing no recurring token with the other en
-    // docs): the mechanism demo that list quality tracks corpus
-    // size. ──
-    "q301_lang_calibrated_gopher" -> ((s, dir) => {
-      import graft.ext.TextAnalysis
-      val ml = mlDocs(s)
-      // tokenize ONCE: the exploded frame feeds both the discovery
-      // (via the SHARED q296 helper — the thresholds cannot drift)
-      // and the multiplicity hit counts (review findings)
-      val tokAll = mlTokens(ml).localCheckpoint()
-      val disc = discoveredStopwords(tokAll)
-        .select("lang", "tok")
-        .localCheckpoint()
-      val hasList = disc.select("lang").distinct()
-        .withColumn("has_list", lit(true))
-      val hits = tokAll.join(broadcast(disc), Seq("lang", "tok"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).cast("long").as("stop_hits_lang"))
-      val base = TextAnalysis.gopherQualityFlags(ml, "doc_id", "text",
-          minWords = 10L, minLenC100 = 100L, minStopHits = 0L,
-          cjkAware = true)
-        .select(col("doc_id"), col("verdict").as("base_verdict"))
-      ml.select(col("doc_id"), col("lang"))
-        .join(base, Seq("doc_id"))
-        .join(hits, Seq("doc_id"), "left")
-        .join(broadcast(hasList), Seq("lang"), "left")
-        .select(col("doc_id"), col("lang"),
-          coalesce(col("stop_hits_lang"), lit(0L)).as("stop_hits_lang"),
-          col("base_verdict"),
-          when(col("base_verdict") === "keep" &&
-            coalesce(col("has_list"), lit(false)) &&
-            coalesce(col("stop_hits_lang"), lit(0L)) < 1L,
-            lit("stopword"))
-            .otherwise(col("base_verdict")).as("verdict"))
-    }),
-
-    // ── invisible-character hygiene (TextAnalysis.invisibleCount /
-    // stripInvisible — the Trojan-Source / dedup-evasion scrub):
-    // five planted arms over documents (the q60 pattern) — clean;
-    // ZWSP spliced INSIDE a word (splits its token → fingerprint
-    // dedup evasion until stripped); an RLO…PDF bidi wrap (flagged,
-    // but boundary-adjacent so tokens are unchanged); a BOM prefix
-    // (flagged, not evading); ZWJ inside a word (evading). `evaded`
-    // compares the raw vs scrubbed token streams directly — the
-    // operational reason the scrub must run BEFORE fingerprinting. ──
-    "q304_invisible_scrub" -> ((s, dir) => {
-      import graft.ext.TextAnalysis
-      val id = col("doc_id")
-      val a = id % 5
-      val g = expr("CAST(doc_id DIV 5 AS BIGINT)").cast("string")
-      val txt =
-        when(a === 0, concat(lit("alpha beta gamma "), g))
-          .when(a === 1, concat(lit("al\u200Bpha beta gamma "), g))
-          .when(a === 2,
-            concat(lit("alpha \u202Ebeta\u202C gamma "), g))
-          .when(a === 3, concat(lit("\uFEFFalpha beta gamma "), g))
-          .otherwise(concat(lit("alpha be\u200Dta gamma "), g))
-      t(s, dir, "documents").select(id).repartition(32)
-        .select(id, txt.as("text"))
-        .select(id,
-          TextAnalysis.invisibleCount(col("text")).as("n_invisible"),
-          TextAnalysis.stripInvisible(col("text")).as("clean_text"),
-          (TextAnalysis.tokens(col("text")) =!=
-            TextAnalysis.tokens(TextAnalysis.stripInvisible(col("text"))))
-            .as("evaded"))
-    }),
-
-    // ── confusable-skeleton dedup (TextAnalysis.confusableSkeleton —
-    // the q298 detection's NORMALIZATION counterpart): homoglyph-
-    // spoofed variants of Latin docs collapse onto their clean twins
-    // under the skeleton key, while genuine Cyrillic docs are routed
-    // AROUND the fold (scriptProfile dominant gate — the skeleton
-    // would mangle real Russian into mixed-script junk; the same
-    // mechanism/policy split as q297's normalizer routing). Arms:
-    // clean latin + its 3-homoglyph spoof (collapse per DIV-5
-    // group), a distinct latin doc, a pure-Cyrillic doc (raw-lower
-    // route, untouched), a partnerless spoofed doc (solo keeper). ──
-    "q305_confusable_dedup" -> ((s, dir) => {
-      import graft.ext.TextAnalysis
-      val id = col("doc_id")
-      val a = id % 5
-      val g = expr("CAST(doc_id DIV 5 AS BIGINT)").cast("string")
-      val txt =
-        when(a === 0, concat(lit("buy cheap watches here now "), g))
-          .when(a === 1,
-            concat(lit("buy ch\u0435ap w\u0430tches h\u0435re now "), g))
-          .when(a === 2, concat(lit("totally different latin content "), g))
-          .when(a === 3, concat(lit("привет мир хорошо "), g))
-          .otherwise(concat(lit("sell ch\u0435ap clocks th\u0435re now "), g))
-      val docs = t(s, dir, "documents").select(id).repartition(32)
-        .select(id, txt.as("text"))
-      val prof = TextAnalysis.scriptProfile(docs, "doc_id", "text")
-        .select(id, col("dominant"))
-      val routed = docs.join(prof, Seq("doc_id"))
-        .withColumn("route",
-          when(col("dominant") === "latin", lit("skeleton"))
-            .otherwise(lit("raw_lower")))
-        .withColumn("__key",
-          when(col("dominant") === "latin",
-            TextAnalysis.confusableSkeleton(col("text")))
-            .otherwise(TextAnalysis.lowerU(col("text"))))
-        .localCheckpoint()
-      val groups = routed.groupBy("__key")
-        .agg(min(id).as("keep_id"), count(lit(1)).as("n_copies"))
-      routed.join(groups, Seq("__key"))
-        .select(id, col("dominant"), col("route"), col("keep_id"),
-          col("n_copies"), (id =!= col("keep_id")).as("is_dup"))
-    }),
-
-    // ── bounded Content-Encoding inflate (plans.Inflate — the step
-    // WarcRecord deliberately punted "upstream"; on real Common Crawl
-    // payloads are overwhelmingly gzip, so the fetch-side family was
-    // incomplete without it). The q241 inversion discipline: bodies
-    // are compressed IN-PLAN from documents.text, the oracle only
-    // ever sees the round-trip contract. Arms (doc_id % 12): 0 bad
-    // magic, 1 trailing garbage (stricter than the JDK, which
-    // silently ignores tails), 2 multi-member concatenation (legal
-    // per RFC 1952 §2.2 — decodes to the concatenation), 3 zlib and
-    // 4 raw-deflate via the HTTP-deflate sniff, 5 truncated stream,
-    // 6 corrupt CRC32 trailer, else plain gzip. EVERY decode is
-    // capped at InflateCapBytes — docs whose payload exceeds it
-    // route NULL at the cap (the decompression-bomb guard: never a
-    // truncated prefix), which at sf0.01 splits the plain arms both
-    // ways (byte lengths run 48-553 vs the 400 cap). ──
-    "q306_gzip_inflate" -> ((s, dir) => {
-      import graft.plans.Inflate
-      val id = col("doc_id")
-      val a = id % 12
-      // per-row Deflater work is CPU-bound on the single local split
-      // — spread first (the q241 rule)
-      val docs = t(s, dir, "documents").select(id, col("text"))
-        .repartition(32, id)
-      val tb = col("text").cast("binary")
-      val gz = Inflate.gzipCompress(tb)
-      val body =
-        when(a === 0, concat(to_binary(lit("0000"), lit("hex")), gz))
-          .when(a === 1, concat(gz, to_binary(lit("6a756e6b"), lit("hex"))))
-          .when(a === 2,
-            concat(gz, Inflate.gzipCompress(lit(" tail").cast("binary"))))
-          .when(a === 3, Inflate.zlibCompress(tb))
-          .when(a === 4, Inflate.rawDeflateCompress(tb))
-          .when(a === 5, gz.substr(lit(1), length(gz) - 4))
-          .when(a === 6, concat(gz.substr(lit(1), length(gz) - 8),
-            to_binary(lit("00000000ffffffff"), lit("hex"))))
-          .otherwise(gz)
-      val decoded = when(a === 3 || a === 4,
-          Inflate.inflateDeflate(body, InflateCapBytes))
-        .otherwise(Inflate.gunzip(body, InflateCapBytes))
-      docs.select(id, decoded.cast("string").as("decoded"))
-    }),
-
-    // ── charset transcoding (plans.Transcode — the step between
-    // inflate and the tokenizer; Spark's own decode() stops at the
-    // UTF family + latin-1, far short of the legacy web). The q241
-    // inversion: non-UTF-8 bytes are AUTHORED IN-PLAN from known
-    // text via EncodeCharset, decoded back strict, and the oracle
-    // reproduces the expected text per arm closed-form (chr()
-    // codepoints — the q303 discipline). Arms (doc_id % 8): 0
-    // windows-1252 with é AND € (the 0x80 point latin-1 lacks), 1
-    // iso-8859-1, 2 shift_jis katakana, 3 euc-jp kanji, 4
-    // windows-1251 Cyrillic — all round-trip; 5 a non-allowlisted
-    // charset (utf-7) routes NULL at ENCODE (no forName surface), 6
-    // a WRONG declaration (cp1252 bytes declared utf-8) routes NULL
-    // at strict DECODE (the é byte is malformed UTF-8), 7 an
-    // unmappable ask (€ into iso-8859-1) routes NULL at encode. ──
-    "q307_charset_transcode" -> ((s, dir) => {
-      import graft.plans.Transcode
-      val id = col("doc_id")
-      val a = id % 8
-      val docs = t(s, dir, "documents").select(id, col("text"))
-        .repartition(32, id)
-      val t1252 = concat(col("text"), lit(" caf\u00E9 \u20AC9"))
-      val tL1 = concat(col("text"), lit(" caf\u00E9 r\u00E9sum\u00E9"))
-      val tSjis = concat(col("text"), lit(" \u30AB\u30D5\u30A7"))
-      val tEuc = concat(col("text"), lit(" \u65E5\u672C\u8A9E"))
-      val t1251 = concat(col("text"),
-        lit(" \u043F\u0440\u0438\u0432\u0435\u0442"))
-      val bytes =
-        when(a === 0, Transcode.encode(t1252, lit("windows-1252")))
-          .when(a === 1, Transcode.encode(tL1, lit("iso-8859-1")))
-          .when(a === 2, Transcode.encode(tSjis, lit("shift_jis")))
-          .when(a === 3, Transcode.encode(tEuc, lit("euc-jp")))
-          .when(a === 4, Transcode.encode(t1251, lit("windows-1251")))
-          .when(a === 5, Transcode.encode(col("text"), lit("utf-7")))
-          .when(a === 6, Transcode.encode(t1252, lit("cp1252")))
-          .otherwise(Transcode.encode(t1252, lit("iso-8859-1")))
-      val declared =
-        when(a === 0, lit("windows-1252"))
-          .when(a === 1, lit("iso-8859-1"))
-          .when(a === 2, lit("shift_jis"))
-          .when(a === 3, lit("euc-jp"))
-          .when(a === 4, lit("windows-1251"))
-          .when(a === 5, lit("utf-7"))
-          .when(a === 6, lit("utf-8")) // the wrong-declaration arm
-          .otherwise(lit("iso-8859-1"))
-      docs.select(id,
-        when(asciiGuard("q307_charset_transcode", id).isNull,
-          Transcode.toUtf8(bytes, declared)).as("decoded"))
-    }),
-
-    // ── the FETCH-DECODE capstone (ext.FetchDecode — q306's inflate
-    // + q307's transcode + q236's framing composed into ONE total
-    // bytes→text decision table, the stage a real crawl pipeline
-    // runs between WARC payload and tokenizer). Records are authored
-    // in-plan as REAL bytes (ASCII head + body through the encode/
-    // compress expressions); the oracle reproduces every output
-    // column closed-form per arm. Arms (doc_id % 14): 0 undeclared
-    // utf-8 (strict-utf8 leg), 1 gzip + header cp1252 (é AND €), 2
-    // zlib deflate + META-sniffed shift_jis, 3 BOM beating a LYING
-    // shift_jis header, 4 undeclared cp1252 é (lenient fallback
-    // leg), 5 WRONG utf-8 declaration over cp1252 bytes (lenient:
-    // the é byte mints U+FFFD — the mojibake gate's food, not a
-    // kill), 6 404, 7 wrong media type, 8 unsupported CE (br), 9
-    // chunked TE (route upstream to decodeChunked), 10 corrupt gzip,
-    // 11 declared-but-unsupported charset (utf-7), 12 no status line
-    // (malformed), 13 a gzip BOMB (repeat×50 ≥ 2200 bytes vs the
-    // 2000 cap; ok-arm payloads top out at 647 — both margins hold
-    // at every SF, lengths checked 44-577). ──
-    "q308_fetch_decode" -> ((s, dir) => {
-      import graft.ext.FetchDecode
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .repartition(32, col("doc_id"))
-      FetchDecode.decodeResponses(fetchFixture(docs), "doc_id", "raw",
-        maxBytes = FetchMaxBytes)
-    }),
-
-    // ── encoding-damage / mojibake gate (TextAnalysis
-    // .encodingDamage — the detector for what q308's LENIENT legs
-    // let through by design). Arms (doc_id % 5): 0 clean, 1 three
-    // planted U+FFFD (replacement_damage — ≥5084 ppm at the longest
-    // doc vs the 1000 threshold), 2 three double-encoded é
-    // (Ã© = chr(195)+chr(169) — the utf-8-as-cp1252 signature,
-    // 3 pairs ≥ the 2-pair floor), 3 five raw C1 controls
-    // (c1_controls), 4 the BENIGN twin — genuine é accents plus a
-    // bare Ã before a space: none of the three signals may fire. ──
-    "q309_encoding_damage" -> ((s, dir) => {
-      import graft.ext.TextAnalysis
-      val id = col("doc_id")
-      val a = id % 5
-      val txt =
-        when(a === 1, concat(col("text"),
-          lit(" caf\uFFFD r\uFFFDsum\uFFFD")))
-          .when(a === 2, concat(col("text"),
-            lit(" caf\u00C3\u00A9 r\u00C3\u00A9sum\u00C3\u00A9")))
-          .when(a === 3, concat(col("text"),
-            lit(" x\u0080\u0081\u0090\u008D\u0099")))
-          .when(a === 4, concat(col("text"),
-            lit(" caf\u00E9 r\u00E9sum\u00E9 \u00C3 ok")))
-          .otherwise(col("text"))
-      TextAnalysis.encodingDamage(
-        t(s, dir, "documents").repartition(32, id)
-          .select(id, txt.as("text")),
-        "doc_id", "text")
-    }),
-
-    // ── SemDeDup — embedding-semantic dedup (Dedup.semDedup: IVF
-    // anchor clustering → WITHIN-cluster cosine pairs → components →
-    // min-id keep), certified against BRUTE-FORCE truth: the oracle
-    // computes ALL-pairs cosine ≥ τ + recursive-CTE components with
-    // no knowledge of the clustering, so the within-cluster
-    // restriction must lose nothing on this corpus. The planted
-    // groups make that provable, not probabilistic: copies are
-    // power-of-2 scalar multiples (×2 at %7, ×4 at %14 — float-exact
-    // in BOTH engines), so every copy's cosine to every vector is
-    // BIT-IDENTICAL to its base's — a group cannot split across
-    // clusters (same argmax) and sits at cos≈1 vs τ=0.9, while
-    // natural pair cosines top out at ~0.52 (measured, both SFs):
-    // a 0.38 margin on both sides of the threshold. ──
-    "q310_semdedup" -> ((s, dir) =>
-      graft.ext.Dedup.semDedup(semCorpus(t(s, dir, "embeddings")),
-        "vec_id", "embedding", nlist = 8, tau = 0.9)),
-
-    // ── SemDeDup with a SCORED keeper (the canonicalPerCluster
-    // composition the semDedup scaladoc promises): same clustering
-    // and components as q310, but the kept document per component is
-    // argmax(score) — score is the q58 md5-hex device (engine-
-    // portable, collision-free at this scale), so the keeper is NOT
-    // the min id and the window's (score DESC, id ASC) total order
-    // is exercised for real. One row per COMPONENT. ──
-    "q313_semdedup_canonical" -> ((s, dir) => {
-      import graft.ext.{ConnectedComponents, Dedup}
-      val corpus = semCorpus(t(s, dir, "embeddings")).localCheckpoint()
-      val clusters = Dedup.semDedup(corpus, "vec_id", "embedding",
-          nlist = 8, tau = 0.9)
-        .select(col("vec_id"), col("keep_id").as("cluster"),
-          col("n_members").as("cluster_size"))
-      val scored = corpus.select(col("vec_id"),
-        substring(md5(concat_ws(":", lit("sem-v1"),
-          col("vec_id").cast("string"))), 1, 8).as("score"))
-      ConnectedComponents.canonicalPerCluster(
-        clusters, "vec_id", scored, "score")
-    }),
-
-    // ── STREAMING fetch-decode twin: q308's decision table on a
-    // live ingest (the q232 stateless-map discipline); records ride
-    // base64 inside the JSONL waves (byte-exact), two waves must
-    // accumulate the identical table — certified against q308's
-    // oracle VERBATIM via the SHARED fetchFixture builder. ──
-    "q311_fetch_decode_stream" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      graft.streaming.StreamingReports.fetchDecodeStreamReplay(
-        s, fetchFixture(docs), maxBytes = FetchMaxBytes)
-    }),
-
-    // ── the WARC-FETCH CORPUS capstone — the actual Common Crawl
-    // shape end-to-end: a gzip-bodied HTTP response per doc, framed
-    // into multi-record WARC archives (8 members each, ordered
-    // collect re-join), split back out by Content-Length walking
-    // (WarcRecord), each payload re-encoded to bytes through the
-    // lossless ISO-8859-1 bridge and decoded by FetchDecode. The
-    // bridge RESOLVES WarcRecord's documented chars-vs-octets
-    // divergence: on a latin-1-bridged blob, characters ARE octets,
-    // so the declared Content-Length slices exactly — even through
-    // gzip payload bytes that contain \r\n\r\n sequences (which is
-    // why slicing, not separator scanning, is the design). The
-    // %13=0 members carry a corrupt gzip body: they must route
-    // bad_inflate WITHOUT disturbing their archive siblings (the
-    // per-record isolation contract). ──
-    "q312_warc_fetch_corpus" -> ((s, dir) => {
-      import graft.ext.{FetchDecode, WarcRecord}
-      import graft.plans.{Inflate, Transcode}
-      val id = col("doc_id")
-      val docs = t(s, dir, "documents").select(id, col("text"))
-        .repartition(32, id)
-      val head = lit("HTTP/1.1 200 OK\r\n" +
-        "Content-Type: text/html; charset=windows-1252\r\n" +
-        "Content-Encoding: gzip\r\n\r\n")
-      val bodyBytes = when(id % 13 === 0, lit("junk").cast("binary"))
-        .otherwise(Inflate.gzipCompress(Transcode.encode(
-          concat(col("text"), lit(" caf\u00E9")), lit("windows-1252"))))
-      val recStr = concat(head, decode(bodyBytes, "ISO-8859-1"))
-      val member = concat(
-        lit("WARC/1.0\r\nWARC-Type: response\r\n" +
-          "WARC-Target-URI: http://ex.com/"),
-        id.cast("string"),
-        lit("\r\nContent-Length: "), length(recStr).cast("string"),
-        lit("\r\n\r\n"), recStr, lit("\r\n\r\n"))
-      val archives = docs
-        .select(expr("CAST(doc_id DIV 8 AS BIGINT)").as("archive_id"),
-          struct(id, member.as("m")).as("sm"))
-        .groupBy("archive_id")
-        .agg(concat_ws("", transform(array_sort(collect_list(col("sm"))),
-          x => x.getField("m"))).as("blob"))
-      val recs = WarcRecord.splitRecords(archives, "archive_id", "blob")
-        .select(regexp_extract(col("target_uri"), "/([0-9]+)$", 1)
-          .cast("long").as("doc_id"),
-          encode(col("payload"), "ISO-8859-1").as("raw"))
-      FetchDecode.decodeResponses(recs, "doc_id", "raw",
-          maxBytes = FetchMaxBytes)
-        .select(col("doc_id"), col("decision"), col("text"))
-    }),
-
-    // ── UTF-16 fetch legs (the BOM story completed: q308 certified
-    // the UTF-8 BOM; real UTF-16 pages ship FF FE / FE FF, and
-    // without these legs they garble through the cp1252 fallback).
-    // Arms (doc_id % 5): 0 BOM16LE + utf-16le body, 1 BOM16BE +
-    // utf-16be body, 2 BOM16LE beating a LYING shift_jis header, 3
-    // the UTF-8 BOM regression guard against the new ordering, 4
-    // headerless-BOM-less utf-16le DECLARED by the header — the
-    // header leg must decode it (utf-16le is allowlisted). ──
-    "q314_utf16_fetch" -> ((s, dir) => {
-      import graft.ext.FetchDecode
-      import graft.plans.Transcode
-      val id = col("doc_id")
-      val a = id % 5
-      val docs = t(s, dir, "documents").select(id, col("text"))
-        .repartition(32, id)
-      def mkHead(lines: String*) = lit(lines.mkString("", "\r\n", "\r\n\r\n"))
-      val okHtml = mkHead("HTTP/1.1 200 OK", "Content-Type: text/html")
-      val bomLe = to_binary(lit("fffe"), lit("hex"))
-      val bomBe = to_binary(lit("feff"), lit("hex"))
-      val bom8 = to_binary(lit("efbbbf"), lit("hex"))
-      val t16 = concat(col("text"), lit(" caf\u00E9 16"))
-      val headCol =
-        when(a === 2, mkHead("HTTP/1.1 200 OK",
-          "Content-Type: text/html; charset=shift_jis"))
-          .when(a === 4, mkHead("HTTP/1.1 200 OK",
-            "Content-Type: text/html; charset=utf-16le"))
-          .otherwise(okHtml)
-      val body =
-        when(a === 0 || a === 2,
-          concat(bomLe, Transcode.encode(t16, lit("utf-16le"))))
-          .when(a === 1, concat(bomBe, Transcode.encode(t16, lit("utf-16be"))))
-          .when(a === 3, concat(bom8, t16.cast("binary")))
-          .otherwise(Transcode.encode(t16, lit("utf-16le")))
-      FetchDecode.decodeResponses(
-        docs.select(id, FetchDecode.responseRecord(headCol, body).as("raw")),
-        "doc_id", "raw", maxBytes = FetchMaxBytes)
-    }),
-
-    // ── INCREMENTAL SemDeDup (Dedup.semDedupIncremental — the
-    // q89/q174/q186 lifecycle discipline on the semantic arc): the
-    // old corpus is clustered once, the batch folds in against the
-    // OLD quantizer (bounded anchor broadcast + stored-list joins,
-    // never a corpus rescan), and the result must equal q310's FULL
-    // recompute — certified against q310's brute-force oracle
-    // VERBATIM. The split is engineered so BOTH incremental pair
-    // legs are live: batch = every dup-group base (%7 multiples
-    // under 100000) plus every ×4 copy (≥200000), so ×2 copies stay
-    // old — triple groups bridge batch↔old AND batch↔batch, pair
-    // groups bridge batch↔old. ──
-    "q315_semdedup_incremental" -> ((s, dir) => {
-      import graft.ext.{Dedup, SimSearch}
-      val corpus = semCorpus(t(s, dir, "embeddings")).localCheckpoint()
-      val isBatch = (col("vec_id") % 7 === 0 && col("vec_id") < 100000L) ||
-        col("vec_id") >= 200000L
-      val old = corpus.filter(!isBatch)
-      val batch = corpus.filter(isBatch)
-      // ONE quantizer build, handed to both the full pass and the
-      // incremental fold (the semDedupWithIndex seam — at scale:
-      // readIvfIndex from the store)
-      val idx = SimSearch.buildIvfIndex(old, "vec_id", "embedding",
-        nlist = 8, seed = 7L, lloydIters = 1)
-      // the old assignment feeds incrementalClusters THREE times
-      // (touched draw, member semi-join, untouched anti-join) — the
-      // replay harnesses checkpoint their running assignment per wave;
-      // this one-shot composition needs the same (round-19 optimization)
-      val oldAssign = Dedup.semDedupWithIndex(idx, old, "vec_id", tau = 0.9)
-        .localCheckpoint()
-      Dedup.semDedupIncremental(idx, oldAssign, batch,
-        "vec_id", "embedding", tau = 0.9)
-    }),
-
-    // ── STREAMING semantic-dedup ingest (the q190 read→fold→append
-    // lifecycle on the SemDeDup arc, q315's operator driven by a
-    // LIVE stream): the pre-stream corpus is the pure singletons
-    // (non-multiples of 7), wave A carries every dup group's base +
-    // ×2 copy, wave B the ×4 copies — B's only partners live in A,
-    // so the per-wave INDEX APPEND is load-bearing: skip it and
-    // every B row comes back a singleton and the oracle comparison
-    // fails. Certified against q310's brute-force oracle VERBATIM
-    // (the one-shot full recompute). ──
-    "q316_semdedup_stream" -> ((s, dir) =>
-      graft.streaming.StreamingReports.semDedupIngestReplay(
-        s, semCorpus(t(s, dir, "embeddings")),
-        isOld = col("vec_id") % 7 =!= 0 && col("vec_id") < 100000L,
-        waveA = col("vec_id") < 200000L,
-        nlist = 8, tau = 0.9)),
-
-    // ── EXACTLY-ONCE streaming semantic-dedup ingest (q316's
-    // lifecycle under the q99/CDC manifest protocol — round-15
-    // forward item closed): every wave folds and publishes (folded
-    // assignment + index list delta) under ONE batchId-keyed
-    // manifest rename, and after the stream drains the harness
-    // RE-DELIVERS wave A verbatim — the crash-redelivery a
-    // checkpoint produces. The guard makes it a no-op, so the
-    // accumulated assignment must STILL equal q310's one-shot
-    // brute-force oracle; StreamingSpec's negative probe folds the
-    // same redelivery as a fresh batch (the unguarded pipeline's
-    // view) and proves the result breaks. Same wave split as q316,
-    // so the cross-wave append path stays load-bearing here too. ──
-    "q319_semdedup_exactly_once" -> ((s, dir) =>
-      graft.streaming.StreamingReports.semDedupIngestIdempotentReplay(
-        s, semCorpus(t(s, dir, "embeddings")),
-        isOld = col("vec_id") % 7 =!= 0 && col("vec_id") < 100000L,
-        waveA = col("vec_id") < 200000L,
-        nlist = 8, tau = 0.9)),
-
-    // ── ingest-store COMPACTION mid-lifecycle (q319's store with
-    // the VACUUM step): after wave A commits, compactSemDedupStore
-    // folds its delta into the base index, promotes the assignment
-    // and drops the version — then wave B folds against the
-    // compacted store. B's partners live only in A (the q316 wave
-    // split), so the compaction is on the CRITICAL PATH of B's
-    // cross-wave pairs: fold the delta down wrong and B's ×4 copies
-    // come back singletons. Must still equal q310's one-shot
-    // brute-force oracle. ──
-    "q324_semdedup_compact_store" -> ((s, dir) =>
-      graft.streaming.StreamingReports.semDedupIngestIdempotentReplay(
-        s, semCorpus(t(s, dir, "embeddings")),
-        isOld = col("vec_id") % 7 =!= 0 && col("vec_id") < 100000L,
-        waveA = col("vec_id") < 200000L,
-        nlist = 8, tau = 0.9, compactAfterWaveA = true)),
-
-    // ── perceptual image hash (Multimodal.dHashBmp — the dedup
-    // family's image-modality member: exact dedup hashes bytes,
-    // dHash survives brightness-class edits the way minhash survives
-    // token edits). 9×8 average-pooled luma grid → 64 horizontal
-    // comparisons by CROSS-MULTIPLIED integer sums (engine-exact, no
-    // division); sub-grid and compressed files SKIPPED (the decoder
-    // drop-don't-fail discipline — tiny_8x4/rle8_dh must not
-    // surface). Oracle = tools/gen_dhash_fixtures.py's INDEPENDENT
-    // python implementation of the same spec over the authored
-    // formula pixels (the q178 discipline). ──
-    "q325_image_dhash" -> ((s, _) => {
-      import graft.ext.Multimodal
-      Multimodal.dHashBmp(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_dhash")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("width"), col("height"), col("dhash"))
-    }),
-
-    // ── image NEAR-DUP pairs (the minhash discipline on the image
-    // arc): four 16-bit bands over the dHash — pigeonhole gives
-    // EXACT recall at hamming ≤ 3 — band-keyed equi-join, exact
-    // bit_count(xor) filter, never all-pairs. The fixture plants one
-    // near pair per base pattern (single-cell +40 luma, 1-3 bits)
-    // and keeps every cross-pattern distance > 3, so the pair set is
-    // exactly the four planted pairs; the oracle computes ALL-pairs
-    // distances over the expected hashes with no knowledge of the
-    // banding (the q310 brute-force-truth discipline). ──
-    "q326_image_neardup" -> ((s, _) => {
-      import graft.ext.Multimodal
-      val hashes = Multimodal.dHashBmp(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_dhash")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("dhash"))
-      Multimodal.imageNearDupPairs(hashes, "name", "dhash", maxDist = 3)
-    }),
-
-    // ── audio amplitude-envelope hash (Multimodal.aHashWav — the
-    // dedup triad completed: minhash text, dHash image, aHash
-    // audio). 65 amplitude windows → 64 cross-multiplied average
-    // comparisons; GAIN-INVARIANT by construction (a scalar gain
-    // scales both sides of every comparison); sub-window and
-    // float-format files SKIPPED. Oracle = the generator's
-    // independent python implementation over formula samples. ──
-    "q327_audio_ahash" -> ((s, _) => {
-      import graft.ext.Multimodal
-      Multimodal.aHashWav(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/audio_ahash")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("sampleRate").as("sample_rate"),
-          col("nSamples").as("n_samples"), col("ahash"))
-    }),
-
-    // ── audio NEAR-DUP pairs: the SAME generic banded hamming join
-    // as q326 (SimSearch.hammingBandedPairs — one engine, three
-    // modalities), against the q310-style brute-force all-pairs
-    // oracle. The fixture plants one single-window +500 perturbation
-    // per envelope pattern (1-3 bits) with cross-pattern distances
-    // > 3, so the pair set is exactly the four planted pairs. ──
-    "q328_audio_neardup" -> ((s, _) => {
-      import graft.ext.{Multimodal, SimSearch}
-      val hashes = Multimodal.aHashWav(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/audio_ahash")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("ahash"))
-      SimSearch.hammingBandedPairs(hashes, "name", "ahash", maxDist = 3)
-    }),
-
-    // ── STREAMING perceptual-dedup ingest (the q190/q316 lifecycle
-    // on the banded-hamming arc): image fingerprints arrive in two
-    // waves — A carries every base pattern plus near0 (the
-    // WITHIN-wave pair leg live), B the other three near copies,
-    // whose ONLY partners live in wave A's stored hashes (the
-    // CROSS-wave store-probe leg live, and load-bearing: the
-    // StreamingSpec negative probe drops the append and the three
-    // cross pairs vanish). The accumulated pair set certifies
-    // against q326's one-shot all-pairs oracle VERBATIM. ──
-    "q334_hamming_dedup_stream" -> ((s, _) => {
-      import graft.ext.Multimodal
-      val hashes = Multimodal.dHashBmp(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_dhash")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("dhash"))
-      graft.streaming.StreamingReports.hammingDedupIngestReplay(
-        s, hashes, "name", "dhash",
-        waveA = !col("name").isin("near1.bmp", "near2.bmp", "near3.bmp"),
-        maxDist = 3)
-    }),
-
-    // ── per-frame VIDEO perceptual hash (Multimodal.dHashFrames —
-    // the modality QUAD closed: minhash text, dHash image, aHash
-    // audio, per-frame dHash video). Frames arrive distributed via
-    // frameSample (every 2nd frame); the cell spec is the BMP
-    // dHash's verbatim (shared dHashOfGrid fold — the two modalities
-    // cannot drift), gray luma = g·1000, the r=g=b case of the BMP
-    // weighting. Sub-grid frames (tiny_6x4) and non-video payloads
-    // (notvideo) are SKIPPED. Oracle = tools/gen_vhash_fixtures.py's
-    // independent python implementation over the authored formula
-    // frames (the q178/q325 discipline). ──
-    "q331_video_vhash" -> ((s, _) => {
-      import graft.ext.Multimodal
-      Multimodal.dHashFrames(Multimodal.frameSample(
-          Multimodal.asMediaFiles(
-            Multimodal.readMedia(s, FixturesDir + "/video_vhash")),
-          everyN = 2))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("frameIndex").as("frame_index"),
-          col("width"), col("height"), col("dhash"))
-    }),
-
-    // ── VIDEO near-dup pairs (Multimodal.videoNearDupPairs): two
-    // videos pair when ≥ τ=1/2 of their ALIGNED sampled frames are
-    // within hamming ≤ 3 — frame alignment by index (the brightness/
-    // re-encode edit class; time-shifts need temporal LSH, documented
-    // out of scope). Per frame the banded join has pigeonhole-exact
-    // recall, so matched_frames is EXACT and the oracle computes
-    // brute-force all-pairs with no knowledge of the banding. The
-    // fixture plants full near-copies (6/6 frames), a 7-frame partial
-    // re-cut (4/6 sampled — passes τ against base AND near donor, 2/6
-    // against its tail donor — fails) and a 4-frame fragment (2/6 —
-    // the sub-threshold negative probe), so the threshold is exercised
-    // from both sides. ──
-    "q332_video_neardup" -> ((s, _) => {
-      import graft.ext.Multimodal
-      val hashes = Multimodal.dHashFrames(Multimodal.frameSample(
-          Multimodal.asMediaFiles(
-            Multimodal.readMedia(s, FixturesDir + "/video_vhash")),
-          everyN = 2))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("frameIndex").as("frame_index"), col("dhash"))
-      Multimodal.videoNearDupPairs(hashes, "name", "frame_index", "dhash",
-        maxDist = 3, tauNum = 1, tauDen = 2)
-    }),
-
-    // ── PAGE-level robots directives (HtmlExtract.robotsMeta — the
-    // <meta name=robots> protocol completing UrlCanon's SITE-level
-    // robots.txt family; real crawlers honor both): noindex drops
-    // the page content from the corpus, nofollow drops its links
-    // from the graph. Arms (doc_id % 9): 0 no meta, 1 noindex, 2
-    // nofollow, 3 'noindex, nofollow', 4 'none' (≡ both), 5
-    // UPPERCASE + single quotes, 6 content-before-name attribute
-    // order, 7 a bot-SPECIFIC meta (googlebot) that a generic
-    // crawler must IGNORE, 8 explicit 'index, follow' no-ops. The
-    // nofollow EFFECT is live: each page plants two links and
-    // n_links_kept must zero out exactly on the nofollow arms.
-    // Oracle: closed-form per arm (the fetch-classes discipline —
-    // arms are disjoint, no regex mirror needed). ──
-    "q337_robots_meta" -> ((s, dir) => {
-      import graft.ext.HtmlExtract
-      val id = col("doc_id")
-      val a = id % 9
-      val docs = t(s, dir, "documents").select(id).repartition(32, id)
-      val meta =
-        when(a === 1, lit("<meta name=\"robots\" content=\"noindex\">"))
-          .when(a === 2, lit("<meta name=\"robots\" content=\"nofollow\">"))
-          .when(a === 3,
-            lit("<meta name=\"robots\" content=\"noindex, nofollow\">"))
-          .when(a === 4, lit("<meta name=\"robots\" content=\"none\">"))
-          .when(a === 5, lit("<META NAME='ROBOTS' CONTENT='NOINDEX'>"))
-          .when(a === 6, lit("<meta content=\"nofollow\" name=\"robots\">"))
-          .when(a === 7, lit("<meta name=\"googlebot\" content=\"noindex\">"))
-          .when(a === 8, lit("<meta name=\"robots\" content=\"index, follow\">"))
-          .otherwise(lit(""))
-      val html = concat(lit("<html><head>"), meta,
-        lit("</head><body><p>Doc "), id.cast("string"),
-        lit("</p><a href=\"http://ex.com/x\">x</a>" +
-          "<a href=\"http://ex.com/y\">y</a></body></html>"))
-      val staged = docs.select(id,
-        explode_outer(array(struct(
-          HtmlExtract.robotsMeta(html).as("rm"),
-          size(regexp_extract_all(html, lit("href=\"([^\"]*)\""), lit(1)))
-            .as("__nl")))).as("m"))
-        .select(id, col("m.rm.noindex").as("noindex"),
-          col("m.rm.nofollow").as("nofollow"), col("m.__nl").as("__nl"))
-      staged.select(id, col("noindex"), col("nofollow"),
-        when(col("noindex"), lit("drop_content"))
-          .when(col("nofollow"), lit("keep_content_drop_links"))
-          .otherwise(lit("keep")).as("decision"),
-        when(col("nofollow"), lit(0))
-          .otherwise(col("__nl")).cast("long").as("n_links_kept"))
-    }),
-
-    // ── embedding DRIFT report (SimSearch.embeddingDriftReport —
-    // the distribution-shift QA gate between corpus versions, the
-    // ScaleProbe drift device made a certified operator): per-dim
-    // integer-quantized sums (round(x·2²⁰)) and the cross-multiplied
-    // mean difference in exact floor division — no doubles after
-    // quantization. Version A = even vec_ids; version B = odd ids
-    // with a PLANTED +0.25 shift on dims 0..3 (double arithmetic on
-    // both sides — the float/double parity rule), so exactly those
-    // four dims must flag `drifted` at the 0.125 threshold while
-    // every natural even/odd difference stays `stable`. ──
-    "q350_embedding_drift" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val a = emb.filter(col("vec_id") % 2 === 0)
-      val b = emb.filter(col("vec_id") % 2 === 1)
-        .select(transform(col("embedding"),
-          (x, i) => x.cast("double") +
-            when(i < 4, lit(0.25d)).otherwise(lit(0.0d)))
-          .as("embedding"))
-      graft.ext.SimSearch.embeddingDriftReport(a, b, "embedding",
-        flagQUnits = 131072L)
-    }),
-
-    // ── EXACTLY-ONCE perceptual-dedup ingest (q334's lifecycle
-    // under the q319 batchId-manifest guard — closing the same
-    // redelivery caveat on the hamming arc that round 15 closed on
-    // the semantic arc): waves publish hashes under versioned dirs
-    // with the manifest rename LAST, the corpus is the union of
-    // COMMITTED versions, and the harness re-delivers wave A
-    // verbatim under its original batchId after the drain — the
-    // guard no-ops it and the pair set still equals q326's one-shot
-    // brute-force oracle VERBATIM. The StreamingSpec negative probe
-    // re-delivers under a FRESH batchId and the within-wave pair
-    // duplicates — the guard is load-bearing. ──
-    "q354_hamming_exactly_once" -> ((s, _) => {
-      import graft.ext.Multimodal
-      val hashes = Multimodal.dHashBmp(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_dhash")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("dhash"))
-      graft.streaming.StreamingReports.hammingDedupIngestIdempotentReplay(
-        s, hashes, "name", "dhash",
-        waveA = !col("name").isin("near1.bmp", "near2.bmp", "near3.bmp"),
-        maxDist = 3)
-    }),
-
-    // ── REAL-format PNG perceptual hash (Multimodal.dHashPng — round
-    // 17, the VERDICT r16 ask: real image corpora are PNG/JPEG, not
-    // BMP): signature + chunk walk, IDAT zlib inflate, per-row
-    // filter INVERSION (all five filter types load-bearing — the
-    // fixture encodes row y with filter y%5), four color-type legs
-    // (gray/RGB/RGBA/gray+alpha, alpha ignored), then the SHARED
-    // dHashOfGrid fold. Out-of-contract files (interlaced, 16-bit,
-    // palette, truncated, bomb header, sub-grid) are SKIPPED — the
-    // drop-don't-fail discipline. Oracle = tools/gen_png_fixtures
-    // .py's independent python decode+hash over the authored formula
-    // pixels (the q178/q325 provenance discipline). ──
-    "q357_png_dhash" -> ((s, _) => {
-      import graft.ext.Multimodal
-      Multimodal.dHashPng(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_png")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("width"), col("height"), col("dhash"))
-    }),
-
-    // ── CROSS-FORMAT image near-dup (q358 — the real-world payoff of
-    // the shared cell spec): the BMP and PNG corpora hash through ONE
-    // dHashOfGrid fold, so a PNG re-encode of a BMP is a DISTANCE-0
-    // pair and the banded hamming join finds format-crossing
-    // duplicates with no special casing — 8 within-format planted
-    // pairs plus 16 cross-format re-encode pairs. The oracle computes
-    // brute-force ALL-pairs over the UNION of the two generators'
-    // independent expected hashes, with no knowledge of the banding
-    // OR the formats (the q310 brute-force-truth discipline). ──
-    "q358_crossformat_neardup" -> ((s, _) => {
-      import graft.ext.{Multimodal, SimSearch}
-      val bmp = Multimodal.dHashBmp(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_dhash")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("dhash"))
-      val png = Multimodal.dHashPng(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_png")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("dhash"))
-      SimSearch.hammingBandedPairs(bmp.unionByName(png), "name", "dhash",
-        maxDist = 3)
-    }),
-
-    // ── REAL-format JPEG perceptual hash (Jpeg.dHashJpeg — round 17,
-    // completing the real-corpus image pair with q357's PNG):
-    // baseline sequential decode FOR REAL — marker walk, generic DHT
-    // Huffman (the fixtures carry canonical-from-frequency tables, no
-    // Annex-K shortcut), dequant + un-zigzag, the PINNED integer IDCT
-    // (bit-exact across implementations by construction), DRI/RSTn
-    // restarts, grayscale + YCbCr 4:4:4 + 4:2:0 MCU layouts, partial
-    // edge blocks on non-multiple-of-8 dims — entropy-decoding ALL
-    // components but IDCT-ing only Y (dHash needs luma alone).
-    // PROGRESSIVE (SOF2) decoded for real since round 18 — spectral
-    // selection + successive approximation, chroma AC scans skipped
-    // wholesale (marker-delimited; the decode-only-what-you-hash
-    // shape). Arithmetic/12-bit/16-bit-DQT/truncated/DRI-under-SOF2
-    // inputs are SKIPPED. Oracle = tools/gen_jpeg_fixtures.py's independent
-    // python decoder over the bytes it wrote (expected pixels are the
-    // RECONSTRUCTED ones — the lossy-format version of the q178/q325
-    // provenance discipline). ──
-    "q359_jpeg_dhash" -> ((s, _) => {
-      import graft.ext.{Jpeg, Multimodal}
-      Jpeg.dHashJpeg(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_jpeg")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("width"), col("height"), col("dhash"))
-    }),
-
-    // ── EXIF-orientation-aware JPEG dHash (round 19, verdict item 1):
-    // APP1/EXIF tag 274 (values 1-8) applied to the luma grid before
-    // the dHash fold, so a rotated-at-capture phone photo and its
-    // upright re-encode hash at distance 0 (all eight members carry
-    // one hash — generator-proven by construction: mirrors flip DCT
-    // signs, transposes transpose, the symmetric quant commutes).
-    // width/height are the UPRIGHT dims (exif6odd: 19×35 stored reads
-    // back 35×19); hostile EXIF (corrupt TIFF, LONG-typed tag, value
-    // 0, IFD1-only/thumbnail orientation) skips the TAG never the
-    // file, and the FIRST APP1 wins (exifdup pins it). Oracle: the
-    // generator's independent decode + independent transform. ──
-    "q373_exif_orient" -> ((s, _) => {
-      import graft.ext.{Jpeg, Multimodal}
-      Jpeg.dHashJpeg(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_jpeg")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("width"), col("height"), col("orientation"), col("dhash"))
-        .filter(col("name").startsWith("exif"))
-    }),
-
-    // ── MJPEG-in-AVI per-frame hash (Avi.aviFrames — round 19,
-    // verdict item 4): a REAL public video format through the
-    // certified JPEG decoder. RIFF chunk walk (LIST nesting, even
-    // padding, strh 'vids'/'MJPG' gate, interleaved audio chunks
-    // transparent to frame indices), each sampled 00dc payload a
-    // complete baseline JPEG → Jpeg.decodeGrayFrame → the existing
-    // FrameRow engine. H.264/second-video-stream/garbage-frame/
-    // progressive-frame/truncated files all DROP (H.264 is the
-    // documented boundary: inter-frame codecs need reference-frame
-    // state, not per-frame decode). Oracle: the jpeg generator's
-    // independent-decode hashes, byte-provenance-asserted into the
-    // container. ──
-    "q374_avi_vhash" -> ((s, _) => {
-      import graft.ext.{Avi, Multimodal}
-      Multimodal.dHashFrames(Avi.aviFrames(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/video_avi")),
-          everyN = 2))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("frameIndex").as("frame_index"),
-          col("width"), col("height"), col("dhash"))
-    }),
-
-    // ── cross-container cross-codec VIDEO near-dup (round 19): the
-    // MJPEG capture (cam0.avi), its per-frame near edit
-    // (camnear.avi), and its RAW-codec re-encode (gstub.grf — the
-    // GRF1 stub arc) in ONE aligned-frame pair join. cam0↔gstub is
-    // ALIGNED DISTANCE 0 (the q360 lossy-round-trip exactness on
-    // moving pictures); camnear pairs within [1,3] per frame. Same
-    // videoNearDupPairs engine as q332 — format-blind by
-    // construction. ──
-    "q375_video_crossarc" -> ((s, _) => {
-      import graft.ext.{Avi, Multimodal}
-      val files = Multimodal.asMediaFiles(
-        Multimodal.readMedia(s, FixturesDir + "/video_avi"))
-      val avi = Multimodal.dHashFrames(
-          Avi.aviFrames(files, everyN = 2)).toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("frameIndex").as("frame_index"), col("dhash"))
-      val grf = Multimodal.dHashFrames(
-          Multimodal.frameSample(files, everyN = 2)).toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("frameIndex").as("frame_index"), col("dhash"))
-      Multimodal.videoNearDupPairs(avi.unionByName(grf),
-        "name", "frame_index", "dhash",
-        maxDist = 3, tauNum = 1, tauDen = 2)
-    }),
-
-    // ── the RE-ENCODE dedup capstone (q360): BMP + PNG + JPEG corpora
-    // hash through ONE shared cell spec, so every cross-format
-    // re-encode of the same image pairs at distance 0 (the fixture
-    // quant tables preserve the dHash exactly through the lossy round
-    // trip — spec-pinned) and the format-blind banded join returns
-    // the four 6-member re-encode clusters: C(6,2)·4 = 60 pairs,
-    // with jodd.jpg isolated (quadratic pattern — the q220 spread
-    // rule). Oracle: brute-force all-pairs over the UNION of the
-    // THREE generators' independent expected hashes. ──
-    "q360_reencode_triple" -> ((s, _) => {
-      import graft.ext.{Jpeg, Multimodal, SimSearch}
-      def named(df: org.apache.spark.sql.DataFrame) =
-        df.select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("dhash"))
-      val bmp = named(Multimodal.dHashBmp(Multimodal.asMediaFiles(
-        Multimodal.readMedia(s, FixturesDir + "/images_dhash"))).toDF())
-      val png = named(Multimodal.dHashPng(Multimodal.asMediaFiles(
-        Multimodal.readMedia(s, FixturesDir + "/images_png"))).toDF())
-      val jpg = named(Jpeg.dHashJpeg(Multimodal.asMediaFiles(
-        Multimodal.readMedia(s, FixturesDir + "/images_jpeg"))).toDF())
-      SimSearch.hammingBandedPairs(
-        bmp.unionByName(png).unionByName(jpg), "name", "dhash",
-        maxDist = 3)
-    }),
-
-    // ── REAL-format GIF perceptual hash (Gif.dHashGif — round 17,
-    // the legacy image QUAD closed: BMP, PNG, JPEG, GIF): 87a/89a
-    // first-frame decode — extension blocks skipped sub-block-wise,
-    // LSB-first LZW with the canonical width rule and the KwKwK
-    // case, PALETTE application (base3's REVERSED local table with
-    // inverted indices makes pass-through impossible), INTERLACED
-    // four-pass row order, and animation hashing its POSTER frame.
-    // Out-of-contract (bad magic, truncated LZW, offset first frame,
-    // no color table, sub-grid) SKIPPED. Oracle = tools/
-    // gen_gif_fixtures.py's independent decode (lossless — the
-    // formula pixels, certified through palette + LZW + interlace
-    // provenance). ──
-    "q361_gif_dhash" -> ((s, _) => {
-      import graft.ext.{Gif, Multimodal}
-      Gif.dHashGif(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_gif")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("width"), col("height"), col("dhash"))
-    }),
-
-    // ── the RE-ENCODE dedup QUAD capstone (q362): all four legacy
-    // image formats through ONE format-blind banded hamming join —
-    // every cross-format re-encode of the same image pairs within
-    // the exact-recall band, giving four 10-member re-encode clusters
-    // (C(10,2)·4 = 180 pairs — the palette-PNG and progressive-JPEG
-    // members joined in round 18) plus the jodd/progodd pair, with
-    // ganim.gif isolated
-    // (quadratic patterns). Oracle: brute-force all-pairs over the
-    // UNION of the FOUR generators' independent expected hashes. ──
-    "q362_reencode_quad" -> ((s, _) => {
-      import graft.ext.{Gif, Jpeg, Multimodal, SimSearch}
-      def named(df: org.apache.spark.sql.DataFrame) =
-        df.select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("dhash"))
-      val bmp = named(Multimodal.dHashBmp(Multimodal.asMediaFiles(
-        Multimodal.readMedia(s, FixturesDir + "/images_dhash"))).toDF())
-      val png = named(Multimodal.dHashPng(Multimodal.asMediaFiles(
-        Multimodal.readMedia(s, FixturesDir + "/images_png"))).toDF())
-      val jpg = named(Jpeg.dHashJpeg(Multimodal.asMediaFiles(
-        Multimodal.readMedia(s, FixturesDir + "/images_jpeg"))).toDF())
-      val gif = named(Gif.dHashGif(Multimodal.asMediaFiles(
-        Multimodal.readMedia(s, FixturesDir + "/images_gif"))).toDF())
-      SimSearch.hammingBandedPairs(
-        bmp.unionByName(png).unionByName(jpg).unionByName(gif),
-        "name", "dhash", maxDist = 3)
-    }),
-
-    // ── STREAMING re-encode ingest (q363 — the q334 lifecycle on the
-    // cross-format arc, the production shape of re-encode dedup): the
-    // ORIGINALS (every .bmp) land first and seed the store; the
-    // re-encodes (.png/.jpg/.gif) arrive on a LATER wave whose
-    // within-wave pairs cover only each other — their pairs against
-    // the originals exist ONLY through the store probe
-    // (hammingBandedPairsAgainst), so the cross-wave leg is
-    // load-bearing by construction. The accumulated set must equal
-    // q362's one-shot brute-force oracle VERBATIM (the shared
-    // ReencodeQuadSql — the identical-oracle discipline's fifth
-    // hamming consumer). ──
-    // ── REAL-format TIFF perceptual hash (Multimodal.dHashTiff —
-    // round 17, the scanned-document format, closing a FIVE-format
-    // image family): classic TIFF in BOTH byte orders, first-IFD
-    // walk, multi-strip reassembly (StripOffsets/ByteCounts/
-    // RowsPerStrip, inline or pointed), RGB chunky, and the
-    // PhotometricInterpretation applied for real — WhiteIsZero
-    // samples are inverted before the luma (pass-through would hash
-    // the negative; the fixture plants exactly that trap). Any
-    // compression, 16-bit, planar-2, tiled, or strip-past-EOF input
-    // skips. Oracle = tools/gen_tiff_fixtures.py's independent
-    // decode (lossless provenance, both byte orders). ──
-    "q367_tiff_dhash" -> ((s, _) => {
-      import graft.ext.Multimodal
-      Multimodal.dHashTiff(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_tiff")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("width"), col("height"), col("dhash"))
-    }),
-
-    // ── the FIVE-format re-encode capstone (q368): BMP + PNG + JPEG
-    // + GIF + TIFF through ONE format-blind banded join — four
-    // 13-member re-encode clusters, C(13,2)·4 = 312 pairs (the
-    // palette-PNG, progressive-JPEG and LZW-TIFF members joined in
-    // round 18) plus the jodd/progodd pair and the lzwnoise
-    // singleton (joins nothing), vs the
-    // brute-force oracle over the UNION of the five generators'
-    // expected hashes (q362's quad plus the TIFF leg; the quad's own
-    // oracle stays untouched — the identical-oracle discipline works
-    // forward, never by rewriting certified history). ──
-    "q368_reencode_quint" -> ((s, _) => {
-      import graft.ext.{Gif, Jpeg, Multimodal, SimSearch}
-      def named(df: org.apache.spark.sql.DataFrame) =
-        df.select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("dhash"))
-      val u = named(Multimodal.dHashBmp(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_dhash"))).toDF())
-        .unionByName(named(Multimodal.dHashPng(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_png"))).toDF()))
-        .unionByName(named(Jpeg.dHashJpeg(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_jpeg"))).toDF()))
-        .unionByName(named(Gif.dHashGif(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_gif"))).toDF()))
-        .unionByName(named(Multimodal.dHashTiff(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_tiff"))).toDF()))
-      SimSearch.hammingBandedPairs(u, "name", "dhash", maxDist = 3)
-    }),
-
-    // ── REAL-format WebP-LOSSLESS (VP8L) perceptual hash
-    // (Vp8l.dHashWebp — round 18, the SIXTH image format): RIFF walk
-    // to the VP8L chunk, LSB-first bits, canonical prefix codes in
-    // both the SIMPLE and NORMAL (code-length-coded, 16/17/18 RLE)
-    // forms, the LZ77 backref stream with the 120-entry 2D distance
-    // map AND raw distances, the color cache (hash 0x1E35A7BD,
-    // updated on every emitted pixel), and the SUBTRACT-GREEN
-    // transform applied for real. Lossy VP8/VP8X, other transforms,
-    // meta prefix images, cold-cache hits, truncation all SKIP.
-    // Oracle = tools/gen_webp_fixtures.py's independent decode of
-    // the bytes it wrote (lossless provenance). ──
-    "q369_webp_dhash" -> ((s, _) => {
-      import graft.ext.{Multimodal, Vp8l}
-      Vp8l.dHashWebp(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_webp")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("width"), col("height"), col("dhash"))
-    }),
-
-    // ── the SIX-format re-encode capstone (q370): q368's quint plus
-    // the VP8L corpus through ONE format-blind banded join — webp_k
-    // joins the base side and webpnear_k the near side of cluster k,
-    // giving four 15-member clusters, C(15,2)·4 = 420 pairs, plus
-    // the jodd/progodd pair, vs the brute-force oracle over the
-    // UNION of the six generators' expected hashes (q368's own
-    // oracle stays untouched — the identical-oracle discipline
-    // works forward). ──
-    "q370_reencode_sext" -> ((s, _) => {
-      import graft.ext.{Gif, Jpeg, Multimodal, SimSearch, Vp8l}
-      def named(df: org.apache.spark.sql.DataFrame) =
-        df.select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("dhash"))
-      val u = named(Multimodal.dHashBmp(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_dhash"))).toDF())
-        .unionByName(named(Multimodal.dHashPng(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_png"))).toDF()))
-        .unionByName(named(Jpeg.dHashJpeg(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_jpeg"))).toDF()))
-        .unionByName(named(Gif.dHashGif(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_gif"))).toDF()))
-        .unionByName(named(Multimodal.dHashTiff(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_tiff"))).toDF()))
-        .unionByName(named(Vp8l.dHashWebp(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_webp"))).toDF()))
-      SimSearch.hammingBandedPairs(u, "name", "dhash", maxDist = 3)
-    }),
-
-    // ── STREAMING six-format re-encode ingest (q372 — q363's
-    // lifecycle on the sext arc): the BMP originals land first and
-    // seed the store; all FIVE re-encode formats (png/jpg/gif/tif/
-    // webp) arrive on a later wave whose within-wave pairs cover
-    // only each other — their pairs against the originals exist
-    // ONLY through the store probe. Accumulated set == q370's
-    // one-shot oracle VERBATIM (shared ReencodeSextSql). ──
-    "q372_reencode_sext_stream" -> ((s, _) => {
-      import graft.ext.{Gif, Jpeg, Multimodal, Vp8l}
-      def named(df: org.apache.spark.sql.DataFrame) =
-        df.select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("dhash"))
-      val all = named(Multimodal.dHashBmp(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_dhash"))).toDF())
-        .unionByName(named(Multimodal.dHashPng(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_png"))).toDF()))
-        .unionByName(named(Jpeg.dHashJpeg(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_jpeg"))).toDF()))
-        .unionByName(named(Gif.dHashGif(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_gif"))).toDF()))
-        .unionByName(named(Multimodal.dHashTiff(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_tiff"))).toDF()))
-        .unionByName(named(Vp8l.dHashWebp(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_webp"))).toDF()))
-      graft.streaming.StreamingReports.hammingDedupIngestReplay(
-        s, all, "name", "dhash",
-        waveA = col("name").endsWith(".bmp"), maxDist = 3)
-    }),
-
-    // ── REAL-format AIFF amplitude hash (Multimodal.aHashAiff —
-    // round 17, the audio arc's second container): big-endian IFF
-    // chunk walk, the 80-bit extended-float sample rate parsed and
-    // gated to positive integers, SIGNED 8-bit + 16-bit BE PCM legs,
-    // the SHARED 65-window envelope spec — so an AIFF re-encode of a
-    // WAV hashes IDENTICALLY (q366's premise). Hostile/truncated/
-    // sub-window inputs skip. Oracle = tools/gen_audio_formats.py's
-    // independent implementation over the formula samples (lossless
-    // — the q325 provenance discipline), provenance-re-parsed. ──
-    "q364_aiff_ahash" -> ((s, _) => {
-      import graft.ext.Multimodal
-      Multimodal.aHashAiff(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/audio_formats")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("sampleRate").as("sample_rate"),
-          col("nSamples").as("n_samples"), col("ahash"))
-    }),
-
-    // ── Sun .au + G.711 μ-LAW AND A-LAW (Multimodal.aHashAu — the
-    // audio arc's LOSSY-CODEC leg, q359's JPEG discipline on sound):
-    // encoding 1 expands μ-law and encoding 27 A-law (round 18) with
-    // the standard formulas, each certified against the DECODED
-    // samples of its OWN bytes (the generator implements both
-    // expansions independently); encodings 2/3 are 8/16-bit linear;
-    // ADPCM/float encodings and sub-window payloads skip; dataSize
-    // −1 reads to EOF per spec. The fixtures' geometric envelopes
-    // keep every inter-window gap ≥ 15%, so neither codec's
-    // half-step can flip a comparison — the planted [1,3] geometry
-    // survives BOTH codecs, and the A-law re-encodes land
-    // window-for-window with their μ-law siblings (cross-codec
-    // distance 0, generator-asserted). ──
-    "q365_au_ahash" -> ((s, _) => {
-      import graft.ext.Multimodal
-      Multimodal.aHashAu(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/audio_formats")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("sampleRate").as("sample_rate"),
-          col("nSamples").as("n_samples"), col("ahash"))
-    }),
-
-    // ── the AUDIO re-encode capstone (q366 — q362 on the sound arc):
-    // WAV + AIFF + AU corpora hash through ONE shared window spec, so
-    // the lossless AIFF re-encodes join their WAV originals at
-    // distance 0 (four 4-member clusters) while the telephony arc's
-    // planted pairs surface beside them — the μ-law AND A-law
-    // re-encodes of each envelope land in ONE 4-member cluster per
-    // pattern (cross-CODEC distance 0, round 18) — one format-blind
-    // banded hamming join, certified against a brute-force oracle
-    // over the UNION of the two generators' expected hashes. ──
-    // (round 18: the FLAC leg joined the union — cbase/cnear are
-    // lossless re-encodes of the WAV formulas, so the wavfam
-    // clusters grow to 6 members; the shared expected parquet
-    // carries the new rows and the oracle SQL is UNCHANGED)
-    "q366_audio_reencode" -> ((s, _) => {
-      import graft.ext.{Flac, Multimodal, SimSearch}
-      def named(df: org.apache.spark.sql.DataFrame) =
-        df.select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("ahash"))
-      val wav = named(Multimodal.aHashWav(Multimodal.asMediaFiles(
-        Multimodal.readMedia(s, FixturesDir + "/audio_ahash"))).toDF())
-      val fmts = Multimodal.asMediaFiles(
-        Multimodal.readMedia(s, FixturesDir + "/audio_formats"))
-      val aif = named(Multimodal.aHashAiff(fmts).toDF())
-      val au = named(Multimodal.aHashAu(fmts).toDF())
-      val flc = named(Flac.aHashFlac(fmts).toDF())
-      SimSearch.hammingBandedPairs(
-        wav.unionByName(aif).unionByName(au).unionByName(flc),
-        "name", "ahash", maxDist = 3)
-    }),
-
-    // ── REAL-format FLAC amplitude hash (Flac.aHashFlac — round 18,
-    // the audio arc's lossless-CODEC leg): STREAMINFO walk, frame
-    // sync + UTF-8 frame numbers, CONSTANT/VERBATIM/FIXED(0-4)/LPC
-    // subframes, rice partitions WITH the escape hatch, and BOTH
-    // CRCs verified (a flipped byte is a detected drop, never a
-    // silent hash shift). Lossless: decoded samples equal the
-    // formula samples exactly (generator-asserted provenance), so
-    // cbase/cnear join the WAV clusters at distance 0. Multi-channel,
-    // non-16-bit, variable-blocksize, wasted-bits, rice-method-1,
-    // bad-CRC, truncated and trailing-garbage inputs all SKIP. MP3
-    // stays a documented boundary (see Flac.scala's scaladoc: the
-    // ISO 11172-3 table surface defeats fixture-scale
-    // certification; no decoder in the dependency surface). ──
-    "q371_flac_ahash" -> ((s, _) => {
-      import graft.ext.{Flac, Multimodal}
-      Flac.aHashFlac(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/audio_formats")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("sampleRate").as("sample_rate"),
-          col("nSamples").as("n_samples"), col("ahash"))
-    }),
-
-    "q363_reencode_ingest_stream" -> ((s, _) => {
-      import graft.ext.{Gif, Jpeg, Multimodal}
-      def named(df: org.apache.spark.sql.DataFrame) =
-        df.select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("dhash"))
-      val all = named(Multimodal.dHashBmp(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_dhash"))).toDF())
-        .unionByName(named(Multimodal.dHashPng(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_png"))).toDF()))
-        .unionByName(named(Jpeg.dHashJpeg(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_jpeg"))).toDF()))
-        .unionByName(named(Gif.dHashGif(Multimodal.asMediaFiles(
-          Multimodal.readMedia(s, FixturesDir + "/images_gif"))).toDF()))
-      graft.streaming.StreamingReports.hammingDedupIngestReplay(
-        s, all, "name", "dhash",
-        waveA = col("name").endsWith(".bmp"), maxDist = 3)
-    }),
-
-    // ── STREAMING drift ingest (StreamingReports.driftIngestReplay —
-    // the mergeable drift state live on a stream, the q316/q334
-    // lifecycle discipline on the QA arc): the shifted candidate
-    // version arrives in two waves, each folding O(dims) state; the
-    // accumulated state reports against the frozen reference and
-    // must equal the ONE-SHOT q350 report — certified against q350's
-    // oracle VERBATIM (EmbDriftSql). ──
-    "q353_drift_stream" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val a = emb.filter(col("vec_id") % 2 === 0)
-      val b = emb.filter(col("vec_id") % 2 === 1)
-        .select(col("vec_id"), transform(col("embedding"),
-          (x, i) => x.cast("double") +
-            when(i < 4, lit(0.25d)).otherwise(lit(0.0d)))
-          .as("embedding"))
-      graft.streaming.StreamingReports.driftIngestReplay(
-        s, a, b, "embedding", waveA = col("vec_id") % 4 === 1,
-        flagQUnits = 131072L)
-    }),
-
-    // ── text/plain media intake (FetchDecode's round-16 mediaTypes
-    // allowlist — real crawls carry plain-text documents the charset
-    // machinery decodes identically): arms (doc_id % 6): 0
-    // text/plain + declared cp1252 (the legacy-charset leg on a
-    // plain body), 1 text/plain undeclared utf-8 (strict leg), 2
-    // text/html control, 3 application/json — STILL bad_type under
-    // the extended allowlist, 4 text/plain + gzip (two-stage), 5
-    // text/plain whose body CONTAINS '<meta charset=koi8-r>' as
-    // literal text — under html the meta-sniff leg would fire, and
-    // it still does here BY DESIGN (the WHATWG prescan is
-    // content-sniffing; the arm pins that behavior so a future
-    // 'plain disables sniff' change must re-certify consciously —
-    // body authored in koi8-r so the sniff decodes it CORRECTLY). ──
-    "q352_fetch_text_plain" -> ((s, dir) => {
-      import graft.ext.FetchDecode
-      import graft.plans.{Inflate, Transcode}
-      val id = col("doc_id")
-      val a = id % 6
-      val docs = t(s, dir, "documents").select(id, col("text"))
-        .repartition(32, id)
-      def mkHead(lines: String*) = lit(lines.mkString("", "\r\n", "\r\n\r\n"))
-      val headC =
-        when(a === 0, mkHead("HTTP/1.1 200 OK",
-          "Content-Type: text/plain; charset=windows-1252"))
-          .when(a === 2, mkHead("HTTP/1.1 200 OK", "Content-Type: text/html"))
-          .when(a === 3, mkHead("HTTP/1.1 200 OK",
-            "Content-Type: application/json"))
-          .when(a === 4, mkHead("HTTP/1.1 200 OK",
-            "Content-Type: text/plain", "Content-Encoding: gzip"))
-          .otherwise(mkHead("HTTP/1.1 200 OK", "Content-Type: text/plain"))
-      val body =
-        when(a === 0, Transcode.encode(
-          concat(col("text"), lit(" caf\u00E9 txt")), lit("windows-1252")))
-          .when(a === 4, Inflate.gzipCompress(col("text").cast("binary")))
-          .when(a === 5, Transcode.encode(
-            concat(lit("<meta charset=koi8-r> \u043C\u0438\u0440 "),
-              col("text")), lit("koi8-r")))
-          .otherwise(col("text").cast("binary"))
-      FetchDecode.decodeResponses(
-        docs.select(id, FetchDecode.responseRecord(headC, body).as("raw")),
-        "doc_id", "raw", maxBytes = FetchMaxBytes,
-        mediaTypes = FetchDecode.TextMediaTypes)
-    }),
-
-    // ── MERGEABLE drift state (SimSearch.driftState/mergeDriftStates
-    // /driftFromStates — the q338 discipline on the drift arc):
-    // per-batch per-dim quantized partials fold by re-group, so a
-    // day's embedding batch joins the report without rescanning
-    // history. Each version splits %4 into two batches whose states
-    // merge; the result must equal the ONE-SHOT q350 report —
-    // certified against q350's oracle VERBATIM (EmbDriftSql). Every
-    // dim lives in BOTH batches of both versions, so the merge
-    // re-aggregation is provably live. ──
-    "q351_drift_incremental" -> ((s, dir) => {
-      import graft.ext.SimSearch
-      val emb = t(s, dir, "embeddings")
-      val a = emb.filter(col("vec_id") % 2 === 0)
-      val b = emb.filter(col("vec_id") % 2 === 1)
-        .select(col("vec_id"), transform(col("embedding"),
-          (x, i) => x.cast("double") +
-            when(i < 4, lit(0.25d)).otherwise(lit(0.0d)))
-          .as("embedding"))
-      def merged(df: DataFrame, sel: Column) = SimSearch.mergeDriftStates(
-        SimSearch.driftState(df.filter(sel), "embedding"),
-        SimSearch.driftState(df.filter(!sel), "embedding"))
-      SimSearch.driftFromStates(
-        merged(a, col("vec_id") % 4 === 0),
-        merged(b, col("vec_id") % 4 === 1),
-        flagQUnits = 131072L)
-    }),
-
-    // ── schedule-mix AUDIT (Sampling.scheduleMixReport — the
-    // validation tool for ANY interleave order): at each arrival the
-    // deviation from the target mix is |src_rank·W − position·w_s|
-    // in exact integer 1/W units. Over the equal-sized 20-source
-    // fixture the report EXPOSES exhaustion drift — weight-3 sources
-    // run out early and the tail re-normalizes (max 481 units ≈ 12
-    // items at sf0.01, growing with corpus size) — which is the
-    // finding a mix audit exists to surface: the schedule holds the
-    // mix only while sources last, so size sources to their weights
-    // upstream (q262/q268's job). Pure per-row arithmetic + one
-    // small aggregate. ──
-    "q349_schedule_audit" -> ((s, dir) => {
-      val weights = (0 until 20).map(n => s"src$n" -> ((n % 3) + 1).toLong).toMap
-      val sched = graft.operators.Sampling.weightedInterleave(
-        t(s, dir, "documents").select(col("doc_id"), col("source"))
-          .repartition(32, col("doc_id")),
-        "source", "doc_id", weights)
-      graft.operators.Sampling.scheduleMixReport(
-        sched, "source", "src_rank", "position", weights)
-    }),
-
-    // ── QUALITY-CURRICULUM schedule (q348): the q336 quality score
-    // bucketed at fixed thresholds (≥80000 ppm high / ≥30000 mid /
-    // low — all three populated at every SF) and fed through
-    // weightedInterleave at weights 3:2:1 — the curriculum a
-    // quality-weighted training run consumes: high-quality docs are
-    // seen 3× as densely UNTIL THE BUCKET EXHAUSTS (the curriculum
-    // intent: quality front-loads, the tail re-normalizes over the
-    // survivors), and the whole order is deterministic (the
-    // resumable-schedule contract). Oracle: the shared PrScoreCtes +
-    // the integer error-diffusion interleave mirror. ──
-    "q348_curriculum_schedule" -> ((s, dir) => {
-      val scored = prScoredDocs(s, dir)
-      val bucketed = scored.select(col("doc_id"),
-        when(col("score") >= 80000L, lit("high"))
-          .when(col("score") >= 30000L, lit("mid"))
-          .otherwise(lit("low")).as("bucket"))
-      graft.operators.Sampling.weightedInterleave(bucketed, "bucket",
-        "doc_id", Map("high" -> 3L, "mid" -> 2L, "low" -> 1L))
-    }),
-
-    // ── the ROBOTS POLICY STACK capstone (q346): all three
-    // certified robots levels in ONE decision chain — robots.txt
-    // gates the SITE (q223's longest-prefix decide over the messy-URL
-    // fixture), X-Robots-Tag the RESPONSE and meta robots the PAGE
-    // (q339's unioned directives, arms doc_id % 8) — ranked
-    // blocked_robots > drop_content (noindex) >
-    // keep_content_drop_links (nofollow) > keep, with the link
-    // effect live (denied and nofollow rows keep 0 of their 2
-    // links). The replay fetches everything and RANKS the classes
-    // (the q318 rule — production would never fetch a denied URL).
-    // Oracle: the shared RobotsDecideCtes + q339's closed-form
-    // directive arms under the one precedence CASE. ──
-    "q346_robots_policy_stack" -> ((s, dir) => {
-      import graft.ext.{HtmlExtract, HttpRecord, UrlCanon}
-      val id = col("doc_id")
-      val a = id % 8
-      val docs0 = t(s, dir, "documents")
-      val raw = urlFixture(docs0).drop("n_chars")
-        .filter(UrlCanon.canonicalUrl(col("url")).isNotNull)
-      val site = UrlCanon.robotsDecide(raw, "doc_id", "url",
-          robotsRulesFixture(s))
-        .select(id, col("decision").as("__rdec"))
-      // the q339 response fixture verbatim: header+meta directive arms
-      val metaTag =
-        when(a === 5 || a === 6,
-          lit("<meta name=\"robots\" content=\"noindex\">"))
-          .otherwise(lit(""))
-      val html = concat(lit("<html><head>"), metaTag,
-        lit("</head><body><a href=\"http://ex.com/x\">x</a>" +
-          "<a href=\"http://ex.com/y\">y</a></body></html>"))
-      val hdr =
-        when(a === 1, lit("X-Robots-Tag: noindex\r\n"))
-          .when(a === 2, lit("X-Robots-Tag: nofollow\r\n"))
-          .when(a === 3, lit("X-Robots-Tag: none\r\n"))
-          .when(a === 4, lit("X-Robots-Tag: googlebot: noindex\r\n"))
-          .when(a === 6, lit("X-Robots-Tag: nofollow\r\n"))
-          .when(a === 7, lit("X-Robots-Tag: NOINDEX\r\n"))
-          .otherwise(lit(""))
-      val rawResp = concat(
-        lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"),
-        hdr, lit("\r\n"), html)
-      val page = docs0.select(id).repartition(32, id)
-        .select(id, explode_outer(array(struct(
-          HtmlExtract.robotsHeader(HttpRecord.header(rawResp, "X-Robots-Tag"))
-            .as("h"),
-          HtmlExtract.robotsMeta(HttpRecord.body(rawResp)).as("m"),
-          size(regexp_extract_all(HttpRecord.body(rawResp),
-            lit("href=\"([^\"]*)\""), lit(1))).as("__nl")))).as("x"))
-        .select(id,
-          (col("x.h.noindex") || col("x.m.noindex")).as("__noindex"),
-          (col("x.h.nofollow") || col("x.m.nofollow")).as("__nofollow"),
-          col("x.__nl").as("__nl"))
-      site.join(page, Seq("doc_id"))
-        .select(id,
-          when(col("__rdec") === "deny", lit("blocked_robots"))
-            .when(col("__noindex"), lit("drop_content"))
-            .when(col("__nofollow"), lit("keep_content_drop_links"))
-            .otherwise(lit("keep")).as("decision"),
-          when(col("__rdec") === "deny" || col("__nofollow"), lit(0))
-            .otherwise(col("__nl")).cast("long").as("n_links_kept"))
-    }),
-
-    // ── store FSCK (IndexStore.fsck — the post-crash audit the
-    // manifest-protocol stores need): a version exists IFF its
-    // manifest does, so a v-dir without a manifest is invisible
-    // crash debris (safe to clean), a manifest without its v-dir is
-    // CORRUPT (reads resolve a version with no data), and stranded
-    // .staging-/.swap-/.old- siblings are the atomic-commit
-    // machinery's transient dirs. The fixture plants one of each
-    // around a healthy committed version; the healthy version must
-    // produce NO finding. Metadata-only listing. ──
-    "q344_store_fsck" -> ((s, _) => {
-      import java.nio.file.Files
-      val base = Files.createTempDirectory("graft_fsck")
-      val root = base.resolve("store")
-      Files.createDirectories(root.resolve("index"))
-      Files.createDirectories(root.resolve("v000000001"))
-      Files.createDirectories(root.resolve("_manifest"))
-      Files.write(root.resolve("_manifest").resolve("v000000001.json"),
-        "{}".getBytes("UTF-8"))
-      Files.createDirectories(root.resolve("v000000002")) // orphan
-      Files.write(root.resolve("_manifest").resolve("v000000003.json"),
-        "{}".getBytes("UTF-8")) // dangling
-      Files.createDirectories(base.resolve("store.staging-ab12"))
-      Files.createDirectories(base.resolve("store.old-cd34"))
-      graft.operators.IndexStore.fsck(s, root.toString)
-    }),
-
-    // ── fsck REPAIR (IndexStore.fsckRepair — q344's audit acted on):
-    // debris deletes (orphans are invisible to readers by protocol,
-    // removal always safe), CORRUPT entries are REFUSED — deleting a
-    // dangling manifest would rewrite committed history; that fix is
-    // an operator decision. The query plants the q344 states, runs
-    // the repair, and returns the audit trail PLUS a post-repair
-    // re-audit appended as re_check rows — which must show ONLY the
-    // refused corruption surviving. ──
-    "q347_store_fsck_repair" -> ((s, _) => {
-      import java.nio.file.Files
-      val base = Files.createTempDirectory("graft_fsckr")
-      val root = base.resolve("store")
-      Files.createDirectories(root.resolve("index"))
-      Files.createDirectories(root.resolve("v000000001"))
-      Files.createDirectories(root.resolve("_manifest"))
-      Files.write(root.resolve("_manifest").resolve("v000000001.json"),
-        "{}".getBytes("UTF-8"))
-      Files.createDirectories(root.resolve("v000000002"))
-      Files.write(root.resolve("_manifest").resolve("v000000003.json"),
-        "{}".getBytes("UTF-8"))
-      Files.createDirectories(base.resolve("store.staging-ab12"))
-      Files.createDirectories(base.resolve("store.old-cd34"))
-      val trail = graft.operators.IndexStore.fsckRepair(s, root.toString)
-      val after = graft.operators.IndexStore.fsck(s, root.toString)
-        .select(concat(lit("re_check:"), col("check_name")).as("check_name"),
-          col("entry"), col("severity"), lit("").as("action"))
-      trail.unionByName(after)
-    }),
-
-    // ── DETERMINISTIC weighted interleave (Sampling
-    // .weightedInterleave — the data-MIXING SCHEDULE a training run
-    // consumes): integer per-source weights (src N weighs N%3+1),
-    // prefixes hold the target proportions while every source has
-    // items via the error-diffusion key (2k−1)·(lcm/w) — pure
-    // integers, both engines order identically (q349 audits the
-    // drift once finite sources exhaust). No per-source
-    // window: two globalDenseSeq passes + a ≤|sources|-row offset
-    // broadcast (a giant source never pins a partition). ──
-    "q345_weighted_interleave" -> ((s, dir) => {
-      val weights = (0 until 20).map(n => s"src$n" -> ((n % 3) + 1).toLong).toMap
-      graft.operators.Sampling.weightedInterleave(
-        t(s, dir, "documents").select(col("doc_id"), col("source"))
-          .repartition(32, col("doc_id")),
-        "source", "doc_id", weights)
-    }),
-
-    // ── SIZED interleave audit (q355 — round 17's answer to q349's
-    // finding): the sizeSourcesToWeights pre-pass trims the SAME
-    // 20-source fixture to the longest exhaustion-free schedule
-    // (T = min n·W/w, largest-remainder apportioned), so every
-    // source runs out at the same position and the audit that
-    // measured 481 drift units on q349 stays tie-block-BOUNDED
-    // (36 < W = 39 at sf0.01) — the whole guarantee chain
-    // (size → interleave → audit) in one certified composition.
-    // Oracle: the sizing + interleave + deviation arithmetic
-    // mirrored closed-form (shared sizedInterleaveAuditSql). ──
-    "q355_sized_interleave_audit" -> ((s, dir) => {
-      import graft.operators.Sampling
-      val weights = (0 until 20).map(n => s"src$n" -> ((n % 3) + 1).toLong).toMap
-      val sized = Sampling.sizeSourcesToWeights(
-        t(s, dir, "documents").select(col("doc_id"), col("source"))
-          .repartition(32, col("doc_id")),
-        "source", "doc_id", weights)
-      Sampling.scheduleMixReport(
-        Sampling.weightedInterleave(sized, "source", "doc_id", weights),
-        "source", "src_rank", "position", weights)
-    }),
-
-    // ── SIZED quality-curriculum audit (q356 — q348's composition
-    // re-run under the exhaustion fix, the capstone VERDICT r16
-    // asked for): quality buckets at 3:2:1 are sized to their
-    // weights BEFORE the curriculum interleave, so the high-quality
-    // bucket cannot run dry mid-schedule and the mix audit stays
-    // bounded end-to-end (bucketing → sizing → interleave → audit,
-    // every stage certified). ──
-    "q356_sized_curriculum_audit" -> ((s, dir) => {
-      import graft.operators.Sampling
-      val scored = prScoredDocs(s, dir)
-      val bucketed = scored.select(col("doc_id"),
-        when(col("score") >= 80000L, lit("high"))
-          .when(col("score") >= 30000L, lit("mid"))
-          .otherwise(lit("low")).as("bucket"))
-      val w = Map("high" -> 3L, "mid" -> 2L, "low" -> 1L)
-      val sized = Sampling.sizeSourcesToWeights(bucketed, "bucket", "doc_id", w)
-      Sampling.scheduleMixReport(
-        Sampling.weightedInterleave(sized, "bucket", "doc_id", w),
-        "bucket", "src_rank", "position", w)
-    }),
-
-    // ── CONTENT-DEFINED chunking (TextAnalysis.contentDefinedChunks
-    // — the Rabin/CDC discipline on the token stream): boundaries
-    // fall where the token hash's low 6 bits are zero, so they are
-    // decided by LOCAL content, never absolute position — an edit
-    // perturbs only its own chunk while fixed-size chunking shifts
-    // every downstream chunk (spec-proven both ways). Expected ~64
-    // tokens per chunk; per-chunk fp = the order-sensitive rolling
-    // fold, so cross-doc shared chunks collide exactly. ──
-    "q341_cdc_chunks" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .repartition(32, col("doc_id"))
-      TextAnalysis.contentDefinedChunks(docs, "doc_id", "text",
-        maskBits = 6)
-    }),
-
-    // ── cross-doc SHARED chunks (the storage-dedup report CDC
-    // chunking exists to feed): chunk fingerprints appearing more
-    // than once across the corpus — each extra copy is a dedup
-    // saving. Non-vacuous by construction: the corpus's exact-dup
-    // docs (the q17 family) share entire chunk sequences. ──
-    "q342_chunk_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .repartition(32, col("doc_id"))
-      TextAnalysis.contentDefinedChunks(docs, "doc_id", "text", maskBits = 6)
-        .groupBy("chunk_fp")
-        .agg(count(lit(1)).as("n_copies"),
-          countDistinct(col("doc_id")).as("n_docs"),
-          max(col("n_tokens")).as("n_tokens"))
-        .filter(col("n_copies") > 1)
-    }),
-
-    // ── CHUNK-OVERLAP near-dup pairs (TextAnalysis.chunkOverlapPairs
-    // — the dedup method CDC chunking feeds): docs pair on chunk-set
-    // Jaccard ≥ 1/2, generated through the shared-fingerprint
-    // equi-join (docs with no shared chunk never meet). An EDITED
-    // copy still shares most chunks because boundaries are
-    // content-defined — the insertion-robustness q341's spec proves.
-    // The fixture plants edited copies: the %13 dup slice re-appears
-    // (q103's re-ingest shape) with ONE token prepended, so every
-    // planted pair survives a real edit; exact dups pair at
-    // Jaccard 1. ──
-    "q343_chunk_overlap_dedup" -> ((s, dir) => {
-      val id = col("doc_id")
-      val docs0 = t(s, dir, "documents").select(id, col("text"))
-      val edited = docs0.filter(id % 13 === 0)
-        .select((id + 1000000L).as("doc_id"),
-          concat(lit("edited "), col("text")).as("text"))
-      val corpus = docs0.unionByName(edited).repartition(32, id)
-      TextAnalysis.chunkOverlapPairs(
-        TextAnalysis.contentDefinedChunks(corpus, "doc_id", "text",
-          maskBits = 6),
-        "doc_id", "chunk_fp", tauNum = 1, tauDen = 2)
-    }),
-
-    // ── LENGTH-BUCKETED inference batches (Batching.lengthBatches —
-    // the inference/eval twin of training-side packing q61): items
-    // totally ordered by (token count DESC, id) via globalDenseSeq
-    // (range partition + broadcast prefix offsets, NEVER the
-    // single-partition window), cut into 32-item batches, each
-    // reporting its padding waste exactly — the metric that decides
-    // whether a sweep sorts before batching. Integer throughout. ──
-    "q340_length_batches" -> ((s, dir) => {
-      val id = col("doc_id")
-      val docs = t(s, dir, "documents").select(id, col("text"))
-        .repartition(32, id)
-      graft.operators.Batching.lengthBatches(
-        docs.select(id,
-          size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tok")),
-        "doc_id", "n_tok", batchSize = 32)
-    }),
-
-    // ── X-Robots-Tag — the RESPONSE level of the robots protocol
-    // (HtmlExtract.robotsHeader; the three-level story complete:
-    // robots.txt gates the site q223/q239, this header the response,
-    // robotsMeta the page q337 — restrictions UNION, the documented
-    // conservative combination, live on arm 6 where the header says
-    // nofollow and the meta says noindex and BOTH must hold). Arms
-    // (doc_id % 8): 0 neither, 1 header noindex, 2 header nofollow,
-    // 3 header 'none', 4 bot-SCOPED header (googlebot: noindex — a
-    // generic crawler ignores the whole value), 5 meta-only noindex
-    // (the meta leg live through the HTTP framing), 6 the union arm,
-    // 7 uppercase NOINDEX. Headers ride real HTTP record framing
-    // (HttpRecord.header/body). Closed-form oracle. ──
-    "q339_xrobots_header" -> ((s, dir) => {
-      import graft.ext.{HtmlExtract, HttpRecord}
-      val id = col("doc_id")
-      val a = id % 8
-      val docs = t(s, dir, "documents").select(id).repartition(32, id)
-      val metaTag =
-        when(a === 5 || a === 6,
-          lit("<meta name=\"robots\" content=\"noindex\">"))
-          .otherwise(lit(""))
-      val html = concat(lit("<html><head>"), metaTag,
-        lit("</head><body><a href=\"http://ex.com/x\">x</a>" +
-          "<a href=\"http://ex.com/y\">y</a></body></html>"))
-      val hdr =
-        when(a === 1, lit("X-Robots-Tag: noindex\r\n"))
-          .when(a === 2, lit("X-Robots-Tag: nofollow\r\n"))
-          .when(a === 3, lit("X-Robots-Tag: none\r\n"))
-          .when(a === 4, lit("X-Robots-Tag: googlebot: noindex\r\n"))
-          .when(a === 6, lit("X-Robots-Tag: nofollow\r\n"))
-          .when(a === 7, lit("X-Robots-Tag: NOINDEX\r\n"))
-          .otherwise(lit(""))
-      val raw = concat(lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"),
-        hdr, lit("\r\n"), html)
-      val staged = docs.select(id,
-        explode_outer(array(struct(
-          HtmlExtract.robotsHeader(HttpRecord.header(raw, "X-Robots-Tag"))
-            .as("h"),
-          HtmlExtract.robotsMeta(HttpRecord.body(raw)).as("m"),
-          size(regexp_extract_all(HttpRecord.body(raw),
-            lit("href=\"([^\"]*)\""), lit(1))).as("__nl")))).as("x"))
-        .select(id,
-          (col("x.h.noindex") || col("x.m.noindex")).as("noindex"),
-          (col("x.h.nofollow") || col("x.m.nofollow")).as("nofollow"),
-          col("x.__nl").as("__nl"))
-      staged.select(id, col("noindex"), col("nofollow"),
-        when(col("noindex"), lit("drop_content"))
-          .when(col("nofollow"), lit("keep_content_drop_links"))
-          .otherwise(lit("keep")).as("decision"),
-        when(col("nofollow"), lit(0))
-          .otherwise(col("__nl")).cast("long").as("n_links_kept"))
-    }),
-
-    // ── classifier CALIBRATION curve (Calibration.prCurve): the
-    // precision/recall table a quality classifier needs before its
-    // threshold is chosen — for EVERY distinct score s, the
-    // confusion counts of "predict positive iff score ≥ s", in one
-    // pass. Score = en-stopword hit ppm (integer, the q309 floor-
-    // division idiom over the certified tokenizer), label = the
-    // certified withLangGuess == 'en' — a real correlated signal, so
-    // the curve is non-degenerate. The cumulative sums ride
-    // Layout.globalRunningSum (range-partition + broadcast prefix
-    // offsets), NEVER the single-partition global window a naive
-    // Window.orderBy plans — the 100-TB posture is the point of the
-    // operator. All integers; both engines emit bit-identical
-    // curves. ──
-    "q336_pr_curve" -> ((s, dir) =>
-      graft.operators.Calibration.prCurve(
-        prScoredDocs(s, dir), "score", "label")),
-
-    // ── MERGEABLE calibration state (the IncrementalAgg discipline
-    // on the calibration arc): per-batch per-score partial states
-    // fold by re-group, so a day's scoring run joins the curve
-    // without rescoring history — merge(state(batch A), state(batch
-    // B)) → curve must equal the ONE-SHOT q336 curve, certified
-    // against q336's oracle VERBATIM (PrCurveSql, the q186
-    // discipline). The %3 split puts shared thresholds in BOTH
-    // batches, so the merge's re-aggregation is provably live. ──
-    "q338_pr_curve_incremental" -> ((s, dir) => {
-      import graft.operators.Calibration
-      val scored = prScoredDocs(s, dir).localCheckpoint()
-      Calibration.curveFromState(Calibration.mergeStates(
-        Calibration.curveState(
-          scored.filter(col("doc_id") % 3 === 0), "score", "label"),
-        Calibration.curveState(
-          scored.filter(col("doc_id") % 3 =!= 0), "score", "label")))
-    }),
-
-    // ── TIME-SHIFTED video copy pairs (Multimodal.videoSeqCopyPairs
-    // — the temporal extension q332's scaladoc names: aligned-frame
-    // hamming is blind to shifts, shingled frame-hash SEQUENCES are
-    // blind to per-frame edits; the two are complements like exact
-    // dedup and minhash on the text arc). k=3 shingles over sampled
-    // hashes as raw ':'-joined strings (the q222 raw-gram rule),
-    // pairs at ≥ 2 shared shingles. The fixture plants a +2-frame
-    // shifted copy (3 shared shingles), a +4-frame shift landing
-    // EXACTLY on the minShared boundary (2), and a same-family
-    // video whose sampled hashes never run 3 consecutive (0 — the
-    // negative probe); oracle = the generator's independent python
-    // hashes + a window-shingled SQL mirror with no knowledge of
-    // the Spark plan. ──
-    "q335_video_seq_copies" -> ((s, _) => {
-      import graft.ext.Multimodal
-      val hashes = Multimodal.dHashFrames(Multimodal.frameSample(
-          Multimodal.asMediaFiles(
-            Multimodal.readMedia(s, FixturesDir + "/video_seq")),
-          everyN = 2))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("frameIndex").as("frame_index"), col("dhash"))
-      Multimodal.videoSeqCopyPairs(hashes, "name", "frame_index", "dhash",
-        k = 3, minShared = 2L)
-    }),
-
-    // ── UTF-32 fetch legs (the round-15 verdict's documented BOM
-    // gap closed: the 4-byte BOMs are checked BEFORE the UTF-16
-    // prefixes they SHADOW — FF FE 00 00 starts with FF FE, so
-    // before this leg a UTF-32LE page mis-rode the utf-16le leg and
-    // garbled into NUL-interleaved text). Arms (doc_id % 5): 0
-    // BOM32LE + utf-32le body — the mis-ride probe itself; 1 BOM32BE
-    // + utf-32be body (00 00 FE FF is disjoint from the FE FF check
-    // only because the 4-byte legs run first); 2 BOM32LE beating a
-    // LYING shift_jis header; 3 the UTF-16LE REGRESSION GUARD —
-    // BOM16LE + utf-16le body whose first char is ASCII (prefix
-    // FF FE xx 00, xx≠0), which must still ride utf-16le under the
-    // new ordering; 4 BOM-less utf-32le DECLARED by the header (the
-    // allowlist leg for the new charset pair). ──
-    "q329_utf32_fetch" -> ((s, dir) => {
-      import graft.ext.FetchDecode
-      import graft.plans.Transcode
-      val id = col("doc_id")
-      val a = id % 5
-      val docs = t(s, dir, "documents").select(id, col("text"))
-        .repartition(32, id)
-      def mkHead(lines: String*) = lit(lines.mkString("", "\r\n", "\r\n\r\n"))
-      val okHtml = mkHead("HTTP/1.1 200 OK", "Content-Type: text/html")
-      val bom32le = to_binary(lit("fffe0000"), lit("hex"))
-      val bom32be = to_binary(lit("0000feff"), lit("hex"))
-      val bom16le = to_binary(lit("fffe"), lit("hex"))
-      val t32 = concat(col("text"), lit(" caf\u00E9 32"))
-      val headCol =
-        when(a === 2, mkHead("HTTP/1.1 200 OK",
-          "Content-Type: text/html; charset=shift_jis"))
-          .when(a === 4, mkHead("HTTP/1.1 200 OK",
-            "Content-Type: text/html; charset=utf-32le"))
-          .otherwise(okHtml)
-      val body =
-        when(a === 0 || a === 2,
-          concat(bom32le, Transcode.encode(t32, lit("utf-32le"))))
-          .when(a === 1, concat(bom32be, Transcode.encode(t32, lit("utf-32be"))))
-          .when(a === 3, concat(bom16le, Transcode.encode(t32, lit("utf-16le"))))
-          .otherwise(Transcode.encode(t32, lit("utf-32le")))
-      FetchDecode.decodeResponses(
-        docs.select(id, FetchDecode.responseRecord(headCol, body).as("raw")),
-        "doc_id", "raw", maxBytes = FetchMaxBytes)
-    }),
-
-    // ── IVF REBALANCE lifecycle (q187's append discipline + the
-    // maintenance op it was missing — round-15 forward item #4):
-    // build the stored index from the 1/5 seed slice ONLY (frozen
-    // anchors from one-fifth of the eventual distribution, Lloyd
-    // OFF — the drifted-ingest shape), fold the other four fifths in
-    // through four appendToIvfIndex waves (each argmax-assigned
-    // against the FROZEN anchors), read the ivfListSkew report, and
-    // recluster via rebalanceIvfIndexIfSkewed when it crosses 1.25 —
-    // then probe EXHAUSTIVELY (nprobe = nlist): whether or not the
-    // policy fired, reclustering moves vectors BETWEEN lists, never
-    // in or out of the index, so the result must equal brute force
-    // over the whole corpus — q187's oracle VERBATIM. ExtSpec pins
-    // the skew mechanics themselves (planted parallel-anchor fixture:
-    // report ≥ 10× before, drops after, balanced index untouched). ──
-    "q320_ivf_rebalance" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/embeddings.parquet")
-      val idxPath = graft.operators.IndexStore.ensure(
-        s"${System.getProperty("java.io.tmpdir")}/graft_ivf_rebal_${fp}_n16") {
-        staging =>
-          SimSearch.writeIvfIndex(
-            SimSearch.buildIvfIndex(emb.filter(col("vec_id") % 5 === 0),
-              "vec_id", "embedding", nlist = 16, seed = 7L, lloydIters = 0),
-            staging)
-          for (r <- 1 to 4)
-            SimSearch.appendToIvfIndex(
-              emb.filter(col("vec_id") % 5 === r), staging,
-              "vec_id", "embedding")
-          SimSearch.rebalanceIvfIndexIfSkewed(s, staging, maxSkew = 1.25)
-          ()
-      }
-      SimSearch.ivfTopKAgainstIndex(
-        SimSearch.readIvfIndex(s, idxPath),
-        emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
-        k = 5, nprobe = 16)
-    }),
-
-    // ── zstd inflate (round-15 forward item #5: RFC 8878 joins the
-    // Content-Encoding allowlist via the zstd-jni Spark bundles —
-    // q306's contract re-certified on the new format). The q241
-    // inversion: bodies compressed IN-PLAN, the oracle only ever
-    // sees the round-trip. Arms (doc_id % 7): 0 bad magic, 1
-    // trailing garbage (libzstd refuses non-frame tails), 2 frame
-    // CONCATENATION (legal per §3.1 — decodes to the concatenation),
-    // 3 truncated (checksum bytes removed), 4 corrupt checksum
-    // (last 4 bytes zeroed — our compressor always WRITES the
-    // optional xxhash64 checksum, so integrity is verified; the
-    // q306 arm-6 fixed-trailer device), 5 a zstd BOMB vs the cap,
-    // else plain — which the 400-byte cap splits both ways like
-    // q306's plain arms. ──
-    "q321_zstd_inflate" -> ((s, dir) => {
-      import graft.plans.Inflate
-      val id = col("doc_id")
-      val a = id % 7
-      val docs = t(s, dir, "documents").select(id, col("text"))
-        .repartition(32, id)
-      val tb = col("text").cast("binary")
-      val z = Inflate.zstdCompress(tb)
-      val body =
-        when(a === 0, concat(to_binary(lit("0000"), lit("hex")), z))
-          .when(a === 1, concat(z, to_binary(lit("6a756e6b"), lit("hex"))))
-          .when(a === 2,
-            concat(z, Inflate.zstdCompress(lit(" tail").cast("binary"))))
-          .when(a === 3, z.substr(lit(1), length(z) - 4))
-          .when(a === 4, concat(z.substr(lit(1), length(z) - 4),
-            to_binary(lit("00000000"), lit("hex"))))
-          .when(a === 5,
-            Inflate.zstdCompress(repeat(col("text"), 50).cast("binary")))
-          .otherwise(z)
-      docs.select(id,
-        Inflate.unzstd(body, InflateCapBytes).cast("string").as("decoded"))
-    }),
-
-    // ── fetch-decode zstd route (q308's table on the new encoding):
-    // Content-Encoding: zstd payloads decode in-line — ok, corrupt
-    // (bad_inflate), bomb vs the q308 cap (bad_inflate), and an
-    // identity control arm; all bodies ASCII so the ok arms ride the
-    // strict-utf8 leg closed-form. ──
-    "q322_fetch_zstd" -> ((s, dir) => {
-      import graft.ext.FetchDecode
-      import graft.plans.Inflate
-      val id = col("doc_id")
-      val a = id % 4
-      val docs = t(s, dir, "documents").select(id, col("text"))
-        .repartition(32, id)
-      val zHead = lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" +
-        "Content-Encoding: zstd\r\n\r\n")
-      val okHead = lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n")
-      val headC = when(a === 3, okHead).otherwise(zHead)
-      val body =
-        when(a === 1, lit("junkjunk").cast("binary"))
-          .when(a === 2,
-            Inflate.zstdCompress(repeat(col("text"), 50).cast("binary")))
-          .when(a === 3, col("text").cast("binary"))
-          .otherwise(Inflate.zstdCompress(col("text").cast("binary")))
-      FetchDecode.decodeResponses(
-        docs.select(id, FetchDecode.responseRecord(headC, body).as("raw")),
-        "doc_id", "raw", maxBytes = FetchMaxBytes)
-    }),
-
-    // ── chunked Transfer-Encoding IN-LINE (round 16: FetchDecode
-    // stops punting chunked upstream — q308's arm 9 keeps its route
-    // because a NON-chunk-framed body under TE: chunked is a chunk
-    // FRAMING violation, same class, and every certified fetch
-    // oracle stays verbatim). Arms (doc_id % 6): 0 chunked identity
-    // content (256-byte chunks → strict-utf8 leg), 1 chunked OVER
-    // gzip+cp1252 (RFC 9112: TE wraps CE on the wire, so de-chunk
-    // precedes inflate — the full three-layer unwrap), 2 a plain
-    // body under TE: chunked (bad framing → bad_encoding), 3 a
-    // chunk-framed body TRUNCATED before the terminal 0-chunk
-    // (bad_encoding), 4 an unsupported TE value (gzip) —
-    // bad_encoding, 5 no TE control (plain ok). ──
-    "q323_fetch_chunked" -> ((s, dir) => {
-      import graft.ext.{FetchDecode, HttpRecord}
-      import graft.plans.{Inflate, Transcode}
-      val id = col("doc_id")
-      val a = id % 6
-      val docs = t(s, dir, "documents").select(id, col("text"))
-        .repartition(32, id)
-      def mkHead(lines: String*) = lit(lines.mkString("", "\r\n", "\r\n\r\n"))
-      val chHead = mkHead("HTTP/1.1 200 OK", "Content-Type: text/html",
-        "Transfer-Encoding: chunked")
-      val headC =
-        when(a === 1, mkHead("HTTP/1.1 200 OK",
-          "Content-Type: text/html; charset=windows-1252",
-          "Content-Encoding: gzip", "Transfer-Encoding: chunked"))
-          .when(a === 4, mkHead("HTTP/1.1 200 OK",
-            "Content-Type: text/html", "Transfer-Encoding: gzip"))
-          .when(a === 5, mkHead("HTTP/1.1 200 OK",
-            "Content-Type: text/html"))
-          .otherwise(chHead)
-      val gzBridged = decode(Inflate.gzipCompress(Transcode.encode(
-        concat(col("text"), lit(" caf\u00E9")), lit("windows-1252"))),
-        "ISO-8859-1")
-      val framed = HttpRecord.chunkedFrame(col("text"), 256)
-      val bodyStr =
-        when(a === 1, HttpRecord.chunkedFrame(gzBridged, 256))
-          .when(a === 3, framed.substr(lit(1), length(framed) - 5))
-          .when(a === 0, framed)
-          .otherwise(col("text"))
-      val raw = concat(encode(headC, "ISO-8859-1"),
-        encode(bodyStr, "ISO-8859-1"))
-      FetchDecode.decodeResponses(docs.select(id, raw.as("raw")),
-        "doc_id", "raw", maxBytes = FetchMaxBytes)
-    }),
-
-    // ── charset allowlist MATRIX (q307 certified five of the
-    // allowlisted charsets + the three routes; this closes the rest
-    // of the matrix, so no allowlist entry ships uncertified): koi8-r
-    // Cyrillic, GBK and Big5 CJK, iso-8859-2 háček/acute Latin-2,
-    // iso-8859-15 with the € at 0xA4 and œ — all strict round-trips
-    // through EncodeCharset → TranscodeUtf8. ──
-    "q317_charset_matrix" -> ((s, dir) => {
-      import graft.plans.Transcode
-      val id = col("doc_id")
-      val a = id % 5
-      val docs = t(s, dir, "documents").select(id, col("text"))
-        .repartition(32, id)
-      val cs =
-        when(a === 0, lit("koi8-r"))
-          .when(a === 1, lit("gbk"))
-          .when(a === 2, lit("big5"))
-          .when(a === 3, lit("iso-8859-2"))
-          .otherwise(lit("iso-8859-15"))
-      val planted =
-        when(a === 0, concat(col("text"),
-          lit(" \u043C\u0438\u0440")))
-          .when(a === 1, concat(col("text"),
-            lit(" \u4F60\u597D\u4E16\u754C")))
-          .when(a === 2, concat(col("text"), lit(" \u53F0\u5317")))
-          .when(a === 3, concat(col("text"),
-            lit(" \u010Desk\u00FD")))
-          .otherwise(concat(col("text"),
-            lit(" \u20AC\u0153uvre")))
-      docs.select(id, cs.as("charset"),
-        Transcode.toUtf8(Transcode.encode(planted, cs), cs).as("decoded"))
-    }),
-
-    // ── the BYTES-GRADE INTAKE CAPSTONE (round-15 forward item #1):
-    // q312's WARC fetch corpus composed into q234's intake decision
-    // table — ONE certified chain from raw archive bytes to the kept
-    // training slice, proving the whole ingestion pipeline coheres
-    // from bytes. Stages: frontier (q213/q215 URL canon + dup-URL
-    // drop) → WARC split (q312 framing: 8 HTTP responses per archive,
-    // latin-1 bridge, Content-Length slicing) → FetchDecode's total
-    // bytes→text table (q308) → main-content extraction (q226) →
-    // language gate → LM quality gate (q228) → EXACT CONTENT DEDUP
-    // (Dedup.exactDedup on the extracted main text). Precedence:
-    // bad_url/dup_url (frontier — never fetched in production; the
-    // replay fetches everything and ranks the classes) > the six
-    // fetch classes > wrong_language > low_quality > dup_content >
-    // kept. Fetch arms (doc_id % 12): 1 no status line (malformed),
-    // 2 404, 3 chunked TE (bad_encoding), 4 wrong media type, 5
-    // corrupt gzip (bad_inflate), 6 declared utf-7 (bad_charset); ok
-    // arms carry gzip(cp1252(html)) with a CONSTANT page shell (the
-    // capstone certifies composition — q226's hostile-HTML arms are
-    // certified standalone) and content arms: 7 a SHARED text (doc
-    // 1's — in the LM training slice and en/und at every SF, so the
-    // dedup stage is provably non-vacuous), 8 the EsGarble prefix
-    // (wrong_language), 9 reversed text (all-unseen bigrams →
-    // low_quality). The cp1252 é byte rides INSIDE an HTML comment:
-    // the legacy-charset decode leg runs on real non-ASCII bytes,
-    // then extraction strips it, keeping main_text ASCII so the
-    // oracle's ASCII tokenizer spelling stays exact (the q234 rule).
-    // The oracle reuses q234's URL/lang/LM mirrors and q226's
-    // extraction CTEs verbatim; fetch classes are closed-form. ──
-    "q318_bytes_intake" -> ((s, dir) =>
-      bytesIntakeChain(s, dir, damageGate = false)),
-
-    // ── the intake capstone WITH THE MOJIBAKE GATE LIVE (round-15
-    // forward item #7 closed): q309's encodingDamage detector joins
-    // q318's decision table as a quarantine class — the lenient
-    // declared-charset decode legs ADMIT damage by design (a wrong
-    // declaration mints moji pairs / U+FFFD instead of killing the
-    // record), and this gate is WHY that is safe. New arm (doc_id %
-    // 12 = 10): the page body is the html's UTF-8 bytes declared —
-    // and leniently decoded — as windows-1252, so each planted é
-    // surfaces as the Ã© double-encode signature in main_text (3
-    // pairs ≥ the 2-pair floor); precedence ranks encoding_damage
-    // after the fetch classes and BEFORE the language gate (damaged
-    // text must never be language-judged or become a dedup keeper —
-    // the chain excludes it from the dedup scope). Same oracle as
-    // q318 via the shared bytesIntakeOracleSql builder, with arm 10
-    // closed-form (provably the only damaged arm: every other ok-arm
-    // main_text is pure ASCII). ──
-    "q330_intake_damage" -> ((s, dir) =>
-      bytesIntakeChain(s, dir, damageGate = true)),
-
-    // ── SQL surface for the custom expression (the U1 discipline:
-    // q27 proved a registered UDF surface; this proves the CUSTOM
-    // CATALYST EXPRESSION is equally SQL-callable): unicode_tokens,
-    // bound by GraftExtensions, invoked from spark.sql text on a
-    // newSession clone (which inherits the extensions; the temp view
-    // stays off the shared session), certified against q288's oracle
-    // VERBATIM. ──
-    "q302_unicode_tokens_sql" -> ((s, dir) => {
-      val sess = s.newSession()
-      mlDocs(sess).createOrReplaceTempView("ml_docs")
-      sess.sql(
-        """SELECT doc_id, lang,
-          |  CAST(size(unicode_tokens(text)) AS LONG) AS n_tok,
-          |  CAST(size(regexp_extract_all(coalesce(text, ''),
-          |    '[A-Za-z0-9]+', 0)) AS LONG) AS n_ascii_runs,
-          |  md5(concat_ws(' ', unicode_tokens(text))) AS fp,
-          |  try_element_at(unicode_tokens(text), 1) AS first_tok,
-          |  try_element_at(unicode_tokens(text), -1) AS last_tok
-          |FROM ml_docs""".stripMargin)
-    }),
-
-    // ── NFC canonical-composition dedup (plans.NfcNormalize — the
-    // q60 planted-variant pattern): five residue arms — precomposed
-    // é vs decomposed e+U+0301 (same g-group → must collapse after
-    // NFC), OHM/ANGSTROM SIGN singletons vs their Ω/Å canonicals
-    // (collapse), conjoining-jamo Hangul (composes, solo group).
-    // `changed` certifies exactly which arms the normalizer rewrote;
-    // the oracle rebuilds every arm closed-form with chr() codepoints
-    // and DuckDB's independent nfc_normalize (JDK NFC == utf8proc
-    // NFC: exhaustive diff, zero divergences). ──
-    "q295_nfc_dedup" -> ((s, dir) => {
-      import graft.ext.TextAnalysis
-      val id = col("doc_id")
-      val withN = nfcFixture(t(s, dir, "documents"))
-        .withColumn("nfc_text", TextAnalysis.nfc(col("text")))
-        .withColumn("changed", col("nfc_text") =!= col("text"))
-      val groups = withN.groupBy("nfc_text")
-        .agg(min(id).as("keep_id"), count(lit(1)).as("n_copies"))
-      withN.join(groups, Seq("nfc_text"))
-        .select(id, col("nfc_text"), col("changed"), col("keep_id"),
-          col("n_copies"), (id =!= col("keep_id")).as("is_dup"))
-    }),
-
-    // ── streaming NFC twin (the q294 discipline, second non-ASCII
-    // payload class: DECOMPOSED combining marks and conjoining jamo
-    // ride the .write.json → landing file → readStream.json envelope
-    // raw): the per-row projection half of q295 — nfc_text + changed
-    // — replayed over two waves; the dedup-group half is batch-only
-    // (append mode carries no aggregates). ──
-    "q303_nfc_stream" -> ((s, dir) =>
-      graft.streaming.StreamingReports.projectionStreamReplay(
-        s, nfcFixture(t(s, dir, "documents")), "doc_id", "text",
-        df => df
-          .withColumn("nfc_text", graft.ext.TextAnalysis.nfc(col("text")))
-          .select(col("doc_id"), col("nfc_text"),
-            (col("nfc_text") =!= col("text")).as("changed")))),
-
-    // ── token-budget selection (Sampling.selectByBudget): quadratic-
-    // residue scores give ~10-way ties per score value, so the
-    // (score DESC, id ASC) tie-break is load-bearing in every
-    // cum_cost — the hash gate certifies the total order, not just
-    // the cut. Budget 20000 lands the cut mid-corpus at sf0.01. ──
-    "q262_budget_select" -> ((s, dir) => {
-      val id = col("doc_id")
-      graft.operators.Sampling.selectByBudget(
-        t(s, dir, "documents").select(id).repartition(32)
-          .select(id,
-            (((id % 50) * (id % 50)) % 50).cast("long").as("score"),
-            (lit(50) + id % 100).cast("long").as("cost")),
-        "doc_id", "score", "cost", 20000L)
-    }),
-
-    // ── per-host Crawl-delay (UrlCanon.parseCrawlDelays): the delay
-    // is GROUP-scoped per RFC 9309, so the %4=0 hosts — whose
-    // specific graftbot group declares NO delay — emit NO row even
-    // though their '*' group carries one; every other host surfaces
-    // its star-group delay (2 + host%7 s). Certifies group scoping
-    // beyond what the rules table can show. ──
-    "q245_crawl_delays" -> ((s, dir) =>
-      graft.ext.UrlCanon.parseCrawlDelays(
-        robotsBodiesFixture(s), "host", "body", "graftbot")),
-
-    // ── RFC 3986 reference resolution (UrlCanon.resolveUrl — the
-    // round-12 verdict's top gap: most hrefs on real pages are
-    // RELATIVE): every reference class live on one fixture — absolute,
-    // network-path (//host), absolute-path, ./ and ../ merges, deep
-    // mixed dot-segments, query-only, empty, fragment-only, and
-    // non-hierarchical junk (javascript:) — resolved against messy
-    // bases (case variants, explicit ports, trailing-slash dirs,
-    // queries), then canonicalized. The oracle derives href, resolved
-    // AND canonical forms ARITHMETICALLY from the id residues —
-    // independent truth for the whole resolution chain, the q237
-    // discipline. ──
-    "q238_resolve_links" -> ((s, dir) => {
-      import graft.ext.UrlCanon
-      val docs = t(s, dir, "documents")
-      val id = col("doc_id")
-      val m = id * (id + 3) + 7
-      val cls = id % 11
-      val href =
-        when(cls === 0, messyUrl(m))
-          .when(cls === 1,
-            regexp_replace(messyUrl(m), "^[A-Za-z][A-Za-z0-9+.-]*:", ""))
-          .when(cls === 2,
-            concat(lit("/Docs/"), (m % 50).cast("string"), lit("?b=2&a=1")))
-          .when(cls === 3, concat(lit("sub"), (m % 10).cast("string")))
-          // whitespace-PADDED href (round-13 review finding): the URL
-          // spec strips surrounding blanks before parsing — resolution
-          // must match the unpadded form, never mis-merge " ./s" as a
-          // relative path starting with a space
-          .when(cls === 4, concat(lit("\t./s"), (m % 10).cast("string"), lit(" ")))
-          .when(cls === 5, concat(lit("../Top/"), (m % 50).cast("string")))
-          .when(cls === 6,
-            concat(lit("../../a/./b/../c"), (m % 10).cast("string")))
-          .when(cls === 7, concat(lit("?z="), (m % 9).cast("string")))
-          .when(cls === 8, lit(""))
-          .when(cls === 9, lit("javascript:void(0)"))
-          .otherwise(lit("#top"))
-      docs.select(id, cls.as("cls"), messyUrl(id).as("base"), href.as("href"))
-        .select(col("doc_id"), col("cls"), col("href"),
-          explode_outer(array(
-            UrlCanon.resolveUrl(col("base"), col("href")))).as("resolved_url"))
-        .withColumn("canonical_url", UrlCanon.canonicalUrl(col("resolved_url")))
-    }),
-
-    // ── HTTP response-record parsing (the fetch→parse stage, the
-    // analytics-visible half of WARC processing): status line / header
-    // block / body split at the FIRST blank line, case-insensitive
-    // Content-Type + charset from the HEADER BLOCK only, total
-    // decision table malformed / bad_status / bad_encoding / bad_type
-    // / ok. Fixture arms: 404s, PDFs, LF-only separators (malformed),
-    // no status line (malformed), mixed-case Content-Type, charset
-    // present and absent, and (round 13) a chunked Transfer-Encoding
-    // arm that must route bad_encoding, never 'ok' — all five classes
-    // live. ──
-    "q236_http_parse" -> ((s, dir) =>
-      graft.ext.HttpRecord.parse(
-        httpRawFixture(t(s, dir, "documents")), "doc_id", "raw")),
-
-    // ── streaming HTTP triage twin (q218/q232 discipline): the same
-    // raw fixture replayed over two JSONL waves through readStream →
-    // parse → memory sink; parse is a pure projection, so the
-    // accumulated table must equal q236's batch output — certified
-    // against q236's oracle VERBATIM (shared HttpParseSql val). ──
-    "q248_http_parse_stream" -> ((s, dir) =>
-      graft.streaming.StreamingReports.httpParseStreamReplay(
-        s, httpRawFixture(t(s, dir, "documents")))),
-
-    // ── chunked transfer-decoding (HttpRecord.decodeChunked): the
-    // fixture CHUNKS each doc's text into 15-byte frames (single
-    // hex-digit sizes — '123456789abcdef'[len]) with a terminal 0
-    // chunk; %13=0 bodies get a corrupted non-hex size line and must
-    // come back NULL. The oracle is the ORIGINAL text itself —
-    // independent truth: the decode must invert the framing exactly,
-    // byte for byte. ──
-    "q241_http_chunked" -> ((s, dir) => {
-      // the corpus parquet is a single split locally; the 64-step
-      // decode fold is CPU-bound per row, so spread it (the
-      // Dedup/SimHash repartition discipline)
-      val docs = t(s, dir, "documents").repartition(32, col("doc_id"))
-      val body = concat(
-        when(col("doc_id") % 13 === 0, lit("ZZ\r\nbroken\r\n"))
-          .otherwise(lit("")),
-        graft.ext.HttpRecord.chunkedFrame(col("text"), 15))
-      docs.select(col("doc_id"), body.as("body"))
-        .select(col("doc_id"),
-          graft.ext.HttpRecord.decodeChunked(col("body")).as("decoded"))
-    }),
-
-    // ── per-host BOILERPLATE-paragraph removal (the CCNet/RefinedWeb
-    // stage after extraction): paragraphs whose fingerprint repeats on
-    // ≥3 distinct pages of the same host (nav bars, footers) are
-    // dropped; page-unique body text survives. Fixture plants a
-    // per-host nav and footer around each doc's unique body, so the
-    // boilerplate detection binds on every page (n_boiler = 2) while
-    // clean_text keeps exactly the body. ──
-    "q235_boilerplate_paras" -> ((s, dir) => {
-      import graft.ext.HtmlExtract
-      val h = (col("doc_id") % 20).cast("string")
-      // the paragraphs() regex chain (now incl. the numeric-entity
-      // passes) is CPU-bound per row and the corpus is one local
-      // split — spread before the per-page extraction
-      val pages = t(s, dir, "documents").repartition(32, col("doc_id"))
-        .select(col("doc_id"),
-        concat(lit("www.src"), h, lit(".example.com")).as("host"),
-        concat(
-          lit("<html><body><div class=\"nav\">Home src"), h,
-          lit(" about contact</div><p>"), col("text"),
-          lit("</p><div class=\"footer\">Copyright src"), h,
-          lit(" all rights</div></body></html>")).as("html"))
-      HtmlExtract.dropBoilerplateParagraphs(pages, "doc_id", "host", "html")
-    }),
-
-    // ── LINK-DENSITY boilerplate removal (HtmlExtract
-    // .dropLinkFarmParagraphs): the per-paragraph signal the
-    // page-frequency rule (q235) cannot see — a nav bar on a host
-    // with fewer than minPages crawled pages. Fixture arms per page:
-    // a pure-anchor nav paragraph (1000000 ppm — dropped), the body
-    // text (0 ppm — kept), a mixed paragraph whose inline link is
-    // ~343k ppm (kept — inline citations are not link farms), a
-    // %7=0 exact-threshold paragraph (5 anchor chars / 10 visible =
-    // 500000 ppm — dropped, certifying the >= rule), and a %9=0
-    // second farm. ──
-    "q249_link_density" -> ((s, dir) => {
-      import graft.ext.HtmlExtract
-      // the sentinel chain + per-para HOF fold is CPU-bound per row
-      // on the single-split local corpus — spread first (q241 rule)
-      val pages = t(s, dir, "documents").repartition(32, col("doc_id"))
-        .select(col("doc_id"),
-          concat(
-            lit("<html><body><div class=\"nav\"><a href=\"/\">Home</a> " +
-              "<a href=\"/about\">About site "),
-            (col("doc_id") % 250).cast("string"),
-            lit("</a> <a href=\"/contact\">Contact</a></div><p>"),
-            col("text"),
-            lit("</p><p>see <a href=\"/more\">details here</a> " +
-              "for the full story</p>"),
-            when(col("doc_id") % 7 === 0,
-              lit("<p><a href=\"/e\">abcde</a> fghi</p>")).otherwise(lit("")),
-            when(col("doc_id") % 9 === 0,
-              lit("<div><a href=\"/x\">x1</a> <a href=\"/y\">link two</a></div>"))
-              .otherwise(lit("")),
-            lit("</body></html>")).as("html"))
-      HtmlExtract.dropLinkFarmParagraphs(pages, "doc_id", "html")
-    }),
-
-    // ── STREAMING HTML extraction: q226's chain on a LIVE ingest (the
-    // q218 stateless-map discipline) — pages land as JSONL waves, each
-    // row extracts independently, so two delivery waves must
-    // accumulate the identical table; certified against q226's batch
-    // oracle VERBATIM. ──
-    "q232_html_extract_stream" -> ((s, dir) =>
-      graft.streaming.StreamingReports.htmlExtractStreamReplay(
-        s, htmlFixture(t(s, dir, "documents")))),
-
-    // ── the INTAKE CAPSTONE: every stage of the crawl intake composed
-    // into ONE certified decision table — URL dedup (q215) → robots
-    // compliance (q223) → per-host budget (q217) → HTML main-content
-    // extraction (q226) → language ID (q48, round 13) → n-gram LM
-    // quality (q228) — with a total precedence order bad_url >
-    // dup_url > denied > over_budget > wrong_language > low_quality >
-    // kept (the CCNet stage order). The LANGUAGE RULE: only a
-    // CONFIDENT non-target guess quarantines ('es' here); 'und' (no
-    // function-word signal) falls through to the quality gate — don't
-    // kill on no signal, the LM catches garbage. Garble arms: %11=0
-    // reverses surviving pages (mojibake → 'und' → LM flags →
-    // low_quality), %11=5 prepends a Spanish function-word run
-    // (confident 'es' → wrong_language; its LM OOV share stays far
-    // under threshold, so the language gate is the ONLY thing that
-    // can catch it). All seven classes are populated at sf0.01. ──
-    "q234_intake_capstone" -> ((s, dir) => {
-      import graft.ext.{HtmlExtract, UrlCanon}
-      val docs = t(s, dir, "documents")
-      val dec = UrlCanon.urlDecisions(
-          urlFixture(docs).drop("n_chars"), "url", "doc_id")
-        .select("doc_id", "canonical_url", "decision")
-        .localCheckpoint() // feeds kept slice AND final table
-      val kept = dec.filter(col("decision") === "kept")
-        .select(col("doc_id"), col("canonical_url"))
-      val rob = UrlCanon
-        .robotsDecide(kept, "doc_id", "canonical_url", robotsRulesFixture(s))
-        .select(col("doc_id"), col("host"), col("decision").as("__rd"))
-        .localCheckpoint() // feeds the budget draw AND the final join
-      val bud = graft.operators.Sampling.sampleExactN(
-          rob.filter(col("__rd") === "allow").select("doc_id", "host"),
-          "host", col("doc_id"), n = 5, salt = "budget-v1")
-        .select(col("doc_id"), lit(1).as("__inb"))
-        .localCheckpoint() // feeds the LM slice AND the final join
-      val pages = htmlFixture(docs.select(col("doc_id"),
-        when(col("doc_id") % 11 === 0, reverse(col("text")))
-          .when(col("doc_id") % 11 === 5, concat(lit(EsGarble), col("text")))
-          .otherwise(col("text")).as("text")))
-      val surv = bud.join(pages, Seq("doc_id"))
-        .select(col("doc_id"), HtmlExtract.mainText(col("html")).as("text"))
-        .localCheckpoint() // feeds the lang gate AND the LM scorer
-      val lang = TextAnalysis.withLangGuess(surv, "text", "__lang")
-        .select(col("doc_id"), col("__lang"))
-      val (c2, c1) = TextAnalysis.lmModel(
-        docs.filter(col("doc_id") % 5 =!= 0), "text")
-      val lm = TextAnalysis.lmScoreWith(c2, c1, surv, "doc_id", "text")
-        .select(col("doc_id"), col("flag").as("__lmflag"))
-      dec
-        .join(rob.select("doc_id", "__rd"), Seq("doc_id"), "left")
-        .join(bud, Seq("doc_id"), "left")
-        .join(lang, Seq("doc_id"), "left")
-        .join(lm, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("canonical_url"),
-          when(col("decision") =!= "kept", col("decision"))
-            .when(col("__rd") === "deny", lit("denied"))
-            .when(col("__inb").isNull, lit("over_budget"))
-            .when(col("__lang").isNotNull && col("__lang") =!= "en" &&
-              col("__lang") =!= "und", lit("wrong_language"))
-            .when(col("__lmflag") === "low", lit("low_quality"))
-            .otherwise(lit("kept")).as("decision"))
-    }),
-
-    // ── tokenizer fertility drift (q199's frozen model in operation):
-    // train the 8 merges on the 4/5 REFERENCE slice only, encode the
-    // held-out 1/5, roll up per source as fertility (BPE tokens per
-    // word, ppm — all-integer div). This is the monitoring metric a
-    // production tokenizer owner watches: a source whose fertility
-    // sits far above the rest is text the frozen merges don't fit
-    // (new domain / drift), the cue to retrain and re-encode. Also
-    // exercises the encoder on words the trainer never saw (the
-    // aw-stages of the oracle mirror that exactly). ──
-    "q206_bpe_fertility" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = graft.ext.Bpe.learnMerges(
-        docs.filter(col("doc_id") % 5 =!= 0), "text", 8)
-      graft.ext.Bpe.encodeCounts(
-          docs.filter(col("doc_id") % 5 === 0), "doc_id", "text", merges)
-        .join(docs.select("doc_id", "source"), Seq("doc_id"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_words")).as("n_words"), sum(col("n_bpe")).as("n_bpe"))
-        .withColumn("fert_ppm", expr("CAST(n_bpe * 1000000 DIV n_words AS BIGINT)"))
-    }),
-
-    // ── REAL BPE training (ext/Bpe — Sennrich et al. 2016): the top-8
-    // merge ranks learned over the corpus word-type vocabulary, each
-    // round one vocab-sized aggregate + a 1-row argmax. The oracle
-    // re-runs the identical 8-round chain in DuckDB (literal replace
-    // on '.'-wrapped symbol strings has the same left-to-right
-    // non-overlapping semantics in both engines), so every rank, pair
-    // AND weighted count is certified — q106's single-round pair
-    // induction closed into an actual trained subword tokenizer. ──
-    "q197_bpe_train" -> ((s, dir) =>
-      graft.ext.Bpe.trainReport(t(s, dir, "documents"), "text", k = 8)),
-
-    // ── BPE encode (the apply side): per-document subword token
-    // counts under the q197-trained merges. The corpus is exploded to
-    // tokens ONCE and joined against the encoded word DICTIONARY
-    // (vocabulary-sized — broadcastable at any corpus scale); the
-    // 8-merge chain runs as a pure projection on word types, never
-    // per occurrence. This is the token-budget operator of a training
-    // pipeline: n_bpe is what you pack context windows by. ──
-    "q198_bpe_encode" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = graft.ext.Bpe.learnMerges(docs, "text", 8)
-      graft.ext.Bpe.encodeCounts(docs, "doc_id", "text", merges)
-    }),
-
-    // ── stored BPE tokenizer (the index-lifecycle discipline on the
-    // MODEL artifact): train-once into an atomic content-keyed store
-    // (merges/ = the HuggingFace merges.txt shape), every later encode
-    // loads the FROZEN ranks — retraining on grown data would shift
-    // token boundaries under every downstream count contract, q193's
-    // frozen-codebook rule on the tokenizer side. Certified against
-    // q198's IDENTICAL oracle: the storage round-trip must be
-    // invisible in the rows. ──
-    "q199_bpe_stored" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/documents.parquet")
-      val path = graft.operators.IndexStore.ensure(
-        s"${System.getProperty("java.io.tmpdir")}/graft_bpe_${fp}_k8") { staging =>
-        graft.ext.Bpe.writeModel(graft.ext.Bpe.learnMerges(docs, "text", 8), s, staging)
-      }
-      graft.ext.Bpe.encodeCounts(docs, "doc_id", "text", graft.ext.Bpe.readModel(s, path))
-    }),
-
-    // ── persisted IVF-PQ index with frozen-artifact append (q187 +
-    // q193 composed): build from the 4/5 corpus, fold the 1/5 batch in
-    // via appendToIvfPqIndex — coarse-assigned against the STORED
-    // anchors with the build-time cosine rule, residual-encoded
-    // against the FROZEN codebook, codes/ appended, nothing rewritten
-    // — then probe exhaustively (nprobe = nlist, exhaustive shortlist)
-    // so the exact rerank decides alone: the composite lifecycle must
-    // reproduce brute force row-for-row (q193's identical oracle). ──
-    "q200_ivfpq_stored" -> ((s, dir) => {
-      import graft.ext.ProductQuant
-      val emb = t(s, dir, "embeddings")
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/embeddings.parquet")
-      val path = graft.operators.IndexStore.ensure(
-        s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_${fp}_n8m16") { staging =>
-        ProductQuant.writeIvfPqIndex(
-          ProductQuant.buildIvfPq(emb.filter(col("vec_id") % 5 =!= 0),
-            "vec_id", "embedding",
-            nlist = 8, m = 16, dim = 64, pqK = 16, coarseLloyd = 1, pqLloyd = 1),
-          staging)
-        ProductQuant.appendToIvfPqIndex(
-          emb.filter(col("vec_id") % 5 === 0), staging, "vec_id", "embedding")
-      }
-      ProductQuant.ivfPqRerankTopK(
-        ProductQuant.readIvfPqIndex(s, path), emb,
-        emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
-        shortlist = 1 << 20, k = 5, nprobe = 8)
-    }),
-
-    // ── ext: language ID + rolling-hash fingerprint certified (the two
-    // text-analysis features q20 didn't cover). withLangGuess is the
-    // scale-safe form (tokens + score array materialized once — the
-    // naive single-tree form re-runs the tokenizer regex ~15× per row);
-    // the rolling hash is order-SENSITIVE (transposed docs differ)
-    // with every intermediate in signed-64 range in both engines. ──
-    "q48_text_lang" -> ((s, dir) => {
-      val base = TextAnalysis.withLangGuess(
-        t(s, dir, "documents"), "text", "lang_guess")
-      base.select(col("doc_id"), col("lang"), col("lang_guess"),
-        TextAnalysis.rollingFingerprint(TextAnalysis.tokens(col("text")))
-          .as("roll_fp"))
-    }),
-
-    // ── ext: dedup-cluster assignment — the near-dup PAIRS (q18's
-    // oracle-certified minhash-LSH) become CLUSTERS via alternating
-    // large-star/small-star connected components (O(log n) rounds, no
-    // min-label O(diameter) propagation), with a deterministic min-id
-    // representative and a left-join closure over the full corpus so
-    // singleton docs are their own cluster. "Keep one doc per duplicate
-    // cluster" = filter(is_representative). The oracle computes the
-    // same components independently via a recursive transitive-closure
-    // CTE — feasible there because sf0.01's near-dup graph is small;
-    // the Spark side is the form that scales. ──
-    "q55_dedup_clusters" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.nearDupPairsMinhash(docs, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.8)
-      graft.ext.ConnectedComponents.dedupClusters(docs, "doc_id", pairs, "doc_a", "doc_b")
-    }),
-
-    // ── contamination-safe train/val/test split: the draw is keyed on
-    // the near-dup CLUSTER representative, so every member of a dup
-    // cluster lands in the same split — per-doc random splits leak
-    // held-out content through near-duplicates; this is the split shape
-    // a training corpus actually needs. Composes minhash-LSH pairs →
-    // connected components → md5-threshold assignment ──
-    "q85_split_safe" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.nearDupPairsMinhash(docs, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.8)
-      // only non-singleton members join; singletons take the own-id
-      // fallback — same result, and the map side shrinks from |corpus|
-      // to the dup mass (broadcastable at scale)
-      val clusters = graft.ext.ConnectedComponents
-        .dedupClusters(docs, "doc_id", pairs, "doc_a", "doc_b")
-        .filter(col("cluster_size") > 1)
-      graft.operators.Sampling.clusterSafeSplit(
-          docs.select("doc_id"), "doc_id", clusters,
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "split-v1")
-        .select("doc_id", "cluster", "split")
-    }),
-
-    // ── benchmark decontamination: training docs near-dupping an
-    // eval doc (doc_id % 5 == 0 plays the benchmark) are anti-joined
-    // out — eval-driven candidate work, the training side is never
-    // self-joined ──
-    "q87_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.decontaminate(
-          docs.filter(col("doc_id") % 5 =!= 0),
-          docs.filter(col("doc_id") % 5 === 0),
-          "doc_id", "text", shingleK = 3, numHashes = 128, bands = 32,
-          threshold = 0.8)
-        .select("doc_id")
-    }),
-
-    // ── deterministic sharded corpus shuffle ("shuffle once, stream
-    // sequentially"): (shard, shard_rank) addresses form a reproducible
-    // pseudo-random permutation; ranking windows partition per shard —
-    // 256 independent partial sorts, no global sort ──
-    "q86_shuffle_shards" -> ((s, dir) =>
-      graft.operators.Sampling.shuffleShards(
-          t(s, dir, "documents").select("doc_id"), col("doc_id"),
-          salt = "shuf-v1", hexChars = 2)
-        .select("doc_id", "shard", "shard_rank")),
-
-    // ── Bloom-filter join pruning (the explicit runtime-filter shape):
-    // a compact filter built over the small side's keys prunes the big
-    // side BEFORE the join shuffle; the exact semi join then removes
-    // Bloom false positives, so the result is IDENTICAL to the plain
-    // semi join and the oracle is the plain IN-subquery. At 100 TB this
-    // is the difference between shuffling every orders row and
-    // shuffling only plausible matches. ──
-    "q56_bloom_join" -> ((s, dir) =>
-      graft.operators.BloomJoin.bloomSemiJoin(
-          t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
-          "o_custkey",
-          t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING"),
-          "c_custkey",
-          expectedItems = 100000L, numBits = 1048576L)),
-
-    // ── bucketed range join (point-in-interval): which lineitems
-    // shipped inside each selected order's 4-day window. The naive
-    // theta-join is a BroadcastNestedLoopJoin; the operator's bucketed
-    // rewrite makes it a narrow equi-join on a day bucket (RangeJoinSpec
-    // asserts no nested loop survives in the plan). Day numbers are
-    // integers, the quantity sum goes through exact decimal. ──
-    "q57_range_join" -> ((s, dir) => {
-      val day = (c: Column) => datediff(to_date(c), lit("1970-01-01").cast("date"))
-      val iv = t(s, dir, "orders")
-        .filter(col("o_orderkey") % 10 === 0)
-        .select(col("o_orderkey"), day(col("o_orderdate")).cast("long").as("lo"),
-          (day(col("o_orderdate")) + 4).cast("long").as("hi"))
-      // aggregation pushed BELOW the range join: points with the same
-      // day are indistinguishable to interval containment, so collapse
-      // lineitem to one exact partial (n, qty) row per day first —
-      // the join then handles |days|×spans rows instead of
-      // |lineitem|×spans (measured 7.9 s → sub-second at sf0.1).
-      // Summing the exact-decimal partials re-aggregates losslessly.
-      val daily = t(s, dir, "lineitem")
-        .groupBy(day(col("l_shipdate")).cast("long").as("ship_day"))
-        .agg(count(lit(1)).as("n_day"), sum(dec2(col("l_quantity"))).as("qty_day"))
-      graft.operators.RangeJoin.pointInInterval(daily, "ship_day", iv, "lo", "hi",
-          bucketWidth = 4)
-        .groupBy("o_orderkey")
-        .agg(sum(col("n_day")).as("n_shipped"),
-          asDouble(sum(col("qty_day"))).as("qty"))
-    }),
-
-    // ── deterministic stratified sampling (training-data mixing):
-    // per-source keep rates via an md5-hash threshold on the doc id —
-    // a pure per-row predicate (no RNG state, no shuffle, identical
-    // output on any partitioning/retry/cluster), which is what makes
-    // a 100-TB data-mix reproducible AND lets an oracle certify the
-    // exact sampled row set. Rates are the mixing weights. ──
-    "q58_sample_mix" -> ((s, dir) =>
-      graft.operators.Sampling.stratifiedSample(
-          t(s, dir, "documents"), "source", col("doc_id"),
-          rates = Map("src0" -> 0.8, "src1" -> 0.5, "src2" -> 0.25, "src3" -> 0.125),
-          defaultRate = 0.05, salt = "mix-v1")
-        .select("doc_id", "source", "lang")),
-
-    // ── TF-IDF top terms per document (division-form idf for exact
-    // cross-engine parity — see TextAnalysis.tfIdf scaladoc; the
-    // ln-form ranking is identical, the division form is bit-stable) ──
-    "q59_tfidf" -> ((s, dir) =>
-      TextAnalysis.tfIdf(t(s, dir, "documents"), "doc_id", "text", topN = 3)),
-
-    // ── PII scrubbing: emails / phones / card-like digit runs →
-    // typed tags. The corpus has no organic PII, so the query plants
-    // deterministic synthetic PII derived from each row's own columns,
-    // then certifies the redaction + counts. ──
-    "q60_pii_redact" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val raw = concat(
-        lit("contact "), col("source"), lit("_"), col("doc_id").cast("string"),
-        lit("@example.com or +1-555-"),
-        lpad(((col("doc_id") * 7) % 10000).cast("string"), 4, "0"),
-        lit(" card 4111111111111111 :: "), substring(col("text"), 1, 40))
-      val (nEmails, nPhones) = TextAnalysis.piiCounts(col("raw"))
-      docs.select(col("doc_id"), raw.as("raw"))
-        .select(col("doc_id"), col("raw"),
-          TextAnalysis.redactPii(col("raw")).as("clean"),
-          nEmails.as("n_emails"), nPhones.as("n_phones"))
-    }),
-
-    // ── sequence packing: fixed 256-token training chunks per source
-    // shard by cumulative token offset (the window is bounded by the
-    // source partition — a global pack would funnel everything through
-    // one task; see TextAnalysis.packSequences) ──
-    "q61_pack_sequences" -> ((s, dir) =>
-      TextAnalysis.packSequences(
-          t(s, dir, "documents").withColumn("__nt",
-            size(TextAnalysis.tokens(col("text"))).cast("long")),
-          "source", "doc_id", col("__nt"), budget = 256L)
-        .groupBy("source", "chunk")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("chunk_tokens"))),
-
-    // ── approximate-aggregate contracts (q46 pattern): the sketch
-    // values are engine-specific, so the oracle pins the EXACT numbers
-    // (computed independently in SQL) plus the bound checks, and Spark
-    // computes the bound checks from the real sketches in-plan — HLL
-    // (datasketches hll_sketch_agg), sketch-union mergeability (the
-    // property that makes HLL partial-aggregable at 100 TB), and
-    // approx_percentile rank-error bracketing, no driver-side
-    // materialization anywhere. ──
-    "q62_sketch_contract" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val exactUsers = ev.agg(count_distinct(col("user_id")).cast("double").as("exact"))
-      val hllAll = ev.agg(
-        hll_sketch_estimate(hll_sketch_agg(col("user_id"), lit(12))).cast("double").as("est"))
-      val hllUnion = ev
-        .groupBy(dayKey(col("ts")).as("day"))
-        .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"))
-        .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).cast("double").as("est"))
-      def hllRow(method: String, est: DataFrame): DataFrame =
-        exactUsers.crossJoin(est).select(lit(method).as("method"), col("exact"),
-          (abs(col("est") - col("exact")) / col("exact") <= 0.05).as("ok"))
-      val pctile = ev.agg(
-          expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY value)").as("exact"),
-          percentile_approx(col("value"), lit(0.5), lit(1000)).as("ap"),
-          expr("percentile_disc(0.47) WITHIN GROUP (ORDER BY value)").as("lo"),
-          expr("percentile_disc(0.53) WITHIN GROUP (ORDER BY value)").as("hi"))
-        .select(lit("approx_p50_value").as("method"), col("exact"),
-          (col("ap") >= col("lo") && col("ap") <= col("hi")).as("ok"))
-      hllRow("hll_users", hllAll)
-        .unionByName(hllRow("hll_union_daily_users", hllUnion))
-        .unionByName(pctile)
-    }),
-
-    // ── int8 scalar quantization of embeddings (the storage/bandwidth
-    // lever for 100-TB ANN): symmetric per-vector scale 127/max|x|,
-    // q = round(x·scale). The certified output is the quantized
-    // integer summary per vector — integers survive any engine's FP
-    // printing, and a single mis-rounded element would shift q_sum —
-    // with the multiply/divide operand order mirrored exactly in the
-    // oracle. Zero vectors keep scale=0 ⇒ all-zero codes. ──
-    "q63_quantize_int8" -> ((s, dir) =>
-      t(s, dir, "embeddings")
-        .withColumn("__mx", array_max(transform(col("embedding"), x => abs(x))).cast("double"))
-        .withColumn("__scale", when(col("__mx") > 0, lit(127.0) / col("__mx")).otherwise(lit(0.0)))
-        .select(col("vec_id"),
-          aggregate(col("embedding"), lit(0L),
-            (acc, x) => acc + round(x.cast("double") * col("__scale")).cast("long"))
-            .as("q_sum"),
-          array_min(transform(col("embedding"),
-            x => round(x.cast("double") * col("__scale")).cast("long"))).as("q_min"),
-          array_max(transform(col("embedding"),
-            x => round(x.cast("double") * col("__scale")).cast("long"))).as("q_max"))),
-
-    // ── sliding-window token chunking (context-window prep): 32-token
-    // chunks every 16 tokens (50% overlap); one explode over per-row
-    // start offsets, no shuffle ──
-    "q64_chunk_windows" -> ((s, dir) =>
-      TextAnalysis.chunkTokens(t(s, dir, "documents"), "doc_id", "text",
-        chunkSize = 32, stride = 16)),
-
-    // ── repeated-bigram ratio (boilerplate/spam quality filter): the
-    // share of bigram occurrences that repeat an earlier bigram in the
-    // doc; integer-ratio division for parity ──
-    "q65_repetition" -> ((s, dir) =>
-      TextAnalysis.repetitionRatio(t(s, dir, "documents"), "text", k = 2, "rep_ratio")
-        .select("doc_id", "lang", "rep_ratio")),
-
-    // ── fuzzy string join (edit distance ≤ 1) via symmetric deletion:
-    // candidates from a narrow variant-key equi-join (O(n·L) rows, no
-    // cartesian), exact levenshtein verify — typo-level record linkage
-    // over customer names; the oracle is the all-pairs form, feasible
-    // at its scale ──
-    "q66_fuzzy_pairs" -> ((s, dir) =>
-      graft.ext.FuzzyJoin.editDistance1Pairs(
-        t(s, dir, "customer").filter(col("c_custkey") < 300), "c_name")),
-
-    // ── data profiling (the ANALYZE pass): per-column row/null/
-    // distinct counts and min/max in ONE aggregate over one scan,
-    // unpivoted to a row per column — never a job per column ──
-    "q67_profile" -> ((s, dir) =>
-      graft.operators.Profile.profile(t(s, dir, "orders"),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"))),
-
-    // ── approx profile under a live-bound contract (q62 pattern): the
-    // HLL profile joined to the exact profile per column; rows/nulls/
-    // min/max must agree exactly (same expressions, so string parity is
-    // q67's already-certified rendering) and the HLL distinct must land
-    // within 15% (3×rsd at the default 5%; HLL is hash-deterministic,
-    // so the verdict is stable). The oracle recomputes the exact side
-    // and expects distinct_ok = true. ──
-    "q81_profile_approx_contract" -> ((s, dir) => {
-      val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-        "o_totalprice", "o_orderdate", "o_orderpriority")
-      val exact = graft.operators.Profile.profile(t(s, dir, "orders"), cols)
-        .select(col("column_name"), col("n_distinct").as("__exact"))
-      graft.operators.Profile.profileApprox(t(s, dir, "orders"), cols)
-        .join(exact, Seq("column_name"))
-        .select(col("column_name"), col("n_rows"), col("n_null"),
-          col("min_val"), col("max_val"),
-          (abs(col("n_distinct") - col("__exact")).cast("double") /
-            greatest(col("__exact"), lit(1L)).cast("double") <= 0.15)
-            .as("distinct_ok"))
-    }),
-
-    // ── equi-width histogram (distribution pass for range partitioning
-    // and skew detection): 1-row min/max broadcast back, bucket index,
-    // one groupBy — identical FP operand order on both sides ──
-    "q68_histogram" -> ((s, dir) =>
-      graft.operators.Histogram.equiWidth(t(s, dir, "orders"),
-        col("o_totalprice"), buckets = 20)),
-
-    // ── the CAPSTONE: a full training-data pipeline in one declared
-    // query — quality gate (token floor + repetition ratio) → exact
-    // dedup (min-id keep) → near-dup clustering (minhash-LSH pairs →
-    // connected components, representative keep) → deterministic 50%
-    // sample → 256-token sequence packing per source. Certifies that
-    // the extension operators COMPOSE: every stage's semantics are
-    // reproduced end-to-end by one oracle SQL over the same files. ──
-    "q69_pipeline_e2e" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toked = docs.withColumn("__nt",
-        size(TextAnalysis.tokens(col("text"))).cast("long"))
-      // quality feeds the exact-dedup draw AND the join back into
-      // unique — left lazy, the tokenize+repetition scan ran twice
-      // (round-19 optimization, the localCheckpoint note below)
-      val quality = TextAnalysis.repetitionRatio(toked, "text", 2, "__rep")
-        .filter(col("__nt") >= 30 && col("__rep") < 0.5)
-        .localCheckpoint()
-      val keepIds = Dedup.exactDedup(quality, "doc_id", md5(col("text")))
-        .select(col("keep_id").as("doc_id"))
-      // the deduped corpus feeds FOUR consumers (minhash signatures ×2
-      // via base reuse, the cluster join-back, and the final pack), so
-      // persist it once instead of re-running the quality+dedup subtree
-      // per consumer — localCheckpoint here, a reliable checkpoint on a
-      // real cluster (the ConnectedComponents truncate() convention);
-      // measured 13 s → 8 s at sf0.1
-      val unique = quality.join(keepIds, "doc_id").localCheckpoint()
-      val pairs = Dedup.nearDupPairsMinhash(unique, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.8)
-      val reps = graft.ext.ConnectedComponents
-        .dedupClusters(unique, "doc_id", pairs, "doc_a", "doc_b")
-        .filter(col("is_representative")).select("doc_id")
-      val sampled = graft.operators.Sampling.hashSample(
-        unique.join(reps, "doc_id"), col("doc_id"), 0.5, "pipe-v1")
-      TextAnalysis.packSequences(sampled, "source", "doc_id", col("__nt"), budget = 256L)
-        .groupBy("source", "chunk")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("chunk_tokens"))
-    }),
-
-    // ── epoch-weighted OVERsampling (q58's complement): stratum
-    // weight 2.5 ⇒ two full copies plus a deterministic md5-chosen
-    // half gets a third; emits the epoch index. The exact repeated
-    // row set is engine-reproducible, so the oracle certifies the
-    // mix, not just its size. ──
-    "q70_epoch_mix" -> ((s, dir) =>
-      graft.operators.Sampling.epochMix(
-          t(s, dir, "documents"), "source", col("doc_id"),
-          weights = Map("src0" -> 2.5, "src1" -> 1.0, "src2" -> 0.3),
-          defaultWeight = 0.0, salt = "epoch-v1")
-        .select("doc_id", "source", "epoch")),
-
-    // ── the remaining rank-family windows: ntile / percent_rank /
-    // cume_dist. The order-by includes event_id so NTILE's row
-    // assignment is deterministic under value ties; percent_rank and
-    // cume_dist are rank-based (tie-insensitive) and divide exact
-    // integers, so double parity is structural. ──
-    "q71_window_ranks" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("event_type").orderBy(col("value"), col("event_id"))
-      t(s, dir, "events")
-        .filter(col("event_id") % 7 === 0)
-        .select(col("event_type"), col("event_id"), col("value"),
-          ntile(4).over(w).as("quartile"),
-          percent_rank().over(w).as("pct_rank"),
-          cume_dist().over(w).as("cum_dist"))
-    }),
-
-    // ── correlated scalar subquery (decorrelated by Catalyst into an
-    // aggregate + join — .explain shows no per-row subquery): each
-    // customer's max-price orders. max() is order-insensitive, so the
-    // correlated aggregate is hash-parity-safe where avg would not be. ──
-    "q72_correlated" -> ((s, dir) => {
-      t(s, dir, "orders").createOrReplaceTempView("graft_q72_orders")
-      s.sql(
-        """SELECT o_orderkey, o_custkey, o_totalprice
-          |FROM graft_q72_orders o
-          |WHERE o_totalprice = (SELECT max(o2.o_totalprice)
-          |                      FROM graft_q72_orders o2
-          |                      WHERE o2.o_custkey = o.o_custkey)""".stripMargin)
-    }),
-
-    // ── explicit GROUPING SETS with grouping() disambiguation (beyond
-    // q15 rollup / q39 cube): two one-dimension marginals plus the
-    // grand total in one Expand pass ──
-    "q73_grouping_sets" -> ((s, dir) => {
-      t(s, dir, "lineitem").createOrReplaceTempView("graft_q73_lineitem")
-      s.sql(
-        """SELECT coalesce(l_returnflag, 'ALL') AS rf,
-          |  coalesce(l_linestatus, 'ALL') AS ls,
-          |  grouping(l_returnflag) AS g_rf, grouping(l_linestatus) AS g_ls,
-          |  count(*) AS n,
-          |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty
-          |FROM graft_q73_lineitem
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin)
-    }),
-
-    // ── native session_window (the declarative spelling of q43's
-    // manual gap sessionization; also the streaming-aggregation form).
-    // Boundary semantics differ at EXACTLY the gap: session_window
-    // merges while next < last + gap (break at delta >= gap), the
-    // manual form breaks at delta > gap — the oracle mirrors >=.
-    // window.end is last-event + gap, so last_us subtracts the gap
-    // back out to the actual last event. ──
-    "q74_session_window" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"),
-          asDouble(sum(dec2(col("value")))).as("total_value"))
-        .select(col("user_id"),
-          unix_micros(col("sw.start")).as("start_us"),
-          (unix_micros(col("sw.end")) - lit(1800L * 1000000L)).as("last_us"),
-          col("n_events"), col("total_value"))),
-
-    // ── FULL OUTER join (q3 covers left; this completes the outer
-    // family): regions × a nation subset keyed off-by-design so both
-    // null sides appear; null keys rendered as sentinels for stable
-    // hashing ──
-    "q75_full_outer" -> ((s, dir) => {
-      val r = t(s, dir, "region").select(col("r_regionkey"), col("r_name"))
-      val n = t(s, dir, "nation").filter(col("n_nationkey") < 10)
-        .select((col("n_nationkey") + 2).as("nk"), col("n_name"))
-      r.join(n, col("r_regionkey") === col("nk"), "full_outer")
-        .select(
-          coalesce(col("r_regionkey"), lit(-1L)).as("rk"),
-          coalesce(col("r_name"), lit("<none>")).as("r_name"),
-          coalesce(col("nk"), lit(-1L)).as("nk"),
-          coalesce(col("n_name"), lit("<none>")).as("n_name"))
-    }),
-
-    // ── LATERAL correlated derived table (Spark 3.2+ SQL surface):
-    // for each region, its two first nations by name — the lateral
-    // subquery re-evaluates per outer row; Catalyst plans it as a
-    // decorrelated ranked join ──
-    "q76_lateral" -> ((s, dir) => {
-      t(s, dir, "region").createOrReplaceTempView("graft_q76_region")
-      t(s, dir, "nation").createOrReplaceTempView("graft_q76_nation")
-      s.sql(
-        """SELECT r.r_name, t.n_name, t.n_nationkey
-          |FROM graft_q76_region r,
-          |LATERAL (
-          |  SELECT n_name, n_nationkey
-          |  FROM graft_q76_nation n
-          |  WHERE n.n_regionkey = r.r_regionkey
-          |  ORDER BY n_name, n_nationkey
-          |  LIMIT 2) t""".stripMargin)
-    }),
-
-    // ── out-of-vocabulary ratio (language-model-flavored quality
-    // filter): vocabulary = the corpus's top-20 tokens by global count
-    // (ties broken by token string), each doc scored by the share of
-    // its tokens outside that vocabulary. The vocab aggregate is tiny
-    // and broadcast; scoring is a per-row membership pass. ──
-    "q77_oov_ratio" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val vocab = docs
-        .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("token"))
-        .limit(20)
-        .agg(collect_list(col("token")).as("vocab_unsorted"))
-        .select(array_sort(col("vocab_unsorted")).as("vocab"))
-      docs
-        .withColumn("__toks", TextAnalysis.tokens(col("text")))
-        .filter(size(col("__toks")) > 0)
-        .crossJoin(broadcast(vocab))
-        .select(col("doc_id"),
-          size(col("__toks")).as("n_tokens"),
-          size(filter(col("__toks"), t => !array_contains(col("vocab"), t)))
-            .as("n_oov"))
-        .withColumn("oov_ratio",
-          col("n_oov").cast("double") / col("n_tokens").cast("double"))
-    }),
-
-    // ── null-safe equi join (<=> / IS NOT DISTINCT FROM): the null
-    // key group must match ITSELF — a plain = join silently drops it,
-    // which is a classic silent-data-loss bug in key-nullable joins.
-    // Nulls are derived deterministically via nullif; the output key
-    // is coalesced to a sentinel only AFTER the join. ──
-    "q78_nullsafe_join" -> ((s, dir) => {
-      def grouped = t(s, dir, "events")
-        .groupBy(expr("nullif(event_type, 'view')").as("k"))
-        .agg(count(lit(1)).as("n"))
-      val l = grouped.select(col("k").as("lk"), col("n").as("n_a"))
-      val r = grouped.select(col("k").as("rk"), col("n").as("n_b"))
-      l.join(r, col("lk") <=> col("rk"))
-        .select(coalesce(col("lk"), lit("<null>")).as("k"), col("n_a"), col("n_b"))
-    }),
-
-    // ── INCREMENTAL near-dup (q18's production shape): today's batch
-    // (doc_id % 5 == 0) deduped against the standing corpus via the
-    // PERSISTED minhash index — the corpus is shingled ONCE into stored
-    // (id, band, bh) + (id, shingles) parquet tables, and the batch
-    // path probes the stored index without ever scanning the corpus
-    // text again (ExtSpec asserts that). The banded join is strictly
-    // cross-side, so corpus×corpus candidates never materialize ──
-    "q79_dedup_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // geometry-tagged, CONTENT-keyed path (file names+sizes+mtimes —
-      // regenerating the dataset in place invalidates the cache); build
-      // once and reuse — the production shape is build-on-compaction,
-      // probe per batch, so the bench's median-of-3 measures the probe
-      // path (run 1 pays the build; runs 2-3 probe the stored index).
-      // IndexStore stages + atomically renames, so no crash can commit
-      // a partial index.
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/documents.parquet")
-      val idxPath = graft.operators.IndexStore.ensure(
-        s"${System.getProperty("java.io.tmpdir")}/graft_mh_idx_${fp}_k3h128b32") { staging =>
-        Dedup.writeMinhashIndex(
-          Dedup.buildMinhashIndex(docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
-            shingleK = 3, numHashes = 128, bands = 32),
-          staging)
-      }
-      Dedup.nearDupPairsMinhashAgainstIndex(
-        docs.filter(col("doc_id") % 5 === 0), Dedup.readMinhashIndex(s, idxPath),
-        "doc_id", "text", threshold = 0.8)
-    }),
-
-    // ── STREAMING under the driver oracle (round-3 judge: stream≡batch
-    // lived only in specs): the flatMapGroupsWithState sessionizer
-    // replayed over the fixture landing dir, open sessions flushed via
-    // event-time timeouts (watermark sentinels), emitted as epoch-µs
-    // bigints; the oracle is the batch gap-sessionization SQL over the
-    // same JSON files — so state handling, watermarking, and timeout
-    // semantics are all under the rows+schema+hash check ──
-    "q45_sessions_stream" -> ((s, _) =>
-      graft.streaming.StreamingReports
-        .sessionReplay(s, FixturesDir + "/events_json", gapMinutes = 60)),
-
-    // ── update-mode streaming top10 under the oracle: the landing dir
-    // replayed in TWO waves through top10StreamUpdate (per-trigger
-    // upsert + dynamic partition overwrite), final report read back
-    // from the K1 pipe-CSV store — must equal the batch Top10Job
-    // report over the same files, which is exactly the q28 oracle ──
-    "q80_top10_stream_update" -> ((s, _) =>
-      graft.streaming.StreamingReports.top10ReplayUpdate(
-        s, FixturesDir + "/events_json",
-        Sources.resources(s, FixturesDir + "/resources.json"),
-        Sources.categories(s, FixturesDir + "/categories.json"))),
-
-    // ── the index APPEND path under the oracle: build the stored index
-    // from 3/5 of the corpus, fold another fifth in via
-    // appendToMinhashIndex (no read/rewrite of existing rows), then
-    // probe with the batch. Final semantics == q79 (batch vs the whole
-    // %5≠0 corpus), so q79's oracle SQL applies verbatim — what's
-    // certified is that append-then-probe equals build-all-then-probe ──
-    "q89_idx_append" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      // the append is NOT idempotent, so the whole build+append runs as
-      // ONE staged commit (IndexStore): both steps write into a staging
-      // tree that is atomically renamed only after the append completes.
-      // A crash between build and append — the round-6 advisor's
-      // finding — leaves nothing behind the marker, so the next run
-      // rebuilds from scratch instead of silently probing an index
-      // missing the appended fifth. Content-keyed like q79.
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/documents.parquet")
-      val idxPath = graft.operators.IndexStore.ensure(
-        s"${System.getProperty("java.io.tmpdir")}/graft_mh_idxap_${fp}_k3h128b32") { staging =>
-        Dedup.writeMinhashIndex(
-          Dedup.buildMinhashIndex(
-            docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 4),
-            "doc_id", "text", shingleK = 3, numHashes = 128, bands = 32),
-          staging)
-        Dedup.appendToMinhashIndex(
-          docs.filter(col("doc_id") % 5 === 4), staging, "doc_id", "text")
-      }
-      Dedup.nearDupPairsMinhashAgainstIndex(
-        docs.filter(col("doc_id") % 5 === 0), Dedup.readMinhashIndex(s, idxPath),
-        "doc_id", "text", threshold = 0.8)
-    }),
-
-    // ── streaming exact dedup under the oracle: every landing file
-    // RE-DELIVERED under a new name after a full trigger cycle (the
-    // at-least-once redelivery the operator exists for);
-    // dropDuplicatesWithinWatermark must emit each eventId exactly
-    // once, which for byte-identical redeliveries is plain DISTINCT ──
-    "q82_dedup_stream" -> ((s, _) =>
-      graft.streaming.StreamingReports.dedupReplay(s, FixturesDir + "/events_json")),
-
-    // ── stream-stream interval join under the oracle: same-user
-    // follow-up events within 60 min, replayed and drained — must equal
-    // the batch self-join over the same files ──
-    "q83_followup_join_stream" -> ((s, _) =>
-      graft.streaming.StreamingReports.followupReplay(
-        s, FixturesDir + "/events_json", windowMinutes = 60)),
-
-    // ── mapGroupsWithState running totals under the oracle: two-wave
-    // replay (state must accumulate across triggers); final cumulative
-    // total per resource == batch count ──
-    "q84_running_totals_stream" -> ((s, _) =>
-      graft.streaming.StreamingReports.runningTotalsReplay(
-        s, FixturesDir + "/events_json")),
-
-    // ── CDC MERGE (upsert/delete changeset onto a snapshot): updates
-    // rewrite matched rows, inserts add unmatched 'U' keys, deletes
-    // drop matched keys, untouched rows pass through. The changeset is
-    // derived from orders deterministically: even keys change (≡2 mod 8
-    // are tombstones — keys the snapshot holds), snapshot = keys
-    // %4 ≠ 0, so updates (≡2 mod 4), inserts (≡0 mod 4, absent from
-    // the snapshot), deletes, and no-op rows are ALL exercised ──
-    "q90_merge" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val snap = orders.filter(col("o_orderkey") % 4 =!= 0)
-        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-      val chg = orders.filter(col("o_orderkey") % 2 === 0)
-        .select(col("o_orderkey"),
-          when(col("o_orderkey") % 8 === 2, lit("D")).otherwise(lit("U")).as("op"),
-          col("o_custkey"),
-          (col("o_totalprice") + lit(1.0)).as("o_totalprice"),
-          col("o_orderstatus"))
-      graft.operators.Merge.merge(snap, chg, "o_orderkey", "op")
-    }),
-
-    // ── balanced domain mixture: every source downsampled to the
-    // smallest source's size, rates computed IN-PLAN from the corpus's
-    // own counts (no collect), md5-threshold draw — exact integer/IEEE
-    // arithmetic end to end, so the oracle reproduces the row set ──
-    "q91_mix_bal" -> ((s, dir) =>
-      graft.operators.Sampling.balancedMix(
-          t(s, dir, "documents"), "source", col("doc_id"), salt = "mix-v1")
-        .select("doc_id", "source", "lang")),
-
-    // ── canonical-doc selection: near-dup pairs → connected components
-    // → keep the LONGEST member of each cluster (ties: min doc_id) —
-    // "which copy do we keep" is the half of dedup that min-id
-    // representatives don't answer ──
-    "q92_canon" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.nearDupPairsMinhash(docs, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.8)
-      val clusters = graft.ext.ConnectedComponents
-        .dedupClusters(docs, "doc_id", pairs, "doc_a", "doc_b")
-      graft.ext.ConnectedComponents.canonicalPerCluster(
-        clusters, "doc_id", docs.select(col("doc_id"), col("n_chars")), "n_chars")
-    }),
-
-    // ── vocabulary-rarity quality score: per-doc mean document
-    // frequency of its distinct tokens — the integer-exact twin of a
-    // "-mean log p" corpus-LM filter (log dropped ⇒ all-BIGINT sums,
-    // one final division, cross-engine exact) ──
-    "q93_rarity" -> ((s, dir) =>
-      graft.ext.TextAnalysis.tokenRarity(t(s, dir, "documents"), "doc_id", "text")),
-
-    // ── the FULL CDC path: raw per-key event log (lineitem plays the
-    // log: (l_orderkey, l_linenumber) is the unique (key, LSN)) →
-    // compactLog keeps the last op per key → merge applies it to the
-    // snapshot. The compaction window and the merge join share the key,
-    // so the log is shuffled once ──
-    "q94_cdc" -> ((s, dir) => {
-      val snap = t(s, dir, "orders").filter(col("o_orderkey") % 4 =!= 0)
-        .select("o_orderkey", "o_totalprice")
-      val log = t(s, dir, "lineitem").select(
-        col("l_orderkey").as("o_orderkey"),
-        col("l_linenumber").as("seq"),
-        when(col("l_returnflag") === "R", lit("D")).otherwise(lit("U")).as("op"),
-        col("l_extendedprice").as("o_totalprice"))
-      // (key, seq) ties exist in the synthetic log — (op, value) make
-      // the order total, mirrored exactly in the oracle's ORDER BY
-      val compacted = graft.operators.Merge.compactLog(
-        log, "o_orderkey", "seq", col("op"), col("o_totalprice")).drop("seq")
-      graft.operators.Merge.merge(snap, compacted, "o_orderkey", "op")
-    }),
-
-    // ── skew-salted join: result == the plain inner join (what the
-    // oracle certifies); the salted shape spreads each hot probe key
-    // over 8 reducers. Money sum in exact DECIMAL, cast once at the
-    // end ──
-    "q95_salt_join" -> ((s, dir) => {
-      val joined = graft.operators.SkewSalt.saltedJoin(
-        t(s, dir, "lineitem").select(col("l_orderkey"), col("l_extendedprice")),
-        t(s, dir, "orders").select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority")),
-        "l_orderkey", saltBuckets = 8)
-      joined.groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_extendedprice").cast(DecimalType(18, 2))).cast("double").as("revenue"))
-    }),
-
-    // ── bounded-buffer top-k per group (Aggregator, map-side reject):
-    // same rows as the row_number window form, without sorting every
-    // row of every group through the shuffle ──
-    "q96_topk_agg" -> ((s, dir) => {
-      // a Product input encoder flattens the case class: the UDAF takes
-      // (id, score) as two column arguments
-      val topk = udaf(new graft.operators.TypedAgg.TopKByScore(3),
-        org.apache.spark.sql.Encoders.product[graft.operators.TypedAgg.Scored])
-      t(s, dir, "events")
-        // Scored.score is a primitive Double: a null value would fail at
-        // encoder time with an opaque non-nullable-field error, so
-        // filter defensively like the q139/q150 siblings (round-7
-        // advisory; the corpus has no null values today, so the oracle
-        // mirror below is a no-op on current data)
-        .filter(col("value").isNotNull)
-        .groupBy("event_type")
-        .agg(topk(col("event_id"), col("value")).as("top"))
-        .select(col("event_type"), posexplode(col("top")))
-        .select(col("event_type"), (col("pos") + 1).cast("long").as("rank"),
-          col("col.id").as("event_id"), col("col.score").as("value"))
-    }),
-
-    // ── incremental aggregation: history state + batch state merged by
-    // the accumulators' own combine rules must equal the one-shot
-    // aggregate over everything (the oracle). Exact accumulators only
-    // (count, integer sum, max) so the equality is bit-level ──
-    "q97_inc_agg" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      def st(d: DataFrame) = graft.operators.IncrementalAgg.state(
-        d, Seq("event_type"),
-        sums = Map("eid" -> col("event_id")), maxes = Map("value" -> col("value")))
-      graft.operators.IncrementalAgg.merge(
-          st(ev.filter(col("event_id") % 7 =!= 0)), // standing history state
-          st(ev.filter(col("event_id") % 7 === 0)), // today's batch state
-          Seq("event_type"))
-        .withColumn("avg_eid",
-          col("sum_eid").cast("double") / col("cnt").cast("double"))
-    }),
-
-    // ── SCD type-2 merge: the changeset closes superseded versions
-    // (valid_to = batch 2) and opens new ones instead of overwriting.
-    // The dim seeds both closed history (%3 keys) and current rows;
-    // changes exercise new-version, close-only (D), and brand-new-key
-    // insert (≡0 mod 4 keys absent from the dim) ──
-    "q98_scd2" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val open = orders.filter(col("o_orderkey") % 4 =!= 0)
-        .select(col("o_orderkey"), col("o_totalprice"),
-          lit(1L).as("valid_from"), lit(null).cast("long").as("valid_to"))
-      val hist = orders.filter(col("o_orderkey") % 4 =!= 0 && col("o_orderkey") % 3 === 0)
-        .select(col("o_orderkey"), (col("o_totalprice") - lit(5.0)).as("o_totalprice"),
-          lit(0L).as("valid_from"), lit(1L).as("valid_to"))
-      val chg = orders.filter(col("o_orderkey") % 2 === 0)
-        .select(col("o_orderkey"),
-          when(col("o_orderkey") % 8 === 2, lit("D")).otherwise(lit("U")).as("op"),
-          (col("o_totalprice") + lit(1.0)).as("o_totalprice"))
-      graft.operators.Merge.mergeScd2(
-        hist.unionByName(open), chg, "o_orderkey", "op", batchSeq = 2L)
-    }),
-
-    // ── STREAMING CDC upsert under the oracle: the landing dir
-    // replayed in two REVERSED waves through foreachBatch
-    // compactLog+merge with the out-of-order guard; the final store
-    // version must equal the batch latest-event-per-resource over the
-    // same files no matter the delivery order ──
-    "q99_cdc_stream" -> ((s, _) =>
-      graft.streaming.StreamingReports.cdcUpsertReplay(
-        s, FixturesDir + "/events_json")),
-
-    // ── exact-N per-stratum deterministic sample (eval-set
-    // construction): exactly 30 docs per source, ranked by the md5
-    // draw with key ties — reproducible and engine-independent ──
-    "q100_sample_n" -> ((s, dir) =>
-      graft.operators.Sampling.sampleExactN(
-          t(s, dir, "documents"), "source", col("doc_id"), n = 30, salt = "eval-v1")
-        .select("doc_id", "source", "lang")),
-
-    // ── key-skew profile ("measure before you salt"): top-8 heaviest
-    // l_orderkey values with table share — the decision input for
-    // SkewSalt/AQE tuning; TakeOrderedAndProject, no global sort ──
-    "q101_skew_profile" -> ((s, dir) =>
-      graft.operators.Profile.keySkew(t(s, dir, "lineitem"), "l_orderkey", topN = 8)),
-
-    // ── deterministic contrastive negatives: 2 pseudo-random same-
-    // shard partners per document via the md5 permutation — exact,
-    // reproducible, engine-independent ──
-    "q102_neg_pairs" -> ((s, dir) =>
-      graft.operators.Sampling.negativePairs(
-        t(s, dir, "documents"), col("doc_id"), k = 2, salt = "neg-v1")),
-
-    // ── corpus version diff: v2 derived deterministically (every 11th
-    // doc removed, every 7th edited, every 13th re-keyed as new) —
-    // per-key status via side-local md5 fingerprints, so only
-    // key+hash cross the shuffle, never the text ──
-    "q103_diff" -> ((s, dir) => {
-      val v1 = t(s, dir, "documents").select("doc_id", "text", "lang", "source")
-      val v2 = v1.filter(col("doc_id") % 11 =!= 0)
-        .withColumn("text",
-          when(col("doc_id") % 7 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")))
-        .unionByName(dupSliceArm(v1))
-      graft.operators.Diff.diff(v1, v2, "doc_id", Seq("text", "lang", "source"))
-    }),
-
-    // ── the ROUND-7 CAPSTONE (q69's successor, built from this
-    // round's operators): metadata quality gate → near-dup clustering
-    // → CANONICAL keep (argmax n_chars, not min-id) → BALANCED domain
-    // mixture (rates in-plan) → exact-N eval holdout per source. One
-    // oracle certifies the whole composition. The canonical corpus
-    // feeds three consumers (mix counts, mix join, eval rank), so it
-    // is checkpointed once — the q69 lesson. ──
-    "q104_pipeline_v2" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val quality = docs.filter(col("n_chars") >= 200)
-      val pairs = Dedup.nearDupPairsMinhash(quality, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.8)
-      val clusters = graft.ext.ConnectedComponents
-        .dedupClusters(quality, "doc_id", pairs, "doc_a", "doc_b")
-      val canon = graft.ext.ConnectedComponents
-        .canonicalPerCluster(clusters, "doc_id",
-          quality.select(col("doc_id"), col("n_chars")), "n_chars")
-        .select(col("canon_id").as("doc_id"))
-      val kept = quality.select("doc_id", "source").join(canon, "doc_id")
-        .localCheckpoint()
-      val mixed = graft.operators.Sampling.balancedMix(
-        kept, "source", col("doc_id"), salt = "mix-v2")
-      val eval = graft.operators.Sampling.sampleExactN(
-          mixed, "source", col("doc_id"), n = 10, salt = "eval-v2")
-        .select(col("doc_id"), lit(true).as("__e"))
-      mixed.join(eval, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("source"),
-          when(col("__e").isNotNull, "eval").otherwise("train").as("split"))
-    }),
-
-    // ── duplicate n-gram audit: top-20 5-grams by corpus occurrence
-    // count with distinct-doc spread — the boilerplate-vs-repetition
-    // diagnostic behind substring-dedup decisions; TakeOrdered, never
-    // a global sort ──
-    "q105_ngram_hotspots" -> ((s, dir) =>
-      graft.ext.TextAnalysis.ngramHotspots(
-        t(s, dir, "documents"), "doc_id", "text", n = 5, topK = 20)),
-
-    // ── one BPE induction round: corpus-weighted adjacent char-pair
-    // frequencies over the DISTINCT vocabulary (the only corpus-scale
-    // shuffle is the token-count aggregate; the pair explode runs on
-    // |vocab| rows) ──
-    "q106_bpe_pairs" -> ((s, dir) =>
-      graft.ext.TextAnalysis.bpePairStats(
-        t(s, dir, "documents"), "text", topK = 30)),
-
-    // ── weighted sampling without replacement (priority sampling):
-    // 60 docs drawn ∝ n_chars, deterministically — per-row projection
-    // + TakeOrdered, corpus never shuffled ──
-    "q107_priority_sample" -> ((s, dir) =>
-      graft.operators.Sampling.prioritySample(
-          t(s, dir, "documents"), col("doc_id"), col("n_chars"), k = 60,
-          salt = "prio-v1")
-        .select("doc_id", "source", "n_chars", "priority")),
-
-    // ── interval coalescing: each line item occupies
-    // [shipdate, shipdate + linenumber%14 days] (the synthetic
-    // receipt-date derivation — this lineitem has no receiptdate);
-    // merge overlaps per order, report transit coverage — one keyed
-    // exchange, two windows over one sort, integer day math ──
-    "q108_span_merge" -> ((s, dir) => {
-      val iv = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_shipdate").cast("date").as("ship"),
-          col("l_linenumber"))
-        .select(col("l_orderkey"), col("ship"),
-          date_add(col("ship"), pmod(col("l_linenumber"), lit(14))).as("receipt"))
-      graft.operators.Intervals.coalesceIntervals(iv, "l_orderkey", "ship", "receipt")
-        .groupBy("l_orderkey")
-        .agg(sum(col("n_merged")).as("n_intervals"),
-          count(lit(1)).as("n_spans"),
-          sum(datediff(col("span_end"), col("span_start")) + 1).as("covered_days"))
-    }),
-
-    // ── compaction planning: pack each month's daily event shards
-    // into ~64 KB merge groups by running byte offset — metadata-grain
-    // window per partition directory, integer arithmetic only ──
-    "q109_compaction_plan" -> ((s, dir) => {
-      val shards = t(s, dir, "events")
-        .groupBy(monthKey(col("ts")).as("month"), dayKey(col("ts")).as("day"))
-        .agg((sum(octet_length(col("props")).cast("long"))
-          + count(lit(1)) * lit(32L)).as("bytes"))
-      graft.operators.Layout.compactionPlan(
-        shards, "month", "day", "bytes", targetBytes = 64L * 1024)
-    }),
-
-    // ── fixed-point integer PageRank, 3 iterations, on a synthetic
-    // 40-node link graph derived from orders — bit-identical on any
-    // partitioning/engine because every step is BIGINT arithmetic ──
-    "q110_pagerank" -> ((s, dir) => {
-      val edges = t(s, dir, "orders")
-        .select((col("o_custkey") % 40).as("src"), (col("o_orderkey") % 40).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      graft.operators.PageRank.pageRank(edges, "src", "dst", iterations = 3)
-    }),
-
-    // ── vocabulary-bounded co-occurrence with integer lift (PMI's
-    // engine-exact twin): pair space capped at vocabK², corpus enters
-    // only through the linear distinct-(doc,token) aggregate ──
-    "q111_cooc_lift" -> ((s, dir) =>
-      graft.ext.TextAnalysis.coocLift(
-        t(s, dir, "documents"), "doc_id", "text", vocabK = 40, topK = 25)),
-
-    // ── pairwise audience overlap across event types: member-keyed
-    // self-join bounded by group-cardinality², integer-ppm Jaccard ──
-    "q112_audience_overlap" -> ((s, dir) =>
-      graft.operators.Profile.setOverlap(t(s, dir, "events"), "event_type", "user_id")),
-
-    // ── cohort retention matrix at epoch-week grain: distinct
-    // (user, week) → min-week cohort → same-key join-back (no third
-    // shuffle) → integer week offsets ──
-    "q113_retention" -> ((s, dir) =>
-      graft.operators.Cohort.retention(t(s, dir, "events"), "user_id",
-        expr("datediff(CAST(ts AS DATE), DATE'1970-01-01') div 7"))),
-
-    // ── ordered funnel: view→click→signup→purchase IN TIME ORDER per
-    // user — one scan, one user-keyed exchange, codegen'd array fold.
-    // Runs on a deterministic 5% event sample (the synthetic users are
-    // so active that the full log funnels everyone to stage 4) ──
-    "q114_funnel" -> ((s, dir) =>
-      graft.operators.Funnel.funnelStages(
-        graft.operators.Sampling.hashSample(
-          t(s, dir, "events"), col("event_id"), rate = 0.05, salt = "funnel-v1"),
-        "user_id", "ts", "event_type",
-        Seq("view", "click", "signup", "purchase"))),
-
-    // ── split-document seam detection: tail-fingerprint == head-
-    // fingerprint equi-join — only 32-char hashes cross the shuffle ──
-    "q115_boundary_dups" -> ((s, dir) =>
-      Dedup.boundaryDupPairs(t(s, dir, "documents"), "doc_id", "text", k = 3)),
-
-    // ── integer trailing-window spike detection: day n vs 9/8 × the
-    // trailing-7-day mean, tested as 8·7·n > 9·sum — no division ──
-    "q116_spike" -> ((s, dir) =>
-      graft.operators.Profile.trailingSpikes(
-        t(s, dir, "events")
-          .groupBy(col("event_type"), dayKey(col("ts")).as("day"))
-          .agg(count(lit(1)).as("n")),
-        "event_type", "day", "n", window = 7, num = 9, den = 8)),
-
-    // ── last-touch attribution: each purchase as-of-joined to the
-    // user's most recent prior view/click (same-instant touches
-    // collapsed deterministically by min type) — the as-of operator at
-    // event grain, certified against DuckDB's native ASOF ──
-    "q117_attribution" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id"))
-      val touches = ev.filter(col("event_type").isin("view", "click"))
-        .groupBy(col("user_id"), col("ts").as("tts"))
-        .agg(min(col("event_type")).as("touch_type"))
-      graft.operators.AsofJoin
-        .asofLeft(p, touches, "user_id", "ts", "tts", Seq("touch_type"))
-        .groupBy(coalesce(col("touch_type"), lit("none")).as("touch"))
-        .agg(count(lit(1)).as("n_purchases"))
-    }),
-
-    // ── declarative data-quality rules: N expectations in ONE
-    // aggregate over one scan, integer-ppm pass rates ──
-    "q118_quality_rules" -> ((s, dir) =>
-      graft.operators.Quality.ruleReport(t(s, dir, "orders"), Seq(
-        "price_positive" -> (col("o_totalprice") > 0),
-        "custkey_present" -> col("o_custkey").isNotNull,
-        "status_domain" -> col("o_orderstatus").isin("O", "F", "P"),
-        "priority_format" -> col("o_orderpriority").rlike("^[1-5]-")),
-        minPassPpm = 990000L)),
-
-    // ── per-metric trend slope with exact integer moments (x = days
-    // into the window, y = cents); the only FP op is the final
-    // division ──
-    "q119_trend_slope" -> ((s, dir) =>
-      graft.operators.Profile.trendSlope(t(s, dir, "events"), "event_type",
-        expr("datediff(CAST(ts AS DATE), DATE'2024-01-01')"),
-        expr("CAST(value * 100 AS BIGINT)"))),
-
-    // ── equi-depth histogram: exact percentile_disc boundaries
-    // (actual data values), comparison-only bucket assignment —
-    // deterministic where ntile's tie split is not ──
-    "q120_equidepth" -> ((s, dir) =>
-      graft.operators.Histogram.equiDepth(
-        t(s, dir, "orders"), "o_totalprice", buckets = 8)),
-
-    // ── Hamilton largest-remainder apportionment: Σ alloc == budget
-    // exactly, all-integer, remainder ties total-ordered ──
-    "q121_apportion" -> ((s, dir) =>
-      graft.operators.Sampling.apportion(
-        t(s, dir, "documents"), "source", budget = 120L)),
-
-    // ── exact-budget weighted mixture: apportion 200 across sources,
-    // each stratum keeps its alloc highest-(n_chars/u) docs ──
-    "q122_budget_mixture" -> ((s, dir) =>
-      graft.operators.Sampling.priorityApportion(
-          t(s, dir, "documents"), "source", col("doc_id"), col("n_chars"),
-          budget = 200L, salt = "bm-v1")
-        .select("doc_id", "source", "n_chars", "priority")),
-
-    // ── mergeable Misra-Gries heavy hitters under its guarantee
-    // contract (the q62 pattern): a planted 50%-hot key stream; the
-    // sketch must contain every item with freq > n/(k+1), never
-    // overcount, and undercount by at most n div (k+1) ──
-    "q123_heavy_hitters_contract" -> ((s, dir) => {
-      val keyed = t(s, dir, "events").select(
-        when(col("event_id") % 2 === 0, lit("HOT"))
-          .otherwise((col("event_id") % 97).cast("string")).as("k"))
-      val mg = udaf(new graft.operators.TypedAgg.MisraGries(10),
-        org.apache.spark.sql.Encoders.STRING)
-      val sketch = keyed.agg(mg(col("k")).as("sk"))
-        .select(explode(col("sk")).as("e"))
-        .select(col("e.item").as("item"), col("e.cnt").as("est"))
-      val tot = broadcast(keyed.agg(count(lit(1)).as("n")))
-      keyed.groupBy("k").agg(count(lit(1)).as("freq"))
-        .join(sketch, col("k") === col("item"), "left")
-        .crossJoin(tot)
-        .agg(max(col("n")).as("n_rows"),
-          sum(when(col("freq") * 11 > col("n"), 1L).otherwise(0L))
-            .as("n_true_heavy"),
-          (sum(when(col("freq") * 11 > col("n") && col("item").isNull, 1L)
-            .otherwise(0L)) === 0L).as("all_heavy_found"),
-          (max(when(col("item").isNotNull, col("freq") - col("est")))
-            <= expr("max(n) div 11")).as("under_bound_ok"),
-          (sum(when(col("est") > col("freq"), 1L).otherwise(0L)) === 0L)
-            .as("never_overcounts"))
-    }),
-
-    // ── STREAMING ordered funnel: q114's fold as a
-    // flatMapGroupsWithState machine, replayed in two event-id-parity
-    // interleaved waves (maximal disorder) + sentinel watermark
-    // flushes — must hash-match the BATCH oracle ──
-    "q124_funnel_stream" -> ((s, dir) =>
-      graft.streaming.StreamingReports.funnelReplay(s, dir)),
-
-    // ── integer EWMA (α = 1/4) over each metric's daily revenue
-    // series: shifts/adds only, so the smoothed value is bit-exact on
-    // any partitioning — FP smoothing is not ──
-    "q125_ewma" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          expr("datediff(CAST(ts AS DATE), DATE'2024-01-01')").as("x"))
-        .agg(sum(expr("CAST(value * 100 AS BIGINT)")).as("y"))
-      graft.operators.Profile.ewma(daily, "event_type", col("x"), col("y"), shift = 2)
-    }),
-
-    // ── order-independent table digest: 2 word sums + count — "are
-    // these two tables equal" as a 3-number compare, mergeable by
-    // addition across shards ──
-    "q126_table_checksum" -> ((s, dir) =>
-      graft.operators.Diff.tableChecksum(t(s, dir, "lineitem"),
-        Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_returnflag"))),
-
-    // ── top-p (nucleus) coverage: per metric, the smallest set of
-    // days covering 80% of revenue — all-integer threshold test, the
-    // Intervals two-window shape ──
-    "q127_top_p" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"), dayKey(col("ts")).as("day"))
-        .agg(sum(expr("CAST(value * 100 AS BIGINT)")).as("cents"))
-      graft.operators.Sampling.topPCoverage(daily, "event_type",
-        col("cents"), col("day"), num = 4, den = 5)
-    }),
-
-    // ── state-transition matrix: what event follows what, per user in
-    // (ts, event_id) total order — one lag window + partial-agg count ──
-    "q128_transitions" -> ((s, dir) =>
-      graft.operators.Profile.transitions(t(s, dir, "events"), "user_id",
-        Seq(col("ts"), col("event_id")), col("event_type"))),
-
-    // ── z-curve tile summary: the oracle-certifiable half of z-order
-    // clustering — all-integer equi-width buckets, Morton interleave
-    // (pure shift/or bit math), per-tile count + z-range ──
-    "q129_zorder_tiles" -> ((s, dir) =>
-      graft.operators.Layout.zTileSummary(
-        t(s, dir, "lineitem"), "l_partkey", "l_suppkey",
-        bits = 8, tileShift = 10)),
-
-    // ── referential-integrity audit: orphan/null counts for every
-    // schema FK edge, parent side distinct-ed before the join ──
-    "q130_fk_audit" -> ((s, dir) =>
-      graft.operators.Quality.fkOrphans(Seq(
-        ("lineitem_orders", t(s, dir, "lineitem"), "l_orderkey",
-          t(s, dir, "orders"), "o_orderkey"),
-        ("lineitem_part", t(s, dir, "lineitem"), "l_partkey",
-          t(s, dir, "part"), "p_partkey"),
-        ("lineitem_supplier", t(s, dir, "lineitem"), "l_suppkey",
-          t(s, dir, "supplier"), "s_suppkey"),
-        ("orders_customer", t(s, dir, "orders"), "o_custkey",
-          t(s, dir, "customer"), "c_custkey"),
-        ("customer_nation", t(s, dir, "customer"), "c_nationkey",
-          t(s, dir, "nation"), "n_nationkey"),
-        ("events_customer", t(s, dir, "events"), "user_id",
-          t(s, dir, "customer"), "c_custkey")))),
-
-    // ── candidate-key / grain audit: is the declared column set really
-    // the table's grain, and how hot is the worst key (the q94 lineitem
-    // duplicate-grain lesson as a first-class report) ──
-    "q131_grain_check" -> ((s, dir) =>
-      graft.operators.Quality.grainReport(Seq(
-        ("orders_pk", t(s, dir, "orders"), Seq("o_orderkey")),
-        ("lineitem_pk2", t(s, dir, "lineitem"), Seq("l_orderkey", "l_linenumber")),
-        ("lineitem_pk4", t(s, dir, "lineitem"),
-          Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")),
-        ("events_pk", t(s, dir, "events"), Seq("event_id")),
-        ("documents_pk", t(s, dir, "documents"), Seq("doc_id"))))),
-
-    // ── winsorize: comparison-only percentile clip at [p05, p95] —
-    // every output value is bit-identical to some input value ──
-    "q132_winsorize" -> ((s, dir) =>
-      graft.operators.Feature.winsorize(
-          t(s, dir, "orders"), "o_totalprice", loQ = 0.05, hiQ = 0.95)
-        .select(col("o_orderkey"), col("o_totalprice"), col("clipped"))),
-
-    // ── forward-fill: carry each user's last purchase amount across
-    // subsequent events in (ts, event_id) total order ──
-    "q133_gap_fill" -> ((s, dir) =>
-      graft.operators.Feature.gapFill(
-          t(s, dir, "events"), "user_id", Seq(col("ts"), col("event_id")),
-          when(col("event_type") === "purchase",
-            expr("CAST(value * 100 AS BIGINT)")),
-          as = "last_purchase_cents")
-        .select(col("event_id"), col("user_id"), col("last_purchase_cents"))),
-
-    // ── per-group integer min-max scaling: event value → permille of
-    // its event_type's range, all-BIGINT ──
-    "q134_scale_minmax" -> ((s, dir) =>
-      graft.operators.Feature.scaleMinMax(
-          t(s, dir, "events"), "event_type",
-          expr("CAST(value * 100 AS BIGINT)"), den = 1000L, as = "permille")
-        .select(col("event_id"), col("event_type"), col("permille"))),
-
-    // ── tokenizer vocabulary: corpus token counts ≥ minCount with
-    // contiguous frequency-ranked ids; the global sort runs on the
-    // post-threshold vocab only, never the corpus ──
-    "q135_vocab" -> ((s, dir) =>
-      graft.ext.TextAnalysis.buildVocab(
-        t(s, dir, "documents"), "text", minCount = 40L)),
-
-    // ── top user journeys: consecutive event-type trigrams per user in
-    // (ts, event_id) total order, global top-20 with total tie order ──
-    "q136_path_trigrams" -> ((s, dir) =>
-      graft.operators.Profile.pathTrigrams(t(s, dir, "events"), "user_id",
-        Seq(col("ts"), col("event_id")), col("event_type"), topN = 20)),
-
-    // ── 2-D Pareto frontier via the sort-based rewrite (hash agg +
-    // frontier-sized running-max window) — certified against DuckDB's
-    // quadratic NOT EXISTS formulation as independent truth ──
-    "q137_skyline" -> ((s, dir) =>
-      graft.operators.Skyline.frontier2d(t(s, dir, "lineitem"),
-        expr("CAST(l_quantity AS BIGINT)"), col("l_extendedprice"))),
-
-    // ── distribution drift between the first and second half-month:
-    // all-integer TV numerator |n_a·N_b − n_b·N_a| per category ──
-    "q138_dist_drift" -> ((s, dir) =>
-      graft.operators.Profile.distDrift(t(s, dir, "events"),
-        get_json_object(col("props"), "$.k"),
-        expr("ts >= TIMESTAMP'2024-01-16'"))),
-
-    // ── per-key Pearson correlation from exact BIGINT moments; the
-    // only FP is the final fixed-shape num/(√dx·√dy) ──
-    "q139_corr" -> ((s, dir) =>
-      graft.operators.Profile.corrMoments(t(s, dir, "events"), "event_type",
-        expr("datediff(CAST(ts AS DATE), DATE'2024-01-01')"),
-        expr("CAST(value * 100 AS BIGINT)"))),
-
-    // ── hierarchical percent-of-parent rollup: revenue share of each
-    // nation within its region and each region of the total, integer
-    // ppm, windows over the 25-row aggregate only ──
-    "q140_hier_share" -> ((s, dir) => {
-      val leaf = t(s, dir, "orders")
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(t(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-        .join(t(s, dir, "region"), col("n_regionkey") === col("r_regionkey"))
-      graft.operators.GroupShare.rollupShares(leaf, Seq("r_name", "n_name"),
-        expr("CAST(o_totalprice * 100 AS BIGINT)"))
-    }),
-
-    // ── q128's transition mining as a STATEFUL STREAM: disorder-proof
-    // replay (interleaved waves), event-time timeouts, pairs ordered at
-    // flush — hash-matches the batch oracle on non-null users ──
-    "q141_transitions_stream" -> ((s, dir) =>
-      graft.streaming.StreamingReports.transitionsReplay(s, dir)),
-
-    // ── concurrency sweep as a DISTRIBUTED prefix sum (per-day keyed
-    // running sums + a day-grain carry window — never a global sort of
-    // the boundaries): max concurrent 30-min sessions per day ──
-    "q142_concurrency" -> ((s, dir) => {
-      val spans = graft.operators.Sessionize.sessionSpansUs(
-        t(s, dir, "events"), "user_id", "ts", gapMinutes = 30)
-      graft.operators.Intervals.concurrency(spans,
-          col("start_us"), col("end_us"), bucketUsDiv = 86400000000L)
-        .groupBy(col("bucket").as("day_idx"))
-        .agg(max(col("conc")).as("max_concurrent"))
-    }),
-
-    // ── robust center/spread: per-type median + MAD of event cents,
-    // both percentile_disc — integer-exact end to end ──
-    "q143_mad" -> ((s, dir) =>
-      graft.operators.Profile.madRobust(t(s, dir, "events"), "event_type",
-        expr("CAST(value * 100 AS BIGINT)"))),
-
-    // ── Benford first-digit audit on order totals (cents): digit from
-    // the decimal string, integer ppm shares ──
-    "q144_benford" -> ((s, dir) =>
-      graft.operators.Quality.firstDigitReport(t(s, dir, "orders"),
-        expr("CAST(o_totalprice * 100 AS BIGINT)"))),
-
-    // ── mergeable quantile-sketch contract: approx_percentile's rank
-    // guarantee verified against the data, booleans pinned true ──
-    "q145_quantile_sketch_contract" -> ((s, dir) =>
-      graft.operators.Profile.approxQuantileContract(
-        t(s, dir, "events"), "event_type",
-        expr("CAST(value * 100 AS BIGINT)"), accuracy = 1000)),
-
-    // ── calendar densification: per-category daily counts with every
-    // (category, day) cell present, zero-filled — gap-free series ──
-    "q146_densify_days" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(get_json_object(col("props"), "$.k").as("category"),
-          dayKey(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      graft.operators.Feature.densifyDays(daily, "category", "day", "n")
-    }),
-
-    // ── inverted index: per token df / tf / canonical posting-list
-    // string, df-capped (the stop-token guard). Indexed over a 50-doc
-    // slice: the synthetic corpus has a ~31-token vocabulary where
-    // every token is a stop-token at full scale (df ≈ n_docs), so the
-    // slice is what gives the df band real members ──
-    "q147_inverted_index" -> ((s, dir) =>
-      graft.ext.TextAnalysis.invertedIndex(
-        t(s, dir, "documents").filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", minDf = 5L, maxDf = 50L)),
-
-    // ── bounce report: per session-start day, sessions / single-event
-    // bounces / integer-ppm bounce rate — composition of the certified
-    // sessionizer at µs span grain ──
-    "q148_bounce" -> ((s, dir) =>
-      graft.operators.Sessionize.sessionSpansUs(
-          t(s, dir, "events"), "user_id", "ts", gapMinutes = 30)
-        .groupBy(expr("start_us div 86400000000").as("day_idx"))
-        .agg(count(lit(1)).as("n_sessions"),
-          sum(when(col("n_events") === 1, 1L).otherwise(0L)).as("n_bounces"))
-        .withColumn("bounce_ppm", expr("(n_bounces * 1000000) div n_sessions"))),
-
-    // ── weighted median from a pre-aggregated histogram: median
-    // quantity weighted by revenue cents, per return flag — the
-    // histogram-first shape a 100-TB median needs ──
-    "q149_weighted_median" -> ((s, dir) => {
-      val hist = t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"),
-          expr("CAST(l_quantity AS BIGINT)").as("qty"))
-        .agg(sum(expr("CAST(l_extendedprice * 100 AS BIGINT)")).as("cents"))
-      graft.operators.Profile.weightedMedian(hist, "l_returnflag", "qty", "cents")
-    }),
-
-    // ── daily p10/p50/p90 bands of event cents — exact discrete
-    // percentiles per day (the timeseries envelope chart) ──
-    "q150_daily_bands" -> ((s, dir) =>
-      t(s, dir, "events")
-        .select(dayKey(col("ts")).as("day"),
-          expr("CAST(value * 100 AS BIGINT)").as("c"))
-        .filter(col("c").isNotNull)
-        .groupBy("day")
-        .agg(
-          expr("percentile_disc(0.1) WITHIN GROUP (ORDER BY c)")
-            .cast("long").as("p10"),
-          expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY c)")
-            .cast("long").as("p50"),
-          expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY c)")
-            .cast("long").as("p90"),
-          count(lit(1)).as("n"))),
-
-    // ── top-5 categories + OTHER rollup: rank window over the
-    // aggregated category frame only ──
-    "q151_topn_other" -> ((s, dir) =>
-      graft.operators.TopK.topNWithOther(
-        t(s, dir, "events")
-          .groupBy(get_json_object(col("props"), "$.k").as("category"))
-          .agg(count(lit(1)).as("n")),
-        "category", "n", n = 5)),
-
-    // ── time-weighted average: each event's cents weighted by the ms
-    // until the same user's next event (lead in (ts, event_id) total
-    // order; last events carry no span). Integer num/den + one final
-    // divide — the q119 discipline. ms not µs: Σ cents·dur_µs would
-    // overflow BIGINT at ~1500 users × 30 days ──
-    "q152_twa" -> ((s, dir) =>
-      t(s, dir, "events")
-        .withColumn("__us", unix_micros(col("ts")))
-        .withColumn("__dur_ms",
-          expr("(lead(__us) OVER (PARTITION BY user_id ORDER BY ts, event_id) - __us) div 1000"))
-        .filter(col("__dur_ms").isNotNull)
-        .groupBy("event_type")
-        .agg(
-          sum(expr("CAST(value * 100 AS BIGINT) * __dur_ms")).as("num"),
-          sum(col("__dur_ms")).as("den"),
-          count(lit(1)).as("n"))
-        .withColumn("twa_cents",
-          when(col("den") > 0,
-            col("num").cast("double") / col("den").cast("double")))),
-
-    // ── mergeable minhash set-similarity sketch under its Jaccard
-    // contract: exact columns + pinned verdict (oracle can't reproduce
-    // xxhash64, it CAN pin the guarantee — q62/q145 pattern) ──
-    "q153_minhash_sets_contract" -> ((s, dir) =>
-      graft.operators.Profile.minhashSetContract(
-        t(s, dir, "events"), "event_type", "user_id", k = 128)),
-
-    // ── ORC sink certified THROUGH the oracle: write a day-partitioned
-    // ORC copy (IndexStore atomic staging — build once per dataset
-    // fingerprint), read it back with a partition-pruned + pushed-down
-    // scan, aggregate; the oracle computes the same truth from the
-    // parquet originals, so any roundtrip infidelity breaks the hash ──
-    "q154_orc_roundtrip" -> ((s, dir) => {
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/events.parquet")
-      val out = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_orc_events_$fp").getPath
-      graft.operators.IndexStore.ensure(out, marker = "_SUCCESS") { stage =>
-        t(s, dir, "events")
-          .select(col("event_id"), col("event_type"),
-            dayKey(col("ts")).as("day"),
-            expr("CAST(value * 100 AS BIGINT)").as("c"))
-          .write.mode("overwrite").partitionBy("day").orc(stage)
-      }
-      s.read.orc(out)
-        .filter(col("event_type") === "purchase")
-        .groupBy("day")
-        .agg(count(lit(1)).as("n"), sum(col("c")).as("cents"))
-    }),
-
-    // ── pipe-CSV sink certified the same way (the reference's K1 sink
-    // shape: sep '|', header). Integer/string columns only — CSV
-    // roundtrips of doubles drift in formatting ──
-    "q155_csv_roundtrip" -> ((s, dir) => {
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/events.parquet")
-      val out = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_csv_daily_$fp").getPath
-      graft.operators.IndexStore.ensure(out, marker = "_SUCCESS") { stage =>
-        t(s, dir, "events")
-          .groupBy(col("event_type"), dayKey(col("ts")).as("day"))
-          .agg(count(lit(1)).as("n"))
-          .write.mode("overwrite").option("sep", "|").option("header", "true")
-          .csv(stage)
-      }
-      s.read.option("sep", "|").option("header", "true")
-        .schema("event_type STRING, day STRING, n BIGINT")
-        .csv(out)
-        .groupBy("event_type")
-        .agg(sum(col("n")).as("total"), count(lit(1)).as("n_days"))
-    }),
-
-    // ── K2 JSON-LINES sink certified the q154/q155 way (the
-    // reference's royalties sink shape — royalties.py:317 writes the
-    // report as JSON lines with the money as a STRING): write a
-    // day-grain report whose amount is a decimal STRING
-    // ("<dollars>.<cc>") through IndexStore staging, read it back with
-    // an explicit schema, PARSE the money strings back to cents and
-    // re-aggregate at the same day grain (the aggregation exercises
-    // the JSON scan; the grain stays day so the oracle is independent
-    // truth, not a mirrored derivation); the oracle computes the day
-    // truth straight from the parquet originals, so any JSON
-    // write/read or string encode/parse infidelity breaks the hash. ──
-    "q230_jsonl_roundtrip" -> ((s, dir) => {
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/events.parquet")
-      val out = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_jsonl_royalty_$fp").getPath
-      graft.operators.IndexStore.ensure(out, marker = "_SUCCESS") { stage =>
-        t(s, dir, "events")
-          .filter(col("event_type") === "purchase")
-          .groupBy(dayKey(col("ts")).as("date"))
-          .agg(sum(expr("CAST(value * 100 AS BIGINT)")).as("cents"),
-            count(lit(1)).as("n"))
-          .select(col("date"),
-            expr("concat(CAST(cents DIV 100 AS STRING), '.', " +
-              "lpad(CAST(cents % 100 AS STRING), 2, '0'))").as("amount"),
-            col("n"))
-          .write.mode("overwrite").json(stage)
-      }
-      s.read.schema("date STRING, amount STRING, n BIGINT").json(out)
-        .withColumn("__cents",
-          expr("CAST(split(amount, '\\\\.')[0] AS BIGINT) * 100 + " +
-            "CAST(split(amount, '\\\\.')[1] AS BIGINT)"))
-        .groupBy(col("date"))
-        .agg(sum(col("__cents")).as("total_cents"),
-          sum(col("n")).as("n_purchases"))
-    }),
-
-    // ── packing-efficiency report over q61's packer: per source,
-    // chunks / tokens / signed slack ppm (negative = docs overflowed
-    // the budget — the packer's documented offset-div semantics) ──
-    "q156_pack_stats" -> ((s, dir) => {
-      val chunks = TextAnalysis.packSequences(
-          t(s, dir, "documents").withColumn("__nt",
-            size(TextAnalysis.tokens(col("text"))).cast("long")),
-          "source", "doc_id", col("__nt"), budget = 256L)
-        .groupBy("source", "chunk")
-        .agg(sum(col("n_tok")).as("chunk_tokens"))
-      chunks.groupBy("source")
-        .agg(count(lit(1)).as("n_chunks"),
-          sum(col("chunk_tokens")).as("total_tokens"))
-        .withColumn("slack_ppm",
-          expr("((n_chunks * 256 - total_tokens) * 1000000) div (n_chunks * 256)"))
-    }),
-
-    // ── dedup observability: the q18 near-dup pairs attributed to
-    // their source pair (order-normalized) — "which sources duplicate
-    // each other" ──
-    "q157_dup_sources" -> ((s, dir) => {
-      val pairs = Dedup.nearDupPairsMinhash(t(s, dir, "documents"),
-        "doc_id", "text", shingleK = 3, numHashes = 128, bands = 32,
-        threshold = 0.8)
-      val src = t(s, dir, "documents").select(col("doc_id"), col("source"))
-      pairs
-        .join(src.select(col("doc_id").as("doc_a"), col("source").as("__sa")),
-          "doc_a")
-        .join(src.select(col("doc_id").as("doc_b"), col("source").as("__sb")),
-          "doc_b")
-        .groupBy(least(col("__sa"), col("__sb")).as("source_a"),
-          greatest(col("__sa"), col("__sb")).as("source_b"))
-        .agg(count(lit(1)).as("n_pairs"))
-    }),
-
-    // ── root+depth over a parent-pointer forest by POINTER DOUBLING
-    // (O(log depth) self-joins, the ConnectedComponents discipline) —
-    // synthetic 7-root forest: parent(n) = n − 7, chains ~70 deep,
-    // resolved in 7 rounds where a naive walk needs 70 ──
-    "q158_tree_paths" -> ((s, dir) =>
-      graft.operators.TreePaths.rootAndDepth(
-        t(s, dir, "documents").select(col("doc_id").as("node"),
-          when(col("doc_id") < 7, col("doc_id"))
-            .otherwise(col("doc_id") - 7).as("parent")))),
-
-    // ── gaps-and-islands, the gap half: per user, the quiet span
-    // before each session (sessions are disjoint ⇒ start_us is a
-    // total within-user order) ──
-    "q159_session_gaps" -> ((s, dir) => {
-      val spans = graft.operators.Sessionize.sessionSpansUs(
-        t(s, dir, "events"), "user_id", "ts", gapMinutes = 30)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("start_us")
-      spans.withColumn("__prev_end", lag(col("end_us"), 1).over(w))
-        .filter(col("__prev_end").isNotNull)
-        .select(col("user_id"), col("start_us"),
-          expr("(start_us - __prev_end) div 1000").as("gap_ms"))
-    }),
-
-    // ── rolling distinct users via MERGEABLE daily HLL sketches: one
-    // sketch per day, calendar range-frame union over the trailing
-    // week, estimate checked against the exact trailing distinct —
-    // THE way a 100-TB pipeline does rolling distincts (the window
-    // runs over 30 day-grain sketch rows, never the data) ──
-    "q161_rolling_distinct_contract" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(expr("unix_micros(ts) div 86400000000").as("day_idx"),
-          col("user_id"))
-        .filter(col("user_id").isNotNull)
-      val daily = ev.groupBy("day_idx")
-        .agg(hll_sketch_agg(col("user_id"), lit(12)).as("__sk"))
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy("day_idx").rangeBetween(-6, 0)
-      val est = daily.withColumn("__est",
-          hll_sketch_estimate(hll_union_agg(col("__sk"), lit(false)).over(w)))
-        .select(col("day_idx"), round(col("__est")).cast("long").as("__est_l"))
-      val du = ev.distinct().localCheckpoint()
-      val exact = du.as("a")
-        .join(du.select(col("day_idx").as("__d")).distinct().as("b"),
-          col("a.day_idx").between(col("__d") - 6, col("__d")))
-        .groupBy(col("__d").as("day_idx"))
-        .agg(count_distinct(col("user_id")).as("n_exact"))
-      exact.join(est, Seq("day_idx"))
-        .withColumn("ok",
-          abs(col("__est_l") - col("n_exact")) * 20 <= col("n_exact"))
-        .select("day_idx", "n_exact", "ok")
-    }),
-
-    // ── integer linear interpolation between nearest observations
-    // (the other half of q133's LOCF): per user, null measures lerp
-    // between neighboring purchase amounts on the µs axis ──
-    "q162_interpolate" -> ((s, dir) =>
-      graft.operators.Feature.interpolateLinear(
-          t(s, dir, "events").withColumn("__us", unix_micros(col("ts"))),
-          "user_id", Seq(col("__us"), col("event_id")), col("__us"),
-          when(col("event_type") === "purchase",
-            expr("CAST(value * 100 AS BIGINT)")),
-          as = "interp_cents")
-        .select(col("event_id"), col("user_id"), col("interp_cents"))),
-
-    // ── conversion latency: first view → first purchase per user,
-    // exact discrete latency percentiles + convert count ──
-    "q163_conversion_latency" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val firsts = ev
-        .filter(col("event_type").isin("view", "purchase") &&
-          col("user_id").isNotNull)
-        .groupBy("user_id")
-        .agg(
-          min(when(col("event_type") === "view", unix_micros(col("ts"))))
-            .as("__v"),
-          min(when(col("event_type") === "purchase", unix_micros(col("ts"))))
-            .as("__p"))
-        .filter(col("__v").isNotNull && col("__p") > col("__v"))
-        .select(expr("(__p - __v) div 1000").as("lat_ms"))
-      firsts.agg(
-        count(lit(1)).as("n_converts"),
-        expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY lat_ms)")
-          .cast("long").as("p50_ms"),
-        expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY lat_ms)")
-          .cast("long").as("p90_ms"))
-    }),
-
-    // ── clamped running balance — the fold window functions cannot
-    // express (balance = max(0, balance + delta) is non-linear):
-    // per-user ordered fold via aggregate() over the sorted event
-    // list, certified against DuckDB's list_reduce (the q48/q125 fold
-    // parity discipline). Per-key state is the user's OWN events only
-    // (bounded); the fold is a codegen'd higher-order function ──
-    "q164_clamped_balance" -> ((s, dir) => {
-      val delta = expr("""CASE WHEN event_type = 'purchase'
-        THEN CAST(value * 100 AS BIGINT)
-        WHEN event_type = 'error' THEN -CAST(value * 100 AS BIGINT)
-        ELSE 0L END""")
-      t(s, dir, "events")
-        .filter(col("user_id").isNotNull)
-        .select(col("user_id"),
-          struct(unix_micros(col("ts")).as("us"), col("event_id").as("eid"),
-            delta.as("d")).as("__e"))
-        .groupBy("user_id")
-        .agg(collect_list(col("__e")).as("__evs"))
-        .select(col("user_id"),
-          expr("""aggregate(
-            transform(array_sort(__evs), e -> e.d),
-            0L, (acc, d) -> greatest(0L, acc + d))""").as("balance"))
-    }),
-
-    // ── decile lift table: users ranked by spend into 10 equal-count
-    // bins via row_number (total order — ntile's tie split is
-    // engine-dependent), per-decile spend + cumulative share ppm; the
-    // ranking windows run over the user-grain aggregate only ──
-    "q165_decile_lift" -> ((s, dir) => {
-      val spend = t(s, dir, "events")
-        .filter(col("event_type") === "purchase" && col("user_id").isNotNull)
-        .groupBy("user_id")
-        .agg(sum(expr("CAST(value * 100 AS BIGINT)")).as("cents"))
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("cents").desc, col("user_id"))
-      val deciles = spend
-        .withColumn("__rk", row_number().over(w))
-        .withColumn("__n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy()))
-        .withColumn("decile", expr("((__rk - 1) * 10) div __n"))
-        .groupBy("decile")
-        .agg(count(lit(1)).as("n_users"), sum(col("cents")).as("cents"))
-      deciles
-        .withColumn("__tot", sum(col("cents")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy()))
-        .withColumn("cum_share_ppm",
-          expr("(sum(cents) OVER (ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 1000000) div __tot"))
-        .drop("__tot")
-    }),
-
-    // ── exact pro-rata: split each order's total cents across its
-    // (partkey, suppkey) item groups proportional to item revenue,
-    // largest-remainder exact — Σ alloc == order total PER ORDER ──
-    "q160_prorata" -> ((s, dir) => {
-      val items = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
-        .agg(sum(expr("CAST(l_extendedprice * 100 AS BIGINT)")).as("item_cents"))
-      val orders = t(s, dir, "orders").select(col("o_orderkey"),
-        expr("CAST(o_totalprice * 100 AS BIGINT)").as("total_cents"))
-      graft.operators.Sampling.prorataAllocate(
-        items.join(orders, col("l_orderkey") === col("o_orderkey")),
-        "l_orderkey", "item_cents", "total_cents",
-        Seq("l_partkey", "l_suppkey"))
-    }),
-
-    // ── scale-safe equi-depth (the q120 family's 100-TB formulation):
-    // boundaries from exact percentile_disc over the DETERMINISTIC md5
-    // sample — ordered-set buffer bounded at rate·|orders| — counts
-    // over the full table still exact against those boundaries ──
-    "q166_equidepth_sampled" -> ((s, dir) =>
-      graft.operators.Histogram.equiDepthSampled(
-        t(s, dir, "orders"), "o_totalprice", buckets = 8,
-        sampleKey = col("o_orderkey"), rate = 0.2, salt = "eqd-v1")),
-
-    // ── q150's daily bands with NO ordered-set buffer anywhere in the
-    // plan: exact percentile_disc picked from the value histogram's
-    // running weight (rational pick predicate, all-integer) —
-    // IDENTICAL output, same oracle SQL as q150 ──
-    "q167_daily_bands_hist" -> ((s, dir) =>
-      graft.operators.Quantiles.histPercentiles(
-        t(s, dir, "events").select(dayKey(col("ts")).as("day"), col("value")),
-        Seq("day"), expr("CAST(value * 100 AS BIGINT)"),
-        Seq(("p10", 1L, 10L), ("p50", 1L, 2L), ("p90", 9L, 10L)))),
-
-    // ── q143's median+MAD with NO ordered-set buffer: both passes on
-    // the (key, value) histogram — identical output, same oracle ──
-    "q168_mad_hist" -> ((s, dir) =>
-      graft.operators.Quantiles.madRobustHist(t(s, dir, "events"),
-        "event_type", expr("CAST(value * 100 AS BIGINT)"))),
-
-    // ── scale-safe winsorize: clip bounds from the md5-sampled exact
-    // percentiles, comparison-only clip over the full table ──
-    "q169_winsorize_sampled" -> ((s, dir) =>
-      graft.operators.Feature.winsorizeSampled(
-          t(s, dir, "orders"), "o_totalprice", loQ = 0.05, hiQ = 0.95,
-          sampleKey = col("o_orderkey"), rate = 0.2, salt = "win-v1")
-        .select(col("o_orderkey"), col("o_totalprice"), col("clipped"))),
-
-    // ── ANN recall contract on the ADVERSARIAL corpus (round-7 audit
-    // item #7): hub-and-spoke embeddings with skewed cluster sizes
-    // (fixtures/embeddings_clustered.parquet, formula-authored on a
-    // power-of-two value grid so the brute-force truth is bit-exact
-    // cross-engine — tools/gen_clustered_embeddings.py). IVF's seed
-    // sampling is size-proportional, so the dominant hub absorbs
-    // several anchors and its queries' true top-k SPLIT across
-    // inverted lists: nprobe=1 without Lloyd refinement degrades, and
-    // the oracle PINS that degradation alongside the healthy config
-    // (nprobe≥3 + 2 Lloyd iters) — the nlist/nprobe guidance as a
-    // certified contract rather than prose. n_hit provenance: measured
-    // from this query on the fixed fixture (q46 discipline); n_exact
-    // is computed independently by the oracle's own brute-force SQL. ──
-    // ── PRODUCT QUANTIZATION, exact arm: ADC top-k with a codebook
-    // holding every distinct subvector (quantization error zero), so
-    // the ADC score equals the exact inner product — on the dyadic-grid
-    // fixture every product/partial sum is exactly representable, so
-    // the subspace-wise ADC fold is bit-identical to the oracle's
-    // single 64-term fold and the FULL top-5 row set (445 rows)
-    // hash-matches DuckDB brute force. This certifies the
-    // encode→LUT→fold machinery end to end; the lossy production
-    // config is q192's pinned recall contract. ──
-    "q191_pq_adc_topk" -> ((s, _) => {
-      import graft.ext.ProductQuant
-      val emb = s.read.parquet(FixturesDir + "/embeddings_clustered.parquet")
-      val qs = emb.filter(col("vec_id") % 43 === 0 || col("vec_id") >= 1045)
-      // codebook feeds encode AND the ADC LUT build — materialize the
-      // distinct+rank pass once (the q69 rule; round-19 optimization)
-      val cb0 = ProductQuant.exactCodebook(emb, "embedding", m = 8, dim = 64)
-      val cb = cb0.copy(centroids = cb0.centroids.localCheckpoint())
-      ProductQuant.pqTopK(
-        ProductQuant.encode(emb, "vec_id", "embedding", cb),
-        qs, "vec_id", "embedding", cb, k = 5)
-    }),
-
-    // ── PRODUCT QUANTIZATION, lossy arm (the production shape): a
-    // per-subspace Lloyd-trained m=16, k=16 codebook compresses each
-    // 64-dim float vector to 16 code bytes (16×); the search is ADC
-    // SHORTLIST (50) + EXACT RERANK to top-5 — raw-vector I/O is
-    // proportional to the shortlist, the corpus is touched only as
-    // codes. Recall@5 against the exact inner-product truth is the
-    // q46-style pinned contract (n_exact from the oracle's own
-    // brute-force SQL; n_hit deterministic — fixed seeds, sequential
-    // folds — and pinned at the sf0.01 measurement: 48/50, vs 19/50
-    // for raw ADC@5 with the same codes; the rerank is what makes a
-    // lossy code usable). ──
-    "q192_pq_recall" -> ((s, dir) => {
-      import graft.ext.ProductQuant
-      val emb = t(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") % 50 === 0)
-      // exact truth: two consumers (semi-join + n_exact agg); codebook:
-      // two consumers (encode + the ADC LUT build) — each would re-run
-      // its full pipeline per consumer if left lazy (the q69 rule;
-      // round-19 optimization)
-      val exact = ProductQuant.bruteForceTopKDot(emb, qs, "vec_id", "embedding", k = 5)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
-      val cb0 = ProductQuant.trainCodebook(emb, "vec_id", "embedding",
-        m = 16, dim = 64, k = 16, lloydIters = 1)
-      val cb = cb0.copy(centroids = cb0.centroids.localCheckpoint())
-      val approx = ProductQuant.pqRerankTopK(
-        ProductQuant.encode(emb, "vec_id", "embedding", cb),
-        emb, qs, "vec_id", "embedding", cb, shortlist = 50, k = 5)
-      exact.join(approx.select("query_id", "neighbor_id"),
-          Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-        .crossJoin(exact.agg(count(lit(1)).as("n_exact")))
-        .select(lit("pq_m16_k16_rerank50").as("method"), col("n_exact"), col("n_hit"),
-          (col("n_hit") >= col("n_exact") * 0.9).as("recall_ok"))
-    }),
-
-    "q171_ann_recall_clustered" -> ((s, _) => {
-      val emb = s.read.parquet(FixturesDir + "/embeddings_clustered.parquet")
-      // queries: a spread of hub spokes plus EVERY bridge vector (ids
-      // ≥ 1045) — the boundary cases are the whole point of the fixture
-      val qs = emb.filter(col("vec_id") % 43 === 0 || col("vec_id") >= 1045)
-      // four consumers (the q46 rule; round-19 optimization)
-      val exact = SimSearch.bruteForceTopK(emb, qs, "vec_id", "embedding", k = 5)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
-      def contract(method: String, approx: DataFrame): DataFrame =
-        exact.join(approx.select("query_id", "neighbor_id"),
-            Seq("query_id", "neighbor_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hit"))
-          .crossJoin(exact.agg(count(lit(1)).as("n_exact")))
-          .select(lit(method).as("method"), col("n_exact"), col("n_hit"),
-            (col("n_hit") >= col("n_exact") * 0.9).as("recall_ok"))
-      contract("ivf_probe3_lloyd2",
-          SimSearch.ivfTopK(emb, qs, "vec_id", "embedding", k = 5,
-            nlist = 8, nprobe = 3, lloydIters = 2))
-        .unionByName(contract("ivf_probe1_raw",
-          SimSearch.ivfTopK(emb, qs, "vec_id", "embedding", k = 5,
-            nlist = 8, nprobe = 1, lloydIters = 0)))
-    }),
-
-    // ── REAL-format multimodal decode: RIFF/WAVE PCM chunk-walk parser
-    // over a binaryFile scan (q31's fixture-oracle discipline — expected
-    // rows authored from the sample generator formula by
-    // tools/gen_wav_fixtures.py, provenance-checked against the bytes).
-    // The fixture dir deliberately contains a float-format and a
-    // truncated file: the decoder must SKIP both, so the row set itself
-    // certifies the hostile-input discipline. Integer-exact features
-    // (sum|amp|, peak|amp|) so the oracle check is rows+schema+hash. ──
-    "q170_wav_decode" -> ((s, _) => {
-      import graft.ext.Multimodal
-      Multimodal.decodeWav(
-          Multimodal.asMediaFiles(Multimodal.readMedia(s, FixturesDir + "/audio")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("sampleRate").as("sample_rate"), col("channels"),
-          col("bitsPerSample").as("bits"), col("nFrames").as("n_frames"),
-          col("sumAbs").as("sum_abs"), col("peakAbs").as("peak_abs"))
-    }),
-
-    // ── repetition-burden report: q173's spans composed with per-doc
-    // token counts into the per-source operational rollup (which
-    // sources ship boilerplate, and how much of their token mass is
-    // repeated). covered_ppm is all-integer (·1e6 div). Docs without
-    // spans count with 0 covered tokens via the left join. ──
-    "q176_repetition_burden" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val perDoc = Dedup.repeatedSpans(docs, "doc_id", "text", n = 8, minDf = 2)
-        .groupBy("doc_id")
-        .agg(sum(col("span_end") - col("span_start") + 1).as("__cov"))
-      docs.select(col("doc_id"), col("source"),
-          size(TextAnalysis.tokens(col("text"))).cast("long").as("__ntok"))
-        .join(perDoc, Seq("doc_id"), "left")
-        .na.fill(0L, Seq("__cov"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("__cov") > 0, 1L).otherwise(0L)).as("docs_with_spans"),
-          sum(col("__ntok")).as("total_tokens"),
-          sum(col("__cov")).as("covered_tokens"))
-        .withColumn("covered_ppm",
-          expr("covered_tokens * 1000000 div total_tokens"))
-    }),
-
-    // ── embedding centroid drift between corpus versions (the
-    // monitoring report for an embedding pipeline): per-label mean
-    // vectors of version A (vec_id%2=0) vs B (%2=1), compared WITHOUT
-    // any floating-point accumulation — each component quantizes to
-    // round(x·2^20) (exact: float mantissa ≤ 24 bits, 2^20 shifts the
-    // exponent; the q63 round() parity), then the cross-multiplied L1
-    // distance Σ_p |sa·nb − sb·na| is pure integer arithmetic, so the
-    // oracle check is exact despite double means being fold-order
-    // nondeterministic. ONE corpus pass, one (label, pos)-grain
-    // shuffle (FILTER-style conditional aggregates). ──
-    "q177_centroid_drift" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").filter(col("label").isNotNull)
-      emb.select((col("vec_id") % 2).as("__ver"), col("label"),
-          posexplode(col("embedding")).as(Seq("__p0", "__x")))
-        .select(col("__ver"), col("label"), (col("__p0") + 1).as("p"),
-          round(col("__x").cast("double") * lit(1048576.0)).cast("long").as("__qx"))
-        .groupBy("label", "p")
-        .agg(sum(when(col("__ver") === 0, col("__qx"))).as("__sa"),
-          count(when(col("__ver") === 0, 1)).as("__na"),
-          sum(when(col("__ver") === 1, col("__qx"))).as("__sb"),
-          count(when(col("__ver") === 1, 1)).as("__nb"))
-        .filter(col("__na") > 0 && col("__nb") > 0)
-        .groupBy("label")
-        .agg(count(lit(1)).as("n_pos"),
-          sum(abs(col("__sa") * col("__nb") - col("__sb") * col("__na")))
-            .as("l1_cross"))
-    }),
-
-    // ── REAL image decode (q170's discipline on the image modality):
-    // uncompressed BMP — bottom-up AND top-down row order, 4-byte row
-    // stride padding, 24/32bpp. The adversarial files (RLE-compressed,
-    // truncated pixel array) must be ABSENT from the result; the
-    // orientation-sensitive top_row_sum_r feature fails if storage row
-    // order is mishandled. Oracle = the formula-authored expected
-    // parquet (tools/gen_bmp_fixtures.py). ──
-    "q178_bmp_decode" -> ((s, _) => {
-      import graft.ext.Multimodal
-      Multimodal.decodeBmp(
-          Multimodal.asMediaFiles(Multimodal.readMedia(s, FixturesDir + "/images")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("width"), col("height"), col("bits"), col("nPx").as("n_px"),
-          col("sumR").as("sum_r"), col("sumG").as("sum_g"),
-          col("sumB").as("sum_b"),
-          col("peakLumaMilli").as("peak_luma_milli"),
-          col("topRowSumR").as("top_row_sum_r"))
-    }),
-
-    // ── image COMPOSITION (q172's shape on the image modality):
-    // decoded BMP features broadcast-joined to a camera dim,
-    // per-(camera, day) rollup. The dim lists the RLE and truncated
-    // files too — they never decode, so the inner join drops them
-    // (cam-b's day-3 row must not exist): the decoder's hostile-input
-    // discipline composes downstream. brightness_ppm is all-integer:
-    // Σ(299r+587g+114b) · 1e6 div (Σpx · 255000). ──
-    "q179_image_report" -> ((s, _) => {
-      import graft.ext.Multimodal
-      val feats = Multimodal.decodeBmp(
-          Multimodal.asMediaFiles(Multimodal.readMedia(s, FixturesDir + "/images")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("nPx"), col("sumR"), col("sumG"), col("sumB"),
-          col("peakLumaMilli"))
-      val cams = s.read.json(FixturesDir + "/image_cameras.json")
-      feats.join(broadcast(cams), Seq("name"))
-        .groupBy(col("camera"), col("capturedDate").as("captured_date"))
-        .agg(count(lit(1)).as("n_images"),
-          sum(col("nPx")).as("total_px"),
-          expr("sum(sumR*299 + sumG*587 + sumB*114) * 1000000 div (sum(nPx) * 255000)")
-            .as("brightness_ppm"),
-          max(col("peakLumaMilli")).as("peak_luma_milli"))
-    }),
-
-    // ── CDC TIME TRAVEL (the missing arc of the q99 lifecycle): the
-    // manifest protocol keeps superseded versions readable, so "the
-    // table as of version N" is a committed-manifest lookup — here the
-    // first snapshot (stale-reversed wave 1) is diffed against the
-    // final one via the q103 fingerprint diff. `added` rows are keys
-    // whose every event sits in the older half; `changed` rows are
-    // keys whose true latest event the out-of-order guard correctly
-    // accepted from the stale wave; everything else must be
-    // `unchanged`. Oracle rebuilds both snapshots from the raw files
-    // with the same filename split. ──
-    "q180_cdc_time_travel" -> ((s, _) =>
-      graft.streaming.StreamingReports.cdcTimeTravelReplay(
-        s, FixturesDir + "/events_json")),
-
-    // ── REAL video-container decode (the triad's third leg after
-    // q170 WAV and q178 BMP): ISO-BMFF box-tree metadata — largesize
-    // mdat, size==0, mvhd/tkhd v0 AND v1, 16.16 track dims; the
-    // truncated-moov and non-BMFF files must be ABSENT. Codec payloads
-    // are never touched (mdat skipped) — the O(box-tree) metadata scan
-    // a 100-TB video corpus profiling pass needs. Oracle = the
-    // spec-authored expected parquet (tools/gen_mp4_fixtures.py). ──
-    "q184_mp4_meta" -> ((s, _) => {
-      import graft.ext.Multimodal
-      Multimodal.decodeMp4(
-          Multimodal.asMediaFiles(Multimodal.readMedia(s, FixturesDir + "/video")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("brand"), col("timescale").cast("int").as("timescale"),
-          col("durationUnits").as("duration_units"),
-          col("durationMs").as("duration_ms"),
-          col("nTracks").as("n_tracks"), col("width"), col("height"))
-    }),
-
-    // ── row-level FILE LINEAGE from the scan's hidden `_metadata`
-    // column (zero extra I/O — the name rides the split): per-resource
-    // provenance over the multi-file landing zone, null keys included
-    // (lineage must cover rows that would fail FK checks). ──
-    "q181_file_lineage" -> ((s, _) =>
-      Sources.eventsWithLineage(s, FixturesDir + "/events_json")
-        .groupBy(coalesce(col("resourceId"), lit("__none__")).as("resource_id"))
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("source_file")).as("n_files"),
-          min(col("source_file")).as("first_file"),
-          max(col("source_file")).as("last_file"))),
-
-    // ── dead-letter triage: malformed JSON lines are ROUTED (kind =
-    // 'corrupt', raw text preserved and fingerprinted), never dropped
-    // and never fatal; a JSON-null field stays a VALID row (d04). The
-    // oracle re-classifies the same lines with json_valid and must
-    // agree line-for-line, fingerprints included. ──
-    "q182_quarantine" -> ((s, _) =>
-      graft.sources.Quarantine.triage(s, FixturesDir + "/events_jsonl_dirty")),
-
-    // ── the ROUND-10 CAPSTONE: a corpus REFRESH end-to-end from this
-    // round's operators. v2 derives as in q103 (drop %11, edit %7,
-    // add re-keyed %13); Diff.diff CLASSIFIES the batch (added ∪
-    // changed keys — the pipeline decides what to re-cluster from the
-    // diff, not from out-of-band knowledge); incrementalClusters folds
-    // exactly that batch into the unchanged docs' assignment;
-    // canonicalPerCluster keeps the best member (argmax fresh
-    // length(text) — the stored n_chars is STALE for edited docs);
-    // per-source rollup of docs/clusters/canonicals/kept chars. One
-    // oracle certifies the whole composition: full q55-style CC over
-    // the v2 CTE + argmax canonical + rollup. ──
-    // ── STREAMING CRAWL INGESTION capstone: quarantine + persisted
-    // minhash-index probe + batch self-dedup + exactly-once manifest
-    // commits, composed into the production crawl pipeline. Three
-    // waves stream through foreachBatch: wave 0 re-crawls corpus docs
-    // (dup_index), introduces a novel family with in-batch copies
-    // (ingested + dup_batch) and truncated-JSON lines (quarantined);
-    // wave 1 delivers truncated near-dups of corpus docs (the
-    // LSH-candidate + exact-verify arc); wave 2 REDELIVERS wave 0's
-    // novel texts under new ids — flagged dup_index only because wave
-    // 0's intake was appended to the index (ingestion order is
-    // load-bearing). The oracle re-derives every decision from
-    // `documents` with exact all-pairs Jaccard, unrolled wave by wave:
-    // wave k's index = corpus ∪ waves <k's ingested sets. ──
-    "q190_crawl_ingest_stream" -> ((s, dir) =>
-      graft.streaming.CrawlIngest.crawlIngestReplay(s, dir)),
-
-    "q189_refresh_capstone" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text", "lang", "source")
-      val v2 = docs.filter(col("doc_id") % 11 =!= 0)
-        .withColumn("text",
-          when(col("doc_id") % 7 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")))
-        .unionByName(dupSliceArm(docs))
-        .localCheckpoint() // feeds diff, old/batch splits, scoring, rollup
-      val d = graft.operators.Diff.diff(docs, v2, "doc_id", Seq("text"))
-      val batchIds = d.filter(col("status").isin("added", "changed"))
-        .select("doc_id").localCheckpoint()
-      // batchIds is the bounded refresh delta — broadcast the splits
-      // (round-20, §3.1)
-      val old = v2.join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-      val batch = v2.join(broadcast(batchIds), Seq("doc_id"), "left_semi")
-      // ONE scan-side minhash pass over the old corpus: the index is
-      // checkpointed and BOTH products (old-old pairs, batch probe)
-      // derive from it — at 100 TB the shingle/hash scan dominates, so
-      // not running it twice is the composition win (the round-20
-      // materialized builder shingles once for BOTH frames)
-      val idx = Dedup.buildMinhashIndexMaterialized(old, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32)
-      val oldAssign = graft.ext.ConnectedComponents.dedupClusters(
-          old, "doc_id", Dedup.nearDupPairsFromIndex(idx, threshold = 0.8),
-          "doc_a", "doc_b")
-        .localCheckpoint()
-      // ONE batch-side minhash pass too (round-19 optimization; the
-      // round-20 materialized builder shingles once for BOTH frames):
-      // the index probe and the batch-internal pairs both derive from
-      // one checkpointed batch index (nearDupPairsFromIndex ==
-      // nearDupPairsMinhash is ExtSpec-certified)
-      val bIdx = Dedup.buildMinhashIndexMaterialized(batch, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32)
-      // the batch side is the bounded fold input (the incremental-batch
-      // contract) — broadcast it so neither probe exchanges the corpus
-      // index (round-20, guide §3.1)
-      val cross = Dedup.nearDupPairsBetweenIndexes(bIdx, idx, threshold = 0.8,
-          broadcastBatch = true)
-        .localCheckpoint()
-      val bp = Dedup.nearDupPairsFromIndex(bIdx, threshold = 0.8,
-        broadcastIndex = true)
-      val assign = graft.ext.ConnectedComponents.incrementalClusters(
-          oldAssign, "doc_id", batchIds,
-          cross, "new_id", "corpus_id", bp, "doc_a", "doc_b")
-        .localCheckpoint() // feeds canonical AND the rollup join
-      val scored = v2.select(col("doc_id"), col("source"),
-        length(col("text")).cast("long").as("len"))
-      val canon = graft.ext.ConnectedComponents.canonicalPerCluster(
-        assign, "doc_id", scored.select(col("doc_id"), col("len")), "len")
-      assign.join(scored, Seq("doc_id"))
-        .join(canon.select(col("canon_id").as("doc_id"), lit(true).as("__c")),
-          Seq("doc_id"), "left")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("cluster")).as("n_clusters"),
-          sum(when(col("__c"), 1L).otherwise(0L)).as("n_canon"),
-          sum(when(col("__c"), col("len"))).as("kept_chars"))
-    }),
-
-    // ── HARD-NEGATIVE mining (contrastive training data): per query,
-    // top-3 most-similar vectors with a DIFFERENT label — the label
-    // filter runs BEFORE ranking (filtering a label-blind top-k after
-    // ranking under-fills k exactly when neighbors share the query's
-    // label); null labels excluded both sides. Complements q102's
-    // random negatives with the near-miss set. ──
-    "q188_hard_negatives" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      SimSearch.hardNegatives(emb, emb.filter(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", "label", k = 3)
-    }),
-
-    // ── PQ index lifecycle (q187's discipline on the compressed side):
-    // build the stored index from the 4/5 corpus (trained codebook +
-    // codes), fold the 1/5 batch in via appendToPqIndex — encoded
-    // against the FROZEN stored codebook, codes/ appended, nothing
-    // rewritten, no retraining (the production arc: retraining would
-    // invalidate every stored code) — then probe with an EXHAUSTIVE
-    // shortlist: the exact rerank decides alone, so the result must
-    // equal brute force over the whole corpus, certifying the
-    // storage round-trip + append plumbing row-for-row. Code QUALITY
-    // is q192's pinned contract; this query certifies the lifecycle. ──
-    "q193_pq_stored_append" -> ((s, dir) => {
-      import graft.ext.ProductQuant
-      val emb = t(s, dir, "embeddings")
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/embeddings.parquet")
-      val idxPath = graft.operators.IndexStore.ensure(
-        s"${System.getProperty("java.io.tmpdir")}/graft_pq_idx_${fp}_m16k16") { staging =>
-        val base = emb.filter(col("vec_id") % 5 =!= 0)
-        val cb = ProductQuant.trainCodebook(base, "vec_id", "embedding",
-          m = 16, dim = 64, k = 16, lloydIters = 1)
-        ProductQuant.writePqIndex(cb,
-          ProductQuant.encode(base, "vec_id", "embedding", cb), staging)
-        ProductQuant.appendToPqIndex(
-          emb.filter(col("vec_id") % 5 === 0), staging, "vec_id", "embedding")
-      }
-      val (cb, codes) = ProductQuant.readPqIndex(s, idxPath)
-      ProductQuant.pqRerankTopK(codes, emb,
-        emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
-        cb, shortlist = 1 << 20, k = 5)
-    }),
-
-    // ── IVF-PQ, exact arm (IVFADC — Jégou et al. TPAMI 2011 §V, the
-    // FAISS `IVF8,PQ8` shape): coarse inverted lists + PQ on the
-    // RESIDUALS, probed exhaustively (nprobe = nlist) with the exact
-    // residual codebook. The score decomposes dot(q,v) = dot(q,c_list)
-    // + dot(q, v−c_list); with zero quantization error and every
-    // value on the fixture's /64 dyadic grid (residuals stay on the
-    // grid — float subtraction of grid points is exact; products and
-    // all partial sums exactly representable), the decomposed sum
-    // equals the oracle's single 64-term fold BIT FOR BIT — full
-    // row-level certification of the coarse-assign→residual→encode→
-    // base+LUT fold machinery, q191's discipline one level up. ──
-    "q194_ivfpq_exact" -> ((s, _) => {
-      import graft.ext.ProductQuant
-      val emb = s.read.parquet(FixturesDir + "/embeddings_clustered.parquet")
-      val qs = emb.filter(col("vec_id") % 43 === 0 || col("vec_id") >= 1045)
-      val idx = ProductQuant.buildIvfPq(emb, "vec_id", "embedding",
-        nlist = 8, m = 8, dim = 64, pqK = 0, coarseLloyd = 0)
-      ProductQuant.ivfPqTopK(idx, qs, "vec_id", "embedding", k = 5, nprobe = 8)
-    }),
-
-    // ── IVF-PQ, lossy arm (the production config) under the q171
-    // two-row contract shape: ONE composite index (coarse nlist=8
-    // Lloyd-refined lists, residual PQ m=16/k=16 — 16 B/vector),
-    // probed twice. Healthy row: nprobe=6 IVFADC shortlist(100) +
-    // exact rerank → 46/50 of the exact top-5, recall_ok at the 0.9
-    // band. Degraded row: nprobe=2 → 27/50 — the same structural
-    // lesson as q171's probe1 row, now with compression in the loop:
-    // when the probe misses the true neighbor's list, no shortlist
-    // width or rerank can recover it (27 stable from R=50 to 100).
-    // The probe fractions look high (6/8) because the sf0.01 corpus
-    // is 500 NEAR-RANDOM 64-dim vectors — no cluster structure for
-    // the coarse quantizer to exploit; at real scale nlist ≈ √n and
-    // the probed fraction shrinks with corpus size while shortlist
-    // stays CONSTANT (the recall knob, not a corpus fraction). n_hit
-    // deterministic — fixed seeds, sequential folds — pinned at the
-    // sf0.01 measurement per the q46 discipline. ──
-    "q195_ivfpq_recall" -> ((s, dir) => {
-      import graft.ext.ProductQuant
-      val emb = t(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") % 50 === 0)
-      // four consumers across the two contract rows (the q46 rule;
-      // round-19 optimization); idx is checkpointed inside buildIvfPq
-      val exact = ProductQuant.bruteForceTopKDot(emb, qs, "vec_id", "embedding", k = 5)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
-      val idx = ProductQuant.buildIvfPq(emb, "vec_id", "embedding",
-        nlist = 8, m = 16, dim = 64, pqK = 16, coarseLloyd = 1, pqLloyd = 1)
-      def contract(method: String, nprobe: Int): DataFrame = {
-        val approx = ProductQuant.ivfPqRerankTopK(idx, emb, qs, "vec_id", "embedding",
-          shortlist = 100, k = 5, nprobe = nprobe)
-        exact.join(approx.select("query_id", "neighbor_id"),
-            Seq("query_id", "neighbor_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hit"))
-          .crossJoin(exact.agg(count(lit(1)).as("n_exact")))
-          .select(lit(method).as("method"), col("n_exact"), col("n_hit"),
-            (col("n_hit") >= col("n_exact") * 0.9).as("recall_ok"))
-      }
-      contract("ivfpq_n8_m16k16_p6_rerank100", nprobe = 6)
-        .unionByName(contract("ivfpq_n8_m16k16_p2_rerank100", nprobe = 2))
-    }),
-
-    // ── IVF index APPEND (q89's discipline on the ANN side): build
-    // the stored index from the 4/5 corpus, fold the 1/5 batch in via
-    // appendToIvfIndex (argmax against STORED anchors — one broadcast
-    // + one keyed aggregate over the batch; lists/ appended, never
-    // rewritten), then probe EXHAUSTIVELY: result must equal brute
-    // force over the WHOLE corpus, i.e. the appended slice is
-    // indistinguishable from a from-scratch build. ──
-    "q187_ivf_append" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/embeddings.parquet")
-      val idxPath = graft.operators.IndexStore.ensure(
-        s"${System.getProperty("java.io.tmpdir")}/graft_ivf_idxapp_${fp}_n16a5") { staging =>
-        SimSearch.writeIvfIndex(
-          SimSearch.buildIvfIndex(emb.filter(col("vec_id") % 5 =!= 0),
-            "vec_id", "embedding", nlist = 16), staging)
-        SimSearch.appendToIvfIndex(
-          emb.filter(col("vec_id") % 5 === 0), staging, "vec_id", "embedding")
-      }
-      SimSearch.ivfTopKAgainstIndex(
-        SimSearch.readIvfIndex(s, idxPath),
-        emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
-        k = 5, nprobe = 16)
-    }),
-
-    // ── INCREMENTAL cluster maintenance (the q89/q174 batch-fold
-    // discipline on the CLUSTERING arc): old assignment (4/5 corpus) +
-    // index-probed cross pairs + batch-internal pairs folded by
-    // ConnectedComponents.incrementalClusters — O(batch + touched
-    // clusters), never O(corpus) — and certified against q55's OWN
-    // full-recompute oracle verbatim. oldAssign/cross feed multiple
-    // consumers → localCheckpoint (the q69 lesson). ──
-    "q186_inc_clusters" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val old = docs.filter(col("doc_id") % 5 =!= 0)
-      val batch = docs.filter(col("doc_id") % 5 === 0)
-      // one scan-side minhash pass: old-old pairs AND the batch probe
-      // both derive from the checkpointed index (the q189 discipline;
-      // the round-20 materialized builder shingles once for BOTH frames)
-      val idx = Dedup.buildMinhashIndexMaterialized(old, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32)
-      val oldAssign = graft.ext.ConnectedComponents
-        .dedupClusters(old, "doc_id",
-          Dedup.nearDupPairsFromIndex(idx, threshold = 0.8), "doc_a", "doc_b")
-        .localCheckpoint()
-      // ONE batch-side minhash pass (the q189 rule)
-      val bIdx = Dedup.buildMinhashIndexMaterialized(batch, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32)
-      // bounded-batch probes broadcast the batch side (round-20, §3.1 —
-      // the q189 note above)
-      val cross = Dedup.nearDupPairsBetweenIndexes(bIdx, idx, threshold = 0.8,
-          broadcastBatch = true)
-        .localCheckpoint()
-      val bp = Dedup.nearDupPairsFromIndex(bIdx, threshold = 0.8,
-        broadcastIndex = true)
-      graft.ext.ConnectedComponents.incrementalClusters(
-        oldAssign, "doc_id", batch.select("doc_id"),
-        cross, "new_id", "corpus_id", bp, "doc_a", "doc_b")
-    }),
-
-    // ── STREAMING dead-letter triage: q182's classification on a LIVE
-    // ingest (readStream.text → triageLines) — a pure per-row map, so
-    // two delivery waves must produce the identical line-for-line
-    // result; certified against q182's own batch oracle. ──
-    "q185_quarantine_stream" -> ((s, _) =>
-      graft.streaming.StreamingReports.quarantineStreamReplay(
-        s, FixturesDir + "/events_jsonl_dirty")),
-
-    // ── SCHEMA EVOLUTION read: two corpus dumps written with different
-    // schemas (v2 adds `quality`), read as ONE partitioned tree with
-    // mergeSchema — old rows get typed nulls, every row carries its
-    // dump id from the directory name, no data rewrite. Dump content
-    // derives deterministically from `documents`, so the oracle
-    // rebuilds both dumps as CTEs and must match the rollup exactly. ──
-    "q183_schema_evolution" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/documents.parquet")
-      val root = graft.operators.IndexStore.ensure(
-        s"${System.getProperty("java.io.tmpdir")}/graft_dumps_$fp",
-        marker = "_params") { staging => // _-prefixed: invisible to the scan
-        docs.filter(col("doc_id") % 3 === 0)
-          .select(col("doc_id"), col("n_chars"))
-          .write.parquet(s"$staging/dump=v1")
-        docs.filter(col("doc_id") % 3 === 1)
-          .select(col("doc_id"), col("n_chars"),
-            (col("n_chars") % 100).cast("int").as("quality"))
-          .write.parquet(s"$staging/dump=v2")
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(staging, "_params"),
-          "dumps=v1,v2 split=doc_id%3 quality=n_chars%100")
-      }
-      graft.sources.Evolving.readDumps(s, root)
-        .groupBy("dump")
-        .agg(count(lit(1)).as("n_docs"),
-          count(col("quality")).as("n_quality"),
-          sum(col("quality")).cast("bigint").as("sum_quality"),
-          sum(col("n_chars")).cast("bigint").as("sum_chars"))
-    }),
-
-    // ── IVF index DELETE path (q174's discipline on the ANN side):
-    // build the stored index, tombstone the vec_id%10==7 slice
-    // (O(|deleted|) id append; lists/ never rewritten, anchors keep
-    // their geometry), probe EXHAUSTIVELY (nprobe = nlist) — the
-    // result must equal brute force over corpus MINUS deleted,
-    // independent of centroid positions (the q88/q42 exhaustive-mode
-    // truth), which makes the delete semantics oracle-exact. ──
-    "q175_ivf_delete" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/embeddings.parquet")
-      val idxPath = graft.operators.IndexStore.ensure(
-        s"${System.getProperty("java.io.tmpdir")}/graft_ivf_idxdel_${fp}_n16d1") { staging =>
-        SimSearch.writeIvfIndex(
-          SimSearch.buildIvfIndex(emb, "vec_id", "embedding", nlist = 16), staging)
-        SimSearch.deleteFromIvfIndex(
-          emb.filter(col("vec_id") % 10 === 7).select("vec_id"),
-          staging, "vec_id")
-      }
-      SimSearch.ivfTopKAgainstIndex(
-        SimSearch.readIvfIndex(s, idxPath),
-        emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
-        k = 5, nprobe = 16)
-    }),
-
-    // ── index DELETE path under the oracle (q89's inverse): build the
-    // stored index from the 4/5 corpus, tombstone the doc_id%10==9
-    // slice (an O(|deleted|) parquet append — bands/sets never
-    // rewritten), then probe with the batch. Result must equal brute
-    // force against corpus MINUS deleted — a tombstoned doc can never
-    // match again, and nothing else shifts. Staged commit like q89;
-    // content-keyed with a delete-generation suffix so the cached
-    // artifact can't be confused with q89's. ──
-    "q174_idx_delete" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val fp = graft.operators.IndexStore.fingerprint(s"$dir/documents.parquet")
-      val idxPath = graft.operators.IndexStore.ensure(
-        s"${System.getProperty("java.io.tmpdir")}/graft_mh_idxdel_${fp}_k3h128b32d1") { staging =>
-        Dedup.writeMinhashIndex(
-          Dedup.buildMinhashIndex(
-            docs.filter(col("doc_id") % 5 =!= 0),
-            "doc_id", "text", shingleK = 3, numHashes = 128, bands = 32),
-          staging)
-        Dedup.deleteFromMinhashIndex(
-          docs.filter(col("doc_id") % 10 === 9).select("doc_id"),
-          staging, "doc_id")
-      }
-      Dedup.nearDupPairsMinhashAgainstIndex(
-        docs.filter(col("doc_id") % 5 === 0), Dedup.readMinhashIndex(s, idxPath),
-        "doc_id", "text", threshold = 0.8)
-    }),
-
-    // ── exact repeated-SUBSTRING spans (Lee et al. arXiv:2107.06499,
-    // n-gram fingerprint form): token positions whose 8-token window
-    // appears in ≥2 distinct docs, merged into maximal per-doc spans —
-    // the boilerplate/quote repetition document-level dedup can't see.
-    // One explode + an md5-keyed df aggregate + a semi join; the span
-    // merge is the q108 islands machinery on token coordinates. ──
-    "q173_repeated_spans" -> ((s, dir) =>
-      Dedup.repeatedSpans(t(s, dir, "documents"), "doc_id", "text",
-        n = 8, minDf = 2)),
-
-    // ── multimodal COMPOSITION (round-8 advice #5): decoded audio
-    // features flow through the relational surface — broadcast join to a
-    // speaker dim, per-(speaker, day) aggregate; the platform_usage
-    // shape over audio. The dim deliberately lists the float-format and
-    // truncated files too: they never decode, so the inner join drops
-    // them — certifying that the decoder's hostile-input discipline
-    // COMPOSES downstream (bob's day-3 row must not exist). Duration is
-    // integer math (frames·1000 div rate) so the oracle check stays
-    // rows+schema+hash. Oracle side joins the same dim to the
-    // formula-authored audio_expected.parquet truth. ──
-    "q172_audio_report" -> ((s, _) => {
-      import graft.ext.Multimodal
-      val feats = Multimodal.decodeWav(
-          Multimodal.asMediaFiles(Multimodal.readMedia(s, FixturesDir + "/audio")))
-        .toDF()
-        .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
-          col("sampleRate"), col("nFrames"), col("sumAbs"), col("peakAbs"))
-      val speakers = s.read.json(FixturesDir + "/audio_speakers.json")
-      feats.join(broadcast(speakers), Seq("name"))
-        .groupBy(col("speaker"), col("recordedDate").as("recorded_date"))
-        .agg(count(lit(1)).as("n_clips"),
-          sum(col("nFrames")).as("total_frames"),
-          sum(expr("nFrames * 1000 div sampleRate")).as("total_ms"),
-          max(col("peakAbs")).as("peak_abs"),
-          sum(col("sumAbs")).as("sum_abs_total"))
-    })
-  )
-
-  /** Reference-domain fixtures (FIXTURES.md §A), authored in-repo so the
-    * DuckDB oracle can read the identical files. Resolved against the
-    * working directory, which is the checkout root under sbt's forked
-    * `run`/`test` and under perfbench; the oracle SQL interpolates it.
-    */
-  val FixturesDir: String =
-    java.nio.file.Paths.get("fixtures").toAbsolutePath.toString
-
-  /** The round-14 multilingual corpus (tools/gen_multilingual.py):
-    * 30 docs over zh/ja/ru/el/ar/hi/ko/th/de/fr/tr/en + mixed-script
-    * spam + empty/whitespace arms. Explicit schema — no inference
-    * scan, doc_id pinned LONG to match the oracle's BIGINT.
-    */
-  private def mlDocs(s: SparkSession): DataFrame =
-    s.read.schema("doc_id LONG, lang STRING, text STRING")
-      .json(s"$FixturesDir/multilingual.jsonl")
-
-  /** q295/q303 shared five-arm NFC fixture over the documents ids:
-    * precomposed vs decomposed é pairs (same DIV-5 group), OHM/
-    * ANGSTROM singletons vs canonical Ω/Å, conjoining-jamo Hangul.
-    */
-  private def nfcFixture(docs: DataFrame): DataFrame = {
-    val id = col("doc_id")
-    val a = id % 5
-    val g = expr("CAST(doc_id DIV 5 AS BIGINT)").cast("string")
-    // \uXXXX escapes, deliberately: arms 2/3 are byte-DIFFERENT but
-    // visually identical (OHM/ANGSTROM vs their canonical forms), and
-    // an NFC-normalizing editor would silently collapse raw literals
-    // (review finding)
-    val acute = lit("\u0301")
-    val txt =
-      when(a === 0, concat(lit("caf\u00e9 r\u00e9sum\u00e9 "), g))
-        .when(a === 1, concat(lit("cafe"), acute, lit(" re"), acute,
-          lit("sume"), acute, lit(" "), g))
-        .when(a === 2, concat(lit("\u2126ohm \u212bring "), g))
-        .when(a === 3, concat(lit("\u03a9ohm \u00c5ring "), g))
-        .otherwise(concat(lit("\u1112\u1161\u11ab\uae00 "), g))
-    docs.select(id).repartition(32).select(id, txt.as("text"))
-  }
-
-  /** The exploded (doc_id, lang, tok) frame — one tokenization, with
-    * multiplicity — that the q296/q301 stopword machinery consumes.
-    */
-  private def mlTokens(ml: DataFrame): DataFrame =
-    ml.select(col("doc_id"), col("lang"),
-      explode(graft.ext.TextAnalysis.tokens(col("text"))).as("tok"))
-
-  /** q296/q301 SHARED stopword discovery (extracted per review — a
-    * q296 threshold retune must reach q301's calibration or the
-    * "loop closed" claim silently breaks): distinct-per-doc tokens →
-    * per-(lang, tok) document frequency, recurring only (df >= 2),
-    * top-5 per language by the TOTAL (df DESC, tok ASC) order.
-    */
-  private val StopMinDf = 2
-  private val StopTopK = 5
-
-  /** q306/q308 SHARED inflate cap (bytes of decoded payload): the
-    * decompression-bomb guard, sized so the sf0.01 corpus (byte
-    * lengths 48-553) populates BOTH routes of the cap rule. The
-    * oracle mirrors it via strlen(text) (DuckDB strlen = UTF-8
-    * octets, the same unit the inflate loop counts).
-    */
-  private val InflateCapBytes = 400
-
-  private def discoveredStopwords(tokAll: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("lang")
-      .orderBy(col("df").desc, col("tok").asc)
-    tokAll.select("lang", "doc_id", "tok").distinct()
-      .groupBy("lang", "tok")
-      .agg(count(lit(1)).cast("long").as("df"))
-      .filter(col("df") >= StopMinDf)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= StopTopK)
-  }
-
-  /** Oracle fragments for the discovery (same constants): `ta` is
-    * the one-tokenization exploded frame; `ex`/`f` the distinct-df
-    * chain; `disc` the top-K per-language list.
-    */
-  private def duckMlTokensCte: String =
-    s"ta AS (SELECT doc_id, lang, unnest(${duckUToks("text")}) AS tok " +
-      s"FROM $MlJson)"
-  private def duckStopFreqCtes: String =
-    "ex AS (SELECT DISTINCT lang, doc_id, tok FROM ta),\n" +
-      "f AS (SELECT lang, tok, CAST(count(*) AS BIGINT) AS df " +
-      "FROM ex GROUP BY 1, 2)"
-  private def duckStopDiscCte: String =
-    s"disc AS (SELECT lang, tok FROM (SELECT lang, tok, " +
-      s"row_number() OVER (PARTITION BY lang ORDER BY df DESC, tok) " +
-      s"AS r FROM f WHERE df >= $StopMinDf) WHERE r <= $StopTopK)"
-
-  /** q288/q294 shared projection: the Unicode-tokenizer contract
-    * report (counts, ascii-run contrast, fingerprint, first/last).
-    */
-  private def uTokensReport(docs: DataFrame): DataFrame = {
-    import graft.ext.TextAnalysis
-    docs
-      .withColumn("__tk", TextAnalysis.tokens(col("text")))
-      .select(col("doc_id"), col("lang"),
-        size(col("__tk")).cast("long").as("n_tok"),
-        size(regexp_extract_all(coalesce(col("text"), lit("")),
-          lit("[A-Za-z0-9]+"), lit(0))).cast("long").as("n_ascii_runs"),
-        TextAnalysis.fingerprint(col("__tk")).as("fp"),
-        try_element_at(col("__tk"), lit(1)).as("first_tok"),
-        try_element_at(col("__tk"), lit(-1)).as("last_tok"))
-  }
-
-  private val MlJson =
-    s"read_json_auto('$FixturesDir/multilingual.jsonl')"
-
-  // ── DuckDB mirrors of the round-14 Unicode tokenizer, GENERATED
-  // from the same TextAnalysis constants (CjkCharClass, the lower
-  // fold maps) so the two engines cannot drift apart. All single-line
-  // (the stripMargin || hazard — BASELINE.md q219 postmortem). ──
-
-  /** `TextAnalysis.cjkIsolate` mirror: space-isolate each CJK
-    * codepoint (`\1` backref, 'g' flag — DuckDB replaces first-only
-    * by default).
-    */
-  private def duckCjkIsolate(e: String): String =
-    s"regexp_replace(coalesce($e, ''), " +
-      s"'(${graft.ext.TextAnalysis.CjkCharClass})', ' \\1 ', 'g')"
-
-  /** `TextAnalysis.lowerU` mirror: the pre-lower translate folds the
-    * four JVM≠DuckDB case mappings plus Σ/ς→σ (src/dst interpolated
-    * from the SAME private[graft] constants).
-    */
-  private def duckLowerU(e: String): String =
-    s"lower(translate(coalesce($e, ''), " +
-      s"'${graft.ext.TextAnalysis.LowerPreFoldSrc}', " +
-      s"'${graft.ext.TextAnalysis.LowerPreFoldDst}'))"
-
-  /** `TextAnalysis.tokens` mirror: isolate → fold-lower → extract
-    * letter/mark/digit runs.
-    */
-  private def duckUToks(e: String): String =
-    s"regexp_extract_all(${duckLowerU(duckCjkIsolate(e))}, " +
-      "'[\\p{L}\\p{M}\\p{N}]+')"
-
-  /** `TextAnalysis.normalizeForDedupU` mirror: fold-lower → digits→0
-    * → strip non-letter/mark/0/ws → collapse ws → trim (regex-escape
-    * whitespace spellings, so the SQL carries no control chars).
-    */
-  private def duckUNorm(e: String): String =
-    s"trim(regexp_replace(regexp_replace(regexp_replace(" +
-      s"${duckLowerU(e)}, '\\p{Nd}', '0', 'g'), " +
-      "'[^\\p{L}\\p{M}0 \\t\\r\\n]', '', 'g'), " +
-      "'[ \\t\\r\\n]+', ' ', 'g'))"
-
-  /** q295/q303 shared NFC-arm mirror: the arms rebuilt closed-form
-    * via chr() codepoints, normalized by DuckDB's independent
-    * nfc_normalize; ends with CTE `n` = (doc_id, text, nfc_text).
-    */
-  private val NfcArmsSql: String =
-    """WITH p AS (
-      |  SELECT doc_id, doc_id % 5 AS a,
-      |    CAST(doc_id // 5 AS VARCHAR) AS g
-      |  FROM documents),
-      |d AS (
-      |  SELECT doc_id,
-      |    CASE a
-      |      WHEN 0 THEN 'caf' || chr(233) || ' r' || chr(233) ||
-      |        'sum' || chr(233) || ' ' || g
-      |      WHEN 1 THEN 'cafe' || chr(769) || ' re' || chr(769) ||
-      |        'sume' || chr(769) || ' ' || g
-      |      WHEN 2 THEN chr(8486) || 'ohm ' || chr(8491) || 'ring ' || g
-      |      WHEN 3 THEN chr(937) || 'ohm ' || chr(197) || 'ring ' || g
-      |      ELSE chr(4370) || chr(4449) || chr(4523) || chr(44544)
-      |        || ' ' || g
-      |    END AS text
-      |  FROM p),
-      |n AS (
-      |  SELECT doc_id, text, nfc_normalize(text) AS nfc_text FROM d)""".stripMargin
-
-  /** q288/q294 shared tokenizer-contract mirror (the streaming twin
-    * q294 certifies against it VERBATIM — the q263 discipline).
-    */
-  private lazy val UnicodeTokensSql: String =
-    s"WITH d AS (SELECT doc_id, lang, coalesce(text, '') AS text, " +
-      s"${duckUToks("text")} AS tk FROM $MlJson)\n" +
-      """SELECT doc_id, lang,
-        |  CAST(len(tk) AS BIGINT) AS n_tok,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9]+')) AS BIGINT)
-        |    AS n_ascii_runs,
-        |  md5(coalesce(array_to_string(tk, ' '), '')) AS fp,
-        |  tk[1] AS first_tok, tk[-1] AS last_tok
-        |FROM d""".stripMargin
-
-  /** `TextAnalysis.sentencesU` mirror — terminal set interpolated
-    * from the same USentTerminals constant.
-    */
-  private def duckUSents(e: String): String = {
-    val t = graft.ext.TextAnalysis.USentTerminals
-    s"list_filter(list_transform(regexp_extract_all(coalesce($e, ''), " +
-      s"'[^$t]+[$t]?'), " +
-      "s -> trim(regexp_replace(s, '[ \\t\\r\\n]+', ' ', 'g'))), " +
-      "s -> s <> '')"
-  }
-
-  /** q291/q301 shared CJK-aware gopher mirror (q301 composes the
-    * discovered-stopword override on top of it verbatim).
-    */
-  private lazy val UGopherSql: String =
-    s"WITH raw AS (SELECT doc_id, coalesce(text, '') AS txt " +
-        s"FROM $MlJson),\n" +
-        s"st AS (SELECT doc_id, txt, " +
-        s"list_filter(regexp_split_to_array(trim(" +
-        s"${duckCjkIsolate("txt")}), '[ \\t\\r\\n]+'), w -> w <> '') " +
-        s"AS words, string_split(txt, chr(10)) AS lines, " +
-        s"${duckUToks("txt")} AS tk FROM raw),\n" +
-        s"m AS (SELECT doc_id, " +
-        s"CAST(len(words) AS BIGINT) AS n_words, " +
-        s"CAST(len(lines) AS BIGINT) AS n_lines, " +
-        s"CAST(length(regexp_replace(txt, '[ \\t\\r\\n]', '', 'g')) AS BIGINT) AS wc, " +
-        s"CAST(len(regexp_extract_all(txt, '[#…]')) AS BIGINT) AS sy, " +
-        s"CAST(len(list_filter(lines, l -> starts_with(l, '- ') OR " +
-        s"starts_with(l, '* ') OR starts_with(l, '• '))) AS BIGINT) AS bu, " +
-        s"CAST(len(list_filter(lines, l -> ends_with(l, '...') OR " +
-        s"ends_with(l, '…'))) AS BIGINT) AS el, " +
-        s"CAST(len(list_filter(words, w -> regexp_matches(w, '\\p{L}'))) AS BIGINT) AS al, " +
-        s"CAST(len(list_filter(tk, t -> list_contains(" +
-        graft.ext.TextAnalysis.Stopwords.map(w => s"'$w'")
-          .mkString("[", ", ", "]") +
-        s", t))) AS BIGINT) AS stop_hits FROM st)\n" +
-        """SELECT doc_id, n_words, n_lines, stop_hits,
-          |  CASE WHEN n_words = 0 THEN 0
-          |    ELSE wc * 100 // n_words END AS mean_len_c100,
-          |  CASE WHEN n_words = 0 THEN 0
-          |    ELSE sy * 1000000 // n_words END AS symbol_ppm,
-          |  bu * 1000000 // n_lines AS bullet_ppm,
-          |  el * 1000000 // n_lines AS ellipsis_ppm,
-          |  CASE WHEN n_words = 0 THEN 0
-          |    ELSE al * 1000000 // n_words END AS alpha_ppm,
-          |  CASE WHEN n_words < 10 OR n_words > 100000 THEN 'word_count'
-          |    WHEN (CASE WHEN n_words = 0 THEN 0
-          |      ELSE wc * 100 // n_words END) < 100
-          |      OR (CASE WHEN n_words = 0 THEN 0
-          |      ELSE wc * 100 // n_words END) > 1000 THEN 'word_len'
-          |    WHEN (CASE WHEN n_words = 0 THEN 0
-          |      ELSE sy * 1000000 // n_words END) > 100000 THEN 'symbol'
-          |    WHEN bu * 1000000 // n_lines > 900000 THEN 'bullet'
-          |    WHEN el * 1000000 // n_lines > 300000 THEN 'ellipsis'
-          |    WHEN (CASE WHEN n_words = 0 THEN 0
-          |      ELSE al * 1000000 // n_words END) < 800000 THEN 'alpha'
-          |    WHEN stop_hits < 0 THEN 'stopword'
-          |    ELSE 'keep' END AS verdict
-          |FROM m""".stripMargin
-
-  /** `TextAnalysis.normalizeForDedup` (Latin) mirror — accent fold
-    * interpolated from the same AccentFold constants. The aggressive
-    * `[^a-z0 ]` strip makes this route immune to the ICU/DuckDB
-    * case-table seam: every divergent mapping strips to ''.
-    */
-  private def duckLatinNorm(e: String): String =
-    s"trim(regexp_replace(regexp_replace(regexp_replace(" +
-      s"translate(lower(coalesce($e, '')), " +
-      s"'${graft.ext.TextAnalysis.AccentFoldSrc}', " +
-      s"'${graft.ext.TextAnalysis.AccentFoldDst}'), " +
-      "'[0-9]', '0', 'g'), " +
-      "'[^a-z0 \\t\\r\\n]', '', 'g'), " +
-      "'[ \\t\\r\\n]+', ' ', 'g'))"
-
-  /** q290/q293 shared exact-Jaccard mirror over Unicode-token
-    * 3-shingles (the q18 oracle shape, re-tokenized): thresholds 0.5
-    * (jaccard pairs) and 0.8 (minhash-LSH — whose banded-candidate +
-    * exact-verify output coincides with the exact all-pairs set).
-    */
-  private def uJaccardSql(tau: String): String = {
-    val tk = duckUToks("text")
-    s"""WITH tok AS (
-       |  SELECT doc_id, unnest($tk) AS tok,
-       |    generate_subscripts($tk, 1) AS pos
-       |  FROM $MlJson
-       |), sh AS (
-       |  SELECT DISTINCT doc_id,
-       |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-       |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-       |  QUALIFY lead(tok, 2) OVER w IS NOT NULL
-       |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-       |inter AS (
-       |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT da AS doc_a, db AS doc_b,
-       |  CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) AS jaccard
-       |FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
-       |WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= $tau""".stripMargin
-  }
-
-  /** q204's pinned n_hit at sf0.01 (q46 discipline: measured, stable
-    * across fresh JVMs — integer Hamming shortlist + deterministic
-    * cosine rerank — and pinned so any drift turns the row red).
-    */
-  val Q204PinnedHits = 47
-
-  /** Morton-interleave SQL over pre-bucketed columns `a`/`b` — bit i of
-    * a at position 2i+1, of b at 2i (mirrors Layout.mortonInterleave;
-    * the terms occupy disjoint bits so + == OR). Generated, not
-    * hand-written: 2·bits terms.
-    */
-  private def mortonSql(a: String, b: String, bits: Int): String =
-    (0 until bits).flatMap(i => Seq(
-      s"((($a >> $i) & 1) << ${2 * i + 1})",
-      s"((($b >> $i) & 1) << ${2 * i})")).mkString(" + ")
-
-  /** Exhaustive-IVF truth: brute-force cosine top-5 for the %50 query
-    * batch over the whole embeddings corpus. Shared verbatim by q88
-    * (stored-index probe) and q187 (append-then-probe) - both modes
-    * must equal brute force regardless of centroid positions.
-    */
-  private val IvfExhaustiveTopkSql: String =
-    """WITH n AS (
-        |  SELECT vec_id, embedding,
-        |    list_reduce(list_transform(list_zip(embedding, embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS nn
-        |  FROM embeddings
-        |), q AS (SELECT * FROM n WHERE vec_id % 50 = 0),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b)
-        |      / sqrt(q.nn * c.nn) AS cosine
-        |  FROM q JOIN n c ON c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank,
-        |  cosine
-        |FROM scored
-        |QUALIFY rank <= 5""".stripMargin
-
-  /** q55's full-corpus clustering truth: exact-Jaccard(3-shingles)
-    * >= 0.8 pairs -> recursive-CTE connected components -> min-id
-    * cluster labels. Shared verbatim by q55 (one-shot clustering) and
-    * q186 (incremental fold) - the incremental path is certified
-    * against the SAME truth as the full recompute.
-    */
-  /** DuckDB's NATIVE ASOF LEFT JOIN over events — most recent
-    * preceding 'view' per user for every 'purchase'. Shared verbatim
-    * by q49 (the union+window rewrite) and q196 (the native Catalyst
-    * merge operator): both engine paths are certified against the same
-    * independent first-class implementation of the semantics, so they
-    * cannot drift apart.
-    */
-  private val AsofEventsSql: String =
-    """WITH v AS (
-      |  SELECT user_id, ts, max(event_id) AS view_id
-      |  FROM events WHERE event_type = 'view' GROUP BY user_id, ts),
-      |p AS (
-      |  SELECT event_id, user_id, ts
-      |  FROM events WHERE event_type = 'purchase')
-      |SELECT p.event_id, p.user_id,
-      |  epoch_us(p.ts) AS t_us,
-      |  epoch_us(v.ts) AS view_us,
-      |  v.view_id
-      |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts""".stripMargin
-
-  /** Brute-force inner-product top-5 for the %50 query batch — the
-    * exhaustive-probe truth shared verbatim by q193 (stored PQ) and
-    * q200 (stored IVF-PQ): with the exact rerank deciding alone, both
-    * index lifecycles must reproduce these rows bit for bit.
-    */
-  private val PqBruteDotSql: String =
-    """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-      |q AS (SELECT * FROM e WHERE vec_id % 50 = 0),
-      |scored AS (
-      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-      |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS score
-      |  FROM q JOIN e c ON c.vec_id <> q.vec_id)
-      |SELECT query_id, neighbor_id,
-      |  row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank,
-      |  score
-      |FROM scored QUALIFY rank <= 5""".stripMargin
-
-  /** The shared k-round BPE training chain (q197/q198): vocab0 is the
-    * word-type table with '.'-wrapped symbol strings; each round
-    * counts weighted adjacent pairs from the symbol lists, takes the
-    * (count DESC, pair ASC) argmax, and applies it as a literal
-    * replace — DuckDB's replace has the same all-occurrences
-    * left-to-right non-overlapping semantics as Spark's, which is the
-    * load-bearing fact that makes real BPE oracle-certifiable. The
-    * builder generates the rounds so q197 (train surface) and q198
-    * (encode surface) share one chain verbatim and cannot drift.
-    */
-  private def bpeChainSql(k: Int, trainWhere: String = "TRUE"): String = {
-    val head =
-      s"""WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
-        |  FROM documents),
-        |vocab0 AS (
-        |  SELECT w, count(*) AS freq,
-        |    '.' || array_to_string(regexp_extract_all(w, '.'), '..') || '.' AS sym
-        |  FROM tok WHERE $trainWhere GROUP BY w)""".stripMargin
-    val rounds = (1 to k).map { i =>
-      s"""p$i AS (
-         |  SELECT pair, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-         |    SELECT freq,
-         |      unnest(list_transform(range(1, len(l)), x -> l[x] || ' ' || l[x + 1])) AS pair
-         |    FROM (SELECT freq, regexp_extract_all(sym, '[a-z0-9]+') AS l FROM vocab${i - 1}))
-         |  GROUP BY pair),
-         |best$i AS (SELECT pair, cnt FROM p$i ORDER BY cnt DESC, pair LIMIT 1),
-         |vocab$i AS (
-         |  SELECT w, freq,
-         |    coalesce(replace(sym, '.' || replace(pair, ' ', '..') || '.',
-         |                     '.' || replace(pair, ' ', '') || '.'), sym) AS sym
-         |  FROM vocab${i - 1} LEFT JOIN best$i ON TRUE)""".stripMargin
-    }.mkString(",\n")
-    head + ",\n" + rounds
-  }
-
-  private val BpeK = 8
-
-  /** Trigram novelty of the held-out 1/5 against the 1/5 reference
-    * slice — shared verbatim by q202 (batch) and q208 (three-wave
-    * streamed scoring): delivery must be invisible in the rows.
-    */
-  private val NgramNoveltySql: String =
-    """WITH tok AS (
-      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
-      |  FROM documents),
-      |bg AS (
-      |  SELECT doc_id,
-      |    unnest(list_transform(range(1, len(t) - 1),
-      |      x -> array_to_string(t[x:x + 2], ' '))) AS gram
-      |  FROM tok),
-      |ref AS (SELECT DISTINCT gram FROM bg WHERE doc_id % 5 = 1),
-      |agg AS (
-      |  SELECT b.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-      |    CAST(count(*) FILTER (WHERE r.gram IS NULL) AS BIGINT) AS n_unseen
-      |  FROM bg b LEFT JOIN ref r USING (gram)
-      |  WHERE b.doc_id % 5 = 0 GROUP BY b.doc_id)
-      |SELECT d.doc_id, coalesce(a.n_grams, 0) AS n_grams,
-      |  coalesce(a.n_unseen, 0) AS n_unseen
-      |FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) d
-      |LEFT JOIN agg a USING (doc_id)""".stripMargin
-
-  /** q205's step-unrolled walk oracle: each hop is a (md5, neighbor)
-    * row_number argmin over the previous frontier joined to the
-    * distinct edge set — the same hash string Spark's concat_ws
-    * builds, so the walks replay bit for bit.
-    */
-  private val GraphWalkChainSql: String = {
-    val head =
-      """WITH e AS (
-        |  SELECT DISTINCT o_custkey % 40 AS u, o_orderkey % 40 AS v
-        |  FROM orders WHERE o_custkey % 40 <> o_orderkey % 40),
-        |s0 AS (SELECT DISTINCT u AS seed, CAST(0 AS INTEGER) AS step, u AS node FROM e)""".stripMargin
-    val hops = (1 to 4).map { i =>
-      s"""s$i AS (
-         |  SELECT seed, CAST($i AS INTEGER) AS step, node FROM (
-         |    SELECT w.seed, e.v AS node,
-         |      row_number() OVER (PARTITION BY w.seed ORDER BY
-         |        md5(CAST(w.seed AS VARCHAR) || ':$i:' ||
-         |            CAST(w.node AS VARCHAR) || ':' || CAST(e.v AS VARCHAR)), e.v) AS rk
-         |    FROM s${i - 1} w JOIN e ON e.u = w.node)
-         |  WHERE rk = 1)""".stripMargin
-    }.mkString(",\n")
-    val union = (0 to 4).map(i => s"SELECT * FROM s$i").mkString(" UNION ALL ")
-    head + ",\n" + hops + s",\nw AS ($union)"
-  }
-
-  private val GraphWalkSql: String =
-    GraphWalkChainSql + "\nSELECT * FROM w"
-
-  /** q209: skip-gram (center, context) pair counts within window 2
-    * over the SAME certified walks — the DeepWalk data-prep completed
-    * (walk corpus → training pairs).
-    */
-  private val SkipGramChainSql: String =
-    GraphWalkChainSql +
-      """,
-        |pairs AS (
-        |  SELECT a.node AS center, b.node AS context,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM w a JOIN w b
-        |    ON a.seed = b.seed AND a.step <> b.step AND abs(a.step - b.step) <= 2
-        |  GROUP BY a.node, b.node)""".stripMargin
-
-  private val SkipGramSql: String =
-    SkipGramChainSql + "\nSELECT * FROM pairs"
-
-  /** q210: bounded-pool negatives per center — 16 deterministic md5
-    * probes into the shard-addressed node dictionary (the q86/q102
-    * shuffleShards permutation, probed globally via shard offsets),
-    * first-probe-wins dedup, anti-join positives, first 3 by probe
-    * order. Mirrors GraphWalk.negativeSamples step for step; the
-    * '0x'||hex → BIGINT cast mirrors Spark's conv(_,16,10) (q107).
-    */
-  private val NegativeSamplesSql: String =
-    SkipGramChainSql +
-      """,
-        |nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
-        |addr AS (
-        |  SELECT node, substr(h, 1, 2) AS shard,
-        |    row_number() OVER (PARTITION BY substr(h, 1, 2) ORDER BY h, node)
-        |      AS shard_rank
-        |  FROM (SELECT node,
-        |      md5(concat_ws(':', 'gneg-v1', CAST(node AS VARCHAR))) AS h
-        |    FROM nodes)),
-        |sz AS (SELECT shard, count(*) AS shard_size FROM addr GROUP BY 1),
-        |ofs AS (SELECT shard, shard_size,
-        |  sum(shard_size) OVER (ORDER BY shard) - shard_size AS off FROM sz),
-        |tot AS (SELECT CAST(sum(shard_size) AS BIGINT) AS n_total FROM sz),
-        |pr AS (
-        |  SELECT c.center, j.j,
-        |    CAST(('0x' || substr(md5(concat_ws(':', 'gneg-v1', 'probe',
-        |      CAST(c.center AS VARCHAR), CAST(j.j AS VARCHAR))), 1, 15))
-        |      AS BIGINT) % t.n_total AS pos
-        |  FROM (SELECT DISTINCT center FROM pairs) c
-        |  CROSS JOIN (SELECT unnest(range(1, 17)) AS j) j
-        |  CROSS JOIN tot t),
-        |loc AS (
-        |  SELECT p.center, p.j, o.shard, p.pos - o.off + 1 AS shard_rank
-        |  FROM pr p JOIN ofs o
-        |    ON p.pos >= o.off AND p.pos < o.off + o.shard_size),
-        |cand AS (
-        |  SELECT l.center, l.j, a.node AS negative
-        |  FROM loc l JOIN addr a
-        |    ON a.shard = l.shard AND a.shard_rank = l.shard_rank
-        |  WHERE a.node <> l.center
-        |    AND NOT EXISTS (SELECT 1 FROM pairs p
-        |      WHERE p.center = l.center AND p.context = a.node)),
-        |dd AS (SELECT center, negative, min(j) AS j FROM cand GROUP BY 1, 2)
-        |SELECT center, negative,
-        |  row_number() OVER (PARTITION BY center ORDER BY j, negative) AS rank
-        |FROM dd QUALIFY rank <= 3""".stripMargin
-
-  /** Shared canonicalization chain for q213-q215 — the identical-oracle
-    * discipline (one fixture + one canon derivation, three consumers,
-    * so the entries cannot drift apart). Mirrors UrlCanon.canonicalUrl
-    * step for step with DuckDB's own regex/list functions; RE2-safe
-    * patterns only. regexp_replace needs no 'g' flag: '/+$' is
-    * end-anchored, at most one match.
-    */
-  private val UrlCanonChainSql: String =
-    """WITH raw0 AS (
-      |  SELECT doc_id, n_chars,
-      |    (CASE WHEN doc_id % 3 = 0 THEN 'HTTP'
-      |          WHEN doc_id % 3 = 1 THEN 'https' ELSE 'http' END
-      |     || '://'
-      |     || CASE WHEN doc_id % 2 = 0 THEN 'WWW.' || upper(source)
-      |             ELSE 'www.' || source END
-      |     || '.Example.COM'
-      |     || CASE WHEN doc_id % 5 = 0 THEN ':80'
-      |             WHEN doc_id % 5 = 1 THEN ':443'
-      |             WHEN doc_id % 5 = 2 THEN ':8080' ELSE '' END
-      |     || '/Docs/' || CAST(doc_id % 50 AS VARCHAR)
-      |     || CASE WHEN doc_id % 7 = 0 THEN '/' ELSE '' END
-      |     || CASE WHEN doc_id % 4 = 0 THEN '?b=2&a=1'
-      |             WHEN doc_id % 4 = 1 THEN '?a=1&b=2' ELSE '' END
-      |     || CASE WHEN doc_id % 13 = 0 THEN '#Frag' ELSE '' END) AS url
-      |  FROM documents),
-      |raw AS (
-      |  SELECT doc_id, n_chars,
-      |    CASE WHEN doc_id % 17 = 0 THEN 'not a url ' || url ELSE url END AS url
-      |  FROM raw0),
-      |parts AS (
-      |  SELECT doc_id, n_chars, url,
-      |    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-      |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1) AS auth,
-      |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1)
-      |      AS rawpath,
-      |    regexp_extract(url, '^[^#?]*\?([^#]*)', 1) AS query
-      |  FROM raw),
-      |canon AS (
-      |  SELECT doc_id, n_chars, url, auth, rawpath,
-      |    CASE WHEN scheme = '' OR auth LIKE '%[%'
-      |           OR regexp_extract(auth, '^(?:[^@]*@)?([^:]*)', 1) = ''
-      |         THEN NULL ELSE
-      |      scheme || '://'
-      |      || lower(regexp_extract(auth, '^(?:[^@]*@)?([^:]*)', 1))
-      |      || CASE WHEN port = '' OR (scheme = 'http' AND port = '80')
-      |                OR (scheme = 'https' AND port = '443') THEN ''
-      |              ELSE ':' || port END
-      |      || CASE WHEN regexp_replace(rawpath, '/+$', '') = '' THEN '/'
-      |              ELSE regexp_replace(rawpath, '/+$', '') END
-      |      || CASE WHEN query = '' THEN ''
-      |              ELSE '?' || array_to_string(list_sort(string_split(query, '&')), '&')
-      |         END
-      |    END AS canonical_url
-      |  FROM (SELECT *, regexp_extract(auth, ':([0-9]+)$', 1) AS port FROM parts))"""
-      .stripMargin
-
-  /** q213's full projection — shared with the streaming triage q218. */
-  private val UrlCanonSelectSql: String =
-    UrlCanonChainSql +
-      """
-        |SELECT doc_id, url, canonical_url,
-        |  CASE WHEN canonical_url IS NULL THEN NULL
-        |       ELSE lower(regexp_extract(auth, '^(?:[^@]*@)?([^:]*)', 1))
-        |  END AS host
-        |FROM canon""".stripMargin
-
-  /** DuckDB mirror of [[messyUrl]] for an id expression. SINGLE-LINE
-    * on purpose: these helpers are interpolated into stripMargin
-    * templates, where a line-leading `||` operator would lose its
-    * first pipe to the margin strip.
-    */
-  private def messyUrlSql(id: String): String =
-    s"(CASE WHEN ($id) % 3 = 0 THEN 'HTTP' WHEN ($id) % 3 = 1 THEN 'https' " +
-      s"ELSE 'http' END || '://' || " +
-      s"CASE WHEN ($id) % 2 = 0 THEN 'WWW.SRC' || CAST(($id) % 20 AS VARCHAR) " +
-      s"ELSE 'www.src' || CAST(($id) % 20 AS VARCHAR) END || '.Example.COM' || " +
-      s"CASE WHEN ($id) % 5 = 0 THEN ':80' WHEN ($id) % 5 = 1 THEN ':443' " +
-      s"WHEN ($id) % 5 = 2 THEN ':8080' ELSE '' END || " +
-      s"'/Docs/' || CAST(($id) % 50 AS VARCHAR) || " +
-      s"CASE WHEN ($id) % 7 = 0 THEN '/' ELSE '' END || " +
-      s"CASE WHEN ($id) % 4 = 0 THEN '?b=2&a=1' " +
-      s"WHEN ($id) % 4 = 1 THEN '?a=1&b=2' ELSE '' END)"
-
-  /** Host from a URL expression — canonicalHost's nested regexes
-    * (single-line for the same stripMargin reason).
-    */
-  private def hostOfSql(url: String): String =
-    s"lower(regexp_extract(regexp_extract($url, " +
-      "'^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1), '^(?:[^@]*@)?([^:]*)', 1))"
-
-  /** Arithmetic mirrors of [[messyUrl]]'s COMPONENTS for an id
-    * expression — the q238 resolution oracle derives href, resolved
-    * and canonical forms from residues (independent truth), so it
-    * needs each piece of the messy spelling and of its canonical form
-    * separately. All single-line (the stripMargin `||` trap).
-    */
-  private def mScmSql(i: String): String = // canonical (lowercased) scheme
-    s"(CASE WHEN ($i) % 3 = 1 THEN 'https' ELSE 'http' END)"
-  private def mAuthRawSql(i: String): String = // authority as spelled
-    s"((CASE WHEN ($i) % 2 = 0 THEN 'WWW.SRC' ELSE 'www.src' END) || " +
-      s"CAST(($i) % 20 AS VARCHAR) || '.Example.COM' || " +
-      s"(CASE WHEN ($i) % 5 = 0 THEN ':80' WHEN ($i) % 5 = 1 THEN ':443' " +
-      s"WHEN ($i) % 5 = 2 THEN ':8080' ELSE '' END))"
-  private def mHostCanSql(i: String): String = // canonical host
-    s"('www.src' || CAST(($i) % 20 AS VARCHAR) || '.example.com')"
-  /** Canonical port part given the EFFECTIVE scheme expression (the
-    * true rule: default ports drop only for their own scheme —
-    * https://h:80 and http://h:443 RETAIN the port).
-    */
-  private def mPortCanSql(i: String, scm: String): String =
-    s"(CASE WHEN ($i) % 5 = 2 THEN ':8080' " +
-      s"WHEN ($i) % 5 = 0 AND $scm = 'https' THEN ':80' " +
-      s"WHEN ($i) % 5 = 1 AND $scm = 'http' THEN ':443' ELSE '' END)"
-  private def mPathRawSql(i: String): String = // path as spelled
-    s"('/Docs/' || CAST(($i) % 50 AS VARCHAR) || " +
-      s"(CASE WHEN ($i) % 7 = 0 THEN '/' ELSE '' END))"
-  private def mPathCanSql(i: String): String = // trailing slash dropped
-    s"('/Docs/' || CAST(($i) % 50 AS VARCHAR))"
-  private def mDirRawSql(i: String): String = // base path's directory
-    s"(CASE WHEN ($i) % 7 = 0 THEN '/Docs/' || CAST(($i) % 50 AS VARCHAR) " +
-      s"|| '/' ELSE '/Docs/' END)"
-  private def mQRawSql(i: String): String = // query as spelled
-    s"(CASE WHEN ($i) % 4 = 0 THEN '?b=2&a=1' " +
-      s"WHEN ($i) % 4 = 1 THEN '?a=1&b=2' ELSE '' END)"
-  private def mQCanSql(i: String): String = // params sorted
-    s"(CASE WHEN ($i) % 4 IN (0, 1) THEN '?a=1&b=2' ELSE '' END)"
-
-  /** DuckDB mirror of [[htmlFixture]] over a doc source exposing
-    * (doc_id, text) — `from` is the full FROM clause. Emits CTE
-    * `h(doc_id, html)`.
-    */
-  private def htmlFixtureSql(from: String): String =
-    s"""h AS (
-       |  SELECT doc_id,
-       |    '<!DOCTYPE html><html><head><title>Doc ' || CAST(doc_id AS VARCHAR)
-       |    || '</title>'
-       |    || CASE WHEN doc_id % 4 = 0 THEN '<script type="text/javascript">if(a<b){x="</div>y";}</script>'
-       |            WHEN doc_id % 4 = 1 THEN '<style>p > a { content: "<q>"; }</style>' ELSE '' END
-       |    || '</head><body>'
-       |    || CASE WHEN doc_id % 4 = 2 THEN '<!-- nav <ul><li>home</li></ul> -->' ELSE '' END
-       |    || '<div class="main"><p>' || text || '</p>'
-       |    || CASE WHEN doc_id % 6 = 0 THEN '<p>&lt;cite&gt;&nbsp;&amp; more&#39;</p>' ELSE '' END
-       |    || CASE WHEN doc_id % 10 = 7 THEN '<p>&#8220;Q&#8221; &#8212; it&#x2019;s &#38;lt;ok&#x3E;&#160;fine&hellip;</p>' ELSE '' END
-       |    || '</div></body></html>'
-       |    || CASE WHEN doc_id % 9 = 0 THEN '<a href="trunc' ELSE '' END
-       |    || CASE WHEN doc_id % 4 = 3 THEN '<script>tail();' ELSE '' END AS html
-       |  $from)""".stripMargin
-
-  /** DuckDB entity-decode chain GENERATED from
-    * [[graft.ext.HtmlExtract.EntityDecodes]] — the one table drives
-    * both engines, so the Spark chain and its mirror cannot drift.
-    * Replacement chars emit as chr(codepoint) (quote/non-ASCII safe);
-    * patterns contain no single quotes or backslashes by
-    * construction. Single-line (the stripMargin `||` trap).
-    */
-  private def entityDecodeSql(expr: String): String =
-    graft.ext.HtmlExtract.EntityDecodes.foldLeft(expr) {
-      case (acc, (pat, ch)) =>
-        require(!pat.contains("'") && !pat.contains("\\"), s"unmirrorable: $pat")
-        // chr() renders ONE code point — a multi-char replacement
-        // would silently truncate in the mirror while Spark replaces
-        // the full string (engine drift); fail at construction instead
-        require(ch.codePointCount(0, ch.length) == 1,
-          s"replacement must be a single code point: '$ch'")
-        s"regexp_replace($acc, '$pat', chr(${ch.codePointAt(0)}), 'g')"
-    }
-
-  /** DuckDB mirror of [[graft.ext.HtmlExtract.mainText]] over CTE
-    * `h(doc_id, html)` — the identical RE2-safe pass chain, 'g' flag
-    * on every regexp_replace (DuckDB replaces first-only by default;
-    * Spark replaces all). Emits CTE `ext(doc_id, main_text)`.
-    */
-  private val HtmlExtractCtesSql: String =
-    """hx1 AS (
-      |  SELECT doc_id, regexp_replace(html,
-      |    '(?is)<script\b[^>]*>.*?</script[ \t\n\x0B\f\r]*>|<style\b[^>]*>.*?</style[ \t\n\x0B\f\r]*>|<!--.*?-->',
-      |    ' ', 'g') AS t FROM h),
-      |hx2 AS (
-      |  SELECT doc_id, regexp_replace(t,
-      |    '(?is)<script\b[^>]*>.*|<style\b[^>]*>.*|<!--.*', ' ', 'g')
-      |    AS t FROM hx1),
-      |hx3 AS (
-      |  SELECT doc_id, regexp_replace(t, '<![^>]*>', ' ', 'g') AS t FROM hx2),
-      |hx4 AS (
-      |  SELECT doc_id, regexp_replace(regexp_replace(t,
-      |    '</?[A-Za-z][^>]*>', ' ', 'g'),
-      |    '(?s)(?:</?[A-Za-z][^>]*|<![^>]*)\z', ' ', 'g')
-      |    AS t FROM hx3),
-      |hx5 AS (
-      |  SELECT doc_id, __ENT__ AS t FROM hx4),
-      |ext AS (
-      |  SELECT doc_id,
-      |    trim(regexp_replace(t, '[ \t\n\x0B\f\r]+', ' ', 'g')) AS main_text
-      |  FROM hx5)""".stripMargin
-      .replace("__ENT__", entityDecodeSql("t"))
-
-  /** q226's full select — shared with the streaming replay q232 (the
-    * identical-oracle discipline).
-    */
-  private lazy val HtmlExtractSelectSql: String =
-    "WITH " + htmlFixtureSql("FROM documents") + ",\n" + HtmlExtractCtesSql +
-      "\nSELECT doc_id, main_text, CAST(length(main_text) AS BIGINT)" +
-      " AS n_chars_text FROM ext"
-
-  /** q228's bigram-LM mirror — shared with the stored-model round trip
-    * q231 (the identical-oracle discipline): unnest+generate_subscripts
-    * token stream, lead() bigrams, count tables from the %5<>0 slice,
-    * add-one ppm per held-out pair occurrence; HUGEINT sums defused by
-    * BIGINT casts.
-    */
-  private val LmQualitySql: String =
-    """WITH sdocs AS (
-      |  SELECT doc_id,
-      |    CASE WHEN doc_id % 3 = 0 THEN reverse(text) ELSE text END AS text
-      |  FROM documents WHERE doc_id % 5 = 0),
-      |rtok AS (
-      |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w,
-      |    generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS p
-      |  FROM documents WHERE doc_id % 5 <> 0),
-      |c1 AS (SELECT w AS w1, count(*) AS c1 FROM rtok GROUP BY 1),
-      |vv AS (SELECT count(*) AS v FROM c1),
-      |rbg AS (
-      |  SELECT w AS w1, lead(w) OVER (PARTITION BY doc_id ORDER BY p) AS w2
-      |  FROM rtok QUALIFY w2 IS NOT NULL),
-      |c2 AS (SELECT w1, w2, count(*) AS c2 FROM rbg GROUP BY 1, 2),
-      |stok AS (
-      |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w,
-      |    generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS p
-      |  FROM sdocs),
-      |sbg AS (
-      |  SELECT doc_id, w AS w1, lead(w) OVER (PARTITION BY doc_id ORDER BY p) AS w2
-      |  FROM stok QUALIFY w2 IS NOT NULL),
-      |ppm AS (
-      |  SELECT s.doc_id,
-      |    (coalesce(c2.c2, 0) + 1) * 1000000 // (coalesce(c1.c1, 0) + vv.v) AS ppm,
-      |    CASE WHEN c2.c2 IS NULL THEN 1 ELSE 0 END AS unseen
-      |  FROM sbg s LEFT JOIN c2 ON c2.w1 = s.w1 AND c2.w2 = s.w2
-      |  LEFT JOIN c1 ON c1.w1 = s.w1 CROSS JOIN vv)
-      |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
-      |  CAST(sum(ppm) // count(*) AS BIGINT) AS score_ppm,
-      |  CAST(sum(unseen) * 1000000 // count(*) AS BIGINT) AS unseen_ppm,
-      |  CASE WHEN CAST(sum(unseen) * 1000000 // count(*) AS BIGINT) >= 500000
-      |       THEN 'low' ELSE 'ok' END AS flag
-      |FROM ppm GROUP BY 1""".stripMargin
-
-  /** Shared q219/q220/q221 chain — ARITHMETIC since round 13: the
-    * edge hosts derive straight from the target formulas' residues
-    * (the q237 independent-truth discipline), never from re-running
-    * extraction/resolution. This implicitly asserts that the
-    * scheme-relative `//host` hrefs RESOLVE into edges (a
-    * resolve-less pipeline would halve the graph and mismatch), that
-    * the same-host `../` arm falls to the self-loop filter, and that
-    * `javascript:` junk quarantines — the Spark side runs the full
-    * extract→resolve→canonicalize chain against this truth.
-    */
-  private val LinkGraphChainSql: String =
-    s"""WITH hosts AS (
-       |  SELECT ${mHostCanSql("doc_id")} AS src_host,
-       |    ${mHostCanSql("doc_id*(doc_id+3)+1")} AS dst1,
-       |    ${mHostCanSql("doc_id*(doc_id+7)+5")} AS dst2
-       |  FROM documents),
-       |edges AS (
-       |  SELECT src_host, dst1 AS dst_host FROM hosts
-       |  UNION ALL
-       |  SELECT src_host, dst2 AS dst_host FROM hosts),
-       |e0 AS (SELECT src_host, dst_host FROM edges WHERE src_host <> dst_host)"""
-      .stripMargin
-
-  /** HTTP-record mirror shared VERBATIM by q236 (batch) and q248
-    * (streaming replay twin): CRLF via chr(13)||chr(10) in the
-    * fixture, identical RE2 split/extract patterns in the parse.
-    */
-  /** q246 + q256 shared recrawl mirror (identical-oracle
-    * certification: the streaming fold must equal the batch window).
-    */
-  private val RecrawlSql: String =
-    """SELECT 'http://www.src' || CAST(doc_id % 20 AS VARCHAR)
-      |    || '.example.com/Docs/' || CAST(doc_id AS VARCHAR) AS url,
-      |  CAST(5 AS BIGINT) AS n_fetches,
-      |  CAST(ch AS BIGINT) AS n_changes,
-      |  CAST(ch * 1000000 // 4 AS BIGINT) AS change_ppm,
-      |  CASE WHEN ch * 1000000 // 4 >= 500000 THEN 'hot'
-      |       WHEN ch > 0 THEN 'warm' ELSE 'cold' END AS priority
-      |FROM (SELECT doc_id,
-      |    CASE WHEN doc_id % 5 = 0 THEN 0
-      |         WHEN doc_id % 4 = 0 THEN 4
-      |         WHEN doc_id % 4 = 1 THEN 2
-      |         ELSE 1 END AS ch
-      |  FROM documents) t""".stripMargin
-
-  /** Gopher-quality mirror, shared VERBATIM by q258 (batch) and q263
-    * (streaming twin) — the identical-oracle discipline: the two
-    * entries cannot drift apart. Every metric regenerated from the
-    * nine arms' residue arithmetic.
-    */
-  /** q265/q271 shared C4 mirror: every count and the clean-text
-    * rebuild is residue arithmetic + repeat() — no line splitting
-    * oracle-side.
-    */
-  private val C4RulesSql: String =
-    """WITH p AS (
-      |  SELECT doc_id, doc_id % 8 AS a, 3 + doc_id % 5 AS g,
-      |    1 + doc_id % 4 AS b
-      |  FROM documents),
-      |gd AS (
-      |  SELECT doc_id, a, g, b,
-      |    repeat('alpha beta gamma delta.' || chr(10), g - 1)
-      |      || 'alpha beta gamma delta.' AS goods
-      |  FROM p)
-      |SELECT doc_id,
-      |  CAST(CASE WHEN a IN (1,2,3) THEN g + b
-      |            WHEN a IN (4,5,6) THEN g + 1
-      |            WHEN a = 7 THEN 2 ELSE g END AS BIGINT) AS n_lines_in,
-      |  CAST(CASE WHEN a IN (4,6) THEN g + 1
-      |            WHEN a = 7 THEN 2 ELSE g END AS BIGINT) AS n_lines_kept,
-      |  CASE WHEN a = 4 THEN goods || chr(10) || 'lorem ipsum dolor sit amet.'
-      |       WHEN a = 6 THEN goods || chr(10) || 'darn badword1 here { too.'
-      |       WHEN a = 7 THEN 'alpha beta gamma delta.' || chr(10)
-      |         || 'alpha beta gamma delta.'
-      |       ELSE goods END AS clean_text,
-      |  CASE WHEN a = 6 THEN 'badword' WHEN a = 4 THEN 'lorem'
-      |       WHEN a = 5 THEN 'brace' WHEN a = 7 THEN 'few_lines'
-      |       ELSE 'keep' END AS verdict
-      |FROM gd""".stripMargin
-
-  /** q267/q278 shared classifier mirror: class token counts as
-    * residue sums, every weight and score as integer //, labels
-    * re-derived - the whole train->score chain as independent
-    * arithmetic; the incremental q278 must match it verbatim.
-    */
-  private val NbClassifierSql: String =
-    """WITH d AS (
-        |  SELECT doc_id, 1 + doc_id % 5 AS p, doc_id % 2 AS par,
-        |    doc_id % 3 AS s
-        |  FROM documents),
-        |tot AS (
-        |  SELECT
-        |    sum(CASE WHEN par = 0 THEN p ELSE 0 END) AS cg,
-        |    sum(CASE WHEN par = 1 THEN p ELSE 0 END) AS cs,
-        |    sum(CASE WHEN par = 0 THEN 1 ELSE 0 END) AS ne,
-        |    sum(CASE WHEN par = 1 THEN 1 ELSE 0 END) AS no
-        |  FROM d),
-        |w AS (
-        |  SELECT
-        |    (cg+1)*1000000 // (cg + 2*ne + 4)
-        |      - 1000000 // (cs + 2*no + 4) AS wg,
-        |    1000000 // (cg + 2*ne + 4)
-        |      - (cs+1)*1000000 // (cs + 2*no + 4) AS ws,
-        |    (ne+1)*1000000 // (cg + 2*ne + 4)
-        |      - (no+1)*1000000 // (cs + 2*no + 4) AS wt,
-        |    1000000 // (cg + 2*ne + 4)
-        |      - 1000000 // (cs + 2*no + 4) AS wo
-        |  FROM tot),
-        |sc AS (
-        |  SELECT doc_id, s,
-        |    CASE s WHEN 0 THEN 3 WHEN 1 THEN 4 ELSE 3 END AS n_toks,
-        |    CASE s WHEN 2 THEN 1 ELSE 0 END AS oov_toks,
-        |    CASE s WHEN 0 THEN 2*wg + wt WHEN 1 THEN ws + wt + 2*wt
-        |      ELSE wg + ws + wo END AS score
-        |  FROM d, w)
-        |SELECT doc_id, CAST(n_toks AS BIGINT) AS n_toks,
-        |  CAST(oov_toks AS BIGINT) AS oov_toks,
-        |  CAST(score AS BIGINT) AS score,
-        |  CASE WHEN score > 0 THEN 'pos' ELSE 'neg' END AS label
-        |FROM sc""".stripMargin
-
-  /** q259/q279 shared script-profile mirror: per-class letter counts
-    * closed-form in the residues (no regex anywhere oracle-side —
-    * fully independent of the operator's \p{IsX} classes).
-    */
-  private val ScriptProfileSql: String =
-    """WITH p AS (
-        |  SELECT doc_id, doc_id % 7 AS a, 2 + doc_id % 20 AS k
-        |  FROM documents),
-        |m AS (
-        |  SELECT doc_id, a, k,
-        |    CASE a WHEN 0 THEN 4*k WHEN 1 THEN 4 WHEN 2 THEN 4
-        |      WHEN 5 THEN 4*k ELSE 0 END AS latin,
-        |    CASE a WHEN 1 THEN 4*k WHEN 5 THEN 4*k ELSE 0 END AS cyrillic,
-        |    CASE a WHEN 2 THEN 6*k ELSE 0 END AS cjk,
-        |    CASE a WHEN 3 THEN 4*k ELSE 0 END AS arabic,
-        |    CASE a WHEN 4 THEN 4*k ELSE 0 END AS other
-        |  FROM p),
-        |d AS (
-        |  SELECT *, latin+cyrillic+cjk+arabic+other AS n_letters,
-        |    CASE a WHEN 0 THEN 'latin' WHEN 1 THEN 'cyrillic'
-        |      WHEN 2 THEN 'cjk' WHEN 3 THEN 'arabic' WHEN 4 THEN 'other'
-        |      WHEN 5 THEN 'latin' ELSE 'none' END AS dominant,
-        |    CASE a WHEN 1 THEN 4 WHEN 2 THEN 4 WHEN 5 THEN 4*k
-        |      ELSE 0 END AS second_cnt
-        |  FROM m)
-        |SELECT doc_id, CAST(latin AS BIGINT) AS latin,
-        |  CAST(cyrillic AS BIGINT) AS cyrillic, CAST(cjk AS BIGINT) AS cjk,
-        |  CAST(arabic AS BIGINT) AS arabic,
-        |  CAST(n_letters AS BIGINT) AS n_letters,
-        |  CAST(other AS BIGINT) AS other, dominant,
-        |  CAST(CASE WHEN n_letters = 0 THEN 0
-        |    ELSE second_cnt * 1000000 // n_letters END AS BIGINT)
-        |    AS second_ppm,
-        |  CASE WHEN n_letters = 0 THEN FALSE
-        |    ELSE second_cnt * 1000000 // n_letters > 200000 END AS mixed
-        |FROM d""".stripMargin
-
-  /** q269/q282 shared warc-split mirror: records reconstructed
-    * arithmetically from (id, r) — no framing parse oracle-side;
-    * zero-record blobs come back as the LEFT JOIN's null row.
-    */
-  private val WarcSplitSql: String =
-    """WITH p AS (
-        |  SELECT doc_id, doc_id % 10 AS m, 1 + doc_id % 3 AS rr
-        |  FROM documents),
-        |e AS (
-        |  SELECT doc_id, m,
-        |    CASE WHEN m IN (8, 9) THEN rr - 1 ELSE rr END AS re
-        |  FROM p),
-        |recs AS (
-        |  SELECT doc_id, unnest(range(0, re)) AS r FROM e),
-        |rr2 AS (
-        |  SELECT doc_id, CAST(r AS BIGINT) AS rec_idx,
-        |    CASE WHEN r % 2 = 0 THEN 'response' ELSE 'request' END
-        |      AS warc_type,
-        |    'http://www.src' || CAST(doc_id % 20 AS VARCHAR)
-        |      || '.example.com/Docs/' || CAST(doc_id AS VARCHAR)
-        |      || '/' || CAST(r AS VARCHAR) AS target_uri,
-        |    repeat('p', CAST(5 + (doc_id + r) % 7 AS INT)) AS payload
-        |  FROM recs)
-        |SELECT e.doc_id,
-        |  CASE WHEN m = 7 THEN 'bad_magic' WHEN m = 8 THEN 'bad_length'
-        |       WHEN m = 9 THEN 'bad_header' ELSE 'ok' END AS warc_status,
-        |  rr2.rec_idx, rr2.warc_type, rr2.target_uri, rr2.payload
-        |FROM e LEFT JOIN rr2 ON e.doc_id = rr2.doc_id""".stripMargin
-
-  /** q281/q285 shared chat-template mirror: every rendered template
-    * rebuilt from residues — no JSON parsing oracle-side.
-    */
-  private val ChatTemplateSql: String =
-    """WITH p AS (
-        |  SELECT doc_id, doc_id % 10 AS a, CAST(doc_id AS VARCHAR) AS i
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, a,
-        |    '<|system|>be terse' AS sys,
-        |    '<|user|>u' || i || ' asks 1' AS u1,
-        |    '<|user|>u' || i || ' asks 2' AS u2,
-        |    '<|assistant|>a' || i || ' answers 1' AS a1,
-        |    '<|assistant|>a' || i || ' answers 2' AS a2
-        |  FROM p),
-        |o AS (
-        |  SELECT doc_id,
-        |    CASE a WHEN 0 THEN 3 WHEN 2 THEN 4 WHEN 3 THEN 0
-        |      WHEN 4 THEN 0 ELSE 2 END AS n_turns,
-        |    CASE a WHEN 0 THEN 'keep' WHEN 1 THEN 'keep'
-        |      WHEN 2 THEN 'keep' WHEN 3 THEN 'bad_json'
-        |      WHEN 4 THEN 'empty' WHEN 5 THEN 'bad_role'
-        |      WHEN 6 THEN 'system_pos' WHEN 7 THEN 'non_alternating'
-        |      WHEN 8 THEN 'empty_turn' ELSE 'dangling' END AS verdict,
-        |    CASE a WHEN 0 THEN sys || chr(10) || u1 || chr(10) || a1
-        |      WHEN 1 THEN u1 || chr(10) || a1
-        |      WHEN 2 THEN u1 || chr(10) || a1 || chr(10) || u2
-        |        || chr(10) || a2
-        |      WHEN 3 THEN '' WHEN 4 THEN ''
-        |      WHEN 5 THEN u1 || chr(10) || '<|robot|>x'
-        |      WHEN 6 THEN u1 || chr(10) || sys
-        |      WHEN 7 THEN u1 || chr(10) || u2
-        |      WHEN 8 THEN u1 || chr(10) || '<|assistant|>'
-        |      ELSE sys || chr(10) || u1 END AS rendered
-        |  FROM r)
-        |SELECT doc_id, CAST(n_turns AS BIGINT) AS n_turns, verdict,
-        |  rendered, CAST(length(rendered) AS BIGINT) AS n_chars
-        |FROM o""".stripMargin
-
-  /** q286 mirror: the q19 cosine fold repeated per prefix dim over
-    * list_slice, each prefix top-k joined against the full-dim truth.
-    * Generated (dims are data), emitted single-line per helper — the
-    * q219 stripMargin/|| hazard.
-    */
-  private val TruncRecallSql: String = {
-    def dot(a: String, b: String, d: Int): String =
-      s"list_reduce(list_transform(list_zip(list_slice($a, 1, $d), " +
-        s"list_slice($b, 1, $d)), z -> CAST(z[1] AS DOUBLE) * " +
-        "CAST(z[2] AS DOUBLE)), (x, y) -> x + y)"
-    val dims = Seq(4, 16, 64)
-    val nnCols = dims.map(d =>
-      s"${dot("embedding", "embedding", d)} AS nn$d").mkString(", ")
-    val perDim = dims.map { d =>
-      s"s$d AS (SELECT q.vec_id qid, c.vec_id nid, " +
-        s"${dot("q.embedding", "c.embedding", d)} / sqrt(q.nn$d * c.nn$d) " +
-        "AS cosine FROM q JOIN n c ON c.vec_id <> q.vec_id), " +
-        s"r$d AS (SELECT qid, nid FROM (SELECT qid, nid, row_number() " +
-        "OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS r " +
-        s"FROM s$d) WHERE r <= 5)"
-    }.mkString(", ")
-    // aliased both sides: the d=64 row self-joins r64 (duplicate
-    // bare alias is a binder error)
-    val hits = dims.map(d =>
-      s"h$d AS (SELECT count(*) AS hits FROM r$d ta JOIN r64 tb " +
-        "USING (qid, nid))").mkString(", ")
-    val rows = dims.map(d =>
-      s"SELECT CAST($d AS BIGINT) AS dim, CAST(hits AS BIGINT) AS hits, " +
-        "CAST(total AS BIGINT) AS total, " +
-        "CAST(hits * 1000000 // total AS BIGINT) AS recall_ppm " +
-        s"FROM h$d, tot").mkString(" UNION ALL ")
-    s"WITH n AS (SELECT vec_id, embedding, $nnCols FROM embeddings), " +
-      "q AS (SELECT * FROM n WHERE vec_id % 50 = 0), " +
-      s"$perDim, tot AS (SELECT count(*) AS total FROM r64), $hits $rows"
-  }
-
-  private val GopherQualitySql: String =
-    """WITH p AS (
-      |  SELECT doc_id, doc_id % 9 AS a, 50 + doc_id % 100 AS w,
-      |    1 + doc_id % 30 AS b, doc_id % 10 AS x
-      |  FROM documents),
-      |m AS (
-      |  SELECT doc_id,
-      |    CASE a WHEN 0 THEN w+2 WHEN 1 THEN b+2 WHEN 2 THEN w+2
-      |      WHEN 3 THEN w+2 WHEN 4 THEN 2*w+2 WHEN 5 THEN 60+4*b
-      |      WHEN 6 THEN 200+3*x WHEN 7 THEN w+2 ELSE w END AS n_words,
-      |    CASE a WHEN 5 THEN b+1 WHEN 6 THEN 10+x ELSE 1 END AS n_lines,
-      |    CASE a WHEN 0 THEN 4*w+6 WHEN 1 THEN 4*b+6 WHEN 2 THEN 15*w+6
-      |      WHEN 3 THEN 2*w+6 WHEN 4 THEN 6*w+6 WHEN 5 THEN 238+11*b
-      |      WHEN 6 THEN 780+15*x WHEN 7 THEN 4*w+6 ELSE 4*w END AS wc,
-      |    CASE a WHEN 4 THEN w ELSE 0 END AS sy,
-      |    CASE a WHEN 5 THEN b ELSE 0 END AS bu,
-      |    CASE a WHEN 6 THEN x ELSE 0 END AS el,
-      |    CASE a WHEN 0 THEN w+2 WHEN 1 THEN b+2 WHEN 2 THEN w+2
-      |      WHEN 3 THEN w+2 WHEN 4 THEN w+2 WHEN 5 THEN 60+3*b
-      |      WHEN 6 THEN 200+3*x WHEN 7 THEN 2 ELSE w END AS aw,
-      |    CASE a WHEN 8 THEN 0 WHEN 6 THEN 20 ELSE 2 END AS sh
-      |  FROM p),
-      |d AS (
-      |  SELECT doc_id, n_words, n_lines, sh,
-      |    wc * 100 // n_words AS mean_c,
-      |    sy * 1000000 // n_words AS s_ppm,
-      |    bu * 1000000 // n_lines AS b_ppm,
-      |    el * 1000000 // n_lines AS e_ppm,
-      |    aw * 1000000 // n_words AS a_ppm
-      |  FROM m)
-      |SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
-      |  CAST(n_lines AS BIGINT) AS n_lines,
-      |  CAST(sh AS BIGINT) AS stop_hits,
-      |  CAST(mean_c AS BIGINT) AS mean_len_c100,
-      |  CAST(s_ppm AS BIGINT) AS symbol_ppm,
-      |  CAST(b_ppm AS BIGINT) AS bullet_ppm,
-      |  CAST(e_ppm AS BIGINT) AS ellipsis_ppm,
-      |  CAST(a_ppm AS BIGINT) AS alpha_ppm,
-      |  CASE WHEN n_words < 50 OR n_words > 100000 THEN 'word_count'
-      |       WHEN mean_c < 300 OR mean_c > 1000 THEN 'word_len'
-      |       WHEN s_ppm > 100000 THEN 'symbol'
-      |       WHEN b_ppm > 900000 THEN 'bullet'
-      |       WHEN e_ppm > 300000 THEN 'ellipsis'
-      |       WHEN a_ppm < 800000 THEN 'alpha'
-      |       WHEN sh < 2 THEN 'stopword'
-      |       ELSE 'keep' END AS verdict
-      |FROM d""".stripMargin
-
-  private val HttpParseSql: String =
-    """WITH rawr AS (
-      |  SELECT doc_id,
-      |    (CASE WHEN doc_id % 7 = 1 THEN 'HTTP/1.1 404 Not Found'
-      |          WHEN doc_id % 7 = 5 THEN 'GARBAGE'
-      |          ELSE 'HTTP/1.1 200 OK' END)
-      |    || chr(13) || chr(10) || 'Server: graft'
-      |    || (CASE WHEN doc_id % 7 = 4
-      |             THEN chr(13) || chr(10) || 'Transfer-Encoding: Chunked'
-      |             ELSE '' END)
-      |    || chr(13) || chr(10)
-      |    || 'Content-Type: '
-      |    || (CASE WHEN doc_id % 7 = 2 THEN 'application/pdf'
-      |             WHEN doc_id % 2 = 0 THEN 'text/html; charset="utf-8"'
-      |             ELSE 'Text/HTML' END)
-      |    || (CASE WHEN doc_id % 7 = 3 THEN chr(10) || chr(10)
-      |             ELSE chr(13) || chr(10) || chr(13) || chr(10) END)
-      |    || '<html><body><p>' || text || '</p></body></html>' AS raw
-      |  FROM documents),
-      |p AS (
-      |  SELECT doc_id, raw,
-      |    regexp_extract(raw, '^HTTP/[0-9.]+ ([0-9]{3})', 1) AS st_s,
-      |    regexp_extract(raw, '(?s)^(.*?)\r\n\r\n', 1) AS head,
-      |    CASE WHEN position(chr(13)||chr(10)||chr(13)||chr(10) IN raw) > 0
-      |         THEN 1 ELSE 0 END AS has_sep
-      |  FROM rawr),
-      |q AS (
-      |  SELECT doc_id,
-      |    CASE WHEN st_s = '' THEN NULL ELSE CAST(st_s AS INT) END AS status,
-      |    regexp_extract(head, '(?i)\r\nContent-Type:[ \t]*([^\r\n]*)', 1) AS ct,
-      |    lower(trim(regexp_extract(head,
-      |      '(?i)\r\nTransfer-Encoding:[ \t]*([^\r\n]*)', 1))) AS te,
-      |    has_sep,
-      |    CASE WHEN has_sep = 1
-      |         THEN length(regexp_extract(raw, '(?s)^.*?\r\n\r\n(.*)', 1))
-      |         ELSE 0 END AS body_chars
-      |  FROM p)
-      |SELECT doc_id, status,
-      |  lower(trim(regexp_extract(ct, '^([^;]*)', 1))) AS content_type,
-      |  lower(regexp_extract(ct, '(?i)(?:^|[;\s])charset="?([A-Za-z0-9_-]+)', 1)) AS charset,
-      |  te AS transfer_encoding,
-      |  CASE WHEN status IS NULL OR has_sep = 0 THEN 'malformed'
-      |       WHEN status <> 200 THEN 'bad_status'
-      |       WHEN te <> '' AND te <> 'identity' THEN 'bad_encoding'
-      |       WHEN lower(trim(regexp_extract(ct, '^([^;]*)', 1))) <> 'text/html'
-      |         THEN 'bad_type'
-      |       ELSE 'ok' END AS decision,
-      |  CAST(body_chars AS BIGINT) AS body_chars
-      |FROM q""".stripMargin
-
-  /** The composed politeness chain shared by q229 and the
-    * delay-aware q247: urlDecisions keep rule → robots longest-prefix
-    * rank → exact-N budget draw → per-host sched-v1 md5 rank. Emits
-    * CTEs through `hr(doc_id, host, host_rank)` (plus `ids(i)`).
-    */
-  private val PolitenessChainSql: String = UrlCanonChainSql +
-    """,
-      |k AS (
-      |  SELECT canonical_url, min(doc_id) AS keep_id
-      |  FROM canon WHERE canonical_url IS NOT NULL GROUP BY 1),
-      |kept AS (
-      |  SELECT c.doc_id, c.canonical_url,
-      |    lower(regexp_extract(regexp_extract(c.canonical_url,
-      |      '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1),
-      |      '^(?:[^@]*@)?([^:]*)', 1)) AS host,
-      |    CASE WHEN regexp_replace(regexp_extract(c.canonical_url,
-      |           '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1),
-      |           '/+$', '') = '' THEN '/'
-      |         ELSE regexp_replace(regexp_extract(c.canonical_url,
-      |           '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1),
-      |           '/+$', '') END AS path
-      |  FROM canon c JOIN k
-      |    ON c.canonical_url = k.canonical_url AND c.doc_id = k.keep_id),
-      |ids AS (SELECT unnest(range(0, 20)) AS i),
-      |rl AS (
-      |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com' AS host,
-      |    '/' AS prefix, TRUE AS allow FROM ids
-      |  UNION ALL
-      |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com',
-      |    '/Docs/' || CAST(i % 7 AS VARCHAR), FALSE FROM ids
-      |  UNION ALL
-      |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com',
-      |    '/Docs/' || CAST(i % 7 AS VARCHAR) || '7', TRUE FROM ids),
-      |m AS (
-      |  SELECT f.doc_id, f.host, r.allow,
-      |    row_number() OVER (PARTITION BY f.doc_id
-      |      ORDER BY length(r.prefix) DESC NULLS LAST, r.prefix ASC NULLS FIRST,
-      |        r.allow DESC NULLS LAST) AS rk
-      |  FROM kept f LEFT JOIN rl r
-      |    ON r.host = f.host AND starts_with(f.path, r.prefix)),
-      |alw AS (
-      |  SELECT doc_id, host FROM m WHERE rk = 1 AND coalesce(allow, TRUE)),
-      |bud AS (
-      |  SELECT doc_id, host FROM alw
-      |  QUALIFY row_number() OVER (PARTITION BY host
-      |    ORDER BY substr(md5(concat_ws(':', 'budget-v1',
-      |      CAST(doc_id AS VARCHAR))), 1, 8), doc_id) <= 5),
-      |hr AS (
-      |  SELECT doc_id, host,
-      |    CAST(row_number() OVER (PARTITION BY host
-      |      ORDER BY substr(md5(concat_ws(':', 'sched-v1',
-      |        CAST(doc_id AS VARCHAR))), 1, 8), doc_id) AS BIGINT)
-      |      AS host_rank
-      |  FROM bud)""".stripMargin
-
-  /** The ARITHMETIC mirror of what [[graft.ext.UrlCanon.parseRobots]]
-    * must produce from [[robotsBodiesFixture]] for agent `graftbot`:
-    * %4=0 hosts surface ONLY the specific group's /private rules
-    * (specific beats `*`); every other host surfaces exactly
-    * [[robotsRulesFixture]]'s three `*` rules. Emits CTEs
-    * `ids(i)`, `rl(host, prefix, allow)` — shared by q239 (parse
-    * certification) and q240 (composed pipeline).
-    */
-  private val RobotsParsedRulesSql: String =
-    """ids AS (SELECT unnest(range(0, 20)) AS i),
-      |rl AS (
-      |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com' AS host,
-      |    '/private/' || CAST(i % 3 AS VARCHAR) AS prefix, FALSE AS allow
-      |  FROM ids WHERE i % 4 = 0
-      |  UNION ALL
-      |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com',
-      |    '/private/' || CAST(i % 3 AS VARCHAR) || '/pub', TRUE
-      |  FROM ids WHERE i % 4 = 0
-      |  UNION ALL
-      |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com',
-      |    '/', TRUE FROM ids WHERE i % 4 <> 0
-      |  UNION ALL
-      |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com',
-      |    '/Docs/' || CAST(i % 7 AS VARCHAR), FALSE FROM ids WHERE i % 4 <> 0
-      |  UNION ALL
-      |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com',
-      |    '/Docs/' || CAST(i % 7 AS VARCHAR) || '7', TRUE
-      |  FROM ids WHERE i % 4 <> 0)""".stripMargin
-
-  /** q219's host-edge rollup — shared with the incremental fold q221. */
-  private val LinkGraphSelectSql: String =
-    LinkGraphChainSql +
-      """
-        |SELECT src_host, dst_host, CAST(count(*) AS BIGINT) AS n_links
-        |FROM e0 GROUP BY 1, 2""".stripMargin
-
-  /** Integer fixed-point PageRank chain over a prepared `e(src, dst)`
-    * CTE — q110's certified arithmetic, generated for any iteration
-    * count. Emits node + rank; append the SELECT yourself.
-    */
-  private def pageRankChainSql(iters: Int): String = {
-    val head =
-      """nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        |nn AS (SELECT count(*) AS n FROM nodes),
-        |od AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-        |r0 AS (SELECT node, 1000000000000 // n AS rank FROM nodes CROSS JOIN nn)"""
-        .stripMargin
-    val rounds = (1 to iters).map { i =>
-      s"""m$i AS (SELECT e.dst, CAST(sum(r${i - 1}.rank // od.outdeg) AS BIGINT) AS m
-         |       FROM e JOIN od USING (src) JOIN r${i - 1} ON r${i - 1}.node = e.src GROUP BY 1),
-         |r$i AS (SELECT node,
-         |         ((1000000000000 * 15) // 100) // n + (coalesce(m, 0) * 85) // 100 AS rank
-         |       FROM nodes CROSS JOIN nn LEFT JOIN m$i ON m$i.dst = node)""".stripMargin
-    }.mkString(",\n")
-    head + ",\n" + rounds
-  }
-
-  private val BpeTrainSql: String =
-    bpeChainSql(BpeK) + "\n" +
-      (1 to BpeK).map(i =>
-        s"SELECT CAST($i AS BIGINT) AS rank, pair, cnt FROM best$i")
-        .mkString("", "\nUNION ALL\n", "")
-
-  private val BpeEncodeSql: String =
-    bpeChainSql(BpeK) +
-      s""",
-         |enc AS (
-         |  SELECT w, CAST(len(regexp_extract_all(sym, '[a-z0-9]+')) AS BIGINT) AS n_sym
-         |  FROM vocab$BpeK)
-         |SELECT t.doc_id, CAST(sum(e.n_sym) AS BIGINT) AS n_bpe,
-         |  CAST(count(*) AS BIGINT) AS n_words
-         |FROM tok t JOIN enc e USING (w) GROUP BY t.doc_id""".stripMargin
-
-  /** q206: the chain TRAINS on the 4/5 reference slice, then the
-    * merges are applied to the FULL word dictionary (aw-stages — the
-    * encoder must handle words the trainer never saw) and rolled up
-    * as per-source fertility over the held-out 1/5.
-    */
-  private val BpeFertilitySql: String = {
-    // LEFT JOIN ON TRUE (not a cross join): a merge round that finds
-    // no pair must leave the vocab intact — Spark's learnMerges stops
-    // early and keeps encoding, so the oracle must too (latent on the
-    // current corpus, whose vocab cannot exhaust in 8 rounds)
-    val awStages = (1 to BpeK).map { i =>
-      s"""aw$i AS (
-         |  SELECT w, coalesce(replace(sym, '.' || replace(pair, ' ', '..') || '.',
-         |                             '.' || replace(pair, ' ', '') || '.'), sym) AS sym
-         |  FROM aw${i - 1} LEFT JOIN best$i ON TRUE)""".stripMargin
-    }.mkString(",\n")
-    bpeChainSql(BpeK, trainWhere = "doc_id % 5 <> 0") +
-      s""",
-         |aw0 AS (
-         |  SELECT DISTINCT w,
-         |    '.' || array_to_string(regexp_extract_all(w, '.'), '..') || '.' AS sym
-         |  FROM tok WHERE doc_id % 5 = 0),
-         |$awStages,
-         |enc AS (
-         |  SELECT w, CAST(len(regexp_extract_all(sym, '[a-z0-9]+')) AS BIGINT) AS n_sym
-         |  FROM aw$BpeK),
-         |perdoc AS (
-         |  SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_words,
-         |    CAST(sum(e.n_sym) AS BIGINT) AS n_bpe
-         |  FROM tok t JOIN enc e USING (w) WHERE t.doc_id % 5 = 0 GROUP BY t.doc_id)
-         |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(p.n_words) AS BIGINT) AS n_words,
-         |  CAST(sum(p.n_bpe) AS BIGINT) AS n_bpe,
-         |  CAST(sum(p.n_bpe) * 1000000 // sum(p.n_words) AS BIGINT) AS fert_ppm
-         |FROM perdoc p JOIN documents d USING (doc_id)
-         |GROUP BY d.source""".stripMargin
-  }
-
-  /** q310/q313 SHARED SemDeDup oracle CTE chain (brute-force truth:
-    * all-pairs cosine + recursive-CTE components — never sees the
-    * clustering): ends at `assigned(vec_id, keep_id)`.
-    */
-  private val SemDedupCcCtes: String =
-    """WITH RECURSIVE corpus AS (
-      |  SELECT vec_id, embedding FROM embeddings
-      |  UNION ALL
-      |  SELECT vec_id + 100000,
-      |    list_transform(embedding, x -> CAST(CAST(x AS DOUBLE) * 2 AS FLOAT))
-      |  FROM embeddings WHERE vec_id % 7 = 0
-      |  UNION ALL
-      |  SELECT vec_id + 200000,
-      |    list_transform(embedding, x -> CAST(CAST(x AS DOUBLE) * 4 AS FLOAT))
-      |  FROM embeddings WHERE vec_id % 14 = 0),
-      |n AS (
-      |  SELECT vec_id, embedding,
-      |    list_reduce(list_transform(list_zip(embedding, embedding),
-      |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS nn
-      |  FROM corpus),
-      |pairs AS (
-      |  SELECT a.vec_id AS pa, b.vec_id AS pb
-      |  FROM n a JOIN n b ON a.vec_id < b.vec_id
-      |  WHERE list_reduce(list_transform(list_zip(a.embedding, b.embedding),
-      |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y)
-      |    / sqrt(a.nn * b.nn) >= 0.9),
-      |edges AS (SELECT pa AS u, pb AS v FROM pairs UNION SELECT pb, pa FROM pairs),
-      |reach(node, r) AS (
-      |  SELECT u, u FROM edges
-      |  UNION
-      |  SELECT reach.node, e.v FROM reach JOIN edges e ON e.u = reach.r),
-      |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
-      |assigned AS (
-      |  SELECT c.vec_id, coalesce(cm.component, c.vec_id) AS keep_id
-      |  FROM corpus c LEFT JOIN comp cm ON cm.node = c.vec_id)""".stripMargin
-
-  /** q308/q311 SHARED fetch-decode mirror (the FullDedupClustersSql
-    * rule: the streaming twin certifies against the batch oracle
-    * VERBATIM): every output column closed-form per arm — the oracle
-    * never parses bytes (arms are disjoint by doc_id % 14; chr(233)
-    * é, chr(8364) €, chr(12459/12501/12455) kana, chr(65533) U+FFFD).
-    */
-  private val FetchDecodeArmsSql: String =
-    """SELECT doc_id,
-        |  CASE WHEN doc_id % 14 = 12 THEN NULL
-        |       WHEN doc_id % 14 = 6 THEN 404 ELSE 200 END AS status,
-        |  CASE doc_id % 14 WHEN 12 THEN ''
-        |    WHEN 7 THEN 'application/json' ELSE 'text/html' END
-        |    AS content_type,
-        |  CASE doc_id % 14
-        |    WHEN 0 THEN 'utf-8' WHEN 1 THEN 'windows-1252'
-        |    WHEN 2 THEN 'shift_jis' WHEN 3 THEN 'utf-8'
-        |    WHEN 4 THEN 'windows-1252' WHEN 5 THEN 'utf-8'
-        |    ELSE '' END AS charset,
-        |  CASE doc_id % 14
-        |    WHEN 0 THEN 'utf8' WHEN 1 THEN 'header' WHEN 2 THEN 'meta'
-        |    WHEN 3 THEN 'bom' WHEN 4 THEN 'cp1252_fallback'
-        |    WHEN 5 THEN 'header' ELSE '' END AS cs_source,
-        |  CASE doc_id % 14
-        |    WHEN 6 THEN 'bad_status' WHEN 7 THEN 'bad_type'
-        |    WHEN 8 THEN 'bad_encoding' WHEN 9 THEN 'bad_encoding'
-        |    WHEN 10 THEN 'bad_inflate' WHEN 11 THEN 'bad_charset'
-        |    WHEN 12 THEN 'malformed' WHEN 13 THEN 'bad_inflate'
-        |    ELSE 'ok' END AS decision,
-        |  CASE doc_id % 14
-        |    WHEN 0 THEN text
-        |    WHEN 1 THEN text || ' caf' || chr(233) || ' ' || chr(8364) || '9'
-        |    WHEN 2 THEN '<html><head><meta charset=shift_jis></head><body>'
-        |      || text || ' ' || chr(12459) || chr(12501) || chr(12455)
-        |      || '</body></html>'
-        |    WHEN 3 THEN text || ' caf' || chr(233)
-        |    WHEN 4 THEN text || ' caf' || chr(233)
-        |    WHEN 5 THEN text || ' caf' || chr(65533) || '!'
-        |    ELSE NULL END AS text
-        |FROM documents""".stripMargin
-
-  private val FullDedupClustersSql: String =
-    """WITH RECURSIVE tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL
-        |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT da AS a, db AS b
-        |  FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
-        |  WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8),
-        |edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b, a FROM pairs),
-        |reach(node, r) AS (
-        |  SELECT u, u FROM edges
-        |  UNION
-        |  SELECT reach.node, e.v FROM reach JOIN edges e ON e.u = reach.r),
-        |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
-        |assigned AS (
-        |  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS cluster
-        |  FROM documents d LEFT JOIN comp c ON c.node = d.doc_id)
-        |SELECT doc_id, cluster,
-        |  count(*) OVER (PARTITION BY cluster) AS cluster_size,
-        |  doc_id = cluster AS is_representative
-        |FROM assigned""".stripMargin
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    * DuckDB regex is RE2 (no lookahead): X1's lookahead form is
-    * re-expressed with a capture group, which is semantically identical
-    * for this rewrite.
-    *
-    * TOKENIZER SPELLINGS (round 14): oracles over the driver corpus
-    * spell the tokenizer as `regexp_extract_all(lower(text),
-    * '[a-z0-9]+')` — the ASCII SPECIALIZATION of
-    * `TextAnalysis.tokens`, which is provably identical on the
-    * all-ASCII corpus tables (TextPipelineSpec "tokens ≡ tokensAscii
-    * on pure-ASCII"), and simpler for the oracle to state. The full
-    * Unicode spelling (duckUToks, generated from the same Scala
-    * constants as the operator) appears in the q288+ family, whose
-    * multilingual fixture actually exercises it.
-    */
-  /** q318/q330 shared oracle builder — `damage = true` adds the
-    * arm-10 double-encode content, its closed-form encoding_damage
-    * rung, and the dedup-scope exclusion. ONE builder so the gated
-    * variant cannot drift from the certified base chain.
-    */
-  private def bytesIntakeOracleSql(damage: Boolean): String =
-    UrlCanonChainSql +
-      """,
-        |k AS (
-        |  SELECT canonical_url, min(doc_id) AS keep_id
-        |  FROM canon WHERE canonical_url IS NOT NULL GROUP BY 1),
-        |dec AS (
-        |  SELECT c.doc_id, c.canonical_url,
-        |    CASE WHEN c.canonical_url IS NULL THEN 'bad_url'
-        |         WHEN c.doc_id = k.keep_id THEN 'kept'
-        |         ELSE 'dup_url' END AS decision
-        |  FROM canon c LEFT JOIN k ON c.canonical_url = k.canonical_url),
-        |fd AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 12 WHEN 1 THEN 'malformed' WHEN 2 THEN 'bad_status'
-        |      WHEN 3 THEN 'bad_encoding' WHEN 4 THEN 'bad_type'
-        |      WHEN 5 THEN 'bad_inflate' WHEN 6 THEN 'bad_charset'
-        |      ELSE 'ok' END AS fdec
-        |  FROM documents),
-        |h AS (
-        |  SELECT d.doc_id,
-        |    '<html><head><title>Intake</title></head><body><!-- caf'
-        |    || chr(233)
-        |    || ' --><div class="main"><p>'
-        |    || CASE d.doc_id % 12
-        |         WHEN 7 THEN (SELECT text FROM documents WHERE doc_id = 1)
-        |""".stripMargin +
-      s"         WHEN 8 THEN '$EsGarble' || d.text\n" +
-      """|         WHEN 9 THEN reverse(d.text)
-        |""".stripMargin +
-      (if (damage)
-        // the lenient cp1252 decode of the arm-10 utf-8 bytes: each
-        // planted \u00E9 (C3 A9) surfaces as chr(195) || chr(169)
-        """|         WHEN 10 THEN d.text || ' caf' || chr(195) || chr(169)
-          |           || ' r' || chr(195) || chr(169) || 'sum'
-          |           || chr(195) || chr(169)
-          |""".stripMargin
-      else "") +
-      """|         ELSE d.text END
-        |    || '</p></div></body></html>' AS html
-        |  FROM documents d JOIN fd ON fd.doc_id = d.doc_id
-        |    AND fd.fdec = 'ok'),
-        |""".stripMargin +
-      HtmlExtractCtesSql +
-      """,
-        |lsc AS (
-        |  SELECT doc_id, regexp_extract_all(lower(main_text), '[a-z0-9]+') AS toks
-        |  FROM ext),
-        |lgs AS (
-        |  SELECT doc_id,
-        |    len(list_filter(toks, x -> x IN ('the','and','of','to','is','in','that','it','with','for'))) AS s_en,
-        |    len(list_filter(toks, x -> x IN ('el','la','de','que','y','los','las','por','con','una'))) AS s_es,
-        |    len(list_filter(toks, x -> x IN ('der','die','und','das','ist','nicht','ein','mit','von','den'))) AS s_de,
-        |    len(list_filter(toks, x -> x IN ('le','la','les','et','est','des','une','dans','pour','que'))) AS s_fr,
-        |    len(list_filter(toks, x -> x IN ('il','di','che','la','per','una','sono','non','con','del'))) AS s_it
-        |  FROM lsc),
-        |lg AS (
-        |  SELECT doc_id,
-        |    CASE WHEN greatest(s_en, s_es, s_de, s_fr, s_it) = 0 THEN 'und'
-        |         WHEN s_en = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'en'
-        |         WHEN s_es = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'es'
-        |         WHEN s_de = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'de'
-        |         WHEN s_fr = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'fr'
-        |         WHEN s_it = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'it'
-        |         ELSE 'und' END AS guess
-        |  FROM lgs),
-        |rtok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w,
-        |    generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS p
-        |  FROM documents WHERE doc_id % 5 <> 0),
-        |rbg AS (
-        |  SELECT w AS w1, lead(w) OVER (PARTITION BY doc_id ORDER BY p) AS w2
-        |  FROM rtok QUALIFY w2 IS NOT NULL),
-        |c2 AS (SELECT w1, w2, count(*) AS c2 FROM rbg GROUP BY 1, 2),
-        |stok AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_extract_all(lower(main_text), '[a-z0-9]+')) AS w,
-        |    generate_subscripts(regexp_extract_all(lower(main_text), '[a-z0-9]+'), 1)
-        |      AS p
-        |  FROM ext),
-        |sbg AS (
-        |  SELECT doc_id, w AS w1, lead(w) OVER (PARTITION BY doc_id ORDER BY p) AS w2
-        |  FROM stok QUALIFY w2 IS NOT NULL),
-        |ppm AS (
-        |  SELECT s.doc_id,
-        |    CASE WHEN c2.c2 IS NULL THEN 1 ELSE 0 END AS unseen
-        |  FROM sbg s LEFT JOIN c2 ON c2.w1 = s.w1 AND c2.w2 = s.w2),
-        |lmf AS (
-        |  SELECT doc_id,
-        |    CASE WHEN sum(unseen) * 1000000 // count(*) >= 500000
-        |         THEN 'low' ELSE 'ok' END AS lmflag
-        |  FROM ppm GROUP BY 1),
-        |pre AS (
-        |  SELECT e.doc_id, e.main_text
-        |  FROM ext e
-        |  JOIN dec ON dec.doc_id = e.doc_id AND dec.decision = 'kept'
-        |  JOIN lg ON lg.doc_id = e.doc_id AND lg.guess IN ('en', 'und')
-        |  LEFT JOIN lmf lf ON lf.doc_id = e.doc_id
-        |  WHERE coalesce(lf.lmflag, 'ok') <> 'low'""".stripMargin +
-      (if (damage) " AND e.doc_id % 12 <> 10" else "") +
-      """|),
-        |km AS (SELECT main_text, min(doc_id) AS keep_id FROM pre GROUP BY 1),
-        |dck AS (
-        |  SELECT p.doc_id, km.keep_id FROM pre p
-        |  JOIN km ON km.main_text = p.main_text)
-        |SELECT dec.doc_id, dec.canonical_url,
-        |  CASE WHEN dec.decision <> 'kept' THEN dec.decision
-        |       WHEN fd.fdec <> 'ok' THEN fd.fdec
-        |""".stripMargin +
-      (if (damage)
-        // closed-form: arm 10 is PROVABLY the only damaged arm (every
-        // other ok-arm main_text is pure ASCII -- the guarded fixture
-        // contract -- so no moji pair / U+FFFD / C1 can fire)
-        """|       WHEN dec.doc_id % 12 = 10 THEN 'encoding_damage'
-          |""".stripMargin
-      else "") +
-      """|       WHEN lg.guess IS NOT NULL AND lg.guess NOT IN ('en', 'und')
-        |         THEN 'wrong_language'
-        |       WHEN lf.lmflag = 'low' THEN 'low_quality'
-        |       WHEN dck.keep_id IS NOT NULL AND dck.keep_id <> dec.doc_id
-        |         THEN 'dup_content'
-        |       ELSE 'kept' END AS decision
-        |FROM dec
-        |JOIN fd ON fd.doc_id = dec.doc_id
-        |LEFT JOIN lg ON lg.doc_id = dec.doc_id
-        |LEFT JOIN lmf lf ON lf.doc_id = dec.doc_id
-        |LEFT JOIN dck ON dck.doc_id = dec.doc_id""".stripMargin
-
-
-  /** q222/q333 shared oracle — the exact n-gram decontamination
-    * mirror; ONE definition so the Bloom-prefiltered variant cannot
-    * drift from the exact surface it must equal.
-    */
-  private val NgramDecontamSql: String =
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |    generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1)
-        |      AS pos
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-        |      || ' ' || lead(tok, 3) OVER w || ' ' || lead(tok, 4) OVER w
-        |      || ' ' || lead(tok, 5) OVER w || ' ' || lead(tok, 6) OVER w
-        |      || ' ' || lead(tok, 7) OVER w AS g
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 7) OVER w IS NOT NULL),
-        |ev AS (SELECT DISTINCT g FROM sh WHERE doc_id % 5 = 0)
-        |SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_shared_grams
-        |FROM sh s JOIN ev USING (g)
-        |WHERE s.doc_id % 5 <> 0
-        |GROUP BY 1""".stripMargin
-
-  /** q326/q334 shared oracle — brute-force all-pairs hamming over
-    * the expected image hashes, no knowledge of the banding OR the
-    * wave split; ONE definition so the streaming lifecycle cannot
-    * drift from the batch surface it must equal.
-    */
-  private val ImageNearDupSql: String =
-    s"""SELECT a.name AS id_a, b.name AS id_b,
-      |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS dist
-      |FROM read_parquet('$FixturesDir/images_dhash_expected.parquet') a
-      |JOIN read_parquet('$FixturesDir/images_dhash_expected.parquet') b
-      |  ON a.name < b.name
-      |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3""".stripMargin
-
-  /** q336/q338 shared oracle — the one-shot calibration curve;
-    * ONE definition so the merged-state variant cannot drift from
-    * the surface it must equal.
-    */
-  /** q336/q338/q348 shared score CTEs — per-doc en-stopword score
-    * and lang label (`lab(doc_id, is_en, score)`), ending WITHOUT a
-    * trailing comma.
-    */
-  private val PrScoreCtes: String =
-      """WITH tok AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents),
-        |sc AS (
-        |  SELECT doc_id,
-        |    len(list_filter(toks, x -> x IN ('the','and','of','to','is','in','that','it','with','for'))) AS s_en,
-        |    len(list_filter(toks, x -> x IN ('el','la','de','que','y','los','las','por','con','una'))) AS s_es,
-        |    len(list_filter(toks, x -> x IN ('der','die','und','das','ist','nicht','ein','mit','von','den'))) AS s_de,
-        |    len(list_filter(toks, x -> x IN ('le','la','les','et','est','des','une','dans','pour','que'))) AS s_fr,
-        |    len(list_filter(toks, x -> x IN ('il','di','che','la','per','una','sono','non','con','del'))) AS s_it,
-        |    len(toks) AS n
-        |  FROM tok),
-        |lab AS (
-        |  SELECT doc_id,
-        |    CASE WHEN greatest(s_en, s_es, s_de, s_fr, s_it) = 0 THEN FALSE
-        |         WHEN s_en = greatest(s_en, s_es, s_de, s_fr, s_it) THEN TRUE
-        |         ELSE FALSE END AS is_en,
-        |    CASE WHEN n = 0 THEN 0 ELSE (s_en * 1000000) // n END AS score
-        |  FROM sc)""".stripMargin
-
-  private val PrCurveSql: String = PrScoreCtes +
-      """,
-        |ps AS (
-        |  SELECT score AS threshold, count(*) AS n,
-        |    sum(CASE WHEN is_en THEN 1 ELSE 0 END) AS npos
-        |  FROM lab GROUP BY 1),
-        |cum AS (
-        |  SELECT threshold,
-        |    sum(n) OVER (ORDER BY threshold DESC) AS pred_pos,
-        |    sum(npos) OVER (ORDER BY threshold DESC) AS tp
-        |  FROM ps),
-        |tot AS (
-        |  SELECT sum(CASE WHEN is_en THEN 1 ELSE 0 END) AS totpos FROM lab)
-        |SELECT threshold,
-        |  CAST(pred_pos AS BIGINT) AS pred_pos, CAST(tp AS BIGINT) AS tp,
-        |  CAST(pred_pos - tp AS BIGINT) AS fp,
-        |  CAST(totpos - tp AS BIGINT) AS fn,
-        |  CAST((tp * 1000000) // pred_pos AS BIGINT) AS precision_ppm,
-        |  CAST(CASE WHEN totpos = 0 THEN 0
-        |       ELSE (tp * 1000000) // totpos END AS BIGINT) AS recall_ppm
-        |FROM cum, tot""".stripMargin
-
-  /** q341/q342 shared oracle CTEs — the content-defined chunk table
-    * (`chunks`): per-token q48 md5-12-hex hashes, boundary where the
-    * low 6 bits are zero, exclusive running boundary count, per-chunk
-    * rolling fold with the operator's interpolated constants.
-    */
-  private def cdcChunksCtes(srcSql: String): String =
-    s"""WITH src AS ($srcSql),
-       |tok AS (
-       |  SELECT doc_id,
-       |    unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS t,
-       |    generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1)
-       |      AS p
-       |  FROM src),
-       |hh AS (
-       |  SELECT doc_id, p,
-       |    CAST(list_reduce(list_transform(range(1, 13),
-       |      i -> CAST(CASE WHEN ascii(substr(md5(t), i, 1)) <= 57
-       |                THEN ascii(substr(md5(t), i, 1)) - 48
-       |                ELSE ascii(substr(md5(t), i, 1)) - 87 END AS BIGINT)),
-       |      (a, b) -> a * 16 + b) AS BIGINT) AS h
-       |  FROM tok),
-       |ck AS (
-       |  SELECT doc_id, p, h,
-       |    coalesce(sum(CASE WHEN h % 64 = 0 THEN 1 ELSE 0 END)
-       |      OVER (PARTITION BY doc_id ORDER BY p
-       |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-       |      AS chunk_idx
-       |  FROM hh),
-       |chunks AS (
-       |  SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-       |    CAST(count(*) AS BIGINT) AS n_tokens,
-       |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |      list(h ORDER BY p)),
-       |      (a, b) -> (a * ${graft.ext.TextAnalysis.RollBase} + b)
-       |        % ${graft.ext.TextAnalysis.RollMod}) AS BIGINT) AS chunk_fp
-       |  FROM ck GROUP BY doc_id, chunk_idx)
-       |""".stripMargin
-
-  private val CdcChunksCtes: String =
-    cdcChunksCtes("SELECT doc_id, text FROM documents")
-
-  private val CdcChunksSql: String = CdcChunksCtes +
-    "SELECT doc_id, chunk_idx, n_tokens, chunk_fp FROM chunks"
-
-  /** q223/q346 shared oracle CTEs — the robotsDecide mirror over
-    * the messy-URL fixture (canon chain + rules + longest-prefix
-    * argmax); ONE definition so the policy capstone cannot drift
-    * from the certified site-level decision.
-    */
-  private val RobotsDecideCtes: String = UrlCanonChainSql +
-      """,
-        |f AS (
-        |  SELECT doc_id, url,
-        |    lower(regexp_extract(auth, '^(?:[^@]*@)?([^:]*)', 1)) AS host,
-        |    CASE WHEN regexp_replace(rawpath, '/+$', '') = '' THEN '/'
-        |         ELSE regexp_replace(rawpath, '/+$', '') END AS path
-        |  FROM canon WHERE canonical_url IS NOT NULL),
-        |ids AS (SELECT unnest(range(0, 20)) AS i),
-        |rl AS (
-        |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com' AS host,
-        |    '/' AS prefix, TRUE AS allow FROM ids
-        |  UNION ALL
-        |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com',
-        |    '/Docs/' || CAST(i % 7 AS VARCHAR), FALSE FROM ids
-        |  UNION ALL
-        |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com',
-        |    '/Docs/' || CAST(i % 7 AS VARCHAR) || '7', TRUE FROM ids),
-        |m AS (
-        |  SELECT f.doc_id, f.url, f.host, f.path, r.prefix, r.allow,
-        |    row_number() OVER (PARTITION BY f.doc_id
-        |      ORDER BY length(r.prefix) DESC NULLS LAST, r.prefix ASC NULLS FIRST,
-        |        r.allow DESC NULLS LAST)
-        |      AS rk
-        |  FROM f LEFT JOIN rl r
-        |    ON r.host = f.host AND starts_with(f.path, r.prefix))
-        |""".stripMargin
-
-  /** q345/q349 shared oracle CTEs — the integer error-diffusion
-    * interleave over the 20-source residue weights, ending with
-    * `sch(doc_id, source, src_rank, position)`.
-    */
-  private val WeightedInterleaveCtes: String =
-    """WITH k AS (
-      |  SELECT doc_id, source,
-      |    row_number() OVER (PARTITION BY source ORDER BY doc_id) AS k
-      |  FROM documents),
-      |ky AS (
-      |  SELECT doc_id, source, k,
-      |    (2 * k - 1) * (6 // (CAST(regexp_extract(source, 'src([0-9]+)', 1)
-      |      AS BIGINT) % 3 + 1)) AS key
-      |  FROM k),
-      |sch AS (
-      |  SELECT doc_id, source, CAST(k AS BIGINT) AS src_rank,
-      |    CAST(row_number() OVER (ORDER BY key, source) AS BIGINT) AS position
-      |  FROM ky)
-      |""".stripMargin
-
-  /** q355/q356 shared oracle suffix — the sizeSourcesToWeights →
-    * weightedInterleave → scheduleMixReport chain, closed-form: the
-    * caller supplies an `inp(id, src)` CTE and the per-source weight
-    * expression; this mirrors T = min(n·W/w), the largest-remainder
-    * apportionment (remainder rank DESC, ties by src), the
-    * first-alloc trim, the lcm-6 error-diffusion interleave (both
-    * weight sets are {1,2,3}), and the exact integer deviation audit.
-    * ONE definition so the two certified compositions cannot drift.
-    */
-  private def sizedInterleaveAuditSql(wExpr: String): String =
-    s""",
-      |cnts AS (
-      |  SELECT src, CAST(count(*) AS BIGINT) AS n,
-      |    CAST($wExpr AS BIGINT) AS wgt
-      |  FROM inp GROUP BY src),
-      |tot AS (SELECT CAST(sum(wgt) AS BIGINT) AS wt FROM cnts),
-      |tt AS (SELECT CAST(min((n * wt) // wgt) AS BIGINT) AS t
-      |       FROM cnts, tot),
-      |qa AS (
-      |  SELECT src, wgt, t, wt,
-      |    CAST((t * wgt) // wt AS BIGINT) AS quota,
-      |    CAST((t * wgt) % wt AS BIGINT) AS rem
-      |  FROM cnts, tot, tt),
-      |lv AS (SELECT CAST(t - sum(quota) AS BIGINT) AS lft
-      |       FROM qa GROUP BY t),
-      |al AS (
-      |  SELECT src, quota + CASE WHEN
-      |      row_number() OVER (ORDER BY rem DESC, src) <= lft
-      |    THEN 1 ELSE 0 END AS alloc
-      |  FROM qa, lv),
-      |ranked AS (
-      |  SELECT id, src,
-      |    row_number() OVER (PARTITION BY src ORDER BY id) AS srk
-      |  FROM inp),
-      |sized AS (
-      |  SELECT r.id, r.src FROM ranked r
-      |  JOIN al ON r.src = al.src WHERE r.srk <= al.alloc),
-      |k2 AS (
-      |  SELECT id, src,
-      |    row_number() OVER (PARTITION BY src ORDER BY id) AS k
-      |  FROM sized),
-      |ky2 AS (
-      |  SELECT k2.id, k2.src, k2.k, (2 * k2.k - 1) * (6 // c.wgt) AS key
-      |  FROM k2 JOIN cnts c ON k2.src = c.src),
-      |sch2 AS (
-      |  SELECT id, src, CAST(k AS BIGINT) AS src_rank,
-      |    CAST(row_number() OVER (ORDER BY key, src) AS BIGINT) AS position
-      |  FROM ky2)
-      |SELECT s.src AS source, CAST(count(*) AS BIGINT) AS n_items,
-      |  CAST(max(abs(s.src_rank * t.wt - s.position * c.wgt)) AS BIGINT)
-      |    AS max_dev_units,
-      |  t.wt AS w_total
-      |FROM sch2 s JOIN cnts c ON s.src = c.src, tot t
-      |GROUP BY s.src, t.wt""".stripMargin
-
-  /** q362/q363 shared oracle — brute-force all-pairs hamming over
-    * the UNION of the four image generators' independent expected
-    * hashes (format-blind, banding-blind); ONE definition so the
-    * streaming ingest cannot drift from the batch surface it must
-    * equal.
-    */
-  /** q370/q372 shared oracle — the six-generator brute-force union
-    * (the identical-oracle discipline: the streaming twin must equal
-    * the one-shot capstone VERBATIM).
-    */
-  private val ReencodeSextSql: String =
-    s"""WITH u AS (
-      |  SELECT name, dhash
-      |  FROM read_parquet('$FixturesDir/images_dhash_expected.parquet')
-      |  UNION ALL
-      |  SELECT name, dhash
-      |  FROM read_parquet('$FixturesDir/images_png_expected.parquet')
-      |  UNION ALL
-      |  SELECT name, dhash
-      |  FROM read_parquet('$FixturesDir/images_jpeg_expected.parquet')
-      |  UNION ALL
-      |  SELECT name, dhash
-      |  FROM read_parquet('$FixturesDir/images_gif_expected.parquet')
-      |  UNION ALL
-      |  SELECT name, dhash
-      |  FROM read_parquet('$FixturesDir/images_tiff_expected.parquet')
-      |  UNION ALL
-      |  SELECT name, dhash
-      |  FROM read_parquet('$FixturesDir/images_webp_expected.parquet'))
-      |SELECT a.name AS id_a, b.name AS id_b,
-      |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS dist
-      |FROM u a JOIN u b ON a.name < b.name
-      |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3""".stripMargin
-
-  private val ReencodeQuadSql: String =
-    s"""WITH u AS (
-      |  SELECT name, dhash
-      |  FROM read_parquet('$FixturesDir/images_dhash_expected.parquet')
-      |  UNION ALL
-      |  SELECT name, dhash
-      |  FROM read_parquet('$FixturesDir/images_png_expected.parquet')
-      |  UNION ALL
-      |  SELECT name, dhash
-      |  FROM read_parquet('$FixturesDir/images_jpeg_expected.parquet')
-      |  UNION ALL
-      |  SELECT name, dhash
-      |  FROM read_parquet('$FixturesDir/images_gif_expected.parquet'))
-      |SELECT a.name AS id_a, b.name AS id_b,
-      |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS dist
-      |FROM u a JOIN u b ON a.name < b.name
-      |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3""".stripMargin
-
-  /** q350/q351 shared oracle — the one-shot drift report; ONE
-    * definition so the merged-state variant cannot drift from the
-    * surface it must equal.
-    */
-  private val EmbDriftSql: String =
-      """WITH ea AS (
-        |  SELECT p - 1 AS dim,
-        |    CAST(round(CAST(x AS DOUBLE) * 1048576) AS BIGINT) AS q
-        |  FROM (SELECT unnest(embedding) AS x,
-        |          generate_subscripts(embedding, 1) AS p
-        |        FROM embeddings WHERE vec_id % 2 = 0)),
-        |eb AS (
-        |  SELECT p - 1 AS dim,
-        |    CAST(round((CAST(x AS DOUBLE) +
-        |      CASE WHEN p <= 4 THEN 0.25 ELSE 0.0 END) * 1048576)
-        |      AS BIGINT) AS q
-        |  FROM (SELECT unnest(embedding) AS x,
-        |          generate_subscripts(embedding, 1) AS p
-        |        FROM embeddings WHERE vec_id % 2 = 1)),
-        |sa AS (SELECT dim, count(*) AS n_a, sum(q) AS sum_qa
-        |       FROM ea GROUP BY 1),
-        |sb AS (SELECT dim, count(*) AS n_b, sum(q) AS sum_qb
-        |       FROM eb GROUP BY 1)
-        |SELECT CAST(sa.dim AS BIGINT) AS dim,
-        |  CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        |  CAST(sum_qa AS BIGINT) AS sum_qa, CAST(sum_qb AS BIGINT) AS sum_qb,
-        |  CAST(abs(sum_qa * n_b - sum_qb * n_a) // (n_a * n_b) AS BIGINT)
-        |    AS mean_diff_q,
-        |  CASE WHEN abs(sum_qa * n_b - sum_qb * n_a) // (n_a * n_b)
-        |       >= 131072 THEN 'drifted' ELSE 'stable' END AS verdict
-        |FROM sa JOIN sb ON sa.dim = sb.dim""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS sum_disc_price,
-        |  COUNT(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q2_top10" ->
-      """SELECT month, p_brand, l_partkey, cnt, position FROM (
-        |  SELECT strftime(l_shipdate, '%Y-%m') AS month, p_brand, l_partkey, COUNT(*) AS cnt,
-        |    DENSE_RANK() OVER (PARTITION BY strftime(l_shipdate, '%Y-%m'), p_brand ORDER BY COUNT(*) DESC) AS position
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  GROUP BY 1, 2, 3
-        |) WHERE position <= 10""".stripMargin,
-
-    "q3_left_join" ->
-      """SELECT c_mktsegment,
-        |  COUNT(o_orderkey) AS order_cnt,
-        |  COUNT(*) AS row_cnt,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS revenue
-        |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    "q4_royalties" ->
-      """SELECT s_name, strftime(l_shipdate, '%Y-%m') AS month,
-        |  CAST(SUM(CASE WHEN p_type = 'PROMO' THEN CAST(0 AS DECIMAL(31,4))
-        |    ELSE CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(12,2))) * CAST(p_size + 5 AS DECIMAL(4,0)) AS DECIMAL(31,4))
-        |  END) AS DOUBLE) / 100 AS royalty_usd
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q5_usage_share" ->
-      """WITH g AS (
-        |  SELECT strftime(o_orderdate, '%Y-%m') AS month, n_name,
-        |    SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS rev
-        |  FROM orders
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  GROUP BY 1, 2)
-        |SELECT month, n_name, CAST(rev AS DOUBLE) AS revenue,
-        |  CAST(rev AS DOUBLE) / CAST(SUM(rev) OVER (PARTITION BY month) AS DOUBLE) * 100 AS share_pct
-        |FROM g""".stripMargin,
-
-    "q6_distinct" ->
-      """SELECT DISTINCT c_mktsegment, o_orderpriority
-        |FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin,
-
-    "q7_datestrings" ->
-      """WITH e AS (
-        |  SELECT event_id,
-        |    strftime(ts, '%Y-%m-%dT%H:%M:%S') || '+0' || CAST(user_id % 10 AS VARCHAR) || ':00' AS full_ts
-        |  FROM events)
-        |SELECT event_id,
-        |  substr(full_ts, 1, 10) AS day,
-        |  substr(full_ts, 1, 7) AS mon,
-        |  substr(full_ts, 20, 6) AS off
-        |FROM e""".stripMargin,
-
-    "q8_regex" ->
-      """WITH p AS (
-        |  SELECT p_partkey, p_brand, p_name,
-        |    CAST(p_size AS VARCHAR) || '.' || CAST(p_partkey % 10 AS VARCHAR) AS dotted
-        |  FROM part)
-        |SELECT p_partkey, dotted,
-        |  regexp_replace(dotted, '\.(\d)', '.0\1', 'g') AS norm_id,
-        |  upper(p_brand) AS brand_uc,
-        |  length(p_name) AS name_len,
-        |  lpad(CAST(p_partkey AS VARCHAR), 6, '0') AS padded
-        |FROM p""".stripMargin,
-
-    "q9_case" ->
-      """SELECT CASE WHEN l_quantity < 10 THEN 'small'
-        |  WHEN l_quantity < 30 THEN 'mid' ELSE 'big' END AS bucket,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q10_events_daily" ->
-      """WITH g AS (
-        |  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-        |    COUNT(*) AS n,
-        |    CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total
-        |  FROM events GROUP BY 1, 2)
-        |SELECT event_type, day, n, total, total / n AS avg_val FROM g""".stripMargin,
-
-    "q11_window_lag" ->
-      """WITH g AS (
-        |  SELECT p_brand, strftime(l_shipdate, '%Y-%m') AS month,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS revenue
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  GROUP BY 1, 2)
-        |SELECT p_brand, month, revenue,
-        |  LAG(revenue) OVER (PARTITION BY p_brand ORDER BY month) AS prev_revenue,
-        |  revenue - LAG(revenue) OVER (PARTITION BY p_brand ORDER BY month) AS delta
-        |FROM g""".stripMargin,
-
-    "q12_semi" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_totalprice > 300000)""".stripMargin,
-
-    "q13_anti" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_totalprice > 300000)""".stripMargin,
-
-    "q14_setops" ->
-      """WITH c AS (SELECT DISTINCT c_nationkey AS nationkey FROM customer),
-        |     s AS (SELECT DISTINCT s_nationkey AS nationkey FROM supplier)
-        |SELECT 'both' AS tag, nationkey FROM (SELECT nationkey FROM c INTERSECT SELECT nationkey FROM s)
-        |UNION ALL
-        |SELECT 'cust_only' AS tag, nationkey FROM (SELECT nationkey FROM c EXCEPT SELECT nationkey FROM s)
-        |UNION ALL
-        |SELECT 'supp_only' AS tag, nationkey FROM (SELECT nationkey FROM s EXCEPT SELECT nationkey FROM c)""".stripMargin,
-
-    "q15_rollup" ->
-      """SELECT p_brand, p_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(p_retailprice AS DECIMAL(12,2))) AS DOUBLE) AS retail
-        |FROM part GROUP BY ROLLUP (p_brand, p_type)""".stripMargin,
-
-    "q16_join5" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND r_name = 'ASIA'
-        |GROUP BY n_name""".stripMargin,
-
-    "q17_dedup_exact" ->
-      """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    // Exact all-pairs 3-gram Jaccard — the ground truth the LSH path must
-    // reproduce (and does, at this threshold, with ~1e-15 miss probability).
-    "q18_dedup_minhash" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL
-        |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT da AS doc_a, db AS doc_b,
-        |  CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) AS jaccard
-        |FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
-        |WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8""".stripMargin,
-
-    // Sequential left-to-right folds (list_reduce) mirror Spark's
-    // aggregate() so double dot products are bit-identical.
-    "q19_sim_topk" ->
-      """WITH n AS (
-        |  SELECT vec_id, embedding,
-        |    list_reduce(list_transform(list_zip(embedding, embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS nn
-        |  FROM embeddings
-        |), q AS (SELECT * FROM n WHERE vec_id % 50 = 0),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b)
-        |      / sqrt(q.nn * c.nn) AS cosine
-        |  FROM q JOIN n c ON c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank,
-        |  cosine
-        |FROM scored
-        |QUALIFY rank <= 5""".stripMargin,
-
-    "q20_textstats" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, text,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents)
-        |SELECT doc_id, lang, length(text) AS n_chars_m,
-        |  len(toks) AS n_tokens,
-        |  len(list_distinct(toks)) AS n_types,
-        |  CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) AS ttr,
-        |  CAST(length(array_to_string(toks, '')) AS DOUBLE) / len(toks) AS avg_token_len,
-        |  CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','in','to','is'))) AS DOUBLE) / len(toks) AS stop_ratio,
-        |  len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_bpe,
-        |  md5(array_to_string(toks, ' ')) AS fingerprint
-        |FROM t WHERE len(toks) > 0""".stripMargin,
-
-    // Engine-portable simhash: md5-hex base-16 folds, floor/mod bit math
-    // — every intermediate reproducible in both engines.
-    "q21_dedup_simhash" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL
-        |), h AS (
-        |  SELECT doc_id, list_reduce(list_transform(range(1, 13),
-        |    i -> CAST(CASE WHEN ascii(substr(md5(shingle), i, 1)) <= 57
-        |              THEN ascii(substr(md5(shingle), i, 1)) - 48
-        |              ELSE ascii(substr(md5(shingle), i, 1)) - 87 END AS BIGINT)),
-        |    (a, b) -> a * 16 + b) AS h48
-        |  FROM sh
-        |), bits AS (
-        |  SELECT doc_id, j,
-        |    CASE WHEN sum(2 * ((h48 // CAST(pow(2, j) AS BIGINT)) % 2) - 1) > 0 THEN 1 ELSE 0 END AS bit
-        |  FROM h CROSS JOIN range(0, 48) t(j) GROUP BY 1, 2
-        |), sig AS (
-        |  SELECT doc_id, CAST(sum(bit * CAST(pow(2, j) AS BIGINT)) AS BIGINT) AS v FROM bits GROUP BY 1
-        |), chunk AS (
-        |  SELECT doc_id, c, (v // CAST(pow(2, c * 12) AS BIGINT)) % 4096 AS cv
-        |  FROM sig CROSS JOIN range(0, 4) t(c)
-        |), cand AS (
-        |  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-        |  FROM chunk a JOIN chunk b ON a.c = b.c AND a.cv = b.cv AND a.doc_id < b.doc_id
-        |), ham AS (
-        |  SELECT da, db, CAST(sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END) AS BIGINT) AS hamming
-        |  FROM cand JOIN bits x ON x.doc_id = da JOIN bits y ON y.doc_id = db AND x.j = y.j
-        |  GROUP BY 1, 2)
-        |SELECT da AS doc_a, db AS doc_b, hamming FROM ham WHERE hamming <= 8""".stripMargin,
-
-    // The join-back + dedup round trip is equivalent to ranking the
-    // aggregated counts directly (dense_rank depends only on distinct
-    // count ordering; dedup keys determine every output column).
-    "q22_report_top10" ->
-      """WITH c AS (
-        |  SELECT strftime(l_shipdate, '%Y-%m') AS month, p_brand, COUNT(*) AS cnt
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  GROUP BY 1, 2)
-        |SELECT CAST(DENSE_RANK() OVER (PARTITION BY month ORDER BY cnt DESC) AS BIGINT) AS position,
-        |  month AS date, p_brand, cnt
-        |FROM c QUALIFY position <= 3""".stripMargin,
-
-    "q23_currency" ->
-      """WITH rates AS (
-        |  SELECT n_nationkey AS rk, n_name,
-        |    CAST((n_nationkey % 8) * 25 + 75 AS DECIMAL(6,0)) * CAST(0.01 AS DECIMAL(3,2)) AS rate
-        |  FROM nation WHERE n_nationkey < 20),
-        |j AS (
-        |  SELECT strftime(o_orderdate, '%Y-%m') AS month, n_name,
-        |    CAST(o_totalprice AS DECIMAL(12,2)) * rate AS amount
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  JOIN rates ON c_nationkey = rk),
-        |g AS (SELECT n_name, month, round(SUM(amount), 2) AS total FROM j GROUP BY 1, 2)
-        |SELECT n_name, month, CAST(total AS DOUBLE) AS amount_usd,
-        |  format('{:,}', CAST(floor(total) AS BIGINT)) || '.' ||
-        |    lpad(CAST(CAST(total * 100 AS BIGINT) % 100 AS VARCHAR), 2, '0') AS amount_fmt
-        |FROM g""".stripMargin,
-
-    "q24_usage_report" ->
-      """WITH g AS (
-        |  SELECT strftime(ts, '%Y-%m') AS month, event_type,
-        |    CAST(user_id % 5 AS INT) AS zone,
-        |    SUM(CAST(value AS DECIMAL(12,2))) AS dur
-        |  FROM events GROUP BY 1, 2, 3)
-        |SELECT month, event_type, zone,
-        |  CAST(dur AS DOUBLE) AS total_value,
-        |  CAST(dur AS DOUBLE) / CAST(SUM(dur) OVER (PARTITION BY month) AS DOUBLE) * 100 AS pct_total,
-        |  CAST(dur AS DOUBLE) / CAST(SUM(dur) OVER (PARTITION BY month, zone) AS DOUBLE) * 100 AS pct_zone
-        |FROM g""".stripMargin,
-
-    "q25_events_json" ->
-      s"""SELECT eventId,
-        |  substr(processTime, 1, 10) AS day,
-        |  substr(eventTime, 1, 7) AS mon,
-        |  substr(eventTime, 20, 6) AS off,
-        |  userId, countryCode, duration,
-        |  CAST(CAST(itemPrice AS DECIMAL(12,2)) AS DOUBLE) AS price
-        |FROM read_json_auto('$FixturesDir/events_json/*.json')
-        |WHERE userId IS NOT NULL""".stripMargin,
-
-    "q26_countries_csv" ->
-      s"""SELECT Country, COUNT(*) AS n_events, CAST(SUM(duration) AS BIGINT) AS total_duration
-        |FROM read_json_auto('$FixturesDir/events_json/*.json') e
-        |LEFT JOIN read_csv('$FixturesDir/countries.csv', header=true) c
-        |  ON e.countryCode = c.CountryCode
-        |GROUP BY Country""".stripMargin,
-
-    "q27_sql_udf" ->
-      """WITH g AS (SELECT event_type,
-        |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total
-        |  FROM events GROUP BY event_type),
-        |t AS (SELECT CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS gt FROM events)
-        |SELECT event_type, total, total / gt * 100 AS pct
-        |FROM g CROSS JOIN t""".stripMargin,
-
-    "q28_job_top10" ->
-      raw"""WITH cat AS (
-        |  SELECT regexp_replace(c.id, '\.(\d)', '.0\1', 'g') AS categoryId,
-        |         c.name AS categoryName
-        |  FROM (SELECT unnest(content) AS c
-        |        FROM read_json_auto('$FixturesDir/categories.json'))),
-        |res AS (
-        |  SELECT id AS resourceId, name AS resourceName, categoryId
-        |  FROM read_json_auto('$FixturesDir/resources.json')),
-        |ev AS (
-        |  SELECT substr(processTime, 1, 10) AS date, resourceId
-        |  FROM read_json_auto('$FixturesDir/events_json/*.json')),
-        |c2 AS (SELECT date, resourceId, COUNT(*) AS cnt FROM ev GROUP BY 1, 2),
-        |jd AS (
-        |  SELECT c2.date, c2.resourceId, c2.cnt, res.categoryId,
-        |         res.resourceName, cat.categoryName
-        |  FROM c2 LEFT JOIN res USING (resourceId)
-        |  LEFT JOIN cat ON res.categoryId = cat.categoryId)
-        |SELECT CAST(DENSE_RANK() OVER (PARTITION BY date, categoryId ORDER BY cnt DESC) AS BIGINT) AS position,
-        |  date, categoryId, categoryName, resourceId, resourceName
-        |FROM jd QUALIFY position <= 10""".stripMargin,
-
-    "q29_job_royalties" ->
-      raw"""WITH cat AS (
-        |  SELECT regexp_replace(c.id, '\.(\d)', '.0\1', 'g') AS categoryId,
-        |         CAST(c.percent AS DECIMAL(5,2)) AS percent
-        |  FROM (SELECT unnest(content) AS c
-        |        FROM read_json_auto('$FixturesDir/categories.json'))),
-        |res AS (
-        |  SELECT id AS resourceId, categoryId, providerId, promotion
-        |  FROM read_json_auto('$FixturesDir/resources.json')),
-        |ctry AS (SELECT * FROM read_csv('$FixturesDir/countries.csv', header=true)),
-        |rates(Code, rate) AS (VALUES
-        |  ('USD', CAST(1.0 AS DECIMAL(8,4))),
-        |  ('EUR', CAST(1.08 AS DECIMAL(8,4))),
-        |  ('GBP', CAST(1.27 AS DECIMAL(8,4)))),
-        |ev AS (
-        |  SELECT substr(eventTime, 1, 7) AS month, resourceId, countryCode, itemPrice
-        |  FROM read_json_auto('$FixturesDir/events_json/*.json')),
-        |j AS (
-        |  SELECT ev.month, ev.resourceId, ev.itemPrice, res.providerId,
-        |         res.promotion, cat.percent, ctry.Code
-        |  FROM ev LEFT JOIN res USING (resourceId)
-        |  LEFT JOIN cat ON res.categoryId = cat.categoryId
-        |  LEFT JOIN ctry ON ev.countryCode = ctry.CountryCode),
-        |conv AS (
-        |  SELECT month, providerId, resourceId,
-        |    round(CASE WHEN promotion = 'false'
-        |      THEN round(CAST(itemPrice AS DECIMAL(12,2)) * percent * CAST(0.01 AS DECIMAL(3,2)), 2)
-        |      ELSE CAST(0 AS DECIMAL(12,2)) END * rate, 2) AS amount
-        |  FROM j JOIN rates USING (Code))
-        |SELECT month AS date, providerId, resourceId,
-        |  CAST(CAST(SUM(amount) AS DECIMAL(14,2)) AS VARCHAR) AS amount
-        |FROM conv GROUP BY 1, 2, 3""".stripMargin,
-
-    "q30_job_usage" ->
-      s"""WITH ev AS (
-        |  SELECT substr(eventTime, 1, 7) AS month,
-        |         substr(eventTime, 20, 6) AS timeZone, resourceId, duration
-        |  FROM read_json_auto('$FixturesDir/events_json/*.json')),
-        |g AS (
-        |  SELECT month, timeZone, resourceId,
-        |    CAST(SUM(duration) AS BIGINT) AS totalDurationInSec
-        |  FROM ev GROUP BY 1, 2, 3)
-        |SELECT month, resourceId, timeZone,
-        |  CAST(totalDurationInSec AS DOUBLE) / CAST(SUM(totalDurationInSec) OVER (PARTITION BY month) AS DOUBLE) * 100 AS usagePercentTotal,
-        |  CAST(totalDurationInSec AS DOUBLE) / CAST(SUM(totalDurationInSec) OVER (PARTITION BY month, timeZone) AS DOUBLE) * 100 AS usagePercentRelativeTz,
-        |  totalDurationInSec
-        |FROM g""".stripMargin,
-
-    // Expected decoded-feature rows authored from the GRF1 generator
-    // formula (tools/gen_media_expected.py; provenance-checked against
-    // the fixture bytes) — makes the driver's q31 check rows+schema+hash.
-    "q31_multimodal" ->
-      s"""SELECT name, width, height, channels, meanIntensity
-        |FROM read_parquet('$FixturesDir/media_expected.parquet')""".stripMargin,
-
-    "q32_embed_neardup" ->
-      """WITH n AS (
-        |  SELECT vec_id, embedding,
-        |    list_reduce(list_transform(list_zip(embedding, embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS nn
-        |  FROM embeddings)
-        |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |  list_reduce(list_transform(list_zip(a.embedding, b.embedding),
-        |    z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y)
-        |    / sqrt(a.nn * b.nn) AS cosine
-        |FROM n a JOIN n b ON a.vec_id < b.vec_id
-        |WHERE list_reduce(list_transform(list_zip(a.embedding, b.embedding),
-        |    z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (x, y) -> x + y)
-        |    / sqrt(a.nn * b.nn) >= 0.45""".stripMargin,
-
-    // The salted two-phase sum is algebraically the plain sum (decimal
-    // addition is exact and associative), so the oracle is the direct
-    // groupBy.
-    "q33_salted_agg" ->
-      """SELECT event_type,
-        |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    // Mirrors the ACTIVE df-permille cap: cap = greatest(1, n_docs*10 // 1000),
-    // integer arithmetic in both engines — at sf0.01 the cap really
-    // prunes (df 6-7 stop-shingles) and shifts jaccard values, so this
-    // certifies the capped shape, not the uncapped baseline.
-    "q34_jaccard_pairs" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL
-        |), dfq AS (SELECT shingle, count(*) AS d FROM sh GROUP BY 1),
-        |cap AS (SELECT greatest(1, (count(*) * 10) // 1000) AS c FROM documents),
-        |posting AS (
-        |  SELECT doc_id, shingle FROM sh JOIN dfq USING (shingle)
-        |  WHERE d <= (SELECT c FROM cap)
-        |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-        |  FROM posting a JOIN posting b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT da AS doc_a, db AS doc_b,
-        |  CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) AS jaccard
-        |FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
-        |WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.5""".stripMargin,
-
-    "q35_count_distinct" ->
-      """SELECT event_type, COUNT(DISTINCT user_id) AS users, COUNT(*) AS n
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "q36_pivot" ->
-      """SELECT strftime(ts, '%Y-%m') AS month,
-        |  CAST(SUM(CASE WHEN event_type = 'click' THEN CAST(value AS DECIMAL(12,2)) END) AS DOUBLE) AS click,
-        |  CAST(SUM(CASE WHEN event_type = 'error' THEN CAST(value AS DECIMAL(12,2)) END) AS DOUBLE) AS error,
-        |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(12,2)) END) AS DOUBLE) AS purchase,
-        |  CAST(SUM(CASE WHEN event_type = 'signup' THEN CAST(value AS DECIMAL(12,2)) END) AS DOUBLE) AS signup,
-        |  CAST(SUM(CASE WHEN event_type = 'view' THEN CAST(value AS DECIMAL(12,2)) END) AS DOUBLE) AS view
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q37_json_props" ->
-      """SELECT event_id,
-        |  COALESCE(CAST(json_extract_string(props, '$.k') AS BIGINT), -1) AS k_val
-        |FROM events""".stripMargin,
-
-    "q38_datemath" ->
-      """WITH d AS (
-        |  SELECT date_diff('day', o_orderdate, l_shipdate) AS lag_days,
-        |    strftime(o_orderdate + INTERVAL 30 DAY, '%Y-%m-%d') AS due_day,
-        |    strftime(last_day(CAST(o_orderdate AS DATE)), '%Y-%m-%d') AS eom
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-        |SELECT lag_days, COUNT(*) AS n, min(due_day) AS min_due, max(eom) AS max_eom
-        |FROM d GROUP BY 1""".stripMargin,
-
-    "q39_cube" ->
-      """SELECT p_brand, p_size % 5 AS size_mod, COUNT(*) AS n,
-        |  CAST(SUM(CAST(p_retailprice AS DECIMAL(12,2))) AS DOUBLE) AS retail
-        |FROM part GROUP BY CUBE (p_brand, p_size % 5)""".stripMargin,
-
-    "q40_job_usage_country" ->
-      s"""WITH ev AS (
-        |  SELECT substr(eventTime, 1, 7) AS month, countryCode, resourceId, duration
-        |  FROM read_json_auto('$FixturesDir/events_json/*.json')),
-        |g AS (
-        |  SELECT month, countryCode, resourceId,
-        |    CAST(SUM(duration) AS BIGINT) AS totalDurationInSec
-        |  FROM ev GROUP BY 1, 2, 3)
-        |SELECT month, resourceId, countryCode,
-        |  CAST(totalDurationInSec AS DOUBLE) / CAST(SUM(totalDurationInSec) OVER (PARTITION BY month) AS DOUBLE) * 100 AS usagePercentTotal,
-        |  CAST(totalDurationInSec AS DOUBLE) / CAST(SUM(totalDurationInSec) OVER (PARTITION BY month, countryCode) AS DOUBLE) * 100 AS usagePercentRelativeCountry,
-        |  totalDurationInSec
-        |FROM g""".stripMargin,
-
-    // Same truth as q19: the LSH-bucketed path must reproduce the exact
-    // brute-force top-k (it does at these parameters — see SimSearch).
-    "q41_sim_topk_lsh" ->
-      """WITH n AS (
-        |  SELECT vec_id, embedding,
-        |    list_reduce(list_transform(list_zip(embedding, embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS nn
-        |  FROM embeddings
-        |), q AS (SELECT * FROM n WHERE vec_id % 50 = 0),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b)
-        |      / sqrt(q.nn * c.nn) AS cosine
-        |  FROM q JOIN n c ON c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank,
-        |  cosine
-        |FROM scored
-        |QUALIFY rank <= 5""".stripMargin,
-
-    // Same truth as q19/q41: IVF with nprobe = nlist is exhaustive.
-    "q42_sim_topk_ivf" ->
-      """WITH n AS (
-        |  SELECT vec_id, embedding,
-        |    list_reduce(list_transform(list_zip(embedding, embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS nn
-        |  FROM embeddings
-        |), q AS (SELECT * FROM n WHERE vec_id % 50 = 0),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b)
-        |      / sqrt(q.nn * c.nn) AS cosine
-        |  FROM q JOIN n c ON c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank,
-        |  cosine
-        |FROM scored
-        |QUALIFY rank <= 5""".stripMargin,
-
-    // Same truth as q42: the stored index holds exact float vectors
-    // (parquet float round-trip is lossless), and nprobe = nlist is
-    // exhaustive — so probe-from-storage must equal brute force.
-    "q88_sim_topk_ivf_stored" -> IvfExhaustiveTopkSql,
-    // identical-oracle certification: the streaming serving path must
-    // accumulate exactly the one-shot stored-index probe
-    "q224_ann_stream_probe" -> IvfExhaustiveTopkSql,
-
-    "q225_dataset_card" ->
-      """WITH v2 AS (
-        |  SELECT * FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text, lang, source, n_chars
-        |  FROM documents WHERE doc_id % 13 = 0),
-        |t AS (
-        |  SELECT text, lang, source, n_chars,
-        |    len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_toks
-        |  FROM v2),
-        |a AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-        |    CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-        |    CAST(sum(n_chars) AS BIGINT) AS total_bytes,
-        |    CAST(sum(n_toks) AS BIGINT) AS total_tokens,
-        |    CAST(count(*) - count(DISTINCT md5(text)) AS BIGINT)
-        |      AS n_exact_dup_docs,
-        |    CAST(max(n_chars) AS BIGINT) AS max_doc_bytes,
-        |    CAST(sum(CASE WHEN n_chars < 100 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_short_docs
-        |  FROM t)
-        |SELECT 'n_docs' AS metric, n_docs AS value FROM a
-        |UNION ALL SELECT 'n_sources', n_sources FROM a
-        |UNION ALL SELECT 'n_langs', n_langs FROM a
-        |UNION ALL SELECT 'total_bytes', total_bytes FROM a
-        |UNION ALL SELECT 'total_tokens', total_tokens FROM a
-        |UNION ALL SELECT 'n_exact_dup_docs', n_exact_dup_docs FROM a
-        |UNION ALL SELECT 'max_doc_bytes', max_doc_bytes FROM a
-        |UNION ALL SELECT 'n_short_docs', n_short_docs FROM a""".stripMargin,
-
-    // Crawl-ingestion truth: rebuild every wave's lines from
-    // `documents` (the fixture IS corpus-derived), classify with exact
-    // all-pairs Jaccard, and unroll the index state wave by wave —
-    // wave k's index = corpus ∪ (waves <k)'s ingested sets. The LSH
-    // side must agree because candidates are verified with the same
-    // exact Jaccard; only banding recall differs, and at J>=0.8 with
-    // 32x4 bands the per-pair miss probability is <5e-8 (exact copies
-    // and >=0.9 truncations: <1e-14), far below one expected miss on
-    // this fixture. Batch-internal rule both sides: suppressed iff a
-    // SMALLER-id same-batch doc is similar (conservative set rule).
-    "q190_crawl_ingest_stream" ->
-      """WITH tk AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
-        |  FROM documents),
-        |batch AS (
-        |  SELECT 0 AS batch_id, 200000 + doc_id AS new_id, t
-        |  FROM tk WHERE doc_id % 11 = 0
-        |  UNION ALL
-        |  SELECT 0, 200000 + doc_id,
-        |    ['novel', 'alpha', CAST(doc_id AS VARCHAR),
-        |     'edge', CAST(doc_id*1000+7 AS VARCHAR),
-        |     'mark', CAST(doc_id*1000+13 AS VARCHAR)]
-        |  FROM tk WHERE doc_id % 11 = 3
-        |  UNION ALL
-        |  SELECT 0, 250000 + doc_id,
-        |    ['novel', 'alpha', CAST(doc_id AS VARCHAR),
-        |     'edge', CAST(doc_id*1000+7 AS VARCHAR),
-        |     'mark', CAST(doc_id*1000+13 AS VARCHAR)]
-        |  FROM tk WHERE doc_id % 11 = 3
-        |  UNION ALL
-        |  SELECT 1, 300000 + doc_id, list_slice(t, 1, len(t) - 3)
-        |  FROM tk WHERE doc_id % 11 = 5 AND len(t) >= 40
-        |  UNION ALL
-        |  SELECT 2, 400000 + doc_id,
-        |    ['novel', 'alpha', CAST(doc_id AS VARCHAR),
-        |     'edge', CAST(doc_id*1000+7 AS VARCHAR),
-        |     'mark', CAST(doc_id*1000+13 AS VARCHAR)]
-        |  FROM tk WHERE doc_id % 11 = 3
-        |  UNION ALL
-        |  SELECT 2, 400000 + doc_id,
-        |    ['novel', 'delta', CAST(doc_id AS VARCHAR),
-        |     'edge', CAST(doc_id*1000+7 AS VARCHAR),
-        |     'mark', CAST(doc_id*1000+13 AS VARCHAR)]
-        |  FROM tk WHERE doc_id % 11 = 8),
-        |btok AS (
-        |  SELECT batch_id, new_id, unnest(t) AS tok,
-        |         generate_subscripts(t, 1) AS pos
-        |  FROM batch),
-        |bsh AS (
-        |  SELECT DISTINCT batch_id, new_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM btok WINDOW w AS (PARTITION BY batch_id, new_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL),
-        |bsz AS (SELECT batch_id, new_id, count(*) AS n FROM bsh GROUP BY 1, 2),
-        |ctok AS (
-        |  SELECT doc_id, unnest(t) AS tok, generate_subscripts(t, 1) AS pos FROM tk),
-        |csh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM ctok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL),
-        |csz AS (SELECT doc_id, count(*) AS n FROM csh GROUP BY 1),
-        |mc AS (
-        |  SELECT q.batch_id, q.new_id, q.doc_id FROM (
-        |    SELECT b.batch_id, b.new_id, c.doc_id, count(*) AS i
-        |    FROM bsh b JOIN csh c ON b.shingle = c.shingle
-        |    GROUP BY 1, 2, 3) q
-        |  JOIN bsz ON bsz.batch_id = q.batch_id AND bsz.new_id = q.new_id
-        |  JOIN csz ON csz.doc_id = q.doc_id
-        |  WHERE CAST(q.i AS DOUBLE) / (bsz.n + csz.n - q.i) >= 0.8),
-        |mb AS (
-        |  SELECT p.ba, p.ia, p.bb, p.ib FROM (
-        |    SELECT a.batch_id AS ba, a.new_id AS ia,
-        |           b.batch_id AS bb, b.new_id AS ib, count(*) AS i
-        |    FROM bsh a JOIN bsh b ON a.shingle = b.shingle
-        |      AND (a.batch_id < b.batch_id
-        |        OR (a.batch_id = b.batch_id AND a.new_id < b.new_id))
-        |    GROUP BY 1, 2, 3, 4) p
-        |  JOIN bsz sa ON sa.batch_id = p.ba AND sa.new_id = p.ia
-        |  JOIN bsz sb ON sb.batch_id = p.bb AND sb.new_id = p.ib
-        |  WHERE CAST(p.i AS DOUBLE) / (sa.n + sb.n - p.i) >= 0.8),
-        |c0 AS (
-        |  SELECT new_id,
-        |    CASE WHEN n_idx > 0 THEN 'dup_index'
-        |         WHEN supp THEN 'dup_batch' ELSE 'ingested' END AS status, n_idx
-        |  FROM (
-        |    SELECT b.new_id,
-        |      (SELECT count(DISTINCT doc_id) FROM mc
-        |       WHERE mc.batch_id = 0 AND mc.new_id = b.new_id) AS n_idx,
-        |      EXISTS (SELECT 1 FROM mb
-        |              WHERE mb.bb = 0 AND mb.ib = b.new_id) AS supp
-        |    FROM batch b WHERE b.batch_id = 0)),
-        |ing0 AS (SELECT new_id FROM c0 WHERE status = 'ingested'),
-        |c1 AS (
-        |  SELECT new_id,
-        |    CASE WHEN n_idx > 0 THEN 'dup_index'
-        |         WHEN supp THEN 'dup_batch' ELSE 'ingested' END AS status, n_idx
-        |  FROM (
-        |    SELECT b.new_id,
-        |      (SELECT count(DISTINCT doc_id) FROM mc
-        |       WHERE mc.batch_id = 1 AND mc.new_id = b.new_id)
-        |      + (SELECT count(DISTINCT mb.ia) FROM mb
-        |         JOIN ing0 ON ing0.new_id = mb.ia
-        |         WHERE mb.ba = 0 AND mb.bb = 1 AND mb.ib = b.new_id) AS n_idx,
-        |      EXISTS (SELECT 1 FROM mb
-        |              WHERE mb.ba = 1 AND mb.bb = 1 AND mb.ib = b.new_id) AS supp
-        |    FROM batch b WHERE b.batch_id = 1)),
-        |ing01 AS (SELECT new_id FROM ing0
-        |          UNION ALL SELECT new_id FROM c1 WHERE status = 'ingested'),
-        |c2 AS (
-        |  SELECT new_id,
-        |    CASE WHEN n_idx > 0 THEN 'dup_index'
-        |         WHEN supp THEN 'dup_batch' ELSE 'ingested' END AS status, n_idx
-        |  FROM (
-        |    SELECT b.new_id,
-        |      (SELECT count(DISTINCT doc_id) FROM mc
-        |       WHERE mc.batch_id = 2 AND mc.new_id = b.new_id)
-        |      + (SELECT count(DISTINCT mb.ia) FROM mb
-        |         JOIN ing01 ON ing01.new_id = mb.ia
-        |         WHERE mb.ba < 2 AND mb.bb = 2 AND mb.ib = b.new_id) AS n_idx,
-        |      EXISTS (SELECT 1 FROM mb
-        |              WHERE mb.ba = 2 AND mb.bb = 2 AND mb.ib = b.new_id) AS supp
-        |    FROM batch b WHERE b.batch_id = 2))
-        |SELECT CAST(0 AS BIGINT) AS batch_id, CAST(new_id AS BIGINT) AS new_id,
-        |       status, CAST(n_idx AS BIGINT) AS n_idx_matches,
-        |       CAST(NULL AS VARCHAR) AS line_fp
-        |FROM c0
-        |UNION ALL
-        |SELECT 1, new_id, status, n_idx, NULL FROM c1
-        |UNION ALL
-        |SELECT 2, new_id, status, n_idx, NULL FROM c2
-        |UNION ALL
-        |SELECT 0, CAST(NULL AS BIGINT), 'quarantined', CAST(NULL AS BIGINT),
-        |  md5('{"new_id": ' || CAST(doc_id + 500000 AS VARCHAR) || ', "text": "lost')
-        |FROM tk WHERE doc_id % 11 = 7""".stripMargin,
-
-    // Full-recompute truth for the capstone: q103's v2 derivation +
-    // q55's exact-Jaccard CC machinery over it + argmax-canonical +
-    // per-source rollup. The Spark side reaches the same numbers via
-    // diff-classified incremental clustering — certifying the whole
-    // composition, not just its pieces.
-    "q189_refresh_capstone" ->
-      """WITH RECURSIVE v2 AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END AS text,
-        |    lang, source
-        |  FROM documents WHERE doc_id % 11 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text, lang, source
-        |  FROM documents WHERE doc_id % 13 = 0
-        |), tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM v2
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL
-        |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT da AS a, db AS b
-        |  FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
-        |  WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8),
-        |edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b, a FROM pairs),
-        |reach(node, r) AS (
-        |  SELECT u, u FROM edges
-        |  UNION
-        |  SELECT reach.node, e.v FROM reach JOIN edges e ON e.u = reach.r),
-        |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
-        |scored AS (
-        |  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS cluster,
-        |    CAST(length(d.text) AS BIGINT) AS len, d.source
-        |  FROM v2 d LEFT JOIN comp c ON c.node = d.doc_id),
-        |canon AS (
-        |  SELECT cluster, doc_id AS canon_id FROM scored
-        |  QUALIFY row_number() OVER (PARTITION BY cluster
-        |    ORDER BY len DESC, doc_id) = 1)
-        |SELECT s.source, count(*) AS n_docs,
-        |  count(DISTINCT s.cluster) AS n_clusters,
-        |  CAST(sum(CASE WHEN c.canon_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_canon,
-        |  CAST(sum(CASE WHEN c.canon_id IS NOT NULL THEN s.len END) AS BIGINT)
-        |    AS kept_chars
-        |FROM scored s LEFT JOIN canon c ON s.doc_id = c.canon_id
-        |GROUP BY 1""".stripMargin,
-
-    "q188_hard_negatives" ->
-      """WITH n AS (
-        |  SELECT vec_id, label, embedding,
-        |    list_reduce(list_transform(list_zip(embedding, embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS nn
-        |  FROM embeddings WHERE label IS NOT NULL
-        |), q AS (SELECT * FROM n WHERE vec_id % 50 = 0),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, q.label AS query_label,
-        |    c.vec_id AS neighbor_id, c.label AS neighbor_label,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b)
-        |      / sqrt(q.nn * c.nn) AS cosine
-        |  FROM q JOIN n c ON c.vec_id <> q.vec_id AND c.label <> q.label)
-        |SELECT query_id, query_label, neighbor_id, neighbor_label,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank,
-        |  cosine
-        |FROM scored
-        |QUALIFY rank <= 3""".stripMargin,
-
-    // IDENTICAL SQL to q88: after an APPEND, an exhaustive probe must
-    // equal brute force over the WHOLE corpus — the appended slice is
-    // indistinguishable from a from-scratch build (q89's discipline on
-    // the ANN side).
-    "q187_ivf_append" -> IvfExhaustiveTopkSql,
-
-    // Same truth as q42: nprobe = nlist is exhaustive regardless of
-    // centroid positions, so Lloyd refinement cannot change the result
-    // (it only moves WHICH list each vector sits in).
-    "q44_sim_topk_ivf_lloyd" ->
-      """WITH n AS (
-        |  SELECT vec_id, embedding,
-        |    list_reduce(list_transform(list_zip(embedding, embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS nn
-        |  FROM embeddings
-        |), q AS (SELECT * FROM n WHERE vec_id % 50 = 0),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b)
-        |      / sqrt(q.nn * c.nn) AS cosine
-        |  FROM q JOIN n c ON c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank,
-        |  cosine
-        |FROM scored
-        |QUALIFY rank <= 5""".stripMargin,
-
-    // Integer-microsecond gap math (epoch_us) mirrors Spark's
-    // unix_micros exactly; tie rows carry delta 0 so session boundaries
-    // are order-independent (see Sessionize scaladoc).
-    "q43_sessions" ->
-      """WITH d AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-        |           OVER (PARTITION BY user_id ORDER BY ts) > 1800000000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, ts, value,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM d)
-        |SELECT user_id,
-        |  strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-        |  strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_end,
-        |  count(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
-        |FROM s GROUP BY user_id, sid""".stripMargin,
-
-    // The UNION ALL form is the unambiguous spelling of UNPIVOT.
-    "q52_unpivot" ->
-      """WITH u AS (
-        |  SELECT p_partkey, 'p_retailprice' AS var, CAST(p_retailprice AS DOUBLE) AS val FROM part
-        |  UNION ALL
-        |  SELECT p_partkey, 'p_size' AS var, CAST(p_size AS DOUBLE) AS val FROM part)
-        |SELECT var, COUNT(*) AS n,
-        |  CAST(SUM(CAST(val AS DECIMAL(12,2))) AS DOUBLE) AS total
-        |FROM u GROUP BY var""".stripMargin,
-
-    "q53_string_agg" ->
-      """SELECT r_name,
-        |  string_agg(n_name, ',' ORDER BY n_name) AS nations,
-        |  COUNT(*) AS n_nations
-        |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name""".stripMargin,
-
-    // argmax tie-break order (value DESC, event_id DESC) mirrors the
-    // struct comparison (value first, id second) exactly.
-    "q54_argmax" ->
-      """SELECT event_type, value AS top_value, event_id AS top_event_id
-        |FROM events
-        |QUALIFY row_number() OVER (PARTITION BY event_type
-        |  ORDER BY value DESC, event_id DESC) = 1""".stripMargin,
-
-    "q51_percentiles" ->
-      """SELECT event_type,
-        |  quantile_disc(value, 0.5) AS p50,
-        |  quantile_disc(value, 0.9) AS p90,
-        |  quantile_disc(value, 0.99) AS p99,
-        |  min(value) AS vmin, max(value) AS vmax, count(*) AS n
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "q50_moving_window" ->
-      """WITH g AS (
-        |  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-        |    SUM(CAST(value AS DECIMAL(12,2))) AS rev
-        |  FROM events GROUP BY 1, 2),
-        |d AS (SELECT *, date_diff('day', DATE '1970-01-01', CAST(day AS DATE)) AS daynum FROM g)
-        |SELECT event_type, day, CAST(rev AS DOUBLE) AS day_rev,
-        |  CAST(SUM(rev) OVER w AS DOUBLE) AS rev_7d,
-        |  COUNT(*) OVER w AS n_days_7d,
-        |  CAST(SUM(rev) OVER w AS DOUBLE) / COUNT(*) OVER w AS avg_7d
-        |FROM d WINDOW w AS (PARTITION BY event_type ORDER BY daynum
-        |  RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    // DuckDB's native ASOF LEFT JOIN is the independent truth for the
-    // union+window rewrite; both engines compare on the same
-    // microsecond timestamps.
-    "q49_asof_join" -> AsofEventsSql,
-
-    // identical-oracle certification (the q186/q187 discipline): the
-    // native merge operator must reproduce the union+window rewrite's
-    // certified rows bit for bit on the same input.
-    "q196_asof_native" -> AsofEventsSql,
-
-    "q197_bpe_train" -> BpeTrainSql,
-    "q198_bpe_encode" -> BpeEncodeSql,
-    // identical-oracle certification: the stored-model round trip must
-    // be invisible in the encoded rows.
-    "q199_bpe_stored" -> BpeEncodeSql,
-
-    // DuckDB ASOF JOIN + the same 24-hour CASE gate: stale matches
-    // null out, the purchase row itself survives.
-    "q201_asof_fresh" ->
-      """WITH v AS (
-        |  SELECT user_id, ts, max(event_id) AS view_id
-        |  FROM events WHERE event_type = 'view' GROUP BY user_id, ts),
-        |p AS (
-        |  SELECT event_id, user_id, ts
-        |  FROM events WHERE event_type = 'purchase'),
-        |a AS (
-        |  SELECT p.event_id, p.user_id,
-        |    epoch_us(p.ts) AS t_us, epoch_us(v.ts) AS view_us, v.view_id
-        |  FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts)
-        |SELECT event_id, user_id, t_us,
-        |  CASE WHEN t_us - view_us <= 86400000000 THEN view_us END AS view_us,
-        |  CASE WHEN t_us - view_us <= 86400000000 THEN view_id END AS view_id
-        |FROM a""".stripMargin,
-
-    "q205_graph_walks" -> GraphWalkSql,
-    // identical-oracle certification: the bucketed-edges variant must
-    // produce byte-identical walks
-    "q212_graph_walks_bucketed" -> GraphWalkSql,
-
-    "q219_link_graph" -> LinkGraphSelectSql,
-    // identical-oracle certification: the incremental fold must equal
-    // the one-shot extraction
-    "q221_linkgraph_incremental" -> LinkGraphSelectSql,
-
-    // longest-prefix precedence mirrored with an explicit NULLS
-    // ordering matching Spark's desc/asc defaults
-    // anchor-text mirror: target canonical urls (true scheme/port
-    // rule via the m*Sql helpers — the scheme-relative link's port
-    // rule keys on the SOURCE page's scheme) and token sets all
-    // arithmetic; grouping is the only SQL machinery
-    "q243_anchor_text" -> {
-      val c1 = s"(${mScmSql("t1")} || '://' || ${mHostCanSql("t1")} || " +
-        s"${mPortCanSql("t1", mScmSql("t1"))} || ${mPathCanSql("t1")} || ${mQCanSql("t1")})"
-      val c2 = s"(${mScmSql("i")} || '://' || ${mHostCanSql("t2")} || " +
-        s"${mPortCanSql("t2", mScmSql("i"))} || ${mPathCanSql("t2")} || ${mQCanSql("t2")})"
-      s"""WITH d AS (
-         |  SELECT doc_id AS i, doc_id*(doc_id+3)+1 AS t1,
-         |    doc_id*(doc_id+7)+5 AS t2
-         |  FROM documents),
-         |l AS (
-         |  SELECT 'www.src' || CAST(i % 20 AS VARCHAR) || '.example.com' AS src_host,
-         |    $c1 AS dst_url,
-         |    ['go', 'page' || CAST(t1 % 50 AS VARCHAR), 'now'] AS toks
-         |  FROM d
-         |  UNION ALL
-         |  SELECT 'www.src' || CAST(i % 20 AS VARCHAR) || '.example.com',
-         |    $c2, ['visit', 'hub' || CAST(t2 % 20 AS VARCHAR)]
-         |  FROM d),
-         |a1 AS (
-         |  SELECT dst_url, CAST(count(*) AS BIGINT) AS n_links,
-         |    CAST(count(DISTINCT src_host) AS BIGINT) AS n_src_hosts
-         |  FROM l GROUP BY 1),
-         |tk AS (SELECT dst_url, unnest(toks) AS tok FROM l),
-         |a2 AS (
-         |  SELECT dst_url,
-         |    array_to_string(list_sort(list(DISTINCT tok)), ' ') AS anchor_vocab
-         |  FROM tk GROUP BY 1)
-         |SELECT a1.dst_url, a1.n_links, a1.n_src_hosts, a2.anchor_vocab
-         |FROM a1 JOIN a2 ON a1.dst_url = a2.dst_url""".stripMargin
-    },
-
-    // canonical-override mirror: the effective key per declaration
-    // class (declared absolute / declared root-relative with the
-    // page's scheme / undeclared full canonical form) + the min-id
-    // keep rule — all arithmetic
-    "q244_canonical_override" -> {
-      val i = "doc_id"
-      val bs = mScmSql(i)
-      val own = s"($bs || '://' || ${mHostCanSql(i)} || ${mPortCanSql(i, bs)} " +
-        s"|| ${mPathCanSql(i)} || ${mQCanSql(i)})"
-      s"""WITH e AS (
-         |  SELECT doc_id, CASE
-         |    WHEN doc_id % 12 = 8 THEN $bs || '://www.src'
-         |      || CAST(doc_id % 20 AS VARCHAR) || '.example.com'
-         |      || ${mPortCanSql(i, bs)} || '/Docs/'
-         |      || CAST(doc_id % 50 AS VARCHAR)
-         |    WHEN doc_id % 6 = 2 THEN 'http://www.src'
-         |      || CAST(doc_id % 20 AS VARCHAR) || '.example.com/Docs/'
-         |      || CAST(doc_id % 50 AS VARCHAR)
-         |    ELSE $own END AS cu
-         |  FROM documents),
-         |k AS (SELECT cu, min(doc_id) AS keep FROM e GROUP BY 1)
-         |SELECT e.doc_id, e.cu AS canonical_url,
-         |  CASE WHEN e.doc_id = k.keep THEN 'kept' ELSE 'dup_url' END AS decision
-         |FROM e JOIN k ON e.cu = k.cu""".stripMargin
-    },
-
-    // redirect-chain mirror: final_url/hops/status all closed-form in
-    // the id residues (the %10 arms checked before their %5 parents);
-    // nothing re-walks the chain
-    "q242_redirect_chains" -> {
-      def hostOf(x: String): String =
-        s"('http://www.src' || CAST(($x) % 20 AS VARCHAR) || '.example.com')"
-      s"""WITH d AS (SELECT doc_id AS i FROM documents),
-         |base AS (
-         |  SELECT i AS doc_id,
-         |    ${hostOf("i")} || '/R/' || CAST(i % 100 AS VARCHAR) AS url,
-         |    i AS k, FALSE AS extra
-         |  FROM d
-         |  UNION ALL
-         |  SELECT i + 1000000,
-         |    ${hostOf("i")} || '/R2/' || CAST(i % 100 AS VARCHAR), i, TRUE
-         |  FROM d WHERE i % 10 = 9)
-         |SELECT doc_id, url,
-         |  CASE
-         |    WHEN extra THEN ${hostOf("k")} || '/R/' || CAST(k % 100 AS VARCHAR)
-         |    WHEN k % 5 = 0 THEN url
-         |    WHEN k % 10 = 1 THEN ${hostOf("k+4")} || '/R/' || CAST((k+4) % 100 AS VARCHAR)
-         |    WHEN k % 10 = 6 THEN ${hostOf("k")} || '/R/' || CAST((k+4) % 100 AS VARCHAR)
-         |    WHEN k % 5 = 2 THEN ${hostOf("k+3")} || '/R/' || CAST((k+3) % 100 AS VARCHAR)
-         |    WHEN k % 5 = 3 THEN url
-         |    WHEN k % 10 = 4 THEN url
-         |    ELSE ${hostOf("k")} || '/R2/' || CAST(k % 100 AS VARCHAR)
-         |  END AS final_url,
-         |  CAST(CASE WHEN extra THEN 1 WHEN k % 5 = 0 THEN 0
-         |       WHEN k % 10 = 1 THEN 2 WHEN k % 10 = 6 THEN 1
-         |       WHEN k % 5 = 2 THEN 1 WHEN k % 5 = 3 THEN 0
-         |       WHEN k % 10 = 4 THEN 0 ELSE 1 END AS BIGINT) AS hops,
-         |  CASE WHEN extra THEN 'loop' WHEN k % 5 = 0 THEN 'direct'
-         |       WHEN k % 10 = 1 THEN 'redirected'
-         |       WHEN k % 10 = 6 THEN 'redirected'
-         |       WHEN k % 5 = 2 THEN 'redirected'
-         |       WHEN k % 5 = 3 THEN 'bad_location'
-         |       WHEN k % 10 = 4 THEN 'loop' ELSE 'loop' END AS status
-         |FROM base""".stripMargin
-    },
-
-    // domain-budget mirror: the registrable domain is ARITHMETIC per
-    // residue arm (independent truth for the 3-label cc-SLD rule, the
-    // shared .com collapse, IP and single-label fallthroughs); the
-    // draw is the certified sampleExactN md5-rank form at domain grain
-    "q250_domain_budget" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 5 = 0 THEN 'a' || CAST(doc_id % 3 AS VARCHAR)
-        |           || '.shop.src' || CAST(doc_id % 20 AS VARCHAR) || '.co.uk'
-        |         WHEN doc_id % 5 = 1 THEN 'cdn' || CAST(doc_id % 3 AS VARCHAR)
-        |           || '.src' || CAST(doc_id % 20 AS VARCHAR) || '.com'
-        |         WHEN doc_id % 5 = 2 THEN 'src' || CAST(doc_id % 20 AS VARCHAR)
-        |           || '.com'
-        |         WHEN doc_id % 5 = 3 THEN '10.0.' || CAST(doc_id % 20 AS VARCHAR)
-        |           || '.' || CAST(doc_id % 3 AS VARCHAR)
-        |         ELSE 'intra' || CAST(doc_id % 20 AS VARCHAR) END AS host,
-        |    CASE WHEN doc_id % 5 = 0 THEN 'src' || CAST(doc_id % 20 AS VARCHAR)
-        |           || '.co.uk'
-        |         WHEN doc_id % 5 IN (1, 2) THEN 'src' || CAST(doc_id % 20 AS VARCHAR)
-        |           || '.com'
-        |         WHEN doc_id % 5 = 3 THEN '10.0.' || CAST(doc_id % 20 AS VARCHAR)
-        |           || '.' || CAST(doc_id % 3 AS VARCHAR)
-        |         ELSE 'intra' || CAST(doc_id % 20 AS VARCHAR) END AS domain
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, host, domain,
-        |    row_number() OVER (PARTITION BY domain
-        |      ORDER BY substr(md5(concat_ws(':', 'domain-v1',
-        |        CAST(doc_id AS VARCHAR))), 1, 8), doc_id) AS rk
-        |  FROM f)
-        |SELECT doc_id, host, domain, rk <= 5 AS in_budget FROM r""".stripMargin,
-
-    // conditional-fetch mirror: FULLY closed-form in the residues —
-    // the decoy rounds never surface, the ETag-beats-Last-Modified
-    // rule and every validator string are pure doc_id arithmetic
-    "q251_conditional_fetch" ->
-      """SELECT 'http://www.src' || CAST(doc_id % 20 AS VARCHAR)
-        |    || '.example.com/Docs/' || CAST(doc_id AS VARCHAR) AS url,
-        |  CAST(200 AS INT) AS last_status,
-        |  CASE WHEN doc_id % 4 IN (0, 2) THEN 'revalidate_etag'
-        |       WHEN doc_id % 4 = 1 THEN 'revalidate_modified'
-        |       ELSE 'full' END AS mode,
-        |  CASE WHEN doc_id % 4 IN (0, 2)
-        |         THEN '"v' || CAST(doc_id % 7 AS VARCHAR) || '"'
-        |       WHEN doc_id % 4 = 1
-        |         THEN 'Mon, 12 Jan 2026 0' || CAST(doc_id % 10 AS VARCHAR)
-        |           || ':00:00 GMT'
-        |       ELSE '' END AS validator
-        |FROM documents""".stripMargin,
-
-    // content-drift mirror: the q21 engine-portable simhash chain
-    // (md5-hex base-16 fold, sign-sum bits) at (doc_id, r) grain,
-    // then lag + bit_count(xor) per url
-    "q252_content_drift" ->
-      """WITH hist AS (
-        |  SELECT doc_id, r,
-        |    CASE WHEN doc_id % 3 = 0 THEN text
-        |         WHEN doc_id % 3 = 1 THEN text || ' minor update edition '
-        |           || CAST(r AS VARCHAR)
-        |         WHEN r = 1 THEN translate(text, 'aeiou', 'eioua')
-        |         WHEN r = 2 THEN translate(text, 'aeiou', 'iouae')
-        |         ELSE translate(text, 'aeiou', 'ouaei') END AS t
-        |  FROM documents CROSS JOIN range(1, 4) rr(r)),
-        |tok AS (
-        |  SELECT doc_id, r,
-        |    unnest(regexp_extract_all(lower(t), '[a-z0-9]+')) AS tok,
-        |    generate_subscripts(regexp_extract_all(lower(t), '[a-z0-9]+'), 1)
-        |      AS pos
-        |  FROM hist),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, r,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-        |      AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id, r ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL),
-        |h AS (
-        |  SELECT doc_id, r, list_reduce(list_transform(range(1, 13),
-        |    i -> CAST(CASE WHEN ascii(substr(md5(shingle), i, 1)) <= 57
-        |              THEN ascii(substr(md5(shingle), i, 1)) - 48
-        |              ELSE ascii(substr(md5(shingle), i, 1)) - 87 END AS BIGINT)),
-        |    (a, b) -> a * 16 + b) AS h48
-        |  FROM sh),
-        |bits AS (
-        |  SELECT doc_id, r, j,
-        |    CASE WHEN sum(2 * ((h48 // CAST(pow(2, j) AS BIGINT)) % 2) - 1) > 0
-        |         THEN 1 ELSE 0 END AS bit
-        |  FROM h CROSS JOIN range(0, 48) t(j) GROUP BY 1, 2, 3),
-        |sig AS (
-        |  SELECT doc_id, r,
-        |    CAST(sum(bit * CAST(pow(2, j) AS BIGINT)) AS BIGINT) AS v
-        |  FROM bits GROUP BY 1, 2),
-        |dr AS (
-        |  SELECT doc_id, r, v,
-        |    lag(v) OVER (PARTITION BY doc_id ORDER BY r) AS pv
-        |  FROM sig),
-        |roll AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_revisions,
-        |    CAST(coalesce(sum(CASE WHEN pv IS NOT NULL
-        |      THEN bit_count(xor(v, pv)) END), 0) AS BIGINT) AS total_drift,
-        |    CAST(coalesce(max(CASE WHEN pv IS NOT NULL
-        |      THEN bit_count(xor(v, pv)) END), 0) AS BIGINT) AS max_drift
-        |  FROM dr GROUP BY 1)
-        |SELECT 'http://www.src' || CAST(doc_id % 20 AS VARCHAR)
-        |    || '.example.com/Docs/' || CAST(doc_id AS VARCHAR) AS url,
-        |  n_revisions, total_drift, max_drift,
-        |  max_drift >= 12 AS drifting
-        |FROM roll""".stripMargin,
-
-    // recrawl mirror: change counts closed-form in the residues (the
-    // version sequence r DIV p over r=1..5 steps 4/2/1/1 times for
-    // p=1/2/3/4) — nothing re-walks the history; the streaming twin
-    // q256 certifies against the SAME SQL (shared val — the
-    // incremental fold must equal the batch window exactly)
-    "q246_recrawl_schedule" -> RecrawlSql,
-    "q256_recrawl_stream" -> RecrawlSql,
-
-    // cache-policy mirror: FULLY closed-form — every mode and TTL is
-    // doc_id arithmetic, so the IMF-fixdate parse path (day-name
-    // strip, try_to_timestamp, epoch subtraction, the 10% heuristic
-    // integer divide) is certified against independent truth
-    "q253_cache_policy" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 6 = 5 THEN 404 ELSE 200 END AS INT)
-        |    AS status,
-        |  CASE WHEN doc_id % 6 = 0 THEN 'max_age'
-        |       WHEN doc_id % 6 = 1 THEN 'no_store'
-        |       WHEN doc_id % 6 = 2 THEN 'no_cache'
-        |       WHEN doc_id % 6 = 3 THEN 'expires'
-        |       WHEN doc_id % 6 = 4 THEN 'heuristic'
-        |       ELSE 'none' END AS mode,
-        |  CAST(CASE WHEN doc_id % 6 = 0 THEN (doc_id % 97) * 10
-        |       WHEN doc_id % 12 = 3
-        |         THEN (doc_id % 10) * 3600 + (10 + doc_id % 50) * 60
-        |       WHEN doc_id % 6 = 4 THEN (24 - doc_id % 24) * 360
-        |       ELSE 0 END AS BIGINT) AS ttl_s
-        |FROM documents""".stripMargin,
-
-    // refresh-plan mirror: both residue families recombined in pure
-    // arithmetic — priority from the q246 change counts, mode/TTL
-    // from the q253 header arms, due_in_m the greatest of the three
-    "q257_refresh_plan" ->
-      """SELECT url, priority, mode, ttl_s,
-        |  CAST(greatest(ttl_s // 60, pri, 1) AS BIGINT) AS due_in_m
-        |FROM (
-        |  SELECT
-        |    'http://www.src' || CAST(doc_id % 20 AS VARCHAR)
-        |      || '.example.com/Docs/' || CAST(doc_id AS VARCHAR) AS url,
-        |    CASE WHEN ch * 1000000 // 4 >= 500000 THEN 'hot'
-        |         WHEN ch > 0 THEN 'warm' ELSE 'cold' END AS priority,
-        |    CASE WHEN ch * 1000000 // 4 >= 500000 THEN 1
-        |         WHEN ch > 0 THEN 4 ELSE 24 END AS pri,
-        |    CASE WHEN doc_id % 6 = 0 THEN 'max_age'
-        |         WHEN doc_id % 6 = 1 THEN 'no_store'
-        |         WHEN doc_id % 6 = 2 THEN 'no_cache'
-        |         WHEN doc_id % 6 = 3 THEN 'expires'
-        |         WHEN doc_id % 6 = 4 THEN 'heuristic'
-        |         ELSE 'none' END AS mode,
-        |    CAST(CASE WHEN doc_id % 6 = 0 THEN (doc_id % 97) * 10
-        |         WHEN doc_id % 12 = 3
-        |           THEN (doc_id % 10) * 3600 + (10 + doc_id % 50) * 60
-        |         WHEN doc_id % 6 = 4 THEN (24 - doc_id % 24) * 360
-        |         ELSE 0 END AS BIGINT) AS ttl_s
-        |  FROM (SELECT doc_id,
-        |      CASE WHEN doc_id % 5 = 0 THEN 0
-        |           WHEN doc_id % 4 = 0 THEN 4
-        |           WHEN doc_id % 4 = 1 THEN 2
-        |           ELSE 1 END AS ch
-        |    FROM documents) c) t""".stripMargin,
-
-    // retry-backoff mirror: streaks, states and delays all residue
-    // arithmetic — the latest-only Retry-After rule is certified by
-    // the %5=2 decoy (a non-latest Retry-After: 999 must NOT surface)
-    "q254_retry_backoff" ->
-      """SELECT 'www.h' || CAST(doc_id AS VARCHAR) || '.example.com' AS host,
-        |  CAST(CASE WHEN doc_id % 5 = 4 THEN 9 ELSE 6 END AS BIGINT)
-        |    AS n_attempts,
-        |  CAST(CASE WHEN doc_id % 5 = 0 THEN 200
-        |       WHEN doc_id % 5 = 3 THEN 404 ELSE 503 END AS INT)
-        |    AS last_status,
-        |  CAST(CASE WHEN doc_id % 5 = 0 THEN 0
-        |       WHEN doc_id % 5 IN (1, 2) THEN 3
-        |       WHEN doc_id % 5 = 3 THEN 6 ELSE 9 END AS BIGINT)
-        |    AS consec_failures,
-        |  CASE WHEN doc_id % 5 = 0 THEN 'ok'
-        |       WHEN doc_id % 5 = 4 THEN 'gave_up'
-        |       ELSE 'backoff' END AS state,
-        |  CAST(CASE WHEN doc_id % 5 = 0 THEN 0
-        |       WHEN doc_id % 5 = 1 THEN 10 + doc_id % 50
-        |       WHEN doc_id % 5 = 2 THEN 20
-        |       WHEN doc_id % 5 = 3 THEN 160
-        |       ELSE -1 END AS BIGINT) AS next_delay_s
-        |FROM documents""".stripMargin,
-
-    // crawl-trap mirror: the url set regenerates from the residue
-    // formulas, then DuckDB aggregates INDEPENDENTLY (distinct counts,
-    // max depth, distinct param keys, integer mean) — the operator's
-    // regex extraction chain is certified against a regex-free rebuild
-    "q255_crawl_traps" ->
-      """WITH u AS (
-        |  SELECT DISTINCT
-        |    'www.src' || CAST(doc_id % 10 AS VARCHAR) || '.example.com'
-        |      AS host,
-        |    CASE doc_id % 4 WHEN 0 THEN 'cal' WHEN 1 THEN 'search'
-        |      WHEN 2 THEN 'Docs' ELSE 'about' END AS family,
-        |    CASE doc_id % 4
-        |      WHEN 0 THEN '/cal/'
-        |        || CAST(2000 + (doc_id * (doc_id + 3) + 1) % 26 AS VARCHAR)
-        |        || '/' || CAST((doc_id * (doc_id + 7) + 5) % 12 AS VARCHAR)
-        |        || '/' || CAST((doc_id * (doc_id + 11) + 3) % 28 AS VARCHAR)
-        |      WHEN 1 THEN '/search?f'
-        |        || CAST((doc_id * (doc_id + 5) + 2) % 9 AS VARCHAR)
-        |        || '=' || CAST(doc_id % 3 AS VARCHAR)
-        |        || '&g' || CAST((doc_id * (doc_id + 13) + 7) % 4 AS VARCHAR)
-        |        || '=1'
-        |      WHEN 2 THEN '/Docs/'
-        |        || CAST((doc_id * (doc_id + 9) + 7) % 40 AS VARCHAR)
-        |      ELSE '/about' END AS pq,
-        |    CASE doc_id % 4 WHEN 0 THEN 4 WHEN 2 THEN 2 ELSE 1 END AS d,
-        |    CASE WHEN doc_id % 4 = 1 THEN
-        |      ['f' || CAST((doc_id * (doc_id + 5) + 2) % 9 AS VARCHAR),
-        |       'g' || CAST((doc_id * (doc_id + 13) + 7) % 4 AS VARCHAR)]
-        |      ELSE [] END AS pkeys
-        |  FROM documents),
-        |b AS (
-        |  SELECT host, family, CAST(count(*) AS BIGINT) AS n_urls,
-        |    CAST(max(d) AS BIGINT) AS max_depth,
-        |    CAST(sum(length('http://' || host || pq))
-        |      // count(*) AS BIGINT) AS avg_len
-        |  FROM u GROUP BY 1, 2),
-        |p AS (
-        |  SELECT host, family,
-        |    CAST(count(DISTINCT k) AS BIGINT) AS n_param_keys
-        |  FROM (SELECT host, family, unnest(pkeys) AS k FROM u)
-        |  GROUP BY 1, 2)
-        |SELECT b.host, b.family, b.n_urls, b.max_depth,
-        |  coalesce(p.n_param_keys, 0) AS n_param_keys, b.avg_len,
-        |  b.n_urls >= 10 AND (b.max_depth >= 4
-        |    OR coalesce(p.n_param_keys, 0) >= 4) AS is_trap
-        |FROM b LEFT JOIN p ON b.host = p.host AND b.family = p.family""".stripMargin,
-
-    // gopher-quality mirror (shared GopherQualitySql — see the val's
-    // scaladoc): every metric regenerated from the nine arms' residue
-    // arithmetic, fully independent of the operator's split/filter
-    // chain; the verdict CASE re-applies the precedence
-    "q258_gopher_quality" -> GopherQualitySql,
-
-    // streaming twin: IDENTICAL oracle — the accumulated memory-sink
-    // table must equal the batch output verbatim
-    "q263_gopher_stream" -> GopherQualitySql,
-
-    // script-profile mirror (shared ScriptProfileSql — the streaming
-    // twin q279 certifies against it verbatim)
-    "q259_script_profile" -> ScriptProfileSql,
-    "q279_script_stream" -> ScriptProfileSql,
-
-    // repetition-rules mirror: uniform-line geometry makes every
-    // count closed-form — lines are 10 words x 4 chars (49 chars with
-    // separators, 40 without), 9 2-grams and 6 5-grams per line. The
-    // duplicate/coverage counts per arm are pure residue arithmetic;
-    // the ppm divisions and the verdict CASE mirror the operator.
-    "q260_repetition_rules" ->
-      """WITH p AS (
-        |  SELECT doc_id, doc_id % 5 AS a, 5 + doc_id % 10 AS nl,
-        |    2 + doc_id % 6 AS r
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, a, nl, r,
-        |    CASE a WHEN 0 THEN nl WHEN 2 THEN 3*nl + r + 1
-        |      ELSE nl + r END AS n_lines,
-        |    CASE a WHEN 2 THEN nl + r + 1 ELSE 1 END AS n_paras,
-        |    CASE a WHEN 1 THEN r - 1 WHEN 2 THEN r ELSE 0 END AS ndl,
-        |    CASE a WHEN 2 THEN r ELSE 0 END AS ndp,
-        |    CASE a WHEN 0 THEN 8 WHEN 1 THEN 8*r WHEN 2 THEN 8*(r+1)
-        |      WHEN 3 THEN 24*r ELSE 8*r END AS cov2,
-        |    CASE a WHEN 1 THEN 6*r WHEN 2 THEN 6*(r+1) WHEN 4 THEN 4*r
-        |      ELSE 0 END AS d5
-        |  FROM p),
-        |d AS (
-        |  SELECT doc_id, n_lines, n_paras,
-        |    ndl * 1000000 // n_lines AS dl_ppm,
-        |    ndp * 1000000 // n_paras AS dp_ppm,
-        |    (49 * ndl) * 1000000 // (49 * n_lines) AS dlc_ppm,
-        |    cov2 * 1000000 // (40 * n_lines) AS t2_ppm,
-        |    d5 * 1000000 // (6 * n_lines) AS d5_ppm
-        |  FROM c)
-        |SELECT doc_id, CAST(n_lines AS BIGINT) AS n_lines,
-        |  CAST(n_paras AS BIGINT) AS n_paras,
-        |  CAST(dl_ppm AS BIGINT) AS dup_line_ppm,
-        |  CAST(dp_ppm AS BIGINT) AS dup_para_ppm,
-        |  CAST(dlc_ppm AS BIGINT) AS dup_line_char_ppm,
-        |  CAST(t2_ppm AS BIGINT) AS top_2gram_char_ppm,
-        |  CAST(d5_ppm AS BIGINT) AS dup_5gram_ppm,
-        |  CASE WHEN dl_ppm > 300000 THEN 'dup_line'
-        |       WHEN dp_ppm > 300000 THEN 'dup_para'
-        |       WHEN dlc_ppm > 200000 THEN 'dup_line_char'
-        |       WHEN t2_ppm > 200000 THEN 'top_2gram'
-        |       WHEN d5_ppm > 150000 THEN 'dup_5gram'
-        |       ELSE 'keep' END AS verdict
-        |FROM d""".stripMargin,
-
-    // paragraph-dedup mirror: same fixture arms, keep-first re-derived
-    // with a min() window over raw paragraph strings (the operator
-    // packs (id,pos) into a long and hash-argmins), string_agg ORDER
-    // BY pos rebuild
-    "q261_para_dedup" ->
-      """WITH raw AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 4
-        |      WHEN 0 THEN 'shared block ' || CAST(doc_id % 7 AS VARCHAR)
-        |        || ' lorem ipsum dolor' || chr(10) || chr(10)
-        |        || 'unique zero ' || CAST(doc_id AS VARCHAR)
-        |        || ' alpha beta gamma' || chr(10) || chr(10)
-        |        || 'shared block ' || CAST((doc_id + 3) % 7 AS VARCHAR)
-        |        || ' lorem ipsum dolor'
-        |      WHEN 1 THEN 'unique one ' || CAST(doc_id AS VARCHAR)
-        |        || ' delta epsilon' || chr(10) || chr(10)
-        |        || 'unique one ' || CAST(doc_id AS VARCHAR)
-        |        || ' delta epsilon'
-        |      WHEN 2 THEN 'shared block ' || CAST(doc_id % 7 AS VARCHAR)
-        |        || ' lorem ipsum dolor'
-        |      ELSE 'shared block ' || CAST(doc_id % 7 AS VARCHAR)
-        |        || ' lorem ipsum dolor' || chr(10) || chr(10) || chr(10)
-        |        || 'unique three ' || CAST(doc_id AS VARCHAR) || ' zeta eta'
-        |    END AS text
-        |  FROM documents),
-        |pl AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\n\n+'),
-        |      p -> p <> '') AS ps
-        |  FROM raw),
-        |exx AS (
-        |  SELECT doc_id, unnest(ps) AS para,
-        |    generate_subscripts(ps, 1) - 1 AS pos
-        |  FROM pl),
-        |k AS (
-        |  SELECT doc_id, para, pos, doc_id * 1048576 + pos AS enc,
-        |    min(doc_id * 1048576 + pos) OVER (PARTITION BY para) AS keep
-        |  FROM exx),
-        |r AS (
-        |  SELECT doc_id, count(*) AS n_kept,
-        |    string_agg(para, chr(10) || chr(10) ORDER BY pos) AS text_dedup
-        |  FROM k WHERE enc = keep GROUP BY doc_id)
-        |SELECT pl.doc_id, CAST(len(pl.ps) AS BIGINT) AS n_paras,
-        |  CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept,
-        |  coalesce(r.text_dedup, '') AS text_dedup
-        |FROM pl LEFT JOIN r ON pl.doc_id = r.doc_id""".stripMargin,
-
-    // corpus-capstone mirror: the whole composed chain is residue
-    // arithmetic — pre-dedup rejects by arm, tokens = 60·n_kept with
-    // keep-first as ONE min window over the shared-paragraph residue,
-    // the budget cut as the naive global cumsum
-    "q264_corpus_capstone" ->
-      """WITH b AS (
-        |  SELECT doc_id, doc_id % 5 AS f, doc_id % 9 AS r,
-        |    doc_id % 2 AS h,
-        |    ((doc_id % 71)*(doc_id % 71)) % 71 AS score,
-        |    length(CAST(doc_id AS VARCHAR)) AS dl
-        |  FROM documents),
-        |-- the w/u words are 'w{id}{k:03}': 4+digits(id) chars each,
-        |-- so the f0/f2 (and f3 h=0 mixed) mean word length crosses
-        |-- gopher's 1000 bound for long-enough ids — mirror that gate
-        |-- so the oracle stays correct at ANY id scale, not just the
-        |-- current fixture's (review finding; the round-12 extend-the-
-        |-- mirror-off-fixture discipline)
-        |g AS (
-        |  SELECT *,
-        |    (58*(4+dl)+6) * 100 // 60 AS mc_w,
-        |    (534 + 58*dl) * 100 // 120 AS mc_pu
-        |  FROM b),
-        |s AS (
-        |  SELECT *, CASE WHEN f = 4 THEN 'wrong_script'
-        |    WHEN f = 1 THEN 'quality'
-        |    WHEN f = 0 AND mc_w > 1000 THEN 'quality'
-        |    WHEN f = 2 AND mc_w > 1000 THEN 'quality'
-        |    WHEN f = 2 THEN 'repetitive'
-        |    WHEN f = 3 AND h = 0 AND mc_pu > 1000 THEN 'quality'
-        |    END AS pre
-        |  FROM g),
-        |dd AS (
-        |  SELECT *, CASE WHEN f = 3
-        |    THEN min(doc_id) OVER (PARTITION BY r, f) END AS kp
-        |  FROM s WHERE pre IS NULL AND f IN (0, 3)),
-        |dt AS (
-        |  SELECT doc_id, score,
-        |    CASE WHEN f = 0 THEN 1
-        |      WHEN h = 0 THEN 1 + (CASE WHEN doc_id = kp THEN 1 ELSE 0 END)
-        |      ELSE CASE WHEN doc_id = kp THEN 1 ELSE 0 END END AS n_kept
-        |  FROM dd),
-        |bu AS (SELECT doc_id, score, n_kept, 60 * n_kept AS n_tokens
-        |  FROM dt),
-        |cm AS (
-        |  SELECT doc_id, sum(n_tokens) OVER (ORDER BY score DESC, doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM bu WHERE n_kept > 0)
-        |SELECT s.doc_id,
-        |  CASE WHEN s.pre IS NOT NULL THEN s.pre
-        |       WHEN bu.n_kept = 0 THEN 'all_duplicate'
-        |       WHEN cm.cum <= 9000 THEN 'kept'
-        |       ELSE 'over_budget' END AS decision,
-        |  CAST(bu.n_tokens AS BIGINT) AS n_tokens,
-        |  CAST(cm.cum AS BIGINT) AS cum_cost
-        |FROM s
-        |LEFT JOIN bu ON s.doc_id = bu.doc_id
-        |LEFT JOIN cm ON s.doc_id = cm.doc_id""".stripMargin,
-
-    // c4-rules mirror (shared C4RulesSql — the streaming twin q271
-    // certifies against it verbatim)
-    "q265_c4_rules" -> C4RulesSql,
-    "q271_c4_stream" -> C4RulesSql,
-
-    // norm-dedup mirror: expected normalized string + keep windows
-    // from residues — the oracle never normalizes text
-    "q266_norm_dedup" ->
-      """WITH p AS (
-        |  SELECT doc_id, doc_id % 100 AS g FROM documents),
-        |n AS (
-        |  SELECT doc_id, g,
-        |    'number 00 alpha cafe ' || repeat('x', g + 3)
-        |      || ' street the end' AS norm_text
-        |  FROM p)
-        |SELECT doc_id, norm_text,
-        |  CAST(min(doc_id) OVER (PARTITION BY g) AS BIGINT) AS keep_id,
-        |  CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS n_copies,
-        |  doc_id <> min(doc_id) OVER (PARTITION BY g) AS is_dup
-        |FROM n""".stripMargin,
-
-    // nb-classifier mirror (shared NbClassifierSql — the incremental
-    // q278 certifies against it verbatim: merged batch models must
-    // equal the one-shot train)
-    "q267_nb_classifier" -> NbClassifierSql,
-    "q278_nb_incremental" -> NbClassifierSql,
-
-
-    // dsir-select mirror: target-vs-raw weights from residue sums,
-    // arm scores, then the naive single-window running sum
-    "q268_dsir_select" ->
-      """WITH d AS (
-        |  SELECT doc_id, doc_id % 4 AS r, doc_id % 5 AS t5
-        |  FROM documents),
-        |tot AS (
-        |  SELECT count(*) AS n,
-        |    sum(CASE WHEN t5 = 0 THEN 1 ELSE 0 END) AS nt,
-        |    sum(CASE WHEN r = 0 THEN 1 ELSE 0 END) AS n0,
-        |    sum(CASE WHEN r = 1 THEN 1 ELSE 0 END) AS n1,
-        |    sum(CASE WHEN r = 2 THEN 1 ELSE 0 END) AS n2,
-        |    sum(CASE WHEN r = 3 THEN 1 ELSE 0 END) AS n3
-        |  FROM d),
-        |w AS (
-        |  SELECT
-        |    (2*nt+1)*1000000 // (4*nt+4)
-        |      - (2*n0+n2+n3+1)*1000000 // (3*n+4) AS wf,
-        |    1000000 // (4*nt+4)
-        |      - (n1+n2+1)*1000000 // (3*n+4) AS wj,
-        |    (nt+1)*1000000 // (4*nt+4)
-        |      - (n+1)*1000000 // (3*n+4) AS wt,
-        |    (nt+1)*1000000 // (4*nt+4)
-        |      - (n1+n3+1)*1000000 // (3*n+4) AS we
-        |  FROM tot),
-        |sc AS (
-        |  SELECT doc_id,
-        |    CASE r WHEN 0 THEN 2*wf + wt WHEN 1 THEN wj + wt + we
-        |      WHEN 2 THEN wf + wj + wt ELSE wf + wt + we END AS score,
-        |    3 AS cost
-        |  FROM d, w),
-        |c AS (
-        |  SELECT doc_id, score, cost,
-        |    sum(cost) OVER (ORDER BY score DESC, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM sc)
-        |SELECT doc_id, CAST(score AS BIGINT) AS score,
-        |  CAST(cost AS BIGINT) AS cost, CAST(cum AS BIGINT) AS cum_cost,
-        |  cum <= 600 AS selected
-        |FROM c""".stripMargin,
-
-    // warc-split mirror (shared WarcSplitSql — the streaming twin
-    // q282 certifies against it verbatim)
-    "q269_warc_split" -> WarcSplitSql,
-    "q282_warc_stream" -> WarcSplitSql,
-
-    // file-skipping mirror: the four-way decision as residue CASE
-    "q270_file_skipping" ->
-      """WITH m AS (
-        |  SELECT 'f' || CAST(doc_id AS VARCHAR) AS file,
-        |    'p' || CAST(doc_id % 4 AS VARCHAR) AS part,
-        |    CAST(doc_id * 10 AS BIGINT) AS min_v,
-        |    CAST(doc_id * 10 + 8 + doc_id % 5 AS BIGINT) AS max_v,
-        |    CAST(100 + doc_id % 50 AS BIGINT) AS rows,
-        |    doc_id % 4 AS pn
-        |  FROM documents)
-        |SELECT file, part, min_v, max_v, rows,
-        |  CASE WHEN pn >= 2 THEN 'partition_pruned'
-        |       WHEN max_v < 1000 OR min_v > 2000 THEN 'skip'
-        |       WHEN min_v >= 1000 AND max_v <= 2000 THEN 'full'
-        |       ELSE 'scan' END AS decision
-        |FROM m""".stripMargin,
-
-    // archive-intake mirror: decisions and extracted text purely from
-    // (id, r) residues — nothing is parsed oracle-side
-    "q272_archive_intake" ->
-      """WITH p AS (
-        |  SELECT doc_id, doc_id % 10 AS m, 1 + doc_id % 3 AS rr
-        |  FROM documents),
-        |recs AS (
-        |  SELECT doc_id, m, unnest(range(0, rr)) AS r
-        |  FROM p WHERE m <> 9),
-        |cls AS (
-        |  SELECT doc_id, m, r, CAST(r AS BIGINT) AS rec_idx,
-        |    (doc_id + r) % 6 AS c, 3 + (doc_id + r) % 5 AS w
-        |  FROM recs)
-        |SELECT doc_id, rec_idx,
-        |  CASE WHEN m = 7 THEN 'bad_archive'
-        |       WHEN r % 2 = 1 THEN 'not_response'
-        |       WHEN c = 3 THEN 'bad_status'
-        |       WHEN c = 4 THEN 'bad_type'
-        |       ELSE 'ok' END AS decision,
-        |  CASE WHEN m <> 7 AND r % 2 = 0 AND c NOT IN (3, 4)
-        |       THEN repeat('word ', CAST(w AS INT)) || 'end' END AS text,
-        |  CASE WHEN m <> 7 AND r % 2 = 0 AND c NOT IN (3, 4)
-        |       THEN CAST(w + 1 AS BIGINT) END AS n_words
-        |FROM cls
-        |UNION ALL
-        |SELECT doc_id, CAST(NULL AS BIGINT), 'empty_archive',
-        |  CAST(NULL AS VARCHAR), CAST(NULL AS BIGINT)
-        |FROM p WHERE m = 9""".stripMargin,
-
-    // bitext-mining mirror: the same symmetric-cosine fold (the q19
-    // list_reduce idiom), shifted-integer margin, backward top-1 from
-    // the SAME pair scores
-    "q273_bitext_mine" ->
-      """WITH n AS (
-        |  SELECT vec_id, embedding,
-        |    list_reduce(list_transform(list_zip(embedding, embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)),
-        |      (a, b) -> a + b) AS nn
-        |  FROM embeddings),
-        |s AS (SELECT * FROM n WHERE vec_id % 2 = 0),
-        |t AS (SELECT * FROM n WHERE vec_id % 2 = 1),
-        |fwd AS (
-        |  SELECT s.vec_id AS src_id, t.vec_id AS tgt_id,
-        |    list_reduce(list_transform(list_zip(s.embedding, t.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)),
-        |      (a, b) -> a + b) / sqrt(s.nn * t.nn) AS cosine
-        |  FROM s JOIN t ON true),
-        |rk AS (
-        |  SELECT src_id, tgt_id,
-        |    CAST(floor((cosine + 1) * 1000000) AS BIGINT) AS sc,
-        |    row_number() OVER (PARTITION BY src_id
-        |      ORDER BY cosine DESC, tgt_id) AS r
-        |  FROM fwd),
-        |ag AS (
-        |  SELECT src_id, sum(sc) AS ssum, count(*) AS kk,
-        |    max(CASE WHEN r = 1 THEN tgt_id END) AS tgt_id,
-        |    max(CASE WHEN r = 1 THEN sc END) AS top_sim_s
-        |  FROM rk WHERE r <= 4 GROUP BY src_id),
-        |mg AS (
-        |  SELECT src_id, tgt_id, top_sim_s,
-        |    CASE WHEN ssum > 0
-        |      THEN CAST(top_sim_s * 1000 * kk // ssum AS BIGINT) END
-        |      AS margin_c1000
-        |  FROM ag),
-        |bw AS (
-        |  SELECT tgt_id, src_id AS b_src,
-        |    row_number() OVER (PARTITION BY tgt_id
-        |      ORDER BY cosine DESC, src_id) AS r
-        |  FROM fwd)
-        |SELECT mg.src_id, mg.tgt_id, mg.top_sim_s, mg.margin_c1000,
-        |  coalesce(bw.b_src = mg.src_id, FALSE) AS mutual,
-        |  coalesce(mg.margin_c1000 > 1005, FALSE) AS accepted
-        |FROM mg
-        |LEFT JOIN (SELECT tgt_id, b_src FROM bw WHERE r = 1) bw
-        |  ON mg.tgt_id = bw.tgt_id""".stripMargin,
-
-    // span-dedup mirror: keepers from min windows over residues,
-    // every rebuilt text closed-form — no span fingerprinting
-    // oracle-side
-    "q274_c4_span_dedup" ->
-      """WITH d AS (
-        |  SELECT doc_id, doc_id % 5 AS a, doc_id % 9 AS g
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id, a, g,
-        |    min(CASE WHEN a = 1 THEN doc_id END)
-        |      OVER (PARTITION BY g) AS kb,
-        |    min(CASE WHEN a = 4 THEN doc_id END)
-        |      OVER (PARTITION BY g) AS kc
-        |  FROM d),
-        |f AS (
-        |  SELECT doc_id, a, kb, kc,
-        |    CAST(doc_id AS VARCHAR) AS i, CAST(g AS VARCHAR) AS gs
-        |  FROM w)
-        |SELECT doc_id,
-        |  CAST(CASE WHEN a = 4 THEN 3 ELSE 5 END AS BIGINT) AS n_sents,
-        |  CAST(CASE WHEN a = 0 OR a = 2 THEN 5
-        |            WHEN a = 1 THEN
-        |              CASE WHEN doc_id = kb THEN 5 ELSE 2 END
-        |            WHEN a = 3 THEN 2
-        |            ELSE CASE WHEN doc_id = kc THEN 3 ELSE 0 END
-        |       END AS BIGINT) AS n_kept,
-        |  CASE WHEN a = 0 THEN
-        |    'u'||i||'x0 alpha beta. u'||i||'x1 alpha beta. u'||i
-        |      ||'x2 alpha beta. u'||i||'x3 alpha beta. u'||i
-        |      ||'x4 alpha beta.'
-        |  WHEN a = 1 AND doc_id = kb THEN
-        |    'b'||gs||'x0 alpha beta. b'||gs||'x1 alpha beta. b'||gs
-        |      ||'x2 alpha beta. u'||i||'x3 alpha beta. u'||i
-        |      ||'x4 alpha beta.'
-        |  WHEN a = 1 THEN
-        |    'u'||i||'x3 alpha beta. u'||i||'x4 alpha beta.'
-        |  WHEN a = 2 THEN
-        |    'p'||gs||'x0 alpha beta. p'||gs||'x1 alpha beta. u'||i
-        |      ||'x2 alpha beta. u'||i||'x3 alpha beta. u'||i
-        |      ||'x4 alpha beta.'
-        |  WHEN a = 3 THEN 'r'||i||' alpha beta. u'||i||'x4 alpha beta.'
-        |  WHEN doc_id = kc THEN
-        |    'c'||gs||'x0 alpha beta. c'||gs||'x1 alpha beta. c'||gs
-        |      ||'x2 alpha beta.'
-        |  ELSE '' END AS text_dedup
-        |FROM f""".stripMargin,
-
-    // norm-decontamination mirror: the flag set and gram count are
-    // pure residue facts (every %5=1 doc shares exactly the 5 grams
-    // of its normalized 8-token sentence)
-    "q275_norm_decontaminate" ->
-      """SELECT doc_id, CAST(5 AS BIGINT) AS n_shared_grams
-        |FROM documents WHERE doc_id % 5 = 1""".stripMargin,
-
-    // frontier-rank mirror: both enumerations as plain windows; host
-    // 13's authority coalesces to 0 (withheld from the ranks table)
-    "q276_frontier_rank" ->
-      """WITH u AS (
-        |  SELECT doc_id, doc_id % 20 AS n,
-        |    'h' || CAST(doc_id % 20 AS VARCHAR) AS host,
-        |    'http://h' || CAST(doc_id % 20 AS VARCHAR) || '/d/'
-        |      || CAST(doc_id AS VARCHAR) AS url
-        |  FROM documents),
-        |sl AS (
-        |  SELECT host, url,
-        |    CASE WHEN n = 13 THEN 0 ELSE (n * n) % 23 END AS authority,
-        |    row_number() OVER (PARTITION BY host ORDER BY url) AS slot
-        |  FROM u)
-        |SELECT host, url, CAST(slot AS BIGINT) AS slot,
-        |  CAST(authority AS BIGINT) AS authority,
-        |  CAST(row_number() OVER (ORDER BY slot, authority DESC,
-        |    host, url) AS BIGINT) AS fetch_seq
-        |FROM sl""".stripMargin,
-
-    // ppl-buckets mirror: the percentile_disc DEFINITION over the
-    // group histogram — integer cum·3 ≥ k·n, no engine quantile call
-    "q277_ppl_buckets" ->
-      """WITH d AS (
-        |  SELECT doc_id, 'l' || CAST(doc_id % 3 AS VARCHAR) AS lang,
-        |    CAST((doc_id * doc_id) % 101 AS BIGINT) AS score
-        |  FROM documents),
-        |h AS (
-        |  SELECT lang, score AS v, count(*) AS w
-        |  FROM d GROUP BY 1, 2),
-        |c AS (
-        |  SELECT lang, v,
-        |    sum(w) OVER (PARTITION BY lang ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(w) OVER (PARTITION BY lang) AS n
-        |  FROM h),
-        |b AS (
-        |  SELECT lang,
-        |    CAST(min(CASE WHEN cum * 3 >= n THEN v END) AS BIGINT) AS t1,
-        |    CAST(min(CASE WHEN cum * 3 >= 2 * n THEN v END) AS BIGINT)
-        |      AS t2
-        |  FROM c GROUP BY lang)
-        |SELECT doc_id, d.lang, score, t1, t2,
-        |  CASE WHEN score <= t1 THEN 'head'
-        |       WHEN score <= t2 THEN 'middle'
-        |       ELSE 'tail' END AS bucket
-        |FROM d JOIN b ON d.lang = b.lang""".stripMargin,
-
-    // web-corpus-capstone mirror: NbClassifierSql's residue-sum weight
-    // arithmetic recombined with the arm decision table — the whole
-    // bytes-to-corpus chain as closed-form arithmetic
-    "q280_web_corpus_capstone" ->
-      """WITH d AS (SELECT doc_id, doc_id % 6 AS c FROM documents),
-        |t2 AS (
-        |  SELECT doc_id, 1 + doc_id % 5 AS p, doc_id % 2 AS par
-        |  FROM documents),
-        |tot AS (
-        |  SELECT
-        |    sum(CASE WHEN par = 0 THEN p ELSE 0 END) AS cg,
-        |    sum(CASE WHEN par = 1 THEN p ELSE 0 END) AS cs,
-        |    sum(CASE WHEN par = 0 THEN 1 ELSE 0 END) AS ne,
-        |    sum(CASE WHEN par = 1 THEN 1 ELSE 0 END) AS no
-        |  FROM t2),
-        |w AS (
-        |  SELECT
-        |    (cg+1)*1000000 // (cg + 2*ne + 4)
-        |      - 1000000 // (cs + 2*no + 4) AS wg,
-        |    1000000 // (cg + 2*ne + 4)
-        |      - (cs+1)*1000000 // (cs + 2*no + 4) AS ws,
-        |    (ne+1)*1000000 // (cg + 2*ne + 4)
-        |      - (no+1)*1000000 // (cs + 2*no + 4) AS wt
-        |  FROM tot)
-        |SELECT doc_id,
-        |  CASE c WHEN 1 THEN 'bad_status' WHEN 5 THEN 'bad_type'
-        |    WHEN 2 THEN 'brace' WHEN 3 THEN 'few_lines'
-        |    WHEN 0 THEN CASE WHEN 6*wg + 3*wt > 0
-        |      THEN 'kept' ELSE 'low_quality' END
-        |    ELSE CASE WHEN 6*ws + 3*wt > 0
-        |      THEN 'kept' ELSE 'low_quality' END END AS decision,
-        |  CAST(CASE WHEN c = 0 THEN 6*wg + 3*wt
-        |            WHEN c = 4 THEN 6*ws + 3*wt END AS BIGINT) AS score
-        |FROM d, w""".stripMargin,
-
-    // chat-template mirror (shared ChatTemplateSql — the streaming
-    // twin q285 certifies against it verbatim)
-    "q281_chat_template" -> ChatTemplateSql,
-    "q285_chat_stream" -> ChatTemplateSql,
-
-    // preference-pairs mirror: prompt groups re-derived from residue
-    // tags with a min window over the valid arms only
-    "q283_preference_pairs" ->
-      """WITH d AS (SELECT doc_id, doc_id % 6 AS a FROM documents),
-        |v AS (
-        |  SELECT doc_id,
-        |    CASE WHEN a = 5 THEN (doc_id - 5) % 100
-        |         ELSE doc_id % 100 END AS tag
-        |  FROM d WHERE a IN (0, 5)),
-        |k AS (
-        |  SELECT doc_id, min(doc_id) OVER (PARTITION BY tag) AS keep_id
-        |  FROM v)
-        |SELECT d.doc_id,
-        |  CASE WHEN a IN (3, 4) THEN 'missing'
-        |       WHEN a = 1 THEN 'identical'
-        |       WHEN a = 2 THEN 'near_identical'
-        |       WHEN k.keep_id <> d.doc_id THEN 'dup_prompt'
-        |       ELSE 'keep' END AS verdict,
-        |  CAST(k.keep_id AS BIGINT) AS keep_id
-        |FROM d LEFT JOIN k ON d.doc_id = k.doc_id""".stripMargin,
-
-    // pack-masks mirror: independent window cumsum + range explode
-    "q284_pack_masks" ->
-      """WITH d AS (
-        |  SELECT doc_id, doc_id % 4 AS part, 10 + doc_id % 50 AS n_tok
-        |  FROM documents),
-        |o AS (
-        |  SELECT doc_id, part, n_tok,
-        |    coalesce(sum(n_tok) OVER (PARTITION BY part ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS off
-        |  FROM d),
-        |e AS (
-        |  SELECT doc_id, part, n_tok, off,
-        |    unnest(range(CAST(off // 128 AS BIGINT),
-        |      CAST((off + n_tok - 1) // 128 + 1 AS BIGINT))) AS chunk
-        |  FROM o)
-        |SELECT CAST(part AS BIGINT) AS part, doc_id,
-        |  CAST(chunk AS BIGINT) AS chunk,
-        |  CAST(greatest(off - chunk * 128, 0) AS BIGINT) AS span_start,
-        |  CAST(least(off + n_tok, (chunk + 1) * 128)
-        |    - greatest(off, chunk * 128) AS BIGINT) AS span_len,
-        |  off >= chunk * 128 AS is_head,
-        |  off + n_tok <= (chunk + 1) * 128 AS is_tail
-        |FROM e""".stripMargin,
-
-    // trunc-recall mirror (generated — see TruncRecallSql)
-    "q286_trunc_recall" -> TruncRecallSql,
-
-    // decon-report mirror: both gram counts and the decision are pure
-    // residue facts (digits in every gram make the variant arm raw-0)
-    "q287_decon_report" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 1 THEN 5 ELSE 0 END AS BIGINT)
-        |    AS raw_grams,
-        |  CAST(CASE WHEN doc_id % 5 IN (1, 2) THEN 5 ELSE 0 END
-        |    AS BIGINT) AS norm_grams,
-        |  CASE WHEN doc_id % 5 = 1 THEN 'verbatim_leak'
-        |       WHEN doc_id % 5 = 2 THEN 'normalized_leak'
-        |       ELSE 'clean' END AS decision
-        |FROM documents WHERE doc_id % 5 <> 0""".stripMargin,
-
-    // ── round-14 Unicode-tokenizer mirrors: real recomputation over
-    // the SAME fixture file, with the tokenizer/normalizer SQL
-    // generated from TextAnalysis's constants (duckUToks/duckLowerU/
-    // duckUNorm) — the certified contract is that JVM regex +
-    // String.toLowerCase and DuckDB RE2 + utf8proc lower agree
-    // bit-for-bit on Unicode-13-assigned codepoints after the fold
-    // translate (exhaustive per-codepoint diff, planes 0-2). ──
-    "q288_unicode_tokens" -> UnicodeTokensSql,
-    "q294_unicode_stream" -> UnicodeTokensSql,
-
-    "q289_unicode_norm_dedup" ->
-      (s"WITH d AS (SELECT doc_id, ${duckUNorm("text")} AS norm_text " +
-        s"FROM $MlJson),\n" +
-        """g AS (SELECT norm_text, min(doc_id) AS keep_id,
-          |  count(*) AS n_copies FROM d GROUP BY 1)
-          |SELECT d.doc_id, d.norm_text, g.keep_id, g.n_copies,
-          |  d.doc_id <> g.keep_id AS is_dup
-          |FROM d JOIN g USING (norm_text)""".stripMargin),
-
-    "q290_unicode_jaccard" -> uJaccardSql("0.5"),
-    "q293_unicode_minhash" -> uJaccardSql("0.8"),
-
-    // stopword-discovery mirror: distinct-per-doc unicode tokens →
-    // per-(lang, tok) df → top-K by the TOTAL (df DESC, tok) order —
-    // CTEs and thresholds shared with q301's mirror (StopMinDf/
-    // StopTopK interpolate into every spelling)
-    "q296_stopword_discovery" ->
-      (s"WITH $duckMlTokensCte,\n$duckStopFreqCtes\n" +
-        s"SELECT lang, tok, df, " +
-        s"CAST(row_number() OVER (PARTITION BY lang " +
-        s"ORDER BY df DESC, tok) AS INTEGER) AS rank " +
-        s"FROM f WHERE df >= $StopMinDf QUALIFY rank <= $StopTopK"),
-
-    // capstone mirror: dominant-script CASE (the q292 two-step class
-    // filter), routed normalizer (latin accent-fold vs unicode), exact
-    // groups on the routed key, then exact Jaccard >= 0.6 among the
-    // keepers (== the minhash output at these similarities)
-    "q297_ml_dedup_capstone" ->
-      (s"WITH raw AS (SELECT doc_id, coalesce(text, '') AS txt " +
-        s"FROM $MlJson),\n" +
-        """le AS (SELECT doc_id, txt,
-          |  regexp_extract_all(txt, '\p{L}') AS ls FROM raw),
-          |c AS (SELECT doc_id, txt,
-          |  len(list_filter(ls, x -> regexp_matches(x, '\p{Latin}'))) AS latin,
-          |  len(list_filter(ls, x -> regexp_matches(x, '\p{Cyrillic}'))) AS cyrillic,
-          |  len(list_filter(ls, x -> regexp_matches(x,
-          |    '[\p{Han}\p{Hiragana}\p{Katakana}]'))) AS cjk,
-          |  len(list_filter(ls, x -> regexp_matches(x, '\p{Arabic}'))) AS arabic,
-          |  len(ls) AS n_letters FROM le),
-          |d AS (SELECT *, n_letters - latin - cyrillic - cjk - arabic AS other,
-          |  greatest(latin, cyrillic, cjk, arabic,
-          |    n_letters - latin - cyrillic - cjk - arabic) AS best FROM c),
-          |dm AS (SELECT doc_id, txt, CASE WHEN best <= 0 THEN 'none'
-          |  WHEN latin = best THEN 'latin'
-          |  WHEN cyrillic = best THEN 'cyrillic'
-          |  WHEN cjk = best THEN 'cjk'
-          |  WHEN arabic = best THEN 'arabic'
-          |  ELSE 'other' END AS dominant FROM d),
-          |""".stripMargin +
-        s"r AS (SELECT doc_id, txt, dominant, " +
-        s"CASE WHEN dominant = 'latin' THEN 'latin_norm' " +
-        s"ELSE 'unicode_norm' END AS route, " +
-        s"CASE WHEN dominant = 'latin' THEN ${duckLatinNorm("txt")} " +
-        s"ELSE ${duckUNorm("txt")} END AS norm FROM dm),\n" +
-        """g AS (SELECT norm, min(doc_id) AS keep_id,
-          |  count(*) AS n_copies FROM r GROUP BY 1),
-          |j AS (SELECT r.*, g.keep_id, g.n_copies FROM r JOIN g USING (norm)),
-          |k AS (SELECT doc_id, txt FROM j WHERE doc_id = keep_id),
-          |""".stripMargin +
-        s"tok AS (SELECT doc_id, unnest(${duckUToks("txt")}) AS tok, " +
-        s"generate_subscripts(${duckUToks("txt")}, 1) AS pos FROM k),\n" +
-        """sh AS (SELECT DISTINCT doc_id,
-          |  tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-          |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-          |  QUALIFY lead(tok, 2) OVER w IS NOT NULL),
-          |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-          |inter AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-          |  FROM sh a JOIN sh b
-          |  ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2),
-          |pr AS (SELECT da, db FROM inter
-          |  JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
-          |  WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.6),
-          |nd AS (SELECT db AS doc_id, min(da) AS near_dup_of FROM pr GROUP BY 1)
-          |SELECT j.doc_id, j.dominant, j.route, j.keep_id, j.n_copies,
-          |  j.doc_id <> j.keep_id AS is_dup, nd.near_dup_of
-          |FROM j LEFT JOIN nd USING (doc_id)""".stripMargin),
-
-    // mixed-script mirror: same whitespace words, RE2 script classes
-    "q298_mixed_script_words" ->
-      (s"WITH d AS (SELECT doc_id, lang, " +
-        s"list_filter(regexp_split_to_array(trim(coalesce(text, '')), " +
-        s"'[ \\t\\r\\n]+'), w -> w <> '') AS ws FROM $MlJson),\n" +
-        """m AS (SELECT doc_id, lang, ws,
-          |  list_filter(ws, w -> regexp_matches(w, '\p{Latin}')
-          |    AND regexp_matches(w, '\p{Cyrillic}')) AS ms FROM d)
-          |SELECT doc_id, lang, CAST(len(ws) AS BIGINT) AS n_words,
-          |  CAST(len(ms) AS BIGINT) AS n_mixed, ms[1] AS first_mixed,
-          |  len(ms) > 0 AS spoofy
-          |FROM m""".stripMargin),
-
-    "q299_unicode_sentences" ->
-      (s"WITH d AS (SELECT doc_id, lang, ${duckUSents("text")} AS ss " +
-        s"FROM $MlJson)\n" +
-        """SELECT doc_id, lang, CAST(len(ss) AS BIGINT) AS n_sents,
-          |  ss[1] AS first_sent, ss[-1] AS last_sent
-          |FROM d""".stripMargin),
-
-    // span-dedup mirror on REAL text (q274's oracle was closed-form
-    // residues; this recomputes): 2-spans via lead, global keep-first
-    // on the id*2^20+pos pack, removed sentence indices from span
-    // starts, rebuild via ordered string_agg
-    "q300_ml_span_dedup" ->
-      (s"WITH d AS (SELECT doc_id, ${duckUSents("text")} AS ss " +
-        s"FROM $MlJson),\n" +
-        """sent AS (SELECT doc_id, unnest(ss) AS s,
-          |  generate_subscripts(ss, 1) - 1 AS si FROM d),
-          |sp AS (SELECT doc_id, si AS pos,
-          |  md5(s || ' ' || lead(s, 1) OVER w) AS fp
-          |  FROM sent WINDOW w AS (PARTITION BY doc_id ORDER BY si)
-          |  QUALIFY lead(s, 1) OVER w IS NOT NULL),
-          |fs AS (SELECT doc_id, pos, fp,
-          |  doc_id * 1048576 + pos AS enc FROM sp),
-          |kp AS (SELECT fp, min(enc) AS keep FROM fs GROUP BY 1),
-          |rm AS (SELECT DISTINCT doc_id, si FROM (
-          |  SELECT f.doc_id, unnest([f.pos, f.pos + 1]) AS si
-          |  FROM fs f JOIN kp USING (fp) WHERE f.enc <> kp.keep)),
-          |keep_s AS (SELECT s.doc_id, s.si, s.s FROM sent s
-          |  LEFT JOIN rm ON s.doc_id = rm.doc_id AND s.si = rm.si
-          |  WHERE rm.si IS NULL),
-          |rb AS (SELECT doc_id, count(*) AS n_kept,
-          |  string_agg(s, ' ' ORDER BY si) AS text_dedup
-          |  FROM keep_s GROUP BY 1)
-          |SELECT d.doc_id, CAST(len(ss) AS BIGINT) AS n_sents,
-          |  CAST(coalesce(rb.n_kept, 0) AS BIGINT) AS n_kept,
-          |  coalesce(rb.text_dedup, '') AS text_dedup
-          |FROM d LEFT JOIN rb USING (doc_id)""".stripMargin),
-
-    // NFC mirror: arms rebuilt closed-form via chr() codepoints —
-    // precomposed e-acute 233, combining acute 769, OHM 8486 /
-    // ANGSTROM 8491 vs canonical Ω 937 / Å 197, conjoining jamo
-    // 4370/4449/4523 + 글 44544 — normalized by DuckDB's independent
-    // nfc_normalize
-    "q295_nfc_dedup" ->
-      (NfcArmsSql +
-        """,
-          |gp AS (
-          |  SELECT nfc_text, min(doc_id) AS keep_id, count(*) AS n_copies
-          |  FROM n GROUP BY 1)
-          |SELECT n.doc_id, n.nfc_text, n.nfc_text <> n.text AS changed,
-          |  gp.keep_id, gp.n_copies, n.doc_id <> gp.keep_id AS is_dup
-          |FROM n JOIN gp USING (nfc_text)""".stripMargin),
-
-    // streaming NFC twin: the per-row half of the q295 mirror (shared
-    // NfcArmsSql), no grouping
-    "q303_nfc_stream" ->
-      (NfcArmsSql +
-        """
-          |SELECT doc_id, nfc_text, nfc_text <> text AS changed
-          |FROM n""".stripMargin),
-
-    // gopher mirror on real multilingual text: words over the
-    // CJK-isolated text, \p{L} alpha rule, Unicode-token stop hits —
-    // same integer floor-div ppm arithmetic as GopherQualitySql
-    "q291_unicode_gopher" -> UGopherSql,
-    "q302_unicode_tokens_sql" -> UnicodeTokensSql,
-
-    // invisible-scrub mirror: arms via chr() (ZWSP 8203, RLO 8238,
-    // PDF 8236, BOM 65279, ZWJ 8205), detection/scrub via the SAME
-    // InvisibleClass constant, evasion as a direct token-list compare
-    "q304_invisible_scrub" ->
-      (s"WITH p AS (SELECT doc_id, doc_id % 5 AS a, " +
-        s"CAST(doc_id // 5 AS VARCHAR) AS g FROM documents),\n" +
-        """d AS (SELECT doc_id, CASE a
-          |  WHEN 0 THEN 'alpha beta gamma ' || g
-          |  WHEN 1 THEN 'al' || chr(8203) || 'pha beta gamma ' || g
-          |  WHEN 2 THEN 'alpha ' || chr(8238) || 'beta' || chr(8236)
-          |    || ' gamma ' || g
-          |  WHEN 3 THEN chr(65279) || 'alpha beta gamma ' || g
-          |  ELSE 'alpha be' || chr(8205) || 'ta gamma ' || g
-          |  END AS text FROM p),
-          |""".stripMargin +
-        s"c AS (SELECT doc_id, text, regexp_replace(text, " +
-        s"'${graft.ext.TextAnalysis.InvisibleClass}', '', 'g') " +
-        s"AS clean_text FROM d)\n" +
-        s"SELECT doc_id, CAST(len(regexp_extract_all(text, " +
-        s"'${graft.ext.TextAnalysis.InvisibleClass}')) AS BIGINT) " +
-        s"AS n_invisible, clean_text, " +
-        s"${duckUToks("text")} <> ${duckUToks("clean_text")} " +
-        s"AS evaded FROM c"),
-
-    // confusable-dedup mirror: arms closed-form (Cyrillic е 1077 /
-    // а 1072 homoglyphs), dominant via the q292 two-step class
-    // filter (planted letters are latin/cyrillic only, so the
-    // 5-class greatest reduces to the latin-vs-cyrillic compare with
-    // latin winning ties — scriptProfile's declaration order), key
-    // = skeleton (translate over the shared Confusable map) on the
-    // latin route, fold-lower otherwise
-    "q305_confusable_dedup" ->
-      (s"WITH p AS (SELECT doc_id, doc_id % 5 AS a, " +
-        s"CAST(doc_id // 5 AS VARCHAR) AS g FROM documents),\n" +
-        """d AS (SELECT doc_id, CASE a
-          |  WHEN 0 THEN 'buy cheap watches here now ' || g
-          |  WHEN 1 THEN 'buy ch' || chr(1077) || 'ap w' || chr(1072)
-          |    || 'tches h' || chr(1077) || 're now ' || g
-          |  WHEN 2 THEN 'totally different latin content ' || g
-          |  WHEN 3 THEN chr(1087) || chr(1088) || chr(1080) || chr(1074)
-          |    || chr(1077) || chr(1090) || ' ' || chr(1084) || chr(1080)
-          |    || chr(1088) || ' ' || chr(1093) || chr(1086) || chr(1088)
-          |    || chr(1086) || chr(1096) || chr(1086) || ' ' || g
-          |  ELSE 'sell ch' || chr(1077) || 'ap clocks th' || chr(1077)
-          |    || 're now ' || g
-          |  END AS text FROM p),
-          |le AS (SELECT doc_id, text,
-          |  len(list_filter(regexp_extract_all(text, '\p{L}'),
-          |    x -> regexp_matches(x, '\p{Latin}'))) AS latin,
-          |  len(list_filter(regexp_extract_all(text, '\p{L}'),
-          |    x -> regexp_matches(x, '\p{Cyrillic}'))) AS cyr
-          |  FROM d),
-          |dm AS (SELECT doc_id, text,
-          |  CASE WHEN latin >= cyr AND latin > 0 THEN 'latin'
-          |       WHEN cyr > 0 THEN 'cyrillic'
-          |       ELSE 'none' END AS dominant FROM le),
-          |""".stripMargin +
-        s"r AS (SELECT doc_id, dominant, " +
-        s"CASE WHEN dominant = 'latin' THEN 'skeleton' " +
-        s"ELSE 'raw_lower' END AS route, " +
-        s"CASE WHEN dominant = 'latin' THEN translate(" +
-        s"${duckLowerU("text")}, " +
-        s"'${graft.ext.TextAnalysis.ConfusableSrc}', " +
-        s"'${graft.ext.TextAnalysis.ConfusableDst}') " +
-        s"ELSE ${duckLowerU("text")} END AS k FROM dm),\n" +
-        """gp AS (SELECT k, min(doc_id) AS keep_id, count(*) AS n_copies
-          |  FROM r GROUP BY 1)
-          |SELECT r.doc_id, r.dominant, r.route, gp.keep_id,
-          |  gp.n_copies, r.doc_id <> gp.keep_id AS is_dup
-          |FROM r JOIN gp USING (k)""".stripMargin),
-
-    // inflate mirror: the q241 inversion — the oracle never parses
-    // bytes, it reproduces the round-trip contract per arm (hostile
-    // arms NULL; multi-member appends ' tail', +5 octets against the
-    // cap; the cap rule in DuckDB strlen = UTF-8 octets)
-    "q306_gzip_inflate" ->
-      s"""SELECT doc_id,
-         |  CASE
-         |    WHEN doc_id % 12 IN (0, 1, 5, 6) THEN NULL
-         |    WHEN doc_id % 12 = 2 THEN
-         |      CASE WHEN strlen(text) + 5 > $InflateCapBytes THEN NULL
-         |           ELSE text || ' tail' END
-         |    WHEN strlen(text) > $InflateCapBytes THEN NULL
-         |    ELSE text END AS decoded
-         |FROM documents""".stripMargin,
-
-    // transcode mirror: the q306 inversion — expected text per arm
-    // closed-form in chr() codepoints (233 é, 8364 €, 12459/12501/
-    // 12455 katakana, 26085/26412/35486 kanji, 1087..1090 Cyrillic);
-    // the three routed arms (unknown charset, wrong declaration,
-    // unmappable ask) are NULL
-    "q307_charset_transcode" ->
-      """SELECT doc_id,
-        |  CASE doc_id % 8
-        |    WHEN 0 THEN text || ' caf' || chr(233) || ' ' || chr(8364) || '9'
-        |    WHEN 1 THEN text || ' caf' || chr(233) || ' r' || chr(233)
-        |      || 'sum' || chr(233)
-        |    WHEN 2 THEN text || ' ' || chr(12459) || chr(12501) || chr(12455)
-        |    WHEN 3 THEN text || ' ' || chr(26085) || chr(26412) || chr(35486)
-        |    WHEN 4 THEN text || ' ' || chr(1087) || chr(1088) || chr(1080)
-        |      || chr(1074) || chr(1077) || chr(1090)
-        |    ELSE NULL END AS decoded
-        |FROM documents""".stripMargin,
-
-    // fetch-decode mirror: every output column closed-form per arm
-    // (the oracle never parses bytes — arms are disjoint by doc_id %
-    // 14, so no precedence logic is needed; chr(233) é, chr(8364) €,
-    // chr(12459/12501/12455) kana, chr(65533) U+FFFD)
-    "q308_fetch_decode" -> FetchDecodeArmsSql,
-
-    // IDENTICAL SQL to q308: the streaming twin accumulates the same
-    // table from two waves (the q232 discipline).
-    "q311_fetch_decode_stream" -> FetchDecodeArmsSql,
-
-    // warc-fetch mirror: closed-form per doc — ok/text+é unless the
-    // %13 corrupt-gzip arm routes bad_inflate; the oracle never sees
-    // the archive framing (it must be invisible by construction)
-    "q312_warc_fetch_corpus" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 13 = 0 THEN 'bad_inflate' ELSE 'ok' END
-        |    AS decision,
-        |  CASE WHEN doc_id % 13 = 0 THEN NULL
-        |       ELSE text || ' caf' || chr(233) END AS text
-        |FROM documents""".stripMargin,
-
-    // utf-16 fetch mirror: closed-form per arm; every arm is 200/
-    // text/html and decodes to text || ' caf' || chr(233) || ' 16'
-    "q314_utf16_fetch" ->
-      """SELECT doc_id, 200 AS status, 'text/html' AS content_type,
-        |  CASE doc_id % 5
-        |    WHEN 1 THEN 'utf-16be' WHEN 3 THEN 'utf-8'
-        |    ELSE 'utf-16le' END AS charset,
-        |  CASE doc_id % 5 WHEN 4 THEN 'header' ELSE 'bom' END AS cs_source,
-        |  'ok' AS decision,
-        |  text || ' caf' || chr(233) || ' 16' AS text
-        |FROM documents""".stripMargin,
-
-    // text/plain mirror: closed-form per arm (the disjoint-arms
-    // discipline); arm 5 pins the WHATWG content-sniff firing on a
-    // plain body BY DESIGN
-    "q352_fetch_text_plain" ->
-      """SELECT doc_id, 200 AS status,
-        |  CASE doc_id % 6 WHEN 2 THEN 'text/html'
-        |    WHEN 3 THEN 'application/json' ELSE 'text/plain' END
-        |    AS content_type,
-        |  CASE doc_id % 6 WHEN 0 THEN 'windows-1252' WHEN 3 THEN ''
-        |    WHEN 5 THEN 'koi8-r' ELSE 'utf-8' END AS charset,
-        |  CASE doc_id % 6 WHEN 0 THEN 'header' WHEN 3 THEN ''
-        |    WHEN 5 THEN 'meta' ELSE 'utf8' END AS cs_source,
-        |  CASE doc_id % 6 WHEN 3 THEN 'bad_type' ELSE 'ok' END AS decision,
-        |  CASE doc_id % 6
-        |    WHEN 0 THEN text || ' caf' || chr(233) || ' txt'
-        |    WHEN 3 THEN NULL
-        |    WHEN 5 THEN '<meta charset=koi8-r> ' || chr(1084) || chr(1080)
-        |      || chr(1088) || ' ' || text
-        |    ELSE text END AS text
-        |FROM documents""".stripMargin,
-
-    // drift mirror: per-dim quantized sums both versions (1-based
-    // subscripts re-based to the operator's 0-based dims), the same
-    // cross-multiplied floor division, 0.25 planted on dims 1..4
-    // in DOUBLE
-    "q350_embedding_drift" -> EmbDriftSql,
-
-    // IDENTICAL SQL to q350: merged per-batch drift states must
-    // rebuild the one-shot report exactly (the q186/q338 discipline)
-    "q351_drift_incremental" -> EmbDriftSql,
-
-    // IDENTICAL SQL again: the streaming fold must accumulate the
-    // same report from two waves (the q232/q316 discipline)
-    "q353_drift_stream" -> EmbDriftSql,
-
-    // curriculum mirror: the shared score CTEs + fixed-threshold
-    // buckets + the same integer error-diffusion key (lcm 6 over
-    // weights 3:2:1 → multipliers 2/3/6)
-    "q348_curriculum_schedule" -> (PrScoreCtes +
-      """,
-        |bk AS (
-        |  SELECT doc_id,
-        |    CASE WHEN score >= 80000 THEN 'high'
-        |         WHEN score >= 30000 THEN 'mid'
-        |         ELSE 'low' END AS bucket
-        |  FROM lab),
-        |k AS (
-        |  SELECT doc_id, bucket,
-        |    row_number() OVER (PARTITION BY bucket ORDER BY doc_id) AS k
-        |  FROM bk),
-        |ky AS (
-        |  SELECT doc_id, bucket, k,
-        |    (2 * k - 1) * (CASE bucket WHEN 'high' THEN 2
-        |      WHEN 'mid' THEN 3 ELSE 6 END) AS key
-        |  FROM k)
-        |SELECT doc_id, bucket, CAST(k AS BIGINT) AS src_rank,
-        |  CAST(row_number() OVER (ORDER BY key, bucket) AS BIGINT) AS position
-        |FROM ky""".stripMargin),
-
-    // policy-stack mirror: the shared robotsDecide CTEs + q339's
-    // closed-form directive arms under one precedence CASE
-    "q346_robots_policy_stack" -> (RobotsDecideCtes +
-      """,
-        |rd AS (
-        |  SELECT doc_id,
-        |    CASE WHEN coalesce(allow, TRUE) THEN 'allow' ELSE 'deny' END
-        |      AS rdec
-        |  FROM m WHERE rk = 1)
-        |SELECT rd.doc_id,
-        |  CASE WHEN rd.rdec = 'deny' THEN 'blocked_robots'
-        |       WHEN rd.doc_id % 8 IN (1, 3, 5, 6, 7) THEN 'drop_content'
-        |       WHEN rd.doc_id % 8 = 2 THEN 'keep_content_drop_links'
-        |       ELSE 'keep' END AS decision,
-        |  CAST(CASE WHEN rd.rdec = 'deny' OR rd.doc_id % 8 IN (2, 3, 6)
-        |       THEN 0 ELSE 2 END AS BIGINT) AS n_links_kept
-        |FROM rd""".stripMargin),
-
-    // fsck mirror: the planted findings, closed-form (the healthy
-    // committed version contributes nothing)
-    "q344_store_fsck" ->
-      """SELECT * FROM (VALUES
-        |  ('dangling_manifest', 'v000000003', 'corrupt'),
-        |  ('orphan_version', 'v000000002', 'debris'),
-        |  ('stale_staging', 'store.old-cd34', 'debris'),
-        |  ('stale_staging', 'store.staging-ab12', 'debris'))
-        |  t(check_name, entry, severity)""".stripMargin,
-
-    // fsck-repair mirror: the audit trail + the post-repair re-audit
-    // (only the refused corruption survives), closed-form
-    "q347_store_fsck_repair" ->
-      """SELECT * FROM (VALUES
-        |  ('dangling_manifest', 'v000000003', 'corrupt', 'kept'),
-        |  ('orphan_version', 'v000000002', 'debris', 'deleted'),
-        |  ('stale_staging', 'store.old-cd34', 'debris', 'deleted'),
-        |  ('stale_staging', 'store.staging-ab12', 'debris', 'deleted'),
-        |  ('re_check:dangling_manifest', 'v000000003', 'corrupt', ''))
-        |  t(check_name, entry, severity, action)""".stripMargin,
-
-    // interleave mirror: per-source row_number, the same integer
-    // error-diffusion key (lcm 6 over weights {1,2,3}), one global
-    // row_number over (key, source)
-    "q345_weighted_interleave" -> (WeightedInterleaveCtes +
-      """SELECT doc_id, source, src_rank, position FROM sch"""),
-
-    // sized-interleave-audit mirror: the shared sizing + interleave +
-    // audit chain over the residue-weight sources
-    "q355_sized_interleave_audit" ->
-      ("""WITH inp AS (SELECT doc_id AS id, source AS src FROM documents)"""
-        + sizedInterleaveAuditSql(
-          "CAST(regexp_extract(src, 'src([0-9]+)', 1) AS BIGINT) % 3 + 1")),
-
-    // sized-curriculum mirror: the shared score CTEs feed the same
-    // sizing + interleave + audit chain at bucket weights 3:2:1
-    "q356_sized_curriculum_audit" -> (PrScoreCtes +
-      """,
-        |inp AS (
-        |  SELECT doc_id AS id,
-        |    CASE WHEN score >= 80000 THEN 'high'
-        |         WHEN score >= 30000 THEN 'mid'
-        |         ELSE 'low' END AS src
-        |  FROM lab)""".stripMargin
-        + sizedInterleaveAuditSql(
-          "CASE src WHEN 'high' THEN 3 WHEN 'mid' THEN 2 ELSE 1 END")),
-
-    // schedule-audit mirror: the SAME interleave CTEs + the exact
-    // integer deviation arithmetic (W = 39 over the residue weights)
-    "q349_schedule_audit" -> (WeightedInterleaveCtes +
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_items,
-        |  CAST(max(abs(src_rank * 39 - position *
-        |    (CAST(regexp_extract(source, 'src([0-9]+)', 1) AS BIGINT)
-        |      % 3 + 1))) AS BIGINT) AS max_dev_units,
-        |  CAST(39 AS BIGINT) AS w_total
-        |FROM sch GROUP BY source""".stripMargin),
-
-    // cdc-chunk mirror: the q48 md5-12-hex device per token, boundary
-    // where h % 64 = 0, running boundary count EXCLUSIVE of the
-    // current row, per-chunk list(h ORDER BY p) rolling fold with the
-    // operator's interpolated constants
-    "q341_cdc_chunks" -> CdcChunksSql,
-
-    // chunk-overlap mirror: the chunk CTEs over the edited-copy
-    // corpus (the %13 re-ingest shape with one token prepended),
-    // DISTINCT (doc, fp) sets, fp-keyed pair join, integer-crossed
-    // Jaccard >= 1/2
-    "q343_chunk_overlap_dedup" -> (cdcChunksCtes(
-      "SELECT doc_id, text FROM documents UNION ALL " +
-        "SELECT doc_id + 1000000, 'edited ' || text " +
-        "FROM documents WHERE doc_id % 13 = 0") +
-      """,
-        |sets AS (SELECT DISTINCT doc_id, chunk_fp FROM chunks),
-        |nn AS (SELECT doc_id, count(*) AS n FROM sets GROUP BY 1),
-        |m AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(count(*) AS BIGINT) AS shared_chunks
-        |  FROM sets a JOIN sets b
-        |    ON a.chunk_fp = b.chunk_fp AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT m.id_a, m.id_b, m.shared_chunks,
-        |  CAST(na.n AS BIGINT) AS n_a, CAST(nb.n AS BIGINT) AS n_b
-        |FROM m
-        |JOIN nn na ON na.doc_id = m.id_a
-        |JOIN nn nb ON nb.doc_id = m.id_b
-        |WHERE m.shared_chunks * 2 >= na.n + nb.n - m.shared_chunks"""
-        .stripMargin),
-
-    // shared-chunk mirror: the q341 chain re-grouped by fingerprint
-    "q342_chunk_dedup" -> (CdcChunksCtes +
-      """SELECT chunk_fp,
-        |  CAST(count(*) AS BIGINT) AS n_copies,
-        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |  CAST(max(n_tokens) AS BIGINT) AS n_tokens
-        |FROM chunks GROUP BY 1 HAVING count(*) > 1""".stripMargin),
-
-    // length-batch mirror: one global row_number over the same total
-    // order, integer // cut, per-batch aggregates
-    "q340_length_batches" ->
-      """WITH lenq AS (
-        |  SELECT doc_id,
-        |    len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tok
-        |  FROM documents),
-        |sq AS (
-        |  SELECT doc_id, n_tok,
-        |    row_number() OVER (ORDER BY n_tok DESC, doc_id) AS seq
-        |  FROM lenq),
-        |b AS (SELECT (seq - 1) // 32 AS batch_id, n_tok FROM sq)
-        |SELECT CAST(batch_id AS BIGINT) AS batch_id,
-        |  CAST(count(*) AS BIGINT) AS n_items,
-        |  CAST(max(n_tok) AS BIGINT) AS max_len,
-        |  CAST(sum(n_tok) AS BIGINT) AS sum_tokens,
-        |  CAST(max(n_tok) * count(*) - sum(n_tok) AS BIGINT)
-        |    AS padding_tokens
-        |FROM b GROUP BY 1""".stripMargin,
-
-    // x-robots mirror: closed-form per arm; noindex arms 1/3/5/6/7
-    // (6 via the meta half of the union), nofollow arms 2/3/6 (6 via
-    // the header half), the bot-scoped arm 4 ignored
-    "q339_xrobots_header" ->
-      """SELECT doc_id,
-        |  doc_id % 8 IN (1, 3, 5, 6, 7) AS noindex,
-        |  doc_id % 8 IN (2, 3, 6) AS nofollow,
-        |  CASE WHEN doc_id % 8 IN (1, 3, 5, 6, 7) THEN 'drop_content'
-        |       WHEN doc_id % 8 = 2 THEN 'keep_content_drop_links'
-        |       ELSE 'keep' END AS decision,
-        |  CAST(CASE WHEN doc_id % 8 IN (2, 3, 6) THEN 0 ELSE 2 END
-        |    AS BIGINT) AS n_links_kept
-        |FROM documents""".stripMargin,
-
-    // robots-meta mirror: closed-form per arm (arms are disjoint —
-    // the fetch-classes discipline, no regex mirror needed); noindex
-    // arms 1/3/4/5, nofollow arms 2/3/4/6, two links per page
-    "q337_robots_meta" ->
-      """SELECT doc_id,
-        |  doc_id % 9 IN (1, 3, 4, 5) AS noindex,
-        |  doc_id % 9 IN (2, 3, 4, 6) AS nofollow,
-        |  CASE WHEN doc_id % 9 IN (1, 3, 4, 5) THEN 'drop_content'
-        |       WHEN doc_id % 9 IN (2, 6) THEN 'keep_content_drop_links'
-        |       ELSE 'keep' END AS decision,
-        |  CAST(CASE WHEN doc_id % 9 IN (2, 3, 4, 6) THEN 0 ELSE 2 END
-        |    AS BIGINT) AS n_links_kept
-        |FROM documents""".stripMargin,
-
-    // calibration mirror: per-distinct-score aggregates, DESC
-    // cumulative window (distinct thresholds, so the default RANGE
-    // frame is safe), integer // division throughout; the en list and
-    // the lang argmax mirror the q234 CTEs verbatim
-    "q336_pr_curve" -> PrCurveSql,
-
-    // IDENTICAL SQL to q336: merged per-batch states must rebuild
-    // the one-shot curve exactly (the q186 discipline)
-    "q338_pr_curve_incremental" -> PrCurveSql,
-
-    // time-shifted copy mirror: window-shingled sequences over the
-    // generator's independent hashes; raw ':'-joined keys, DISTINCT
-    // per video, threshold in HAVING — no knowledge of the Spark plan
-    "q335_video_seq_copies" ->
-      s"""WITH fh AS (
-        |  SELECT name, frame_index, dhash
-        |  FROM read_parquet('$FixturesDir/video_seq_expected.parquet')),
-        |sq AS (
-        |  SELECT name,
-        |    CAST(dhash AS VARCHAR) || ':' ||
-        |    CAST(lead(dhash, 1) OVER w AS VARCHAR) || ':' ||
-        |    CAST(lead(dhash, 2) OVER w AS VARCHAR) AS shingle
-        |  FROM fh WINDOW w AS (PARTITION BY name ORDER BY frame_index)
-        |  QUALIFY lead(dhash, 2) OVER w IS NOT NULL),
-        |sh AS (SELECT DISTINCT name, shingle FROM sq)
-        |SELECT a.name AS id_a, b.name AS id_b,
-        |  CAST(count(*) AS BIGINT) AS shared_shingles
-        |FROM sh a JOIN sh b
-        |  ON a.shingle = b.shingle AND a.name < b.name
-        |GROUP BY 1, 2
-        |HAVING count(*) >= 2""".stripMargin,
-
-    // video per-frame hash mirror: the generator's independent python
-    // dHash over the formula frames (sampled indices only)
-    "q331_video_vhash" ->
-      s"""SELECT name, frame_index, width, height, dhash
-        |FROM read_parquet('$FixturesDir/video_vhash_expected.parquet')"""
-        .stripMargin,
-
-    // video near-dup mirror: brute-force ALL-pairs over the expected
-    // per-frame hashes — aligned frame distances, integer-crossed
-    // τ=1/2 threshold, no knowledge of the banding
-    "q332_video_neardup" ->
-      s"""WITH fh AS (
-        |  SELECT name, frame_index, dhash
-        |  FROM read_parquet('$FixturesDir/video_vhash_expected.parquet')),
-        |n AS (SELECT name, count(*) AS n FROM fh GROUP BY 1),
-        |m AS (
-        |  SELECT a.name AS id_a, b.name AS id_b, count(*) AS matched_frames
-        |  FROM fh a JOIN fh b
-        |    ON a.frame_index = b.frame_index AND a.name < b.name
-        |  WHERE bit_count(xor(a.dhash, b.dhash)) <= 3
-        |  GROUP BY 1, 2)
-        |SELECT m.id_a, m.id_b, m.matched_frames,
-        |  na.n AS n_a, nb.n AS n_b
-        |FROM m
-        |JOIN n na ON na.name = m.id_a
-        |JOIN n nb ON nb.name = m.id_b
-        |WHERE m.matched_frames * 2 >= least(na.n, nb.n)""".stripMargin,
-
-    // utf-32 fetch mirror: closed-form per arm; every arm is 200/
-    // text/html and decodes to text || ' caf' || chr(233) || ' 32'
-    "q329_utf32_fetch" ->
-      """SELECT doc_id, 200 AS status, 'text/html' AS content_type,
-        |  CASE doc_id % 5
-        |    WHEN 1 THEN 'utf-32be' WHEN 3 THEN 'utf-16le'
-        |    ELSE 'utf-32le' END AS charset,
-        |  CASE doc_id % 5 WHEN 4 THEN 'header' ELSE 'bom' END AS cs_source,
-        |  'ok' AS decision,
-        |  text || ' caf' || chr(233) || ' 32' AS text
-        |FROM documents""".stripMargin,
-
-    // charset-matrix mirror: closed-form per arm (chr codepoints:
-    // мир 1084/1080/1088, 你好世界 20320/22909/19990/30028, 台北
-    // 21488/21271, č 269 / ý 253, € 8364 / œ 339)
-    "q317_charset_matrix" ->
-      """SELECT doc_id,
-        |  CASE doc_id % 5
-        |    WHEN 0 THEN 'koi8-r' WHEN 1 THEN 'gbk' WHEN 2 THEN 'big5'
-        |    WHEN 3 THEN 'iso-8859-2' ELSE 'iso-8859-15' END AS charset,
-        |  CASE doc_id % 5
-        |    WHEN 0 THEN text || ' ' || chr(1084) || chr(1080) || chr(1088)
-        |    WHEN 1 THEN text || ' ' || chr(20320) || chr(22909)
-        |      || chr(19990) || chr(30028)
-        |    WHEN 2 THEN text || ' ' || chr(21488) || chr(21271)
-        |    WHEN 3 THEN text || ' ' || chr(269) || 'esk' || chr(253)
-        |    ELSE text || ' ' || chr(8364) || chr(339) || 'uvre'
-        |    END AS decoded
-        |FROM documents""".stripMargin,
-
-    // bytes-grade intake capstone: q234's URL mirror (k/dec CTEs
-    // verbatim) + closed-form fetch classes per arm + q226's
-    // extraction CTEs over the constant page shell (the é rides in a
-    // comment and is stripped) + q234's lang/LM mirrors verbatim +
-    // the content-dedup keeper draw, composed under the one
-    // precedence CASE
-    "q318_bytes_intake" -> bytesIntakeOracleSql(damage = false),
-
-    // the gated capstone: same chain, arm 10 damaged + quarantined
-    "q330_intake_damage" -> bytesIntakeOracleSql(damage = true),
-
-    // encoding-damage mirror: arms closed-form (chr(65533) U+FFFD,
-    // chr(195)+chr(169) the double-encoded é, chr(128..153) C1,
-    // chr(233) genuine é), the three char classes INTERPOLATED from
-    // the operator's constants (the q304 InvisibleClass discipline —
-    // \x{...} parses identically in Java regex and RE2), rates in
-    // exact-integer // division, thresholds interpolated
-    "q309_encoding_damage" ->
-      (s"WITH p AS (SELECT doc_id, doc_id % 5 AS a, text FROM documents),\n" +
-        """d AS (SELECT doc_id, CASE a
-          |  WHEN 1 THEN text || ' caf' || chr(65533) || ' r' || chr(65533)
-          |    || 'sum' || chr(65533)
-          |  WHEN 2 THEN text || ' caf' || chr(195) || chr(169) || ' r'
-          |    || chr(195) || chr(169) || 'sum' || chr(195) || chr(169)
-          |  WHEN 3 THEN text || ' x' || chr(128) || chr(129) || chr(144)
-          |    || chr(141) || chr(153)
-          |  WHEN 4 THEN text || ' caf' || chr(233) || ' r' || chr(233)
-          |    || 'sum' || chr(233) || ' ' || chr(195) || ' ok'
-          |  ELSE text END AS text FROM p),
-          |""".stripMargin +
-        s"c AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars, " +
-        s"CAST(len(regexp_extract_all(text, " +
-        s"'${graft.ext.TextAnalysis.FffdClass}')) AS BIGINT) AS n_fffd, " +
-        s"CAST(len(regexp_extract_all(text, " +
-        s"'${graft.ext.TextAnalysis.MojibakePairClass}')) AS BIGINT) " +
-        s"AS moji_pairs, " +
-        s"CAST(len(regexp_extract_all(text, " +
-        s"'${graft.ext.TextAnalysis.C1Class}')) AS BIGINT) AS n_c1 FROM d),\n" +
-        s"r AS (SELECT doc_id, n_chars, moji_pairs, " +
-        s"CAST((n_fffd * 1000000) // greatest(n_chars, 1) AS BIGINT) " +
-        s"AS fffd_ppm, " +
-        s"CAST((n_c1 * 1000000) // greatest(n_chars, 1) AS BIGINT) " +
-        s"AS c1_ppm FROM c)\n" +
-        s"SELECT doc_id, n_chars, fffd_ppm, moji_pairs, c1_ppm, " +
-        s"CASE WHEN fffd_ppm >= ${graft.ext.TextAnalysis.FffdMaxPpm} " +
-        s"THEN 'replacement_damage' " +
-        s"WHEN moji_pairs >= ${graft.ext.TextAnalysis.MojiMinPairs} " +
-        s"THEN 'double_encoded' " +
-        s"WHEN c1_ppm >= ${graft.ext.TextAnalysis.C1MaxPpm} " +
-        s"THEN 'c1_controls' ELSE 'clean' END AS verdict FROM r"),
-
-    // SemDeDup mirror: BRUTE-FORCE truth (shared CTE chain; copies via
-    // CAST(CAST(x AS DOUBLE) * 2 AS FLOAT) — double-exact then
-    // float-exact, the same values Spark's float multiply produces)
-    "q310_semdedup" ->
-      (SemDedupCcCtes + "\n" +
-        """SELECT vec_id, keep_id,
-          |  count(*) OVER (PARTITION BY keep_id) AS n_members,
-          |  vec_id <> keep_id AS is_dup
-          |FROM assigned""".stripMargin),
-
-    // IDENTICAL SQL to q310: the incremental fold must equal the full
-    // recompute bit-for-bit (the q186 discipline on the semantic arc).
-    "q315_semdedup_incremental" ->
-      (SemDedupCcCtes + "\n" +
-        """SELECT vec_id, keep_id,
-          |  count(*) OVER (PARTITION BY keep_id) AS n_members,
-          |  vec_id <> keep_id AS is_dup
-          |FROM assigned""".stripMargin),
-
-    // IDENTICAL SQL to q310: the streamed read→fold→append ingest
-    // must equal the one-shot full recompute (q186/q315 discipline).
-    "q316_semdedup_stream" ->
-      (SemDedupCcCtes + "\n" +
-        """SELECT vec_id, keep_id,
-          |  count(*) OVER (PARTITION BY keep_id) AS n_members,
-          |  vec_id <> keep_id AS is_dup
-          |FROM assigned""".stripMargin),
-
-    // IDENTICAL SQL to q310: redelivering a wave under the
-    // exactly-once guard must leave the accumulated assignment equal
-    // to the one-shot full recompute (q186/q315/q316 discipline).
-    "q319_semdedup_exactly_once" ->
-      (SemDedupCcCtes + "\n" +
-        """SELECT vec_id, keep_id,
-          |  count(*) OVER (PARTITION BY keep_id) AS n_members,
-          |  vec_id <> keep_id AS is_dup
-          |FROM assigned""".stripMargin),
-
-    // IDENTICAL SQL to q310: compacting the ingest store between the
-    // waves must be invisible in the accumulated assignment.
-    "q324_semdedup_compact_store" ->
-      (SemDedupCcCtes + "\n" +
-        """SELECT vec_id, keep_id,
-          |  count(*) OVER (PARTITION BY keep_id) AS n_members,
-          |  vec_id <> keep_id AS is_dup
-          |FROM assigned""".stripMargin),
-
-    // dHash mirror: the generator's independent python implementation
-    // of the shared spec (formula pixels, never the Spark decoder)
-    "q325_image_dhash" ->
-      s"""SELECT name, width, height, dhash
-        |FROM read_parquet('$FixturesDir/images_dhash_expected.parquet')"""
-        .stripMargin,
-
-    // near-dup mirror: brute-force ALL-pairs hamming over the
-    // expected hashes — no knowledge of the banding
-    "q326_image_neardup" -> ImageNearDupSql,
-
-    // IDENTICAL SQL to q326: the streaming read->probe->append
-    // lifecycle must accumulate the one-shot all-pairs set (the q186
-    // identical-oracle discipline)
-    "q334_hamming_dedup_stream" -> ImageNearDupSql,
-
-    // IDENTICAL SQL again: the guarded redelivery must be invisible
-    // (the q319 discipline on the hamming arc)
-    "q354_hamming_exactly_once" -> ImageNearDupSql,
-
-    // PNG dHash mirror: the generator's independent python
-    // decode+hash of the authored formula pixels (never the Spark
-    // decoder — the q178/q325 provenance discipline)
-    "q357_png_dhash" ->
-      s"""SELECT name, width, height, dhash
-        |FROM read_parquet('$FixturesDir/images_png_expected.parquet')"""
-        .stripMargin,
-
-    // JPEG dHash mirror: the generator's independent python DECODER
-    // over the bytes it wrote (lossy format: expected pixels are the
-    // reconstructed ones, through the same pinned integer IDCT spec)
-    "q359_jpeg_dhash" ->
-      s"""SELECT name, width, height, dhash
-        |FROM read_parquet('$FixturesDir/images_jpeg_expected.parquet')"""
-        .stripMargin,
-
-    // EXIF-orientation mirror: the generator's independent decode +
-    // independent tag-274 transform over the bytes it wrote; the
-    // orientation column certifies the tag parse (ignore arms read 1)
-    "q373_exif_orient" ->
-      s"""SELECT name, width, height, orientation, dhash
-        |FROM read_parquet('$FixturesDir/images_jpeg_expected.parquet')
-        |WHERE name LIKE 'exif%'"""
-        .stripMargin,
-
-    // MJPEG-AVI mirror: the jpeg generator's independent-decode
-    // hashes, containered byte-verbatim (gen_avi_fixtures.py asserts
-    // the embedded payloads equal the certified jpg files)
-    "q374_avi_vhash" ->
-      s"""SELECT name, frame_index, width, height, dhash
-        |FROM read_parquet('$FixturesDir/video_avi_expected.parquet')
-        |WHERE name LIKE '%.avi'"""
-        .stripMargin,
-
-    // cross-arc video near-dup mirror: brute-force aligned all-pairs
-    // over the expected per-frame hashes (q332's SQL shape)
-    "q375_video_crossarc" ->
-      s"""WITH fh AS (
-        |  SELECT name, frame_index, dhash
-        |  FROM read_parquet('$FixturesDir/video_avi_expected.parquet')),
-        |n AS (SELECT name, count(*) AS n FROM fh GROUP BY 1),
-        |m AS (
-        |  SELECT a.name AS id_a, b.name AS id_b, count(*) AS matched_frames
-        |  FROM fh a JOIN fh b
-        |    ON a.frame_index = b.frame_index AND a.name < b.name
-        |  WHERE bit_count(xor(a.dhash, b.dhash)) <= 3
-        |  GROUP BY 1, 2)
-        |SELECT m.id_a, m.id_b, m.matched_frames,
-        |  na.n AS n_a, nb.n AS n_b
-        |FROM m
-        |JOIN n na ON na.name = m.id_a
-        |JOIN n nb ON nb.name = m.id_b
-        |WHERE m.matched_frames * 2 >= least(na.n, nb.n)""".stripMargin,
-
-    // re-encode capstone mirror: brute-force ALL-pairs over the union
-    // of the THREE generators' expected hashes — format-blind
-    "q360_reencode_triple" ->
-      s"""WITH u AS (
-        |  SELECT name, dhash
-        |  FROM read_parquet('$FixturesDir/images_dhash_expected.parquet')
-        |  UNION ALL
-        |  SELECT name, dhash
-        |  FROM read_parquet('$FixturesDir/images_png_expected.parquet')
-        |  UNION ALL
-        |  SELECT name, dhash
-        |  FROM read_parquet('$FixturesDir/images_jpeg_expected.parquet'))
-        |SELECT a.name AS id_a, b.name AS id_b,
-        |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS dist
-        |FROM u a JOIN u b ON a.name < b.name
-        |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3""".stripMargin,
-
-    // TIFF dHash mirror: the generator's independent decode (both
-    // byte orders, strips, photometric), lossless provenance
-    "q367_tiff_dhash" ->
-      s"""SELECT name, width, height, dhash
-        |FROM read_parquet('$FixturesDir/images_tiff_expected.parquet')"""
-        .stripMargin,
-
-    // five-format re-encode mirror: brute-force all-pairs over the
-    // union of ALL FIVE generators' expected hashes
-    "q368_reencode_quint" ->
-      s"""WITH u AS (
-        |  SELECT name, dhash
-        |  FROM read_parquet('$FixturesDir/images_dhash_expected.parquet')
-        |  UNION ALL
-        |  SELECT name, dhash
-        |  FROM read_parquet('$FixturesDir/images_png_expected.parquet')
-        |  UNION ALL
-        |  SELECT name, dhash
-        |  FROM read_parquet('$FixturesDir/images_jpeg_expected.parquet')
-        |  UNION ALL
-        |  SELECT name, dhash
-        |  FROM read_parquet('$FixturesDir/images_gif_expected.parquet')
-        |  UNION ALL
-        |  SELECT name, dhash
-        |  FROM read_parquet('$FixturesDir/images_tiff_expected.parquet'))
-        |SELECT a.name AS id_a, b.name AS id_b,
-        |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS dist
-        |FROM u a JOIN u b ON a.name < b.name
-        |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3""".stripMargin,
-
-    // WebP/VP8L dHash mirror: the generator's independent decode of
-    // the bytes it wrote (lossless provenance)
-    "q369_webp_dhash" ->
-      s"""SELECT name, width, height, dhash
-        |FROM read_parquet('$FixturesDir/images_webp_expected.parquet')"""
-        .stripMargin,
-
-    // six-format re-encode mirror: brute-force all-pairs over the
-    // union of ALL SIX generators' expected hashes, format-blind;
-    // IDENTICAL SQL for the streaming ingest twin (the q363
-    // discipline: the store-probe lifecycle must be invisible)
-    "q370_reencode_sext" -> ReencodeSextSql,
-    "q372_reencode_sext_stream" -> ReencodeSextSql,
-
-    // AIFF aHash mirror: the generator's independent implementation
-    // over the formula samples (lossless), provenance-re-parsed
-    "q364_aiff_ahash" ->
-      s"""SELECT name, sample_rate, n_samples, ahash
-        |FROM read_parquet('$FixturesDir/audio_formats_expected.parquet')
-        |WHERE name LIKE '%.aif'""".stripMargin,
-
-    // AU aHash mirror: expected hashes computed from the generator's
-    // independent μ-law DECODE of the bytes it wrote (lossy-format
-    // provenance) + the linear leg
-    "q365_au_ahash" ->
-      s"""SELECT name, sample_rate, n_samples, ahash
-        |FROM read_parquet('$FixturesDir/audio_formats_expected.parquet')
-        |WHERE name LIKE '%.au'""".stripMargin,
-
-    // audio re-encode mirror: brute-force all-pairs over the union of
-    // the WAV and formats generators' expected hashes — format-blind
-    "q366_audio_reencode" ->
-      s"""WITH u AS (
-        |  SELECT name, ahash
-        |  FROM read_parquet('$FixturesDir/audio_ahash_expected.parquet')
-        |  UNION ALL
-        |  SELECT name, ahash
-        |  FROM read_parquet('$FixturesDir/audio_formats_expected.parquet'))
-        |SELECT a.name AS id_a, b.name AS id_b,
-        |  CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS dist
-        |FROM u a JOIN u b ON a.name < b.name
-        |WHERE bit_count(xor(a.ahash, b.ahash)) <= 3""".stripMargin,
-
-    // FLAC aHash mirror: lossless provenance — the generator asserts
-    // its independent decoder reproduces the formula samples exactly
-    "q371_flac_ahash" ->
-      s"""SELECT name, sample_rate, n_samples, ahash
-        |FROM read_parquet('$FixturesDir/audio_formats_expected.parquet')
-        |WHERE name LIKE '%.flac'""".stripMargin,
-
-    // GIF dHash mirror: the generator's independent decode of the
-    // formula pixels (lossless — palette + LZW + interlace provenance)
-    "q361_gif_dhash" ->
-      s"""SELECT name, width, height, dhash
-        |FROM read_parquet('$FixturesDir/images_gif_expected.parquet')"""
-        .stripMargin,
-
-    // re-encode QUAD mirror: brute-force all-pairs over the union of
-    // the FOUR generators' expected hashes — format-blind
-    "q362_reencode_quad" -> ReencodeQuadSql,
-
-    // IDENTICAL SQL: the streaming ingest must accumulate the same
-    // pair set — originals first, re-encodes on a later wave found
-    // through the store (the q186/q334 identical-oracle discipline)
-    "q363_reencode_ingest_stream" -> ReencodeQuadSql,
-
-    // cross-format near-dup mirror: brute-force ALL-pairs hamming
-    // over the UNION of the two generators' expected hashes — no
-    // knowledge of the banding or the formats
-    "q358_crossformat_neardup" ->
-      s"""WITH u AS (
-        |  SELECT name, dhash
-        |  FROM read_parquet('$FixturesDir/images_dhash_expected.parquet')
-        |  UNION ALL
-        |  SELECT name, dhash
-        |  FROM read_parquet('$FixturesDir/images_png_expected.parquet'))
-        |SELECT a.name AS id_a, b.name AS id_b,
-        |  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS dist
-        |FROM u a JOIN u b ON a.name < b.name
-        |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3""".stripMargin,
-
-    // aHash mirror: the generator's independent python implementation
-    // of the shared envelope-hash spec over formula samples
-    "q327_audio_ahash" ->
-      s"""SELECT name, sample_rate, n_samples, ahash
-        |FROM read_parquet('$FixturesDir/audio_ahash_expected.parquet')"""
-        .stripMargin,
-
-    // audio near-dup mirror: brute-force all-pairs hamming, no
-    // knowledge of the banding
-    "q328_audio_neardup" ->
-      s"""SELECT a.name AS id_a, b.name AS id_b,
-        |  CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS dist
-        |FROM read_parquet('$FixturesDir/audio_ahash_expected.parquet') a
-        |JOIN read_parquet('$FixturesDir/audio_ahash_expected.parquet') b
-        |  ON a.name < b.name
-        |WHERE bit_count(xor(a.ahash, b.ahash)) <= 3""".stripMargin,
-
-    // IDENTICAL SQL to q187/q88: the seed-build → four appends →
-    // skew-triggered rebalance lifecycle probed exhaustively must
-    // equal brute force over the whole corpus.
-    "q320_ivf_rebalance" -> IvfExhaustiveTopkSql,
-
-    // zstd inflate mirror (the q306 shape on the new format): routed
-    // arms NULL, the concatenation and plain arms split by the cap
-    "q321_zstd_inflate" ->
-      s"""SELECT doc_id,
-         |  CASE
-         |    WHEN doc_id % 7 IN (0, 1, 3, 4, 5) THEN NULL
-         |    WHEN doc_id % 7 = 2 THEN
-         |      CASE WHEN strlen(text) + 5 > $InflateCapBytes THEN NULL
-         |           ELSE text || ' tail' END
-         |    WHEN strlen(text) > $InflateCapBytes THEN NULL
-         |    ELSE text END AS decoded
-         |FROM documents""".stripMargin,
-
-    // fetch-decode zstd mirror: closed-form per arm (ASCII bodies →
-    // the ok arms are the strict-utf8 leg)
-    "q322_fetch_zstd" ->
-      """SELECT doc_id, 200 AS status, 'text/html' AS content_type,
-        |  CASE WHEN doc_id % 4 IN (0, 3) THEN 'utf-8' ELSE '' END AS charset,
-        |  CASE WHEN doc_id % 4 IN (0, 3) THEN 'utf8' ELSE '' END AS cs_source,
-        |  CASE WHEN doc_id % 4 IN (1, 2) THEN 'bad_inflate' ELSE 'ok' END
-        |    AS decision,
-        |  CASE WHEN doc_id % 4 IN (0, 3) THEN text ELSE NULL END AS text
-        |FROM documents""".stripMargin,
-
-    // chunked-TE mirror: closed-form per arm — the de-chunk, gunzip
-    // and cp1252 legs are all inversions of in-plan authoring, so
-    // the oracle never parses bytes (chr(233) é)
-    "q323_fetch_chunked" ->
-      """SELECT doc_id, 200 AS status, 'text/html' AS content_type,
-        |  CASE doc_id % 6 WHEN 0 THEN 'utf-8' WHEN 5 THEN 'utf-8'
-        |    WHEN 1 THEN 'windows-1252' ELSE '' END AS charset,
-        |  CASE doc_id % 6 WHEN 0 THEN 'utf8' WHEN 5 THEN 'utf8'
-        |    WHEN 1 THEN 'header' ELSE '' END AS cs_source,
-        |  CASE WHEN doc_id % 6 IN (2, 3, 4) THEN 'bad_encoding'
-        |    ELSE 'ok' END AS decision,
-        |  CASE doc_id % 6 WHEN 0 THEN text WHEN 5 THEN text
-        |    WHEN 1 THEN text || ' caf' || chr(233)
-        |    ELSE NULL END AS text
-        |FROM documents""".stripMargin,
-
-    // scored-keeper mirror: identical CTE chain + the q58 md5-hex
-    // score, argmax per component via (score DESC, vec_id) window
-    "q313_semdedup_canonical" ->
-      (SemDedupCcCtes + ",\n" +
-        """scored AS (
-          |  SELECT vec_id, keep_id,
-          |    substr(md5(concat_ws(':', 'sem-v1', CAST(vec_id AS VARCHAR))), 1, 8) AS score
-          |  FROM assigned),
-          |canon AS (
-          |  SELECT keep_id AS cluster, vec_id AS canon_id, score,
-          |    row_number() OVER (PARTITION BY keep_id ORDER BY score DESC, vec_id) AS rk,
-          |    count(*) OVER (PARTITION BY keep_id) AS cluster_size
-          |  FROM scored)
-          |SELECT cluster, canon_id, score, cluster_size FROM canon WHERE rk = 1""".stripMargin),
-
-    // calibrated-gopher mirror: the q291 gopher mirror as a subquery
-    // + the q296 discovery logic + the zero-hit override, all three
-    // recomputed independently
-    "q301_lang_calibrated_gopher" ->
-      (s"WITH b AS (SELECT doc_id, verdict AS base_verdict " +
-        s"FROM ($UGopherSql) AS g),\n" +
-        s"$duckMlTokensCte,\n$duckStopFreqCtes,\n$duckStopDiscCte,\n" +
-        "hl AS (SELECT DISTINCT lang FROM disc),\n" +
-        s"h AS (SELECT ta.doc_id, count(*) AS n FROM ta JOIN disc " +
-        s"ON ta.lang = disc.lang AND ta.tok = disc.tok GROUP BY 1),\n" +
-        s"docs AS (SELECT doc_id, lang FROM $MlJson)\n" +
-        """SELECT docs.doc_id, docs.lang,
-          |  CAST(coalesce(h.n, 0) AS BIGINT) AS stop_hits_lang,
-          |  b.base_verdict,
-          |  CASE WHEN b.base_verdict = 'keep' AND hl.lang IS NOT NULL
-          |    AND coalesce(h.n, 0) < 1 THEN 'stopword'
-          |    ELSE b.base_verdict END AS verdict
-          |FROM docs JOIN b USING (doc_id) LEFT JOIN h USING (doc_id)
-          |LEFT JOIN hl ON docs.lang = hl.lang""".stripMargin),
-
-    // script-profile mirror on real text: DuckDB's independent
-    // two-step (extract \p{L} letters, filter each by RE2 script
-    // class) against Spark's Java [\p{IsX}&&[\p{L}]] intersections
-    "q292_script_profile_multi" ->
-      (s"WITH raw AS (SELECT doc_id, coalesce(text, '') AS txt " +
-        s"FROM $MlJson),\n" +
-        """le AS (SELECT doc_id,
-          |  regexp_extract_all(txt, '\p{L}') AS ls FROM raw),
-          |c AS (SELECT doc_id,
-          |  CAST(len(list_filter(ls, x -> regexp_matches(x, '\p{Latin}')))
-          |    AS BIGINT) AS latin,
-          |  CAST(len(list_filter(ls, x -> regexp_matches(x, '\p{Cyrillic}')))
-          |    AS BIGINT) AS cyrillic,
-          |  CAST(len(list_filter(ls, x -> regexp_matches(x,
-          |    '[\p{Han}\p{Hiragana}\p{Katakana}]'))) AS BIGINT) AS cjk,
-          |  CAST(len(list_filter(ls, x -> regexp_matches(x, '\p{Arabic}')))
-          |    AS BIGINT) AS arabic,
-          |  CAST(len(ls) AS BIGINT) AS n_letters
-          |  FROM le),
-          |d AS (SELECT *,
-          |  n_letters - latin - cyrillic - cjk - arabic AS other,
-          |  greatest(latin, cyrillic, cjk, arabic,
-          |    n_letters - latin - cyrillic - cjk - arabic) AS best
-          |  FROM c),
-          |dm AS (SELECT *, CASE WHEN best <= 0 THEN 'none'
-          |    WHEN latin = best THEN 'latin'
-          |    WHEN cyrillic = best THEN 'cyrillic'
-          |    WHEN cjk = best THEN 'cjk'
-          |    WHEN arabic = best THEN 'arabic'
-          |    ELSE 'other' END AS dominant FROM d),
-          |sc AS (SELECT *, greatest(
-          |    CASE WHEN dominant = 'latin' THEN -1 ELSE latin END,
-          |    CASE WHEN dominant = 'cyrillic' THEN -1 ELSE cyrillic END,
-          |    CASE WHEN dominant = 'cjk' THEN -1 ELSE cjk END,
-          |    CASE WHEN dominant = 'arabic' THEN -1 ELSE arabic END,
-          |    CASE WHEN dominant = 'other' THEN -1 ELSE other END)
-          |    AS second_cnt FROM dm)
-          |SELECT doc_id, latin, cyrillic, cjk, arabic, n_letters, other,
-          |  dominant,
-          |  CAST(CASE WHEN n_letters = 0 THEN 0
-          |    ELSE greatest(second_cnt, 0) * 1000000 // n_letters END
-          |    AS BIGINT) AS second_ppm,
-          |  CASE WHEN n_letters = 0 THEN FALSE
-          |    ELSE greatest(second_cnt, 0) * 1000000 // n_letters > 200000
-          |    END AS mixed
-          |FROM sc""".stripMargin),
-
-    // budget-select mirror: the single-window running sum the operator
-    // deliberately avoids — independent truth for the distributed
-    // prefix-sum plan
-    "q262_budget_select" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |    ((doc_id % 50)*(doc_id % 50)) % 50 AS score,
-        |    50 + doc_id % 100 AS cost
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, score, cost,
-        |    sum(cost) OVER (ORDER BY score DESC, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM p)
-        |SELECT doc_id, CAST(score AS BIGINT) AS score,
-        |  CAST(cost AS BIGINT) AS cost, CAST(cum AS BIGINT) AS cum_cost,
-        |  cum <= 20000 AS selected
-        |FROM c""".stripMargin,
-
-    // crawl-delay mirror: star-group delays arithmetic; %4=0 hosts
-    // (specific group, no delay line) must be ABSENT
-    "q245_crawl_delays" ->
-      """SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com' AS host,
-        |  CAST(2 + i % 7 AS BIGINT) AS crawl_delay_s
-        |FROM (SELECT unnest(range(0, 20)) AS i) ids
-        |WHERE i % 4 <> 0""".stripMargin,
-
-    // parsed-robots mirror (q239/q240): the expected policy rows
-    // derive ARITHMETICALLY from the host index — nothing re-parses
-    // the bodies, so a green hash certifies parseRobots' group/agent
-    // SPEC (specific-beats-star, no-op lines, CRLF) against truth
-    "q239_robots_parse" ->
-      ("WITH " + RobotsParsedRulesSql + "\nSELECT host, prefix, allow FROM rl"),
-
-    // composed pipeline mirror: q223's longest-prefix decision chain
-    // with the rules CTE swapped for the arithmetic parsed table
-    "q240_robots_pipeline" -> (UrlCanonChainSql +
-      """,
-        |f AS (
-        |  SELECT doc_id, url,
-        |    lower(regexp_extract(auth, '^(?:[^@]*@)?([^:]*)', 1)) AS host,
-        |    CASE WHEN regexp_replace(rawpath, '/+$', '') = '' THEN '/'
-        |         ELSE regexp_replace(rawpath, '/+$', '') END AS path
-        |  FROM canon WHERE canonical_url IS NOT NULL),
-        |""".stripMargin + RobotsParsedRulesSql +
-      """,
-        |m AS (
-        |  SELECT f.doc_id, f.url, f.host, f.path, r.prefix, r.allow,
-        |    row_number() OVER (PARTITION BY f.doc_id
-        |      ORDER BY length(r.prefix) DESC NULLS LAST, r.prefix ASC NULLS FIRST,
-        |        r.allow DESC NULLS LAST)
-        |      AS rk
-        |  FROM f LEFT JOIN rl r
-        |    ON r.host = f.host AND starts_with(f.path, r.prefix))
-        |SELECT doc_id, url, host, path, prefix AS rule_prefix,
-        |  CASE WHEN coalesce(allow, TRUE) THEN 'allow' ELSE 'deny' END AS decision
-        |FROM m WHERE rk = 1""".stripMargin),
-
-    "q223_robots_filter" -> (RobotsDecideCtes +
-      """SELECT doc_id, url, host, path, prefix AS rule_prefix,
-        |  CASE WHEN coalesce(allow, TRUE) THEN 'allow' ELSE 'deny' END AS decision
-        |FROM m WHERE rk = 1""".stripMargin),
-
-    // sitemap-frontier mirror: canonical forms derived ARITHMETICALLY
-    // from the residues (independent truth for the regex chain);
-    // crawled set = canonical classes whose fetch was not the %17 bad
-    // arm; host via the standard nested-regex mirror.
-    // COUPLING ASSUMPTION (ADVICE r12): canonOf drops :80/:443
-    // unconditionally while canonicalUrl RETAINS them when they
-    // mismatch the scheme (https://h:80, http://h:443). That omission
-    // is safe here ONLY because host = x%20 determines x%5 (20 = 4·5),
-    // so a port-divergent crawled spelling can never collide with a
-    // candidate on the same host: the candidates' quadratic formulas
-    // never land in %5 ∈ {0,1} for a shared %20 class. If the fixture's
-    // host modulus or the quadratic formulas change, re-derive this or
-    // encode the true scheme/port-mismatch rule in canonOf.
-    "q237_sitemap_frontier" -> {
-      def canonOf(x: String): String =
-        s"((CASE WHEN ($x) % 3 = 1 THEN 'https' ELSE 'http' END) || " +
-          s"'://www.src' || CAST(($x) % 20 AS VARCHAR) || '.example.com' || " +
-          s"(CASE WHEN ($x) % 5 = 2 THEN ':8080' ELSE '' END) || " +
-          s"'/Docs/' || CAST(($x) % 50 AS VARCHAR) || " +
-          s"(CASE WHEN ($x) % 4 IN (0, 1) THEN '?a=1&b=2' ELSE '' END))"
-      s"""WITH cand AS (
-         |  SELECT DISTINCT 'http://www.src'
-         |      || CAST((doc_id*(doc_id+5)+2) % 20 AS VARCHAR)
-         |      || '.example.com/New/'
-         |      || CAST((doc_id*(doc_id+5)+2) % 50 AS VARCHAR) AS cu
-         |  FROM documents
-         |  UNION
-         |  SELECT DISTINCT ${canonOf("doc_id*(doc_id+9)+7")} FROM documents
-         |  UNION
-         |  SELECT DISTINCT ${mScmSql("doc_id")} || '://' || ${mHostCanSql("doc_id")}
-         |      || ${mPortCanSql("doc_id", mScmSql("doc_id"))}
-         |      || '/New2/' || CAST((doc_id*(doc_id+13)+11) % 50 AS VARCHAR)
-         |  FROM documents),
-         |crawled AS (
-         |  SELECT DISTINCT ${canonOf("doc_id")} AS cu
-         |  FROM documents WHERE doc_id % 17 <> 0)
-         |SELECT c.cu AS canonical_url, ${hostOfSql("c.cu")} AS host
-         |FROM cand c LEFT JOIN crawled w ON w.cu = c.cu
-         |WHERE w.cu IS NULL""".stripMargin
-    },
-
-    // resolution mirror: href, resolved AND canonical forms all
-    // derived ARITHMETICALLY from the id residues per reference class
-    // (the q237 independent-truth discipline) — nothing here runs the
-    // resolution chain, so a green hash certifies the SPEC of
-    // resolveUrl + canonicalUrl composed, not engine parity
-    "q238_resolve_links" -> {
-      val i = "doc_id"
-      val m = "m"
-      val bs = mScmSql(i)
-      val prefix = s"($bs || '://' || ${mAuthRawSql(i)})"
-      val bHostPort = s"($bs || '://' || ${mHostCanSql(i)} || ${mPortCanSql(i, bs)})"
-      val hrefSql =
-        s"(CASE cls WHEN 0 THEN ${messyUrlSql(m)} " +
-          s"WHEN 1 THEN regexp_replace(${messyUrlSql(m)}, '^[A-Za-z][A-Za-z0-9+.-]*:', '') " +
-          s"WHEN 2 THEN '/Docs/' || CAST(($m) % 50 AS VARCHAR) || '?b=2&a=1' " +
-          s"WHEN 3 THEN 'sub' || CAST(($m) % 10 AS VARCHAR) " +
-          s"WHEN 4 THEN chr(9) || './s' || CAST(($m) % 10 AS VARCHAR) || ' ' " +
-          s"WHEN 5 THEN '../Top/' || CAST(($m) % 50 AS VARCHAR) " +
-          s"WHEN 6 THEN '../../a/./b/../c' || CAST(($m) % 10 AS VARCHAR) " +
-          s"WHEN 7 THEN '?z=' || CAST(($m) % 9 AS VARCHAR) " +
-          s"WHEN 8 THEN '' WHEN 9 THEN 'javascript:void(0)' " +
-          s"ELSE '#top' END)"
-      val resolvedSql =
-        s"(CASE cls WHEN 0 THEN ${messyUrlSql(m)} " +
-          s"WHEN 1 THEN $bs || '://' || ${mAuthRawSql(m)} || ${mPathRawSql(m)} || ${mQRawSql(m)} " +
-          s"WHEN 2 THEN $prefix || '/Docs/' || CAST(($m) % 50 AS VARCHAR) || '?b=2&a=1' " +
-          s"WHEN 3 THEN $prefix || ${mDirRawSql(i)} || 'sub' || CAST(($m) % 10 AS VARCHAR) " +
-          s"WHEN 4 THEN $prefix || ${mDirRawSql(i)} || 's' || CAST(($m) % 10 AS VARCHAR) " +
-          s"WHEN 5 THEN $prefix || (CASE WHEN ($i) % 7 = 0 THEN '/Docs' ELSE '' END) || '/Top/' || CAST(($m) % 50 AS VARCHAR) " +
-          s"WHEN 6 THEN $prefix || '/a/c' || CAST(($m) % 10 AS VARCHAR) " +
-          s"WHEN 7 THEN $prefix || ${mPathRawSql(i)} || '?z=' || CAST(($m) % 9 AS VARCHAR) " +
-          s"WHEN 8 THEN $prefix || ${mPathRawSql(i)} || ${mQRawSql(i)} " +
-          s"WHEN 9 THEN 'javascript:void(0)' " +
-          s"ELSE $prefix || ${mPathRawSql(i)} || ${mQRawSql(i)} END)"
-      val canonicalSql =
-        s"(CASE cls WHEN 0 THEN ${mScmSql(m)} || '://' || ${mHostCanSql(m)} || ${mPortCanSql(m, mScmSql(m))} || ${mPathCanSql(m)} || ${mQCanSql(m)} " +
-          s"WHEN 1 THEN $bs || '://' || ${mHostCanSql(m)} || ${mPortCanSql(m, bs)} || ${mPathCanSql(m)} || ${mQCanSql(m)} " +
-          s"WHEN 2 THEN $bHostPort || '/Docs/' || CAST(($m) % 50 AS VARCHAR) || '?a=1&b=2' " +
-          s"WHEN 3 THEN $bHostPort || ${mDirRawSql(i)} || 'sub' || CAST(($m) % 10 AS VARCHAR) " +
-          s"WHEN 4 THEN $bHostPort || ${mDirRawSql(i)} || 's' || CAST(($m) % 10 AS VARCHAR) " +
-          s"WHEN 5 THEN $bHostPort || (CASE WHEN ($i) % 7 = 0 THEN '/Docs' ELSE '' END) || '/Top/' || CAST(($m) % 50 AS VARCHAR) " +
-          s"WHEN 6 THEN $bHostPort || '/a/c' || CAST(($m) % 10 AS VARCHAR) " +
-          s"WHEN 7 THEN $bHostPort || ${mPathCanSql(i)} || '?z=' || CAST(($m) % 9 AS VARCHAR) " +
-          s"WHEN 8 THEN $bHostPort || ${mPathCanSql(i)} || ${mQCanSql(i)} " +
-          s"WHEN 9 THEN NULL " +
-          s"ELSE $bHostPort || ${mPathCanSql(i)} || ${mQCanSql(i)} END)"
-      s"""WITH b AS (
-         |  SELECT doc_id, doc_id % 11 AS cls, doc_id*(doc_id+3)+7 AS m
-         |  FROM documents)
-         |SELECT doc_id, cls, $hrefSql AS href,
-         |  $resolvedSql AS resolved_url,
-         |  $canonicalSql AS canonical_url
-         |FROM b""".stripMargin
-    },
-
-    // HTTP-record mirror: CRLF via chr(13)||chr(10) in the fixture,
-    // identical RE2 split/extract patterns in the parse
-    "q236_http_parse" -> HttpParseSql,
-
-    // streaming HTTP triage twin: stateless per-record parse replayed
-    // over two JSONL waves — must accumulate EXACTLY the batch table,
-    // so the oracle is q236's verbatim (shared val)
-    "q248_http_parse_stream" -> HttpParseSql,
-
-    // chunked-decode oracle: the ORIGINAL text itself — independent
-    // truth (the decode must invert the 15-byte framing exactly);
-    // corrupted-size-line arm comes back NULL, and so does any text
-    // long enough to exceed the MaxChunks framing contract (guards
-    // the coupling loudly if a regenerated corpus grows longer texts
-    // — today's max is 577 chars vs this bound)
-    "q241_http_chunked" ->
-      s"""SELECT doc_id,
-         |  CASE WHEN doc_id % 13 = 0
-         |         OR length(text) > ${15 * (graft.ext.HttpRecord.MaxChunks - 1)}
-         |       THEN NULL ELSE text END AS decoded
-         |FROM documents""".stripMargin,
-
-    // boilerplate-paragraph mirror: the paragraphs() chain with chr(1)
-    // block breaks, list_transform/list_filter per-paragraph cleanup,
-    // (host, md5) page-frequency, string_agg ORDER BY pos re-join
-    "q235_boilerplate_paras" ->
-      """WITH pg AS (
-        |  SELECT doc_id,
-        |    'www.src' || CAST(doc_id % 20 AS VARCHAR) || '.example.com' AS host,
-        |    '<html><body><div class="nav">Home src' || CAST(doc_id % 20 AS VARCHAR)
-        |      || ' about contact</div><p>' || text
-        |      || '</p><div class="footer">Copyright src' || CAST(doc_id % 20 AS VARCHAR)
-        |      || ' all rights</div></body></html>' AS html
-        |  FROM documents),
-        |p1 AS (SELECT doc_id, host, regexp_replace(html,
-        |  '(?is)<script\b[^>]*>.*?</script[ \t\n\x0B\f\r]*>|<style\b[^>]*>.*?</style[ \t\n\x0B\f\r]*>|<!--.*?-->',
-        |  ' ', 'g') AS t FROM pg),
-        |p2 AS (SELECT doc_id, host, regexp_replace(t,
-        |  '(?is)<script\b[^>]*>.*|<style\b[^>]*>.*|<!--.*', ' ', 'g') AS t FROM p1),
-        |p3 AS (SELECT doc_id, host, regexp_replace(t, '<![^>]*>', ' ', 'g') AS t
-        |  FROM p2),
-        |p4 AS (SELECT doc_id, host, regexp_replace(t,
-        |  '(?i)</?(?:p|div|br|li|ul|ol|h[1-6]|table|tr|td|section|article|header|footer)\b[^>]*>',
-        |  chr(1), 'g') AS t FROM p3),
-        |p5 AS (SELECT doc_id, host, regexp_replace(regexp_replace(t,
-        |  '</?[A-Za-z][^>]*>', ' ', 'g'),
-        |  '(?s)(?:</?[A-Za-z][^>]*|<![^>]*)\z', ' ', 'g') AS t FROM p4),
-        |p6 AS (SELECT doc_id, host, __ENT__ AS t FROM p5),
-        |pr AS (
-        |  SELECT doc_id, host,
-        |    unnest(list_filter(list_transform(string_split(t, chr(1)),
-        |      x -> trim(regexp_replace(x, '[ \t\n\x0B\f\r]+', ' ', 'g'))),
-        |      x -> x <> '')) AS para,
-        |    generate_subscripts(list_filter(list_transform(string_split(t, chr(1)),
-        |      x -> trim(regexp_replace(x, '[ \t\n\x0B\f\r]+', ' ', 'g'))),
-        |      x -> x <> ''), 1) AS pos
-        |  FROM p6),
-        |fr AS (SELECT host, md5(para) AS fp, count(DISTINCT doc_id) AS n_pages
-        |  FROM pr GROUP BY 1, 2),
-        |j AS (SELECT pr.doc_id, pr.host, pr.para, pr.pos,
-        |    fr.n_pages >= 3 AS boiler
-        |  FROM pr JOIN fr ON fr.host = pr.host AND fr.fp = md5(pr.para))
-        |SELECT doc_id, host, CAST(count(*) AS BIGINT) AS n_paras,
-        |  CAST(sum(CASE WHEN boiler THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
-        |  coalesce(string_agg(CASE WHEN NOT boiler THEN para END, ' '
-        |    ORDER BY pos), '') AS clean_text
-        |FROM j GROUP BY 1, 2""".stripMargin
-      .replace("__ENT__", entityDecodeSql("t")),
-
-    // link-density mirror: the q235 strip chain with an anchor-
-    // sentinel pass (complete <a …>/</a> → chr(2)/chr(3)) before the
-    // generic tag strip, then the per-paragraph density fold as list
-    // lambdas; integer `//` division, >= threshold
-    "q249_link_density" ->
-      """WITH pg AS (
-        |  SELECT doc_id,
-        |    '<html><body><div class="nav"><a href="/">Home</a> <a href="/about">About site '
-        |      || CAST(doc_id % 250 AS VARCHAR)
-        |      || '</a> <a href="/contact">Contact</a></div><p>' || text
-        |      || '</p><p>see <a href="/more">details here</a> for the full story</p>'
-        |      || (CASE WHEN doc_id % 7 = 0
-        |             THEN '<p><a href="/e">abcde</a> fghi</p>' ELSE '' END)
-        |      || (CASE WHEN doc_id % 9 = 0
-        |             THEN '<div><a href="/x">x1</a> <a href="/y">link two</a></div>'
-        |             ELSE '' END)
-        |      || '</body></html>' AS html
-        |  FROM documents),
-        |p1 AS (SELECT doc_id, regexp_replace(html,
-        |  '(?is)<script\b[^>]*>.*?</script[ \t\n\x0B\f\r]*>|<style\b[^>]*>.*?</style[ \t\n\x0B\f\r]*>|<!--.*?-->',
-        |  ' ', 'g') AS t FROM pg),
-        |p2 AS (SELECT doc_id, regexp_replace(t,
-        |  '(?is)<script\b[^>]*>.*|<style\b[^>]*>.*|<!--.*', ' ', 'g') AS t FROM p1),
-        |p3 AS (SELECT doc_id, regexp_replace(t, '<![^>]*>', ' ', 'g') AS t
-        |  FROM p2),
-        |p4 AS (SELECT doc_id, regexp_replace(t,
-        |  '(?i)</?(?:p|div|br|li|ul|ol|h[1-6]|table|tr|td|section|article|header|footer)\b[^>]*>',
-        |  chr(1), 'g') AS t FROM p3),
-        |p4a AS (SELECT doc_id, regexp_replace(regexp_replace(t,
-        |  '(?i)<a\b[^>]*>', chr(2), 'g'),
-        |  '(?i)</a[ \t\n\x0B\f\r]*>', chr(3), 'g') AS t FROM p4),
-        |p5 AS (SELECT doc_id, regexp_replace(regexp_replace(t,
-        |  '</?[A-Za-z][^>]*>', ' ', 'g'),
-        |  '(?s)(?:</?[A-Za-z][^>]*|<![^>]*)\z', ' ', 'g') AS t FROM p4a),
-        |p6 AS (SELECT doc_id, __ENT__ AS t FROM p5),
-        |pr AS (
-        |  SELECT doc_id,
-        |    list_filter(list_transform(string_split(t, chr(1)),
-        |      x -> trim(regexp_replace(x, '[ \t\n\x0B\f\r]+', ' ', 'g'))),
-        |      x -> trim(regexp_replace(regexp_replace(x, '[\x02\x03]', ' ', 'g'),
-        |        '[ \t\n\x0B\f\r]+', ' ', 'g')) <> '') AS paras
-        |  FROM p6),
-        |sc AS (
-        |  SELECT doc_id, list_transform(paras, x -> struct_pack(
-        |    vis := trim(regexp_replace(regexp_replace(x, '[\x02\x03]', ' ', 'g'),
-        |      '[ \t\n\x0B\f\r]+', ' ', 'g')),
-        |    ppm := (length(trim(regexp_replace(coalesce(array_to_string(
-        |        regexp_extract_all(x, '\x02([^\x02\x03]*)\x03', 1), ' '), ''),
-        |        '[ \t\n\x0B\f\r]+', ' ', 'g'))) * 1000000)
-        |      // length(trim(regexp_replace(regexp_replace(x, '[\x02\x03]', ' ', 'g'),
-        |        '[ \t\n\x0B\f\r]+', ' ', 'g'))))) AS s
-        |  FROM pr)
-        |SELECT doc_id,
-        |  CAST(len(s) AS BIGINT) AS n_paras,
-        |  CAST(len(list_filter(s, e -> e.ppm >= 500000)) AS BIGINT) AS n_linkfarm,
-        |  CAST(coalesce(list_max(list_transform(s, e -> e.ppm)), 0) AS BIGINT)
-        |    AS max_density_ppm,
-        |  coalesce(array_to_string(list_transform(
-        |    list_filter(s, e -> e.ppm < 500000), e -> e.vis), ' '), '')
-        |    AS clean_text
-        |FROM sc""".stripMargin
-      .replace("__ENT__", entityDecodeSql("t")),
-
-    // intake capstone: q215 keep rule + q223 robots rank + q217 budget
-    // draw + q226 extraction chain + q228 LM chain, composed with the
-    // total precedence CASE; every stage's mirror is the one already
-    // certified standalone
-    "q234_intake_capstone" -> (UrlCanonChainSql +
-      """,
-        |k AS (
-        |  SELECT canonical_url, min(doc_id) AS keep_id
-        |  FROM canon WHERE canonical_url IS NOT NULL GROUP BY 1),
-        |dec AS (
-        |  SELECT c.doc_id, c.canonical_url,
-        |    CASE WHEN c.canonical_url IS NULL THEN 'bad_url'
-        |         WHEN c.doc_id = k.keep_id THEN 'kept'
-        |         ELSE 'dup_url' END AS decision
-        |  FROM canon c LEFT JOIN k ON c.canonical_url = k.canonical_url),
-        |kept AS (
-        |  SELECT doc_id, canonical_url,
-        |    lower(regexp_extract(regexp_extract(canonical_url,
-        |      '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1),
-        |      '^(?:[^@]*@)?([^:]*)', 1)) AS host,
-        |    CASE WHEN regexp_replace(regexp_extract(canonical_url,
-        |           '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1),
-        |           '/+$', '') = '' THEN '/'
-        |         ELSE regexp_replace(regexp_extract(canonical_url,
-        |           '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1),
-        |           '/+$', '') END AS path
-        |  FROM dec WHERE decision = 'kept'),
-        |ids AS (SELECT unnest(range(0, 20)) AS i),
-        |rl AS (
-        |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com' AS host,
-        |    '/' AS prefix, TRUE AS allow FROM ids
-        |  UNION ALL
-        |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com',
-        |    '/Docs/' || CAST(i % 7 AS VARCHAR), FALSE FROM ids
-        |  UNION ALL
-        |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com',
-        |    '/Docs/' || CAST(i % 7 AS VARCHAR) || '7', TRUE FROM ids),
-        |m AS (
-        |  SELECT f.doc_id, r.allow,
-        |    row_number() OVER (PARTITION BY f.doc_id
-        |      ORDER BY length(r.prefix) DESC NULLS LAST, r.prefix ASC NULLS FIRST,
-        |        r.allow DESC NULLS LAST) AS rk
-        |  FROM kept f LEFT JOIN rl r
-        |    ON r.host = f.host AND starts_with(f.path, r.prefix)),
-        |rdec AS (
-        |  SELECT doc_id,
-        |    CASE WHEN coalesce(allow, TRUE) THEN 'allow' ELSE 'deny' END AS rd
-        |  FROM m WHERE rk = 1),
-        |bud AS (
-        |  SELECT k2.doc_id FROM kept k2
-        |  JOIN rdec ON rdec.doc_id = k2.doc_id AND rdec.rd = 'allow'
-        |  QUALIFY row_number() OVER (PARTITION BY k2.host
-        |    ORDER BY substr(md5(concat_ws(':', 'budget-v1',
-        |      CAST(k2.doc_id AS VARCHAR))), 1, 8), k2.doc_id) <= 5),
-        |""".stripMargin +
-      htmlFixtureSql("FROM (SELECT d.doc_id," +
-        " CASE WHEN d.doc_id % 11 = 0 THEN reverse(d.text)" +
-        s" WHEN d.doc_id % 11 = 5 THEN '$EsGarble' || d.text" +
-        " ELSE d.text END" +
-        " AS text FROM documents d JOIN bud ON bud.doc_id = d.doc_id) dk") +
-      ",\n" + HtmlExtractCtesSql +
-      """,
-        |lsc AS (
-        |  SELECT doc_id, regexp_extract_all(lower(main_text), '[a-z0-9]+') AS toks
-        |  FROM ext),
-        |lgs AS (
-        |  SELECT doc_id,
-        |    len(list_filter(toks, x -> x IN ('the','and','of','to','is','in','that','it','with','for'))) AS s_en,
-        |    len(list_filter(toks, x -> x IN ('el','la','de','que','y','los','las','por','con','una'))) AS s_es,
-        |    len(list_filter(toks, x -> x IN ('der','die','und','das','ist','nicht','ein','mit','von','den'))) AS s_de,
-        |    len(list_filter(toks, x -> x IN ('le','la','les','et','est','des','une','dans','pour','que'))) AS s_fr,
-        |    len(list_filter(toks, x -> x IN ('il','di','che','la','per','una','sono','non','con','del'))) AS s_it
-        |  FROM lsc),
-        |lg AS (
-        |  SELECT doc_id,
-        |    CASE WHEN greatest(s_en, s_es, s_de, s_fr, s_it) = 0 THEN 'und'
-        |         WHEN s_en = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'en'
-        |         WHEN s_es = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'es'
-        |         WHEN s_de = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'de'
-        |         WHEN s_fr = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'fr'
-        |         WHEN s_it = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'it'
-        |         ELSE 'und' END AS guess
-        |  FROM lgs),
-        |rtok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w,
-        |    generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS p
-        |  FROM documents WHERE doc_id % 5 <> 0),
-        |rbg AS (
-        |  SELECT w AS w1, lead(w) OVER (PARTITION BY doc_id ORDER BY p) AS w2
-        |  FROM rtok QUALIFY w2 IS NOT NULL),
-        |c2 AS (SELECT w1, w2, count(*) AS c2 FROM rbg GROUP BY 1, 2),
-        |stok AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_extract_all(lower(main_text), '[a-z0-9]+')) AS w,
-        |    generate_subscripts(regexp_extract_all(lower(main_text), '[a-z0-9]+'), 1)
-        |      AS p
-        |  FROM ext),
-        |sbg AS (
-        |  SELECT doc_id, w AS w1, lead(w) OVER (PARTITION BY doc_id ORDER BY p) AS w2
-        |  FROM stok QUALIFY w2 IS NOT NULL),
-        |ppm AS (
-        |  SELECT s.doc_id,
-        |    CASE WHEN c2.c2 IS NULL THEN 1 ELSE 0 END AS unseen
-        |  FROM sbg s LEFT JOIN c2 ON c2.w1 = s.w1 AND c2.w2 = s.w2),
-        |lmf AS (
-        |  SELECT doc_id,
-        |    CASE WHEN sum(unseen) * 1000000 // count(*) >= 500000
-        |         THEN 'low' ELSE 'ok' END AS lmflag
-        |  FROM ppm GROUP BY 1)
-        |SELECT dec.doc_id, dec.canonical_url,
-        |  CASE WHEN dec.decision <> 'kept' THEN dec.decision
-        |       WHEN r.rd = 'deny' THEN 'denied'
-        |       WHEN bud.doc_id IS NULL THEN 'over_budget'
-        |       WHEN lg.guess IS NOT NULL AND lg.guess NOT IN ('en', 'und')
-        |         THEN 'wrong_language'
-        |       WHEN lf.lmflag = 'low' THEN 'low_quality'
-        |       ELSE 'kept' END AS decision
-        |FROM dec
-        |LEFT JOIN rdec r ON r.doc_id = dec.doc_id
-        |LEFT JOIN bud ON bud.doc_id = dec.doc_id
-        |LEFT JOIN lg ON lg.doc_id = dec.doc_id
-        |LEFT JOIN lmf lf ON lf.doc_id = dec.doc_id""".stripMargin),
-
-    // politeness composition: q215's keep rule, q223's robots argmax
-    // (on the CANONICAL url — idempotent re-canonicalization), q217's
-    // budget draw, then the round-robin windows; seq mirrors
-    // globalDenseSeq's total (host_rank, host) order
-    "q229_politeness_schedule" -> (PolitenessChainSql +
-      """
-        |SELECT doc_id, host, host_rank,
-        |  CAST(row_number() OVER (ORDER BY host_rank, host) AS BIGINT)
-        |    AS fetch_seq
-        |FROM hr""".stripMargin),
-
-    // delay-aware schedule mirror: q229's chain + the group-scoped
-    // delay table (specific-group hosts default 1 s — their graftbot
-    // group declares none), fetch_at_s = (rank-1)·delay
-    "q247_delay_schedule" -> (PolitenessChainSql +
-      """,
-        |dl AS (
-        |  SELECT 'www.src' || CAST(i AS VARCHAR) || '.example.com' AS host,
-        |    CAST(CASE WHEN i % 4 = 0 THEN 1 ELSE 2 + i % 7 END AS BIGINT)
-        |      AS crawl_delay_s
-        |  FROM ids)
-        |SELECT hr.doc_id, hr.host, hr.host_rank,
-        |  CAST(row_number() OVER (ORDER BY hr.host_rank, hr.host) AS BIGINT)
-        |    AS fetch_seq,
-        |  dl.crawl_delay_s,
-        |  (hr.host_rank - 1) * dl.crawl_delay_s AS fetch_at_s
-        |FROM hr JOIN dl ON dl.host = hr.host""".stripMargin),
-
-    // q18's shingle machinery at n=8; raw gram strings join directly
-    "q222_ngram_decontaminate" -> NgramDecontamSql,
-
-    // IDENTICAL SQL to q222: the Bloom prefilter admits false
-    // positives only, the exact semi join removes them (the q186
-    // identical-oracle discipline)
-    "q333_bloom_decontaminate" -> NgramDecontamSql,
-
-    "q220_host_pagerank" -> (LinkGraphChainSql +
-      """,
-        |e AS (
-        |  SELECT DISTINCT
-        |    CAST(regexp_extract(src_host, 'src([0-9]+)', 1) AS BIGINT) AS src,
-        |    CAST(regexp_extract(dst_host, 'src([0-9]+)', 1) AS BIGINT) AS dst
-        |  FROM e0),
-        |""".stripMargin + pageRankChainSql(3) +
-      """
-        |SELECT 'www.src' || CAST(node AS VARCHAR) || '.example.com' AS host,
-        |  CAST(rank AS BIGINT) AS rank
-        |FROM r3""".stripMargin),
-
-    "q213_url_canon" -> UrlCanonSelectSql,
-    // identical-oracle certification: the streaming triage must
-    // accumulate exactly the batch projection
-    "q218_url_canon_stream" -> UrlCanonSelectSql,
-
-    "q217_host_budget" -> (UrlCanonChainSql +
-      """,
-        |k AS (
-        |  SELECT canonical_url, min(doc_id) AS keep_id
-        |  FROM canon WHERE canonical_url IS NOT NULL GROUP BY 1),
-        |kept AS (
-        |  SELECT c.doc_id, c.canonical_url,
-        |    lower(regexp_extract(regexp_extract(c.canonical_url,
-        |      '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1),
-        |      '^(?:[^@]*@)?([^:]*)', 1)) AS host
-        |  FROM canon c JOIN k
-        |    ON c.canonical_url = k.canonical_url AND c.doc_id = k.keep_id)
-        |SELECT doc_id, canonical_url, host FROM kept
-        |QUALIFY row_number() OVER (PARTITION BY host
-        |  ORDER BY substr(md5(concat_ws(':', 'budget-v1',
-        |    CAST(doc_id AS VARCHAR))), 1, 8), doc_id) <= 5""".stripMargin),
-
-    "q214_host_rollup" -> (UrlCanonChainSql +
-      """,
-        |k AS (
-        |  SELECT canonical_url, min(doc_id) AS doc_id, count(*) AS n_variants
-        |  FROM canon WHERE canonical_url IS NOT NULL GROUP BY 1),
-        |kk AS (
-        |  SELECT k.canonical_url, k.n_variants, c.n_chars
-        |  FROM k JOIN canon c ON c.doc_id = k.doc_id)
-        |SELECT lower(regexp_extract(regexp_extract(kk.canonical_url,
-        |    '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1),
-        |    '^(?:[^@]*@)?([^:]*)', 1)) AS host,
-        |  CAST(count(*) AS BIGINT) AS n_urls,
-        |  CAST(sum(n_variants) AS BIGINT) AS n_fetches,
-        |  CAST(sum(n_chars) AS BIGINT) AS total_bytes
-        |FROM kk GROUP BY 1""".stripMargin),
-
-    "q215_crawl_url_dedup" -> (UrlCanonChainSql +
-      """,
-        |k AS (
-        |  SELECT canonical_url, min(doc_id) AS keep_id
-        |  FROM canon WHERE canonical_url IS NOT NULL GROUP BY 1)
-        |SELECT c.doc_id, c.url, c.canonical_url,
-        |  CASE WHEN c.canonical_url IS NULL THEN 'bad_url'
-        |       WHEN c.doc_id = k.keep_id THEN 'kept'
-        |       ELSE 'dup_url' END AS decision
-        |FROM canon c LEFT JOIN k ON c.canonical_url = k.canonical_url"""
-        .stripMargin),
-
-    // staged capstone: URL decisions (q215's derivation) + exact-Jaccard
-    // content truth over the URL-kept slice only (q18's shingle SQL)
-    "q216_crawl_staged_dedup" -> (UrlCanonChainSql +
-      """,
-        |k AS (
-        |  SELECT canonical_url, min(doc_id) AS keep_id
-        |  FROM canon WHERE canonical_url IS NOT NULL GROUP BY 1),
-        |dec AS (
-        |  SELECT c.doc_id, c.canonical_url,
-        |    CASE WHEN c.canonical_url IS NULL THEN 'bad_url'
-        |         WHEN c.doc_id = k.keep_id THEN 'kept'
-        |         ELSE 'dup_url' END AS decision
-        |  FROM canon c LEFT JOIN k ON c.canonical_url = k.canonical_url),
-        |tok AS (
-        |  SELECT d.doc_id,
-        |    unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |    generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1)
-        |      AS pos
-        |  FROM documents d JOIN dec ON dec.doc_id = d.doc_id
-        |  WHERE dec.decision = 'kept'),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-        |      AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL),
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |dupc AS (
-        |  SELECT DISTINCT db AS doc_id
-        |  FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
-        |  WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8)
-        |SELECT dec.doc_id, dec.canonical_url,
-        |  CASE WHEN dec.decision = 'kept' AND dupc.doc_id IS NOT NULL
-        |       THEN 'dup_content' ELSE dec.decision END AS decision
-        |FROM dec LEFT JOIN dupc ON dupc.doc_id = dec.doc_id"""
-        .stripMargin),
-
-    // bigram LM mirror: unnest+generate_subscripts token stream, lead()
-    // bigrams, count tables from the %5<>0 slice, add-one ppm per
-    // held-out pair occurrence; HUGEINT sums defused by BIGINT casts
-    "q228_lm_quality" -> LmQualitySql,
-    // identical-oracle certification: the stored-model round trip must
-    // be invisible in the scored rows (the q199/q187 discipline)
-    "q231_lm_stored" -> LmQualitySql,
-
-    "q226_html_extract" -> HtmlExtractSelectSql,
-    // identical-oracle certification: the streaming extraction is a
-    // stateless per-row map — two delivery waves must accumulate
-    // exactly the batch table (the q218/q185 discipline)
-    "q232_html_extract_stream" -> HtmlExtractSelectSql,
-
-    // markup-density mirror: same fixture + extraction chain; tag and
-    // link counts via regexp_extract_all list lengths
-    "q233_markup_stats" -> ("WITH " + htmlFixtureSql("FROM documents") +
-      ",\n" + HtmlExtractCtesSql +
-      """
-        |SELECT h.doc_id,
-        |  CAST(len(regexp_extract_all(h.html, '</?[A-Za-z][^>]*>')) AS BIGINT)
-        |    AS n_tags,
-        |  CAST(len(regexp_extract_all(h.html, '(?i)<a\b[^>]*>')) AS BIGINT)
-        |    AS n_links,
-        |  CAST(length(h.html) AS BIGINT) AS n_raw,
-        |  CAST(length(e.main_text) AS BIGINT) AS n_text,
-        |  CAST(length(e.main_text) * 1000000 // length(h.html) AS BIGINT)
-        |    AS text_ppm
-        |FROM h JOIN ext e ON e.doc_id = h.doc_id""".stripMargin),
-
-    // full crawl-text chain: q216's URL decisions + HTML extraction
-    // over the kept fetches + exact-Jaccard content truth on the
-    // EXTRACTED text (q216's shingle SQL reading ext.main_text)
-    "q227_crawl_text_capstone" -> (UrlCanonChainSql +
-      """,
-        |k AS (
-        |  SELECT canonical_url, min(doc_id) AS keep_id
-        |  FROM canon WHERE canonical_url IS NOT NULL GROUP BY 1),
-        |dec AS (
-        |  SELECT c.doc_id, c.canonical_url,
-        |    CASE WHEN c.canonical_url IS NULL THEN 'bad_url'
-        |         WHEN c.doc_id = k.keep_id THEN 'kept'
-        |         ELSE 'dup_url' END AS decision
-        |  FROM canon c LEFT JOIN k ON c.canonical_url = k.canonical_url),
-        |""".stripMargin +
-      htmlFixtureSql("FROM (SELECT d.doc_id, d.text FROM documents d" +
-        " JOIN dec ON dec.doc_id = d.doc_id WHERE dec.decision = 'kept') dk") +
-      ",\n" + HtmlExtractCtesSql +
-      """,
-        |tok AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_extract_all(lower(main_text), '[a-z0-9]+')) AS tok,
-        |    generate_subscripts(regexp_extract_all(lower(main_text), '[a-z0-9]+'), 1)
-        |      AS pos
-        |  FROM ext),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-        |      AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL),
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |dupc AS (
-        |  SELECT DISTINCT db AS doc_id
-        |  FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
-        |  WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8)
-        |SELECT dec.doc_id, dec.canonical_url,
-        |  CASE WHEN dec.decision = 'kept' AND dupc.doc_id IS NOT NULL
-        |       THEN 'dup_content' ELSE dec.decision END AS decision
-        |FROM dec LEFT JOIN dupc ON dupc.doc_id = dec.doc_id""".stripMargin),
-
-    "q206_bpe_fertility" -> BpeFertilitySql,
-    "q209_skipgram_pairs" -> SkipGramSql,
-    "q210_negative_samples" -> NegativeSamplesSql,
-
-    "q211_node_features" ->
-      """WITH e AS (
-        |  SELECT DISTINCT o_custkey % 40 AS u, o_orderkey % 40 AS v
-        |  FROM orders WHERE o_custkey % 40 <> o_orderkey % 40),
-        |nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
-        |od AS (SELECT u AS node, CAST(count(*) AS BIGINT) AS out_deg FROM e GROUP BY u),
-        |id AS (SELECT v AS node, CAST(count(*) AS BIGINT) AS in_deg FROM e GROUP BY v),
-        |th AS (
-        |  SELECT a.u AS node, CAST(count(*) AS BIGINT) AS n_paths2,
-        |    CAST(count(DISTINCT b.v) AS BIGINT) AS n_reach2
-        |  FROM e a JOIN e b ON a.v = b.u GROUP BY a.u)
-        |SELECT n.node, coalesce(od.out_deg, 0) AS out_deg,
-        |  coalesce(id.in_deg, 0) AS in_deg,
-        |  coalesce(th.n_paths2, 0) AS n_paths2,
-        |  coalesce(th.n_reach2, 0) AS n_reach2
-        |FROM nodes n
-        |LEFT JOIN od USING (node) LEFT JOIN id USING (node)
-        |LEFT JOIN th USING (node)""".stripMargin,
-
-    "q207_cosine_fused" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |    list_reduce(list_transform(list_zip(embedding, embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS nn
-        |  FROM embeddings),
-        |q AS (SELECT * FROM e WHERE vec_id % 43 = 0),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b)
-        |      / sqrt(q.nn * c.nn) AS cosine
-        |  FROM q JOIN e c ON c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank,
-        |  cosine
-        |FROM scored QUALIFY rank <= 5""".stripMargin,
-
-    // Integer Hamming over the identical sign-pack fold
-    // (list_prepend(0,…) makes list_reduce fold exactly like Spark's
-    // aggregate — the q48 discipline; 32-bit words keep every
-    // intermediate off the BIGINT sign bit).
-    "q203_hamming_topk" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |w AS (
-        |  SELECT vec_id,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(embedding[1:32],
-        |        x -> CAST(CASE WHEN x >= 0 THEN 1 ELSE 0 END AS BIGINT))),
-        |      (a, b) -> a * 2 + b) AS w1,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(embedding[33:64],
-        |        x -> CAST(CASE WHEN x >= 0 THEN 1 ELSE 0 END AS BIGINT))),
-        |      (a, b) -> a * 2 + b) AS w2
-        |  FROM e),
-        |q AS (SELECT * FROM w WHERE vec_id % 50 = 0),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    CAST(bit_count(xor(q.w1, c.w1)) + bit_count(xor(q.w2, c.w2)) AS BIGINT) AS hamming
-        |  FROM q JOIN w c ON c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY hamming, neighbor_id) AS rank,
-        |  hamming
-        |FROM scored QUALIFY rank <= 5""".stripMargin,
-
-    // q46 discipline: n_exact from the brute-force cosine SQL, n_hit
-    // pinned at the measured sf0.01 value.
-    "q204_hamming_rerank" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, embedding,
-        |    list_reduce(list_transform(list_zip(embedding, embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS nn
-        |  FROM embeddings),
-        |q AS (SELECT * FROM e WHERE vec_id % 50 = 0),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b)
-        |      / sqrt(q.nn * c.nn) AS cosine
-        |  FROM q JOIN e c ON c.vec_id <> q.vec_id),
-        |exact AS (
-        |  SELECT query_id, neighbor_id,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-        |  FROM scored QUALIFY rank <= 5),
-        |hits(method, n_hit) AS (VALUES ('hamming_rerank100', CAST($Q204PinnedHits AS BIGINT)))
-        |SELECT method, n_exact, n_hit, n_hit >= n_exact * 0.9 AS recall_ok
-        |FROM hits CROSS JOIN (SELECT count(*) AS n_exact FROM exact)""".stripMargin,
-
-    "q202_ngram_novelty" -> NgramNoveltySql,
-
-    // identical-oracle certification: per-doc novelty has no
-    // cross-batch state, so the three-wave streamed scoring must be
-    // byte-identical to the batch rows — the waves invisible.
-    "q208_novelty_stream" -> NgramNoveltySql,
-
-    // Language scores and the rolling hash mirrored term by term:
-    // list_prepend(0, ...) makes DuckDB's init-less list_reduce fold
-    // exactly like Spark's aggregate(…, 0, …); ties resolve by the
-    // CASE order = profile declaration order on both sides.
-    "q48_text_lang" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents
-        |), s AS (
-        |  SELECT doc_id, lang, toks,
-        |    len(list_filter(toks, x -> x IN ('the','and','of','to','is','in','that','it','with','for'))) AS s_en,
-        |    len(list_filter(toks, x -> x IN ('el','la','de','que','y','los','las','por','con','una'))) AS s_es,
-        |    len(list_filter(toks, x -> x IN ('der','die','und','das','ist','nicht','ein','mit','von','den'))) AS s_de,
-        |    len(list_filter(toks, x -> x IN ('le','la','les','et','est','des','une','dans','pour','que'))) AS s_fr,
-        |    len(list_filter(toks, x -> x IN ('il','di','che','la','per','una','sono','non','con','del'))) AS s_it
-        |  FROM t)
-        |SELECT doc_id, lang,
-        |  CASE WHEN greatest(s_en, s_es, s_de, s_fr, s_it) = 0 THEN 'und'
-        |       WHEN s_en = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'en'
-        |       WHEN s_es = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'es'
-        |       WHEN s_de = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'de'
-        |       WHEN s_fr = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'fr'
-        |       WHEN s_it = greatest(s_en, s_es, s_de, s_fr, s_it) THEN 'it'
-        |       ELSE 'und' END AS lang_guess,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(toks, tok ->
-        |      CAST(list_reduce(list_transform(range(1, 13),
-        |        i -> CAST(CASE WHEN ascii(substr(md5(tok), i, 1)) <= 57
-        |                  THEN ascii(substr(md5(tok), i, 1)) - 48
-        |                  ELSE ascii(substr(md5(tok), i, 1)) - 87 END AS BIGINT)),
-        |        (a, b) -> a * 16 + b) AS BIGINT))),
-        |    (acc, h) -> (acc * 1000003 + h) % 1099511627776) AS roll_fp
-        |FROM s""".stripMargin,
-
-    // n_exact comes from the oracle's own brute-force SQL; n_hit is the
-    // PINNED deterministic intersection size measured at sf0.01 (fixed
-    // seeds; see the q46 query comment for the provenance argument).
-    "q46_ann_recall" ->
-      """WITH n AS (
-        |  SELECT vec_id, embedding,
-        |    list_reduce(list_transform(list_zip(embedding, embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS nn
-        |  FROM embeddings
-        |), q AS (SELECT * FROM n WHERE vec_id % 50 = 0),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b)
-        |      / sqrt(q.nn * c.nn) AS cosine
-        |  FROM q JOIN n c ON c.vec_id <> q.vec_id),
-        |exact AS (
-        |  SELECT query_id, neighbor_id,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-        |  FROM scored QUALIFY rank <= 5),
-        |hits(method, n_hit) AS (VALUES
-        |  ('ivf_nprobe12', CAST(46 AS BIGINT)),
-        |  ('lsh_t8', CAST(49 AS BIGINT)))
-        |SELECT method, n_exact, n_hit, n_hit >= n_exact * 0.9 AS recall_ok
-        |FROM hits CROSS JOIN (SELECT count(*) AS n_exact FROM exact)""".stripMargin,
-
-    "q47_grf1_meta" ->
-      s"""SELECT name, width, height, channels,
-        |  CAST(width * height * channels AS BIGINT) AS payloadBytes
-        |FROM read_parquet('$FixturesDir/media_expected.parquet')""".stripMargin,
-
-    // Batch gap-sessionization over the SAME landing files the stream
-    // replays. processTime carries an explicit +00:00 offset, so
-    // epoch_us(TIMESTAMPTZ) is the same absolute microsecond count as
-    // the stream's getTime-based math regardless of engine time zone.
-    "q45_sessions_stream" ->
-      s"""WITH e AS (
-        |  SELECT userId, epoch_us(CAST(processTime AS TIMESTAMPTZ)) AS us
-        |  FROM read_json_auto('$FixturesDir/events_json/*.json')
-        |  WHERE userId IS NOT NULL
-        |), d AS (
-        |  SELECT userId, us,
-        |    CASE WHEN us - lag(us) OVER (PARTITION BY userId ORDER BY us) > 3600000000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM e
-        |), s AS (
-        |  SELECT userId, us,
-        |    SUM(brk) OVER (PARTITION BY userId ORDER BY us ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM d)
-        |SELECT userId, min(us) AS startUs, max(us) AS endUs, count(*) AS nEvents
-        |FROM s GROUP BY userId, sid""".stripMargin,
-
-    // Connected components as a recursive transitive-closure CTE over
-    // the q18 near-dup pairs (small graph at oracle scale), min node id
-    // per component, left-join closure over all docs for singletons —
-    // independently recomputing what the large-star/small-star
-    // contraction produces distributed-side.
-    "q55_dedup_clusters" -> FullDedupClustersSql,
-
-    // IDENTICAL SQL to q55: the incremental fold must equal the full
-    // recompute bit-for-bit (the q89 discipline on the clustering arc).
-    "q186_inc_clusters" -> FullDedupClustersSql,
-
-    // The Bloom pre-filter is result-invisible (exact join removes
-    // false positives), so the oracle is the plain semi join.
-    "q56_bloom_join" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders
-        |WHERE o_custkey IN (
-        |  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')""".stripMargin,
-
-    // The bucketed rewrite is result-invisible; the oracle is the plain
-    // range-predicate join.
-    "q57_range_join" ->
-      """WITH iv AS (
-        |  SELECT o_orderkey,
-        |    datediff('day', DATE '1970-01-01', o_orderdate) AS lo,
-        |    datediff('day', DATE '1970-01-01', o_orderdate) + 4 AS hi
-        |  FROM orders WHERE o_orderkey % 10 = 0),
-        |pt AS (
-        |  SELECT datediff('day', DATE '1970-01-01', l_shipdate) AS d, l_quantity
-        |  FROM lineitem)
-        |SELECT o_orderkey, count(*) AS n_shipped,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty
-        |FROM iv JOIN pt ON pt.d >= iv.lo AND pt.d < iv.hi
-        |GROUP BY o_orderkey""".stripMargin,
-
-    // Thresholds are floor(rate * 2^32) as 8 lowercase hex digits;
-    // lowercase hex compares order-isomorphically to the number, so the
-    // string compare reproduces the exact sampled set in any engine.
-    "q58_sample_mix" ->
-      """SELECT doc_id, source, lang FROM documents
-        |WHERE CASE
-        |  WHEN source = 'src0' THEN substr(md5(concat_ws(':', 'mix-v1', CAST(doc_id AS VARCHAR))), 1, 8) < 'cccccccc'
-        |  WHEN source = 'src1' THEN substr(md5(concat_ws(':', 'mix-v1', CAST(doc_id AS VARCHAR))), 1, 8) < '80000000'
-        |  WHEN source = 'src2' THEN substr(md5(concat_ws(':', 'mix-v1', CAST(doc_id AS VARCHAR))), 1, 8) < '40000000'
-        |  WHEN source = 'src3' THEN substr(md5(concat_ws(':', 'mix-v1', CAST(doc_id AS VARCHAR))), 1, 8) < '20000000'
-        |  ELSE substr(md5(concat_ws(':', 'mix-v1', CAST(doc_id AS VARCHAR))), 1, 8) < '0ccccccc'
-        |END""".stripMargin,
-
-    // Division-form idf mirrored with identical cast/operation order;
-    // ties in the per-doc ranking break on the token string.
-    "q59_tfidf" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
-        |  FROM documents),
-        |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM tf)
-        |SELECT doc_id, token, tf, df,
-        |  CAST(tf AS DOUBLE) * (CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE)) AS tfidf,
-        |  row_number() OVER (PARTITION BY doc_id ORDER BY
-        |    CAST(tf AS DOUBLE) * (CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE)) DESC,
-        |    token) AS rank
-        |FROM tf JOIN dfreq USING (token) CROSS JOIN nd
-        |QUALIFY rank <= 3""".stripMargin,
-
-    // Same RE2-safe patterns, global replacement; the planted PII is
-    // derived from each row's own columns so both engines build the
-    // identical raw string.
-    "q60_pii_redact" ->
-      """WITH r AS (
-        |  SELECT doc_id,
-        |    'contact ' || source || '_' || CAST(doc_id AS VARCHAR) ||
-        |    '@example.com or +1-555-' ||
-        |    lpad(CAST((doc_id * 7) % 10000 AS VARCHAR), 4, '0') ||
-        |    ' card 4111111111111111 :: ' || substr(text, 1, 40) AS raw
-        |  FROM documents)
-        |SELECT doc_id, raw,
-        |  regexp_replace(regexp_replace(regexp_replace(raw,
-        |    '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z][a-z]+', '[EMAIL]', 'g'),
-        |    '\+[0-9]{1,3}-[0-9]{3}-[0-9]{4}', '[PHONE]', 'g'),
-        |    '[0-9]{13,16}', '[NUM]', 'g') AS clean,
-        |  len(regexp_extract_all(raw, '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z][a-z]+')) AS n_emails,
-        |  len(regexp_extract_all(raw, '\+[0-9]{1,3}-[0-9]{3}-[0-9]{4}')) AS n_phones
-        |FROM r""".stripMargin,
-
-    // Window sums are exact integers; chunk = floor(offset/budget) is
-    // cast back to BIGINT to mirror Spark's long floor-division result.
-    "q61_pack_sequences" ->
-      """WITH d AS (
-        |  SELECT source, doc_id,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tok
-        |  FROM documents),
-        |o AS (
-        |  SELECT source, doc_id, n_tok,
-        |    coalesce(SUM(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS tok_offset
-        |  FROM d)
-        |SELECT source, CAST(floor(tok_offset / 256) AS BIGINT) AS chunk,
-        |  count(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS chunk_tokens
-        |FROM o GROUP BY 1, 2""".stripMargin,
-
-    // Sketch estimates are engine-specific; the oracle computes the
-    // exact values independently and pins the bound checks (q46
-    // pattern — the booleans are live Spark-side assertions).
-    "q62_sketch_contract" ->
-      """WITH ex AS (SELECT CAST(count(DISTINCT user_id) AS DOUBLE) AS exact FROM events),
-        |p AS (SELECT CAST(quantile_disc(value, 0.5) AS DOUBLE) AS exact FROM events)
-        |SELECT 'hll_users' AS method, exact, true AS ok FROM ex
-        |UNION ALL
-        |SELECT 'hll_union_daily_users' AS method, exact, true AS ok FROM ex
-        |UNION ALL
-        |SELECT 'approx_p50_value' AS method, exact, true AS ok FROM p""".stripMargin,
-
-    // Identical multiply/divide operand order; round is
-    // half-away-from-zero on doubles in both engines; integer outputs
-    // make any rounding divergence visible as a whole-unit shift.
-    "q63_quantize_int8" ->
-      """WITH s AS (
-        |  SELECT vec_id, embedding,
-        |    CAST(list_max(list_transform(embedding, x -> abs(x))) AS DOUBLE) AS mx
-        |  FROM embeddings),
-        |sc AS (
-        |  SELECT vec_id, embedding,
-        |    CASE WHEN mx > 0 THEN 127.0 / mx ELSE 0.0 END AS scale
-        |  FROM s),
-        |q AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding,
-        |      x -> CAST(round(CAST(x AS DOUBLE) * scale) AS BIGINT)) AS qs
-        |  FROM sc)
-        |SELECT vec_id,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT), qs), (a, b) -> a + b) AS q_sum,
-        |  list_min(qs) AS q_min,
-        |  list_max(qs) AS q_max
-        |FROM q""".stripMargin,
-
-    // list_slice truncates at the list end exactly like Spark's slice;
-    // range(0, n, 16) == sequence(0, n-1, 16) for n > 0.
-    "q64_chunk_windows" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, toks, unnest(range(0, len(toks), 16)) AS start
-        |  FROM t WHERE len(toks) > 0)
-        |SELECT doc_id,
-        |  CAST(start // 16 AS BIGINT) AS chunk_id,
-        |  CAST(start AS BIGINT) AS chunk_start,
-        |  len(list_slice(toks, start + 1, start + 32)) AS chunk_len,
-        |  array_to_string(list_slice(toks, start + 1, start + 32), ' ') AS chunk_text
-        |FROM s""".stripMargin,
-
-    // All-pairs levenshtein is the independent truth at oracle scale;
-    // the Spark side must produce the identical pair set from deletion
-    // keys + verify.
-    "q66_fuzzy_pairs" ->
-      """WITH v AS (
-        |  SELECT DISTINCT c_name AS s FROM customer WHERE c_custkey < 300)
-        |SELECT a.s AS s_a, b.s AS s_b, levenshtein(a.s, b.s) AS dist
-        |FROM v a JOIN v b ON a.s < b.s
-        |WHERE levenshtein(a.s, b.s) <= 1""".stripMargin,
-
-    // Same five metrics per column; min/max rendered as strings on both
-    // sides (Spark cast(string) and DuckDB CAST AS VARCHAR agree for
-    // bigint/double/timestamp/varchar at these magnitudes).
-    "q67_profile" -> Seq(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority")
-      .map(c =>
-        s"""SELECT '$c' AS column_name, count(*) AS n_rows,
-           |  count(*) - count($c) AS n_null,
-           |  count(DISTINCT $c) AS n_distinct,
-           |  CAST(min($c) AS VARCHAR) AS min_val,
-           |  CAST(max($c) AS VARCHAR) AS max_val
-           |FROM orders""".stripMargin)
-      .mkString("\nUNION ALL\n"),
-
-    // exact side recomputed; the live HLL bound is asserted Spark-side
-    // and surfaces here as distinct_ok = true.
-    "q81_profile_approx_contract" -> Seq(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority")
-      .map(c =>
-        s"""SELECT '$c' AS column_name, count(*) AS n_rows,
-           |  count(*) - count($c) AS n_null,
-           |  CAST(min($c) AS VARCHAR) AS min_val,
-           |  CAST(max($c) AS VARCHAR) AS max_val,
-           |  true AS distinct_ok
-           |FROM orders""".stripMargin)
-      .mkString("\nUNION ALL\n"),
-
-    // first-arrival-wins == DISTINCT for byte-identical redeliveries
-    // (fixture eventIds are unique; the replay plants the duplicates).
-    "q82_dedup_stream" ->
-      s"""SELECT DISTINCT eventId, userId, resourceId, countryCode, duration
-        |FROM read_json_auto('$FixturesDir/events_json/*.json')""".stripMargin,
-
-    // epoch_us(CAST(x AS TIMESTAMPTZ)) handles the explicit-offset
-    // processTime strings (q45 convention); strict lower bound and
-    // inclusive upper bound mirror the stream's interval condition.
-    "q83_followup_join_stream" ->
-      s"""WITH e AS (
-        |  SELECT eventId, userId,
-        |         epoch_us(CAST(processTime AS TIMESTAMPTZ)) AS us
-        |  FROM read_json_auto('$FixturesDir/events_json/*.json'))
-        |SELECT a.eventId AS a_id, b.eventId AS b_id, a.userId AS uid
-        |FROM e a JOIN e b ON a.userId = b.userId
-        |  AND b.us > a.us AND b.us <= a.us + CAST(3600000000 AS BIGINT)""".stripMargin,
-
-    // identical truth to q79: the batch against the whole %5≠0 corpus —
-    // append-then-probe must equal build-all-then-probe.
-    "q89_idx_append" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL
-        |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS n_id, b.doc_id AS c_id, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle
-        |    AND a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-        |  GROUP BY 1, 2)
-        |SELECT n_id AS new_id, c_id AS corpus_id,
-        |  CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) AS jaccard
-        |FROM inter JOIN sz sa ON sa.doc_id = n_id JOIN sz sb ON sb.doc_id = c_id
-        |WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8""".stripMargin,
-
-    // q55's transitive-closure clusters + the q58/q70 md5 hex-threshold
-    // convention on the CLUSTER id ('cccccccc' = 0.8, 'e6666666' = 0.9).
-    "q85_split_safe" ->
-      """WITH RECURSIVE tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL
-        |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT da AS a, db AS b
-        |  FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
-        |  WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8),
-        |edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b, a FROM pairs),
-        |reach(node, r) AS (
-        |  SELECT u, u FROM edges
-        |  UNION
-        |  SELECT reach.node, e.v FROM reach JOIN edges e ON e.u = reach.r),
-        |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
-        |assigned AS (
-        |  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS cluster
-        |  FROM documents d LEFT JOIN comp c ON c.node = d.doc_id)
-        |SELECT doc_id, cluster,
-        |  CASE
-        |    WHEN substr(md5(concat_ws(':', 'split-v1', CAST(cluster AS VARCHAR))), 1, 8) < 'cccccccc' THEN 'train'
-        |    WHEN substr(md5(concat_ws(':', 'split-v1', CAST(cluster AS VARCHAR))), 1, 8) < 'e6666666' THEN 'val'
-        |    ELSE 'test' END AS split
-        |FROM assigned""".stripMargin,
-
-    // q79's exact cross-side Jaccard, inverted: training docs NOT
-    // matched by any eval doc at >= 0.8.
-    "q87_decontaminate" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL
-        |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS e_id, b.doc_id AS t_id, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle
-        |    AND a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-        |  GROUP BY 1, 2),
-        |hits AS (
-        |  SELECT DISTINCT t_id
-        |  FROM inter JOIN sz sa ON sa.doc_id = e_id JOIN sz sb ON sb.doc_id = t_id
-        |  WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8)
-        |SELECT doc_id FROM documents
-        |WHERE doc_id % 5 <> 0 AND doc_id NOT IN (SELECT t_id FROM hits)""".stripMargin,
-
-    // the md5 hex string is order-isomorphic to the draw on both
-    // engines; ties broken by doc_id identically.
-    "q86_shuffle_shards" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |         md5(concat_ws(':', 'shuf-v1', CAST(doc_id AS VARCHAR))) AS hx
-        |  FROM documents)
-        |SELECT doc_id, substr(hx, 1, 2) AS shard,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY substr(hx, 1, 2) ORDER BY hx, doc_id) AS BIGINT) AS shard_rank
-        |FROM h""".stripMargin,
-
-    "q84_running_totals_stream" ->
-      s"""SELECT resourceId, count(*) AS total
-        |FROM read_json_auto('$FixturesDir/events_json/*.json')
-        |GROUP BY resourceId""".stripMargin,
-
-    "q68_histogram" ->
-      """WITH m AS (
-        |  SELECT CAST(min(o_totalprice) AS DOUBLE) AS mn,
-        |         CAST(max(o_totalprice) AS DOUBLE) AS mx
-        |  FROM orders),
-        |b AS (
-        |  SELECT CASE WHEN mx = mn THEN 0
-        |    ELSE CAST(least(floor((CAST(o_totalprice AS DOUBLE) - mn) / ((mx - mn) / 20)), 19) AS BIGINT)
-        |    END AS bucket, mn, mx
-        |  FROM orders CROSS JOIN m)
-        |SELECT bucket, mn + bucket * ((mx - mn) / 20) AS bucket_lo, count(*) AS n
-        |FROM b GROUP BY bucket, mn, mx""".stripMargin,
-
-    // Every pipeline stage recomputed independently: quality gate,
-    // min-id exact dedup, exact-Jaccard pairs (== the minhash-LSH set
-    // at these parameters, same argument as q18), recursive-CTE
-    // connected components, md5-threshold sample, window packing.
-    "q69_pipeline_e2e" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT doc_id, source, text,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents),
-        |quality AS (
-        |  SELECT doc_id, source, text, toks, len(toks) AS ntok
-        |  FROM base
-        |  WHERE len(toks) >= 30 AND
-        |    CASE WHEN len(toks) >= 2 THEN
-        |      CAST(len(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1]))
-        |        - len(list_distinct(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1]))) AS DOUBLE)
-        |      / CAST(len(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS DOUBLE)
-        |    ELSE 0.0 END < 0.5),
-        |uniq AS (
-        |  SELECT q.* FROM quality q
-        |  JOIN (SELECT md5(text) AS h, min(doc_id) AS keep_id
-        |        FROM quality GROUP BY 1) k
-        |    ON q.doc_id = k.keep_id),
-        |tok AS (
-        |  SELECT doc_id, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos
-        |  FROM uniq),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL),
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |prs AS (
-        |  SELECT da AS a, db AS b
-        |  FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
-        |  WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8),
-        |edges AS (SELECT a AS u, b AS v FROM prs UNION SELECT b, a FROM prs),
-        |reach(node, r) AS (
-        |  SELECT u, u FROM edges
-        |  UNION
-        |  SELECT reach.node, e.v FROM reach JOIN edges e ON e.u = reach.r),
-        |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
-        |reps AS (
-        |  SELECT u.doc_id, u.source, u.ntok
-        |  FROM uniq u LEFT JOIN comp c ON c.node = u.doc_id
-        |  WHERE coalesce(c.component, u.doc_id) = u.doc_id),
-        |samp AS (
-        |  SELECT * FROM reps
-        |  WHERE substr(md5(concat_ws(':', 'pipe-v1', CAST(doc_id AS VARCHAR))), 1, 8) < '80000000'),
-        |off AS (
-        |  SELECT source, doc_id, ntok,
-        |    coalesce(SUM(ntok) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS tok_offset
-        |  FROM samp)
-        |SELECT source, CAST(floor(tok_offset / 256) AS BIGINT) AS chunk,
-        |  count(*) AS n_docs, CAST(SUM(ntok) AS BIGINT) AS chunk_tokens
-        |FROM off GROUP BY 1, 2""".stripMargin,
-
-    // floor(weight) fixed copies + one more when the md5 draw falls
-    // under frac(weight); thresholds are the q58 hex convention.
-    "q70_epoch_mix" ->
-      """WITH c AS (
-        |  SELECT doc_id, source,
-        |    CASE
-        |      WHEN source = 'src0' THEN 2 + CASE WHEN substr(md5(concat_ws(':', 'epoch-v1', CAST(doc_id AS VARCHAR))), 1, 8) < '80000000' THEN 1 ELSE 0 END
-        |      WHEN source = 'src1' THEN 1
-        |      WHEN source = 'src2' THEN CASE WHEN substr(md5(concat_ws(':', 'epoch-v1', CAST(doc_id AS VARCHAR))), 1, 8) < '4ccccccc' THEN 1 ELSE 0 END
-        |      ELSE 0 END AS copies
-        |  FROM documents)
-        |SELECT doc_id, source, unnest(range(1, copies + 1)) AS epoch
-        |FROM c WHERE copies >= 1""".stripMargin,
-
-    // exact cross-side Jaccard — same missing-pair argument as q18
-    // (32×4 bands at J>=0.8 on this corpus's similarity band).
-    "q79_dedup_incremental" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL
-        |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS n_id, b.doc_id AS c_id, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle
-        |    AND a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-        |  GROUP BY 1, 2)
-        |SELECT n_id AS new_id, c_id AS corpus_id,
-        |  CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) AS jaccard
-        |FROM inter JOIN sz sa ON sa.doc_id = n_id JOIN sz sb ON sb.doc_id = c_id
-        |WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8""".stripMargin,
-
-    "q78_nullsafe_join" ->
-      """WITH g AS (
-        |  SELECT nullif(event_type, 'view') AS k, count(*) AS n
-        |  FROM events GROUP BY 1)
-        |SELECT coalesce(l.k, '<null>') AS k, l.n AS n_a, r.n AS n_b
-        |FROM g l JOIN g r ON l.k IS NOT DISTINCT FROM r.k""".stripMargin,
-
-    // stream-final == batch: the update-mode replay's merged report must
-    // equal the batch top10 over the same landing files — the oracle is
-    // the q28 batch SQL verbatim.
-    "q80_top10_stream_update" ->
-      raw"""WITH cat AS (
-        |  SELECT regexp_replace(c.id, '\.(\d)', '.0\1', 'g') AS categoryId,
-        |         c.name AS categoryName
-        |  FROM (SELECT unnest(content) AS c
-        |        FROM read_json_auto('$FixturesDir/categories.json'))),
-        |res AS (
-        |  SELECT id AS resourceId, name AS resourceName, categoryId
-        |  FROM read_json_auto('$FixturesDir/resources.json')),
-        |ev AS (
-        |  SELECT substr(processTime, 1, 10) AS date, resourceId
-        |  FROM read_json_auto('$FixturesDir/events_json/*.json')),
-        |c2 AS (SELECT date, resourceId, COUNT(*) AS cnt FROM ev GROUP BY 1, 2),
-        |jd AS (
-        |  SELECT c2.date, c2.resourceId, c2.cnt, res.categoryId,
-        |         res.resourceName, cat.categoryName
-        |  FROM c2 LEFT JOIN res USING (resourceId)
-        |  LEFT JOIN cat ON res.categoryId = cat.categoryId)
-        |SELECT CAST(DENSE_RANK() OVER (PARTITION BY date, categoryId ORDER BY cnt DESC) AS BIGINT) AS position,
-        |  date, categoryId, categoryName, resourceId, resourceName
-        |FROM jd QUALIFY position <= 10""".stripMargin,
-
-    // top-20 by (count desc, token) on both sides; the membership test
-    // and the integer-ratio division mirror exactly.
-    "q77_oov_ratio" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
-        |  FROM documents),
-        |vocab AS (
-        |  SELECT token FROM (
-        |    SELECT token, count(*) AS cnt FROM tok GROUP BY 1
-        |    ORDER BY cnt DESC, token LIMIT 20)),
-        |d AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents),
-        |v AS (SELECT list(token ORDER BY token) AS vl FROM vocab)
-        |SELECT doc_id,
-        |  len(toks) AS n_tokens,
-        |  len(list_filter(toks, t -> NOT list_contains(vl, t))) AS n_oov,
-        |  CAST(len(list_filter(toks, t -> NOT list_contains(vl, t))) AS DOUBLE)
-        |    / CAST(len(toks) AS DOUBLE) AS oov_ratio
-        |FROM d CROSS JOIN v
-        |WHERE len(toks) > 0""".stripMargin,
-
-    "q75_full_outer" ->
-      """SELECT
-        |  coalesce(r_regionkey, -1) AS rk,
-        |  coalesce(r_name, '<none>') AS r_name,
-        |  coalesce(nk, -1) AS nk,
-        |  coalesce(n_name, '<none>') AS n_name
-        |FROM region
-        |FULL OUTER JOIN (
-        |  SELECT n_nationkey + 2 AS nk, n_name
-        |  FROM nation WHERE n_nationkey < 10) n
-        |ON r_regionkey = nk""".stripMargin,
-
-    "q76_lateral" ->
-      """SELECT r.r_name, t.n_name, t.n_nationkey
-        |FROM region r,
-        |LATERAL (
-        |  SELECT n_name, n_nationkey
-        |  FROM nation n
-        |  WHERE n.n_regionkey = r.r_regionkey
-        |  ORDER BY n_name, n_nationkey
-        |  LIMIT 2) t""".stripMargin,
-
-    // break at delta >= gap (session_window semantics; see the query
-    // comment), session bounds as epoch microseconds of actual events.
-    "q74_session_window" ->
-      """WITH d AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-        |           OVER (PARTITION BY user_id ORDER BY ts) >= 1800000000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, ts, value,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM d)
-        |SELECT user_id,
-        |  min(epoch_us(ts)) AS start_us,
-        |  max(epoch_us(ts)) AS last_us,
-        |  count(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
-        |FROM s GROUP BY user_id, sid""".stripMargin,
-
-    "q71_window_ranks" ->
-      """SELECT event_type, event_id, value,
-        |  ntile(4) OVER w AS quartile,
-        |  percent_rank() OVER w AS pct_rank,
-        |  cume_dist() OVER w AS cum_dist
-        |FROM events WHERE event_id % 7 = 0
-        |WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)""".stripMargin,
-
-    "q72_correlated" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders o
-        |WHERE o_totalprice = (SELECT max(o2.o_totalprice)
-        |                      FROM orders o2
-        |                      WHERE o2.o_custkey = o.o_custkey)""".stripMargin,
-
-    "q73_grouping_sets" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS rf,
-        |  coalesce(l_linestatus, 'ALL') AS ls,
-        |  grouping(l_returnflag) AS g_rf, grouping(l_linestatus) AS g_ls,
-        |  count(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin,
-
-    "q65_repetition" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, lang,
-        |    CASE WHEN len(toks) >= 2 THEN
-        |      list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1])
-        |    ELSE [] END AS grams
-        |  FROM t)
-        |SELECT doc_id, lang,
-        |  CASE WHEN len(grams) > 0 THEN
-        |    CAST(len(grams) - len(list_distinct(grams)) AS DOUBLE) / CAST(len(grams) AS DOUBLE)
-        |  ELSE 0.0 END AS rep_ratio
-        |FROM g""".stripMargin,
-
-    // MERGE as its relational definition: full outer join, change side
-    // wins on 'U', 'D' rows (and their matched snapshot rows) dropped,
-    // change-only rows must be upserts. o_totalprice + 1.0 is one IEEE
-    // add on identical operands — exact in both engines.
-    "q90_merge" ->
-      """WITH snap AS (
-        |  SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus
-        |  FROM orders WHERE o_orderkey % 4 <> 0),
-        |chg AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 8 = 2 THEN 'D' ELSE 'U' END AS op,
-        |    o_custkey, o_totalprice + 1.0 AS o_totalprice, o_orderstatus
-        |  FROM orders WHERE o_orderkey % 2 = 0)
-        |SELECT coalesce(c.o_orderkey, s.o_orderkey) AS o_orderkey,
-        |  CASE WHEN c.op = 'U' THEN c.o_custkey ELSE s.o_custkey END AS o_custkey,
-        |  CASE WHEN c.op = 'U' THEN c.o_totalprice ELSE s.o_totalprice END AS o_totalprice,
-        |  CASE WHEN c.op = 'U' THEN c.o_orderstatus ELSE s.o_orderstatus END AS o_orderstatus
-        |FROM snap s FULL OUTER JOIN chg c ON s.o_orderkey = c.o_orderkey
-        |WHERE coalesce(c.op, '') <> 'D'
-        |  AND (s.o_orderkey IS NOT NULL OR c.op = 'U')""".stripMargin,
-
-    // Same md5 draw as q58; the per-source threshold is
-    // floor((min_n/n)·2^32) in hex — IEEE ÷,×,floor are correctly
-    // rounded, so both engines compute the identical threshold. The
-    // smallest source keeps all rows (no 8-hex threshold equals 1.0).
-    "q91_mix_bal" ->
-      """WITH n AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-        |m AS (SELECT min(n) AS minn FROM n)
-        |SELECT d.doc_id, d.source, d.lang
-        |FROM documents d JOIN n USING (source) CROSS JOIN m
-        |WHERE n.n = m.minn
-        |   OR substr(md5(concat_ws(':', 'mix-v1', CAST(d.doc_id AS VARCHAR))), 1, 8)
-        |      < lpad(lower(hex(CAST(floor(
-        |          (CAST(m.minn AS DOUBLE) / CAST(n.n AS DOUBLE)) * 4294967296.0
-        |        ) AS BIGINT))), 8, '0')""".stripMargin,
-
-    // q55's transitive-closure component oracle + argmax(n_chars, min
-    // doc_id) per cluster; cluster_size is counted BEFORE the argmax
-    // filter, like the Spark window.
-    "q92_canon" ->
-      """WITH RECURSIVE tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL
-        |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT da AS a, db AS b
-        |  FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
-        |  WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8),
-        |edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b, a FROM pairs),
-        |reach(node, r) AS (
-        |  SELECT u, u FROM edges
-        |  UNION
-        |  SELECT reach.node, e.v FROM reach JOIN edges e ON e.u = reach.r),
-        |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
-        |assigned AS (
-        |  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS cluster
-        |  FROM documents d LEFT JOIN comp c ON c.node = d.doc_id)
-        |SELECT a.cluster, a.doc_id AS canon_id, d.n_chars,
-        |  count(*) OVER (PARTITION BY a.cluster) AS cluster_size
-        |FROM assigned a JOIN documents d ON d.doc_id = a.doc_id
-        |QUALIFY row_number() OVER (PARTITION BY a.cluster
-        |  ORDER BY d.n_chars DESC, a.doc_id) = 1""".stripMargin,
-
-    // Distinct (doc, token) grain; SUM(df) cast to BIGINT (DuckDB sums
-    // BIGINT into HUGEINT, which pandas would float-ify) and ONE final
-    // division — no other FP op exists in the query.
-    "q93_rarity" ->
-      """WITH raw AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
-        |  FROM documents),
-        |tok AS (SELECT DISTINCT doc_id, token FROM raw),
-        |dfreq AS (SELECT token, count(*) AS df FROM tok GROUP BY 1)
-        |SELECT doc_id, count(*) AS n_types, CAST(sum(df) AS BIGINT) AS sum_df,
-        |  CAST(CAST(sum(df) AS BIGINT) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_df
-        |FROM tok JOIN dfreq USING (token)
-        |GROUP BY doc_id""".stripMargin,
-
-    // compaction = last (key, seq) row; then q90's merge definition.
-    "q94_cdc" ->
-      """WITH snap AS (
-        |  SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 4 <> 0),
-        |log AS (
-        |  SELECT l_orderkey AS k, l_linenumber AS seq,
-        |    CASE WHEN l_returnflag = 'R' THEN 'D' ELSE 'U' END AS op,
-        |    l_extendedprice AS v
-        |  FROM lineitem),
-        |chg AS (
-        |  SELECT k, op, v FROM log
-        |  QUALIFY row_number() OVER (PARTITION BY k
-        |    ORDER BY seq DESC, op DESC, v DESC) = 1)
-        |SELECT coalesce(c.k, s.o_orderkey) AS o_orderkey,
-        |  CASE WHEN c.op = 'U' THEN c.v ELSE s.o_totalprice END AS o_totalprice
-        |FROM snap s FULL OUTER JOIN chg c ON s.o_orderkey = c.k
-        |WHERE coalesce(c.op, '') <> 'D'
-        |  AND (s.o_orderkey IS NOT NULL OR c.op = 'U')""".stripMargin,
-
-    // The salt is result-invisible: the oracle is the plain join+agg.
-    "q95_salt_join" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    // The bounded-buffer aggregate must equal the window-rank form.
-    "q96_topk_agg" ->
-      """SELECT event_type, row_number() OVER w AS rank, event_id, value
-        |FROM events
-        |WHERE value IS NOT NULL
-        |WINDOW w AS (PARTITION BY event_type ORDER BY value DESC, event_id)
-        |QUALIFY row_number() OVER w <= 3""".stripMargin,
-
-    // merge(state(history), state(batch)) must equal the ONE-SHOT
-    // aggregate over all events — the incremental path is invisible.
-    "q97_inc_agg" ->
-      """SELECT event_type, count(*) AS cnt,
-        |  CAST(sum(event_id) AS BIGINT) AS sum_eid,
-        |  max(value) AS max_value,
-        |  CAST(CAST(sum(event_id) AS BIGINT) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_eid
-        |FROM events
-        |GROUP BY event_type""".stripMargin,
-
-    // SCD2 as its relational definition: history passes through, the
-    // changeset closes current rows, 'U' rows open new versions.
-    "q98_scd2" ->
-      """WITH dim AS (
-        |  SELECT o_orderkey, o_totalprice,
-        |    CAST(1 AS BIGINT) AS valid_from, CAST(NULL AS BIGINT) AS valid_to
-        |  FROM orders WHERE o_orderkey % 4 <> 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_totalprice - 5.0,
-        |    CAST(0 AS BIGINT), CAST(1 AS BIGINT)
-        |  FROM orders WHERE o_orderkey % 4 <> 0 AND o_orderkey % 3 = 0),
-        |chg AS (
-        |  SELECT o_orderkey AS k,
-        |    CASE WHEN o_orderkey % 8 = 2 THEN 'D' ELSE 'U' END AS op,
-        |    o_totalprice + 1.0 AS v
-        |  FROM orders WHERE o_orderkey % 2 = 0)
-        |SELECT o_orderkey, o_totalprice, valid_from, valid_to
-        |FROM dim WHERE valid_to IS NOT NULL
-        |UNION ALL
-        |SELECT d.o_orderkey, d.o_totalprice, d.valid_from,
-        |  CASE WHEN c.op IS NOT NULL THEN CAST(2 AS BIGINT) ELSE d.valid_to END
-        |FROM dim d LEFT JOIN chg c ON d.o_orderkey = c.k
-        |WHERE d.valid_to IS NULL
-        |UNION ALL
-        |SELECT k, v, CAST(2 AS BIGINT), CAST(NULL AS BIGINT)
-        |FROM chg WHERE op = 'U'""".stripMargin,
-
-    // Latest event per resource by (processTime µs, eventId) — the
-    // delivery-order-independent truth the guarded streaming upsert
-    // must converge to.
-    "q99_cdc_stream" ->
-      s"""WITH e AS (
-        |  SELECT resourceId,
-        |    epoch_us(CAST(processTime AS TIMESTAMPTZ)) AS seq,
-        |    eventId, userId, duration
-        |  FROM read_json_auto('$FixturesDir/events_json/*.json')
-        |  WHERE resourceId IS NOT NULL)
-        |SELECT resourceId, seq, eventId, userId, duration
-        |FROM e
-        |QUALIFY row_number() OVER (PARTITION BY resourceId
-        |  ORDER BY seq DESC, eventId DESC) = 1""".stripMargin,
-
-    // Same draw as q58/q91 (md5 of salt:key), rank + key tie-break.
-    "q100_sample_n" ->
-      """SELECT doc_id, source, lang FROM documents
-        |QUALIFY row_number() OVER (PARTITION BY source
-        |  ORDER BY substr(md5(concat_ws(':', 'eval-v1', CAST(doc_id AS VARCHAR))), 1, 8),
-        |           doc_id) <= 30""".stripMargin,
-
-    // NOTE: the outer ORDER BY must use the QUALIFIED c.key (BIGINT) —
-    // the bare name would resolve to the output alias, a VARCHAR, and
-    // break ties lexicographically while the window breaks them
-    // numerically (caught by the round-7 oracle run).
-    "q101_skew_profile" ->
-      """WITH c AS (
-        |  SELECT l_orderkey AS key, count(*) AS n FROM lineitem GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c)
-        |SELECT row_number() OVER (ORDER BY n DESC, c.key ASC NULLS FIRST) AS rank,
-        |  CAST(c.key AS VARCHAR) AS key, n,
-        |  CAST(n AS DOUBLE) / CAST(total AS DOUBLE) AS share
-        |FROM c CROSS JOIN t
-        |ORDER BY n DESC, c.key ASC NULLS FIRST
-        |LIMIT 8""".stripMargin,
-
-    // Same md5 permutation as q86's shuffleShards; the negative-rank
-    // walk is pure integer arithmetic (div/mod on BIGINTs).
-    "q102_neg_pairs" ->
-      """WITH a AS (
-        |  SELECT doc_id AS key,
-        |    md5(concat_ws(':', 'neg-v1', CAST(doc_id AS VARCHAR))) AS h
-        |  FROM documents),
-        |r AS (
-        |  SELECT key, substr(h, 1, 2) AS shard,
-        |    row_number() OVER (PARTITION BY substr(h, 1, 2) ORDER BY h, key) AS shard_rank
-        |  FROM a),
-        |s AS (SELECT shard, count(*) AS shard_size FROM r GROUP BY 1),
-        |n AS (
-        |  SELECT r.key, r.shard, r.shard_rank, j.j,
-        |    (r.shard_rank - 1 + j.j * (s.shard_size // 3) + j.j) % s.shard_size + 1
-        |      AS neg_rank
-        |  FROM r JOIN s USING (shard)
-        |  CROSS JOIN (SELECT unnest([1, 2]) AS j) j)
-        |SELECT n.key, r2.key AS neg_key, CAST(n.j AS BIGINT) AS j
-        |FROM n JOIN r r2 ON r2.shard = n.shard AND r2.shard_rank = n.neg_rank
-        |WHERE n.neg_rank <> n.shard_rank""".stripMargin,
-
-    // chr(1) field delimiter / chr(2) null marker mirror
-    // Diff.rowFingerprint's \u0001/\u0002 exactly.
-    "q103_diff" ->
-      """WITH v1 AS (SELECT doc_id, text, lang, source FROM documents),
-        |v2 AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END AS text,
-        |    lang, source
-        |  FROM documents WHERE doc_id % 11 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text, lang, source
-        |  FROM documents WHERE doc_id % 13 = 0),
-        |o AS (SELECT doc_id, md5(concat_ws(chr(1),
-        |    coalesce(CAST(text AS VARCHAR), chr(2)),
-        |    coalesce(CAST(lang AS VARCHAR), chr(2)),
-        |    coalesce(CAST(source AS VARCHAR), chr(2)))) AS old_fp FROM v1),
-        |n AS (SELECT doc_id, md5(concat_ws(chr(1),
-        |    coalesce(CAST(text AS VARCHAR), chr(2)),
-        |    coalesce(CAST(lang AS VARCHAR), chr(2)),
-        |    coalesce(CAST(source AS VARCHAR), chr(2)))) AS new_fp FROM v2)
-        |SELECT coalesce(n.doc_id, o.doc_id) AS doc_id,
-        |  CASE WHEN o.doc_id IS NULL THEN 'added'
-        |       WHEN n.doc_id IS NULL THEN 'removed'
-        |       WHEN old_fp = new_fp THEN 'unchanged'
-        |       ELSE 'changed' END AS status,
-        |  old_fp, new_fp
-        |FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id""".stripMargin,
-
-    // q55's component closure over the quality slice, then this
-    // round's operators in sequence: argmax-canonical keep, balanced
-    // mix thresholds, exact-N eval rank.
-    "q104_pipeline_v2" ->
-      """WITH RECURSIVE q AS (
-        |  SELECT doc_id, text, source, n_chars FROM documents WHERE n_chars >= 200),
-        |tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM q),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL),
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |prs AS (
-        |  SELECT da AS a, db AS b
-        |  FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
-        |  WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8),
-        |edges AS (SELECT a AS u, b AS v FROM prs UNION SELECT b, a FROM prs),
-        |reach(node, r) AS (
-        |  SELECT u, u FROM edges
-        |  UNION
-        |  SELECT reach.node, e.v FROM reach JOIN edges e ON e.u = reach.r),
-        |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
-        |assigned AS (
-        |  SELECT d.doc_id, d.source, d.n_chars,
-        |    coalesce(c.component, d.doc_id) AS cluster
-        |  FROM q d LEFT JOIN comp c ON c.node = d.doc_id),
-        |canon AS (
-        |  SELECT doc_id, source FROM assigned
-        |  QUALIFY row_number() OVER (PARTITION BY cluster
-        |    ORDER BY n_chars DESC, doc_id) = 1),
-        |nn AS (SELECT source, count(*) AS n FROM canon GROUP BY 1),
-        |m AS (SELECT min(n) AS minn FROM nn),
-        |mixed AS (
-        |  SELECT c.doc_id, c.source
-        |  FROM canon c JOIN nn USING (source) CROSS JOIN m
-        |  WHERE nn.n = m.minn
-        |     OR substr(md5(concat_ws(':', 'mix-v2', CAST(c.doc_id AS VARCHAR))), 1, 8)
-        |        < lpad(lower(hex(CAST(floor(
-        |            (CAST(m.minn AS DOUBLE) / CAST(nn.n AS DOUBLE)) * 4294967296.0
-        |          ) AS BIGINT))), 8, '0'))
-        |SELECT doc_id, source,
-        |  CASE WHEN row_number() OVER (PARTITION BY source
-        |    ORDER BY substr(md5(concat_ws(':', 'eval-v2', CAST(doc_id AS VARCHAR))), 1, 8),
-        |             doc_id) <= 10
-        |  THEN 'eval' ELSE 'train' END AS split
-        |FROM mixed""".stripMargin,
-
-    // q92's windowed shingle construction, kept NON-distinct (every
-    // occurrence counts) at n=5; count(*) and count(DISTINCT doc_id)
-    // are both BIGINT in both engines; ngram is the unique final
-    // tiebreak so the LIMIT cut is total-order deterministic.
-    "q105_ngram_hotspots" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM documents),
-        |ng AS (
-        |  SELECT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-        |      || ' ' || lead(tok, 3) OVER w || ' ' || lead(tok, 4) OVER w AS ngram
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 4) OVER w IS NOT NULL)
-        |SELECT ngram, count(*) AS n_occ, count(DISTINCT doc_id) AS n_docs
-        |FROM ng GROUP BY 1
-        |ORDER BY n_occ DESC, ngram LIMIT 20""".stripMargin,
-
-    // Pair = substr(token, i, 2) over the distinct-vocabulary word
-    // counts; sum(wc) cast to BIGINT (DuckDB sums BIGINT into
-    // HUGEINT); pair is the unique final tiebreak.
-    "q106_bpe_pairs" ->
-      """WITH raw AS (
-        |  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
-        |  FROM documents),
-        |wc AS (SELECT token, count(*) AS wc FROM raw GROUP BY 1),
-        |p AS (
-        |  SELECT unnest(list_transform(range(1, length(token)),
-        |    i -> substr(token, CAST(i AS INT), 2))) AS pair, wc
-        |  FROM wc WHERE length(token) >= 2)
-        |SELECT pair, CAST(sum(wc) AS BIGINT) AS freq
-        |FROM p GROUP BY 1
-        |ORDER BY freq DESC, pair LIMIT 30""".stripMargin,
-
-    // Same md5 draw; '0x'||hex → BIGINT mirrors Spark's conv(_,16,10).
-    // priority = (w·2^32)/(v+1): exact multiply (n_chars < 2^21) then
-    // ONE correctly-rounded divide — bit-identical doubles both sides;
-    // doc_id tiebreak makes the LIMIT cut total-order deterministic.
-    "q107_priority_sample" ->
-      """WITH a AS (
-        |  SELECT doc_id, source, n_chars,
-        |    CAST(('0x' || substr(md5(concat_ws(':', 'prio-v1',
-        |      CAST(doc_id AS VARCHAR))), 1, 8)) AS BIGINT) + 1 AS u
-        |  FROM documents)
-        |SELECT doc_id, source, n_chars,
-        |  CAST(n_chars AS DOUBLE) * 4294967296.0 / CAST(u AS DOUBLE) AS priority
-        |FROM a
-        |ORDER BY priority DESC, doc_id LIMIT 60""".stripMargin,
-
-    // The same sweep: running max of end over strictly-preceding rows,
-    // open-flag cumulative sum = span id. (start, end) ties need no
-    // tiebreak (see Intervals scaladoc); all outputs are integer
-    // arithmetic — sums cast to BIGINT against DuckDB's HUGEINT.
-    "q108_span_merge" ->
-      """WITH iv AS (
-        |  SELECT l_orderkey AS k, CAST(l_shipdate AS DATE) AS s,
-        |    CAST(l_shipdate AS DATE) + (l_linenumber % 14) AS e
-        |  FROM lineitem WHERE l_shipdate IS NOT NULL),
-        |f AS (
-        |  SELECT k, s, e,
-        |    CASE WHEN max(e) OVER pre IS NULL OR s > max(e) OVER pre
-        |      THEN 1 ELSE 0 END AS flag
-        |  FROM iv WINDOW pre AS (PARTITION BY k ORDER BY s, e
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        |g AS (
-        |  SELECT k, s, e,
-        |    sum(flag) OVER (PARTITION BY k ORDER BY s, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS span
-        |  FROM f),
-        |sp AS (
-        |  SELECT k, span, min(s) AS ss, max(e) AS se, count(*) AS n
-        |  FROM g GROUP BY 1, 2)
-        |SELECT k AS l_orderkey, CAST(sum(n) AS BIGINT) AS n_intervals,
-        |  count(*) AS n_spans,
-        |  CAST(sum(date_diff('day', ss, se) + 1) AS BIGINT) AS covered_days
-        |FROM sp GROUP BY 1""".stripMargin,
-
-    // bin = exclusive-running-sum div target — all-integer window
-    // math; BIGINT casts defuse DuckDB's HUGEINT window/group sums.
-    "q109_compaction_plan" ->
-      """WITH sh AS (
-        |  SELECT strftime(ts, '%Y-%m') AS month, strftime(ts, '%Y-%m-%d') AS day,
-        |    CAST(sum(strlen(props)) + count(*) * 32 AS BIGINT) AS bytes
-        |  FROM events GROUP BY 1, 2),
-        |o AS (
-        |  SELECT month, day, bytes,
-        |    CAST(coalesce(sum(bytes) OVER (PARTITION BY month ORDER BY day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-        |  FROM sh)
-        |SELECT month, off // 65536 AS bin, count(*) AS n_shards,
-        |  CAST(sum(bytes) AS BIGINT) AS bin_bytes,
-        |  min(day) AS first_shard, max(day) AS last_shard
-        |FROM o GROUP BY 1, 2""".stripMargin,
-
-    // Three unrolled integer-arithmetic iterations: rank // outdeg
-    // summed per dst (CAST from DuckDB's HUGEINT), ·85 // 100 damped,
-    // teleport ((U·15)//100)//n — every op BIGINT, so the oracle is
-    // bit-exact against the Spark loop.
-    "q110_pagerank" ->
-      """WITH e AS (
-        |  SELECT DISTINCT o_custkey % 40 AS src, o_orderkey % 40 AS dst
-        |  FROM orders WHERE o_custkey % 40 <> o_orderkey % 40),
-        |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        |nn AS (SELECT count(*) AS n FROM nodes),
-        |od AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-        |r0 AS (SELECT node, 1000000000000 // n AS rank FROM nodes CROSS JOIN nn),
-        |m1 AS (SELECT e.dst, CAST(sum(r0.rank // od.outdeg) AS BIGINT) AS m
-        |       FROM e JOIN od USING (src) JOIN r0 ON r0.node = e.src GROUP BY 1),
-        |r1 AS (SELECT node,
-        |         ((1000000000000 * 15) // 100) // n + (coalesce(m, 0) * 85) // 100 AS rank
-        |       FROM nodes CROSS JOIN nn LEFT JOIN m1 ON m1.dst = node),
-        |m2 AS (SELECT e.dst, CAST(sum(r1.rank // od.outdeg) AS BIGINT) AS m
-        |       FROM e JOIN od USING (src) JOIN r1 ON r1.node = e.src GROUP BY 1),
-        |r2 AS (SELECT node,
-        |         ((1000000000000 * 15) // 100) // n + (coalesce(m, 0) * 85) // 100 AS rank
-        |       FROM nodes CROSS JOIN nn LEFT JOIN m2 ON m2.dst = node),
-        |m3 AS (SELECT e.dst, CAST(sum(r2.rank // od.outdeg) AS BIGINT) AS m
-        |       FROM e JOIN od USING (src) JOIN r2 ON r2.node = e.src GROUP BY 1),
-        |r3 AS (SELECT node,
-        |         ((1000000000000 * 15) // 100) // n + (coalesce(m, 0) * 85) // 100 AS rank
-        |       FROM nodes CROSS JOIN nn LEFT JOIN m3 ON m3.dst = node)
-        |SELECT node, CAST(rank AS BIGINT) AS rank FROM r3""".stripMargin,
-
-    // q93's distinct-(doc,token) grain; lift in BIGINT // arithmetic,
-    // written with the identical operand order as the Spark expr.
-    "q111_cooc_lift" ->
-      """WITH raw AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
-        |  FROM documents),
-        |tok AS (SELECT DISTINCT doc_id, token FROM raw),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |vocab AS (
-        |  SELECT token, count(*) AS df FROM tok GROUP BY 1
-        |  ORDER BY df DESC, token LIMIT 40),
-        |vt AS (SELECT t.doc_id, t.token FROM tok t JOIN vocab USING (token)),
-        |p AS (
-        |  SELECT a.token AS tok_a, b.token AS tok_b, count(*) AS n_ab
-        |  FROM vt a JOIN vt b ON a.doc_id = b.doc_id AND a.token < b.token
-        |  GROUP BY 1, 2)
-        |SELECT tok_a, tok_b, n_ab, va.df AS df_a, vb.df AS df_b,
-        |  (n_ab * n_docs * 1000000) // (va.df * vb.df) AS lift_ppm
-        |FROM p JOIN vocab va ON va.token = tok_a
-        |  JOIN vocab vb ON vb.token = tok_b CROSS JOIN nd
-        |ORDER BY n_ab DESC, tok_a, tok_b LIMIT 25""".stripMargin,
-
-    // DISTINCT (type, user) grain; Jaccard in integer ppm.
-    "q112_audience_overlap" ->
-      """WITH s AS (
-        |  SELECT DISTINCT event_type AS grp, user_id AS member FROM events
-        |  WHERE event_type IS NOT NULL AND user_id IS NOT NULL),
-        |z AS (SELECT grp, count(*) AS n FROM s GROUP BY 1),
-        |p AS (
-        |  SELECT a.grp AS grp_a, b.grp AS grp_b, count(*) AS n_common
-        |  FROM s a JOIN s b ON a.member = b.member AND a.grp < b.grp
-        |  GROUP BY 1, 2)
-        |SELECT grp_a, grp_b, za.n AS n_a, zb.n AS n_b, n_common,
-        |  (n_common * 1000000) // (za.n + zb.n - n_common) AS jaccard_ppm
-        |FROM p JOIN z za ON za.grp = grp_a JOIN z zb ON zb.grp = grp_b""".stripMargin,
-
-    // Epoch-week = days-since-1970 // 7 in both engines; offsets are
-    // plain BIGINT subtraction — no date arithmetic in the matrix.
-    "q113_retention" ->
-      """WITH act AS (
-        |  SELECT DISTINCT user_id AS u,
-        |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) // 7 AS BIGINT)
-        |      AS period
-        |  FROM events WHERE user_id IS NOT NULL),
-        |c AS (SELECT u, min(period) AS cohort FROM act GROUP BY 1)
-        |SELECT cohort, period - cohort AS period_offset, count(*) AS n_users
-        |FROM act JOIN c USING (u)
-        |GROUP BY 1, 2""".stripMargin,
-
-    // The sorted-walk fold mirrored with list_sort + the q48
-    // list_prepend(0, …) init trick; struct sort order (t, c) ties off
-    // same-instant events identically in both engines.
-    "q114_funnel" ->
-      """WITH ev AS (
-        |  SELECT user_id AS u, ts,
-        |    CASE event_type WHEN 'view' THEN 1 WHEN 'click' THEN 2
-        |      WHEN 'signup' THEN 3 WHEN 'purchase' THEN 4 ELSE 0 END AS c
-        |  FROM events WHERE user_id IS NOT NULL
-        |    AND substr(md5(concat_ws(':', 'funnel-v1', CAST(event_id AS VARCHAR))),
-        |          1, 8) < '0ccccccc'),
-        |l AS (
-        |  SELECT u, list_transform(list_sort(list({'t': ts, 'c': c})), e -> e.c)
-        |    AS codes
-        |  FROM ev WHERE c > 0 GROUP BY u),
-        |st AS (
-        |  SELECT u, list_reduce(list_prepend(0, codes),
-        |    (acc, e) -> acc + CASE WHEN e = acc + 1 THEN 1 ELSE 0 END) AS stage
-        |  FROM l)
-        |SELECT stage, count(*) AS n_users FROM st GROUP BY 1""".stripMargin,
-
-    // s1 = y1 (list_reduce's init-less fold), then (y + 3·acc) // 4 ==
-    // Spark's shiftright(y + 3·acc, 2) for the non-negative values the
-    // operator enforces; trunc() mirrors the truncating double->long cast.
-    "q125_ewma" ->
-      """WITH d AS (
-        |  SELECT event_type,
-        |    date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
-        |    CAST(sum(CAST(trunc(value * 100) AS BIGINT)) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
-        |f AS (SELECT event_type, x, y FROM d
-        |      WHERE x IS NOT NULL AND y IS NOT NULL AND y >= 0),
-        |l AS (
-        |  SELECT event_type, count(*) AS n_points,
-        |    list_transform(list_sort(list({'o': x, 'y': y})), p -> p.y) AS ys
-        |  FROM f GROUP BY 1)
-        |SELECT event_type, CAST(n_points AS INT) AS n_points,
-        |  list_reduce(ys, (acc, y) -> (y + 3 * acc) // 4) AS ewma
-        |FROM l""".stripMargin,
-
-    // chr(1)/chr(2) mirror rowFingerprint's delimiters; '0x'||hex ->
-    // BIGINT mirrors conv(_,16,10); sums cast to defuse HUGEINT.
-    "q126_table_checksum" ->
-      """WITH f AS (
-        |  SELECT md5(concat_ws(chr(1),
-        |    coalesce(CAST(l_orderkey AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_partkey AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_suppkey AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_linenumber AS VARCHAR), chr(2)),
-        |    coalesce(CAST(l_returnflag AS VARCHAR), chr(2)))) AS fp
-        |  FROM lineitem)
-        |SELECT count(*) AS n_rows,
-        |  CAST(sum(CAST(('0x' || substr(fp, 1, 8)) AS BIGINT)) AS BIGINT) AS sum_a,
-        |  CAST(sum(CAST(('0x' || substr(fp, 17, 8)) AS BIGINT)) AS BIGINT) AS sum_b
-        |FROM f""".stripMargin,
-
-    // Nucleus keep-rule: EXCLUSIVE running sum below 4/5 of the key
-    // total (5·cum < 4·tot — integer), heaviest first, day tiebreak.
-    "q127_top_p" ->
-      """WITH d AS (
-        |  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-        |    CAST(sum(CAST(trunc(value * 100) AS BIGINT)) AS BIGINT) AS cents
-        |  FROM events GROUP BY 1, 2),
-        |w AS (
-        |  SELECT event_type, day, cents,
-        |    CAST(coalesce(sum(cents) OVER (PARTITION BY event_type
-        |      ORDER BY cents DESC, day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum,
-        |    CAST(sum(cents) OVER (PARTITION BY event_type) AS BIGINT) AS tot
-        |  FROM d)
-        |SELECT event_type, day, cents FROM w WHERE 5 * cum < 4 * tot""".stripMargin,
-
-    // (ts, event_id) makes the per-user order total — lag on ties
-    // would otherwise be engine-dependent (the q94 lesson).
-    "q128_transitions" ->
-      """WITH s AS (
-        |  SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-        |      AS prev
-        |  FROM events)
-        |SELECT prev AS from_state, event_type AS to_state, count(*) AS n
-        |FROM s WHERE prev IS NOT NULL GROUP BY 1, 2""".stripMargin,
-
-    // All-integer z-curve: equi-width bucket by integer div, Morton
-    // interleave by shift/and — bit-identical in both engines. `//` is
-    // DuckDB's integer division (Spark side uses `div`).
-    "q129_zorder_tiles" ->
-      s"""WITH mm AS (
-        |  SELECT CAST(min(l_partkey) AS BIGINT) AS amin,
-        |    CAST(max(l_partkey) AS BIGINT) AS amax,
-        |    CAST(min(l_suppkey) AS BIGINT) AS bmin,
-        |    CAST(max(l_suppkey) AS BIGINT) AS bmax
-        |  FROM lineitem),
-        |b AS (
-        |  SELECT
-        |    CASE WHEN amax > amin
-        |      THEN ((l_partkey - amin) * 255) // (amax - amin) ELSE 0 END AS ba,
-        |    CASE WHEN bmax > bmin
-        |      THEN ((l_suppkey - bmin) * 255) // (bmax - bmin) ELSE 0 END AS bb
-        |  FROM lineitem CROSS JOIN mm
-        |  WHERE l_partkey IS NOT NULL AND l_suppkey IS NOT NULL),
-        |z AS (SELECT CAST(${mortonSql("ba", "bb", 8)} AS BIGINT) AS z FROM b)
-        |SELECT z >> 10 AS tile, count(*) AS n,
-        |  min(z) AS z_min, max(z) AS z_max
-        |FROM z GROUP BY 1""".stripMargin,
-
-    // FK semantics: NULL child keys are not violations (reported
-    // separately); orphan = non-null child key with no parent. Count
-    // arithmetic only — no SUM, no HUGEINT trap.
-    "q130_fk_audit" ->
-      """SELECT 'lineitem_orders' AS edge, count(*) AS child_rows,
-        |  count(*) - count(ck) AS null_keys, count(ck) - count(pk) AS orphan_rows
-        |FROM (SELECT l_orderkey AS ck FROM lineitem) c
-        |LEFT JOIN (SELECT DISTINCT o_orderkey AS pk FROM orders) p ON c.ck = p.pk
-        |UNION ALL
-        |SELECT 'lineitem_part', count(*), count(*) - count(ck), count(ck) - count(pk)
-        |FROM (SELECT l_partkey AS ck FROM lineitem) c
-        |LEFT JOIN (SELECT DISTINCT p_partkey AS pk FROM part) p ON c.ck = p.pk
-        |UNION ALL
-        |SELECT 'lineitem_supplier', count(*), count(*) - count(ck), count(ck) - count(pk)
-        |FROM (SELECT l_suppkey AS ck FROM lineitem) c
-        |LEFT JOIN (SELECT DISTINCT s_suppkey AS pk FROM supplier) p ON c.ck = p.pk
-        |UNION ALL
-        |SELECT 'orders_customer', count(*), count(*) - count(ck), count(ck) - count(pk)
-        |FROM (SELECT o_custkey AS ck FROM orders) c
-        |LEFT JOIN (SELECT DISTINCT c_custkey AS pk FROM customer) p ON c.ck = p.pk
-        |UNION ALL
-        |SELECT 'customer_nation', count(*), count(*) - count(ck), count(ck) - count(pk)
-        |FROM (SELECT c_nationkey AS ck FROM customer) c
-        |LEFT JOIN (SELECT DISTINCT n_nationkey AS pk FROM nation) p ON c.ck = p.pk
-        |UNION ALL
-        |SELECT 'events_customer', count(*), count(*) - count(ck), count(ck) - count(pk)
-        |FROM (SELECT user_id AS ck FROM events) c
-        |LEFT JOIN (SELECT DISTINCT c_custkey AS pk FROM customer) p ON c.ck = p.pk""".stripMargin,
-
-    // Grain audit: rows/distinct/dup/max-per-key per declared key set.
-    // sum(count) goes HUGEINT in DuckDB — CAST back to BIGINT.
-    "q131_grain_check" ->
-      """SELECT 'orders_pk' AS grain, CAST(sum(n) AS BIGINT) AS n_rows,
-        |  count(*) AS distinct_keys,
-        |  CAST(sum(n) AS BIGINT) - count(*) AS dup_rows, max(n) AS max_per_key
-        |FROM (SELECT count(*) AS n FROM orders GROUP BY o_orderkey)
-        |UNION ALL
-        |SELECT 'lineitem_pk2', CAST(sum(n) AS BIGINT), count(*),
-        |  CAST(sum(n) AS BIGINT) - count(*), max(n)
-        |FROM (SELECT count(*) AS n FROM lineitem GROUP BY l_orderkey, l_linenumber)
-        |UNION ALL
-        |SELECT 'lineitem_pk4', CAST(sum(n) AS BIGINT), count(*),
-        |  CAST(sum(n) AS BIGINT) - count(*), max(n)
-        |FROM (SELECT count(*) AS n FROM lineitem
-        |      GROUP BY l_orderkey, l_linenumber, l_partkey, l_suppkey)
-        |UNION ALL
-        |SELECT 'events_pk', CAST(sum(n) AS BIGINT), count(*),
-        |  CAST(sum(n) AS BIGINT) - count(*), max(n)
-        |FROM (SELECT count(*) AS n FROM events GROUP BY event_id)
-        |UNION ALL
-        |SELECT 'documents_pk', CAST(sum(n) AS BIGINT), count(*),
-        |  CAST(sum(n) AS BIGINT) - count(*), max(n)
-        |FROM (SELECT count(*) AS n FROM documents GROUP BY doc_id)""".stripMargin,
-
-    // quantile_disc == percentile_disc (actual data values); the clip
-    // is comparison-only, so doubles pass through bit-identical.
-    "q132_winsorize" ->
-      """WITH b AS (
-        |  SELECT quantile_disc(o_totalprice, 0.05) AS lo,
-        |    quantile_disc(o_totalprice, 0.95) AS hi
-        |  FROM orders)
-        |SELECT o_orderkey, o_totalprice,
-        |  CASE WHEN o_totalprice IS NOT NULL
-        |    THEN greatest(lo, least(hi, o_totalprice)) END AS clipped
-        |FROM orders CROSS JOIN b""".stripMargin,
-
-    // Forward fill via last_value IGNORE NULLS over a running frame;
-    // (ts, event_id) makes the per-user order total.
-    "q133_gap_fill" ->
-      """SELECT event_id, user_id,
-        |  last_value(CASE WHEN event_type = 'purchase'
-        |      THEN CAST(trunc(value * 100) AS BIGINT) END IGNORE NULLS)
-        |    OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS last_purchase_cents
-        |FROM events""".stripMargin,
-
-    // Integer permille min-max scaling per event_type; `//` == Spark
-    // `div` on the non-negative (c - mn).
-    "q134_scale_minmax" ->
-      """WITH v AS (
-        |  SELECT event_id, event_type,
-        |    CAST(trunc(value * 100) AS BIGINT) AS c
-        |  FROM events),
-        |w AS (
-        |  SELECT event_id, event_type, c,
-        |    min(c) OVER (PARTITION BY event_type) AS mn,
-        |    max(c) OVER (PARTITION BY event_type) AS mx
-        |  FROM v)
-        |SELECT event_id, event_type,
-        |  CASE WHEN mx > mn THEN ((c - mn) * 1000) // (mx - mn)
-        |    WHEN c IS NOT NULL THEN 0 END AS permille
-        |FROM w""".stripMargin,
-
-    // Vocabulary: token counts >= 40 with contiguous ids in
-    // (cnt desc, token) total order.
-    "q135_vocab" ->
-      """WITH tok AS (
-        |  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
-        |  FROM documents),
-        |c AS (
-        |  SELECT token, count(*) AS cnt FROM tok GROUP BY 1
-        |  HAVING count(*) >= 40)
-        |SELECT token, cnt,
-        |  row_number() OVER (ORDER BY cnt DESC, token) - 1 AS token_id
-        |FROM c""".stripMargin,
-
-    // Trigram journeys: two lags in the same (ts, event_id)-total
-    // window; top-20 under a TOTAL order (n desc, then the trigram).
-    "q136_path_trigrams" ->
-      """WITH s AS (
-        |  SELECT event_type AS s3,
-        |    lag(event_type, 1) OVER w AS s2,
-        |    lag(event_type, 2) OVER w AS s1
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id))
-        |SELECT s1, s2, s3, count(*) AS n FROM s WHERE s1 IS NOT NULL
-        |GROUP BY 1, 2, 3 ORDER BY n DESC, s1, s2, s3 LIMIT 20""".stripMargin,
-
-    // INDEPENDENT truth: the quadratic NOT EXISTS dominance test over
-    // the per-x aggregate — a different algorithm than the engine's
-    // sort-based rewrite, same frontier.
-    "q137_skyline" ->
-      """WITH g AS (
-        |  SELECT CAST(l_quantity AS BIGINT) AS x, max(l_extendedprice) AS y
-        |  FROM lineitem
-        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-        |  GROUP BY 1)
-        |SELECT x, y FROM g p
-        |WHERE NOT EXISTS (SELECT 1 FROM g q
-        |  WHERE q.x >= p.x AND q.y >= p.y AND (q.x > p.x OR q.y > p.y))""".stripMargin,
-
-    // All-integer TV numerator; count FILTER stays BIGINT (no SUM /
-    // HUGEINT trap).
-    "q138_dist_drift" ->
-      """WITH g AS (
-        |  SELECT json_extract_string(props, '$.k') AS category,
-        |    count(*) FILTER (WHERE ts < TIMESTAMP '2024-01-16') AS n_a,
-        |    count(*) FILTER (WHERE ts >= TIMESTAMP '2024-01-16') AS n_b
-        |  FROM events GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_a) AS BIGINT) AS ta,
-        |  CAST(sum(n_b) AS BIGINT) AS tb FROM g)
-        |SELECT category, n_a, n_b, abs(n_a * tb - n_b * ta) AS drift_num
-        |FROM g CROSS JOIN t""".stripMargin,
-
-    // The q119 exact-moment discipline; corr's final expression has
-    // the identical IEEE shape both sides.
-    "q139_corr" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |    date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
-        |    CAST(trunc(value * 100) AS BIGINT) AS y
-        |  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL),
-        |m AS (
-        |  SELECT event_type, count(*) AS n,
-        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |    CAST(sum(x * x) AS BIGINT) AS sxx,
-        |    CAST(sum(y * y) AS BIGINT) AS syy,
-        |    CAST(sum(x * y) AS BIGINT) AS sxy
-        |  FROM e GROUP BY 1)
-        |SELECT event_type, n, sx, sy, sxx, syy, sxy,
-        |  CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-        |    THEN CAST(n * sxy - sx * sy AS DOUBLE) /
-        |      (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) *
-        |       sqrt(CAST(n * syy - sy * sy AS DOUBLE))) END AS corr
-        |FROM m""".stripMargin,
-
-    // Integer-ppm percent-of-parent at both hierarchy levels; window
-    // sums CAST back to BIGINT (DuckDB window SUM goes HUGEINT).
-    "q140_hier_share" ->
-      """WITH leaf AS (
-        |  SELECT r_name, n_name,
-        |    CAST(sum(CAST(trunc(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |      AS sum_l2
-        |  FROM orders
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |  GROUP BY 1, 2),
-        |w AS (
-        |  SELECT r_name, n_name, sum_l2,
-        |    CAST(sum(sum_l2) OVER () AS BIGINT) AS sum_l0,
-        |    CAST(sum(sum_l2) OVER (PARTITION BY r_name) AS BIGINT) AS sum_l1
-        |  FROM leaf)
-        |SELECT r_name, n_name, sum_l2, sum_l0, sum_l1,
-        |  (sum_l1 * 1000000) // sum_l0 AS ppm_l1_of_l0,
-        |  (sum_l2 * 1000000) // sum_l1 AS ppm_l2_of_l1
-        |FROM w""".stripMargin,
-
-    // Identical truth to q128 restricted to non-null users (a stream
-    // cannot key on a null user); the stream must reproduce the batch
-    // lag() matrix exactly under interleaved replay.
-    "q141_transitions_stream" ->
-      """WITH s AS (
-        |  SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-        |      AS prev
-        |  FROM events WHERE user_id IS NOT NULL)
-        |SELECT prev AS from_state, event_type AS to_state, count(*) AS n
-        |FROM s WHERE prev IS NOT NULL GROUP BY 1, 2""".stripMargin,
-
-    // The oracle runs the textbook GLOBAL sweep (single window over all
-    // boundaries); the engine's day-partitioned prefix sum must agree
-    // at every point. Inclusive ends: −1 lands at end_us + 1.
-    "q142_concurrency" ->
-      """WITH d AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-        |           OVER (PARTITION BY user_id ORDER BY ts) > 1800000000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, ts,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM d),
-        |sp AS (
-        |  SELECT min(epoch_us(ts)) AS su, max(epoch_us(ts)) AS eu
-        |  FROM s GROUP BY user_id, sid),
-        |b AS (
-        |  SELECT su AS ts_us, 1 AS dd FROM sp
-        |  UNION ALL SELECT eu + 1, -1 FROM sp),
-        |g AS (SELECT ts_us, CAST(sum(dd) AS BIGINT) AS delta FROM b GROUP BY 1),
-        |r AS (SELECT ts_us, CAST(sum(delta) OVER (ORDER BY ts_us
-        |  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS conc FROM g)
-        |SELECT ts_us // 86400000000 AS day_idx, max(conc) AS max_concurrent
-        |FROM r GROUP BY 1""".stripMargin,
-
-    // quantile_disc twice == the engine's two percentile_disc passes;
-    // integral cents keep the whole report integer-exact.
-    "q143_mad" ->
-      """WITH v AS (
-        |  SELECT event_type, CAST(trunc(value * 100) AS BIGINT) AS c
-        |  FROM events WHERE value IS NOT NULL),
-        |m AS (
-        |  SELECT event_type, quantile_disc(c, 0.5) AS median,
-        |    count(*) AS n
-        |  FROM v GROUP BY 1)
-        |SELECT v.event_type, n, median,
-        |  quantile_disc(abs(c - median), 0.5) AS mad
-        |FROM v JOIN m USING (event_type)
-        |GROUP BY v.event_type, n, median""".stripMargin,
-
-    // Leading digit from the decimal string (exact at power-of-ten
-    // boundaries where floor(log10) float math is not).
-    "q144_benford" ->
-      """WITH d AS (
-        |  SELECT CAST(substr(CAST(CAST(trunc(o_totalprice * 100) AS BIGINT)
-        |    AS VARCHAR), 1, 1) AS INTEGER) AS digit
-        |  FROM orders WHERE trunc(o_totalprice * 100) > 0),
-        |g AS (SELECT digit, count(*) AS n FROM d GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS tt FROM g)
-        |SELECT digit, n, (n * 1000000) // tt AS ppm
-        |FROM g CROSS JOIN t""".stripMargin,
-
-    // The q62/q81 live-bound pattern: the oracle computes n exactly and
-    // pins the guarantee booleans TRUE — a sketch violating its rank
-    // bound fails the hash compare.
-    "q145_quantile_sketch_contract" ->
-      """SELECT event_type, count(*) AS n,
-        |  TRUE AS p50_ok, TRUE AS p95_ok
-        |FROM events WHERE value IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-
-    // Scaffold = distinct categories × full day range; zero-filled
-    // left join. generate_series end is inclusive on both engines.
-    "q146_densify_days" ->
-      """WITH daily AS (
-        |  SELECT json_extract_string(props, '$.k') AS category,
-        |    strftime(ts, '%Y-%m-%d') AS day, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |mm AS (SELECT min(day) AS lo, max(day) AS hi FROM daily),
-        |days AS (
-        |  SELECT strftime(CAST(u.d AS DATE), '%Y-%m-%d') AS day
-        |  FROM mm, unnest(generate_series(CAST(lo AS DATE),
-        |    CAST(hi AS DATE), INTERVAL 1 DAY)) AS u(d)),
-        |scaffold AS (
-        |  SELECT category, day FROM (SELECT DISTINCT category FROM daily)
-        |  CROSS JOIN days)
-        |SELECT s.category, s.day, CAST(coalesce(d.n, 0) AS BIGINT) AS n
-        |FROM scaffold s LEFT JOIN daily d
-        |  ON s.category = d.category AND s.day = d.day""".stripMargin,
-
-    // Positions via unnest(range(len)) — 0-based like posexplode; the
-    // posting string is canonical (doc_id, pos) order both sides.
-    "q147_inverted_index" ->
-      """WITH d AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |p AS (
-        |  SELECT doc_id, toks[i + 1] AS token, i AS pos
-        |  FROM (SELECT doc_id, toks, unnest(range(len(toks))) AS i FROM d)),
-        |g AS (
-        |  SELECT token, count(DISTINCT doc_id) AS df, count(*) AS tf_total,
-        |    string_agg(concat(CAST(doc_id AS VARCHAR), ':',
-        |      CAST(pos AS VARCHAR)), ',' ORDER BY doc_id, pos) AS postings
-        |  FROM p GROUP BY 1)
-        |SELECT token, df, tf_total, postings FROM g
-        |WHERE df BETWEEN 5 AND 50""".stripMargin,
-
-    // The q43 session CTE at µs grain; bounce = 1-event session.
-    // count FILTER stays BIGINT.
-    "q148_bounce" ->
-      """WITH d AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-        |           OVER (PARTITION BY user_id ORDER BY ts) > 1800000000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, ts,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM d),
-        |sp AS (
-        |  SELECT min(epoch_us(ts)) AS su, count(*) AS ne
-        |  FROM s GROUP BY user_id, sid),
-        |g AS (
-        |  SELECT su // 86400000000 AS day_idx, count(*) AS n_sessions,
-        |    count(*) FILTER (WHERE ne = 1) AS n_bounces
-        |  FROM sp GROUP BY 1)
-        |SELECT day_idx, n_sessions, n_bounces,
-        |  (n_bounces * 1000000) // n_sessions AS bounce_ppm
-        |FROM g""".stripMargin,
-
-    // Histogram-first weighted median: same crossing rule (2·cum ≥
-    // tot, inclusive running weight in qty order) both sides.
-    "q149_weighted_median" ->
-      """WITH h AS (
-        |  SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS qty,
-        |    CAST(sum(CAST(trunc(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-        |      AS cents
-        |  FROM lineitem GROUP BY 1, 2),
-        |w AS (
-        |  SELECT l_returnflag, qty,
-        |    CAST(sum(cents) OVER (PARTITION BY l_returnflag ORDER BY qty
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-        |    CAST(sum(cents) OVER (PARTITION BY l_returnflag) AS BIGINT) AS tot
-        |  FROM h WHERE cents > 0)
-        |SELECT l_returnflag, min(qty) AS wmedian, max(tot) AS total_weight
-        |FROM w WHERE cum * 2 >= tot GROUP BY 1""".stripMargin,
-
-    // quantile_disc == percentile_disc (actual values, SKILL parity
-    // rule); integral cents keep the bands integer-exact.
-    "q150_daily_bands" ->
-      """WITH v AS (
-        |  SELECT strftime(ts, '%Y-%m-%d') AS day,
-        |    CAST(trunc(value * 100) AS BIGINT) AS c
-        |  FROM events WHERE value IS NOT NULL)
-        |SELECT day, quantile_disc(c, 0.1) AS p10, quantile_disc(c, 0.5) AS p50,
-        |  quantile_disc(c, 0.9) AS p90, count(*) AS n
-        |FROM v GROUP BY 1""".stripMargin,
-
-    // (n desc, category) makes the cut total; the OTHER row carries
-    // the tail weight and its label count.
-    "q151_topn_other" ->
-      """WITH g AS (
-        |  SELECT json_extract_string(props, '$.k') AS category,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1),
-        |r AS (
-        |  SELECT category, n,
-        |    row_number() OVER (ORDER BY n DESC, category) AS rk
-        |  FROM g)
-        |SELECT CASE WHEN rk <= 5 THEN category ELSE 'OTHER' END AS category,
-        |  CAST(sum(n) AS BIGINT) AS n, count(*) AS n_labels
-        |FROM r GROUP BY 1""".stripMargin,
-
-    // lead in the same (ts, event_id) total order; ms durations keep
-    // Σ cents·dur inside BIGINT; final divide only (q119 discipline).
-    "q152_twa" ->
-      """WITH e AS (
-        |  SELECT event_type, CAST(trunc(value * 100) AS BIGINT) AS c,
-        |    (lead(epoch_us(ts)) OVER (PARTITION BY user_id
-        |       ORDER BY epoch_us(ts), event_id) - epoch_us(ts)) // 1000 AS dur_ms
-        |  FROM events)
-        |SELECT event_type,
-        |  CAST(sum(c * dur_ms) AS BIGINT) AS num,
-        |  CAST(sum(dur_ms) AS BIGINT) AS den, count(*) AS n,
-        |  CASE WHEN sum(dur_ms) > 0
-        |    THEN CAST(sum(c * dur_ms) AS DOUBLE) / CAST(sum(dur_ms) AS DOUBLE)
-        |  END AS twa_cents
-        |FROM e WHERE dur_ms IS NOT NULL GROUP BY 1""".stripMargin,
-
-    // Exact set-overlap truth (the q112 shape) + the pinned sketch
-    // verdict.
-    "q153_minhash_sets_contract" ->
-      """WITH s AS (
-        |  SELECT DISTINCT event_type AS grp, user_id AS member
-        |  FROM events WHERE event_type IS NOT NULL AND user_id IS NOT NULL),
-        |sz AS (SELECT grp, count(*) AS n FROM s GROUP BY 1),
-        |c AS (
-        |  SELECT a.grp AS grp_a, b.grp AS grp_b, count(*) AS n_common
-        |  FROM s a JOIN s b ON a.member = b.member AND a.grp < b.grp
-        |  GROUP BY 1, 2)
-        |SELECT sa.grp AS grp_a, sb.grp AS grp_b, sa.n AS n_a, sb.n AS n_b,
-        |  COALESCE(n_common, 0) AS n_common,
-        |  (COALESCE(n_common, 0) * 1000000)
-        |    // (sa.n + sb.n - COALESCE(n_common, 0)) AS jaccard_ppm,
-        |  TRUE AS sketch_ok
-        |FROM sz sa JOIN sz sb ON sa.grp < sb.grp
-        |LEFT JOIN c ON c.grp_a = sa.grp AND c.grp_b = sb.grp""".stripMargin,
-
-    // Truth from the parquet originals — the ORC write/read must be a
-    // faithful roundtrip to hash-match.
-    "q154_orc_roundtrip" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS day, count(*) AS n,
-        |  CAST(sum(CAST(trunc(value * 100) AS BIGINT)) AS BIGINT) AS cents
-        |FROM events WHERE event_type = 'purchase'
-        |GROUP BY 1""".stripMargin,
-
-    // Same discipline for the pipe-CSV sink; integer/string columns
-    // only so the text roundtrip is exact.
-    "q155_csv_roundtrip" ->
-      """WITH daily AS (
-        |  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2)
-        |SELECT event_type, CAST(sum(n) AS BIGINT) AS total,
-        |  count(*) AS n_days
-        |FROM daily GROUP BY 1""".stripMargin,
-
-    // Month truth straight from parquet — the amount-string encode/
-    // parse on the Spark side must be invisible (independent truth,
-    // not a mirrored derivation).
-    "q230_jsonl_roundtrip" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS date,
-        |  CAST(sum(CAST(trunc(value * 100) AS BIGINT)) AS BIGINT)
-        |    AS total_cents,
-        |  count(*) AS n_purchases
-        |FROM events WHERE event_type = 'purchase' GROUP BY 1""".stripMargin,
-
-    // The q61 packing CTE rolled up to source grain; slack is signed
-    // (overfull chunks make it negative).
-    "q156_pack_stats" ->
-      """WITH d AS (
-        |  SELECT source, doc_id,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tok
-        |  FROM documents),
-        |o AS (
-        |  SELECT source, doc_id, n_tok,
-        |    coalesce(SUM(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS tok_offset
-        |  FROM d),
-        |c AS (
-        |  SELECT source, CAST(floor(tok_offset / 256) AS BIGINT) AS chunk,
-        |    CAST(SUM(n_tok) AS BIGINT) AS chunk_tokens
-        |  FROM o GROUP BY 1, 2),
-        |g AS (
-        |  SELECT source, count(*) AS n_chunks,
-        |    CAST(sum(chunk_tokens) AS BIGINT) AS total_tokens
-        |  FROM c GROUP BY 1)
-        |SELECT source, n_chunks, total_tokens,
-        |  ((n_chunks * 256 - total_tokens) * 1000000) // (n_chunks * 256)
-        |    AS slack_ppm
-        |FROM g""".stripMargin,
-
-    // q18's exact-Jaccard pair truth joined to its sources,
-    // order-normalized.
-    "q157_dup_sources" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL
-        |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |p AS (
-        |  SELECT da, db
-        |  FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
-        |  WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8)
-        |SELECT least(x.source, y.source) AS source_a,
-        |  greatest(x.source, y.source) AS source_b, count(*) AS n_pairs
-        |FROM p JOIN documents x ON x.doc_id = da
-        |JOIN documents y ON y.doc_id = db
-        |GROUP BY 1, 2""".stripMargin,
-
-    // Independent truth by naive recursion — the engine's log-round
-    // doubling must produce the identical forest resolution.
-    "q158_tree_paths" ->
-      """WITH RECURSIVE up AS (
-        |  SELECT doc_id AS node, doc_id AS cur, CAST(0 AS BIGINT) AS depth
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT node, cur - 7, depth + 1 FROM up WHERE cur >= 7)
-        |SELECT node, cur AS root, depth FROM up WHERE cur < 7""".stripMargin,
-
-    // The q43 session CTE; gap = this session's start minus the
-    // previous session's end, per user.
-    "q159_session_gaps" ->
-      """WITH d AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-        |           OVER (PARTITION BY user_id ORDER BY ts) > 1800000000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, ts,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM d),
-        |sp AS (
-        |  SELECT user_id, min(epoch_us(ts)) AS su, max(epoch_us(ts)) AS eu
-        |  FROM s GROUP BY user_id, sid),
-        |g AS (
-        |  SELECT user_id, su AS start_us,
-        |    (su - lag(eu) OVER (PARTITION BY user_id ORDER BY su)) // 1000
-        |      AS gap_ms
-        |  FROM sp)
-        |SELECT user_id, start_us, gap_ms FROM g
-        |WHERE gap_ms IS NOT NULL""".stripMargin,
-
-    // First-view → first-purchase latency; quantile_disc == the
-    // engine's percentile_disc on integral ms.
-    "q163_conversion_latency" ->
-      """WITH f AS (
-        |  SELECT user_id,
-        |    min(CASE WHEN event_type = 'view' THEN epoch_us(ts) END) AS v,
-        |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS p
-        |  FROM events
-        |  WHERE event_type IN ('view', 'purchase') AND user_id IS NOT NULL
-        |  GROUP BY 1),
-        |l AS (
-        |  SELECT (p - v) // 1000 AS lat_ms FROM f
-        |  WHERE v IS NOT NULL AND p > v)
-        |SELECT count(*) AS n_converts,
-        |  quantile_disc(lat_ms, 0.5) AS p50_ms,
-        |  quantile_disc(lat_ms, 0.9) AS p90_ms
-        |FROM l""".stripMargin,
-
-    // The q48/q125 fold-parity discipline: list_sort of the struct
-    // list orders (us, eid, d) exactly like Spark's array_sort;
-    // list_prepend(0, …) makes the init-less fold match aggregate().
-    "q164_clamped_balance" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS us, event_id,
-        |    CASE WHEN event_type = 'purchase'
-        |      THEN CAST(trunc(value * 100) AS BIGINT)
-        |    WHEN event_type = 'error'
-        |      THEN -CAST(trunc(value * 100) AS BIGINT)
-        |    ELSE 0 END AS d
-        |  FROM events WHERE user_id IS NOT NULL),
-        |g AS (
-        |  SELECT user_id,
-        |    list_transform(list_sort(list({'us': us, 'eid': event_id, 'd': d})),
-        |      x -> x.d) AS ds
-        |  FROM e GROUP BY 1)
-        |SELECT user_id,
-        |  CAST(list_reduce(list_prepend(0, ds),
-        |    (acc, d) -> greatest(0, acc + d)) AS BIGINT) AS balance
-        |FROM g""".stripMargin,
-
-    // row_number deciles (total order), integer cumulative share.
-    "q165_decile_lift" ->
-      """WITH spend AS (
-        |  SELECT user_id,
-        |    CAST(sum(CAST(trunc(value * 100) AS BIGINT)) AS BIGINT) AS cents
-        |  FROM events
-        |  WHERE event_type = 'purchase' AND user_id IS NOT NULL
-        |  GROUP BY 1),
-        |r AS (
-        |  SELECT cents,
-        |    row_number() OVER (ORDER BY cents DESC, user_id) AS rk,
-        |    count(*) OVER () AS n
-        |  FROM spend),
-        |d AS (
-        |  SELECT ((rk - 1) * 10) // n AS decile, count(*) AS n_users,
-        |    CAST(sum(cents) AS BIGINT) AS cents
-        |  FROM r GROUP BY 1)
-        |SELECT decile, n_users, cents,
-        |  (CAST(sum(cents) OVER (ORDER BY decile
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |   * 1000000) // CAST(sum(cents) OVER () AS BIGINT) AS cum_share_ppm
-        |FROM d""".stripMargin,
-
-    // Hamilton largest-remainder per order with revenue weights; the
-    // (rem desc, partkey, suppkey) rank is total at the aggregated
-    // item grain.
-    "q160_prorata" ->
-      """WITH items AS (
-        |  SELECT l_orderkey, l_partkey, l_suppkey,
-        |    CAST(sum(CAST(trunc(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-        |      AS w
-        |  FROM lineitem GROUP BY 1, 2, 3),
-        |j AS (
-        |  SELECT l_orderkey, l_partkey, l_suppkey, w,
-        |    CAST(trunc(o_totalprice * 100) AS BIGINT) AS t
-        |  FROM items JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE w >= 0),
-        |q AS (
-        |  SELECT *, CAST(sum(w) OVER (PARTITION BY l_orderkey) AS BIGINT) AS ws
-        |  FROM j),
-        |r AS (
-        |  SELECT l_orderkey, l_partkey, l_suppkey, w, t,
-        |    (t * w) // ws AS quota, (t * w) % ws AS rem,
-        |    CAST(sum((t * w) // ws) OVER (PARTITION BY l_orderkey) AS BIGINT)
-        |      AS qsum
-        |  FROM q WHERE ws > 0),
-        |k AS (
-        |  SELECT *, row_number() OVER (PARTITION BY l_orderkey
-        |    ORDER BY rem DESC, l_partkey, l_suppkey) AS rk
-        |  FROM r)
-        |SELECT l_orderkey, l_partkey, l_suppkey, w AS weight,
-        |  quota + CASE WHEN rk <= t - qsum THEN 1 ELSE 0 END AS alloc
-        |FROM k""".stripMargin,
-
-    // Exact trailing-7-calendar-day distinct; the sketch verdict is
-    // pinned TRUE (q62/q145 pattern — HLL lgK=12 ≈ 1.6% σ vs the 5%
-    // band).
-    "q161_rolling_distinct_contract" ->
-      """WITH du AS (
-        |  SELECT DISTINCT epoch_us(ts) // 86400000000 AS day_idx, user_id
-        |  FROM events WHERE user_id IS NOT NULL),
-        |days AS (SELECT DISTINCT day_idx AS d FROM du)
-        |SELECT d AS day_idx, count(DISTINCT user_id) AS n_exact,
-        |  TRUE AS ok
-        |FROM days JOIN du ON du.day_idx BETWEEN d - 6 AND d
-        |GROUP BY 1""".stripMargin,
-
-    // Same frames: running last + following first, both conditioned on
-    // the value-not-null predicate; integer lerp, both engines
-    // truncate div toward zero.
-    "q162_interpolate" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS t,
-        |    CASE WHEN event_type = 'purchase'
-        |      THEN CAST(trunc(value * 100) AS BIGINT) END AS v
-        |  FROM events),
-        |w AS (
-        |  SELECT event_id, user_id, t, v,
-        |    last_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS)
-        |      OVER pw AS pt,
-        |    last_value(CASE WHEN v IS NOT NULL THEN v END IGNORE NULLS)
-        |      OVER pw AS pv,
-        |    first_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS)
-        |      OVER nw AS nt,
-        |    first_value(CASE WHEN v IS NOT NULL THEN v END IGNORE NULLS)
-        |      OVER nw AS nv
-        |  FROM e
-        |  WINDOW pw AS (PARTITION BY user_id ORDER BY t, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |    nw AS (PARTITION BY user_id ORDER BY t, event_id
-        |      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING))
-        |SELECT event_id, user_id,
-        |  CASE WHEN v IS NOT NULL THEN v
-        |    WHEN pt IS NOT NULL AND nt > pt
-        |      THEN pv + ((nv - pv) * (t - pt)) // (nt - pt)
-        |    WHEN pt IS NOT NULL AND nt = pt THEN pv
-        |  END AS interp_cents
-        |FROM w""".stripMargin,
-
-    // Identical truth to q114: the stream must agree with the batch
-    // fold exactly, including the same 5% sample and tie walk.
-    "q124_funnel_stream" ->
-      """WITH ev AS (
-        |  SELECT user_id AS u, ts,
-        |    CASE event_type WHEN 'view' THEN 1 WHEN 'click' THEN 2
-        |      WHEN 'signup' THEN 3 WHEN 'purchase' THEN 4 ELSE 0 END AS c
-        |  FROM events WHERE user_id IS NOT NULL
-        |    AND substr(md5(concat_ws(':', 'funnel-v1', CAST(event_id AS VARCHAR))),
-        |          1, 8) < '0ccccccc'),
-        |l AS (
-        |  SELECT u, list_transform(list_sort(list({'t': ts, 'c': c})), e -> e.c)
-        |    AS codes
-        |  FROM ev WHERE c > 0 GROUP BY u),
-        |st AS (
-        |  SELECT u, list_reduce(list_prepend(0, codes),
-        |    (acc, e) -> acc + CASE WHEN e = acc + 1 THEN 1 ELSE 0 END) AS stage
-        |  FROM l)
-        |SELECT stage, count(*) AS n_users FROM st GROUP BY 1""".stripMargin,
-
-    // Head/tail 3-token md5 seams; [1:3] / [-3:] mirror Spark's
-    // slice(toks, 1, 3) / slice(toks, -3, 3). The stop-seam guard
-    // (df <= 100 on BOTH sides) mirrors boundaryDupPairs' fan-out cap.
-    "q115_boundary_dups" ->
-      """WITH tk AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    md5(array_to_string(toks[1:3], ' ')) AS head_fp,
-        |    md5(array_to_string(toks[-3:], ' ')) AS tail_fp
-        |  FROM tk WHERE len(toks) >= 6),
-        |ok AS (
-        |  SELECT head_fp AS fp FROM f GROUP BY 1 HAVING count(*) <= 100
-        |  INTERSECT
-        |  SELECT tail_fp AS fp FROM f GROUP BY 1 HAVING count(*) <= 100)
-        |SELECT a.doc_id AS tail_doc, b.doc_id AS head_doc
-        |FROM f a JOIN f b ON a.tail_fp = b.head_fp AND a.doc_id <> b.doc_id
-        |JOIN ok ON ok.fp = a.tail_fp""".stripMargin,
-
-    // All-integer comparison: 8·7·n > 9·trail_sum; first 7 days have
-    // an unfull window → spike = false by the trail_n guard.
-    "q116_spike" ->
-      """WITH d AS (
-        |  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |w AS (
-        |  SELECT event_type, day, n,
-        |    CAST(coalesce(sum(n) OVER tw, 0) AS BIGINT) AS trail_sum,
-        |    count(n) OVER tw AS trail_n
-        |  FROM d WINDOW tw AS (PARTITION BY event_type ORDER BY day
-        |    ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING))
-        |SELECT event_type, day, n, trail_sum,
-        |  (trail_n = 7 AND 8 * 7 * n > 9 * trail_sum) AS spike
-        |FROM w""".stripMargin,
-
-    // DuckDB's NATIVE ASOF LEFT JOIN as independent truth (the q49
-    // pattern); same-instant touches pre-collapsed by min(type) so the
-    // as-of pick is total in both engines.
-    "q117_attribution" ->
-      """WITH p AS (
-        |  SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
-        |t AS (
-        |  SELECT user_id, ts, min(event_type) AS touch_type FROM events
-        |  WHERE event_type IN ('view', 'click') GROUP BY 1, 2)
-        |SELECT coalesce(t.touch_type, 'none') AS touch,
-        |  count(*) AS n_purchases
-        |FROM p ASOF LEFT JOIN t
-        |  ON p.user_id = t.user_id AND t.ts <= p.ts
-        |GROUP BY 1""".stripMargin,
-
-    // One conditional-sum block per rule; ppm = integer // — null
-    // predicates count as failures via the CASE WHEN TRUE form.
-    "q118_quality_rules" ->
-      """WITH w AS (
-        |  SELECT count(*) AS n_rows,
-        |    CAST(sum(CASE WHEN o_totalprice > 0 THEN 1 ELSE 0 END) AS BIGINT) AS r0,
-        |    CAST(sum(CASE WHEN o_custkey IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS r1,
-        |    CAST(sum(CASE WHEN o_orderstatus IN ('O','F','P') THEN 1 ELSE 0 END) AS BIGINT) AS r2,
-        |    CAST(sum(CASE WHEN regexp_matches(o_orderpriority, '^[1-5]-') THEN 1 ELSE 0 END) AS BIGINT) AS r3
-        |  FROM orders)
-        |SELECT rule, n_pass, n_rows, n_pass * 1000000 // n_rows AS pass_ppm,
-        |  (n_pass * 1000000 // n_rows) >= 990000 AS ok
-        |FROM (
-        |  SELECT 'price_positive' AS rule, r0 AS n_pass, n_rows FROM w
-        |  UNION ALL SELECT 'custkey_present', r1, n_rows FROM w
-        |  UNION ALL SELECT 'status_domain', r2, n_rows FROM w
-        |  UNION ALL SELECT 'priority_format', r3, n_rows FROM w)""".stripMargin,
-
-    // Exact integer moments; trunc() mirrors Spark's truncating
-    // double→long cast (DuckDB's bare CAST rounds); the single FP op
-    // is the final num/den divide.
-    "q119_trend_slope" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |    date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x,
-        |    CAST(trunc(value * 100) AS BIGINT) AS y
-        |  FROM events),
-        |a AS (
-        |  SELECT event_type, count(*) AS n, CAST(sum(x) AS BIGINT) AS sx,
-        |    CAST(sum(y) AS BIGINT) AS sy, CAST(sum(x * y) AS BIGINT) AS sxy,
-        |    CAST(sum(x * x) AS BIGINT) AS sxx
-        |  FROM e GROUP BY 1)
-        |SELECT event_type, n, n * sxy - sx * sy AS num, n * sxx - sx * sx AS den,
-        |  CASE WHEN n * sxx - sx * sx <> 0
-        |    THEN CAST(n * sxy - sx * sy AS DOUBLE) / CAST(n * sxx - sx * sx AS DOUBLE)
-        |  END AS slope
-        |FROM a""".stripMargin,
-
-    // quantile_disc == percentile_disc (actual data values — the SKILL
-    // parity rule); assignment is the same ordered CASE chain.
-    "q120_equidepth" ->
-      """WITH b AS (
-        |  SELECT quantile_disc(o_totalprice, 0.125) AS b0,
-        |    quantile_disc(o_totalprice, 0.25) AS b1,
-        |    quantile_disc(o_totalprice, 0.375) AS b2,
-        |    quantile_disc(o_totalprice, 0.5) AS b3,
-        |    quantile_disc(o_totalprice, 0.625) AS b4,
-        |    quantile_disc(o_totalprice, 0.75) AS b5,
-        |    quantile_disc(o_totalprice, 0.875) AS b6
-        |  FROM orders)
-        |SELECT CASE WHEN o_totalprice <= b0 THEN 0 WHEN o_totalprice <= b1 THEN 1
-        |  WHEN o_totalprice <= b2 THEN 2 WHEN o_totalprice <= b3 THEN 3
-        |  WHEN o_totalprice <= b4 THEN 4 WHEN o_totalprice <= b5 THEN 5
-        |  WHEN o_totalprice <= b6 THEN 6 ELSE 7 END AS bucket,
-        |  count(*) AS n
-        |FROM orders CROSS JOIN b
-        |WHERE o_totalprice IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-
-    // Hamilton: quota = (b·n) // total, leftover = b − Σ quota units to
-    // the largest remainders (source tiebreak) — all integer.
-    "q121_apportion" ->
-      """WITH c AS (SELECT source, count(*) AS n_rows FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_rows) AS BIGINT) AS total FROM c),
-        |q AS (
-        |  SELECT source, n_rows, (120 * n_rows) // total AS quota,
-        |    (120 * n_rows) % total AS rem
-        |  FROM c CROSS JOIN t),
-        |l AS (SELECT 120 - CAST(sum(quota) AS BIGINT) AS leftover FROM q)
-        |SELECT source, n_rows,
-        |  quota + CASE WHEN row_number() OVER (ORDER BY rem DESC, source) <= leftover
-        |    THEN 1 ELSE 0 END AS alloc
-        |FROM q CROSS JOIN l""".stripMargin,
-
-    // q121's apportionment at budget 200 + q107's exact priority
-    // doubles, ranked per source.
-    "q122_budget_mixture" ->
-      """WITH c AS (SELECT source, count(*) AS n_rows FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_rows) AS BIGINT) AS total FROM c),
-        |q AS (
-        |  SELECT source, n_rows, (200 * n_rows) // total AS quota,
-        |    (200 * n_rows) % total AS rem
-        |  FROM c CROSS JOIN t),
-        |l AS (SELECT 200 - CAST(sum(quota) AS BIGINT) AS leftover FROM q),
-        |a AS (
-        |  SELECT source,
-        |    quota + CASE WHEN row_number() OVER (ORDER BY rem DESC, source) <= leftover
-        |      THEN 1 ELSE 0 END AS alloc
-        |  FROM q CROSS JOIN l),
-        |p AS (
-        |  SELECT doc_id, source, n_chars,
-        |    CAST(n_chars AS DOUBLE) * 4294967296.0 /
-        |      CAST(CAST(('0x' || substr(md5(concat_ws(':', 'bm-v1',
-        |        CAST(doc_id AS VARCHAR))), 1, 8)) AS BIGINT) + 1 AS DOUBLE) AS priority
-        |  FROM documents)
-        |SELECT doc_id, source, n_chars, priority
-        |FROM (
-        |  SELECT p.*, row_number() OVER (PARTITION BY p.source
-        |    ORDER BY priority DESC, doc_id) AS rk, a.alloc
-        |  FROM p JOIN a USING (source))
-        |WHERE rk <= alloc""".stripMargin,
-
-    // The oracle computes the exact side and asserts the MG guarantees
-    // as literals — the sketch's COUNTS are merge-order-dependent, its
-    // GUARANTEES are not (q46/q62 contract pattern).
-    "q123_heavy_hitters_contract" ->
-      """WITH k AS (
-        |  SELECT CASE WHEN event_id % 2 = 0 THEN 'HOT'
-        |    ELSE CAST(event_id % 97 AS VARCHAR) END AS k
-        |  FROM events),
-        |t AS (SELECT count(*) AS n FROM k),
-        |e AS (SELECT k, count(*) AS freq FROM k GROUP BY 1)
-        |SELECT n AS n_rows,
-        |  CAST(sum(CASE WHEN freq * 11 > n THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_true_heavy,
-        |  TRUE AS all_heavy_found, TRUE AS under_bound_ok,
-        |  TRUE AS never_overcounts
-        |FROM e CROSS JOIN t GROUP BY n""".stripMargin,
-
-    // q120's shape with the boundary CTE restricted to the identical
-    // md5 sample (thresholdHex(0.2) = '33333333' — the q58 predicate
-    // mirroring); counts over the full table.
-    "q166_equidepth_sampled" ->
-      """WITH sm AS (
-        |  SELECT o_totalprice FROM orders
-        |  WHERE substr(md5(concat_ws(':', 'eqd-v1',
-        |    CAST(o_orderkey AS VARCHAR))), 1, 8) < '33333333'),
-        |b AS (
-        |  SELECT quantile_disc(o_totalprice, 0.125) AS b0,
-        |    quantile_disc(o_totalprice, 0.25) AS b1,
-        |    quantile_disc(o_totalprice, 0.375) AS b2,
-        |    quantile_disc(o_totalprice, 0.5) AS b3,
-        |    quantile_disc(o_totalprice, 0.625) AS b4,
-        |    quantile_disc(o_totalprice, 0.75) AS b5,
-        |    quantile_disc(o_totalprice, 0.875) AS b6
-        |  FROM sm)
-        |SELECT CASE WHEN o_totalprice <= b0 THEN 0 WHEN o_totalprice <= b1 THEN 1
-        |  WHEN o_totalprice <= b2 THEN 2 WHEN o_totalprice <= b3 THEN 3
-        |  WHEN o_totalprice <= b4 THEN 4 WHEN o_totalprice <= b5 THEN 5
-        |  WHEN o_totalprice <= b6 THEN 6 ELSE 7 END AS bucket,
-        |  count(*) AS n
-        |FROM orders CROSS JOIN b
-        |WHERE o_totalprice IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-
-    // IDENTICAL SQL to q150 — the histogram formulation must reproduce
-    // the buffered percentile_disc exactly, ties included.
-    "q167_daily_bands_hist" ->
-      """WITH v AS (
-        |  SELECT strftime(ts, '%Y-%m-%d') AS day,
-        |    CAST(trunc(value * 100) AS BIGINT) AS c
-        |  FROM events WHERE value IS NOT NULL)
-        |SELECT day, quantile_disc(c, 0.1) AS p10, quantile_disc(c, 0.5) AS p50,
-        |  quantile_disc(c, 0.9) AS p90, count(*) AS n
-        |FROM v GROUP BY 1""".stripMargin,
-
-    // IDENTICAL SQL to q143 — hist-form MAD must match the buffered
-    // two-pass percentile_disc bit for bit.
-    "q168_mad_hist" ->
-      """WITH v AS (
-        |  SELECT event_type, CAST(trunc(value * 100) AS BIGINT) AS c
-        |  FROM events WHERE value IS NOT NULL),
-        |m AS (
-        |  SELECT event_type, quantile_disc(c, 0.5) AS median,
-        |    count(*) AS n
-        |  FROM v GROUP BY 1)
-        |SELECT v.event_type, n, median,
-        |  quantile_disc(abs(c - median), 0.5) AS mad
-        |FROM v JOIN m USING (event_type)
-        |GROUP BY v.event_type, n, median""".stripMargin,
-
-    // q132's clip with the bounds CTE on the md5 sample
-    // (thresholdHex(0.2) = '33333333').
-    "q169_winsorize_sampled" ->
-      """WITH sm AS (
-        |  SELECT o_totalprice FROM orders
-        |  WHERE substr(md5(concat_ws(':', 'win-v1',
-        |    CAST(o_orderkey AS VARCHAR))), 1, 8) < '33333333'),
-        |b AS (
-        |  SELECT quantile_disc(o_totalprice, 0.05) AS lo,
-        |    quantile_disc(o_totalprice, 0.95) AS hi
-        |  FROM sm)
-        |SELECT o_orderkey, o_totalprice,
-        |  CASE WHEN o_totalprice IS NOT NULL
-        |    THEN greatest(lo, least(hi, o_totalprice)) END AS clipped
-        |FROM orders CROSS JOIN b""".stripMargin,
-
-    // Expected decoded-WAV rows authored from the generator formula
-    // (tools/gen_wav_fixtures.py; provenance-checked) — the adversarial
-    // files' ABSENCE from this parquet is part of the contract.
-    "q170_wav_decode" ->
-      s"""SELECT name, sample_rate, channels, bits, n_frames, sum_abs, peak_abs
-        |FROM read_parquet('$FixturesDir/audio_expected.parquet')""".stripMargin,
-
-    // q46 contract discipline on the ADVERSARIAL clustered fixture:
-    // n_exact comes from DuckDB's OWN brute-force top-5 (cosine, the
-    // q46 list_reduce shape; neighbor-id tie-break) — the power-of-two
-    // value grid makes that truth bit-exact cross-engine. n_hit is
-    // measured from the Spark query on the fixed fixture (445 / 372,
-    // stable across repeated runs — IVF seeding is deterministic). The
-    // pinned pair IS the nlist/nprobe guidance as a certified contract:
-    // probe3+lloyd2 recalls every exact pair on the hub-and-spoke
-    // corpus, probe1-without-Lloyd drops 73 of 445 (recall_ok=false).
-    // The exact-codebook ADC score IS the exact inner product, and on
-    // the dyadic-grid fixture every product/partial sum is exactly
-    // representable, so the subspace-wise fold equals this single
-    // 64-term fold bit for bit — full row-level certification of the
-    // PQ encode→LUT→fold machinery.
-    "q191_pq_adc_topk" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, embedding
-        |  FROM read_parquet('$FixturesDir/embeddings_clustered.parquet')),
-        |q AS (SELECT * FROM e WHERE vec_id % 43 = 0 OR vec_id >= 1045),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS score
-        |  FROM q JOIN e c ON c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank,
-        |  score
-        |FROM scored QUALIFY rank <= 5""".stripMargin,
-
-    // q46 discipline: n_exact from this brute-force inner-product SQL,
-    // n_hit pinned at the measured sf0.01 value (48/50, stable across
-    // fresh JVMs — fixed seeds, sequential folds).
-    "q192_pq_recall" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |q AS (SELECT * FROM e WHERE vec_id % 50 = 0),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS score
-        |  FROM q JOIN e c ON c.vec_id <> q.vec_id),
-        |exact AS (
-        |  SELECT query_id, neighbor_id,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank
-        |  FROM scored QUALIFY rank <= 5),
-        |hits(method, n_hit) AS (VALUES ('pq_m16_k16_rerank50', CAST(48 AS BIGINT)))
-        |SELECT method, n_exact, n_hit, n_hit >= n_exact * 0.9 AS recall_ok
-        |FROM hits CROSS JOIN (SELECT count(*) AS n_exact FROM exact)""".stripMargin,
-
-    // Exhaustive-shortlist escape (q44/q88's discipline on the PQ
-    // side): the exact rerank decides alone, so the stored+appended
-    // index must reproduce brute force row-for-row.
-    "q193_pq_stored_append" -> PqBruteDotSql,
-
-    // identical-oracle certification for the composite index
-    // lifecycle: stored IVF-PQ (frozen anchors AND frozen codebook)
-    // + append, probed exhaustively, must also equal brute force.
-    "q200_ivfpq_stored" -> PqBruteDotSql,
-
-    // IVFADC exact arm: exhaustive probe + exact residual codebook ==
-    // brute-force inner product, so the oracle is q191's brute force
-    // verbatim (same query set, same dyadic-grid bit-exactness — here
-    // additionally exercising that residual grid points, their
-    // products, and the base+LUT decomposed sum stay exact).
-    "q194_ivfpq_exact" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, embedding
-        |  FROM read_parquet('$FixturesDir/embeddings_clustered.parquet')),
-        |q AS (SELECT * FROM e WHERE vec_id % 43 = 0 OR vec_id >= 1045),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS score
-        |  FROM q JOIN e c ON c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank,
-        |  score
-        |FROM scored QUALIFY rank <= 5""".stripMargin,
-
-    // q46 discipline: n_exact from this brute-force inner-product SQL,
-    // n_hit pinned at the measured sf0.01 values (stable across fresh
-    // JVMs — fixed seeds, sequential folds): healthy nprobe=6 row 46,
-    // degraded nprobe=2 row 27.
-    "q195_ivfpq_recall" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |q AS (SELECT * FROM e WHERE vec_id % 50 = 0),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS score
-        |  FROM q JOIN e c ON c.vec_id <> q.vec_id),
-        |exact AS (
-        |  SELECT query_id, neighbor_id,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank
-        |  FROM scored QUALIFY rank <= 5),
-        |hits(method, n_hit) AS (VALUES
-        |  ('ivfpq_n8_m16k16_p6_rerank100', CAST(46 AS BIGINT)),
-        |  ('ivfpq_n8_m16k16_p2_rerank100', CAST(27 AS BIGINT)))
-        |SELECT method, n_exact, n_hit, n_hit >= n_exact * 0.9 AS recall_ok
-        |FROM hits CROSS JOIN (SELECT count(*) AS n_exact FROM exact)""".stripMargin,
-
-    "q171_ann_recall_clustered" ->
-      s"""WITH n AS (
-        |  SELECT vec_id, embedding,
-        |    list_reduce(list_transform(list_zip(embedding, embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS nn
-        |  FROM read_parquet('$FixturesDir/embeddings_clustered.parquet')
-        |), q AS (SELECT * FROM n WHERE vec_id % 43 = 0 OR vec_id >= 1045),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b)
-        |      / sqrt(q.nn * c.nn) AS cosine
-        |  FROM q JOIN n c ON c.vec_id <> q.vec_id),
-        |exact AS (
-        |  SELECT query_id, neighbor_id,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-        |  FROM scored QUALIFY rank <= 5),
-        |hits(method, n_hit) AS (VALUES
-        |  ('ivf_probe3_lloyd2', CAST(445 AS BIGINT)),
-        |  ('ivf_probe1_raw', CAST(372 AS BIGINT)))
-        |SELECT method, n_exact, n_hit, n_hit >= n_exact * 0.9 AS recall_ok
-        |FROM hits CROSS JOIN (SELECT count(*) AS n_exact FROM exact)""".stripMargin,
-
-    // q173's span CTEs + per-doc token counts; covered_ppm via integer
-    // // division. SUMs cast to BIGINT (DuckDB HUGEINT).
-    "q176_repetition_burden" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM documents),
-        |ng AS (
-        |  SELECT doc_id, pos, md5(tok || ' ' || lead(tok,1) OVER w || ' ' || lead(tok,2) OVER w
-        |    || ' ' || lead(tok,3) OVER w || ' ' || lead(tok,4) OVER w || ' ' || lead(tok,5) OVER w
-        |    || ' ' || lead(tok,6) OVER w || ' ' || lead(tok,7) OVER w) AS g
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 7) OVER w IS NOT NULL),
-        |hot AS (SELECT g FROM ng GROUP BY g HAVING count(DISTINCT doc_id) >= 2),
-        |hits AS (SELECT doc_id, pos AS s, pos + 7 AS e FROM ng WHERE g IN (SELECT g FROM hot)),
-        |f AS (SELECT doc_id, s, e,
-        |  CASE WHEN max(e) OVER pre IS NULL OR s > max(e) OVER pre THEN 1 ELSE 0 END AS flag
-        |  FROM hits WINDOW pre AS (PARTITION BY doc_id ORDER BY s, e
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        |g2 AS (SELECT doc_id, s, e,
-        |  sum(flag) OVER (PARTITION BY doc_id ORDER BY s, e
-        |    ROWS UNBOUNDED PRECEDING) AS span_seq
-        |  FROM f),
-        |spans AS (SELECT doc_id, span_seq, min(s) AS ss, max(e) AS se FROM g2 GROUP BY 1, 2),
-        |cov AS (SELECT doc_id, SUM(se - ss + 1) AS cv FROM spans GROUP BY 1),
-        |ntok AS (SELECT doc_id, count(*) AS nt FROM tok GROUP BY 1),
-        |d AS (
-        |  SELECT doc.source, COALESCE(ntok.nt, 0) AS nt, COALESCE(cov.cv, 0) AS cv
-        |  FROM documents doc
-        |  LEFT JOIN ntok ON ntok.doc_id = doc.doc_id
-        |  LEFT JOIN cov ON cov.doc_id = doc.doc_id)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(SUM(CASE WHEN cv > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_with_spans,
-        |  CAST(SUM(nt) AS BIGINT) AS total_tokens,
-        |  CAST(SUM(cv) AS BIGINT) AS covered_tokens,
-        |  CAST(SUM(cv) AS BIGINT) * 1000000 // CAST(SUM(nt) AS BIGINT) AS covered_ppm
-        |FROM d GROUP BY 1""".stripMargin,
-
-    // The q63 round() parity + integer cross-multiplied L1: no double
-    // is ever accumulated, so the check is exact. FILTER mirrors the
-    // Spark conditional aggregates; labels in only one version drop.
-    "q177_centroid_drift" ->
-      """WITH q AS (
-        |  SELECT vec_id % 2 AS ver, label,
-        |    generate_subscripts(embedding, 1) AS p,
-        |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1048576) AS BIGINT) AS qx
-        |  FROM embeddings WHERE label IS NOT NULL),
-        |g AS (
-        |  SELECT label, p,
-        |    CAST(SUM(qx) FILTER (WHERE ver = 0) AS BIGINT) AS sa,
-        |    COUNT(*) FILTER (WHERE ver = 0) AS na,
-        |    CAST(SUM(qx) FILTER (WHERE ver = 1) AS BIGINT) AS sb,
-        |    COUNT(*) FILTER (WHERE ver = 1) AS nb
-        |  FROM q GROUP BY 1, 2)
-        |SELECT label, count(*) AS n_pos,
-        |  CAST(SUM(ABS(sa * nb - sb * na)) AS BIGINT) AS l1_cross
-        |FROM g WHERE na > 0 AND nb > 0
-        |GROUP BY 1""".stripMargin,
-
-    // q88's exhaustive-mode truth with the tombstoned slice excluded
-    // from the corpus side; queries themselves are never tombstoned
-    // (%50==0 and %10==7 are disjoint mod 10).
-    "q175_ivf_delete" ->
-      """WITH n AS (
-        |  SELECT vec_id, embedding,
-        |    list_reduce(list_transform(list_zip(embedding, embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b) AS nn
-        |  FROM embeddings
-        |), q AS (SELECT * FROM n WHERE vec_id % 50 = 0),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_reduce(list_transform(list_zip(q.embedding, c.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), (a, b) -> a + b)
-        |      / sqrt(q.nn * c.nn) AS cosine
-        |  FROM q JOIN n c ON c.vec_id <> q.vec_id AND c.vec_id % 10 <> 7)
-        |SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank,
-        |  cosine
-        |FROM scored
-        |QUALIFY rank <= 5""".stripMargin,
-
-    // q89's brute-force truth with the tombstoned slice excluded from
-    // the corpus side — the delete semantics in one predicate.
-    "q174_idx_delete" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 2) OVER w IS NOT NULL
-        |), sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS n_id, b.doc_id AS c_id, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle
-        |    AND a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0 AND b.doc_id % 10 <> 9
-        |  GROUP BY 1, 2)
-        |SELECT n_id AS new_id, c_id AS corpus_id,
-        |  CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) AS jaccard
-        |FROM inter JOIN sz sa ON sa.doc_id = n_id JOIN sz sb ON sb.doc_id = c_id
-        |WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8""".stripMargin,
-
-    // The md5(gram) keys mirror Dedup.repeatedSpans exactly (same
-    // space-joined token windows, q105's tok/lead recipe); the islands
-    // merge is q108's flag/running-sum shape on token coordinates.
-    // span_seq's sum(flag) comes back HUGEINT — cast to BIGINT.
-    "q173_repeated_spans" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok,
-        |         generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-        |  FROM documents),
-        |ng AS (
-        |  SELECT doc_id, pos, md5(tok || ' ' || lead(tok,1) OVER w || ' ' || lead(tok,2) OVER w
-        |    || ' ' || lead(tok,3) OVER w || ' ' || lead(tok,4) OVER w || ' ' || lead(tok,5) OVER w
-        |    || ' ' || lead(tok,6) OVER w || ' ' || lead(tok,7) OVER w) AS g
-        |  FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        |  QUALIFY lead(tok, 7) OVER w IS NOT NULL),
-        |hot AS (SELECT g FROM ng GROUP BY g HAVING count(DISTINCT doc_id) >= 2),
-        |hits AS (SELECT doc_id, pos AS s, pos + 7 AS e FROM ng WHERE g IN (SELECT g FROM hot)),
-        |f AS (SELECT doc_id, s, e,
-        |  CASE WHEN max(e) OVER pre IS NULL OR s > max(e) OVER pre THEN 1 ELSE 0 END AS flag
-        |  FROM hits WINDOW pre AS (PARTITION BY doc_id ORDER BY s, e
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        |g2 AS (SELECT doc_id, s, e,
-        |  CAST(sum(flag) OVER (PARTITION BY doc_id ORDER BY s, e
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS span_seq
-        |  FROM f)
-        |SELECT doc_id, span_seq, min(s) AS span_start, max(e) AS span_end,
-        |  count(*) AS n_merged
-        |FROM g2 GROUP BY 1, 2""".stripMargin,
-
-    // The dim lists the hostile files too; the join against the
-    // formula-authored truth (which omits them) drops them — the same
-    // drop the Spark side gets from decodeWav's parser returning None.
-    "q172_audio_report" ->
-      s"""SELECT s.speaker, CAST(s.recordedDate AS VARCHAR) AS recorded_date,
-        |  COUNT(*) AS n_clips,
-        |  CAST(SUM(a.n_frames) AS BIGINT) AS total_frames,
-        |  CAST(SUM(a.n_frames * 1000 // a.sample_rate) AS BIGINT) AS total_ms,
-        |  MAX(a.peak_abs) AS peak_abs,
-        |  CAST(SUM(a.sum_abs) AS BIGINT) AS sum_abs_total
-        |FROM read_parquet('$FixturesDir/audio_expected.parquet') a
-        |JOIN read_json_auto('$FixturesDir/audio_speakers.json') s
-        |  ON a.name = s.name
-        |GROUP BY 1, 2""".stripMargin,
-
-    // Expected decoded-BMP rows authored from the pixel generator
-    // formula (tools/gen_bmp_fixtures.py; provenance-checked) — the
-    // adversarial files' ABSENCE from this parquet is part of the
-    // contract, and top_row_sum_r pins bottom-up/top-down row order.
-    "q178_bmp_decode" ->
-      s"""SELECT name, width, height, bits, n_px, sum_r, sum_g, sum_b,
-        |  peak_luma_milli, top_row_sum_r
-        |FROM read_parquet('$FixturesDir/images_expected.parquet')""".stripMargin,
-
-    "q179_image_report" ->
-      s"""SELECT c.camera, CAST(c.capturedDate AS VARCHAR) AS captured_date,
-        |  COUNT(*) AS n_images,
-        |  CAST(SUM(i.n_px) AS BIGINT) AS total_px,
-        |  CAST(SUM(i.sum_r*299 + i.sum_g*587 + i.sum_b*114) * 1000000
-        |    // (SUM(i.n_px) * 255000) AS BIGINT) AS brightness_ppm,
-        |  MAX(i.peak_luma_milli) AS peak_luma_milli
-        |FROM read_parquet('$FixturesDir/images_expected.parquet') i
-        |JOIN read_json_auto('$FixturesDir/image_cameras.json') c
-        |  ON i.name = c.name
-        |GROUP BY 1, 2""".stripMargin,
-
-    // Rebuild snapshot v0 (the 12 lexicographically-largest event
-    // files — the Scala replay's files.reverse.splitAt(n/2) wave) and
-    // the final snapshot (all files), then the q103 fingerprint diff.
-    // The filename rank is computed over ALL files (the split happens
-    // before the resourceId filter, exactly as the replay delivers).
-    "q180_cdc_time_travel" ->
-      s"""WITH raw AS (
-        |  SELECT resourceId,
-        |    epoch_us(CAST(processTime AS TIMESTAMPTZ)) AS seq,
-        |    eventId, userId, duration, filename
-        |  FROM read_json_auto('$FixturesDir/events_json/*.json',
-        |                      filename=true)),
-        |files AS (SELECT DISTINCT filename FROM raw),
-        |nn AS (SELECT greatest(1, count(*) // 6) AS half FROM files),
-        |newer AS (
-        |  SELECT filename FROM files CROSS JOIN nn
-        |  QUALIFY row_number() OVER (ORDER BY filename DESC) <= half),
-        |e AS (SELECT * FROM raw WHERE resourceId IS NOT NULL),
-        |v0 AS (
-        |  SELECT resourceId, seq, eventId, userId, duration FROM e
-        |  WHERE filename IN (SELECT filename FROM newer)
-        |  QUALIFY row_number() OVER (PARTITION BY resourceId
-        |    ORDER BY seq DESC, eventId DESC) = 1),
-        |v1 AS (
-        |  SELECT resourceId, seq, eventId, userId, duration FROM e
-        |  QUALIFY row_number() OVER (PARTITION BY resourceId
-        |    ORDER BY seq DESC, eventId DESC) = 1),
-        |o AS (SELECT resourceId, md5(concat_ws(chr(1),
-        |    coalesce(CAST(seq AS VARCHAR), chr(2)),
-        |    coalesce(CAST(eventId AS VARCHAR), chr(2)),
-        |    coalesce(CAST(userId AS VARCHAR), chr(2)),
-        |    coalesce(CAST(duration AS VARCHAR), chr(2)))) AS old_fp FROM v0),
-        |n2 AS (SELECT resourceId, md5(concat_ws(chr(1),
-        |    coalesce(CAST(seq AS VARCHAR), chr(2)),
-        |    coalesce(CAST(eventId AS VARCHAR), chr(2)),
-        |    coalesce(CAST(userId AS VARCHAR), chr(2)),
-        |    coalesce(CAST(duration AS VARCHAR), chr(2)))) AS new_fp FROM v1)
-        |SELECT coalesce(n2.resourceId, o.resourceId) AS resourceId,
-        |  CASE WHEN o.resourceId IS NULL THEN 'added'
-        |       WHEN n2.resourceId IS NULL THEN 'removed'
-        |       WHEN old_fp = new_fp THEN 'unchanged'
-        |       ELSE 'changed' END AS status,
-        |  old_fp, new_fp
-        |FROM o FULL OUTER JOIN n2 ON o.resourceId = n2.resourceId""".stripMargin,
-
-    // Expected decoded-MP4 rows authored from the generator spec
-    // (tools/gen_mp4_fixtures.py; provenance-checked) — the truncated
-    // and non-BMFF files' ABSENCE is part of the contract.
-    "q184_mp4_meta" ->
-      s"""SELECT name, brand, timescale, duration_units, duration_ms,
-        |  n_tracks, width, height
-        |FROM read_parquet('$FixturesDir/video_expected.parquet')""".stripMargin,
-
-    "q181_file_lineage" ->
-      s"""SELECT coalesce(resourceId, '__none__') AS resource_id,
-        |  count(*) AS n_events,
-        |  count(DISTINCT parse_filename(filename)) AS n_files,
-        |  min(parse_filename(filename)) AS first_file,
-        |  max(parse_filename(filename)) AS last_file
-        |FROM read_json_auto('$FixturesDir/events_json/*.json',
-        |                    filename=true)
-        |GROUP BY 1""".stripMargin,
-
-    // Re-classify the same lines with json_valid: parsed rows must
-    // match field-for-field, quarantined rows fingerprint-for-
-    // fingerprint (md5 of the preserved raw text).
-    "q182_quarantine" ->
-      s"""WITH f AS (
-        |  SELECT content FROM read_text('$FixturesDir/events_jsonl_dirty/*.jsonl')),
-        |lines AS (
-        |  SELECT unnest(string_split(rtrim(content, chr(10)), chr(10))) AS line
-        |  FROM f)
-        |SELECT
-        |  CASE WHEN json_valid(line) THEN 'ok' ELSE 'corrupt' END AS kind,
-        |  CASE WHEN json_valid(line) THEN line->>'$$.eventId' END AS event_id,
-        |  CASE WHEN json_valid(line) THEN line->>'$$.resourceId' END AS resource_id,
-        |  CASE WHEN json_valid(line) THEN line->>'$$.userId' END AS user_id,
-        |  CASE WHEN json_valid(line)
-        |    THEN CAST(line->>'$$.duration' AS BIGINT) END AS duration,
-        |  CASE WHEN json_valid(line) THEN line->>'$$.itemPrice' END AS item_price,
-        |  CASE WHEN NOT json_valid(line) THEN md5(line) END AS line_fp
-        |FROM lines""".stripMargin,
-
-    // Identical SQL to q182 — the streaming replay must converge to the
-    // batch triage exactly (the q167/q168 identical-oracle discipline).
-    "q185_quarantine_stream" ->
-      s"""WITH f AS (
-        |  SELECT content FROM read_text('$FixturesDir/events_jsonl_dirty/*.jsonl')),
-        |lines AS (
-        |  SELECT unnest(string_split(rtrim(content, chr(10)), chr(10))) AS line
-        |  FROM f)
-        |SELECT
-        |  CASE WHEN json_valid(line) THEN 'ok' ELSE 'corrupt' END AS kind,
-        |  CASE WHEN json_valid(line) THEN line->>'$$.eventId' END AS event_id,
-        |  CASE WHEN json_valid(line) THEN line->>'$$.resourceId' END AS resource_id,
-        |  CASE WHEN json_valid(line) THEN line->>'$$.userId' END AS user_id,
-        |  CASE WHEN json_valid(line)
-        |    THEN CAST(line->>'$$.duration' AS BIGINT) END AS duration,
-        |  CASE WHEN json_valid(line) THEN line->>'$$.itemPrice' END AS item_price,
-        |  CASE WHEN NOT json_valid(line) THEN md5(line) END AS line_fp
-        |FROM lines""".stripMargin,
-
-    "q183_schema_evolution" ->
-      """WITH u AS (
-        |  SELECT 'v1' AS dump, doc_id, n_chars, NULL::INTEGER AS quality
-        |  FROM documents WHERE doc_id % 3 = 0
-        |  UNION ALL
-        |  SELECT 'v2', doc_id, n_chars, CAST(n_chars % 100 AS INTEGER)
-        |  FROM documents WHERE doc_id % 3 = 1)
-        |SELECT dump, count(*) AS n_docs, count(quality) AS n_quality,
-        |  CAST(sum(quality) AS BIGINT) AS sum_quality,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM u GROUP BY 1""".stripMargin
-  )
 }

@@ -118,7 +118,7 @@ object TextAnalysis {
   def tokens(text: Column): Column = graft.plans.UnicodeTokens.of(text)
 
   /** The SQL-function spelling of [[tokens]]' contract — what the
-    * DuckDB oracle mirrors verbatim (SparkEntry's duckUToks) and what
+    * DuckDB oracle mirrors verbatim (UnicodeQueries.duckUToks) and what
     * PlansSpec compares the expression against.
     */
   def tokensComposed(text: Column): Column =

@@ -1210,7 +1210,7 @@ class ExtSpec extends SparkSpec {
   }
 
   /** q310/q313/q315 planted SemDeDup corpus (ONE builder — the
-    * SparkEntry semCorpus twin — so the brute-force and incremental
+    * DedupQueries semCorpus twin — so the brute-force and incremental
     * tests cannot drift apart): power-of-2 scalar-multiple copies.
     */
   private def plantedSemCorpus(partitions: Int) = {

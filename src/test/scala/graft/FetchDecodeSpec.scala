@@ -217,7 +217,7 @@ class FetchDecodeSpec extends SparkSpec {
     val docs = Seq((1L, "plain ascii doc"), (2L, "café planted"))
       .toDF("doc_id", "text")
     val ex = intercept[Throwable] {
-      SparkEntry.fetchFixture(docs).collect()
+      graft.catalog.Shared.fetchFixture(docs).collect()
     }
     def messages(t: Throwable): Seq[String] =
       if (t == null) Seq.empty
@@ -226,7 +226,7 @@ class FetchDecodeSpec extends SparkSpec {
     assert(all.contains("non-ASCII documents.text at doc_id=2"),
       s"guard must name the site and doc_id, got: $all")
     // and the guard is a no-op on a clean corpus
-    assert(SparkEntry.fetchFixture(docs.filter($"doc_id" === 1L))
+    assert(graft.catalog.Shared.fetchFixture(docs.filter($"doc_id" === 1L))
       .count() == 1L)
   }
 }

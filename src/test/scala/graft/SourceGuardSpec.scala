@@ -6,9 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.catalog.QuerySpec
+
 /** Source guard over `src/main/scala`: one session builder, no path
-  * that only exists in this checkout, and SQL function names bound in
-  * one place.
+  * that only exists in this checkout, SQL function names bound in one
+  * place, and query names spelled only in the catalog.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("").toAbsolutePath
@@ -39,5 +41,30 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offenders("injectFunction") == Set(s"$main/plans/GraftExtensions.scala"))
     // BloomJoin binds names for the SQL text it generates on caller sessions
     assert(offenders("registerFunction") == Set(s"$main/operators/BloomJoin.scala"))
+  }
+
+  /** String literals in `text` that spell one of `names`. */
+  private def nameLiterals(text: String, names: Set[String]): Int =
+    "\"(q\\d+_\\w+)\"".r.findAllMatchIn(text).count(m => names(m.group(1)))
+
+  test("catalog: 375 distinct specs, 89 tracked, query names spelled only in catalog/") {
+    val names = SparkEntry.specs.map(_.name)
+    assert(names.size == 375)
+    assert(names.distinct.size == names.size)
+    val ordinals = names.map(QuerySpec.ordinal)
+    assert(ordinals.distinct.size == ordinals.size)
+    assert(ordinals.count(_ < 90) == 89)
+
+    val known = names.toSet
+    val probe = Seq("q1_agg", "q2_top10", "q3_left_join", "q4_royalties")
+      .map(n => "\"" + n + "\"").mkString("Map(", " -> 1, ", " -> 1)")
+    assert(nameLiterals(probe, known) == 4)
+    assert(nameLiterals("\"q45_sessions\" \"q1_aggregate\"", known) == 0)
+
+    val (catalog, rest) = sources.partition(_._1.startsWith(s"$main/catalog/"))
+    assert(catalog.values.map(nameLiterals(_, known)).sum >= 375)
+    val spelled = rest.map { case (f, text) => f -> nameLiterals(text, known) }
+      .filter(_._2 > 3)
+    assert(spelled.isEmpty, s"query-name literals outside catalog/: $spelled")
   }
 }
