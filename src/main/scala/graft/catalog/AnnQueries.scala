@@ -440,10 +440,10 @@ object AnnQueries {
     // holds on the embeddings table by construction). ──
     QuerySpec("q207_cosine_fused", (s0, dir) => {
       import graft.plans.FuseCosine
-      // cloned session: the opt-in flag and rule stay scoped to THIS
+      // forked session: the opt-in flag and rule stay scoped to THIS
       // query's plan — the shared Verify/Bench session never plans
-      // with the fusion armed (the returned DF executes on the clone)
-      val s = s0.newSession()
+      // with the fusion armed (the returned DF executes on the fork)
+      val s = Session.fork(s0)
       FuseCosine.install(s)
       s.conf.set("spark.graft.fuseCosine", "true")
       val emb = t(s, dir, "embeddings")

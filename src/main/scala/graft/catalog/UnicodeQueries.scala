@@ -870,11 +870,11 @@ object UnicodeQueries {
     // q27 proved a registered UDF surface; this proves the CUSTOM
     // CATALYST EXPRESSION is equally SQL-callable): unicode_tokens,
     // bound by GraftExtensions, invoked from spark.sql text on a
-    // newSession clone (which inherits the extensions; the temp view
+    // Session.fork (which inherits the extensions; the temp view
     // stays off the shared session), certified against q288's oracle
     // VERBATIM. ──
     QuerySpec("q302_unicode_tokens_sql", (s, dir) => {
-      val sess = s.newSession()
+      val sess = Session.fork(s)
       mlDocs(sess).createOrReplaceTempView("ml_docs")
       sess.sql(
         """SELECT doc_id, lang,

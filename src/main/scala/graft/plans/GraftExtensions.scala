@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** The engine's SQL surface additions. [[graft.Session]] installs them
-  * on every session it builds (`newSession()` clones and streaming
+  * on every session it builds (`Session.fork` children and streaming
   * microbatch sessions inherit them); elsewhere
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` does.
   *

@@ -202,9 +202,17 @@ object StreamingReports {
   // landing dir up, so repeated bench runs don't accumulate temp copies
   // of the fixtures ──
 
-  /** Bounded-replay session: same SparkContext, isolated SQLConf with
-    * shuffle/state partitions sized to the FIXTURE volume (hundreds of
-    * rows). Every stateful microbatch commits one state-store file per
+  /** Bounded-replay session: a [[graft.Session.fork]] of `outer`, so a
+    * replay's conf stays off the outer session while its generated code
+    * is shared. The fork runs without artifact isolation, so its tasks
+    * (and those of the clone every `writeStream.start()` makes) use the
+    * executor's one classloader, and a replay that generates the same
+    * code as the last one hits the codegen cache instead of recompiling
+    * it: a warm q124 replay compiled 34 classes on an isolated
+    * child session, 5 on the fork.
+    *
+    * Shuffle/state partitions are sized to the FIXTURE volume (hundreds
+    * of rows). Every stateful microbatch commits one state-store file per
     * partition, so 32-wide state on a bounded replay is pure fixed
     * cost — measured ~2x of several replays' wall time (round 6), and
     * 4 → 1 a further −8 % over the 13-replay family (median-of-3
@@ -217,7 +225,7 @@ object StreamingReports {
     * their timeouts once the sentinel has moved the watermark.
     */
   private[graft] def replaySession(outer: SparkSession): SparkSession = {
-    val s = outer.newSession()
+    val s = graft.Session.fork(outer)
     s.conf.set("spark.sql.shuffle.partitions", "1")
     // Measured and DECLINED (round-20, the §1 discipline): AQE off for
     // the replays cuts job count ~25 % (q319 101→77) but RAISES wall
@@ -348,6 +356,23 @@ object StreamingReports {
     replayWaves(prefix, waves)(landing =>
       stream(landing).writeStream.format("memory").queryName(mem).outputMode(mode).start())
     drainMemorySink(spark, mem)
+  }
+
+  /** [[replayWaves]] into a parquet spool dir: `start` gets the landing
+    * dir and the spool dir its sink writes each batch under. The
+    * spooled rows are read back (recursively, so a sink may write one
+    * subdir per batch) and checkpointed; the spool dir is deleted on
+    * the way out, failing or not.
+    */
+  private[graft] def replayToSpool(spark: SparkSession, prefix: String, waves: Seq[Lander])(
+      start: (String, String) => StreamingQuery): DataFrame = {
+    val spool = Files.createTempDirectory(prefix + "-out")
+    try {
+      replayWaves(prefix, waves)(landing => start(landing, spool.toString))
+      // recursiveFileLookup, not a "b*" glob: the glob path triggers a
+      // noisy FileStreamSink metadata probe warning on every read
+      spark.read.option("recursiveFileLookup", "true").parquet(spool.toString).localCheckpoint()
+    } finally deleteRecursively(spool)
   }
 
   /** `df` re-rooted under the replay session `spark` (frames from the
@@ -898,23 +923,15 @@ object StreamingReports {
       SimSearch.ensureStoredIvfIndex(spark, sfDir, nlist = 16))
     val queries = emb.filter(col("vec_id") % 50 === 0)
       .select("vec_id", "embedding")
-    val outDir = Files.createTempDirectory("graft-ann-out")
-    replayWaves("graft-ann-stream",
+    replayToSpool(spark, "graft-ann-stream",
         Seq(render("wave1", queries.filter(col("vec_id") % 100 === 0), "parquet"),
-          render("wave2", queries.filter(col("vec_id") % 100 =!= 0), "parquet")))(landing =>
-      spark.readStream.schema(queries.schema).parquet(landing)
-        .writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-          applyAnnProbeBatch(idx, batch, outDir.toString, batchId)
-        }.start())
-    // recursiveFileLookup, not a "b*" glob: the glob path triggers a
-    // noisy FileStreamSink metadata probe warning on every read.
-    // localCheckpoint THEN delete the result dirs (the
-    // noveltyStreamReplay lifetime pattern) — returning a lazy reader
-    // would leak one temp tree per replay invocation
-    val out = spark.read.option("recursiveFileLookup", "true")
-      .parquet(outDir.toString).localCheckpoint()
-    deleteRecursively(outDir)
-    out
+          render("wave2", queries.filter(col("vec_id") % 100 =!= 0), "parquet"))) {
+      (landing, spool) =>
+        spark.readStream.schema(queries.schema).parquet(landing)
+          .writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+            applyAnnProbeBatch(idx, batch, spool, batchId)
+          }.start()
+    }
   }
 
   /** Apply one ANN-serving microbatch: probe the frozen index, write
@@ -1039,7 +1056,6 @@ object StreamingReports {
   def noveltyStreamReplay(outer: SparkSession, sfDir: String): DataFrame = {
     val spark = replaySession(outer)
     import org.apache.spark.sql.types._
-    val outDir = java.nio.file.Files.createTempDirectory("graft-novelty-out")
     val docs = graft.tables.Corpus.load(spark, sfDir, "documents")
     val refSet = graft.ext.TextAnalysis.ngramSet(
       docs.filter(col("doc_id") % 5 === 1), "text", 3).localCheckpoint()
@@ -1047,20 +1063,17 @@ object StreamingReports {
       .select(col("doc_id"), col("text"))
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    replayWaves("graft-novelty-replay",
+    replayToSpool(spark, "graft-novelty-replay",
         (0 to 2).map(k => render(s"wave${k + 1}", scored.filter(col("doc_id") % 3 === k)))) {
-      landing =>
+      (landing, spool) =>
         spark.readStream.schema(schema).json(landing)
           .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
             graft.ext.TextAnalysis.ngramNoveltyAgainst(
                 batch, refSet, "doc_id", "text", n = 3)
-              .write.mode("append").parquet(outDir.toString)
+              .write.mode("append").parquet(spool)
             ()
           }.start()
     }
-    val out = spark.read.parquet(outDir.toString).localCheckpoint()
-    deleteRecursively(outDir)
-    out
   }
 
   /** Bounded replay of [[funnelStream]] over the parquet events table

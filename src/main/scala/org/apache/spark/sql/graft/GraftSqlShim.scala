@@ -20,7 +20,7 @@ object GraftSqlShim {
   /** Expression ↔ Column without the function registry
     * (`ExpressionUtils` is `private[sql]`): lets a custom scalar
     * expression be used as a plain `Column => Column` — which
-    * survives `newSession()` clones, unlike `call_function` against a
+    * survives session clones, unlike `call_function` against a
     * per-session registration (the streaming replay twins run
     * projections on clones).
     */

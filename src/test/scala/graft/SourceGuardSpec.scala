@@ -32,6 +32,10 @@ class SourceGuardSpec extends AnyFunSuite {
 
     // split, so that grepping the tree for the call finds only the builder
     assert(offenders("SparkSession" + ".builder") == Set(s"$main/Session.scala"))
+    // child sessions come from Session.fork, the one place artifact
+    // isolation is turned off (so forks share compiled code)
+    assert(offenders("newSession" + "()") == Set(s"$main/Session.scala"))
+    assert(offenders("artifact" + ".isolation") == Set(s"$main/Session.scala"))
 
     val checkout = root.toString + "/"
     assert(offenders(checkout, in = Map("probe.scala" -> s"""val d = "${checkout}fixtures"""")) ==

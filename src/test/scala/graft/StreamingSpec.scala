@@ -289,6 +289,29 @@ class StreamingSpec extends SparkSpec {
       s"queries left active: ${s.streams.active.map(_.id).mkString(", ")}")
   }
 
+  test("replayToSpool failure path: a throwing wave propagates and the spool dir " +
+      "is deleted (the novelty and ANN-serving replays' seam)") {
+    import java.nio.file.{Files, Path, Paths}
+    val s = StreamingReports.replaySession(spark)
+    val rows = s.range(3).toDF("id")
+    var spool: Path = null
+    val e = intercept[IllegalStateException] {
+      StreamingReports.replayToSpool(s, "graft-fail-spool",
+          Seq(StreamingReports.render("wave1", rows),
+            _ => throw new IllegalStateException("wave failed"))) { (landing, out) =>
+        spool = Paths.get(out)
+        s.readStream.schema(rows.schema).json(landing)
+          .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            b.write.mode("append").parquet(out)
+          }.start()
+      }
+    }
+    assert(e.getMessage == "wave failed")
+    assert(spool != null && !Files.exists(spool), s"spool dir left behind: $spool")
+    assert(s.streams.active.isEmpty,
+      s"queries left active: ${s.streams.active.map(_.id).mkString(", ")}")
+  }
+
   test("a failed start reaches the caller past the cleanup of a dir it never made") {
     // top10ReplayUpdate's shape: its store dir is first written by the
     // first non-empty batch, and its `finally` deletes it
@@ -312,6 +335,27 @@ class StreamingSpec extends SparkSpec {
     val batch = rows(SparkEntry.queries("q114_funnel")(spark, sf0001))
     assert(streamed == batch)
     assert(batch.size > 1, s"funnel reaches a single stage only: $batch")
+  }
+
+  test("a warm replay reuses its generated classes: the second funnelReplay compiles few") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def run(): Unit = StreamingReports.funnelReplay(spark, sf0001).collect()
+    run()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    // a session with a fresh artifact classloader misses the codegen
+    // cache on every class (about 34 per replay); what is left is the
+    // state (de)serializers, whose lambda variable ids change per batch
+    assert(compiled <= 8, s"the warm replay compiled $compiled classes")
+
+    // the fork keeps the session extensions: the engine's SQL names resolve
+    val fork = Session.fork(spark)
+    val (cos, toks) = fork.sql(
+      "SELECT cosine_sim(CAST(array(3, 4) AS ARRAY<FLOAT>), CAST(array(4, 3) AS ARRAY<FLOAT>)), " +
+        "unicode_tokens('Héllo, Wörld')").as[(Double, Seq[String])].head()
+    assert(math.abs(cos - 0.96) < 1e-9, s"cosine_sim: $cos")
+    assert(toks == Seq("héllo", "wörld"))
   }
 
   test("transitionsReplay (the q141 surface) == q128 transitions on non-null users at sf0.001") {
