@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.attribute.FileTime
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -312,10 +313,21 @@ object StreamingReports {
     val side = Files.createTempDirectory(s"graft-render-$name")
     try {
       rows.coalesce(1).write.mode("overwrite").format(format).save(side.toString)
-      val part = side.toFile.listFiles().filter(_.getName.startsWith("part-")).head.toPath
-      sentinel.foreach(s => Files.writeString(part, s + "\n", StandardOpenOption.APPEND))
-      Files.move(part, landing.resolve(s"$name.$format"))
+      movePart(side, landing.resolve(s"$name.$format"), sentinel)
     } finally deleteRecursively(side)
+  }
+
+  /** Moves the one part file a `coalesce(1)` write left in `dir` to
+    * `to`, `sentinel` appended first. A partitioned write leaves no dir
+    * for a value with no rows; that wave lands as a file holding only
+    * the sentinel, if any.
+    */
+  private def movePart(dir: Path, to: Path, sentinel: Option[String]): Unit = {
+    val part = Option(dir.toFile.listFiles()).toSeq.flatten
+      .find(_.getName.startsWith("part-")).map(_.toPath)
+      .getOrElse(Files.createFile(Files.createDirectories(dir).resolve("part-empty")))
+    sentinel.foreach(s => Files.writeString(part, s + "\n", StandardOpenOption.APPEND))
+    Files.move(part, to)
   }
 
   /** The ingest replays' two parquet waves: the `waveA` rows, then the rest. */
@@ -995,20 +1007,18 @@ object StreamingReports {
     * the streaming-vs-batch divergence this design exists to rule out.
     * State is the user's FUNNEL events only (the stage-code filter
     * runs before the stateful operator), and the timeout lands 1 h
-    * after the user's last buffered event.
+    * after the user's last buffered event. `events` is a stream of
+    * (event_id, user_id, ts_us, event_type) rows from any source.
     */
   def funnelStream(
-      spark: SparkSession, dir: String, stages: Seq[String],
+      events: DataFrame, stages: Seq[String],
       sampleRate: Double, sampleSalt: String): Dataset[UserStage] = {
+    val spark = events.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("ts_us", LongType), StructField("event_type", StringType)))
     val code = stages.zipWithIndex.foldLeft(lit(0)) {
       case (acc, (s, i)) => when(col("event_type") === s, lit(i + 1)).otherwise(acc)
     }
-    spark.readStream.schema(schema).json(dir)
+    events
       .withColumn("ets", timestamp_micros(col("ts_us")))
       .withWatermark("ets", "40 days")
       .filter(col("user_id").isNotNull && col("ts_us").isNotNull)
@@ -1077,14 +1087,15 @@ object StreamingReports {
   }
 
   /** Bounded replay of [[funnelStream]] over the parquet events table
-    * (q124's certified surface): events are rendered to a JSON landing
-    * dir in TWO interleaved waves (event-id parity — every user's
-    * stream is split across waves, maximal disorder), streamed through
-    * the state machine, with one far-future sentinel row riding the
-    * last wave (`replayWaves`): the no-data microbatch after it fires
-    * every user's event-time timeout. Returns (stage, n_users) with the
-    * sentinel user filtered out — hash-comparable against q114's batch
-    * oracle.
+    * (q124's certified surface): the events land as TWO interleaved
+    * waves (event-id parity — every user's stream is split across
+    * waves, maximal disorder) with one far-future sentinel row riding
+    * the last ([[parityWaves]]), and are streamed through the state
+    * machine one wave per microbatch ([[parityEvents]]): wave 1, wave 2
+    * plus the sentinel, then the no-data microbatch that fires every
+    * user's event-time timeout — 3 microbatches. Returns (stage,
+    * n_users) with the sentinel user filtered out — hash-comparable
+    * against q114's batch oracle.
     */
   def funnelReplay(outer: SparkSession, sfDir: String): DataFrame = {
     val spark = replaySession(outer)
@@ -1094,25 +1105,53 @@ object StreamingReports {
     // the event-time stats see it and the watermark never advances
     // (debugged exactly so; the session replay's sentinel survives its
     // filters the same way).
-    replayToMemory(spark, "graft-funnel-replay", parityWaves(spark, sfDir, -48))(landing =>
-      funnelStream(spark, landing, Seq("view", "click", "signup", "purchase"), 0.05, "funnel-v1")
-        .toDF())
+    replayToMemory(spark, "graft-funnel-replay", Seq(parityWaves(spark, sfDir, -48)))(landing =>
+      funnelStream(parityEvents(spark, landing),
+        Seq("view", "click", "signup", "purchase"), 0.05, "funnel-v1").toDF())
       .filter(col("user_id") >= 0)
       .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
   }
 
-  /** The events table as the funnel/transitions replays' two
-    * event-id-parity waves, with a far-future sentinel row of id
-    * `sentinelId` and user -1 riding the last wave.
+  /** The funnel/transitions replays' one lander: the events table as
+    * two event-id-parity waves, `wave1.json` and `wave2.json`, with a
+    * far-future sentinel row of id `sentinelId` and user -1 appended to
+    * wave 2. Both render in one write partitioned by parity and land
+    * before the query starts; wave 1's modification time is set a
+    * second before wave 2's, so [[parityEvents]] (one file per
+    * trigger, oldest first) reads wave 1 in batch 0 and wave 2 in
+    * batch 1, under the watermark wave 1 set. Landing wave 2 only after
+    * wave 1's `processAllAvailable` instead lets the watermark-only
+    * batch that wave 1 starts run in between: it fires nothing and
+    * costs a full trigger.
     */
-  private def parityWaves(spark: SparkSession, sfDir: String, sentinelId: Long): Seq[Lander] = {
-    val ev = graft.tables.Corpus.load(spark, sfDir, "events")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts")).as("ts_us"), col("event_type"))
-    Seq(render("wave1", ev.filter(col("event_id") % 2 === 0)),
-      render("wave2", ev.filter(col("event_id") % 2 =!= 0), sentinel = Some(
-        s"""{"event_id": $sentinelId, "user_id": -1, "ts_us": 1893456000000001, "event_type": "view"}""")))
-  }
+  private[graft] def parityWaves(spark: SparkSession, sfDir: String, sentinelId: Long): Lander =
+    landing => {
+      val side = Files.createTempDirectory("graft-render-parity")
+      try {
+        graft.tables.Corpus.load(spark, sfDir, "events")
+          .filter(col("event_id").isNotNull) // no parity: in neither wave
+          .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
+            col("event_type"), when(col("event_id") % 2 === 0, 1).otherwise(2).as("wave"))
+          .coalesce(1).write.mode("overwrite").partitionBy("wave").json(side.toString)
+        val wave1 = landing.resolve("wave1.json")
+        val wave2 = landing.resolve("wave2.json")
+        movePart(side.resolve("wave=1"), wave1, None)
+        movePart(side.resolve("wave=2"), wave2, Some(
+          s"""{"event_id": $sentinelId, "user_id": -1, "ts_us": 1893456000000001, "event_type": "view"}"""))
+        Files.setLastModifiedTime(wave1,
+          FileTime.fromMillis(Files.getLastModifiedTime(wave2).toMillis - 1000L))
+      } finally deleteRecursively(side)
+    }
+
+  /** The funnel/transitions replays' reader over a [[parityWaves]]
+    * landing dir: its four JSON fields, ONE file per trigger, so each
+    * wave is a microbatch of its own. The throttle belongs to the
+    * replay, not to the stream operators: a production source keeps
+    * its own options.
+    */
+  private[graft] def parityEvents(spark: SparkSession, landing: String): DataFrame =
+    spark.readStream.schema("event_id BIGINT, user_id BIGINT, ts_us BIGINT, event_type STRING")
+      .option("maxFilesPerTrigger", 1).json(landing)
 
   /** Streaming state-transition mining (q128's batch operator as a
     * stateful stream): per user, buffer (ts_us, event_id, type) until
@@ -1120,16 +1159,13 @@ object StreamingReports {
     * (ts_us, event_id) TOTAL order the batch lag() uses and emit every
     * consecutive (from → to) pair. Disorder-proof by construction —
     * replay waves can interleave arbitrarily because ordering happens
-    * at flush, not at arrival (the funnelStream discipline).
+    * at flush, not at arrival (the funnelStream discipline). `events`
+    * has funnelStream's four fields.
     */
-  def transitionsStream(
-      spark: SparkSession, dir: String): Dataset[TransPair] = {
+  def transitionsStream(events: DataFrame): Dataset[TransPair] = {
+    val spark = events.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("ts_us", LongType), StructField("event_type", StringType)))
-    spark.readStream.schema(schema).json(dir)
+    events
       .withColumn("ets", timestamp_micros(col("ts_us")))
       .withWatermark("ets", "40 days")
       .filter(col("user_id").isNotNull && col("ts_us").isNotNull)
@@ -1157,19 +1193,21 @@ object StreamingReports {
   }
 
   /** Bounded replay of [[transitionsStream]] (the funnelReplay
-    * machinery): two event-id-parity interleaved waves, one far-future
-    * sentinel row riding the last wave (`replayWaves`) so the no-data
-    * microbatch after it fires every timeout, sentinel user filtered
-    * out, pairs batch-aggregated to the (from, to, n) matrix — hash-
-    * comparable against q128's batch oracle restricted to non-null
-    * users.
+    * machinery): two event-id-parity interleaved waves landed before
+    * start with one far-future sentinel row riding the last
+    * ([[parityWaves]]), read one wave per microbatch
+    * ([[parityEvents]]), so the no-data microbatch after wave 2 fires
+    * every timeout — 3 microbatches. The sentinel user is filtered
+    * out and the pairs batch-aggregated to the (from, to, n) matrix —
+    * hash-comparable against q128's batch oracle restricted to
+    * non-null users.
     */
   def transitionsReplay(outer: SparkSession, sfDir: String): DataFrame = {
     val spark = replaySession(outer)
     // no row filters upstream of the watermark here, but the sentinel
     // still must be a fully-valid row (funnelReplay note)
-    replayToMemory(spark, "graft-trans-replay", parityWaves(spark, sfDir, -41))(landing =>
-      transitionsStream(spark, landing).toDF())
+    replayToMemory(spark, "graft-trans-replay", Seq(parityWaves(spark, sfDir, -41)))(landing =>
+      transitionsStream(parityEvents(spark, landing)).toDF())
       .filter(col("user_id") >= 0)
       .groupBy(col("from_state"), col("to_state"))
       .agg(count(lit(1)).as("n"))

@@ -36,6 +36,9 @@ class SourceGuardSpec extends AnyFunSuite {
     // isolation is turned off (so forks share compiled code)
     assert(offenders("newSession" + "()") == Set(s"$main/Session.scala"))
     assert(offenders("artifact" + ".isolation") == Set(s"$main/Session.scala"))
+    // one file per trigger is a bounded replay's cadence, set by its
+    // reader next to replayWaves; a stream operator takes its source as given
+    assert(offenders("maxFilesPer" + "Trigger") == Set(s"$main/streaming/StreamingReports.scala"))
 
     val checkout = root.toString + "/"
     assert(offenders(checkout, in = Map("probe.scala" -> s"""val d = "${checkout}fixtures"""")) ==
