@@ -15,8 +15,6 @@ object Session {
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      // corpus events.parquet uses INT64(TIMESTAMP(NANOS)); see Corpus.normalize
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // the widest flat aggregate here is 385 bigint fields (q41's LSH
       // signature matrix); the default maxFields=100 silently drops
       // whole-stage codegen for anything wider (measured 4× slower

@@ -1027,8 +1027,8 @@ object DedupQueries {
       // ONE batch-side minhash pass too (round-19 optimization; the
       // round-20 materialized builder shingles once for BOTH frames):
       // the index probe and the batch-internal pairs both derive from
-      // one checkpointed batch index (nearDupPairsFromIndex ==
-      // nearDupPairsMinhash is ExtSpec-certified)
+      // one checkpointed batch index (nearDupPairsMinhash is the same
+      // composition)
       val bIdx = Dedup.buildMinhashIndexMaterialized(batch, "doc_id", "text",
         shingleK = 3, numHashes = 128, bands = 32)
       // the batch side is the bounded fold input (the incremental-batch

@@ -2018,8 +2018,8 @@ object TextQueries {
         .localCheckpoint()
       val keepIds = Dedup.exactDedup(quality, "doc_id", md5(col("text")))
         .select(col("keep_id").as("doc_id"))
-      // the deduped corpus feeds FOUR consumers (minhash signatures ×2
-      // via base reuse, the cluster join-back, and the final pack), so
+      // the deduped corpus feeds THREE consumers (the minhash index
+      // build, the cluster join-back, and the final pack), so
       // persist it once instead of re-running the quality+dedup subtree
       // per consumer — localCheckpoint here, a reliable checkpoint on a
       // real cluster (the ConnectedComponents truncate() convention);

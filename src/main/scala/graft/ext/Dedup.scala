@@ -38,8 +38,18 @@ object Dedup {
     Seq.fill(numHashes)((next(P - 1) + 1, next(P)))
   }
 
-  /** (__id, __sh) shingle sets, pre-partitioned by doc id — see the
-    * repartition note in [[nearDupPairsMinhash]].
+  /** (__id, __sh) shingle sets, pre-partitioned by doc id.
+    *
+    * The repartition comes BEFORE the tokenize/shingle work: a small
+    * corpus arrives as one parquet split, which would run the whole
+    * CPU-heavy scan-side pipeline (regex tokenize, shingle, hash) on a
+    * single task. Hash-partitioning the raw (id, text) rows spreads that
+    * work across the cluster AND already satisfies a per-doc aggregate's
+    * clustering ([[bandedOfAgg]]), so the exchange that would otherwise
+    * sit after the (much wider) exploded feature stream is elided — the
+    * shuffle moves earlier and smaller. At 100 TB the scan is naturally
+    * multi-split, and pre-clustering by id is still the cheaper place to
+    * shuffle.
     */
   private[graft] def shingled(docs: DataFrame, idCol: String, textCol: String, shingleK: Int): DataFrame =
     TextAnalysis.withShingleSet(
@@ -91,7 +101,7 @@ object Dedup {
     * as the independent recipe PlansSpec certifies the expression path
     * against (and as the fallback if a deployment must avoid custom
     * expressions). explode_OUTER + isNotNull, not plain explode: see
-    * the no-CSE pushdown note in [[nearDupPairsMinhash]].
+    * the no-CSE pushdown note in [[bandedOf]].
     */
   private[graft] def bandedOfAgg(base: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes == bands * (numHashes / bands), "bands must divide numHashes")
@@ -180,7 +190,7 @@ object Dedup {
       maxShingleDf: Option[Int] = None,
       maxShingleDfPermille: Option[Int] = None): DataFrame = {
 
-    // repartition by doc id first: see the note in nearDupPairsMinhash
+    // repartition by doc id first: see the note in `shingled`
     val base = TextAnalysis.withShingleSet(
         docs.select(col(idCol).as("__id"), col(textCol).as("__text"))
           .repartition(col("__id")), "__text", shingleK, "__sh")
@@ -224,24 +234,6 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  /** Near-duplicate pairs by minhash-LSH with exact n-gram-Jaccard
-    * verification. Returns (doc_a, doc_b, jaccard) for verified pairs
-    * with Jaccard >= threshold, doc_a < doc_b.
-    *
-    * Signature shape: explode the shingle set, hash each shingle ONCE,
-    * then numHashes `min` aggregations grouped by doc (map-side partial
-    * combine, one shuffle keyed by doc id). The tempting per-row
-    * alternative — nested higher-order array expressions — is a trap:
-    * Catalyst's projection collapse inlines the shared base-hash
-    * subexpression into every one of the 128 array_min lambdas,
-    * recomputing xxhash64 |shingles|×128 times per row (measured 20×
-    * slower at sf0.1).
-    *
-    * With bands=32 × rowsPerBand=4 (128 hashes) the probability of
-    * missing a pair at similarity s is (1-s^4)^32 — ~1e-15 at s=0.9 —
-    * so at thresholds below the corpus's near-dup band the candidate
-    * set is effectively exhaustive while doing no all-pairs work.
-    */
   /** A minhash-LSH corpus index: `bands` (__id, band, bh) drives the
     * candidate join; `sets` (__id, __sh) drives exact-Jaccard
     * verification. Build once per corpus compaction, persist with
@@ -500,15 +492,6 @@ object Dedup {
       .select("new_id", "corpus_id", "jaccard")
   }
 
-  /** Benchmark decontamination: remove from TRAINING every doc that is
-    * a near-duplicate of an EVAL/benchmark doc — the step that keeps
-    * held-out benchmarks honest (a benchmark passage that survives in
-    * the training corpus inflates eval scores). Shape: index the
-    * training side once, probe with the (small) eval set, anti-join the
-    * hits out — the training corpus is scanned once for the index and
-    * once for the anti-join; the eval set drives all candidate work, so
-    * cost scales with |eval|·bands, not |training|².
-    */
   /** EXACT n-gram contamination flags — the verbatim-leak
     * decontamination rule as a certifiable operator: a training doc is
     * contaminated iff it shares ANY word n-gram with the eval/benchmark
@@ -577,6 +560,15 @@ object Dedup {
       .agg(count(lit(1)).as("n_shared_grams"))
   }
 
+  /** Benchmark decontamination: remove from TRAINING every doc that is
+    * a near-duplicate of an EVAL/benchmark doc — the step that keeps
+    * held-out benchmarks honest (a benchmark passage that survives in
+    * the training corpus inflates eval scores). Shape: index the
+    * training side once, probe with the (small) eval set, anti-join the
+    * hits out — the training corpus is scanned once for the index and
+    * once for the anti-join; the eval set drives all candidate work, so
+    * cost scales with |eval|·bands, not |training|².
+    */
   def decontaminate(
       training: DataFrame, evalDocs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 32,
@@ -599,43 +591,36 @@ object Dedup {
       newDocs, buildMinhashIndex(corpus, idCol, textCol, shingleK, numHashes, bands),
       idCol, textCol, threshold)
 
+  /** Near-duplicate pairs by minhash-LSH with exact n-gram-Jaccard
+    * verification. Returns (doc_a, doc_b, jaccard) for verified pairs
+    * with Jaccard >= threshold, doc_a < doc_b.
+    *
+    * This is [[nearDupPairsFromIndex]] over
+    * [[buildMinhashIndexMaterialized]]. The band self-join's two sides
+    * and the two verify joins all consume the scan-side pipeline; over
+    * lazy frames each would re-run tokenize, shingle and signature from
+    * its own scan of `docs`. Materialized, each document is tokenized,
+    * shingled and signed once.
+    *
+    * EAGER: the call runs the index's two checkpoint jobs before it
+    * returns. They are LOCAL checkpoints (executor block storage): the
+    * result's lineage starts at them, so a lost executor loses the index
+    * and the frame cannot be recomputed from `docs`. A durable
+    * checkpoint would survive that at the cost of a write; the choice
+    * belongs to one materialization seam, not to this operator.
+    *
+    * With bands=32 × rowsPerBand=4 (128 hashes) the probability of
+    * missing a pair at similarity s is (1-s^4)^32 — ~1e-15 at s=0.9 —
+    * so at thresholds below the corpus's near-dup band the candidate
+    * set is effectively exhaustive while doing no all-pairs work.
+    */
   def nearDupPairsMinhash(
       docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 32,
-      threshold: Double = 0.8): DataFrame = {
-    // repartition by doc id BEFORE the shingle/hash work (inside
-    // `shingled`): a small corpus arrives as one parquet split, which
-    // would run the whole CPU-heavy scan-side pipeline (regex tokenize,
-    // shingle, hash) on a single task. Hash-partitioning the raw
-    // (id, text) rows spreads that work across the cluster AND already
-    // satisfies the signature aggregate's clustering, so the exchange
-    // that would otherwise sit after the (much wider) exploded feature
-    // stream is elided — the shuffle moves earlier and smaller. At
-    // 100 TB the scan is naturally multi-split, and pre-clustering by
-    // id is still the cheaper place to shuffle.
-    val base = shingled(docs, idCol, textCol, shingleK)
-    val banded = bandedOf(base, numHashes, bands)
-
-    val cands = banded.as("x")
-      .join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.__id") < col("y.__id"))
-      .select(col("x.__id").as("doc_a"), col("y.__id").as("doc_b"))
-      .distinct()
-
-    val withSets = cands
-      .join(base.select(col("__id"), col("__sh").as("__sha")), col("doc_a") === col("__id"))
-      .drop("__id")
-      .join(base.select(col("__id"), col("__sh").as("__shb")), col("doc_b") === col("__id"))
-      .drop("__id")
-
-    withSets
-      .withColumn("__inter", size(array_intersect(col("__sha"), col("__shb"))))
-      .withColumn("__union", size(col("__sha")) + size(col("__shb")) - col("__inter"))
-      .withColumn("jaccard", col("__inter").cast("double") / col("__union").cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
-  }
+      threshold: Double = 0.8): DataFrame =
+    nearDupPairsFromIndex(
+      buildMinhashIndexMaterialized(docs, idCol, textCol, shingleK, numHashes, bands),
+      threshold)
 
   /** Candidate-recall probability of banded minhash at Jaccard s with
     * b bands of r rows: 1 − (1 − s^r)^b — the public LSH S-curve
@@ -668,11 +653,11 @@ object Dedup {
     options.maxBy(_._2) // hardest pruning that still meets the recall bar
   }
 
-  /** Corpus-INTERNAL near-dup pairs derived from an existing index —
-    * identical result to [[nearDupPairsMinhash]] over the indexed
-    * corpus, but without re-shingling/re-hashing it: the banded
-    * self-join runs on the stored bands/ and the exact-Jaccard verify
-    * on the stored sets/. The composition win: a pipeline that builds
+  /** Corpus-INTERNAL near-dup pairs derived from an existing index,
+    * without re-shingling/re-hashing the corpus: the banded self-join
+    * runs on the index's bands and the exact-Jaccard verify on its
+    * sets ([[nearDupPairsMinhash]] is this over a freshly built
+    * index). The composition win: a pipeline that builds
     * the index for batch probes (q89/q186/q189 shape) gets the
     * old-old pairs for ONE band self-join instead of a second full
     * scan-side pass — at 100 TB, the scan-side minhash IS the
@@ -800,7 +785,7 @@ object Dedup {
     // 17.6 s vs 0.7 s for the explode at sf0.1 (the expression-tree
     // duplication postmortem, BASELINE.md).
     // repartition by doc id BEFORE the tokenize/shingle/md5 work (the
-    // nearDupPairsMinhash rule — round-19: this operator was the one
+    // `shingled` rule — round-19: this operator was the one
     // member of the shingle family missing it, so on a single-split
     // corpus the whole n-gram scan ran on one task)
     val pos = docs

@@ -348,7 +348,7 @@ object SimSearch {
     val (b, t) =
       if (bits > 0 && tables > 0) (bits, tables) else lshParamsForTau(threshold)
     // repartition: a small single-split corpus would compute every
-    // signature on one task (same note as Dedup.nearDupPairsMinhash)
+    // signature on one task (same note as Dedup.shingled)
     val n = corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"))
       .repartition(col("__id"))
     val keyed = hyperplaneKeys(n, dim, b, t, seed)

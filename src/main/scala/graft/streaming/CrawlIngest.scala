@@ -90,8 +90,8 @@ object CrawlIngest {
       // q189 one-scan-side-pass rule inside the microbatch): the index
       // probe and the batch self-dedup both derive from the same
       // checkpointed batch index instead of re-hashing the batch per
-      // product (nearDupPairsFromIndex == nearDupPairsMinhash is
-      // ExtSpec-certified; the probe seam requires identical geometry)
+      // product (nearDupPairsMinhash is the same composition; the probe
+      // seam requires identical geometry)
       val bIdx = Dedup.buildMinhashIndexMaterialized(docs, "new_id", "text",
         idx.shingleK, idx.numHashes, idx.numBands)
       batchIdx = Some(bIdx)
@@ -244,7 +244,7 @@ object CrawlIngest {
     */
   def crawlIngestReplay(outer: SparkSession, sfDir: String): DataFrame = {
     val spark = StreamingReports.replaySession(outer)
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.tables.Corpus.load(spark, sfDir, "documents")
     val work = java.nio.file.Files.createTempDirectory("graft-crawl")
     val (store, index, chk) =
       (s"$work/store", s"$work/index", s"$work/chk")

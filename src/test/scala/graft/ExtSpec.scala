@@ -614,19 +614,46 @@ class ExtSpec extends SparkSpec {
     }
   }
 
-  test("nearDupPairsFromIndex == nearDupPairsMinhash over the indexed corpus") {
+  test("nearDupPairsFromIndex over lazy and broadcast indexes == inverted-index exact pairs") {
     import graft.ext.Dedup
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select("doc_id", "text")
-    val direct = Dedup.nearDupPairsMinhash(docs, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.8)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val viaIdx = Dedup.nearDupPairsFromIndex(
-        Dedup.buildMinhashIndex(docs, "doc_id", "text",
-          shingleK = 3, numHashes = 128, bands = 32), threshold = 0.8)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(viaIdx == direct)
-    assert(direct.nonEmpty, "corpus produced no pairs — test is vacuous")
+    // the independent recipe: exact n-gram Jaccard from shingle postings,
+    // no signatures or bands
+    val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.8)
+      .select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect().toSet
+    val idx = Dedup.buildMinhashIndex(docs, "doc_id", "text",
+      shingleK = 3, numHashes = 128, bands = 32)
+    for (bc <- Seq(false, true)) {
+      val viaIdx = Dedup.nearDupPairsFromIndex(idx, threshold = 0.8, broadcastIndex = bc)
+        .select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect().toSet
+      assert(viaIdx == exact, s"broadcastIndex=$bc")
+    }
+    assert(exact.nonEmpty, "corpus produced no pairs — test is vacuous")
+  }
+
+  test("nearDupPairsMinhash plan: no documents scan, tokenize or signature above its index") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import graft.plans.{MinhashSignature, UnicodeTokens}
+    // (parquet scans, tokenize calls, signature calls) in an optimized plan
+    def work(p: LogicalPlan): (Int, Int, Int) = {
+      val exprs = p.flatMap(_.expressions).flatMap(_.collect { case e => e })
+      (p.collectLeaves().count {
+        case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
+        case _ => false
+      }, exprs.count(_.isInstanceOf[UnicodeTokens]), exprs.count(_.isInstanceOf[MinhashSignature]))
+    }
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    val plan = Dedup.nearDupPairsMinhash(docs, "doc_id", "text", 3, 128, 32, 0.8)
+      .queryExecution.optimizedPlan
+    assert(work(plan) == ((0, 0, 0)), plan.treeString)
+    // the guard is not vacuous: over a lazy index every consumer of the
+    // shingle sets and band keys re-reads and re-tokenizes the documents
+    val lazyPlan = Dedup.nearDupPairsFromIndex(
+        Dedup.buildMinhashIndex(docs, "doc_id", "text", 3, 128, 32), 0.8)
+      .queryExecution.optimizedPlan
+    assert(work(lazyPlan) == ((4, 4, 2)), lazyPlan.treeString)
   }
 
   test("buildMinhashIndexMaterialized frames == lazy build; " +

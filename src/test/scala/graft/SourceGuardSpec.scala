@@ -50,6 +50,21 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offenders("registerFunction") == Set(s"$main/operators/BloomJoin.scala"))
   }
 
+  test("src/main: corpus tables are read only through Corpus.load (tables/, tools/ aside)") {
+    // split, so that grepping the tree for a by-path read finds no guard
+    val byPath = ("\\." + "parquet\\(s?\"[^\"]*/(" +
+      graft.tables.Corpus.tableNames.mkString("|") + ")\\.parquet\"").r
+    def readers(in: Map[String, String]): Set[String] =
+      in.collect { case (f, text) if byPath.findFirstIn(text).nonEmpty => f }.toSet
+    assert(readers(Map(
+      "read.scala" -> ("val d = spark.read" + ".parquet(s\"$dir/documents" + ".parquet\")"),
+      "fp.scala" -> ("IndexStore.fingerprint(s\"$dir/documents" + ".parquet\")"))) ==
+      Set("read.scala"))
+    val exempt = Seq(s"$main/tables/", s"$main/tools/")
+    val offending = readers(sources.filterNot { case (f, _) => exempt.exists(f.startsWith) })
+    assert(offending.isEmpty, s"by-path corpus reads outside Corpus.load: $offending")
+  }
+
   /** String literals in `text` that spell one of `names`. */
   private def nameLiterals(text: String, names: Set[String]): Int =
     "\"(q\\d+_\\w+)\"".r.findAllMatchIn(text).count(m => names(m.group(1)))

@@ -117,6 +117,25 @@ class SourcesSpec extends SparkSpec {
       .csv(s"$fix/countries.csv")) > 0)
   }
 
+  test("Corpus: declared schemas == the inferred file schemas at sf0.001, sf0.01 and sf0.1") {
+    // a declared field the file names or types differently reads as
+    // null or fails only when scanned; pin every table at every scale
+    val dirs = Seq("sf0.001", "sf0.01", "sf0.1").map(sf => s"/root/testdata/$sf")
+    for (dir <- dirs; (name, declared) <- graft.tables.Corpus.schemas)
+      assert(spark.read.parquet(s"$dir/$name.parquet").schema == declared, s"$dir/$name")
+    assert(graft.tables.Corpus.tableNames.size == 10)
+  }
+
+  test("Corpus: load runs no Spark job; timestamps surface as TIMESTAMP") {
+    import graft.tables.Corpus
+    assert(jobsStartedBy(Corpus.tableNames.foreach(Corpus.load(spark, sf0001, _))) == 0)
+    // the counter is not vacuous: an inferring parquet read runs a job
+    assert(jobsStartedBy(spark.read.parquet(s"$sf0001/events.parquet")) > 0)
+    val ts = Seq("events" -> "ts", "orders" -> "o_orderdate", "lineitem" -> "l_shipdate")
+      .map { case (n, c) => Corpus.load(spark, sf0001, n).schema(c).dataType }
+    assert(ts.forall(_ == org.apache.spark.sql.types.TimestampType), ts)
+  }
+
   test("S2/S4: declared-schema dims == the reference's inferring reads on the fixtures") {
     def rows(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
     val res = Sources.resources(spark, s"$fix/resources.json")
