@@ -455,7 +455,7 @@ object OperatorQueries {
         |       ELSE 'scan' END AS decision
         |FROM m""".stripMargin),
 
-    // ── store FSCK (IndexStore.fsck — the post-crash audit the
+    // ── store FSCK (VersionedStore.fsck — the post-crash audit the
     // manifest-protocol stores need): a version exists IFF its
     // manifest does, so a v-dir without a manifest is invisible
     // crash debris (safe to clean), a manifest without its v-dir is
@@ -478,7 +478,7 @@ object OperatorQueries {
         "{}".getBytes("UTF-8")) // dangling
       Files.createDirectories(base.resolve("store.staging-ab12"))
       Files.createDirectories(base.resolve("store.old-cd34"))
-      graft.operators.IndexStore.fsck(s, root.toString)
+      graft.operators.VersionedStore(root.toString).fsck(s)
     },
       // fsck mirror: the planted findings, closed-form (the healthy
       // committed version contributes nothing)
@@ -489,7 +489,7 @@ object OperatorQueries {
         |  ('stale_staging', 'store.staging-ab12', 'debris'))
         |  t(check_name, entry, severity)""".stripMargin),
 
-    // ── fsck REPAIR (IndexStore.fsckRepair — q344's audit acted on):
+    // ── fsck REPAIR (VersionedStore.fsckRepair — q344's audit acted on):
     // debris deletes (orphans are invisible to readers by protocol,
     // removal always safe), CORRUPT entries are REFUSED — deleting a
     // dangling manifest would rewrite committed history; that fix is
@@ -511,8 +511,8 @@ object OperatorQueries {
         "{}".getBytes("UTF-8"))
       Files.createDirectories(base.resolve("store.staging-ab12"))
       Files.createDirectories(base.resolve("store.old-cd34"))
-      val trail = graft.operators.IndexStore.fsckRepair(s, root.toString)
-      val after = graft.operators.IndexStore.fsck(s, root.toString)
+      val trail = graft.operators.VersionedStore(root.toString).fsckRepair(s)
+      val after = graft.operators.VersionedStore(root.toString).fsck(s)
         .select(concat(lit("re_check:"), col("check_name")).as("check_name"),
           col("entry"), col("severity"), lit("").as("action"))
       trail.unionByName(after)

@@ -405,29 +405,18 @@ object Dedup {
     * tombstoned rows and drop the tombstone set — the amortization
     * step once deletions accumulate enough that the load-time
     * anti-join (and the dead rows it filters) cost more than one
-    * rewrite. Staged like IndexStore commits: the compacted tree is
-    * built under `<path>.compact-<nonce>` and swapped in with two
-    * renames, so a crash leaves either the old tree (pre-swap) or the
-    * new one — never a half-rewritten index; the probe-visible result
-    * is identical before and after (ExtSpec pins it).
+    * rewrite. The compacted tree is installed by
+    * [[graft.operators.VersionedStore.swapTree]], so a crash leaves
+    * either the old tree or the new one — never a half-rewritten
+    * index; the probe-visible result is identical before and after
+    * (ExtSpec pins it).
     */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(path + "/tombstones"))) return
     val idx = readMinhashIndex(spark, path) // tombstones already anti-joined
-    val staging = path + ".compact-" + java.util.UUID.randomUUID().toString.take(8)
-    writeMinhashIndex(idx, staging) // params travel with the data
-    val old = new org.apache.hadoop.fs.Path(
-      path + ".old-" + java.util.UUID.randomUUID().toString.take(8))
-    if (!fs.rename(root, old))
-      throw new java.io.IOException(s"compact: could not retire $path")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staging), root)) {
-      fs.rename(old, root) // roll back to the intact old tree
-      throw new java.io.IOException(s"compact: could not install $staging")
-    }
-    fs.delete(old, true)
+    graft.operators.VersionedStore.swapTree(spark, path)(writeMinhashIndex(idx, _))
   }
 
   /** INCREMENTAL near-dup: pairs (new_id, corpus_id, jaccard) between a

@@ -812,44 +812,17 @@ object SimSearch {
       .filter(col("dist") <= maxDist)
   }
 
-  /** The staged two-rename index-tree swap shared by
-    * [[compactIvfIndex]] and [[rebalanceIvfIndex]] (the
-    * `Dedup.compactMinhashIndex` discipline): the replacement tree is
-    * fully written to a sibling staging path, then OLD→retired and
-    * STAGING→live are two renames — a crash leaves the old tree or
-    * the new one, never a half-rewrite, and a failed install rolls
-    * the old tree back.
-    */
-  private def swapIndexTree(
-      spark: org.apache.spark.sql.SparkSession, path: String)(
-      write: String => Unit): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val staging = path + ".swap-" + java.util.UUID.randomUUID().toString.take(8)
-    write(staging)
-    val old = new org.apache.hadoop.fs.Path(
-      path + ".old-" + java.util.UUID.randomUUID().toString.take(8))
-    if (!fs.rename(root, old))
-      throw new java.io.IOException(s"index swap: could not retire $path")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staging), root)) {
-      fs.rename(old, root) // roll back to the intact old tree
-      throw new java.io.IOException(s"index swap: could not install $staging")
-    }
-    fs.delete(old, true)
-  }
-
   /** Compact a tombstoned IVF index: rewrite anchors/lists WITHOUT the
     * tombstoned rows and drop the tombstone set — staged two-rename
-    * swap ([[swapIndexTree]]), probe-identical contract (ExtSpec pins
-    * it).
+    * swap ([[graft.operators.VersionedStore.swapTree]]), probe-identical
+    * contract (ExtSpec pins it).
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(path + "/tombstones"))) return
     val idx = readIvfIndex(spark, path) // tombstones already anti-joined
-    swapIndexTree(spark, path)(staging => writeIvfIndex(idx, staging))
+    graft.operators.VersionedStore.swapTree(spark, path)(writeIvfIndex(idx, _))
   }
 
   /** Cluster-size skew report over a persisted IVF index — the
@@ -879,8 +852,9 @@ object SimSearch {
     * bloat hot lists and erode the O(n²/nlist) semDedup bound and
     * per-probe latency): rebuild anchors + lists from the stored
     * vectors themselves (fresh seeded sample + Lloyd refinement) and
-    * install via the [[swapIndexTree]] two-rename. Tombstones are
-    * anti-joined on read, so a rebalance also compacts. PROBE
+    * install via the [[graft.operators.VersionedStore.swapTree]]
+    * two-rename. Tombstones are anti-joined on read, so a rebalance
+    * also compacts. PROBE
     * CONTRACT: an EXHAUSTIVE probe (nprobe = nlist) is bit-identical
     * before and after — reclustering moves vectors between lists,
     * never in or out of the index (ExtSpec pins it; q320 certifies
@@ -899,7 +873,7 @@ object SimSearch {
       .select(col("neighbor_id").as("id"), col("__cv2").as("vec"))
       .localCheckpoint()
     val rebuilt = buildIvfIndex(corpus, "id", "vec", idx.nlist, seed, lloydIters)
-    swapIndexTree(spark, path)(staging => writeIvfIndex(rebuilt, staging))
+    graft.operators.VersionedStore.swapTree(spark, path)(writeIvfIndex(rebuilt, _))
   }
 
   /** The rebalance POLICY: recluster only when [[ivfListSkew]]'s

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.File
 
+import graft.operators.VersionedStore.deleteRecursively
+
 /** Build-once lifecycle for persisted index artifacts (the minhash and
   * IVF indexes of ext/Dedup.scala and ext/SimSearch.scala).
   *
@@ -89,7 +91,7 @@ object IndexStore {
     val dest = new File(path)
     if (new File(dest, marker).exists()) return path
     if (dest.exists() && removeDamaged(dest, marker)) return path
-    val staging = new File(path + ".staging-" + java.util.UUID.randomUUID().toString.take(8))
+    val staging = new File(path + VersionedStore.Staging + VersionedStore.nonce)
     try {
       build(staging.getPath)
       require(new File(staging, marker).exists(),
@@ -98,10 +100,10 @@ object IndexStore {
         // lost a commit race (dest now exists) — keep the winner's tree
         require(new File(dest, marker).exists(),
           s"could not commit index to $path and no valid index is present")
-        deleteRecursively(staging)
+        deleteRecursively(staging.toPath)
       }
     } catch {
-      case t: Throwable => deleteRecursively(staging); throw t
+      case t: Throwable => deleteRecursively(staging.toPath); throw t
     }
     path
   }
@@ -114,8 +116,7 @@ object IndexStore {
     * without a real race.
     */
   private[graft] def removeDamaged(dest: File, marker: String): Boolean = {
-    val trash = new File(
-      dest.getPath + ".trash-" + java.util.UUID.randomUUID().toString.take(8))
+    val trash = new File(dest.getPath + VersionedStore.Trash + VersionedStore.nonce)
     if (!dest.renameTo(trash))
       // rename refused: dest vanished or was atomically replaced under
       // us — valid iff the replacement carries the marker
@@ -124,101 +125,11 @@ object IndexStore {
       // captured a concurrently committed valid tree — put it back; if
       // yet another commit already took dest, keep that winner instead
       if (trash.renameTo(dest)) return true
-      if (new File(dest, marker).exists()) { deleteRecursively(trash); return true }
+      if (new File(dest, marker).exists()) { deleteRecursively(trash.toPath); return true }
       throw new IllegalStateException(
         s"valid index tree for $dest stranded at $trash during damaged-artifact removal")
     }
-    deleteRecursively(trash)
+    deleteRecursively(trash.toPath)
     false
-  }
-
-  /** Structural audit (fsck) of a MANIFEST-PROTOCOL store tree — the
-    * operations check the CDC / semantic-dedup ingest stores need
-    * after a crash: the protocol says a version exists IFF its
-    * `_manifest/v<id>.json` does, staging/swap/old siblings are
-    * transient, and nothing else should accumulate. Findings:
-    *
-    *   - `dangling_manifest` (CORRUPT): a manifest whose `v<id>/`
-    *     data directory is missing — reads resolve a version that
-    *     has no data; must be repaired before serving.
-    *   - `orphan_version` (debris): a `v<id>/` directory with no
-    *     manifest — a crash between data write and manifest rename;
-    *     invisible to readers by design, safe to delete.
-    *   - `stale_staging` (debris): leftover `<root>.staging-*` /
-    *     `.swap-*` / `.old-*` / `.trash-*` SIBLINGS of the store
-    *     root (the atomic-commit machinery's transient dirs — a
-    *     crash strands them next to, never inside, the tree).
-    *
-    * Metadata-only: one listing of the root, the `_manifest` dir and
-    * the parent — bounded by version count, never data-sized (the
-    * semDedupStoreState discipline). Returns
-    * (check_name, entry, severity) sorted, entries RELATIVE to the
-    * store root / parent so results are location-independent.
-    */
-  def fsck(spark: org.apache.spark.sql.SparkSession, root: String)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val rootF = new File(root)
-    def names(f: File): Seq[String] =
-      Option(f.listFiles()).map(_.toSeq.map(_.getName)).getOrElse(Seq.empty)
-    val top = names(rootF)
-    val versionDirs = top.filter(_.matches("v\\d+"))
-      .filter(n => new File(rootF, n).isDirectory).toSet
-    val manifests = names(new File(rootF, "_manifest"))
-      .filter(_.matches("v\\d+\\.json"))
-      .map(_.stripSuffix(".json")).toSet
-    // a store root with NO parent (filesystem root, or a bare
-    // relative name) has no sibling namespace to scan — skip the
-    // stale-staging check instead of NPEing on getParentFile
-    // (round-17 review fix)
-    val siblings = Option(rootF.getParentFile).map(names).getOrElse(Seq.empty)
-      .filter(_.startsWith(rootF.getName + "."))
-      .filter(_.matches(".*\\.(staging|swap|old|trash)-.*"))
-    val findings =
-      (manifests -- versionDirs).toSeq
-        .map(v => ("dangling_manifest", v, "corrupt")) ++
-      (versionDirs -- manifests).toSeq
-        .map(v => ("orphan_version", v, "debris")) ++
-      siblings.map(n => ("stale_staging", n, "debris"))
-    findings.sorted.toDF("check_name", "entry", "severity")
-  }
-
-  /** Repair pass over [[fsck]]'s findings: DEBRIS-class entries
-    * (orphan versions, stale staging/swap/old/trash siblings) are
-    * deleted — they are invisible to readers by protocol, so removal
-    * is always safe; CORRUPT-class entries (dangling manifests) are
-    * REFUSED — deleting a manifest rewrites committed history, and
-    * the right fix (restore the data dir, or roll the store back) is
-    * an operator decision, not an automatic one. Returns the same
-    * findings table with an `action` column (`deleted` / `kept`),
-    * so the audit trail is the output.
-    */
-  def fsckRepair(spark: org.apache.spark.sql.SparkSession, root: String)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val rootF = new File(root)
-    val findings = fsck(spark, root)
-      .as[(String, String, String)].collect().toSeq
-    val acted = findings.map { case (check, entry, severity) =>
-      val target = check match {
-        case "orphan_version" => new File(rootF, entry)
-        case "stale_staging"  => new File(rootF.getParentFile, entry)
-        case _                => null
-      }
-      val action =
-        if (severity == "debris" && target != null) {
-          deleteRecursively(target); "deleted"
-        } else "kept"
-      (check, entry, severity, action)
-    }
-    acted.sorted.toDF("check_name", "entry", "severity", "action")
-      .select(col("check_name"), col("entry"), col("severity"),
-        col("action"))
-  }
-
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
   }
 }

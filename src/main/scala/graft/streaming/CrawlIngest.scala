@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ext.Dedup
+import graft.operators.VersionedStore
+import graft.operators.VersionedStore.deleteRecursively
 
 /** Streaming crawl ingestion — the production shape that composes the
   * engine's quarantine, near-dup index, and exactly-once disciplines
@@ -16,8 +18,8 @@ import graft.ext.Dedup
   * re-crawled/mirrored content is flagged instead of re-ingested,
   * (3) self-deduped within the batch, and (4) the surviving novel
   * documents are appended to the index, so batch N+1 dedupes against
-  * batch N's intake. Decisions commit exactly-once via the same
-  * manifest discipline as the CDC store.
+  * batch N's intake. Decisions commit exactly-once as
+  * [[graft.operators.VersionedStore]] versions, like the CDC store.
   *
   * Scale shape (the reason each arc looks the way it does):
   *  - triage is a per-line projection inside the scan (Quarantine
@@ -36,12 +38,11 @@ import graft.ext.Dedup
   * c are suppressed: each has a smaller similar neighbor). Precedence:
   * an index match wins (`dup_index`) over batch suppression.
   *
-  * Exactly-once: the per-batch decision set commits via
-  * staged-write + atomic rename + manifest (a batch's decisions exist
-  * IFF `_manifest/v<id>.json` exists — StreamingReports.applyCdcBatch's
-  * discipline, same helpers). The index append runs after that
-  * commit. On the crash-replay path (decisions committed by an earlier
-  * invocation) it is made idempotent by an anti-join against the
+  * Exactly-once: the per-batch decision set is one VersionedStore
+  * version. The index append runs between its [[VersionedStore.stage]]
+  * and its [[VersionedStore.publish]], so the manifest still commits
+  * last. On the crash-replay path (decisions staged by an earlier
+  * invocation) the append is made idempotent by an anti-join against the
   * index's current ids, so a replayed batch whose append already
   * landed appends nothing. The fresh path skips that anti-join (no
   * append for the batch can exist yet), so nothing guards ACROSS
@@ -70,10 +71,8 @@ object CrawlIngest {
       lines: DataFrame, storeRoot: String, indexPath: String, batchId: Long,
       threshold: Double = 0.8): Unit = {
     val spark = lines.sparkSession
-    if (StreamingReports.manifestFile(storeRoot, batchId).exists()) return
-    val dest = new java.io.File(f"$storeRoot/v$batchId%09d")
-    val destWhole = new java.io.File(dest, "_SUCCESS").exists()
-    if (dest.exists() && !destWhole) StreamingReports.deleteRecursively(dest.toPath)
+    val store = VersionedStore(storeRoot)
+    if (store.isCommitted(batchId)) return
 
     // deterministic re-parse (needed on the replay path too, to find
     // the novel docs for the idempotent index append)
@@ -83,8 +82,8 @@ object CrawlIngest {
       .select("j.*")
     val docs = parsed.filter(col(CorruptCol).isNull).select(col("new_id"), col("text"))
 
-    var batchIdx: Option[Dedup.MinhashIndex] = None
-    if (!destWhole) {
+    var batchIdx: Dedup.MinhashIndex = null
+    val fresh = store.stage(batchId) { dir =>
       val idx = Dedup.readMinhashIndex(spark, indexPath)
       // ONE batch shingle/minhash pass (round-19 optimization — the
       // q189 one-scan-side-pass rule inside the microbatch): the index
@@ -94,7 +93,7 @@ object CrawlIngest {
       // seam requires identical geometry)
       val bIdx = Dedup.buildMinhashIndexMaterialized(docs, "new_id", "text",
         idx.shingleK, idx.numHashes, idx.numBands)
-      batchIdx = Some(bIdx)
+      batchIdx = bIdx
       // batch-derived frames are microbatch-bounded: broadcast the
       // probe/self-dedup sides so the corpus index and the decision
       // joins never exchange (round-20, guide §3.1)
@@ -123,34 +122,28 @@ object CrawlIngest {
           lit("quarantined").as("status"),
           lit(null).cast("long").as("n_idx_matches"),
           md5(col(CorruptCol)).as("line_fp"))
-      val staging = new java.io.File(
-        s"$storeRoot/.staging-v$batchId-${java.util.UUID.randomUUID().toString.take(8)}")
       decided.unionByName(quarantined)
         .withColumn("batch_id", lit(batchId))
         .repartition(1)
-        .write.mode("errorifexists").parquet(staging.getPath)
-      if (!staging.renameTo(dest)) {
-        StreamingReports.deleteRecursively(staging.toPath)
-        sys.error(s"could not commit crawl decisions $dest")
-      }
+        .write.mode("errorifexists").parquet(dir)
     }
 
     // idempotent append: only ingested docs not already present (a
     // completed append that crashed before the manifest re-appends
     // nothing on replay)
-    val ingestedIds = spark.read.parquet(dest.getPath)
+    val ingestedIds = spark.read.parquet(store.staged(batchId))
       .filter(col("status") === "ingested").select("new_id")
     val novel0 = docs
       .join(broadcast(ingestedIds), Seq("new_id"), "left_semi")
     // the already-present guard matters ONLY on the crash-replay path
-    // (decisions committed by a PREVIOUS invocation — destWhole — whose
+    // (decisions staged by a PREVIOUS invocation — !fresh — whose
     // append may also have landed before the manifest). On the fresh
-    // path THIS invocation just committed the decisions, and the append
-    // runs strictly after that commit, so no append for this batch can
+    // path THIS invocation just staged the decisions, and the append
+    // runs strictly after that stage, so no append for this batch can
     // exist yet — skip the per-wave distinct over the full index id set
     // (round-20, guide §2.4 remove shuffles outright).
     val novel =
-      if (batchIdx.isDefined) novel0
+      if (fresh) novel0
       else {
         val present = spark.read.parquet(indexPath + "/sets")
           .select(col("id").as("new_id")).distinct()
@@ -158,24 +151,24 @@ object CrawlIngest {
       }
     // fresh-batch path: append straight from the checkpointed batch
     // index (no third shingle pass); crash-replay path (decisions
-    // committed, batchIdx never built): re-shingle just the novel docs
+    // staged, batchIdx never built): re-shingle just the novel docs
     // — MATERIALIZED first (round-20 ADVICE fix): novel's lineage there
     // reads indexPath/sets, the very directory the append writes into;
     // checkpointing severs that read so the append jobs carry no live
     // read of the directory being appended
-    if (!novel.isEmpty) batchIdx match {
-      case Some(b) => Dedup.appendFromIndex(b, novel.select("new_id"), indexPath)
-      case None => Dedup.appendToMinhashIndex(
+    if (!novel.isEmpty) {
+      if (fresh) Dedup.appendFromIndex(batchIdx, novel.select("new_id"), indexPath)
+      else Dedup.appendToMinhashIndex(
         novel.localCheckpoint(), indexPath, "new_id", "text")
     }
-    StreamingReports.commitManifest(storeRoot, batchId, dest.getPath)
+    store.publish(batchId)
   }
 
   /** Union of all committed batches' decision rows. */
-  private[graft] def readDecisions(spark: SparkSession, storeRoot: String): DataFrame =
-    StreamingReports.committedCdcVersions(storeRoot)
-      .map(id => spark.read.parquet(f"$storeRoot/v$id%09d"))
-      .reduce(_ unionByName _)
+  private[graft] def readDecisions(spark: SparkSession, storeRoot: String): DataFrame = {
+    val store = VersionedStore(storeRoot)
+    store.committed.map(v => spark.read.parquet(store.path(v))).reduce(_ unionByName _)
+  }
 
   // ── deterministic 3-wave landing fixture, derived from `documents` ──
   //
@@ -261,8 +254,8 @@ object CrawlIngest {
         .start())
     finally {
       // decisions are read lazily from store/; everything else is done
-      StreamingReports.deleteRecursively(java.nio.file.Paths.get(chk))
-      StreamingReports.deleteRecursively(java.nio.file.Paths.get(index))
+      deleteRecursively(java.nio.file.Paths.get(chk))
+      deleteRecursively(java.nio.file.Paths.get(index))
     }
     readDecisions(spark, store)
       .select("batch_id", "new_id", "status", "n_idx_matches", "line_fp")

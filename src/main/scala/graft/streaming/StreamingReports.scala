@@ -9,6 +9,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQ
 
 import graft.jobs.Top10Job
 import graft.model.{Event, Schemas}
+import graft.operators.VersionedStore
+import graft.operators.VersionedStore.deleteRecursively
 
 /** Closed user session emitted by `StreamingReports.sessionStream`. */
 case class UserSession(userId: String, startUs: Long, endUs: Long, nEvents: Long)
@@ -255,17 +257,6 @@ object StreamingReports {
     try s.iterator().asScala
       .filter(Files.isRegularFile(_))
       .toSeq.sortBy(_.getFileName.toString)
-    finally s.close()
-  }
-
-  /** A no-op on a missing dir, so a `finally` that cleans up after a
-    * failed start never replaces that failure with its own.
-    */
-  private[graft] def deleteRecursively(dir: Path): Unit = if (Files.exists(dir)) {
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(dir)
-    try s.iterator().asScala.toSeq.reverse
-      .foreach(p => Files.deleteIfExists(p))
     finally s.close()
   }
 
@@ -587,25 +578,12 @@ object StreamingReports {
     * q99 oracle checks, and the replay delivers waves REVERSED to make
     * the guard load-bearing).
     *
-    * Store layout: write-audit-publish versions (store/v<batchId>);
-    * each batch reads the previous version and writes a new one —
-    * never an in-place overwrite of a directory being read. At scale
-    * the store would be key-partitioned so a batch rewrites only
-    * partitions containing its keys (Merge scaladoc); checkpointed
-    * offsets make the foreachBatch idempotent-by-version on restart.
-    *
-    * EXACTLY-ONCE COMMIT is manifest-based (round-7 audit item #6): a
-    * version exists IFF `_manifest/v<id>.json` exists, and committing
-    * is ONE atomic rename of a manifest temp file. Readers resolve the
-    * snapshot from the manifest directory alone — a bounded METADATA
-    * listing (one small file per version), never a listing of data
-    * directories, which is the operation an object store can serve
-    * inconsistently mid-write (the Delta/Iceberg transaction-log
-    * discipline scaled down). Every crash window replays idempotently:
-    * mid-data-write (partial dir, no Spark _SUCCESS) → rebuilt;
-    * data renamed but manifest missing → manifest re-committed WITHOUT
-    * rewriting the data; manifest committed → batch redelivery is a
-    * no-op.
+    * Store layout: one [[graft.operators.VersionedStore]] version per
+    * batch, committed exactly once; each batch reads the latest
+    * committed version and writes a new one — never an in-place
+    * overwrite of a directory being read. At scale the store would be
+    * key-partitioned so a batch rewrites only partitions containing
+    * its keys (Merge scaladoc).
     */
   def cdcUpsertStream(
       spark: SparkSession, eventsDir: String, storeRoot: String): StreamingQuery =
@@ -624,24 +602,14 @@ object StreamingReports {
   private[graft] def applyCdcBatch(
       batch: DataFrame, storeRoot: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val dest = new java.io.File(f"$storeRoot/v$batchId%09d")
-    // restart idempotency: committed means MANIFESTED — the checkpoint
-    // can re-deliver a batch whose version already committed; skip
-    if (manifestFile(storeRoot, batchId).exists()) return
-    // crash window: data fully renamed into place (it carries Spark's
-    // _SUCCESS) but the process died before the manifest commit — the
-    // data is whole and was computed from the same prior snapshot this
-    // redelivery sees, so re-commit the manifest WITHOUT rewriting.
-    // Anything else at dest is a partial tree and is replaced.
-    val destWhole = new java.io.File(dest, "_SUCCESS").exists()
-    if (dest.exists() && !destWhole) deleteRecursively(dest.toPath)
-    if (!destWhole) {
+    val store = VersionedStore(storeRoot)
+    store.commit(batchId) { dir =>
       val compacted = graft.operators.Merge.compactLog(
         batch.withColumn("op", lit("U")), "resourceId", "seq", col("eventId"))
-      val merged = latestCdcVersion(storeRoot) match {
+      val merged = store.latest match {
         case None => compacted.drop("op")
-        case Some(dir) =>
-          val snap = spark.read.parquet(dir)
+        case Some(v) =>
+          val snap = spark.read.parquet(store.path(v))
           val guarded = compacted
             .join(snap.select(col("resourceId"),
                 struct(col("seq"), col("eventId")).as("__cur")),
@@ -651,57 +619,9 @@ object StreamingReports {
             .drop("__cur")
           graft.operators.Merge.merge(snap, guarded, "resourceId", "op")
       }
-      // staged write + atomic rename (the IndexStore discipline):
-      // readers never observe a half-written data directory
-      val staging = new java.io.File(
-        s"$storeRoot/.staging-v$batchId-${java.util.UUID.randomUUID().toString.take(8)}")
-      merged.write.mode("errorifexists").parquet(staging.getPath)
-      if (!staging.renameTo(dest)) {
-        deleteRecursively(staging.toPath)
-        sys.error(s"could not commit CDC store version $dest")
-      }
+      merged.write.mode("errorifexists").parquet(dir)
     }
-    commitManifest(storeRoot, batchId, dest.getPath)
   }
-
-  private[streaming] def manifestFile(storeRoot: String, batchId: Long): java.io.File =
-    new java.io.File(f"$storeRoot/_manifest/v$batchId%09d.json")
-
-  /** Publish a version: write the manifest to a temp name, then one
-    * atomic rename. A lost rename race (or a replayed commit) is
-    * idempotent — the content for a given version is identical.
-    */
-  private[streaming] def commitManifest(
-      storeRoot: String, batchId: Long, dataDir: String): Unit = {
-    val mf = manifestFile(storeRoot, batchId)
-    mf.getParentFile.mkdirs()
-    val tmp = new java.io.File(mf.getParentFile,
-      s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    java.nio.file.Files.write(tmp.toPath,
-      s"""{"version":$batchId,"data":"${new java.io.File(dataDir).getName}"}"""
-        .getBytes("UTF-8"))
-    if (!tmp.renameTo(mf) && !mf.exists()) {
-      tmp.delete()
-      sys.error(s"could not commit CDC manifest $mf")
-    }
-    tmp.delete(): Unit // no-op if the rename consumed it
-  }
-
-  /** Latest COMMITTED version, resolved from the manifest directory
-    * alone — a bounded metadata listing (one small file per version).
-    * Data directories are never listed: a whole-looking but
-    * unmanifested tree (crash before manifest commit) must not be
-    * served as the snapshot, and object-store listings of in-progress
-    * data directories are exactly the non-atomic operation the
-    * manifest protocol exists to avoid. Orphan `.tmp-*` files from
-    * crashed manifest writes are ignored by the name filter.
-    */
-  private def latestCdcVersion(storeRoot: String): Option[String] =
-    Option(new java.io.File(storeRoot, "_manifest").listFiles())
-      .map(_.filter(f => f.isFile && f.getName.matches("v\\d{9}\\.json"))
-        .map(_.getName).sorted)
-      .flatMap(_.lastOption)
-      .map(n => new java.io.File(storeRoot, n.stripSuffix(".json")).getPath)
 
   /** Replay the landing dir through [[cdcUpsertStream]] in two waves —
     * REVERSED, so the second wave is older than the first and the
@@ -714,8 +634,9 @@ object StreamingReports {
     val storeRoot = Files.createTempDirectory("graft-cdc-store").toString
     replayWaves("graft-cdc-replay", splitFiles(listFixtureFiles(srcDir).reverse))(landing =>
       cdcUpsertStream(spark, landing, storeRoot))
-    val latest = latestCdcVersion(storeRoot).getOrElse(
-      sys.error(s"no CDC store version written under $storeRoot"))
+    val store = VersionedStore(storeRoot)
+    val latest = store.path(store.latest.getOrElse(
+      sys.error(s"no CDC store version written under $storeRoot")))
     // vacuum: keep only the latest version (the returned frame reads it
     // lazily); superseded versions and the checkpoint would otherwise
     // leak one full snapshot copy per batch per replay into tmp
@@ -723,32 +644,6 @@ object StreamingReports {
       if (f.getPath != latest) deleteRecursively(f.toPath)
     })
     spark.read.parquet(latest)
-  }
-
-  /** All COMMITTED versions of a CDC store, ascending — resolved from
-    * the manifest directory alone (same bounded metadata listing as
-    * [[latestCdcVersion]]; data directories are never listed).
-    */
-  def committedCdcVersions(storeRoot: String): Seq[Long] =
-    Option(new java.io.File(storeRoot, "_manifest").listFiles())
-      .map(_.filter(f => f.isFile && f.getName.matches("v\\d{9}\\.json"))
-        .map(_.getName.stripPrefix("v").stripSuffix(".json").toLong)
-        .sorted.toSeq)
-      .getOrElse(Nil)
-
-  /** TIME TRAVEL: read the store AS OF a committed version. The
-    * version is served IFF its manifest exists — a whole-looking but
-    * unmanifested data tree is not a version (the exactly-once
-    * invariant read-side). Superseded versions stay readable until a
-    * retention vacuum removes them, which is what makes audits,
-    * reproducible re-training ("the corpus as the run saw it"), and
-    * version diffs possible at all.
-    */
-  def readCdcVersion(spark: SparkSession, storeRoot: String, version: Long): DataFrame = {
-    if (!manifestFile(storeRoot, version).exists())
-      sys.error(s"CDC store $storeRoot has no committed version $version " +
-        s"(committed: ${committedCdcVersions(storeRoot).mkString(",")})")
-    spark.read.parquet(f"$storeRoot/v$version%09d")
   }
 
   /** Streaming dead-letter triage — the batch q182 surface as a
@@ -983,10 +878,11 @@ object StreamingReports {
     replayWaves("graft-cdc-tt",
         splitFiles(listFixtureFiles(srcDir).reverse, firstOf = 6))(landing =>
       cdcUpsertStream(spark, landing, storeRoot))
-    val versions = committedCdcVersions(storeRoot)
+    val store = VersionedStore(storeRoot)
+    val versions = store.committed
     require(versions.size >= 2, s"expected >=2 CDC versions, got $versions")
-    val v0 = readCdcVersion(spark, storeRoot, versions.head).localCheckpoint()
-    val vN = readCdcVersion(spark, storeRoot, versions.last).localCheckpoint()
+    val v0 = spark.read.parquet(store.path(versions.head)).localCheckpoint()
+    val vN = spark.read.parquet(store.path(versions.last)).localCheckpoint()
     // checkpointed above so the frames survive the store vacuum below
     Option(new java.io.File(storeRoot).listFiles())
       .foreach(_.foreach(f => deleteRecursively(f.toPath)))
@@ -1391,13 +1287,12 @@ object StreamingReports {
     SimSearch.driftFromStates(refState, candState, flagQUnits)
   }
 
-  /** EXACTLY-ONCE perceptual-dedup ingest (the q319 batchId-manifest
-    * discipline on the hamming arc — [[hammingDedupIngestReplay]]
+  /** EXACTLY-ONCE perceptual-dedup ingest ([[hammingDedupIngestReplay]]
     * without this guard would double BOTH the within-wave pairs and
-    * the store rows on a crash redelivery): each wave publishes its
-    * hashes under `v<batchId>/` with the `_manifest/v<batchId>.json`
-    * rename LAST, the effective corpus is the union of COMMITTED
-    * versions, and a redelivered batchId no-ops before any fold.
+    * the store rows on a crash redelivery): each wave commits its
+    * hashes as one [[graft.operators.VersionedStore]] version, the
+    * effective corpus is the union of COMMITTED versions, and a
+    * redelivered batchId no-ops before any fold.
     * After the stream drains, the harness RE-DELIVERS wave A
     * verbatim under its ORIGINAL batchId — the guard must make it
     * invisible and the pair set still equals q326's one-shot oracle
@@ -1413,35 +1308,22 @@ object StreamingReports {
     import graft.ext.SimSearch
     val spark = replaySession(outer)
     val h = reroot(spark, hashes)
-    val store = Files.createTempDirectory("graft-hhx-store")
-    Files.createDirectories(store.resolve("_manifest"))
+    val storeDir = Files.createTempDirectory("graft-hhx-store")
+    val store = VersionedStore(storeDir.toString)
     var pairs = SimSearch.hammingBandedPairs(h.limit(0), idCol, hashCol,
       maxDist).localCheckpoint()
-    def committedDirs(): Seq[String] =
-      Option(store.resolve("_manifest").toFile.listFiles())
-        .map(_.toSeq.map(_.getName).filter(_.matches("v\\d{9}\\.json"))
-          .map(_.stripSuffix(".json")).sorted
-          .map(v => store.resolve(v).toString))
-        .getOrElse(Seq.empty)
     def applyBatch(b: DataFrame, batchId: Long): Unit = {
-      val mf = store.resolve("_manifest").resolve(f"v$batchId%09d.json")
-      if (java.nio.file.Files.exists(mf)) return // redelivery no-op
+      if (store.isCommitted(batchId)) return // redelivery no-op
       if (b.isEmpty) return
       val bb = b.localCheckpoint()
-      val dirs = committedDirs()
+      val dirs = store.committed.map(store.path)
       val corpus = if (dirs.isEmpty) h.limit(0)
         else spark.read.parquet(dirs: _*).localCheckpoint()
       val p = SimSearch.hammingBandedPairs(bb, idCol, hashCol, maxDist)
         .unionByName(SimSearch.hammingBandedPairsAgainst(
           bb, corpus, idCol, hashCol, maxDist))
       pairs = pairs.unionByName(p).localCheckpoint()
-      // publish data FIRST, manifest rename LAST (the commit point)
-      bb.write.mode("overwrite")
-        .parquet(store.resolve(f"v$batchId%09d").toString)
-      val tmpMf = store.resolve("_manifest").resolve(
-        f".v$batchId%09d.json.tmp")
-      java.nio.file.Files.write(tmpMf, "{}".getBytes("UTF-8"))
-      java.nio.file.Files.move(tmpMf, mf): Unit
+      store.commit(batchId)(dir => bb.write.parquet(dir))
     }
     try {
       replayWaves("graft-hhx-waves", parquetWaves(h, waveA))(landing =>
@@ -1451,75 +1333,61 @@ object StreamingReports {
       // original batchId (guarded) or a fresh one (negative probe)
       applyBatch(h.filter(waveA), if (redeliverGuarded) 0L else 999L)
       pairs
-    } finally deleteRecursively(store)
+    } finally deleteRecursively(storeDir)
   }
 
   // ── EXACTLY-ONCE semantic-dedup ingest (round-15 forward item #3:
   // the replay-idempotency caveat on [[semDedupIngestReplay]],
-  // closed by composing the q99/CDC manifest discipline onto the
-  // semantic arc) ──
+  // closed by committing each wave as a VersionedStore version) ──
 
   /** Resolve the versioned ingest store: `root/index` holds the
     * frozen quantizer (anchors + the OLD corpus's inverted lists),
     * `root/init-assign` the pre-stream assignment, and each committed
-    * wave `root/v<batchId>` carries BOTH the folded assignment
-    * (`assign/`) and the wave's coarse-assigned list delta (`delta/`)
-    * — a version exists IFF its `_manifest/v<id>.json` does (the
-    * [[applyCdcBatch]] protocol verbatim), so the effective inverted
-    * lists are base ∪ committed deltas and the current assignment is
-    * the LATEST committed version's. Bounded metadata listing only —
-    * data directories are never listed.
+    * [[graft.operators.VersionedStore]] version carries BOTH the
+    * folded assignment (`assign/`) and the wave's coarse-assigned list
+    * delta (`delta/`), so the effective inverted lists are base ∪
+    * committed deltas and the current assignment is the LATEST
+    * committed version's.
     */
   private[graft] def semDedupStoreState(
       spark: SparkSession, storeRoot: String)
       : (graft.ext.SimSearch.IvfIndex, DataFrame) = {
     import graft.ext.SimSearch
+    val store = VersionedStore(storeRoot)
     val base = SimSearch.readIvfIndex(spark, s"$storeRoot/index")
-    val committed = Option(new java.io.File(storeRoot, "_manifest").listFiles())
-      .map(_.filter(f => f.isFile && f.getName.matches("v\\d{9}\\.json"))
-        .map(_.getName.stripSuffix(".json")).sorted.toSeq)
-      .getOrElse(Seq.empty)
-    val deltas = committed.map(v =>
-      spark.read.parquet(s"$storeRoot/$v/delta")
+    val versions = store.committed.map(store.path)
+    val deltas = versions.map(v =>
+      spark.read.parquet(s"$v/delta")
         .select(col("id").as("neighbor_id"), col("vec").as("__cv2"),
           col("cid").as("__cid")))
     val lists = deltas.foldLeft(base.lists)(_ unionByName _)
-    val assign = committed.lastOption
-      .map(v => spark.read.parquet(s"$storeRoot/$v/assign"))
+    val assign = versions.lastOption
+      .map(v => spark.read.parquet(s"$v/assign"))
       .getOrElse(spark.read.parquet(s"$storeRoot/init-assign"))
     (base.copy(lists = lists), assign)
   }
 
   /** One IDEMPOTENT semantic-dedup ingest fold — the batchId-keyed
-    * exactly-once commit the [[semDedupIngestReplay]] caveat named:
-    * a manifested batchId is a NO-OP (checkpoint redelivery), a
-    * whole-but-unmanifested version re-commits its manifest without
-    * rewriting (crash between rename and manifest), anything partial
-    * is rebuilt from the same prior snapshot. The fold
-    * ([[graft.ext.Dedup.semDedupIncremental]] against the frozen
+    * exactly-once commit the [[semDedupIngestReplay]] caveat named,
+    * one [[graft.operators.VersionedStore.commit]] per batchId. The
+    * fold ([[graft.ext.Dedup.semDedupIncremental]] against the frozen
     * quantizer + committed deltas) and the wave's index delta
     * ([[graft.ext.SimSearch.assignToAnchors]] — the rows, never a
-    * mode-append side effect) publish under ONE atomic manifest
-    * rename, so there is no crash window in which one mutation
-    * committed and the other did not.
+    * mode-append side effect) are written into the SAME version, so
+    * there is no crash window in which one mutation committed and the
+    * other did not.
     *
     * 100-TB shape: per wave, O(batch · nlist) assignment + pairs
     * against touched clusters only, one bounded parquet version
     * write; the store grows one delta per wave until
-    * [[graft.ext.SimSearch.compactIvfIndex]]-style maintenance folds
-    * it down.
+    * [[compactSemDedupStore]] folds it down.
     */
   private[graft] def applySemDedupIngestBatch(
       batch: DataFrame, storeRoot: String, batchId: Long,
       tau: Double): Unit = {
     import graft.ext.{Dedup, SimSearch}
     val spark = batch.sparkSession
-    if (manifestFile(storeRoot, batchId).exists()) return
-    val dest = new java.io.File(f"$storeRoot/v$batchId%09d")
-    val destWhole = new java.io.File(dest, "assign/_SUCCESS").exists() &&
-      new java.io.File(dest, "delta/_SUCCESS").exists()
-    if (dest.exists() && !destWhole) deleteRecursively(dest.toPath)
-    if (!destWhole) {
+    VersionedStore(storeRoot).commit(batchId) { dir =>
       val (idx, prev) = semDedupStoreState(spark, storeRoot)
       // ONE coarse-assignment pass (round-20, the q189 one-pass rule):
       // the fold and the wave's persisted list delta need the identical
@@ -1529,31 +1397,20 @@ object StreamingReports {
         batch, idx.anchors, "vec_id", "embedding").localCheckpoint()
       val next = Dedup.semDedupIncrementalAssigned(
         idx, prev, delta, "vec_id", tau)
-      val staging = new java.io.File(
-        s"$storeRoot/.staging-v$batchId-" +
-          java.util.UUID.randomUUID().toString.take(8))
-      next.write.mode("errorifexists")
-        .parquet(new java.io.File(staging, "assign").getPath)
-      delta.write.mode("errorifexists")
-        .parquet(new java.io.File(staging, "delta").getPath)
-      if (!staging.renameTo(dest)) {
-        deleteRecursively(staging.toPath)
-        sys.error(s"could not commit semantic-dedup ingest version $dest")
-      }
+      next.write.mode("errorifexists").parquet(s"$dir/assign")
+      delta.write.mode("errorifexists").parquet(s"$dir/delta")
     }
-    commitManifest(storeRoot, batchId, dest.getPath)
   }
 
   /** Compact the versioned semantic-dedup ingest store: fold every
     * COMMITTED wave delta into the base index tree, promote the
-    * latest assignment to `init-assign`, and drop the version dirs +
-    * manifests — the store returns to its freshly-initialized shape
-    * with identical effective state ([[semDedupStoreState]] before ==
-    * after; the spec pins it), so the per-fold delta-union cost stops
-    * growing with wave count. Same staged two-rename swap as the
-    * index compactions: the replacement store is fully written to a
-    * sibling staging root, then OLD→retired / STAGING→live — a crash
-    * leaves the old store or the new one, never a half-move.
+    * latest assignment to `init-assign`, and drop the versions — the
+    * store returns to its freshly-initialized shape with identical
+    * effective state ([[semDedupStoreState]] before == after; the spec
+    * pins it), so the per-fold delta-union cost stops growing with
+    * wave count. The replacement store is installed by
+    * [[graft.operators.VersionedStore.swapTree]], like the index
+    * compactions.
     * RETENTION RULE (the Delta/Iceberg VACUUM discipline, scaled
     * down): compaction drops the batchId manifests, so it must run
     * only after the source checkpoint has passed the compacted
@@ -1567,21 +1424,10 @@ object StreamingReports {
     val (idx, assign) = semDedupStoreState(spark, storeRoot)
     val lists = idx.lists.localCheckpoint()
     val frozen = assign.localCheckpoint()
-    val staging = new java.io.File(
-      s"$storeRoot.compact-${java.util.UUID.randomUUID().toString.take(8)}")
-    SimSearch.writeIvfIndex(
-      idx.copy(lists = lists), s"$staging/index")
-    frozen.write.mode("errorifexists").parquet(s"$staging/init-assign")
-    val root = new java.io.File(storeRoot)
-    val old = new java.io.File(
-      s"$storeRoot.old-${java.util.UUID.randomUUID().toString.take(8)}")
-    if (!root.renameTo(old))
-      sys.error(s"store compact: could not retire $storeRoot")
-    if (!staging.renameTo(root)) {
-      old.renameTo(root) // roll back to the intact old store
-      sys.error(s"store compact: could not install $staging")
+    VersionedStore.swapTree(spark, storeRoot) { staging =>
+      SimSearch.writeIvfIndex(idx.copy(lists = lists), s"$staging/index")
+      frozen.write.mode("errorifexists").parquet(s"$staging/init-assign")
     }
-    deleteRecursively(old.toPath)
   }
 
   /** [[semDedupIngestReplay]] with the EXACTLY-ONCE fold (q319): the

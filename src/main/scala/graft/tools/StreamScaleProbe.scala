@@ -2,6 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Path, Paths}
 
+import graft.operators.VersionedStore.deleteRecursively
 import graft.sources.Sources
 import graft.streaming.StreamingReports
 
@@ -69,13 +70,6 @@ object StreamScaleProbe {
       }
       Files.writeString(dir.resolve(f"events-$f%03d.json"), sb.toString)
     }
-  }
-
-  private def deleteRecursively(dir: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(dir)
-    try s.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-    finally s.close()
   }
 
   def main(args: Array[String]): Unit = {

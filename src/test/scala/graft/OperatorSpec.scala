@@ -166,7 +166,7 @@ class OperatorSpec extends SparkSpec {
   test("fsck: healthy manifest store is clean; each planted state " +
       "classifies; findings are root-relative") {
     import java.nio.file.Files
-    import graft.operators.IndexStore
+    import graft.operators.VersionedStore
     val base = Files.createTempDirectory("fsck_spec")
     val root = base.resolve("st")
     Files.createDirectories(root.resolve("index"))
@@ -175,14 +175,14 @@ class OperatorSpec extends SparkSpec {
     Files.createDirectories(root.resolve("v000000007"))
     Files.write(root.resolve("_manifest").resolve("v000000007.json"),
       "{}".getBytes("UTF-8"))
-    assert(IndexStore.fsck(spark, root.toString).count() == 0)
+    assert(VersionedStore(root.toString).fsck(spark).count() == 0)
     // plant one of each
     Files.createDirectories(root.resolve("v000000009"))
     Files.write(root.resolve("_manifest").resolve("v000000011.json"),
       "{}".getBytes("UTF-8"))
     Files.createDirectories(base.resolve("st.swap-xx"))
     Files.createDirectories(base.resolve("st.trash-yy"))
-    val got = IndexStore.fsck(spark, root.toString)
+    val got = VersionedStore(root.toString).fsck(spark)
       .as[(String, String, String)].collect().toSet
     assert(got == Set(
       ("dangling_manifest", "v000000011", "corrupt"),
@@ -191,16 +191,16 @@ class OperatorSpec extends SparkSpec {
       ("stale_staging", "st.trash-yy", "debris")))
     // an unrelated sibling (no store prefix) is NOT flagged
     Files.createDirectories(base.resolve("other.swap-zz"))
-    assert(IndexStore.fsck(spark, root.toString).count() == 4)
+    assert(VersionedStore(root.toString).fsck(spark).count() == 4)
     // a root with NO parent (bare relative name) must not NPE on the
     // sibling scan — the stale-staging check is skipped (round-17 fix)
-    assert(IndexStore.fsck(spark, "graft_fsck_no_such_store").count() == 0)
+    assert(VersionedStore("graft_fsck_no_such_store").fsck(spark).count() == 0)
   }
 
   test("fsckRepair: debris deleted with an audit trail, corruption " +
       "refused, repair is idempotent") {
     import java.nio.file.Files
-    import graft.operators.IndexStore
+    import graft.operators.VersionedStore
     val base = Files.createTempDirectory("fsckr_spec")
     val root = base.resolve("st")
     Files.createDirectories(root.resolve("_manifest"))
@@ -208,7 +208,7 @@ class OperatorSpec extends SparkSpec {
     Files.write(root.resolve("_manifest").resolve("v000000011.json"),
       "{}".getBytes("UTF-8"))                                    // dangling
     Files.createDirectories(base.resolve("st.swap-xx"))          // stale
-    val trail = IndexStore.fsckRepair(spark, root.toString)
+    val trail = VersionedStore(root.toString).fsckRepair(spark)
       .as[(String, String, String, String)].collect().toSet
     assert(trail == Set(
       ("dangling_manifest", "v000000011", "corrupt", "kept"),
@@ -219,9 +219,35 @@ class OperatorSpec extends SparkSpec {
     assert(!Files.exists(base.resolve("st.swap-xx")))
     assert(Files.exists(root.resolve("_manifest").resolve("v000000011.json")))
     // idempotent: a second repair finds only the refused corruption
-    val again = IndexStore.fsckRepair(spark, root.toString)
+    val again = VersionedStore(root.toString).fsckRepair(spark)
       .as[(String, String, String, String)].collect().toSet
     assert(again == Set(
       ("dangling_manifest", "v000000011", "corrupt", "kept")))
+  }
+
+  test("fsck: a killed stage's in-root staging dir and a killed compaction's " +
+      "sibling are stale_staging debris, and fsckRepair deletes them") {
+    import java.nio.file.Files
+    import graft.operators.VersionedStore
+    val base = Files.createTempDirectory("fsck_staging_spec")
+    val root = base.resolve("st")
+    val store = VersionedStore(root.toString)
+    store.commit(1L)(dir => Files.createDirectories(root.resolve(dir)): Unit)
+    assert(store.committed == Seq(1L) && store.fsck(spark).count() == 0)
+    // a writer killed inside stage(2): its staging dir sits in the root
+    Files.createDirectories(root.resolve(".staging-v2-0badf00d").resolve("part-0"))
+    // a compaction killed before its swap: the replacement is a sibling
+    Files.createDirectories(base.resolve("st.compact-5ca1ab1e").resolve("index"))
+    val got = store.fsck(spark).as[(String, String, String)].collect().toSet
+    assert(got == Set(
+      ("stale_staging", ".staging-v2-0badf00d", "debris"),
+      ("stale_staging", "st.compact-5ca1ab1e", "debris")))
+    val trail = store.fsckRepair(spark)
+      .as[(String, String, String, String)].collect().toSet
+    assert(trail == got.map { case (c, e, sev) => (c, e, sev, "deleted") })
+    assert(!Files.exists(root.resolve(".staging-v2-0badf00d")))
+    assert(!Files.exists(base.resolve("st.compact-5ca1ab1e")))
+    // the committed version is untouched
+    assert(store.fsck(spark).count() == 0 && Files.isDirectory(root.resolve("v000000001")))
   }
 }

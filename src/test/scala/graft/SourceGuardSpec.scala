@@ -65,6 +65,29 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offending.isEmpty, s"by-path corpus reads outside Corpus.load: $offending")
   }
 
+  test("src/main: the versioned-store layout is spelled only in VersionedStore") {
+    // split, so that grepping the tree for the layout finds only the store
+    val layout = Seq("_mani" + "fest", "%0" + "9d", "\\\\{1,2}d" + "\\{9\\}",
+      "v\\(?" + "\\\\{1,2}d").map(_.r)
+    assert(layout.map(_.findFirstIn("\"v\\\\d{9}\\\\.json\"")).count(_.nonEmpty) == 2)
+    // q344/q347 plant damaged stores by hand on purpose
+    val fixtures = Seq("q344_store_fsck", "q347_store_fsck_repair")
+    val store = s"$main/operators/VersionedStore.scala"
+    val scanned = sources.map {
+      case (f, text) if f == s"$main/catalog/OperatorQueries.scala" =>
+        f -> text.split("QuerySpec\\(")
+          .filterNot(spec => fixtures.exists(n => spec.startsWith("\"" + n + "\"")))
+          .mkString
+      case other => other
+    }
+    for (needle <- layout) {
+      val spelled = scanned.collect {
+        case (f, text) if needle.findFirstIn(text).nonEmpty => f
+      }.toSet
+      assert(spelled == Set(store), s"$needle spelled outside the store")
+    }
+  }
+
   /** String literals in `text` that spell one of `names`. */
   private def nameLiterals(text: String, names: Set[String]): Int =
     "\"(q\\d+_\\w+)\"".r.findAllMatchIn(text).count(m => names(m.group(1)))

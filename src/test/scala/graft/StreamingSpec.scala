@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.model.Event
+import graft.operators.VersionedStore
 import graft.sources.Sources
 import graft.streaming.StreamingReports
 
@@ -320,7 +321,7 @@ class StreamingSpec extends SparkSpec {
       try StreamingReports.replayWaves("graft-fail-start",
           Seq(StreamingReports.render("wave1", spark.range(3).toDF("id"))))(_ =>
         throw new IllegalStateException("start failed"))
-      finally StreamingReports.deleteRecursively(store)
+      finally VersionedStore.deleteRecursively(store)
     }
     assert(e.getMessage == "start failed")
   }
@@ -491,25 +492,25 @@ class StreamingSpec extends SparkSpec {
       batch(Seq(("r1", 100L, "e1", "u1", 1L), ("r2", 50L, "e2", "u2", 2L))), store, 0L)
     StreamingReports.applyCdcBatch(
       batch(Seq(("r1", 200L, "e5", "u1", 9L), ("r3", 70L, "e6", "u3", 3L))), store, 1L)
-    assert(StreamingReports.committedCdcVersions(store) == Seq(0L, 1L))
+    assert(VersionedStore(store).committed == Seq(0L, 1L))
 
     // as-of v0: the superseded snapshot, exactly as batch 0 left it
-    val v0 = StreamingReports.readCdcVersion(spark, store, 0L)
+    val v0 = spark.read.parquet(VersionedStore(store).path(0L))
       .as[(String, Long, String, String, Long)].collect().toSet
     assert(v0 == Set(("r1", 100L, "e1", "u1", 1L), ("r2", 50L, "e2", "u2", 2L)))
 
     // a version is its MANIFEST: a whole-looking tree without one (or a
     // never-written version) must not be served
     intercept[RuntimeException] {
-      StreamingReports.readCdcVersion(spark, store, 7L)
+      spark.read.parquet(VersionedStore(store).path(7L))
     }
 
     // diff v0 → v1 through the fingerprint machinery: r1 changed
     // (accepted newer seq), r2 unchanged (upsert keeps absent keys),
     // r3 added; `removed` is unreachable for pure upserts
     val d = graft.operators.Diff.diff(
-        StreamingReports.readCdcVersion(spark, store, 0L),
-        StreamingReports.readCdcVersion(spark, store, 1L),
+        spark.read.parquet(VersionedStore(store).path(0L)),
+        spark.read.parquet(VersionedStore(store).path(1L)),
         "resourceId", Seq("seq", "eventId", "userId", "duration"))
       .select("resourceId", "status").as[(String, String)].collect().toSet
     assert(d == Set(("r1", "changed"), ("r2", "unchanged"), ("r3", "added")))
