@@ -733,10 +733,8 @@ object DedupQueries {
       val fp = graft.operators.IndexStore.fingerprint(s"$dir/documents.parquet")
       val idxPath = graft.operators.IndexStore.ensure(
         s"${System.getProperty("java.io.tmpdir")}/graft_mh_idx_${fp}_k3h128b32") { staging =>
-        Dedup.writeMinhashIndex(
-          Dedup.buildMinhashIndex(docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
-            shingleK = 3, numHashes = 128, bands = 32),
-          staging)
+        Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 5 =!= 0), staging,
+          "doc_id", "text", shingleK = 3, numHashes = 128, bands = 32)
       }
       Dedup.nearDupPairsMinhashAgainstIndex(
         docs.filter(col("doc_id") % 5 === 0), Dedup.readMinhashIndex(s, idxPath),
@@ -763,10 +761,8 @@ object DedupQueries {
       val idxPath = graft.operators.IndexStore.ensure(
         s"${System.getProperty("java.io.tmpdir")}/graft_mh_idxap_${fp}_k3h128b32") { staging =>
         Dedup.writeMinhashIndex(
-          Dedup.buildMinhashIndex(
-            docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 4),
-            "doc_id", "text", shingleK = 3, numHashes = 128, bands = 32),
-          staging)
+          docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 4), staging,
+          "doc_id", "text", shingleK = 3, numHashes = 128, bands = 32)
         Dedup.appendToMinhashIndex(
           docs.filter(col("doc_id") % 5 === 4), staging, "doc_id", "text")
       }
@@ -1010,30 +1006,26 @@ object DedupQueries {
       val batchIds = d.filter(col("status").isin("added", "changed"))
         .select("doc_id").localCheckpoint()
       // batchIds is the bounded refresh delta — broadcast the splits
-      // (round-20, §3.1)
       val old = v2.join(broadcast(batchIds), Seq("doc_id"), "left_anti")
       val batch = v2.join(broadcast(batchIds), Seq("doc_id"), "left_semi")
       // ONE scan-side minhash pass over the old corpus: the index is
       // checkpointed and BOTH products (old-old pairs, batch probe)
       // derive from it — at 100 TB the shingle/hash scan dominates, so
-      // not running it twice is the composition win (the round-20
-      // materialized builder shingles once for BOTH frames)
+      // not running it twice is the composition win
       val idx = Dedup.buildMinhashIndexMaterialized(old, "doc_id", "text",
         shingleK = 3, numHashes = 128, bands = 32)
       val oldAssign = graft.ext.ConnectedComponents.dedupClusters(
           old, "doc_id", Dedup.nearDupPairsFromIndex(idx, threshold = 0.8),
           "doc_a", "doc_b")
         .localCheckpoint()
-      // ONE batch-side minhash pass too (round-19 optimization; the
-      // round-20 materialized builder shingles once for BOTH frames):
-      // the index probe and the batch-internal pairs both derive from
-      // one checkpointed batch index (nearDupPairsMinhash is the same
-      // composition)
+      // ONE batch-side minhash pass too: the index probe and the
+      // batch-internal pairs both derive from one checkpointed batch
+      // index (nearDupPairsMinhash is the same composition)
       val bIdx = Dedup.buildMinhashIndexMaterialized(batch, "doc_id", "text",
         shingleK = 3, numHashes = 128, bands = 32)
       // the batch side is the bounded fold input (the incremental-batch
       // contract) — broadcast it so neither probe exchanges the corpus
-      // index (round-20, guide §3.1)
+      // index
       val cross = Dedup.nearDupPairsBetweenIndexes(bIdx, idx, threshold = 0.8,
           broadcastBatch = true)
         .localCheckpoint()
@@ -1122,8 +1114,7 @@ object DedupQueries {
       val old = docs.filter(col("doc_id") % 5 =!= 0)
       val batch = docs.filter(col("doc_id") % 5 === 0)
       // one scan-side minhash pass: old-old pairs AND the batch probe
-      // both derive from the checkpointed index (the q189 discipline;
-      // the round-20 materialized builder shingles once for BOTH frames)
+      // both derive from the checkpointed index (the q189 discipline)
       val idx = Dedup.buildMinhashIndexMaterialized(old, "doc_id", "text",
         shingleK = 3, numHashes = 128, bands = 32)
       val oldAssign = graft.ext.ConnectedComponents
@@ -1133,8 +1124,8 @@ object DedupQueries {
       // ONE batch-side minhash pass (the q189 rule)
       val bIdx = Dedup.buildMinhashIndexMaterialized(batch, "doc_id", "text",
         shingleK = 3, numHashes = 128, bands = 32)
-      // bounded-batch probes broadcast the batch side (round-20, §3.1 —
-      // the q189 note above)
+      // bounded-batch probes broadcast the batch side (the q189 note
+      // above)
       val cross = Dedup.nearDupPairsBetweenIndexes(bIdx, idx, threshold = 0.8,
           broadcastBatch = true)
         .localCheckpoint()
@@ -1161,11 +1152,8 @@ object DedupQueries {
       val fp = graft.operators.IndexStore.fingerprint(s"$dir/documents.parquet")
       val idxPath = graft.operators.IndexStore.ensure(
         s"${System.getProperty("java.io.tmpdir")}/graft_mh_idxdel_${fp}_k3h128b32d1") { staging =>
-        Dedup.writeMinhashIndex(
-          Dedup.buildMinhashIndex(
-            docs.filter(col("doc_id") % 5 =!= 0),
-            "doc_id", "text", shingleK = 3, numHashes = 128, bands = 32),
-          staging)
+        Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 5 =!= 0), staging,
+          "doc_id", "text", shingleK = 3, numHashes = 128, bands = 32)
         Dedup.deleteFromMinhashIndex(
           docs.filter(col("doc_id") % 10 === 9).select("doc_id"),
           staging, "doc_id")

@@ -190,17 +190,12 @@ object Dedup {
       maxShingleDf: Option[Int] = None,
       maxShingleDfPermille: Option[Int] = None): DataFrame = {
 
-    // repartition by doc id first: see the note in `shingled`
-    val base = TextAnalysis.withShingleSet(
-        docs.select(col(idCol).as("__id"), col(textCol).as("__text"))
-          .repartition(col("__id")), "__text", shingleK, "__sh")
-      .select(col("__id"), col("__sh"))
-    // NOT checkpointed (round-19 measured): the posting self-join's two
-    // sides and the df aggregate shuffle on the same __f key, so
-    // ReuseExchange already covers the expensive branches — an eager
-    // materialization of the exploded postings bought nothing locally
-    // (3.65 → 3.73 s) and would cost a full write of the exploded
-    // stream at scale.
+    val base = shingled(docs, idCol, textCol, shingleK)
+    // NOT checkpointed: the posting self-join's two sides and the df
+    // aggregate shuffle on the same __f key, so ReuseExchange already
+    // covers the expensive branches — an eager materialization of the
+    // exploded postings bought nothing locally (3.65 → 3.73 s at sf0.1)
+    // and would cost a full write of the exploded stream at scale.
     val feat = base
       .select(col("__id"), explode_outer(col("__sh")).as("__f"))
       .filter(col("__f").isNotNull)
@@ -240,31 +235,29 @@ object Dedup {
     * [[writeMinhashIndex]], probe every batch with
     * [[nearDupPairsMinhashAgainstIndex]] — the batch path never touches
     * the corpus text again (at 100 TB, re-shingling the corpus per
-    * daily batch is the scale-killer this exists to avoid).
+    * daily batch is the scale-killer this exists to avoid). An
+    * in-memory index comes from [[buildMinhashIndexMaterialized]] or
+    * [[readMinhashIndex]].
     */
   final case class MinhashIndex(
       bands: DataFrame, sets: DataFrame,
       shingleK: Int, numHashes: Int, numBands: Int)
 
-  /** Compute the index frames for a corpus (one corpus scan). */
-  def buildMinhashIndex(
-      corpus: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 3, numHashes: Int = 128, bands: Int = 32): MinhashIndex = {
-    val base = shingled(corpus, idCol, textCol, shingleK)
-    MinhashIndex(bandedOf(base, numHashes, bands), base, shingleK, numHashes, bands)
-  }
-
-  /** [[buildMinhashIndex]] with BOTH frames materialized from ONE
-    * scan-side pass (round-20 optimization, guide §1.2 step 1): the
-    * shingle sets are checkpointed first and the band keys derive from
-    * the CHECKPOINTED sets, so tokenize+shingle runs once and the
-    * minhash signatures once. The previous idiom — checkpointing
-    * `idx.bands` and `idx.sets` independently — re-ran the whole
-    * CPU-heavy scan-side pipeline per frame (shingling twice, once of
-    * those through the signature expression). This is the microbatch/
-    * bounded-batch shape (probe + self-dedup + append all want both
-    * frames pinned); corpus-scale builds go through
-    * [[writeMinhashIndex]], which persists instead of caching.
+  /** Build the index frames for a corpus from ONE scan-side pass.
+    *
+    * EAGER: the call runs two local checkpoint jobs before it returns,
+    * the shingle sets first, then the band keys derived from the
+    * CHECKPOINTED sets. Every product of the index (band join, verify
+    * joins, append) reads the materialized frames, so each document is
+    * tokenized, shingled and signed once; over lazy frames each
+    * consumer would re-run that pipeline from its own scan of `corpus`.
+    * The checkpoints are LOCAL (executor block storage): a frame
+    * derived from the index starts its lineage at them, so a lost
+    * executor loses the index and the frame cannot be recomputed from
+    * `corpus`. A durable checkpoint would survive that at the cost of a
+    * write; the choice belongs to one materialization seam, not to the
+    * operators. Corpus-scale builds persist through
+    * [[writeMinhashIndex]] instead of caching.
     */
   def buildMinhashIndexMaterialized(
       corpus: DataFrame, idCol: String, textCol: String,
@@ -274,89 +267,101 @@ object Dedup {
       shingleK, numHashes, bands)
   }
 
-  /** Persist an index as three parquet tables under `path`:
-    * bands/ (id, band, bh), sets/ (id, shingles), params/ (1 row).
-    * On a real cluster you'd bucket bands/ by (band, bh) at write time
-    * so every batch probe co-locates without a corpus-side shuffle;
-    * plain parquet keeps the sandbox path simple while the read side's
-    * join shape is identical.
+  /** Shingle `corpus` and persist its index as three parquet tables
+    * under `path`: sets/ (id, shingles), bands/ (id, band, bh), params/
+    * (1 row). Nothing is cached: sets/ is written first and bands/ is
+    * derived from the WRITTEN sets — one pruned parquet re-read, at
+    * 100 TB strictly cheaper than tokenizing the corpus a second time;
+    * the array<string> round-trip is lossless, so the band hashes are
+    * bit-identical to an in-memory build's. On a real cluster you'd
+    * bucket bands/ by (band, bh) at write time so every batch probe
+    * co-locates without a corpus-side shuffle; plain parquet keeps the
+    * sandbox path simple while the read side's join shape is identical.
     *
     * Invariant, kept by every writer (this one, [[appendToMinhashIndex]],
-    * [[appendFromIndex]]): bands/ == bandedOf(sets/) at the stored
-    * geometry, as row multisets — each sets/ row contributes exactly its
-    * own band rows. An id appended twice (CrawlIngest's re-sent
-    * `new_id`) has two rows in sets/ and two band-row groups in bands/.
+    * [[appendFromIndex]], [[compactMinhashIndex]]): bands/ ==
+    * bandedOf(sets/) at the stored geometry, as row multisets — each
+    * sets/ row contributes exactly its own band rows. The public writers
+    * take documents, never a bands frame; [[appendFromIndex]] takes an
+    * index whose frames only this object builds (SourceGuardSpec). An
+    * id appended twice (CrawlIngest's re-sent `new_id`) has two rows in
+    * sets/ and two band-row groups in bands/.
     */
-  def writeMinhashIndex(idx: MinhashIndex, path: String): Unit = {
-    val spark = idx.bands.sparkSession
-    // sets FIRST, then bands DERIVED FROM THE WRITTEN SETS (round-20
-    // optimization, guide §1.2 step 1): writing the two frames from
-    // their lazy plans ran the scan-side tokenize+shingle pipeline
-    // twice (once more through the signature expression). Re-reading
-    // the just-written shingle arrays costs one pruned parquet scan —
-    // at 100 TB strictly cheaper than re-tokenizing the corpus — and
-    // the parquet round-trip of array<string> is lossless, so the band
-    // hashes are bit-identical. Callers that already hold materialized
-    // frames ([[buildMinhashIndexMaterialized]]) skip the re-read.
-    idx.sets.select(col("__id").as("id"), col("__sh").as("shingles"))
+  def writeMinhashIndex(
+      corpus: DataFrame, path: String, idCol: String, textCol: String,
+      shingleK: Int = 3, numHashes: Int = 128, bands: Int = 32): Unit =
+    writeSets(shingled(corpus, idCol, textCol, shingleK), path, shingleK, numHashes, bands)
+
+  /** [[writeMinhashIndex]]'s body over (__id, __sh) shingle sets. */
+  private def writeSets(
+      sets: DataFrame, path: String, shingleK: Int, numHashes: Int, bands: Int): Unit = {
+    val spark = sets.sparkSession
+    sets.select(col("__id").as("id"), col("__sh").as("shingles"))
       .write.mode("overwrite").parquet(path + "/sets")
-    val base = spark.read.parquet(path + "/sets")
-      .select(col("id").as("__id"), col("shingles").as("__sh"))
-    bandedOf(base, idx.numHashes, idx.numBands)
+    bandedOf(storedSets(spark, path), numHashes, bands)
       .select(col("__id").as("id"), col("band"), col("bh"))
       .write.mode("overwrite").parquet(path + "/bands")
     import spark.implicits._
-    Seq((idx.shingleK, idx.numHashes, idx.numBands))
+    Seq((shingleK, numHashes, bands))
       .toDF("shingle_k", "num_hashes", "num_bands")
       .coalesce(1).write.mode("overwrite").parquet(path + "/params")
   }
 
-  /** Append a batch's signatures into a persisted index — the
+  /** The stored sets/ table as (__id, __sh), tombstones not applied. */
+  private def storedSets(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    spark.read.parquet(path + "/sets")
+      .select(col("id").as("__id"), col("shingles").as("__sh"))
+
+  /** The stored (shingleK, numHashes, numBands), read by column name. */
+  private def storedGeometry(
+      spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int, Int) = {
+    val p = spark.read.parquet(path + "/params").head()
+    (p.getAs[Int]("shingle_k"), p.getAs[Int]("num_hashes"), p.getAs[Int]("num_bands"))
+  }
+
+  /** Append a batch's documents into a persisted index — the
     * write-back half of the production loop: dedup today's batch
     * against the index, keep the survivors, fold them in so tomorrow's
-    * batch dedups against them too. The batch is shingled with the
-    * index's own stored geometry; the existing corpus rows are neither
-    * read nor rewritten (parquet append of the new files only). Ids
-    * must be new to the index.
+    * batch dedups against them too. The batch is indexed by
+    * [[buildMinhashIndexMaterialized]] at the index's stored geometry
+    * and written by the append body [[appendFromIndex]] shares; the
+    * existing corpus rows are neither read nor rewritten (parquet
+    * append of the new files only). The build's checkpoints run before
+    * the append, so a `newDocs` whose plan reads this index (a replay's
+    * already-present anti-join) is never read while the append writes
+    * into it. Ids must be new to the index.
     */
   def appendToMinhashIndex(
       newDocs: DataFrame, path: String, idCol: String, textCol: String): Unit = {
-    val spark = newDocs.sparkSession
-    val idx = readMinhashIndex(spark, path)
-    val base = shingled(newDocs, idCol, textCol, idx.shingleK)
-    bandedOf(base, idx.numHashes, idx.numBands)
-      .select(col("__id").as("id"), col("band"), col("bh"))
-      .write.mode("append").parquet(path + "/bands")
-    base.select(col("__id").as("id"), col("__sh").as("shingles"))
-      .write.mode("append").parquet(path + "/sets")
+    val (shingleK, numHashes, bands) = storedGeometry(newDocs.sparkSession, path)
+    appendRows(
+      buildMinhashIndexMaterialized(newDocs, idCol, textCol, shingleK, numHashes, bands), path)
   }
 
-  /** Append the rows of a PRE-BUILT batch index for the given ids —
-    * the write-back half of [[appendToMinhashIndex]] when the caller
-    * already built (and checkpointed) the batch's index frames for a
-    * probe/self-dedup pass (round-19 optimization: the crawl-ingest
-    * microbatch was shingling the same docs a third time just to
-    * append the survivors). Geometry is verified against the stored
-    * params; `ids`' first column names the ids to keep.
+  /** Append the rows of a built batch index for the given ids: a
+    * caller that already built the batch's index for a probe/self-dedup
+    * pass appends its survivors from it without shingling them again.
+    * `ids`' first column names the ids to keep.
     */
   private[graft] def appendFromIndex(
       batch: MinhashIndex, ids: DataFrame, path: String): Unit = {
-    val spark = batch.bands.sparkSession
-    // by-name access (round-20 ADVICE fix): positional getInt silently
-    // coupled the geometry require to the params parquet column order
-    val p = spark.read.parquet(path + "/params").head()
-    require(batch.shingleK == p.getAs[Int]("shingle_k") &&
-      batch.numHashes == p.getAs[Int]("num_hashes") &&
-      batch.numBands == p.getAs[Int]("num_bands"),
-      s"appendFromIndex geometry mismatch vs stored params at $path")
     // keep-ids are a bounded batch id list — broadcast both semi-joins
-    // so the append never exchanges the batch frames (round-20, §3.1)
+    // so the append never exchanges the batch frames
     val keep = broadcast(ids.select(col(ids.columns.head).as("__kid")))
-    batch.bands.join(keep, batch.bands("__id") === col("__kid"), "left_semi")
-      .select(col("__id").as("id"), col("band"), col("bh"))
+    def kept(df: DataFrame) = df.join(keep, df("__id") === col("__kid"), "left_semi")
+    appendRows(batch.copy(bands = kept(batch.bands), sets = kept(batch.sets)), path)
+  }
+
+  /** The one append body: check the batch geometry against the stored
+    * params, then append the batch's bands/ and sets/ rows.
+    */
+  private def appendRows(batch: MinhashIndex, path: String): Unit = {
+    require((batch.shingleK, batch.numHashes, batch.numBands) ==
+      storedGeometry(batch.bands.sparkSession, path),
+      s"index append geometry mismatch vs stored params at $path")
+    batch.bands.select(col("__id").as("id"), col("band"), col("bh"))
       .write.mode("append").parquet(path + "/bands")
-    batch.sets.join(keep, batch.sets("__id") === col("__kid"), "left_semi")
-      .select(col("__id").as("id"), col("__sh").as("shingles"))
+    batch.sets.select(col("__id").as("id"), col("__sh").as("shingles"))
       .write.mode("append").parquet(path + "/sets")
   }
 
@@ -364,24 +369,22 @@ object Dedup {
     * a batch probe can never band with mismatched hash geometry.
     */
   def readMinhashIndex(spark: org.apache.spark.sql.SparkSession, path: String): MinhashIndex = {
-    val p = spark.read.parquet(path + "/params").head()
+    val (shingleK, numHashes, numBands) = storedGeometry(spark, path)
     val bands0 = spark.read.parquet(path + "/bands")
       .select(col("id").as("__id"), col("band"), col("bh"))
-    val sets0 = spark.read.parquet(path + "/sets")
-      .select(col("id").as("__id"), col("shingles").as("__sh"))
+    val sets0 = storedSets(spark, path)
     val tombPath = new org.apache.hadoop.fs.Path(path + "/tombstones")
     val fs = tombPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (bands, sets) =
       if (fs.exists(tombPath)) {
         // "broadcast fodder, never the index" (deleteFromMinhashIndex
         // scaladoc) — made explicit so the anti-join never exchanges
-        // the corpus side (round-20, §3.1)
+        // the corpus side
         val tomb = broadcast(spark.read.parquet(path + "/tombstones").select("id"))
         (bands0.join(tomb, bands0("__id") === tomb("id"), "left_anti"),
           sets0.join(tomb, sets0("__id") === tomb("id"), "left_anti"))
       } else (bands0, sets0)
-    MinhashIndex(bands, sets, p.getAs[Int]("shingle_k"),
-      p.getAs[Int]("num_hashes"), p.getAs[Int]("num_bands"))
+    MinhashIndex(bands, sets, shingleK, numHashes, numBands)
   }
 
   /** Tombstone ids in a persisted index — the RETRACTION path
@@ -416,7 +419,8 @@ object Dedup {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(path + "/tombstones"))) return
     val idx = readMinhashIndex(spark, path) // tombstones already anti-joined
-    graft.operators.VersionedStore.swapTree(spark, path)(writeMinhashIndex(idx, _))
+    graft.operators.VersionedStore.swapTree(spark, path)(
+      writeSets(idx.sets, _, idx.shingleK, idx.numHashes, idx.numBands))
   }
 
   /** INCREMENTAL near-dup: pairs (new_id, corpus_id, jaccard) between a
@@ -427,25 +431,26 @@ object Dedup {
     * never materialize: per-batch work is O(|new|·bands + matching
     * corpus buckets), not a full self-join re-run. Ids must be distinct
     * across batch and corpus.
+    *
+    * EAGER: the batch side is [[buildMinhashIndexMaterialized]] at the
+    * index's geometry, whose two checkpoint jobs run at call time, so
+    * the band join and the verify join read the same materialized batch
+    * frames and each batch document is tokenized and signed once.
     */
   def nearDupPairsMinhashAgainstIndex(
       newDocs: DataFrame, idx: MinhashIndex, idCol: String, textCol: String,
-      threshold: Double = 0.8): DataFrame = {
-    val nbase = shingled(newDocs, idCol, textCol, idx.shingleK)
+      threshold: Double = 0.8): DataFrame =
     nearDupPairsBetweenIndexes(
-      MinhashIndex(bandedOf(nbase, idx.numHashes, idx.numBands), nbase,
+      buildMinhashIndexMaterialized(newDocs, idCol, textCol,
         idx.shingleK, idx.numHashes, idx.numBands),
       idx, threshold)
-  }
 
   /** The probe half of [[nearDupPairsMinhashAgainstIndex]] taking a
-    * PRE-BUILT batch index (round-19 optimization seam): callers that
-    * also need the batch's self-pairs ([[nearDupPairsFromIndex]]) or
-    * its index rows for an append were shingling/minhashing the same
-    * batch two or three times — build the batch index ONCE
-    * (checkpointed) and derive every product from it, the q189
-    * one-scan-side-pass rule generalized. Geometry must match: banding
-    * with mismatched hash parameters would silently find nothing.
+    * built batch index: callers that also need the batch's self-pairs
+    * ([[nearDupPairsFromIndex]]) or its index rows for an append build
+    * the batch index ONCE and derive every product from it. Geometry
+    * must match: banding with mismatched hash parameters would silently
+    * find nothing.
     */
   private[graft] def nearDupPairsBetweenIndexes(
       batch: MinhashIndex, idx: MinhashIndex,
@@ -454,32 +459,46 @@ object Dedup {
       batch.numHashes == idx.numHashes && batch.numBands == idx.numBands,
       s"index geometry mismatch: batch (${batch.shingleK},${batch.numHashes},${batch.numBands})" +
         s" vs corpus (${idx.shingleK},${idx.numHashes},${idx.numBands})")
-    // broadcastBatch (round-20, guide §3.1): when the probe side is a
-    // bounded MICROBATCH (the ingest harnesses — per-batch work is
-    // O(|batch|·bands) by contract), broadcast every batch-derived side
-    // so the corpus-sized bands/ and sets/ are never exchanged: the
-    // candidate join streams idx.bands against a broadcast batch hash
-    // table, and the verify join streams idx.sets against the bounded
-    // candidate set. Default false — a large batch (corpus refresh)
-    // keeps the shuffle join.
-    def bc(df: DataFrame): DataFrame = if (broadcastBatch) broadcast(df) else df
-    val cands = bc(batch.bands).as("x")
+    // broadcastBatch: when the probe side is a bounded MICROBATCH (the
+    // ingest harnesses — per-batch work is O(|batch|·bands) by
+    // contract), broadcast every batch-derived side so the corpus-sized
+    // bands/ and sets/ are never exchanged: the candidate join streams
+    // idx.bands against a broadcast batch hash table, and the verify
+    // join streams idx.sets against the bounded candidate set. Default
+    // false — a large batch (corpus refresh) keeps the shuffle join.
+    val cands = broadcastIf(broadcastBatch, batch.bands).as("x")
       .join(idx.bands.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
       .select(col("x.__id").as("new_id"), col("y.__id").as("corpus_id"))
       .distinct()
-    bc(cands
-        .join(bc(batch.sets.select(col("__id"), col("__sh").as("__sha"))),
-          col("new_id") === col("__id"))
+    verified(cands, "new_id", "corpus_id", batch.sets, idx.sets, threshold, broadcastBatch)
+  }
+
+  /** The exact-Jaccard verify every minhash pair derivation ends in:
+    * each candidate pair (aCol, bCol) joins its a-side set from `setsA`
+    * and its b-side set from `setsB`, and pairs with Jaccard >=
+    * threshold come back as (aCol, bCol, jaccard). `broadcastA`
+    * broadcasts the a-side sets and the half-verified candidates (the
+    * bounded-microbatch shape), so the b side streams unexchanged.
+    */
+  private def verified(
+      cands: DataFrame, aCol: String, bCol: String,
+      setsA: DataFrame, setsB: DataFrame, threshold: Double,
+      broadcastA: Boolean): DataFrame =
+    broadcastIf(broadcastA, cands
+        .join(broadcastIf(broadcastA, setsA.select(col("__id"), col("__sh").as("__sha"))),
+          col(aCol) === col("__id"))
         .drop("__id"))
-      .join(idx.sets.select(col("__id"), col("__sh").as("__shb")), col("corpus_id") === col("__id"))
+      .join(setsB.select(col("__id"), col("__sh").as("__shb")), col(bCol) === col("__id"))
       .drop("__id")
       .withColumn("__inter", size(array_intersect(col("__sha"), col("__shb"))))
       .withColumn("__union", size(col("__sha")) + size(col("__shb")) - col("__inter"))
       .withColumn("jaccard", col("__inter").cast("double") / col("__union").cast("double"))
       .filter(col("jaccard") >= threshold)
-      .select("new_id", "corpus_id", "jaccard")
-  }
+      .select(aCol, bCol, "jaccard")
+
+  private def broadcastIf(on: Boolean, df: DataFrame): DataFrame =
+    if (on) broadcast(df) else df
 
   /** EXACT n-gram contamination flags — the verbatim-leak
     * decontamination rule as a certifiable operator: a training doc is
@@ -501,22 +520,32 @@ object Dedup {
   def ngramContaminated(
       training: DataFrame, evalDocs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
+    val (tr, ev) = gramSides(training, evalDocs, idCol, textCol, n)
+    tr.join(ev, Seq("__g"))
+      .groupBy(col("__id").as(idCol))
+      .agg(count(lit(1)).as("n_shared_grams"))
+  }
+
+  /** The two gram frames of the n-gram contamination operators:
+    * training (__id, __g) rows and the eval side's distinct __g set.
+    */
+  private def gramSides(
+      training: DataFrame, evalDocs: DataFrame, idCol: String, textCol: String,
+      n: Int): (DataFrame, DataFrame) = {
     require(n >= 1, s"n must be >= 1, got $n")
     // explode_OUTER + null filter on the generator output, NOT plain
     // explode: InferFiltersFromGenerate infers size/isnotnull on the
     // shingle array from a non-outer explode and pushdown re-inlines
     // the WHOLE shingle chain (re-tokenizing per element_at) into the
     // pre-Exchange filter — measured 35 s → 1.4 s at sf0.1 (the
-    // Dedup.scala:105 lesson, re-learned here)
+    // no-CSE pushdown note in [[bandedOf]])
     val tr = shingled(training, idCol, textCol, n)
       .select(col("__id"), explode_outer(col("__sh")).as("__g"))
       .filter(col("__g").isNotNull)
     val ev = shingled(evalDocs, idCol, textCol, n)
       .select(explode_outer(col("__sh")).as("__g"))
       .filter(col("__g").isNotNull).distinct()
-    tr.join(ev, Seq("__g"))
-      .groupBy(col("__id").as(idCol))
-      .agg(count(lit(1)).as("n_shared_grams"))
+    (tr, ev)
   }
 
   /** [[ngramContaminated]]'s scaled form — the "bloom-prunes via
@@ -536,13 +565,7 @@ object Dedup {
       training: DataFrame, evalDocs: DataFrame, idCol: String, textCol: String,
       n: Int, expectedItems: Long = 1000000L,
       numBits: Long = 8388608L): DataFrame = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    val tr = shingled(training, idCol, textCol, n)
-      .select(col("__id"), explode_outer(col("__sh")).as("__g"))
-      .filter(col("__g").isNotNull)
-    val ev = shingled(evalDocs, idCol, textCol, n)
-      .select(explode_outer(col("__sh")).as("__g"))
-      .filter(col("__g").isNotNull).distinct()
+    val (tr, ev) = gramSides(training, evalDocs, idCol, textCol, n)
     graft.operators.BloomJoin.bloomSemiJoin(tr, "__g", ev, "__g",
         expectedItems, numBits)
       .groupBy(col("__id").as(idCol))
@@ -557,46 +580,32 @@ object Dedup {
     * hits out — the training corpus is scanned once for the index and
     * once for the anti-join; the eval set drives all candidate work, so
     * cost scales with |eval|·bands, not |training|².
+    *
+    * EAGER: both sides are built by [[buildMinhashIndexMaterialized]]
+    * (the training index here, the eval batch in
+    * [[nearDupPairsMinhashAgainstIndex]]), so their four checkpoint jobs
+    * run at call time and each document is tokenized and signed once.
     */
   def decontaminate(
       training: DataFrame, evalDocs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 32,
       threshold: Double = 0.8): DataFrame = {
-    val idx = buildMinhashIndex(training, idCol, textCol, shingleK, numHashes, bands)
+    val idx = buildMinhashIndexMaterialized(training, idCol, textCol, shingleK, numHashes, bands)
     val hits = nearDupPairsMinhashAgainstIndex(evalDocs, idx, idCol, textCol, threshold)
       .select(col("corpus_id").as(idCol)).distinct()
     training.join(hits, Seq(idCol), "left_anti")
   }
-
-  /** One-shot convenience: build the corpus index in memory and probe it.
-    * Same result as persisting + probing (the q79 path does that); use
-    * the index API directly when the corpus outlives the batch.
-    */
-  def nearDupPairsMinhashAgainst(
-      newDocs: DataFrame, corpus: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 3, numHashes: Int = 128, bands: Int = 32,
-      threshold: Double = 0.8): DataFrame =
-    nearDupPairsMinhashAgainstIndex(
-      newDocs, buildMinhashIndex(corpus, idCol, textCol, shingleK, numHashes, bands),
-      idCol, textCol, threshold)
 
   /** Near-duplicate pairs by minhash-LSH with exact n-gram-Jaccard
     * verification. Returns (doc_a, doc_b, jaccard) for verified pairs
     * with Jaccard >= threshold, doc_a < doc_b.
     *
     * This is [[nearDupPairsFromIndex]] over
-    * [[buildMinhashIndexMaterialized]]. The band self-join's two sides
-    * and the two verify joins all consume the scan-side pipeline; over
-    * lazy frames each would re-run tokenize, shingle and signature from
-    * its own scan of `docs`. Materialized, each document is tokenized,
-    * shingled and signed once.
-    *
-    * EAGER: the call runs the index's two checkpoint jobs before it
-    * returns. They are LOCAL checkpoints (executor block storage): the
-    * result's lineage starts at them, so a lost executor loses the index
-    * and the frame cannot be recomputed from `docs`. A durable
-    * checkpoint would survive that at the cost of a write; the choice
-    * belongs to one materialization seam, not to this operator.
+    * [[buildMinhashIndexMaterialized]]: the band self-join's two sides
+    * and the two verify joins all read the materialized index, so each
+    * document is tokenized, shingled and signed once. EAGER: the call
+    * runs the index's two local checkpoint jobs before it returns (the
+    * builder's scaladoc states the lineage trade).
     *
     * With bands=32 × rowsPerBand=4 (128 hashes) the probability of
     * missing a pair at similarity s is (1-s^4)^32 — ~1e-15 at s=0.9 —
@@ -654,30 +663,19 @@ object Dedup {
     */
   def nearDupPairsFromIndex(idx: MinhashIndex, threshold: Double = 0.8,
       broadcastIndex: Boolean = false): DataFrame = {
-    // broadcastIndex (round-20, guide §3.1): for the ingest harnesses'
-    // BATCH self-dedup the "index" is the bounded microbatch's own
-    // frames — broadcast them so the self-join and both verify joins
-    // plan as broadcast-hash with no exchange. Default false: the
-    // corpus-internal pair derivation (q186/q189 old-old pairs) stays
-    // a shuffle self-join, the only shape that scales to a full index.
-    def bc(df: DataFrame): DataFrame = if (broadcastIndex) broadcast(df) else df
+    // broadcastIndex: for the ingest harnesses' BATCH self-dedup the
+    // "index" is the bounded microbatch's own frames — broadcast them so
+    // the self-join and both verify joins plan as broadcast-hash with no
+    // exchange. Default false: the corpus-internal pair derivation
+    // (q186/q189 old-old pairs) stays a shuffle self-join, the only
+    // shape that scales to a full index.
     val cands = idx.bands.as("x")
-      .join(bc(idx.bands.as("y")),
+      .join(broadcastIf(broadcastIndex, idx.bands.as("y")),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.__id") < col("y.__id"))
       .select(col("x.__id").as("doc_a"), col("y.__id").as("doc_b"))
       .distinct()
-    bc(cands
-        .join(bc(idx.sets.select(col("__id"), col("__sh").as("__sha"))),
-          col("doc_a") === col("__id"))
-        .drop("__id"))
-      .join(idx.sets.select(col("__id"), col("__sh").as("__shb")), col("doc_b") === col("__id"))
-      .drop("__id")
-      .withColumn("__inter", size(array_intersect(col("__sha"), col("__shb"))))
-      .withColumn("__union", size(col("__sha")) + size(col("__shb")) - col("__inter"))
-      .withColumn("jaccard", col("__inter").cast("double") / col("__union").cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
+    verified(cands, "doc_a", "doc_b", idx.sets, idx.sets, threshold, broadcastIndex)
   }
 
   /** Boundary-duplicate detection — the SPLIT-document case the
@@ -774,9 +772,8 @@ object Dedup {
     // 17.6 s vs 0.7 s for the explode at sf0.1 (the expression-tree
     // duplication postmortem, BASELINE.md).
     // repartition by doc id BEFORE the tokenize/shingle/md5 work (the
-    // `shingled` rule — round-19: this operator was the one
-    // member of the shingle family missing it, so on a single-split
-    // corpus the whole n-gram scan ran on one task)
+    // `shingled` rule: on a single-split corpus the whole n-gram scan
+    // would otherwise run on one task)
     val pos = docs
       .select(col(idCol), col(textCol))
       .repartition(col(idCol))
@@ -1026,10 +1023,9 @@ object Dedup {
     * — rows in [[SimSearch.assignToAnchors]]'s output shape
     * (id, vec, cid), caller-materialized. The ingest harnesses need
     * the identical assignment twice per wave (the fold here AND the
-    * wave's persisted list delta), and the one-shot form was running
-    * the crossJoin-argmax once per consumer; assigning once and
-    * passing the rows is the q189 one-pass rule on the semantic arc
-    * (round-20 optimization, guide §1.2 step 1 / §2.4).
+    * wave's persisted list delta); assigning once and passing the rows
+    * runs the crossJoin-argmax once instead of once per consumer (the
+    * q189 one-pass rule on the semantic arc).
     *
     * Join strategy (guide §3.1): the batch side is BOUNDED by the
     * operator's own cost contract (O(|batch|·avg-cluster), a
@@ -1047,7 +1043,7 @@ object Dedup {
       col("neighbor_id").as("__oid"), col("__cv2").as("__ov"))
     // crossPairs feeds incrementalClusters TWICE (the touched-cluster
     // draw and the edge union) — left lazy, the batch×stored-list
-    // cosine join ran per consumer (round-19 optimization)
+    // cosine join would run per consumer
     val crossPairs = broadcast(bm).join(old, Seq("__cid"))
       .filter(SimSearch.cosineSim(col("__bv"), col("__ov")) >= tau)
       .select(col("__bid"), col("__oid"))

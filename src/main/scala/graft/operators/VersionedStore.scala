@@ -71,7 +71,7 @@ final case class VersionedStore(root: String) {
     require(isWhole(v), s"cannot publish ${dir(v)}: it is not whole")
     val mf = manifest(v)
     mf.getParentFile.mkdirs()
-    val tmp = new File(mf.getParentFile, s".tmp-$nonce")
+    val tmp = new File(mf.getParentFile, s"$ManifestTmp$nonce")
     Files.write(tmp.toPath, s"""{"version":$v,"data":"${dir(v).getName}"}""".getBytes("UTF-8"))
     if (!tmp.renameTo(mf) && !mf.exists()) {
       tmp.delete()
@@ -117,10 +117,11 @@ final case class VersionedStore(root: String) {
     *     crash between the data write and the manifest. Invisible to
     *     readers by design, safe to delete.
     *   - `stale_staging` (debris): a `.staging-v<id>-*` dir inside the
-    *     root, or a `<root>.staging-*` / `.swap-*` / `.old-*` /
-    *     `.trash-*` / `.compact-*` sibling of it: the transient dirs of
-    *     [[stage]], [[VersionedStore.swapTree]], `IndexStore.ensure`
-    *     and earlier compactions, which a killed process strands.
+    *     root, a `_manifest/.tmp-*` file, or a `<root>.staging-*` /
+    *     `.swap-*` / `.old-*` / `.trash-*` / `.compact-*` sibling of
+    *     the root: the transient files of [[stage]], [[publish]],
+    *     [[VersionedStore.swapTree]], `IndexStore.ensure` and earlier
+    *     compactions, which a killed process strands.
     *
     * Metadata-only: one listing of the root, the manifest dir and the
     * parent, bounded by version count, never data-sized. Returns
@@ -174,6 +175,8 @@ final case class VersionedStore(root: String) {
       .map(v => ("orphan_version", v, "debris", new File(rootF, v))) ++
     top.filter(_.startsWith(s"${Staging}v"))
       .map(n => ("stale_staging", n, "debris", new File(rootF, n))) ++
+    names(manifestDir).filter(_.startsWith(ManifestTmp))
+      .map(n => ("stale_staging", s"$ManifestDir/$n", "debris", new File(manifestDir, n))) ++
     siblings.map(n => ("stale_staging", n, "debris", new File(parent.get, n)))
   }
 }
@@ -181,6 +184,7 @@ final case class VersionedStore(root: String) {
 object VersionedStore {
   private val ManifestDir = "_manifest"
   private val Marker = "_SUCCESS"
+  private val ManifestTmp = ".tmp-"
   private val VersionName = """v(\d{9})""".r
   private val ManifestName = """v(\d{9})\.json""".r
 
@@ -201,14 +205,16 @@ object VersionedStore {
     * replacement is written in full to a sibling, then OLD→retired and
     * REPLACEMENT→live are two renames. A crash leaves the old tree or
     * the new one, never a half-rewrite, and a failed install rolls the
-    * old tree back.
+    * old tree back. The replacement is deleted if `write` throws, as
+    * `stage` deletes its staging dir.
     */
   def swapTree(spark: SparkSession, path: String)(write: String => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
     val staging = path + Swap + nonce
-    write(staging)
+    try write(staging)
+    catch { case t: Throwable => fs.delete(new org.apache.hadoop.fs.Path(staging), true); throw t }
     val old = new org.apache.hadoop.fs.Path(path + Old + nonce)
     if (!fs.rename(root, old))
       throw new java.io.IOException(s"tree swap: could not retire $path")

@@ -85,18 +85,16 @@ object CrawlIngest {
     var batchIdx: Dedup.MinhashIndex = null
     val fresh = store.stage(batchId) { dir =>
       val idx = Dedup.readMinhashIndex(spark, indexPath)
-      // ONE batch shingle/minhash pass (round-19 optimization — the
-      // q189 one-scan-side-pass rule inside the microbatch): the index
-      // probe and the batch self-dedup both derive from the same
-      // checkpointed batch index instead of re-hashing the batch per
-      // product (nearDupPairsMinhash is the same composition; the probe
-      // seam requires identical geometry)
+      // ONE batch shingle/minhash pass (the q189 one-scan-side-pass
+      // rule inside the microbatch): the index probe, the batch
+      // self-dedup and the append all derive from the same checkpointed
+      // batch index (the probe seam requires identical geometry)
       val bIdx = Dedup.buildMinhashIndexMaterialized(docs, "new_id", "text",
         idx.shingleK, idx.numHashes, idx.numBands)
       batchIdx = bIdx
       // batch-derived frames are microbatch-bounded: broadcast the
       // probe/self-dedup sides so the corpus index and the decision
-      // joins never exchange (round-20, guide §3.1)
+      // joins never exchange
       val idxMatches = Dedup
         .nearDupPairsBetweenIndexes(bIdx, idx, threshold,
           broadcastBatch = true)
@@ -140,8 +138,7 @@ object CrawlIngest {
     // append may also have landed before the manifest). On the fresh
     // path THIS invocation just staged the decisions, and the append
     // runs strictly after that stage, so no append for this batch can
-    // exist yet — skip the per-wave distinct over the full index id set
-    // (round-20, guide §2.4 remove shuffles outright).
+    // exist yet — skip the per-wave distinct over the full index id set.
     val novel =
       if (fresh) novel0
       else {
@@ -150,16 +147,14 @@ object CrawlIngest {
         novel0.join(present, Seq("new_id"), "left_anti")
       }
     // fresh-batch path: append straight from the checkpointed batch
-    // index (no third shingle pass); crash-replay path (decisions
-    // staged, batchIdx never built): re-shingle just the novel docs
-    // — MATERIALIZED first (round-20 ADVICE fix): novel's lineage there
-    // reads indexPath/sets, the very directory the append writes into;
-    // checkpointing severs that read so the append jobs carry no live
-    // read of the directory being appended
+    // index (no second shingle pass); crash-replay path (decisions
+    // staged, batchIdx never built): index just the novel docs, whose
+    // lineage reads indexPath/sets — the build's checkpoints run before
+    // the append, so the append jobs carry no live read of the
+    // directory being appended. Both paths end in one append body.
     if (!novel.isEmpty) {
       if (fresh) Dedup.appendFromIndex(batchIdx, novel.select("new_id"), indexPath)
-      else Dedup.appendToMinhashIndex(
-        novel.localCheckpoint(), indexPath, "new_id", "text")
+      else Dedup.appendToMinhashIndex(novel, indexPath, "new_id", "text")
     }
     store.publish(batchId)
   }
@@ -241,8 +236,7 @@ object CrawlIngest {
     val work = java.nio.file.Files.createTempDirectory("graft-crawl")
     val (store, index, chk) =
       (s"$work/store", s"$work/index", s"$work/chk")
-    Dedup.writeMinhashIndex(
-      Dedup.buildMinhashIndex(docs, "doc_id", "text", 3, 128, 32), index)
+    Dedup.writeMinhashIndex(docs, index, "doc_id", "text", 3, 128, 32)
     try StreamingReports.replayWaves("graft-crawl-landing",
         (0 to 2).map(w => StreamingReports.render(s"wave$w", waveLines(docs, w), "text")))(
       landing => spark.readStream.text(landing)

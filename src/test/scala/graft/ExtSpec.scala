@@ -404,9 +404,9 @@ class ExtSpec extends SparkSpec {
     // new doc 2 matches nothing
     val newDocs = Seq((1L, txt), (2L, "totally different words here entirely now")).toDF("doc_id", "text")
     val corpus = Seq((10L, txt), (11L, txt + " lambda"), (12L, "unrelated corpus content text")).toDF("doc_id", "text")
-    val got = graft.ext.Dedup.nearDupPairsMinhashAgainst(
-        newDocs, corpus, "doc_id", "text", shingleK = 3, numHashes = 128,
-        bands = 32, threshold = 0.6)
+    val got = graft.ext.Dedup.nearDupPairsMinhashAgainstIndex(
+        newDocs, graft.ext.Dedup.buildMinhashIndexMaterialized(corpus, "doc_id", "text",
+          shingleK = 3, numHashes = 128, bands = 32), "doc_id", "text", threshold = 0.6)
       .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
     // the 10~11 corpus-internal pair must NOT appear
     assert(got == Set((1L, 10L), (1L, 11L)))
@@ -419,8 +419,7 @@ class ExtSpec extends SparkSpec {
     val corpus = Seq((10L, txt), (11L, txt + " lambda"), (12L, "unrelated corpus content text")).toDF("doc_id", "text")
 
     val dir = java.nio.file.Files.createTempDirectory("mh_idx").toString
-    Dedup.writeMinhashIndex(
-      Dedup.buildMinhashIndex(corpus, "doc_id", "text", shingleK = 3, numHashes = 128, bands = 32), dir)
+    Dedup.writeMinhashIndex(corpus, dir, "doc_id", "text", shingleK = 3, numHashes = 128, bands = 32)
     val idx = Dedup.readMinhashIndex(spark, dir)
     assert((idx.shingleK, idx.numHashes, idx.numBands) == ((3, 128, 32)), "params round-trip")
 
@@ -448,7 +447,7 @@ class ExtSpec extends SparkSpec {
     val batchB = Seq((20L, txt + " lambda")).toDF("doc_id", "text")     // near-dup of 10
     val batchC = Seq((30L, txt + " mu")).toDF("doc_id", "text")        // near-dup of 10 AND 20
     val dir = java.nio.file.Files.createTempDirectory("mh_idx_append").toString
-    Dedup.writeMinhashIndex(Dedup.buildMinhashIndex(corpusA, "doc_id", "text"), dir)
+    Dedup.writeMinhashIndex(corpusA, dir, "doc_id", "text")
     Dedup.appendToMinhashIndex(batchB, dir, "doc_id", "text")
     val got = Dedup.nearDupPairsMinhashAgainstIndex(
         batchC, Dedup.readMinhashIndex(spark, dir), "doc_id", "text", threshold = 0.6)
@@ -465,7 +464,7 @@ class ExtSpec extends SparkSpec {
       (12L, "unrelated corpus content text here")).toDF("doc_id", "text")
     val batch = Seq((1L, txt)).toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("mh_idx_del").toString
-    Dedup.writeMinhashIndex(Dedup.buildMinhashIndex(corpus, "doc_id", "text"), dir)
+    Dedup.writeMinhashIndex(corpus, dir, "doc_id", "text")
     Dedup.deleteFromMinhashIndex(Seq(10L).toDF("doc_id"), dir, "doc_id")
     val got = Dedup.nearDupPairsMinhashAgainstIndex(
         batch, Dedup.readMinhashIndex(spark, dir), "doc_id", "text", threshold = 0.6)
@@ -473,8 +472,7 @@ class ExtSpec extends SparkSpec {
     assert(got == Set((1L, 11L)), s"tombstoned doc 10 resurfaced (or 11 lost): $got")
     // equivalence: identical to an index built WITHOUT the deleted doc
     val dir2 = java.nio.file.Files.createTempDirectory("mh_idx_del_rebuild").toString
-    Dedup.writeMinhashIndex(
-      Dedup.buildMinhashIndex(corpus.filter($"doc_id" =!= 10L), "doc_id", "text"), dir2)
+    Dedup.writeMinhashIndex(corpus.filter($"doc_id" =!= 10L), dir2, "doc_id", "text")
     val rebuilt = Dedup.nearDupPairsMinhashAgainstIndex(
         batch, Dedup.readMinhashIndex(spark, dir2), "doc_id", "text", threshold = 0.6)
       .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
@@ -496,7 +494,7 @@ class ExtSpec extends SparkSpec {
       (12L, "unrelated corpus content text here")).toDF("doc_id", "text")
     val batch = Seq((1L, txt)).toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("mh_idx_cmp").toString + "/idx"
-    Dedup.writeMinhashIndex(Dedup.buildMinhashIndex(corpus, "doc_id", "text"), dir)
+    Dedup.writeMinhashIndex(corpus, dir, "doc_id", "text")
     Dedup.deleteFromMinhashIndex(Seq(10L).toDF("doc_id"), dir, "doc_id")
     def probe() = Dedup.nearDupPairsMinhashAgainstIndex(
         batch, Dedup.readMinhashIndex(spark, dir), "doc_id", "text", threshold = 0.6)
@@ -622,8 +620,7 @@ class ExtSpec extends SparkSpec {
     // no signatures or bands
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.8)
       .select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect().toSet
-    val idx = Dedup.buildMinhashIndex(docs, "doc_id", "text",
-      shingleK = 3, numHashes = 128, bands = 32)
+    val idx = lazyIndex(docs)
     for (bc <- Seq(false, true)) {
       val viaIdx = Dedup.nearDupPairsFromIndex(idx, threshold = 0.8, broadcastIndex = bc)
         .select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect().toSet
@@ -632,28 +629,49 @@ class ExtSpec extends SparkSpec {
     assert(exact.nonEmpty, "corpus produced no pairs — test is vacuous")
   }
 
-  test("nearDupPairsMinhash plan: no documents scan, tokenize or signature above its index") {
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  /** A lazy (3, 128, 32) index over `docs`: every consumer of its
+    * frames re-runs the scan-side pipeline — the reference the
+    * materialized builder is checked against.
+    */
+  private def lazyIndex(docs: org.apache.spark.sql.DataFrame): Dedup.MinhashIndex = {
+    val base = Dedup.shingled(docs, "doc_id", "text", 3)
+    Dedup.MinhashIndex(Dedup.bandedOf(base, 128, 32), base, 3, 128, 32)
+  }
+
+  /** (parquet scans, tokenize calls, signature calls) in an optimized plan. */
+  private def work(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): (Int, Int, Int) = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     import graft.plans.{MinhashSignature, UnicodeTokens}
-    // (parquet scans, tokenize calls, signature calls) in an optimized plan
-    def work(p: LogicalPlan): (Int, Int, Int) = {
-      val exprs = p.flatMap(_.expressions).flatMap(_.collect { case e => e })
-      (p.collectLeaves().count {
-        case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
-        case _ => false
-      }, exprs.count(_.isInstanceOf[UnicodeTokens]), exprs.count(_.isInstanceOf[MinhashSignature]))
-    }
+    val exprs = p.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    (p.collectLeaves().count {
+      case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
+      case _ => false
+    }, exprs.count(_.isInstanceOf[UnicodeTokens]), exprs.count(_.isInstanceOf[MinhashSignature]))
+  }
+
+  test("nearDupPairsMinhash plan: no documents scan, tokenize or signature above its index") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val plan = Dedup.nearDupPairsMinhash(docs, "doc_id", "text", 3, 128, 32, 0.8)
       .queryExecution.optimizedPlan
     assert(work(plan) == ((0, 0, 0)), plan.treeString)
     // the guard is not vacuous: over a lazy index every consumer of the
     // shingle sets and band keys re-reads and re-tokenizes the documents
-    val lazyPlan = Dedup.nearDupPairsFromIndex(
-        Dedup.buildMinhashIndex(docs, "doc_id", "text", 3, 128, 32), 0.8)
+    val lazyPlan = Dedup.nearDupPairsFromIndex(lazyIndex(docs), 0.8)
       .queryExecution.optimizedPlan
     assert(work(lazyPlan) == ((4, 4, 2)), lazyPlan.treeString)
+  }
+
+  test("nearDupPairsMinhashAgainstIndex plan over a stored index: no tokenize or signature") {
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    val dir = java.nio.file.Files.createTempDirectory("mh_probe_plan").toString
+    Dedup.writeMinhashIndex(docs.filter($"doc_id" % 5 =!= 0), dir, "doc_id", "text")
+    val plan = Dedup.nearDupPairsMinhashAgainstIndex(
+        docs.filter($"doc_id" % 5 === 0), Dedup.readMinhashIndex(spark, dir), "doc_id", "text")
+      .queryExecution.optimizedPlan
+    // the stored bands/ and sets/ are the only scans; the batch side is
+    // the builder's checkpoints (a lazy batch build plans (4, 2, 1):
+    // the band join and the verify join each re-read and re-tokenize it)
+    assert(work(plan) == ((2, 0, 0)), plan.treeString)
   }
 
   test("buildMinhashIndexMaterialized frames == lazy build; " +
@@ -661,8 +679,7 @@ class ExtSpec extends SparkSpec {
     import graft.ext.Dedup
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select("doc_id", "text")
-    val lazyIdx = Dedup.buildMinhashIndex(docs, "doc_id", "text",
-      shingleK = 3, numHashes = 128, bands = 32)
+    val lazyIdx = lazyIndex(docs)
     val mat = Dedup.buildMinhashIndexMaterialized(docs, "doc_id", "text",
       shingleK = 3, numHashes = 128, bands = 32)
     // the one-pass materialized builder must produce row-identical frames
@@ -678,7 +695,8 @@ class ExtSpec extends SparkSpec {
     // i.e. the array<string> parquet round-trip is lossless under the
     // signature expression
     val dir = java.nio.file.Files.createTempDirectory("mh_write_rt").toString
-    Dedup.writeMinhashIndex(lazyIdx, dir)
+    Dedup.writeMinhashIndex(docs, dir, "doc_id", "text",
+      shingleK = 3, numHashes = 128, bands = 32)
     val storedBands = spark.read.parquet(dir + "/bands")
       .select("id", "band", "bh").as[(Long, Int, Long)].collect().toSet
     assert(storedBands == lb, "written bands diverged from bandedOf(sets)")

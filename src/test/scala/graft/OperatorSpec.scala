@@ -238,16 +238,39 @@ class OperatorSpec extends SparkSpec {
     Files.createDirectories(root.resolve(".staging-v2-0badf00d").resolve("part-0"))
     // a compaction killed before its swap: the replacement is a sibling
     Files.createDirectories(base.resolve("st.compact-5ca1ab1e").resolve("index"))
+    // a publish killed before its rename: the manifest temp file
+    Files.write(root.resolve("_manifest").resolve(".tmp-deadbeef"), "{}".getBytes("UTF-8"))
     val got = store.fsck(spark).as[(String, String, String)].collect().toSet
     assert(got == Set(
       ("stale_staging", ".staging-v2-0badf00d", "debris"),
-      ("stale_staging", "st.compact-5ca1ab1e", "debris")))
+      ("stale_staging", "st.compact-5ca1ab1e", "debris"),
+      ("stale_staging", "_manifest/.tmp-deadbeef", "debris")))
     val trail = store.fsckRepair(spark)
       .as[(String, String, String, String)].collect().toSet
     assert(trail == got.map { case (c, e, sev) => (c, e, sev, "deleted") })
     assert(!Files.exists(root.resolve(".staging-v2-0badf00d")))
     assert(!Files.exists(base.resolve("st.compact-5ca1ab1e")))
+    assert(!Files.exists(root.resolve("_manifest").resolve(".tmp-deadbeef")))
     // the committed version is untouched
     assert(store.fsck(spark).count() == 0 && Files.isDirectory(root.resolve("v000000001")))
+  }
+
+  test("swapTree: a write that throws leaves no replacement tree and the old tree live") {
+    import java.nio.file.Files
+    import graft.operators.VersionedStore
+    val base = Files.createTempDirectory("swap_spec")
+    val root = base.resolve("idx")
+    Files.createDirectories(root.resolve("sets"))
+    val boom = intercept[IllegalStateException] {
+      VersionedStore.swapTree(spark, root.toString) { staging =>
+        Files.createDirectories(java.nio.file.Paths.get(staging, "sets"))
+        throw new IllegalStateException("write failed")
+      }
+    }
+    assert(boom.getMessage == "write failed")
+    val left = Option(base.toFile.list()).toSeq.flatten.toSet
+    assert(left == Set("idx"), s"swap debris left beside the tree: $left")
+    assert(Files.isDirectory(root.resolve("sets")), "the old tree must stay live")
+    assert(VersionedStore(root.toString).fsck(spark).count() == 0)
   }
 }

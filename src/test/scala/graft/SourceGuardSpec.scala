@@ -88,6 +88,20 @@ class SourceGuardSpec extends AnyFunSuite {
     }
   }
 
+  test("src/main: minhash index frames are built only in Dedup") {
+    // split, so that grepping the tree for a builder call finds only Dedup
+    val builders = Seq("\\bshingl" + "ed\\(", "\\bbanded" + "Of\\(", "\\bMinhash" + "Index\\(").map(_.r)
+    val probe = "Dedup.Minhash" + "Index(b, s, 3, 128, 32); banded" + "Of(shingl" + "ed(d, i, t, 3), 128, 32)"
+    assert(builders.forall(_.findFirstIn(probe).nonEmpty))
+    assert(builders.forall(_.findFirstIn("readMinhash" + "Index(s, p); banded" + "OfAgg(b, 128, 32)").isEmpty))
+    for (needle <- builders) {
+      val spelled = sources.collect {
+        case (f, text) if needle.findFirstIn(text).nonEmpty => f
+      }.toSet
+      assert(spelled == Set(s"$main/ext/Dedup.scala"), s"$needle outside Dedup: $spelled")
+    }
+  }
+
   /** String literals in `text` that spell one of `names`. */
   private def nameLiterals(text: String, names: Set[String]): Int =
     "\"(q\\d+_\\w+)\"".r.findAllMatchIn(text).count(m => names(m.group(1)))

@@ -595,8 +595,7 @@ class StreamingSpec extends SparkSpec {
     val corpus = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "one two three four five six seven eight")).toDF("doc_id", "text")
-    Dedup.writeMinhashIndex(
-      Dedup.buildMinhashIndex(corpus, "doc_id", "text"), index)
+    Dedup.writeMinhashIndex(corpus, index, "doc_id", "text")
     def lines(rows: String*) = rows.toDF("value")
     def decisions(v: String) = spark.read.parquet(s"$store/$v")
       .select("new_id", "status", "n_idx_matches")
