@@ -974,7 +974,7 @@ object AnalyticsQueries {
       val sketch = keyed.agg(mg(col("k")).as("sk"))
         .select(explode(col("sk")).as("e"))
         .select(col("e.item").as("item"), col("e.cnt").as("est"))
-      val tot = broadcast(keyed.agg(count(lit(1)).as("n")))
+      val tot = keyed.agg(count(lit(1)).as("n"))
       keyed.groupBy("k").agg(count(lit(1)).as("freq"))
         .join(sketch, col("k") === col("item"), "left")
         .crossJoin(tot)

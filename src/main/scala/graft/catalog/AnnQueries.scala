@@ -455,6 +455,7 @@ object AnnQueries {
           SimSearch.dotD(col("__cv"), col("__cv")))
       val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
         .orderBy(col("cosine").desc, col("neighbor_id").asc)
+      // bound: the query batch, every 43rd embedding
       val out = c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
         .withColumn("cosine", composed)
         .withColumn("rank", row_number().over(w).cast("bigint"))

@@ -279,6 +279,7 @@ object CrawlQueries {
           when(asciiGuard("bytesIntakeChain", id).isNull, col("text"))
             .as("text"))
         .repartition(32, id)
+        // bound: one row, the doc_id = 1 document
         .crossJoin(broadcast(shared))
       val ptext0 =
         when(a === 7, col("__sh"))
@@ -1816,7 +1817,7 @@ object CrawlQueries {
       val sched = UrlCanon.politenessSchedule(budgeted, "host", "doc_id")
       val delays = UrlCanon.parseCrawlDelays(
         robotsBodiesFixture(s), "host", "body", "graftbot")
-      sched.join(broadcast(delays), Seq("host"), "left")
+      sched.join(delays, Seq("host"), "left")
         .withColumn("crawl_delay_s", coalesce(col("crawl_delay_s"), lit(1L)))
         .withColumn("fetch_at_s",
           (col("host_rank") - 1) * col("crawl_delay_s"))

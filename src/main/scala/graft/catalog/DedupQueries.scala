@@ -1005,9 +1005,8 @@ object DedupQueries {
       val d = graft.operators.Diff.diff(docs, v2, "doc_id", Seq("text"))
       val batchIds = d.filter(col("status").isin("added", "changed"))
         .select("doc_id").localCheckpoint()
-      // batchIds is the bounded refresh delta — broadcast the splits
-      val old = v2.join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-      val batch = v2.join(broadcast(batchIds), Seq("doc_id"), "left_semi")
+      val old = v2.join(batchIds, Seq("doc_id"), "left_anti")
+      val batch = v2.join(batchIds, Seq("doc_id"), "left_semi")
       // ONE scan-side minhash pass over the old corpus: the index is
       // checkpointed and BOTH products (old-old pairs, batch probe)
       // derive from it — at 100 TB the shingle/hash scan dominates, so
@@ -1023,14 +1022,9 @@ object DedupQueries {
       // index (nearDupPairsMinhash is the same composition)
       val bIdx = Dedup.buildMinhashIndexMaterialized(batch, "doc_id", "text",
         shingleK = 3, numHashes = 128, bands = 32)
-      // the batch side is the bounded fold input (the incremental-batch
-      // contract) — broadcast it so neither probe exchanges the corpus
-      // index
-      val cross = Dedup.nearDupPairsBetweenIndexes(bIdx, idx, threshold = 0.8,
-          broadcastBatch = true)
+      val cross = Dedup.nearDupPairsBetweenIndexes(bIdx, idx, threshold = 0.8)
         .localCheckpoint()
-      val bp = Dedup.nearDupPairsFromIndex(bIdx, threshold = 0.8,
-        broadcastIndex = true)
+      val bp = Dedup.nearDupPairsFromIndex(bIdx, threshold = 0.8)
       val assign = graft.ext.ConnectedComponents.incrementalClusters(
           oldAssign, "doc_id", batchIds,
           cross, "new_id", "corpus_id", bp, "doc_a", "doc_b")
@@ -1124,13 +1118,9 @@ object DedupQueries {
       // ONE batch-side minhash pass (the q189 rule)
       val bIdx = Dedup.buildMinhashIndexMaterialized(batch, "doc_id", "text",
         shingleK = 3, numHashes = 128, bands = 32)
-      // bounded-batch probes broadcast the batch side (the q189 note
-      // above)
-      val cross = Dedup.nearDupPairsBetweenIndexes(bIdx, idx, threshold = 0.8,
-          broadcastBatch = true)
+      val cross = Dedup.nearDupPairsBetweenIndexes(bIdx, idx, threshold = 0.8)
         .localCheckpoint()
-      val bp = Dedup.nearDupPairsFromIndex(bIdx, threshold = 0.8,
-        broadcastIndex = true)
+      val bp = Dedup.nearDupPairsFromIndex(bIdx, threshold = 0.8)
       graft.ext.ConnectedComponents.incrementalClusters(
         oldAssign, "doc_id", batch.select("doc_id"),
         cross, "new_id", "corpus_id", bp, "doc_a", "doc_b")

@@ -1038,7 +1038,7 @@ object MediaQueries {
           col("nPx"), col("sumR"), col("sumG"), col("sumB"),
           col("peakLumaMilli"))
       val cams = s.read.json(FixturesDir + "/image_cameras.json")
-      feats.join(broadcast(cams), Seq("name"))
+      feats.join(cams, Seq("name"))
         .groupBy(col("camera"), col("capturedDate").as("captured_date"))
         .agg(count(lit(1)).as("n_images"),
           sum(col("nPx")).as("total_px"),
@@ -1100,7 +1100,7 @@ object MediaQueries {
         .select(regexp_extract(col("path"), "[^/]+$", 0).as("name"),
           col("sampleRate"), col("nFrames"), col("sumAbs"), col("peakAbs"))
       val speakers = s.read.json(FixturesDir + "/audio_speakers.json")
-      feats.join(broadcast(speakers), Seq("name"))
+      feats.join(speakers, Seq("name"))
         .groupBy(col("speaker"), col("recordedDate").as("recorded_date"))
         .agg(count(lit(1)).as("n_clips"),
           sum(col("nFrames")).as("total_frames"),

@@ -183,7 +183,7 @@ object ReportQueries {
       val o = t(s, dir, "orders")
       val g = o
         .join(t(s, dir, "customer"), o("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
+        .join(t(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
         .withColumn("month", monthKey(col("o_orderdate")))
         .groupBy("month", "n_name")
         .agg(sum(dec2(col("o_totalprice"))).as("rev"))
@@ -357,8 +357,8 @@ object ReportQueries {
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .join(c, o("o_custkey") === c("c_custkey"))
         .join(su, li("l_suppkey") === su("s_suppkey") && c("c_nationkey") === su("s_nationkey"))
-        .join(broadcast(n), su("s_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
+        .join(n, su("s_nationkey") === n("n_nationkey"))
+        .join(r, n("n_regionkey") === r("r_regionkey"))
         .groupBy("n_name")
         .agg(asDouble(sum(dec2(col("l_extendedprice")) * (lit(1).cast(DecimalType(4, 2)) - dec2(col("l_discount")))))
           .as("revenue"))
@@ -415,7 +415,7 @@ object ReportQueries {
           ((col("n_nationkey") % 8) * 25 + 75).cast(DecimalType(6, 0))
             .multiply(lit(0.01).cast(DecimalType(3, 2))).as("rate"))
       o.join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(rates), c("c_nationkey") === col("rk"))
+        .join(rates, c("c_nationkey") === col("rk"))
         .withColumn("month", monthKey(col("o_orderdate")))
         .withColumn("amount", dec2(col("o_totalprice")) * col("rate"))
         .groupBy("n_name", "month")
@@ -492,7 +492,7 @@ object ReportQueries {
     QuerySpec("q26_countries_csv", (s, _) => {
       val ev = Sources.events(s, FixturesDir + "/events_json")
       val ct = Sources.countries(s, FixturesDir + "/countries.csv")
-      ev.join(broadcast(ct), ev("countryCode") === ct("CountryCode"), "left")
+      ev.join(ct, ev("countryCode") === ct("CountryCode"), "left")
         .groupBy("Country")
         .agg(count(lit(1)).as("n_events"), sum(col("duration")).cast("bigint").as("total_duration"))
     },
@@ -720,7 +720,7 @@ object ReportQueries {
     // concat_ws — the same discipline as the IVF centroid rebuild. ──
     QuerySpec("q53_string_agg", (s, dir) => {
       val n = t(s, dir, "nation")
-      n.join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
+      n.join(t(s, dir, "region"), col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name")
         .agg(concat_ws(",", array_sort(collect_list(col("n_name")))).as("nations"),
           count(lit(1)).as("n_nations"))

@@ -2114,7 +2114,7 @@ object TextQueries {
       docs
         .withColumn("__toks", TextAnalysis.tokens(col("text")))
         .filter(size(col("__toks")) > 0)
-        .crossJoin(broadcast(vocab))
+        .crossJoin(vocab)
         .select(col("doc_id"),
           size(col("__toks")).as("n_tokens"),
           size(filter(col("__toks"), t => !array_contains(col("vocab"), t)))

@@ -687,7 +687,7 @@ object UnicodeQueries {
         .localCheckpoint()
       val hasList = disc.select("lang").distinct()
         .withColumn("has_list", lit(true))
-      val hits = tokAll.join(broadcast(disc), Seq("lang", "tok"))
+      val hits = tokAll.join(disc, Seq("lang", "tok"))
         .groupBy("doc_id")
         .agg(count(lit(1)).cast("long").as("stop_hits_lang"))
       val base = TextAnalysis.gopherQualityFlags(ml, "doc_id", "text",
@@ -697,7 +697,7 @@ object UnicodeQueries {
       ml.select(col("doc_id"), col("lang"))
         .join(base, Seq("doc_id"))
         .join(hits, Seq("doc_id"), "left")
-        .join(broadcast(hasList), Seq("lang"), "left")
+        .join(hasList, Seq("lang"), "left")
         .select(col("doc_id"), col("lang"),
           coalesce(col("stop_hits_lang"), lit(0L)).as("stop_hits_lang"),
           col("base_verdict"),

@@ -70,7 +70,7 @@ object Bitext {
     // the all-false row).
     val q = src.select(col(idCol).as("src_id"), col(vecCol).as("__sv"))
     val c = tgt.select(col(idCol).as("tgt_id"), col(vecCol).as("__tv"))
-    val scored = c.join(broadcast(q))
+    val scored = c.join(q)
       .withColumn("cosine",
         SimSearch.cosineSim(col("__sv"), col("__tv")))
       .select(col("src_id"), col("tgt_id"), col("cosine"))

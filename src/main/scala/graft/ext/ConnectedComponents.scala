@@ -170,19 +170,15 @@ object ConnectedComponents {
       assign: DataFrame, idCol: String, batchIds: DataFrame,
       crossPairs: DataFrame, crossBatchCol: String, crossOldCol: String,
       batchPairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    // Join strategy (round-20 optimization, guide §3.1): everything
-    // derived from the batch is BOUNDED by this operator's own cost
-    // contract — O(|batch| + members of touched clusters), never
-    // O(corpus) — so the batch-derived sides (crossPairs' touched-
-    // cluster draw, the touched set, the rebuilt component map)
-    // broadcast outright and the corpus-sized `assign` is never
-    // exchanged: its three joins (touched draw, member semi, untouched
-    // anti) all build a hash table from the bounded side.
-    val touched = broadcast(crossPairs.select(col(crossOldCol).as("__old")))
+    // The batch-derived sides (touched draw, touched set, rebuilt
+    // component map) are bounded only by this operator's cost contract,
+    // so the planner picks each join from their sizes: a batch too big
+    // to broadcast shuffles instead of failing.
+    val touched = crossPairs.select(col(crossOldCol).as("__old"))
       .join(assign.select(col(idCol).as("__old"), col("cluster")), Seq("__old"))
       .select(col("cluster").as("__tc")).distinct()
     val members = assign
-      .join(broadcast(touched), col("cluster") === col("__tc"), "left_semi")
+      .join(touched, col("cluster") === col("__tc"), "left_semi")
     val bind = members.filter(col(idCol) =!= col("cluster"))
       .select(col(idCol).as("u"), col("cluster").as("v"))
     val edges = crossPairs
@@ -195,12 +191,12 @@ object ConnectedComponents {
       .unionByName(members.select(col(idCol))).distinct()
     val w = Window.partitionBy("cluster")
     val reassigned = nodes
-      .join(broadcast(cc), col(idCol) === col("node"), "left")
+      .join(cc, col(idCol) === col("node"), "left")
       .select(col(idCol), coalesce(col("component"), col(idCol)).as("cluster"))
       .withColumn("cluster_size", count(lit(1)).over(w))
       .withColumn("is_representative", col(idCol) === col("cluster"))
     assign
-      .join(broadcast(touched), col("cluster") === col("__tc"), "left_anti")
+      .join(touched, col("cluster") === col("__tc"), "left_anti")
       .select(col(idCol), col("cluster"), col("cluster_size"), col("is_representative"))
       .unionByName(reassigned)
   }

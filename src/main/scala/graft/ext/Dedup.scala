@@ -206,10 +206,10 @@ object Dedup {
         val absPruned = maxShingleDf.map(c => dfreq.filter(col("__df") <= c)).getOrElse(dfreq)
         val pruned = maxShingleDfPermille match {
           case Some(pm) =>
-            // n_docs as a broadcast 1-row frame, not a driver .count():
-            // the cap stays inside the plan, no extra action
+            // n_docs as a 1-row frame, not a driver .count(): the cap
+            // stays inside the plan, no extra action
             val tot = base.agg(count(lit(1)).as("__tot"))
-            absPruned.crossJoin(broadcast(tot))
+            absPruned.crossJoin(tot)
               .filter(col("__df") <= greatest(lit(1L), expr(s"(__tot * $pm) div 1000")))
           case None => absPruned
         }
@@ -345,9 +345,7 @@ object Dedup {
     */
   private[graft] def appendFromIndex(
       batch: MinhashIndex, ids: DataFrame, path: String): Unit = {
-    // keep-ids are a bounded batch id list — broadcast both semi-joins
-    // so the append never exchanges the batch frames
-    val keep = broadcast(ids.select(col(ids.columns.head).as("__kid")))
+    val keep = ids.select(col(ids.columns.head).as("__kid"))
     def kept(df: DataFrame) = df.join(keep, df("__id") === col("__kid"), "left_semi")
     appendRows(batch.copy(bands = kept(batch.bands), sets = kept(batch.sets)), path)
   }
@@ -377,10 +375,7 @@ object Dedup {
     val fs = tombPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (bands, sets) =
       if (fs.exists(tombPath)) {
-        // "broadcast fodder, never the index" (deleteFromMinhashIndex
-        // scaladoc) — made explicit so the anti-join never exchanges
-        // the corpus side
-        val tomb = broadcast(spark.read.parquet(path + "/tombstones").select("id"))
+        val tomb = spark.read.parquet(path + "/tombstones").select("id")
         (bands0.join(tomb, bands0("__id") === tomb("id"), "left_anti"),
           sets0.join(tomb, sets0("__id") === tomb("id"), "left_anti"))
       } else (bands0, sets0)
@@ -397,8 +392,8 @@ object Dedup {
     * PERMANENT for an id: re-adding content requires a new id, or an
     * index compaction that rewrites bands/sets without the tombstoned
     * rows and drops the tombstone set. The anti-join's build side is
-    * the tombstone table (bounded by lifetime deletions, broadcast
-    * fodder), never the index.
+    * the tombstone table (bounded by lifetime deletions), never the
+    * index.
     */
   def deleteFromMinhashIndex(deletedIds: DataFrame, path: String, idCol: String): Unit =
     deletedIds.select(col(idCol).as("id")).distinct()
@@ -453,42 +448,30 @@ object Dedup {
     * find nothing.
     */
   private[graft] def nearDupPairsBetweenIndexes(
-      batch: MinhashIndex, idx: MinhashIndex,
-      threshold: Double, broadcastBatch: Boolean = false): DataFrame = {
+      batch: MinhashIndex, idx: MinhashIndex, threshold: Double): DataFrame = {
     require(batch.shingleK == idx.shingleK &&
       batch.numHashes == idx.numHashes && batch.numBands == idx.numBands,
       s"index geometry mismatch: batch (${batch.shingleK},${batch.numHashes},${batch.numBands})" +
         s" vs corpus (${idx.shingleK},${idx.numHashes},${idx.numBands})")
-    // broadcastBatch: when the probe side is a bounded MICROBATCH (the
-    // ingest harnesses — per-batch work is O(|batch|·bands) by
-    // contract), broadcast every batch-derived side so the corpus-sized
-    // bands/ and sets/ are never exchanged: the candidate join streams
-    // idx.bands against a broadcast batch hash table, and the verify
-    // join streams idx.sets against the bounded candidate set. Default
-    // false — a large batch (corpus refresh) keeps the shuffle join.
-    val cands = broadcastIf(broadcastBatch, batch.bands).as("x")
+    val cands = batch.bands.as("x")
       .join(idx.bands.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
       .select(col("x.__id").as("new_id"), col("y.__id").as("corpus_id"))
       .distinct()
-    verified(cands, "new_id", "corpus_id", batch.sets, idx.sets, threshold, broadcastBatch)
+    verified(cands, "new_id", "corpus_id", batch.sets, idx.sets, threshold)
   }
 
   /** The exact-Jaccard verify every minhash pair derivation ends in:
     * each candidate pair (aCol, bCol) joins its a-side set from `setsA`
     * and its b-side set from `setsB`, and pairs with Jaccard >=
-    * threshold come back as (aCol, bCol, jaccard). `broadcastA`
-    * broadcasts the a-side sets and the half-verified candidates (the
-    * bounded-microbatch shape), so the b side streams unexchanged.
+    * threshold come back as (aCol, bCol, jaccard).
     */
   private def verified(
       cands: DataFrame, aCol: String, bCol: String,
-      setsA: DataFrame, setsB: DataFrame, threshold: Double,
-      broadcastA: Boolean): DataFrame =
-    broadcastIf(broadcastA, cands
-        .join(broadcastIf(broadcastA, setsA.select(col("__id"), col("__sh").as("__sha"))),
-          col(aCol) === col("__id"))
-        .drop("__id"))
+      setsA: DataFrame, setsB: DataFrame, threshold: Double): DataFrame =
+    cands
+      .join(setsA.select(col("__id"), col("__sh").as("__sha")), col(aCol) === col("__id"))
+      .drop("__id")
       .join(setsB.select(col("__id"), col("__sh").as("__shb")), col(bCol) === col("__id"))
       .drop("__id")
       .withColumn("__inter", size(array_intersect(col("__sha"), col("__shb"))))
@@ -496,9 +479,6 @@ object Dedup {
       .withColumn("jaccard", col("__inter").cast("double") / col("__union").cast("double"))
       .filter(col("jaccard") >= threshold)
       .select(aCol, bCol, "jaccard")
-
-  private def broadcastIf(on: Boolean, df: DataFrame): DataFrame =
-    if (on) broadcast(df) else df
 
   /** EXACT n-gram contamination flags — the verbatim-leak
     * decontamination rule as a certifiable operator: a training doc is
@@ -661,21 +641,14 @@ object Dedup {
     * scan-side pass — at 100 TB, the scan-side minhash IS the
     * dominant cost, so deriving both products from one pass matters.
     */
-  def nearDupPairsFromIndex(idx: MinhashIndex, threshold: Double = 0.8,
-      broadcastIndex: Boolean = false): DataFrame = {
-    // broadcastIndex: for the ingest harnesses' BATCH self-dedup the
-    // "index" is the bounded microbatch's own frames — broadcast them so
-    // the self-join and both verify joins plan as broadcast-hash with no
-    // exchange. Default false: the corpus-internal pair derivation
-    // (q186/q189 old-old pairs) stays a shuffle self-join, the only
-    // shape that scales to a full index.
+  def nearDupPairsFromIndex(idx: MinhashIndex, threshold: Double = 0.8): DataFrame = {
     val cands = idx.bands.as("x")
-      .join(broadcastIf(broadcastIndex, idx.bands.as("y")),
+      .join(idx.bands.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.__id") < col("y.__id"))
       .select(col("x.__id").as("doc_a"), col("y.__id").as("doc_b"))
       .distinct()
-    verified(cands, "doc_a", "doc_b", idx.sets, idx.sets, threshold, broadcastIndex)
+    verified(cands, "doc_a", "doc_b", idx.sets, idx.sets, threshold)
   }
 
   /** Boundary-duplicate detection — the SPLIT-document case the
@@ -1026,13 +999,6 @@ object Dedup {
     * wave's persisted list delta); assigning once and passing the rows
     * runs the crossJoin-argmax once instead of once per consumer (the
     * q189 one-pass rule on the semantic arc).
-    *
-    * Join strategy (guide §3.1): the batch side is BOUNDED by the
-    * operator's own cost contract (O(|batch|·avg-cluster), a
-    * microbatch — never the corpus), so the batch↔stored-lists and
-    * batch↔batch pair joins broadcast the batch side outright — the
-    * stored inverted lists (the corpus-sized side) are never
-    * exchanged by the fold.
     */
   def semDedupIncrementalAssigned(
       idx: SimSearch.IvfIndex, oldAssign: DataFrame, assigned: DataFrame,
@@ -1044,12 +1010,12 @@ object Dedup {
     // crossPairs feeds incrementalClusters TWICE (the touched-cluster
     // draw and the edge union) — left lazy, the batch×stored-list
     // cosine join would run per consumer
-    val crossPairs = broadcast(bm).join(old, Seq("__cid"))
+    val crossPairs = bm.join(old, Seq("__cid"))
       .filter(SimSearch.cosineSim(col("__bv"), col("__ov")) >= tau)
       .select(col("__bid"), col("__oid"))
       .localCheckpoint()
     val batchPairs = bm.as("a")
-      .join(broadcast(bm.as("b")),
+      .join(bm.as("b"),
         col("a.__cid") === col("b.__cid") && col("a.__bid") < col("b.__bid"))
       .filter(SimSearch.cosineSim(col("a.__bv"), col("b.__bv")) >= tau)
       .select(col("a.__bid").as("pa"), col("b.__bid").as("pb"))

@@ -109,6 +109,7 @@ object ProductQuant {
       .filter(col("__rk") <= k)
       .select(col("sub"), (col("__rk") - 1).as("code"), col("__sv").as("cvec"))
     def assign(cb: DataFrame): DataFrame = sv
+      // bound: m·k codebook rows
       .join(broadcast(cb), Seq("sub"))
       .select(col("__id"), col("sub"),
         struct(dist2(col("__sv"), col("cvec")).as("d2"), col("code").as("code")).as("__sc"))
@@ -137,6 +138,7 @@ object ProductQuant {
   def encode(corpus: DataFrame, idCol: String, vecCol: String, cb: PqCodebook): DataFrame =
     corpus
       .select(col(idCol).as("__id"), posexplode(subSlices(col(vecCol), cb.m, cb.dim)).as(Seq("sub", "__sv")))
+      // bound: the codebook, m·k rows
       .join(broadcast(cb.centroids), Seq("sub"))
       .select(col("__id"), col("sub"),
         struct(dist2(col("__sv"), col("cvec")).as("d2"), col("code").as("code")).as("__sc"))
@@ -164,7 +166,7 @@ object ProductQuant {
     val d = cb.subDim
     val luts = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .crossJoin(broadcast(cb.centroids))
+      .crossJoin(cb.centroids)
       .select(col("query_id"), col("sub"), col("code"),
         SimSearch.dotD(slice(col("__qv"), col("sub") * d + 1, lit(d)), col("cvec")).as("__lv"))
       .groupBy("query_id", "sub")
@@ -174,6 +176,7 @@ object ProductQuant {
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("__subLut")))),
         s => s.getField("__subLut")).as("__lut"))
     val scored = codes
+      // bound: one LUT row per query of the batch
       .join(broadcast(luts), col("neighbor_id") =!= col("query_id"))
       .withColumn("score",
         aggregate(
@@ -229,6 +232,7 @@ object ProductQuant {
     short
       .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv")),
         Seq("neighbor_id"))
+      // bound: the query batch
       .join(broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))),
         Seq("query_id"))
       .withColumn(scoreCol, scorer(col("__qv"), col("__cv")))
@@ -286,6 +290,7 @@ object ProductQuant {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("neighbor_id").asc)
+    // bound: the query batch
     c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
       .withColumn("score", SimSearch.dotD(col("__qv"), col("__cv")))
       .withColumn("rank", row_number().over(w).cast("bigint"))
@@ -333,12 +338,14 @@ object ProductQuant {
       vecs: DataFrame, idCol: String, vecCol: String, anchors: DataFrame): DataFrame = {
     vecs.select(col(idCol).as("__id"), col(vecCol).as("__v"))
       .repartition(col("__id"))
+      // bound: nlist anchor rows
       .crossJoin(broadcast(anchors))
       .select(col("__id"), col("__v"),
         struct((-SimSearch.cosineSim(col("__v"), col("__cv"))).as("negCos"),
           col("__cid").as("cid")).as("__sc"))
       .groupBy("__id")
       .agg(first(col("__v")).as("__v"), min(col("__sc")).getField("cid").as("__cid"))
+      // bound: nlist anchor rows
       .join(broadcast(anchors), Seq("__cid"))
       // float subtraction: exact whenever values share a dyadic grid
       // (the fixture case); elsewhere correctly rounded — the codebook
@@ -359,6 +366,7 @@ object ProductQuant {
     resid
       .select(col("neighbor_id").as("__id"), col("__cid"),
         posexplode(subSlices(col("__res"), cb.m, cb.dim)).as(Seq("sub", "__sv")))
+      // bound: the codebook, m·k rows
       .join(broadcast(cb.centroids), Seq("sub"))
       .select(col("__id"), col("__cid"), col("sub"),
         struct(dist2(col("__sv"), col("cvec")).as("d2"), col("code").as("code")).as("__sc"))
@@ -411,14 +419,14 @@ object ProductQuant {
     val d = index.cb.subDim
     val qn = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val wq = Window.partitionBy("query_id").orderBy(col("__base").desc, col("__cid").asc)
-    val probes = qn.crossJoin(broadcast(index.anchors))
+    val probes = qn.crossJoin(index.anchors)
       .withColumn("__base", SimSearch.dotD(col("__qv"), col("__cv")))
       .withColumn("__pr", row_number().over(wq))
       .filter(col("__pr") <= nprobe)
       .select(col("query_id"), col("__cid"), col("__base"))
     // residual LUT per query: nested (sub → code-ordered array), the
     // pqTopK shape — array_sort pins collect_list order (q53 discipline)
-    val luts = qn.crossJoin(broadcast(index.cb.centroids))
+    val luts = qn.crossJoin(index.cb.centroids)
       .select(col("query_id"), col("sub"), col("code"),
         SimSearch.dotD(slice(col("__qv"), col("sub") * d + 1, lit(d)), col("cvec")).as("__lv"))
       .groupBy("query_id", "sub")
@@ -429,7 +437,9 @@ object ProductQuant {
         s => s.getField("__subLut")).as("__lut"))
     val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("neighbor_id").asc)
     index.codes
+      // bound: nprobe rows per query of the batch
       .join(broadcast(probes), Seq("__cid"))
+      // bound: one LUT row per query of the batch
       .join(broadcast(luts), Seq("query_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("score",

@@ -93,6 +93,7 @@ object SimSearch {
     val c = corpus.select(col(idCol).as("neighbor_id"), signWords(col(vecCol), dim).as("__cw"))
     val q = queries.select(col(idCol).as("query_id"), signWords(col(vecCol), dim).as("__qw"))
     val w = Window.partitionBy("query_id").orderBy(col("hamming").asc, col("neighbor_id").asc)
+    // bound: the query batch
     c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
       .withColumn("hamming", hammingDist(col("__qw"), col("__cw")))
       .withColumn("rank", row_number().over(w).cast("bigint"))
@@ -126,6 +127,7 @@ object SimSearch {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
 
+    // bound: the query batch
     val scored = c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", cosineSim(col("__qv"), col("__cv")))
 
@@ -159,6 +161,7 @@ object SimSearch {
     val q = queries.filter(col(labelCol).isNotNull)
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
         col(labelCol).as("query_label"))
+    // bound: the query batch
     val scored = c.join(broadcast(q),
         col("neighbor_id") =!= col("query_id") &&
           col("neighbor_label") =!= col("query_label"))
@@ -222,7 +225,7 @@ object SimSearch {
     }
     val dots = n
       .select(col("__id"), posexplode(col("__v")).as(Seq("__p", "__x")))
-      .join(broadcast(wdf), Seq("__p"))
+      .join(wdf, Seq("__p"))
       .groupBy("__id")
       .agg(dotAggs.head, dotAggs.tail: _*)
     val keyCols = (0 until tables).map { t =>
@@ -489,6 +492,7 @@ object SimSearch {
     // guide §2.4: the Lloyd means pass and the final lists each paid a
     // join of two corpus-sized frames for a column the aggregate
     // already had in hand).
+    // bound: nlist anchor rows
     def assign(anchors: DataFrame): DataFrame = n.crossJoin(broadcast(anchors))
       .select(col("__id"), col("__v"),
         struct((-cosineSim(col("__v"), col("__cv"))).as("negCos"),
@@ -575,9 +579,7 @@ object SimSearch {
     val fs = tombPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lists =
       if (fs.exists(tombPath)) {
-        // bounded-by-lifetime-deletions side — broadcast the anti-join
-        // build so the corpus lists are never exchanged (round-20, §3.1)
-        val tomb = broadcast(spark.read.parquet(path + "/tombstones").select("id"))
+        val tomb = spark.read.parquet(path + "/tombstones").select("id")
         lists0.join(tomb, lists0("neighbor_id") === tomb("id"), "left_anti")
       } else lists0
     IvfIndex(
@@ -633,6 +635,7 @@ object SimSearch {
       newVectors: DataFrame, anchors: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
     val n = newVectors.select(col(idCol).as("__id"), col(vecCol).as("__v"))
+    // bound: the anchors, nlist rows
     n.crossJoin(broadcast(anchors))
       .select(col("__id"), col("__v"),
         struct((-cosineSim(col("__v"), col("__cv"))).as("negCos"),
@@ -840,7 +843,7 @@ object SimSearch {
     val idx = readIvfIndex(spark, path)
     graft.operators.Profile.keySkew(idx.lists, "__cid", topN = 1)
       .select(col("n").as("max_list"), col("share").as("__max_share"))
-      .crossJoin(broadcast(idx.lists.agg(count(lit(1)).as("n_vectors"))))
+      .crossJoin(idx.lists.agg(count(lit(1)).as("n_vectors")))
       .select(lit(idx.nlist).as("nlist"), col("n_vectors"),
         col("max_list"),
         (col("__max_share") * idx.nlist).as("skew_ratio"))
@@ -906,7 +909,7 @@ object SimSearch {
     val qn = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val wq = Window.partitionBy("query_id")
       .orderBy(cosineSim(col("__qv"), col("__cv")).desc, col("__cid").asc)
-    val probes = qn.crossJoin(broadcast(anchors))
+    val probes = qn.crossJoin(anchors)
       .withColumn("__pr", row_number().over(wq))
       .filter(col("__pr") <= nprobe)
       .select(col("query_id"), col("__qv"), col("__cid"))
@@ -963,7 +966,7 @@ object SimSearch {
         .select(col("query_id"), col("neighbor_id"))
         .join(full, Seq("query_id", "neighbor_id"))
         .agg(count(lit(1)).as("hits"))
-        .crossJoin(broadcast(total))
+        .crossJoin(total)
         // guarded: an empty query sample gives total = 0, and ANSI
         // DIV would raise DIVIDE_BY_ZERO at action time — the report
         // row comes back with a NULL recall instead (no measurement)

@@ -518,7 +518,7 @@ object TextAnalysis {
     val nDocs = tf.agg(count_distinct(col(idCol)).as("n_docs"))
     val w = Window.partitionBy(idCol).orderBy(col("tfidf").desc, col("token"))
     tf.join(dfreq, "token")
-      .crossJoin(broadcast(nDocs))
+      .crossJoin(nDocs)
       .withColumn("tfidf",
         col("tf").cast("double") * (col("n_docs").cast("double") / col("df").cast("double")))
       .withColumn("rank", row_number().over(w))
@@ -714,17 +714,17 @@ object TextAnalysis {
     val toks = df
       .select(col(idCol).as("__id"), explode(tokens(col(textCol))).as("token"))
       .distinct()
-    val nDocs = broadcast(df.select(col(idCol)).distinct()
-      .agg(count(lit(1)).as("n_docs")))
+    val nDocs = df.select(col(idCol)).distinct()
+      .agg(count(lit(1)).as("n_docs"))
     val vocab = toks.groupBy("token").agg(count(lit(1)).as("df"))
       .orderBy(col("df").desc, col("token")).limit(vocabK)
-    val vt = toks.join(broadcast(vocab.select("token")), "token")
+    val vt = toks.join(vocab.select("token"), "token")
     vt.as("a")
       .join(vt.as("b"), col("a.__id") === col("b.__id") && col("a.token") < col("b.token"))
       .groupBy(col("a.token").as("tok_a"), col("b.token").as("tok_b"))
       .agg(count(lit(1)).as("n_ab"))
-      .join(broadcast(vocab.select(col("token").as("tok_a"), col("df").as("df_a"))), "tok_a")
-      .join(broadcast(vocab.select(col("token").as("tok_b"), col("df").as("df_b"))), "tok_b")
+      .join(vocab.select(col("token").as("tok_a"), col("df").as("df_a")), "tok_a")
+      .join(vocab.select(col("token").as("tok_b"), col("df").as("df_b")), "tok_b")
       .crossJoin(nDocs)
       .withColumn("lift_ppm", expr("(n_ab * n_docs * 1000000) div (df_a * df_b)"))
       .select("tok_a", "tok_b", "n_ab", "df_a", "df_b", "lift_ppm")
@@ -988,6 +988,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("__n"))
     sbg.join(bigrams, Seq("w1", "w2"), "left")
       .join(unigrams, Seq("w1"), "left")
+      // bound: one row; with auto-broadcast off the cross join plans as a Cartesian product
       .crossJoin(broadcast(vocab))
       .withColumn("__ppm", expr(
         "CAST((coalesce(__c2, 0L) + 1L) * 1000000L DIV (coalesce(__c1, 0L) + __v) AS BIGINT)"))

@@ -43,7 +43,7 @@ object TextClassifier {
   private def weightize(m: DataFrame): DataFrame = {
     val tot = m.agg(sum(col("c_pos")).as("__np"),
       sum(col("c_neg")).as("__nn"), count(lit(1)).as("__v"))
-    m.crossJoin(broadcast(tot))
+    m.crossJoin(tot)
       .withColumn("w_ppm", expr(
         "CAST((c_pos + 1L) * 1000000L DIV (__np + __v) AS BIGINT)" +
           " - CAST((c_neg + 1L) * 1000000L DIV (__nn + __v) AS BIGINT)"))
@@ -105,6 +105,7 @@ object TextClassifier {
       .agg(count(lit(1)).as("__n"))
     val scored = perTok
       .join(model.select(col("token"), col("w_ppm")), Seq("token"), "left")
+      // bound: one row; with auto-broadcast off the cross join plans as a Cartesian product
       .crossJoin(broadcast(tot))
       .groupBy(col(idCol))
       .agg(sum(col("__n")).cast("long").as("n_toks"),

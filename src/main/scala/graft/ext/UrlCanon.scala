@@ -310,8 +310,8 @@ object UrlCanon {
         when(col("__d.sch") === "" || col("__d.h").isNull ||
           col("__d.h") === "", lit(null).cast("string"))
           .otherwise(col("__d.p")).as("path"))
-    val r = broadcast(rules.select(col("host").as("__rhost"),
-      col("prefix"), col("allow")))
+    val r = rules.select(col("host").as("__rhost"),
+      col("prefix"), col("allow"))
     f.join(r, col("host") === col("__rhost") &&
         col("path").startsWith(col("prefix")), "left")
       .groupBy(col(idCol), col(urlCol), col("host"), col("path"))

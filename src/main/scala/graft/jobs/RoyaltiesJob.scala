@@ -44,9 +44,9 @@ object RoyaltiesJob {
       .select("month", "resourceId", "countryCode", "itemPrice")
 
     val joined = ev
-      .join(broadcast(res), Seq("resourceId"), "left")
-      .join(broadcast(cats), Seq("categoryId"), "left")
-      .join(broadcast(countries), ev("countryCode") === countries("CountryCode"), "left")
+      .join(res, Seq("resourceId"), "left")
+      .join(cats, Seq("categoryId"), "left")
+      .join(countries, ev("countryCode") === countries("CountryCode"), "left")
 
     // X5/X6/X7: promo resources earn 0; percent/100 as an exact scale
     // shift; round half-up to cents.
@@ -60,7 +60,7 @@ object RoyaltiesJob {
     // rate-1.0 row, so passthrough needs no special case beyond the map
     // containing it.
     val converted = withRoyalty
-      .join(broadcast(rates), Seq("Code"))
+      .join(rates, Seq("Code"))
       .withColumn("amount", round(col("royalty") * col("rate").cast(DecimalType(8, 4)), 2))
 
     converted

@@ -23,7 +23,8 @@ import graft.operators.TopK
   * gives the same report without either step, provided resource ids
   * are unique (resources are documents keyed by id), as are category
   * ids — DIVERGENCES.md #12 lists what differs off that contract. Dims
-  * are broadcast (bounded by contract). The reference's per-day driver
+  * join with plain joins, as in the reference; the planner broadcasts
+  * them from their size. The reference's per-day driver
   * loop + full recompute (top10.py:262-278) is replaced by a single
   * partitioned write — one pass, no re-execution.
   *
@@ -70,8 +71,8 @@ object Top10Job {
     */
   def reportFromCounts(counts: DataFrame, resources: DataFrame, categories: DataFrame): DataFrame = {
     val withDims = counts.repartition(col("date"))
-      .join(broadcast(cleanResources(resources)), Seq("resourceId"), "left")
-      .join(broadcast(cleanCategories(categories)), Seq("categoryId"), "left")
+      .join(cleanResources(resources), Seq("resourceId"), "left")
+      .join(cleanCategories(categories), Seq("categoryId"), "left")
     TopK.denseTopK(withDims, Seq("date", "categoryId"), col("count").desc, 10)
       .sortWithinPartitions("date", "categoryId", "position")
       .select("position", "date", "categoryId", "categoryName", "resourceId", "resourceName")

@@ -68,7 +68,7 @@ object Calibration {
       Layout.globalRunningSum(perScore,
         Seq(col("threshold").desc), col("__n"), "pred_pos"),
       Seq(col("threshold").desc), col("__npos"), "tp")
-    cum.crossJoin(broadcast(totals))
+    cum.crossJoin(totals)
       .select(col("threshold"),
         col("pred_pos"), col("tp"),
         (col("pred_pos") - col("tp")).as("fp"),

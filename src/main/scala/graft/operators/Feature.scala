@@ -59,7 +59,7 @@ object Feature {
     val bounds = boundsSrc.agg(
       expr(s"percentile_disc($loQ) WITHIN GROUP (ORDER BY `$valueCol`)").as("__lo"),
       expr(s"percentile_disc($hiQ) WITHIN GROUP (ORDER BY `$valueCol`)").as("__hi"))
-    df.crossJoin(broadcast(bounds))
+    df.crossJoin(bounds)
       .withColumn(as, when(col(valueCol).isNotNull,
         greatest(col("__lo"), least(col("__hi"), col(valueCol)))))
       .drop("__lo", "__hi")
@@ -117,7 +117,7 @@ object Feature {
     val daily = df.filter(col(keyCol).isNotNull).localCheckpoint()
     val mm = daily.agg(min(col(dayCol)).as("__lo"), max(col(dayCol)).as("__hi"))
     val scaffold = daily.select(col(keyCol)).distinct()
-      .crossJoin(broadcast(mm))
+      .crossJoin(mm)
       .select(col(keyCol), explode(expr(
         "sequence(CAST(__lo AS DATE), CAST(__hi AS DATE), interval 1 day)"))
         .as("__d"))

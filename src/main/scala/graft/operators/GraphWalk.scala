@@ -180,8 +180,8 @@ object GraphWalk {
     *
     * 100-TB shape: cost is O(|centers|·probes) candidate rows — never
     * |centers|×|dictionary| — and nothing broadcasts the dictionary:
-    * the only broadcasts are the ≤16^hexChars-row shard-offset
-    * aggregate and the 1-row total (PageRankSpec asserts both). The old
+    * the only hinted broadcast is the ≤16^hexChars-row shard-offset
+    * aggregate (PageRankSpec asserts it). The old
     * full-dictionary argmin form (crossJoin ⨯ broadcast(nodes)) is
     * deliberately gone: it could not run on a web-scale node set.
     */
@@ -201,11 +201,12 @@ object GraphWalk {
     val total = sizes.agg(sum(col("shard_size")).as("__n_total"))
     val probed = pairs.select("center").distinct()
       .withColumn("j", explode(sequence(lit(1), lit(probes))))
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .withColumn("__pos", pmod(
         conv(substring(md5(concat_ws(":", lit(salt), lit("probe"),
           col("center"), col("j"))), 1, 15), 16, 10).cast("long"),
         col("__n_total")))
+    // bound: 16^hexChars shard-offset rows
     val located = probed.join(broadcast(offsets),
         col("__pos") >= col("__offset") &&
           col("__pos") < col("__offset") + col("shard_size"))

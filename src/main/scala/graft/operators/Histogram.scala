@@ -27,7 +27,7 @@ object Histogram {
       min(valueCol.cast("double")).as("mn"), max(valueCol.cast("double")).as("mx"))
     df.select(valueCol.cast("double").as("v"))
       .filter(col("v").isNotNull)
-      .crossJoin(broadcast(mm))
+      .crossJoin(mm)
       .select(
         when(col("mx") === col("mn"), lit(0L))
           .otherwise(least(
@@ -90,7 +90,7 @@ object Histogram {
       case (i, rest) => when(col("v") <= col(s"b$i"), i.toLong).otherwise(rest)
     }
     df.select(col(valueCol).as("v")).filter(col("v").isNotNull)
-      .crossJoin(broadcast(bounds))
+      .crossJoin(bounds)
       .select(assign.as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("n"))
   }

@@ -101,7 +101,7 @@ object Intervals {
     val carries = deltas.groupBy("bucket").agg(sum(col("delta")).as("__bd"))
       .withColumn("carry", coalesce(sum(col("__bd")).over(wCarry), lit(0L)))
       .select("bucket", "carry")
-    deltas.join(broadcast(carries), Seq("bucket"))
+    deltas.join(carries, Seq("bucket"))
       .withColumn("conc", col("carry") + sum(col("delta")).over(wIn))
       .select("bucket", "ts_us", "conc")
   }

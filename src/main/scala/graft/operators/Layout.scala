@@ -141,7 +141,7 @@ object Layout {
         expr(s"(($c - $lo) * ${scale}L) div ($hi - $lo)")).otherwise(lit(0L))
     df.select(col(colA).cast("long").as("__a"), col(colB).cast("long").as("__b"))
       .filter(col("__a").isNotNull && col("__b").isNotNull)
-      .crossJoin(broadcast(mm))
+      .crossJoin(mm)
       .withColumn("__z", mortonInterleave(
         bucket("__a", "__amin", "__amax"),
         bucket("__b", "__bmin", "__bmax"), bits))
@@ -163,7 +163,7 @@ object Layout {
         (c.cast("double") - lo.cast("double")) /
           ((hi.cast("double") - lo.cast("double")) / lit(scale.toDouble) + lit(1e-12))
       ).cast("long")))
-    df.crossJoin(broadcast(mm))
+    df.crossJoin(mm)
       .withColumn("__z", mortonInterleave(
         bucket(col(colA), col("__amin"), col("__amax")),
         bucket(col(colB), col("__bmin"), col("__bmax")), bits))
@@ -226,7 +226,7 @@ object Layout {
       .select("__pid", "__off")
     val wLocal = org.apache.spark.sql.expressions.Window
       .partitionBy("__pid").orderBy(order: _*)
-    ranged.join(broadcast(offs), Seq("__pid"))
+    ranged.join(offs, Seq("__pid"))
       .withColumn(outCol,
         (col("__off") + sum(value.cast("long")).over(wLocal)).cast("long"))
       .drop("__pid", "__off")

@@ -61,7 +61,7 @@ object PageRank {
       .union(e.select(col("dst").as("node")))
       .distinct()
       .localCheckpoint()
-    val nCount = broadcast(nodes.agg(count(lit(1)).as("n")))
+    val nCount = nodes.agg(count(lit(1)).as("n"))
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val eDeg = e.join(outdeg, "src").localCheckpoint()
     val teleport = s"(($units * ${dampDen - dampNum}) div $dampDen) div n"

@@ -95,7 +95,7 @@ object Profile {
     // top-N heaps, never a single-partition sort of the counts frame
     // (which for a high-cardinality key is itself big). The rank window
     // then runs over ≤ topN rows.
-    counts.crossJoin(broadcast(total))
+    counts.crossJoin(total)
       .withColumn("share", col("n").cast("double") / col("__total").cast("double"))
       .orderBy(col("n").desc, col("key").asc_nulls_first)
       .limit(topN)
@@ -129,8 +129,8 @@ object Profile {
         col("a.member") === col("b.member") && col("a.grp") < col("b.grp"))
       .groupBy(col("a.grp").as("grp_a"), col("b.grp").as("grp_b"))
       .agg(count(lit(1)).as("n_common"))
-      .join(broadcast(sizes.select(col("grp").as("grp_a"), col("n").as("n_a"))), "grp_a")
-      .join(broadcast(sizes.select(col("grp").as("grp_b"), col("n").as("n_b"))), "grp_b")
+      .join(sizes.select(col("grp").as("grp_a"), col("n").as("n_a")), "grp_a")
+      .join(sizes.select(col("grp").as("grp_b"), col("n").as("n_b")), "grp_b")
       .withColumn("jaccard_ppm",
         expr("(n_common * 1000000) div (n_a + n_b - n_common)"))
       .select("grp_a", "grp_b", "n_a", "n_b", "n_common", "jaccard_ppm")
@@ -355,7 +355,7 @@ object Profile {
         sum(when(inB, 1L).otherwise(0L)).as("n_b"))
       .localCheckpoint()
     val tot = g.agg(sum(col("n_a")).as("__ta"), sum(col("n_b")).as("__tb"))
-    g.crossJoin(broadcast(tot))
+    g.crossJoin(tot)
       .select(col("category"), col("n_a"), col("n_b"),
         abs(col("n_a") * col("__tb") - col("n_b") * col("__ta")).as("drift_num"))
   }
@@ -407,7 +407,7 @@ object Profile {
       expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY __v)")
         .cast("long").as("median"),
       count(lit(1)).as("n"))
-    v.join(broadcast(med), Seq(keyCol))
+    v.join(med, Seq(keyCol))
       .withColumn("__d", abs(col("__v") - col("median")))
       .groupBy(col(keyCol), col("n"), col("median"))
       .agg(expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY __d)")
@@ -448,7 +448,7 @@ object Profile {
       (rLt <= (lit(p + eps) * col("n") + 2)) &&
         (rLe >= (lit(p - eps) * col("n") - 2))
     }
-    v.join(broadcast(ap), Seq(keyCol))
+    v.join(ap, Seq(keyCol))
       .groupBy(col(keyCol), col("n"), col("__ap"))
       .agg(
         sum(when(col("__v") < col("__ap")(0), 1L).otherwise(0L)).as("__lt50"),

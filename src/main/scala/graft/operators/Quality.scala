@@ -121,7 +121,7 @@ object Quality {
       .select(substring(col("__v").cast("string"), 1, 1).cast("int").as("digit"))
       .groupBy("digit").agg(count(lit(1)).as("n"))
       .localCheckpoint()
-    d.crossJoin(broadcast(d.agg(sum(col("n")).as("__t"))))
+    d.crossJoin(d.agg(sum(col("n")).as("__t")))
       .select(col("digit"), col("n"), expr("(n * 1000000) div __t").as("ppm"))
   }
 }

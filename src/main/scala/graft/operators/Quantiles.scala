@@ -141,7 +141,7 @@ object Quantiles {
       .agg(min(col("__n")).as("n"),
         min(when(col("__cum") * 2 >= col("__n"), col("__v"))).as("median"))
     hist
-      .join(broadcast(med), Seq(keyCol))
+      .join(med, Seq(keyCol))
       .groupBy(col(keyCol), col("n"), col("median"),
         abs(col("__v") - col("median")).as("__d"))
       .agg(sum(col("__w")).as("__w2"))

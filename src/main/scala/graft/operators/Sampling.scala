@@ -103,7 +103,7 @@ object Sampling {
           .orderBy("__src")) - col("__n"), lit(0L)))
       .select(col("__src"), col("__off"))
     val ranked = seqd
-      .join(broadcast(offs), col(sourceCol) === col("__src"))
+      .join(offs, col(sourceCol) === col("__src"))
       .withColumn("src_rank", col("__gseq") - col("__off"))
       .drop("__src", "__off", "__gseq")
       .withColumn("__key", (col("src_rank") * 2L - 1L) * mult)
@@ -162,7 +162,7 @@ object Sampling {
     schedule
       .select(col(sourceCol).as("source"), col(rankCol).as("__rk"),
         col(positionCol).as("__pos"), w.as("__w"))
-      .crossJoin(broadcast(wTot))
+      .crossJoin(wTot)
       .select(col("source"),
         abs(col("__rk") * col("w_total") - col("__pos") * col("__w"))
           .as("__dev"),
@@ -254,7 +254,7 @@ object Sampling {
       .select(col("__src"), col("__alloc"), col("__off"))
     val seqd = Layout.globalDenseSeq(
       df, Seq(col(sourceCol), col(orderCol)) ++ tieBreak, "__gseq")
-    seqd.join(broadcast(alloc), col(sourceCol) === col("__src"))
+    seqd.join(alloc, col(sourceCol) === col("__src"))
       .filter(col("__gseq") - col("__off") <= col("__alloc"))
       .drop("__src", "__alloc", "__off", "__gseq")
   }
@@ -383,12 +383,12 @@ object Sampling {
       df: DataFrame, stratumCol: String, key: Column, salt: String = ""): DataFrame = {
     val counts = df.groupBy(col(stratumCol)).agg(count(lit(1)).as("__n"))
     val minN = counts.agg(min(col("__n")).as("__minn"))
-    val rates = counts.crossJoin(broadcast(minN)).withColumn(
+    val rates = counts.crossJoin(minN).withColumn(
       "__thr",
       lpad(lower(hex(floor(
         (col("__minn").cast("double") / col("__n").cast("double")) * lit(4294967296.0)
       ).cast("long"))), 8, "0"))
-    df.join(broadcast(rates), Seq(stratumCol))
+    df.join(rates, Seq(stratumCol))
       .filter(col("__n") === col("__minn") || hashUnit(key, salt) < col("__thr"))
       .drop("__n", "__minn", "__thr")
   }
@@ -421,7 +421,7 @@ object Sampling {
     val addressed = shuffleShards(df.select(key.as("__key")), col("__key"), salt, hexChars)
       .select(col("__key"), col("shard"), col("shard_rank"))
     val sizes = addressed.groupBy("shard").agg(count(lit(1)).as("shard_size"))
-    val anchors = addressed.join(broadcast(sizes), Seq("shard"))
+    val anchors = addressed.join(sizes, Seq("shard"))
       .withColumn("j", explode(sequence(lit(1L), lit(k.toLong))))
       .withColumn("neg_rank",
         pmod(col("shard_rank") - 1 +
@@ -479,13 +479,13 @@ object Sampling {
     require(budget > 0, s"budget must be positive, got $budget")
     val counts = df.groupBy(col(stratumCol)).agg(count(lit(1)).as("__n"))
     val z = counts.agg(sum(pow(col("__n").cast("double"), lit(alpha))).as("__z"))
-    val rates = counts.crossJoin(broadcast(z))
+    val rates = counts.crossJoin(z)
       .withColumn("__q", pow(col("__n").cast("double"), lit(alpha)) / col("__z"))
       .withColumn("__rate",
         least(lit(1.0), lit(budget.toDouble) * col("__q") / col("__n").cast("double")))
       .withColumn("__thr",
         lpad(lower(hex(floor(col("__rate") * lit(4294967296.0)).cast("long"))), 8, "0"))
-    df.join(broadcast(rates), Seq(stratumCol))
+    df.join(rates, Seq(stratumCol))
       .filter(col("__rate") >= 1.0 || hashUnit(key, salt) < col("__thr"))
       .drop("__n", "__z", "__q", "__rate", "__thr")
   }
@@ -571,11 +571,11 @@ object Sampling {
     require(budget >= 0, s"budget must be >= 0, got $budget")
     val counts = df.groupBy(col(stratumCol)).agg(count(lit(1)).as("n_rows"))
     val total = counts.agg(sum(col("n_rows")).as("__total"))
-    val q = counts.crossJoin(broadcast(total))
+    val q = counts.crossJoin(total)
       .withColumn("quota", expr(s"(${budget}L * n_rows) div __total"))
       .withColumn("__rem", expr(s"(${budget}L * n_rows) % __total"))
     val left = q.agg((lit(budget) - sum(col("quota"))).as("__left"))
-    q.crossJoin(broadcast(left))
+    q.crossJoin(left)
       .withColumn("__rk", row_number().over(org.apache.spark.sql.expressions.Window
         .orderBy(col("__rem").desc, col(stratumCol))))
       .withColumn("alloc",
@@ -641,7 +641,7 @@ object Sampling {
     val v = conv(hashUnit(key, salt), 16, 10).cast("long")
     df.withColumn("priority",
         weight.cast("double") * lit(4294967296.0) / (v + lit(1L)).cast("double"))
-      .join(broadcast(alloc), Seq(stratumCol))
+      .join(alloc, Seq(stratumCol))
       .withColumn("__rk", row_number().over(org.apache.spark.sql.expressions.Window
         .partitionBy(stratumCol).orderBy(col("priority").desc, key)))
       .filter(col("__rk") <= col("alloc"))

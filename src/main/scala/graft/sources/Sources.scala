@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, DataFrameReader, Dataset, Row, SparkSession}
 import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
@@ -108,7 +107,9 @@ object Sources {
     * explicit schema (top10.py:35-59). Same mechanism here: a
     * driver-side fetch of a tiny payload through the `Fetcher` seam
     * (file-backed by default), parsed on the driver, then
-    * `createDataFrame` with the declared schema.
+    * `createDataFrame` with the declared schema. The rows form a local
+    * relation, so the planner knows its size and broadcasts it into a
+    * join.
     */
   def categories(spark: SparkSession, location: String,
       fetcher: Fetcher = defaultFetcher): DataFrame = {
@@ -116,8 +117,7 @@ object Sources {
       Row(m.get("tenant").orNull, m.get("id").orNull,
         m.get("name").orNull, m.get("percent").orNull)
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), Schemas.category)
+    spark.createDataFrame(rows.asJava, Schemas.category)
   }
 
   /** Typed Dataset views (SURVEY.md §1.3: DataFrame at the edges,
@@ -178,16 +178,11 @@ object Sources {
       .option("header", "true").option("enforceSchema", "false")
 
   /** S5 — scalar rates lookup: tiny JSON object fetched driver-side
-    * through the `Fetcher` seam, exposed both as a broadcast Map
-    * (closure lookups, J6) and as a one-row-per-code DataFrame
-    * (broadcast-join conversion, the Catalyst-friendly form).
+    * through the `Fetcher` seam, exposed as a Map and as a
+    * one-row-per-code DataFrame (the join form, J6).
     */
   def exchangeRates(location: String, fetcher: Fetcher = defaultFetcher): Map[String, Double] =
     parseRates(fetcher.fetch(location))
-
-  def broadcastRates(spark: SparkSession, location: String,
-      fetcher: Fetcher = defaultFetcher): Broadcast[Map[String, Double]] =
-    spark.sparkContext.broadcast(exchangeRates(location, fetcher))
 
   def ratesDf(spark: SparkSession, location: String,
       fetcher: Fetcher = defaultFetcher): DataFrame = {

@@ -92,21 +92,17 @@ object CrawlIngest {
       val bIdx = Dedup.buildMinhashIndexMaterialized(docs, "new_id", "text",
         idx.shingleK, idx.numHashes, idx.numBands)
       batchIdx = bIdx
-      // batch-derived frames are microbatch-bounded: broadcast the
-      // probe/self-dedup sides so the corpus index and the decision
-      // joins never exchange
       val idxMatches = Dedup
-        .nearDupPairsBetweenIndexes(bIdx, idx, threshold,
-          broadcastBatch = true)
+        .nearDupPairsBetweenIndexes(bIdx, idx, threshold)
         .groupBy("new_id")
         .agg(count_distinct(col("corpus_id")).as("__n_idx"))
       val suppressed = Dedup
-        .nearDupPairsFromIndex(bIdx, threshold, broadcastIndex = true)
+        .nearDupPairsFromIndex(bIdx, threshold)
         .select(col("doc_b").as("new_id")).distinct()
         .withColumn("__supp", lit(1))
       val decided = docs.select("new_id")
-        .join(broadcast(idxMatches), Seq("new_id"), "left")
-        .join(broadcast(suppressed), Seq("new_id"), "left")
+        .join(idxMatches, Seq("new_id"), "left")
+        .join(suppressed, Seq("new_id"), "left")
         .select(
           col("new_id"),
           when(coalesce(col("__n_idx"), lit(0L)) > 0, lit("dup_index"))
@@ -132,7 +128,7 @@ object CrawlIngest {
     val ingestedIds = spark.read.parquet(store.staged(batchId))
       .filter(col("status") === "ingested").select("new_id")
     val novel0 = docs
-      .join(broadcast(ingestedIds), Seq("new_id"), "left_semi")
+      .join(ingestedIds, Seq("new_id"), "left_semi")
     // the already-present guard matters ONLY on the crash-replay path
     // (decisions staged by a PREVIOUS invocation — !fresh — whose
     // append may also have landed before the manifest). On the fresh

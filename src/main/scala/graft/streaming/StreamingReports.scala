@@ -181,6 +181,7 @@ object StreamingReports {
           val existing =
             if (new java.io.File(storePath).exists())
               ss.read.parquet(storePath)
+                // bound: one microbatch's distinct dates
                 .join(broadcast(touched), Seq("date"), "left_semi")
             else ss.createDataFrame(ss.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               changed.schema)

@@ -46,15 +46,6 @@ object Corpus {
 
   private val schemaOf: Map[String, StructType] = schemas.toMap
 
-  /** Tables that are genuinely bounded (constant cardinality regardless
-    * of scale factor) and therefore always safe to broadcast. `part`,
-    * `customer`, `supplier` grow linearly with scale — broadcasting them
-    * is an executor OOM at the 100-TB posture, so they are deliberately
-    * NOT here; AQE picks broadcast-vs-shuffled-hash for them by measured
-    * size at runtime.
-    */
-  val broadcastableDims: Set[String] = Set("region", "nation")
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     normalize(spark.read.schema(schemaOf(name)).parquet(s"$dir/$name.parquet"))
 

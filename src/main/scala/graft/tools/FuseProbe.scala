@@ -65,6 +65,7 @@ object FuseProbe {
     def product(): DataFrame = {
       val c = corpus.select(col("vec_id").as("nid"), col("embedding").as("cv"))
       val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      // bound: the query batch, every 500th vector
       c.join(broadcast(q), col("nid") =!= col("qid"))
         .select(col("qid"), col("nid"),
           composedCos(col("cv"), col("qv")).as("cos"))

@@ -131,6 +131,30 @@ class CcSpec extends SparkSpec {
     assert(got.contains((20L, 20L, 3L, true)))
   }
 
+  test("incrementalClusters with auto-broadcast off: no broadcast join, same clusters") {
+    val oldAssign = ConnectedComponents.dedupClusters(
+      Seq(1L, 2L, 3L, 10L, 11L, 20L).toDF("doc_id"), "doc_id",
+      Seq[(Long, Long)]((1, 2), (2, 3), (10, 11)).toDF("a", "b"), "a", "b")
+    def fold() = ConnectedComponents.incrementalClusters(
+      oldAssign, "doc_id", Seq(40L, 41L, 42L).toDF("doc_id"),
+      Seq[(Long, Long)]((40, 2), (40, 11)).toDF("nb", "no"), "nb", "no",
+      Seq[(Long, Long)]((41, 42)).toDF("a", "b"), "a", "b")
+    val want = fold().as[(Long, Long, Long, Boolean)].collect().toSet
+    // a batch too big to broadcast: every join must fall back to a
+    // shuffle join instead of forcing a broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val df = fold()
+      val got = df.as[(Long, Long, Long, Boolean)].collect().toSet
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastHashJoin") && !plan.contains("BroadcastNestedLoopJoin"),
+        s"a broadcast join with auto-broadcast off:\n$plan")
+      assert(plan.contains("SortMergeJoin"), s"the fold planned no join:\n$plan")
+      assert(got == want)
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert(want.contains((11L, 1L, 6L, false)) && want.contains((20L, 20L, 1L, true)))
+  }
+
   test("TreePaths: deep chain + flat star resolve exactly; cycle throws") {
     import spark.implicits._
     // one 200-deep chain rooted at 0 (parent = n-1) + a 3-leaf star at 1000

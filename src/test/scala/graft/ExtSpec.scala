@@ -622,7 +622,9 @@ class ExtSpec extends SparkSpec {
       .select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect().toSet
     val idx = lazyIndex(docs)
     for (bc <- Seq(false, true)) {
-      val viaIdx = Dedup.nearDupPairsFromIndex(idx, threshold = 0.8, broadcastIndex = bc)
+      val viaIdx = Dedup.nearDupPairsFromIndex(
+          if (bc) idx.copy(bands = broadcast(idx.bands), sets = broadcast(idx.sets)) else idx,
+          threshold = 0.8)
         .select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect().toSet
       assert(viaIdx == exact, s"broadcastIndex=$bc")
     }

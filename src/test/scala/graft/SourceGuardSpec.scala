@@ -102,6 +102,42 @@ class SourceGuardSpec extends AnyFunSuite {
     }
   }
 
+  /** Lines of `text` (with their index) that call the `broadcast(` join
+    * hint: a line or doc comment does not count, nor does a method call
+    * such as `sparkContext.broadcast(` (a broadcast variable).
+    */
+  private def hints(text: String): Seq[(String, Int)] = {
+    val call = "(?<![.\\w])broad" + "cast\\("
+    text.split("\n").toSeq.zipWithIndex.filter { case (l, _) =>
+      val t = l.trim
+      val code = if (t.contains("//")) t.take(t.indexOf("//")) else t
+      !t.startsWith("*") && !t.startsWith("/*") && call.r.findFirstIn(code).nonEmpty
+    }
+  }
+
+  /** Hinted lines of `text` whose line above is not a `// bound:` comment. */
+  private def unbound(text: String): Seq[String] = {
+    val lines = text.split("\n")
+    hints(text).collect {
+      case (l, i) if i == 0 || !lines(i - 1).trim.startsWith("// bound:") => l.trim
+    }
+  }
+
+  test("src/main: every broadcast hint carries a bound comment") {
+    // split, so that grepping the tree for a hint finds none here
+    val hinted = "a.join(broad" + "cast(b), Seq(\"k\"))"
+    assert(unbound(hinted) == Seq(hinted))
+    assert(unbound("// bound: one row\n  x.crossJoin(broad" + "cast(t))").isEmpty)
+    assert(unbound("// one row\n  x.crossJoin(broad" + "cast(t))").size == 1)
+    assert(hints("val b = spark.sparkContext.broad" + "cast(m)\n" +
+      "  * corpus ⨯ broad" + "cast(queries)\n  // a broad" + "cast(x) note").isEmpty)
+
+    val all = sources.toSeq.flatMap { case (f, text) => hints(text).map(h => s"$f: ${h._1.trim}") }
+    assert(all.size <= 30, s"${all.size} broadcast hints in src/main/scala:\n${all.mkString("\n")}")
+    val missing = sources.toSeq.flatMap { case (f, text) => unbound(text).map(l => s"$f: $l") }
+    assert(missing.isEmpty, s"hints without a `// bound:` line above:\n${missing.mkString("\n")}")
+  }
+
   /** String literals in `text` that spell one of `names`. */
   private def nameLiterals(text: String, names: Set[String]): Int =
     "\"(q\\d+_\\w+)\"".r.findAllMatchIn(text).count(m => names(m.group(1)))

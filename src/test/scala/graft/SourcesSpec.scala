@@ -195,8 +195,6 @@ class SourcesSpec extends SparkSpec {
   test("S5: rates map parse + broadcast") {
     val rates = Sources.exchangeRates(s"$fix/rates.json")
     assert(rates == Map("USD" -> 1.0, "EUR" -> 1.08, "GBP" -> 1.27))
-    val b = Sources.broadcastRates(spark, s"$fix/rates.json")
-    assert(b.value("EUR") == 1.08)
     assert(Sources.ratesDf(spark, s"$fix/rates.json").count() == 3)
   }
 
